@@ -11,7 +11,12 @@ engine built on goroutines + channels; this engine declares logical plans
 and lets Catalyst/Tungsten pick physical strategy.
 """
 
+from bento_spark import zipcache
 from bento_spark.session import get_spark, stop_spark
+
+# Python workers import this package when they unpickle a UDF; from then on
+# their per-task importlib.invalidate_caches() skips unchanged zip archives
+zipcache.install()
 
 __version__ = "0.1.0"
 

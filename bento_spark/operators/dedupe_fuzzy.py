@@ -22,6 +22,13 @@ hundreds of elements that is a 3-8x penalty, so every hot path here is
 formulated as explode + relational aggregate instead; the Column-level
 variants (word_ngrams, minhash_signature, with_simhash) remain for
 composition in small expressions.
+
+NOTE on fault tolerance: the `localCheckpoint` plans here (shingle and
+candidate tables, simhash signatures, connected-components rounds) keep
+their blocks on the executor that computed them and drop the lineage.
+They cannot be recomputed after an executor is lost: the query fails
+instead of re-running the lost partitions. Local mode (one JVM) never
+loses an executor alone; on a cluster, a lost executor fails the query.
 """
 
 from __future__ import annotations
@@ -110,6 +117,9 @@ def ngram_jaccard_pairs(
     Explode shingles, self-join on shingle, count intersection, compute
     |A∩B| / (|A|+|B|-|A∩B|). Quadratic in duplicates-per-shingle — the
     small-scale truth; use minhash_lsh_pairs at scale.
+
+    Small-scale only: `sizes` (one row per document of the whole corpus)
+    is broadcast to every task, twice, with no size check.
     """
     # One checkpoint: the distinct shingle table feeds both self-join
     # sides and the set-size aggregate. Set sizes (one row per doc,

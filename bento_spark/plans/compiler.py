@@ -62,6 +62,13 @@ from bento_spark.streaming.windows import session_windowed, sliding_windowed, tu
 
 _AGG_RE = re.compile(r"^\s*(\w+)\s*\(\s*(.*?)\s*\)\s*$")
 
+# Processors that turn each row into exactly one row, leave `error` as it
+# is and take `keep_payload`. A filter on `error` commutes with them, so the
+# window+DLQ path of run_stream runs a trailing run of them after its split
+# on `error`: each query decodes only the rows it keeps. Each member is
+# pinned by a test in tests/test_window_dlq.py.
+_ROW_MAPS_KEEPING_ERROR = frozenset({"audio_features"})
+
 
 def _parse_agg(src: str) -> Column:
     m = _AGG_RE.match(src)
@@ -2388,7 +2395,10 @@ class Pipeline:
             o = opts or {}
             # YAML pipelines keep pass-through semantics by default; set
             # keep_payload: false to drop `bytes` from the UDF output (the
-            # scale-path default for agg-bound pipelines)
+            # scale-path default for agg-bound pipelines). run_stream's
+            # window+DLQ path runs this after its split on `error` and sets
+            # keep_payload: false itself on the window branch (the DLQ
+            # branch keeps the configured value).
             return with_audio_features(df, keep_payload=bool(o.get("keep_payload", True)))
         if name == "audio_normalize":
             o = opts or {}
@@ -3321,6 +3331,27 @@ class Pipeline:
         )
 
     # ----------------------------------------------------------------- window
+    def _split_tail(self, procs: list) -> list:
+        """The trailing processors run_stream's window+DLQ path applies after
+        its split on `error`: the longest suffix of _ROW_MAPS_KEEPING_ERROR
+        members. Empty under an error_handling strategy other than none,
+        which needs the whole chain in one place."""
+        if (self.conf.get("error_handling") or {}).get("strategy", "none") != "none":
+            return []
+        n = len(procs)
+        while n and isinstance(procs[n - 1], dict) and procs[n - 1].keys() <= _ROW_MAPS_KEEPING_ERROR:
+            n -= 1
+        return procs[n:]
+
+    def _window_reads_payload(self) -> bool:
+        """Whether the window keys, event_col or aggs, or the join key or
+        left_ts, name the `bytes` payload column."""
+        w = self.conf.get("window") or {}
+        j = self.conf.get("join") or {}
+        refs = [*(w.get("keys") or []), w.get("event_col", ""), *(w.get("aggs") or {}).values(),
+                j.get("key", ""), j.get("left_ts", "")]
+        return any(re.search(r"\bbytes\b", str(r)) for r in refs)
+
     def _apply_window(self, df: DataFrame) -> DataFrame:
         w = self.conf.get("window")
         if not w:
@@ -3476,10 +3507,23 @@ class Pipeline:
             # query can't window correctly per-micro-batch: a window's rows
             # may span batches and last-writer-wins MERGE would drop the
             # earlier partials.)
-            rows = self._apply_processors(self._input(spark, streaming=True))
+            # The two queries share the chain up to its trailing run of
+            # row maps that keep `error` (_split_tail: audio_features in
+            # the shipped clips_window.yaml). The split on `error` comes
+            # there, so the DLQ query decodes only the errored rows and the
+            # main query only the clean ones, instead of each decoding
+            # every clip. DLQ rows come out as if the split were after the
+            # whole chain. The window branch drops `bytes` from the decode
+            # output unless the window or join reads it, so the payload
+            # crosses Arrow once (JVM -> Python) instead of twice.
+            procs = (self.conf.get("pipeline") or {}).get("processors") or []
+            tail = self._split_tail(procs)
+            rows = self._error_strategy(
+                self._chain(procs[: len(procs) - len(tail)]), self._input(spark, streaming=True)
+            )
             if "error" in rows.columns:
                 dlq = IdempotentParquetSink(dlq_path, checkpoint=checkpoint.rstrip("/") + "_dlq")
-                errored = rows.filter(F.col("error").isNotNull())
+                errored = self._chain(tail)(rows.filter(F.col("error").isNotNull()))
                 self._dlq_query = (
                     errored.writeStream.outputMode("append")
                     .option("checkpointLocation", checkpoint.rstrip("/") + "_dlq")
@@ -3488,6 +3532,10 @@ class Pipeline:
                     .start()
                 )
                 rows = rows.filter(F.col("error").isNull())
+            if tail and not self._window_reads_payload():
+                name, opts = next(iter(tail[-1].items()))
+                tail = [*tail[:-1], {name: {**(opts or {}), "keep_payload": False}}]
+            rows = self._chain(tail)(rows)
             rows = self._apply_join(rows, spark, streaming=True)
             df = self._apply_window(rows)
             writer = self._sink.foreach_batch()

@@ -55,8 +55,10 @@ def get_spark(
     # time during Arrow-heavy stages. The plain system allocator measured
     # equal-or-faster with far lower variance.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = (
+        (extra_conf or {}).get("spark.driver.memory")
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory()
     )
     gc_opts = f"-XX:+UseParallelGC -Xms{driver_mem}"
 
@@ -114,6 +116,43 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# cap on the derived heap: the largest the engine has been measured with
+_MAX_DRIVER_MB = 24 * 1024
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """Default driver heap: half of the memory this process can get, capped
+    at 24g. The heap is also the JVM's -Xms, so it must fit what is free
+    now: min(MemAvailable, the cgroup v2 memory.max limit). Falls back to
+    physical memory where neither file exists."""
+    limits = [v for v in (_meminfo_available(meminfo), _cgroup_limit(cgroup_max)) if v] or [
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    ]
+    return f"{min(min(limits) // 2 // 2**20, _MAX_DRIVER_MB)}m"
+
+
+def _meminfo_available(path: str) -> int | None:
+    try:
+        with open(path) as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _cgroup_limit(path: str) -> int | None:
+    try:
+        with open(path) as f:
+            raw = f.read().strip()
+    except OSError:
+        return None
+    return None if raw == "max" else int(raw)
 
 
 def _parse_local_cores(master: str) -> int | None:

@@ -7,11 +7,12 @@
 # multi-MB audio byte[] rows has produced GC-thread segfaults
 # (StubRoutines arraycopy, SIGSEGV) on this host. Pass the flags at launch.
 set -euo pipefail
+cd "$(dirname "$0")/.."
 MASTER="${SPARK_GRAFT_MASTER:-local[${SPARK_GRAFT_CPUS:-8}]}"
-MEM="${SPARK_GRAFT_DRIVER_MEM:-24g}"
+# same host-derived default heap as get_spark()
+MEM="${SPARK_GRAFT_DRIVER_MEM:-$(python -c 'from bento_spark.session import default_driver_memory; print(default_driver_memory())')}"
 export MALLOC_MMAP_THRESHOLD_=134217728 MALLOC_TRIM_THRESHOLD_=134217728
 export ARROW_DEFAULT_MEMORY_POOL=system
-cd "$(dirname "$0")/.."
 python tools/build_pyfiles.py >/dev/null
 exec spark-submit \
   --master "$MASTER" \

@@ -10,11 +10,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bento_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+# the cores this process may run on (what `nproc` prints)
+NPROC = len(os.sched_getaffinity(0))
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bento-spark-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="bento-spark-tests", master=f"local[{NPROC}]", shuffle_partitions=8)
     yield s
 
 

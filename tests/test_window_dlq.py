@@ -1,0 +1,123 @@
+"""The window+DLQ path of run_stream: the split on `error` runs before the
+trailing payload UDFs, so each query decodes only the rows it keeps.
+
+Driven through the shipped config/examples/clips_window.yaml on generated
+clips (every 4th clip has sr_hz 8000 and goes to the DLQ)."""
+
+from __future__ import annotations
+
+import os
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from bento_spark.audio.udfs import audio_feature_frame, with_audio_features
+from bento_spark.plans.compiler import _ROW_MAPS_KEEPING_ERROR, Pipeline, compile_yaml
+from bento_spark.streaming.sink import IdempotentParquetSink
+
+YAML = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    "config", "examples", "clips_window.yaml")
+N_CLIPS = 300  # 100 ms apart: windows [0,10) and [10,20) close, [20,30) stays open
+
+
+def _shipped(src: str, tmp_path, **extra) -> Pipeline:
+    with open(YAML) as f:
+        return compile_yaml(f.read(), overrides={
+            "input.parquet.path": src, "output.path": str(tmp_path / "out"),
+            "output.dlq": str(tmp_path / "dlq"), **extra})
+
+
+def test_split_tail_of_shipped_pipeline(tmp_path):
+    p = _shipped("unused", tmp_path)
+    procs = p.conf["pipeline"]["processors"]
+    assert p._split_tail(procs) == [{"audio_features": {}}]
+    assert p._split_tail(procs[:-1]) == []
+    p.conf["error_handling"] = {"strategy": "reject"}
+    assert p._split_tail(procs) == []
+
+
+def test_window_reads_payload(tmp_path):
+    p = _shipped("unused", tmp_path)
+    assert not p._window_reads_payload()
+    p.conf["window"]["aggs"]["payload"] = "sum(this.bytes.length())"
+    assert p._window_reads_payload()
+    del p.conf["window"]["aggs"]["payload"]
+    p.conf["join"] = {"key": "bytes"}
+    assert p._window_reads_payload()
+
+
+@pytest.fixture(scope="module")
+def clips(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("wdlq") / "src")
+    Pipeline.stage_clips(spark, src, N_CLIPS, partitions=2)
+    return src
+
+
+def test_members_map_rows_one_to_one_and_keep_error(spark, clips):
+    # the property the split relies on, for every member of the set
+    assert _ROW_MAPS_KEEPING_ERROR == {"audio_features"}
+    df = spark.read.parquet(clips).withColumn(
+        "error", F.when(F.col("sr_hz") <= 8000, F.lit("low")))
+    for keep in (True, False):
+        after = with_audio_features(df, keep_payload=keep)
+        assert after.count() == df.count()
+        errored_first = with_audio_features(df.filter(F.col("error").isNotNull()), keep_payload=keep)
+        errored_last = after.filter(F.col("error").isNotNull())
+        assert sorted(map(tuple, errored_first.collect())) == sorted(map(tuple, errored_last.collect()))
+        assert ("bytes" in after.columns) == keep
+
+
+def _expected_windows(spark, src: str, watermark: pd.Timestamp) -> pd.DataFrame:
+    pdf = spark.read.parquet(src).toPandas()
+    pdf = pdf[(pdf["sr_hz"] > 8000) & (pdf["dur_ms"] <= 60000)]
+    pdf = audio_feature_frame(pdf, ["clip_id", "codec", "event_ts"])
+    pdf["key"] = pdf["clip_id"].str.slice(10, 12)
+    pdf["window_start"] = pd.to_datetime(pdf["event_ts"]).dt.floor("10s")
+    pdf = pdf[pdf["window_start"] + pd.Timedelta(seconds=10) <= watermark]
+    return (pdf.groupby(["window_start", "key", "codec"])
+            .agg(n=("clip_id", "size"), avg_rms=("rms", "mean"), total_samples=("n_samples", "sum"))
+            .reset_index())
+
+
+def test_shipped_clips_window_decodes_each_clip_once(spark, clips, tmp_path):
+    p = _shipped(clips, tmp_path)
+    q = p.run_stream(spark, str(tmp_path / "ck"), available_now=True)
+    assert q.awaitTermination(180) and p._dlq_query.awaitTermination(180)
+    assert q.exception() is None and p._dlq_query.exception() is None
+
+    # windows: a batch computation over the sr_hz > 8000 clips, up to the
+    # final watermark (later windows stay open in append mode)
+    watermark = pd.Timestamp(q.lastProgress["eventTime"]["watermark"]).tz_localize(None)
+    exp = _expected_windows(spark, clips, watermark)
+    got = p.sink.read(spark).toPandas()
+    got["window_start"] = pd.to_datetime(got["window_start"])
+    assert len(exp) > 0
+    m = exp.merge(got, on=["window_start", "key", "codec"], how="outer", indicator=True,
+                  suffixes=("", "_got"))
+    assert (m["_merge"] == "both").all(), m[m["_merge"] != "both"]
+    assert (m["n"] == m["n_got"]).all() and (m["total_samples"] == m["total_samples_got"]).all()
+    assert ((m["avg_rms"] - m["avg_rms_got"]).abs() <= 1e-6 * m["avg_rms"].abs()).all()
+
+    # DLQ: exactly the sr_hz <= 8000 clips, with the columns and values the
+    # whole chain gives them when it runs before the split
+    dlq = IdempotentParquetSink(str(tmp_path / "dlq")).read(spark)
+    chain = p._chain(p.conf["pipeline"]["processors"])(spark.read.parquet(clips))
+    want = chain.filter(F.col("error").isNotNull())
+    assert dlq.columns == want.columns
+    assert "bytes" in dlq.columns and "rms" in dlq.columns
+    got_dlq = dlq.toPandas().sort_values("clip_id").reset_index(drop=True)
+    want_dlq = want.toPandas().sort_values("clip_id").reset_index(drop=True)
+    pdf = spark.read.parquet(clips).toPandas()
+    assert set(got_dlq["clip_id"]) == set(pdf.loc[pdf["sr_hz"] <= 8000, "clip_id"])
+    pd.testing.assert_frame_equal(got_dlq, want_dlq)
+
+    # plans: the DLQ filter sits below the decode; the main decode drops bytes
+    dlq_plan = p._dlq_query._jsq.explainInternal(False).splitlines()
+    at = next(i for i, line in enumerate(dlq_plan) if "MapInPandas" in line)
+    assert any("Filter" in line and "8000" in line for line in dlq_plan[at + 1:]), dlq_plan
+    assert not any("Filter" in line for line in dlq_plan[:at]), dlq_plan
+    main_plan = q._jsq.explainInternal(False)
+    decode = next(line for line in main_plan.splitlines() if "MapInPandas" in line)
+    output = decode.rsplit("[", 1)[1]
+    assert "rms#" in output and "bytes#" not in output, decode

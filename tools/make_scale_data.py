@@ -29,14 +29,18 @@ def _perturb_words(text: str, k: int) -> str:
     measured sparse candidates). Instead: replica k
     - k % 3 == 1: near-dup of the base (rotate by 1 — Jaccard just under
       1.0, keeps the near-dup queries non-trivially loaded);
-    - otherwise: replace every 2nd word with a replica-salted variant so
-      cross-replica Jaccard lands well below the 0.6/0.8 thresholds."""
+    - otherwise, and when the rotation is the text itself (one token, or
+      one token repeated): replace every 2nd word with a replica-salted
+      variant so cross-replica Jaccard lands well below the 0.6/0.8
+      thresholds."""
     if k == 0:
         return text
     toks = text.split(" ")
     if k % 3 == 1:
         r = k % len(toks) or 1
-        return " ".join(toks[r:] + toks[:r])
+        rotated = " ".join(toks[r:] + toks[:r])
+        if rotated != text:
+            return rotated
     return " ".join(
         t if i % 2 else f"{t}{(k * 7 + i) % 97:02d}" for i, t in enumerate(toks)
     )
