@@ -1,10 +1,19 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+SPARK_GRAFT_CPUS defaults to the cores this process may run on
+(get_spark's default master).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q": sec, ...}, "sf": ..., "clips_per_sec": ...,
-   "reliability": "ok"|"degraded", ...}
+   "reliability": "ok"|"degraded",
+   "codegen_compiles": {"first_pass": <n>, "repeat_passes": <n>}, ...}
+
+`codegen_compiles` counts the classes Spark compiled during the timed
+passes. A query's first pass compiles the classes no earlier query left in
+the codegen cache; its two repeats should compile none unless the cache is
+smaller than the query's own working set. At sf0.1 on a 4-core host:
+242 + 2 with the engine's cache size, 260 + 2 with Spark's default.
 
 The audio pipeline benchmark (generate -> decode/features -> window) scales
 its clip count with SPARK_GRAFT_BENCH_CLIPS (default 8000); clips/sec from
@@ -36,7 +45,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bento_spark.session import get_spark  # noqa: E402
+from bento_spark.session import codegen_compiles, get_spark, local_cores  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",
@@ -95,7 +104,6 @@ def _loadavg() -> list[float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "8000"))
     entrymod._AUDIO_N = n_clips  # scale the audio benchmark stage
 
@@ -111,7 +119,7 @@ def main() -> None:
     best_probe = _microprobe()
     best_probe = min(best_probe, _microprobe())
 
-    spark = get_spark(app_name="bento-spark-bench", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bento-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
@@ -123,6 +131,7 @@ def main() -> None:
     _force(qs["text_stats"](spark, sf_dir))
     _force(qs["embedding_norms"](spark, sf_dir))
 
+    compiles = {"first_pass": 0, "repeat_passes": 0}
     timings: dict[str, float] = {}
     unreliable: list[str] = []
     audio_secs = 0.0
@@ -133,9 +142,11 @@ def main() -> None:
         for i in range(3):
             p0 = _microprobe()
             best_probe = min(best_probe, p0)
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             _force(fn(spark, sf_dir))
             run = time.perf_counter() - t0
+            compiles["repeat_passes" if i else "first_pass"] += codegen_compiles(spark) - c0
             p1 = _microprobe()
             best_probe = min(best_probe, p1)
             degraded = min(p0, p1) > _PROBE_DEGRADED_FACTOR * best_probe
@@ -167,13 +178,14 @@ def main() -> None:
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "clips_per_sec": clips_per_sec,
                 "bench_clips": n_clips,
-                "cpus": int(cpus),
+                "cpus": local_cores(spark.sparkContext.master),
                 "reliability": "degraded" if unreliable else "ok",
                 "unreliable_queries": unreliable,
                 "load_start": load_start,
                 "load_end": _loadavg(),
                 "load_wait_s": waited_s,
                 "probe_best_ms": round(best_probe, 2),
+                "codegen_compiles": compiles,
             }
         )
     )

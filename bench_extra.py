@@ -39,9 +39,8 @@ def timed(spark, name, make_df, n=3):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     only = set(sys.argv[1:])
-    spark = get_spark(app_name="bench-extra", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
 
     def want(s):

@@ -14,7 +14,12 @@ runtime jar isn't in this sandbox, so `IdempotentParquetSink` implements
 the identical contract over a parquet directory:
 
 - each micro-batch writes to `data/_bid=<epoch_id>/` and then atomically
-  creates a commit marker `commits/<epoch_id>`;
+  creates a commit marker `commits/<epoch_id>`. `_bid` lives only in that
+  directory name, not in the files (directories written before it moved
+  there also carry it in the files). Hive-partitioned readers still see
+  it: Spark with `basePath`, and `pyarrow.dataset` with
+  `partitioning="hive", ignore_prefixes=[".", "_SUCCESS"]` (by default
+  pyarrow skips `_`-prefixed directories);
 - a replayed batch (same epoch_id after crash/restart) sees its marker —
   or overwrites its own uncommitted directory — so the batch lands exactly
   once;
@@ -123,11 +128,10 @@ class IdempotentParquetSink:
             # after the sweep any surviving marker is ours (same qid) or
             # legacy (no qid) — both mean this batch already committed
             return
-        (
-            batch_df.withColumn("_bid", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .parquet(f"{self.data_dir}/_bid={int(epoch_id)}")
-        )
+        # the epoch lives only in the directory name: a literal column would
+        # be inlined into the generated code and compile new classes on
+        # every micro-batch
+        batch_df.write.mode("overwrite").parquet(f"{self.data_dir}/_bid={int(epoch_id)}")
         # atomic commit point: marker creation. The marker carries the
         # committed row count — per-batch output lineage the metrics
         # listener can't see through foreachBatch (numOutputRows is -1 for

@@ -8,8 +8,8 @@
 # (StubRoutines arraycopy, SIGSEGV) on this host. Pass the flags at launch.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-MASTER="${SPARK_GRAFT_MASTER:-local[${SPARK_GRAFT_CPUS:-8}]}"
-# same host-derived default heap as get_spark()
+# same host-derived default master and heap as get_spark()
+MASTER="${SPARK_GRAFT_MASTER:-$(python -c 'from bento_spark.session import default_master; print(default_master())')}"
 MEM="${SPARK_GRAFT_DRIVER_MEM:-$(python -c 'from bento_spark.session import default_driver_memory; print(default_driver_memory())')}"
 export MALLOC_MMAP_THRESHOLD_=134217728 MALLOC_TRIM_THRESHOLD_=134217728
 export ARROW_DEFAULT_MEMORY_POOL=system

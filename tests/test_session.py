@@ -1,10 +1,14 @@
-"""Driver heap sizing (no Spark): the default heap comes from the host."""
+"""Session sizing (no Spark): the default master and heap come from the
+host, and a heap the host cannot hold fails before the JVM starts."""
 
 from __future__ import annotations
 
 import os
 
-from bento_spark.session import default_driver_memory
+import pytest
+
+from bento_spark import session
+from bento_spark.session import check_driver_memory, default_driver_memory, default_master
 
 GIB = 2**30
 
@@ -61,7 +65,8 @@ class _FakeBuilder:
     def appName(self, _name):
         return self
 
-    def master(self, _master):
+    def master(self, master):
+        self.conf["master"] = master
         return self
 
     def config(self, key, value):
@@ -73,8 +78,6 @@ class _FakeBuilder:
 
 
 def test_overrides_win_over_host_size(monkeypatch):
-    import bento_spark.session as session
-
     monkeypatch.setattr(session.SparkSession, "builder", _FakeBuilder())
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     conf = session.get_spark(master="local[2]")
@@ -85,3 +88,52 @@ def test_overrides_win_over_host_size(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
     monkeypatch.setattr(session, "default_driver_memory", lambda: "5000m")
     assert session.get_spark(master="local[2]")["spark.driver.memory"] == "5000m"
+
+
+def test_default_master_from_graft_cpus_else_affinity(monkeypatch):
+    monkeypatch.setattr(session.SparkSession, "builder", _FakeBuilder())
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda _pid: {0, 1, 2, 5, 6, 7})
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_master() == "local[6]"
+    conf = session.get_spark(extra_conf={"spark.driver.memory": "1g"})
+    assert conf["master"] == "local[6]" and conf["spark.sql.shuffle.partitions"] == "12"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_master() == "local[3]"
+    assert session.get_spark(extra_conf={"spark.driver.memory": "1g"})["master"] == "local[3]"
+
+
+def test_heap_above_host_limit_fails_before_jvm(tmp_path, monkeypatch):
+    mi, cg = _files(tmp_path, 15925296, str(4 * GIB))
+    check_driver_memory("4g", mi, cg)
+    check_driver_memory("4096m", mi, cg)
+    with pytest.raises(ValueError, match=r"driver heap 4097m \(4097 MB\) > 4096 MB available"):
+        check_driver_memory("4097m", mi, cg)
+    with pytest.raises(ValueError, match=r"24g \(24576 MB\) > 4096 MB"):
+        check_driver_memory("24g", mi, cg)
+    with pytest.raises(ValueError, match="not a JVM memory size"):
+        check_driver_memory("lots", mi, cg)
+
+    # through get_spark: explicit conf or env above the limit never reaches the builder
+    class _NoJvm(_FakeBuilder):
+        def getOrCreate(self):
+            raise AssertionError("builder reached")
+
+    monkeypatch.setattr(session.SparkSession, "builder", _NoJvm())
+    monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    host_limit = session.memory_limit
+    monkeypatch.setattr(session, "memory_limit", lambda *_: host_limit(mi, cg))
+    with pytest.raises(ValueError, match=r"8g \(8192 MB\) > 4096 MB"):
+        session.get_spark(master="local[2]", extra_conf={"spark.driver.memory": "8g"})
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
+    with pytest.raises(ValueError, match=r"5g \(5120 MB\) > 4096 MB"):
+        session.get_spark(master="local[2]")
+    # a running JVM keeps its heap (getOrCreate reuses it): nothing to check
+    monkeypatch.setattr(session.SparkContext, "_gateway", object())
+    with pytest.raises(AssertionError, match="builder reached"):
+        session.get_spark(master="local[2]")
+    # the derived default always fits
+    monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    with pytest.raises(AssertionError, match="builder reached"):
+        session.get_spark(master="local[2]")

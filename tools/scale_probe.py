@@ -35,7 +35,7 @@ from bento_spark.operators.dedupe_fuzzy import (
     simhash_near_pairs,
 )
 from bento_spark.operators.similarity import brute_force_topk, ivf_topk, kmeans_centroids, lsh_topk
-from bento_spark.session import get_spark
+from bento_spark.session import default_master, get_spark, local_cores
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 OUT_MD = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
@@ -103,8 +103,8 @@ def timed(fn):
 
 
 def main() -> None:
-    spark = get_spark(app_name="scale-probe", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-                      shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    master = default_master()
+    spark = get_spark(app_name="scale-probe", master=master, shuffle_partitions=local_cores(master))
     # stage under /tmp, never inside the committed BENCH/ evidence dir —
     # a failed probe must not leave parquet junk next to tracked files
     import tempfile
@@ -197,7 +197,7 @@ def main() -> None:
         f"Derived deterministically from {SF_DIR}: {n_docs} docs "
         f"({DOC_VARIANTS} variants/doc: 2 true near-dups + {DOC_VARIANTS - 3} shingle-rewritten), "
         f"{n_vecs} vectors ({VEC_VARIANTS} seeded perturbations/vector), {n_q} ANN queries. "
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}].\n",
+        f"{master}.\n",
         "| probe | wall sec | output rows |",
         "|---|---|---|",
     ]
