@@ -57,6 +57,7 @@ from bento_spark.functions.bloblang import compile_expr, compile_interpolated, c
 from bento_spark.gating import require_object_store
 from bento_spark.operators import errors as err_ops
 from bento_spark.operators import grouping, mapping as map_ops, skew
+from bento_spark.streaming.checkpoint import local_checkpoint_commits
 from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed
 
@@ -3402,6 +3403,15 @@ class Pipeline:
     def run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool = True):
         """Execute as a StreamingQuery with the exactly-once parquet sink
         (Iceberg MERGE on a real cluster) and optional DLQ routing."""
+        # Local checkpoints (the main query's and the DLQ side queries',
+        # which sit next to it) commit through rename(2), an atomic replace:
+        # Spark's default FileContext manager forks /usr/bin/readlink for
+        # every rename on a host without libhadoop. Other filesystems keep
+        # the default, whose rename is the atomic one there.
+        with local_checkpoint_commits(spark, checkpoint):
+            return self._run_stream(spark, checkpoint, available_now)
+
+    def _run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool):
         out = self.conf.get("output") or {}
         if "path" not in out and not (
             out.get("switch")

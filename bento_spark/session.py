@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import re
+import tempfile
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -82,8 +83,9 @@ def get_spark(
         or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         or default_driver_memory()
     )
-    if SparkContext._gateway is None:  # the heap is fixed once the JVM runs
+    if SparkContext._gateway is None:  # the heap and dirs are fixed once the JVM runs
         check_driver_memory(driver_mem)
+        check_local_dirs((extra_conf or {}).get("spark.local.dir"))
     gc_opts = f"-XX:+UseParallelGC -Xms{driver_mem}"
 
     builder = (
@@ -179,6 +181,24 @@ def check_driver_memory(driver_mem: str, meminfo: str = _MEMINFO, cgroup_max: st
         )
 
 
+def check_local_dirs(spark_local_dir: str | None = None) -> None:
+    """Raise ValueError, before any JVM starts, naming the first scratch dir
+    that cannot be created or written to. The dirs are Spark's: the entries
+    of SPARK_LOCAL_DIRS, else of `spark_local_dir` (spark.local.dir), else
+    none to check (the JVM's temp dir). Spark itself would fail later, at
+    the first shuffle or spill, with a less direct message."""
+    env = os.environ.get("SPARK_LOCAL_DIRS")
+    source = "SPARK_LOCAL_DIRS" if env else "spark.local.dir"
+    for d in filter(None, (env or spark_local_dir or "").split(",")):
+        try:
+            os.makedirs(d, exist_ok=True)
+            with tempfile.TemporaryFile(dir=d) as f:
+                f.write(b"\0")
+                f.flush()
+        except OSError as e:
+            raise ValueError(f"local dir {d!r} from {source} is not a writable directory: {e}") from None
+
+
 _MB_PER_UNIT = {"b": 2**-20, "k": 2**-10, "m": 1, "g": 2**10, "t": 2**20, "p": 2**30}
 
 
@@ -212,11 +232,12 @@ def _cgroup_limit(path: str) -> int | None:
 
 
 def local_cores(master: str) -> int | None:
-    """N in a `local[N]` master (`local[*]`: this host's cores), else None."""
+    """N in a `local[N]` master (`local[*]`: the cores this process may run
+    on, as for `default_master`), else None."""
     if master.startswith("local["):
         inner = master[len("local[") : -1]
         if inner == "*":
-            return os.cpu_count() or 8
+            return len(os.sched_getaffinity(0))
         try:
             return int(inner)
         except ValueError:

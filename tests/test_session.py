@@ -4,6 +4,7 @@ host, and a heap the host cannot hold fails before the JVM starts."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -137,3 +138,46 @@ def test_heap_above_host_limit_fails_before_jvm(tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
     with pytest.raises(AssertionError, match="builder reached"):
         session.get_spark(master="local[2]")
+
+
+def test_local_star_counts_the_cores_this_process_may_use(monkeypatch):
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda _pid: {0, 3, 5})
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 64)
+    assert session.local_cores("local[*]") == 3
+    assert session.local_cores("local[7]") == 7
+    assert session.local_cores("yarn") is None
+
+
+def test_unusable_local_dir_fails_before_jvm(tmp_path, monkeypatch):
+    ok, missing = tmp_path / "ok", tmp_path / "a" / "b"
+    blocked = tmp_path / "blocked"
+    blocked.write_text("a regular file where the directory should be")
+    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
+    session.check_local_dirs(None)
+    session.check_local_dirs(f"{ok},{missing}")
+    assert ok.is_dir() and missing.is_dir()
+    with pytest.raises(ValueError, match=re.escape(f"local dir '{blocked}' from spark.local.dir")):
+        session.check_local_dirs(f"{ok},{blocked}")
+    with pytest.raises(ValueError, match=re.escape(f"local dir '{blocked / 'sub'}' from spark.local.dir")):
+        session.check_local_dirs(str(blocked / "sub"))
+    # SPARK_LOCAL_DIRS wins over spark.local.dir, as in Spark
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{blocked},{ok}")
+    with pytest.raises(ValueError, match=re.escape(f"local dir '{blocked}' from SPARK_LOCAL_DIRS")):
+        session.check_local_dirs(str(ok))
+
+    # through get_spark: the bad dir never reaches the builder
+    class _NoJvm(_FakeBuilder):
+        def getOrCreate(self):
+            raise AssertionError("builder reached")
+
+    monkeypatch.setattr(session.SparkSession, "builder", _NoJvm())
+    monkeypatch.setattr(session.SparkContext, "_gateway", None)
+    with pytest.raises(ValueError, match="from SPARK_LOCAL_DIRS"):
+        session.get_spark(master="local[2]", extra_conf={"spark.driver.memory": "1g"})
+    monkeypatch.delenv("SPARK_LOCAL_DIRS")
+    with pytest.raises(ValueError, match="from spark.local.dir"):
+        session.get_spark(master="local[2]", extra_conf={"spark.driver.memory": "1g",
+                                                          "spark.local.dir": str(blocked)})
+    with pytest.raises(AssertionError, match="builder reached"):
+        session.get_spark(master="local[2]", extra_conf={"spark.driver.memory": "1g",
+                                                          "spark.local.dir": str(ok)})

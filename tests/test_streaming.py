@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bento_spark.audio.generate import CLIP_SCHEMA, clips_df
+from bento_spark.streaming.checkpoint import on_local_fs
 from bento_spark.streaming.joins import stream_stream_join
 from bento_spark.streaming.metrics import BentoMetricsListener
 from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
@@ -180,6 +181,17 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     out = sink.read(spark)
     assert out.count() == 100
     assert out.select("clip_id").distinct().count() == 100
+
+
+def test_checkpoint_on_local_fs_resolves_like_hadoop():
+    # a path with no scheme takes fs.defaultFS's
+    for path in ("/x", "file:/x", "file:///x", "ck/relative", "FILE:///x"):
+        assert on_local_fs(path, "file:///"), path
+    for path in ("hdfs://nn/x", "s3a://b/x", "gs://b/x", "abfss://c@a.dfs.core.windows.net/x"):
+        assert not on_local_fs(path, "file:///"), path
+    assert not on_local_fs("/x", "hdfs://nn")
+    assert not on_local_fs("ck/relative", "hdfs://nn:8020")
+    assert on_local_fs("file:///x", "hdfs://nn")
 
 
 def test_dlq_routing(spark, tmp_path):

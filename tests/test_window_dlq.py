@@ -7,6 +7,8 @@ clips (every 4th clip has sr_hz 8000 and goes to the DLQ)."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pandas as pd
 import pytest
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 
 from bento_spark.audio.udfs import audio_feature_frame, with_audio_features
 from bento_spark.plans.compiler import _ROW_MAPS_KEEPING_ERROR, Pipeline, compile_yaml
+from bento_spark.streaming.checkpoint import CHECKPOINT_MANAGER_KEY, FILE_SYSTEM_MANAGER, local_checkpoint_commits
 from bento_spark.streaming.sink import IdempotentParquetSink
 
 YAML = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -121,3 +124,117 @@ def test_shipped_clips_window_decodes_each_clip_once(spark, clips, tmp_path):
     decode = next(line for line in main_plan.splitlines() if "MapInPandas" in line)
     output = decode.rsplit("[", 1)[1]
     assert "rms#" in output and "bytes#" not in output, decode
+
+
+def _checkpoint_managers(q) -> list[str]:
+    """Class of each file manager `q` commits its checkpoint through: the
+    offset and commit logs, and each file source's own log (a private
+    field, which the stream thread builds after start() returns)."""
+    ex = q._jsq.streamingQuery()
+    logs = [ex.offsetLog(), ex.commitLog()]
+    sources = ex.sources()
+    for i in range(sources.size()):
+        field = sources.apply(i).getClass().getDeclaredField("metadataLog")
+        field.setAccessible(True)
+        logs.append(field.get(sources.apply(i)))
+    return [log.fileManager().getClass().getName() for log in logs]
+
+
+def test_resumed_run_commits_local_checkpoints_by_rename(spark, clips, tmp_path):
+    """Local checkpoints commit through FileSystemBasedCheckpointFileManager
+    (rename(2), no fork per rename) in every query run_stream starts; the
+    caller's session is left without the key, and a manager the caller
+    names wins on the resumed run."""
+    ck = str(tmp_path / "ck")
+    p = _shipped(clips, tmp_path, **{"error_handling.strategy": "reject",
+                                     "error_handling.dlq": str(tmp_path / "ehdlq")})
+    q = p.run_stream(spark, ck, available_now=True)
+    queries = [q, p._dlq_query, p._eh_dlq_query]
+    assert all(x is not None for x in queries)
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+    for x in queries:
+        assert x.awaitTermination(180) and x.exception() is None
+        managers = _checkpoint_managers(x)
+        assert len(managers) == 3 and set(managers) == {FILE_SYSTEM_MANAGER}, managers
+    rows = p.sink.read(spark).count()
+    assert rows > 0
+
+    named = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(CHECKPOINT_MANAGER_KEY, named)
+    try:
+        p = _shipped(clips, tmp_path)
+        q = p.run_stream(spark, ck, available_now=True)
+        for x in (q, p._dlq_query):
+            assert x.awaitTermination(180) and x.exception() is None
+            assert set(_checkpoint_managers(x)) == {named}
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == named
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+    assert p.sink.read(spark).count() == rows  # resumed: nothing new, nothing twice
+
+
+def test_concurrent_starts_all_commit_by_rename(spark, clips, tmp_path):
+    """Queries started at once from more threads than cores, on one
+    session: every log of every query commits by rename, and the session
+    ends without the key."""
+    queries, errors = [], []
+    lock = threading.Lock()
+
+    def start(i):
+        try:
+            with local_checkpoint_commits(spark, str(tmp_path / f"ck{i}")):
+                q = (spark.readStream.schema(spark.read.parquet(clips).schema).parquet(clips)
+                     .select("clip_id").writeStream.format("noop")
+                     .option("checkpointLocation", str(tmp_path / f"ck{i}"))
+                     .trigger(availableNow=True).start())
+            with lock:
+                queries.append(q)
+        except Exception as e:  # reported below: a failed start fails the test
+            with lock:
+                errors.append(repr(e))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=start, args=(i,)) for i in range(2 * os.cpu_count())]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(180)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(queries) == len(threads)
+    for q in queries:
+        assert q.awaitTermination(180) and q.exception() is None
+        assert set(_checkpoint_managers(q)) == {FILE_SYSTEM_MANAGER}
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+
+
+def test_other_filesystem_waits_for_a_local_start(spark):
+    """A pipeline on another filesystem that starts while a local one is
+    starting must not see the key the local one set on the shared session."""
+    inside, release = threading.Event(), threading.Event()
+    seen = []
+
+    def local():
+        with local_checkpoint_commits(spark, "/ck"):
+            inside.set()
+            release.wait(60)
+
+    def remote():
+        with local_checkpoint_commits(spark, "hdfs://nn/ck"):
+            seen.append(spark.conf.get(CHECKPOINT_MANAGER_KEY, None))
+
+    t1 = threading.Thread(target=local)
+    t1.start()
+    assert inside.wait(60)
+    t2 = threading.Thread(target=remote)
+    t2.start()
+    t2.join(0.5)  # enough for an unguarded remote() to read the key
+    release.set()
+    for t in (t1, t2):
+        t.join(60)
+        assert not t.is_alive()
+    assert seen == [None]
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None

@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 from bento_spark.audio.generate import clips_df
 from bento_spark.session import get_spark
 from bento_spark.streaming.cep import match_sequence_stream
+from bento_spark.streaming.checkpoint import local_checkpoint_commits
 from bento_spark.streaming.joins import stream_stream_join
 
 N_CLIPS = int(sys.argv[1]) if len(sys.argv) > 1 else 80_000
@@ -75,13 +76,14 @@ def run_probe(spark, stream_df_fn, src, schema, writer_rows: list, label: str) -
     )
     out = stream_df_fn(stream)
     t0 = time.monotonic()
-    q = (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .foreachBatch(lambda df, eid: writer_rows.append(df.count()))
-        .trigger(availableNow=True)
-        .start()
-    )
+    with local_checkpoint_commits(spark, ck):
+        q = (
+            out.writeStream.outputMode("append")
+            .option("checkpointLocation", ck)
+            .foreachBatch(lambda df, eid: writer_rows.append(df.count()))
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination(600)
     wall = time.monotonic() - t0
     batches = []
