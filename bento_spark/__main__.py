@@ -111,18 +111,25 @@ def cmd_run(args) -> int:
             print("--stage-clips needs input.parquet.path", file=sys.stderr)
             return 1
         p.stage_clips(spark, inp["path"], args.stage_clips)
-    q = p.run_stream(spark, checkpoint=args.checkpoint, available_now=not args.continuous)
-    q.awaitTermination(args.timeout or None)
-    # side DLQ queries (window+output.dlq / error_handling reject) run as
-    # separate StreamingQueries with their own checkpoints — wait for them
-    # too so a bounded run exits with the DLQ fully flushed
-    for side in (p._dlq_query, p._eh_dlq_query):
-        if side is not None:
-            side.awaitTermination(args.timeout or None)
-            if args.continuous and side.isActive:
-                side.stop()
-    if args.continuous and q.isActive:
-        q.stop()
+    # a spool-bridge input (http_server, subprocess, mqtt, ...) gets its
+    # listener/subscriber for the length of the run
+    bridge = p.start_bridge() if p.bridged else None
+    try:
+        q = p.run_stream(spark, checkpoint=args.checkpoint, available_now=not args.continuous)
+        q.awaitTermination(args.timeout or None)
+        # side DLQ queries (window+output.dlq / error_handling reject) run as
+        # separate StreamingQueries with their own checkpoints — wait for them
+        # too so a bounded run exits with the DLQ fully flushed
+        for side in (p._dlq_query, p._eh_dlq_query):
+            if side is not None:
+                side.awaitTermination(args.timeout or None)
+                if args.continuous and side.isActive:
+                    side.stop()
+        if args.continuous and q.isActive:
+            q.stop()
+    finally:
+        if bridge is not None:
+            bridge.stop()
     return 0
 
 

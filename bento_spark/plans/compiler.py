@@ -8,6 +8,11 @@ instead of a goroutine chain (stream assembly in the reference:
 internal/stream/type.go:100-154). The config IS the logical plan; Catalyst
 owns the physical plan.
 
+Inputs come from the input registry (plans/inputs.py): one row per
+`input.<name>` section with its reader, whether it reads as a table, a
+stream or both, and, for spool-bridge inputs, the starter that
+`Pipeline.start_bridge()` runs.
+
 Config shape (the Bento-shaped subset we support, plus `window` which the
 reference expresses as the system_window buffer):
 
@@ -51,12 +56,27 @@ import yaml
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bento_spark.audio.generate import CLIP_SCHEMA, clips_df
+from bento_spark.audio.generate import clips_df
 from bento_spark.audio.udfs import with_audio_features, with_decoded_pcm, with_normalized_clip
 from bento_spark.functions.bloblang import compile_expr, compile_interpolated, compile_mapping
 from bento_spark.gating import require_object_store
 from bento_spark.operators import errors as err_ops
 from bento_spark.operators import grouping, mapping as map_ops, skew
+from bento_spark.plans.inputs import (
+    INPUTS,
+    cosmos_creds,
+    gcs_creds,
+    kafka_addr,
+    kafka_sasl,
+    mqtt_addr,
+    nats_addr,
+    pubsub_creds,
+    read_input,
+    redis_addr,
+    select_input,
+    sftp_private_key,
+    sync_dir_of,
+)
 from bento_spark.streaming.checkpoint import local_checkpoint_commits
 from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed
@@ -101,7 +121,6 @@ class Pipeline:
     _sink: IdempotentParquetSink | None = field(default=None, init=False)
     _dlq_query: Any = field(default=None, init=False)  # StreamingQuery for window+dlq configs
     _case_sinks: list = field(default_factory=list, init=False)  # switch/fan_out sinks
-    _read_until: Any = field(default=None, init=False)  # compiled stop predicate
     _stop_requested: bool = field(default=False, init=False)
     # error_handling reject capture: batch defers the DLQ write to
     # run_batch/flush time; streaming stashes the errored branch for a side
@@ -113,849 +132,17 @@ class Pipeline:
     def __post_init__(self) -> None:
         # zmq4n (zeromq/input_zmq4n.go, output_zmq4n.go): the reference's
         # pure-Go client registration of the SAME ZMTP 3.0 wire contract
-        # — normalize onto the zmq4 sections once so every consumer
-        # (plan build, start_zmq_subscriber, run_stream) sees one name.
+        # — normalize onto the zmq4 sections once so every consumer sees
+        # one name. A section naming both is left as written: the input
+        # registry reports that input map as naming two inputs.
         for section in ("input", "output"):
             sec = self.conf.get(section)
-            if isinstance(sec, dict) and "zmq4n" in sec:
+            if isinstance(sec, dict) and "zmq4n" in sec and "zmq4" not in sec:
                 sec["zmq4"] = sec.pop("zmq4n")
 
     # ------------------------------------------------------------------ input
     def _input(self, spark: SparkSession, streaming: bool) -> DataFrame:
-        inp = self.conf.get("input") or {}
-        if "zmq4n" in inp:  # lint registration; normalized in __post_init__
-            inp = {**inp, "zmq4": inp.pop("zmq4n")}
-        if "generate_clips" in inp:
-            opts = inp["generate_clips"] or {}
-            df = clips_df(
-                spark,
-                int(opts.get("count", 1000)),
-                seed=int(opts.get("seed", 42)),
-                event_step_ms=int(opts.get("event_step_ms", 100)),
-            )
-            if streaming:
-                raise ValueError(
-                    "generate_clips streams via a staging dir: use input.parquet with "
-                    "a path written by clips_df (see Pipeline.stage_clips)"
-                )
-            return df
-        if "generate_images" in inp:
-            # images twin of generate_clips (images/generate.py)
-            from bento_spark.images.generate import images_df
-
-            opts = inp["generate_images"] or {}
-            if streaming:
-                raise ValueError(
-                    "generate_images streams via a staging dir: use input.parquet "
-                    "with a path written by images_df"
-                )
-            return images_df(
-                spark, int(opts.get("count", 300)), seed=int(opts.get("seed", 42))
-            )
-        if "generate_videos" in inp:
-            # videos twin of generate_clips/generate_images (video/generate.py)
-            from bento_spark.video.generate import videos_df
-
-            opts = inp["generate_videos"] or {}
-            if streaming:
-                raise ValueError(
-                    "generate_videos streams via a staging dir: use input.parquet "
-                    "with a path written by videos_df"
-                )
-            return videos_df(
-                spark, int(opts.get("count", 100)), seed=int(opts.get("seed", 42))
-            )
-        if "generate" in inp:
-            # general generate input (input_generate.go:22): a Bloblang
-            # mapping over a generated sequence. Batch = spark.range(count)
-            # (the `id` column is the 0-based message index, usable as
-            # this.id for deterministic rows); streaming = the rate source
-            # paced by `interval` (rows/sec = 1/interval), value -> id.
-            o = inp["generate"] or {}
-            if streaming:
-                from bento_spark.streaming.cep import duration_ms
-
-                iv = str(o.get("interval", "1s")) or "1s"
-                ms = max(duration_ms(iv), 1)
-                if ms <= 1000:
-                    rps, every = int(round(1000.0 / ms)), 1
-                else:
-                    # rate source floors at 1 row/sec: pace longer intervals
-                    # by keeping every Nth row (interval 1m = every 60th)
-                    rps, every = 1, int(round(ms / 1000.0))
-                src = (
-                    spark.readStream.format("rate")
-                    .option("rowsPerSecond", rps)
-                    .load()
-                    .filter((F.col("value") % every) == 0)
-                    .select((F.col("value") / every).cast("long").alias("id"))
-                    # timestamp dropped: wall-clock in the data path breaks
-                    # determinism AND batch/stream schema parity
-                )
-                if "count" in o:
-                    # bounded generate: emit exactly `count` rows then
-                    # nothing (the reference stops its input; a Spark rate
-                    # stream stays alive — pair with read_until to stop)
-                    src = src.filter(F.col("id") < int(o["count"]))
-            else:
-                src = spark.range(int(o.get("count", 100)))
-            if o.get("mapping"):
-                src = compile_mapping(str(o["mapping"])).apply(src)
-            return src
-        if "http_server" in inp:
-            # push ingestion via the spool-dir bridge (input_http_server.go:44):
-            # the listener (start_http_listener) persists request bodies as
-            # spool files; the replayable file source IS the input, so the
-            # streaming guarantees (offset log, exactly-once downstream) hold
-            o = inp["http_server"]
-            if not streaming:
-                raise ValueError("http_server input is streaming-only (push source)")
-            from bento_spark.streaming.http_server import read_spool_stream
-
-            return read_spool_stream(
-                spark,
-                o["spool_dir"],
-                whole_body=bool(o.get("whole_body", True)),
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-                # sync mode stamps the spool stem as request_id, the
-                # routing key output.sync_response replies by
-                with_request_id=bool(o.get("sync")),
-            )
-        if "parquet" in inp:
-            opts = inp["parquet"]
-            path = require_object_store(spark, opts["path"])
-            if streaming:
-                reader = spark.readStream.schema(opts.get("schema", CLIP_SCHEMA))
-                if "max_files_per_trigger" in opts:
-                    reader = reader.option("maxFilesPerTrigger", int(opts["max_files_per_trigger"]))
-                return reader.parquet(path)
-            return spark.read.parquet(path)
-        # file-format scanners (reference scanners: lines/csv/json_documents,
-        # internal/impl/pure/scanner_*.go) — Spark readers ARE the scanners
-        if "csv" in inp:
-            opts = inp["csv"]
-            rd = spark.readStream if streaming else spark.read
-            if streaming or "schema" in opts:
-                rd = rd.schema(opts["schema"])
-            return rd.options(
-                header=str(opts.get("header", True)).lower(),
-                **({"maxFilesPerTrigger": str(opts["max_files_per_trigger"])} if streaming and "max_files_per_trigger" in opts else {}),
-            ).csv(require_object_store(spark, opts["path"]))
-        if "json" in inp:
-            opts = inp["json"]
-            rd = spark.readStream if streaming else spark.read
-            if streaming or "schema" in opts:
-                rd = rd.schema(opts["schema"])
-            return rd.json(require_object_store(spark, opts["path"]))
-        if "lines" in inp:
-            opts = inp["lines"]
-            rd = (spark.readStream if streaming else spark.read).format("text")
-            if opts.get("whole"):
-                # to_the_end scanner (scanner_to_the_end.go): the whole file
-                # is ONE message — Spark's wholetext option is exactly that.
-                # format+load, not .text(): text()'s wholetext KEYWORD
-                # (default False) overrides a reader-level option
-                rd = rd.option("wholetext", "true")
-            return rd.load(require_object_store(spark, opts["path"])).withColumnRenamed(
-                "value", opts.get("column", "line"))
-        if "cassandra" in inp:
-            # SELECT as a batch source (cassandra/input.go) — driver-side
-            # single-batch read for control-plane-sized tables; bulk data
-            # belongs in parquet/Iceberg
-            o = inp["cassandra"]
-            if streaming:
-                raise ValueError("cassandra input is batch-only (a bounded SELECT)")
-            from bento_spark.streaming.cassandra import cassandra_read
-
-            addr = (o.get("addresses") or [o.get("address", "127.0.0.1:9042")])[0]
-            return cassandra_read(spark, str(addr), str(o["query"]))
-        if "mongodb" in inp:
-            # collection find as a batch source (mongodb/input.go) —
-            # driver-side single-batch read for control-plane-sized
-            # collections; bulk data belongs in parquet/Iceberg
-            o = inp["mongodb"]
-            if streaming:
-                raise ValueError("mongodb input is batch-only (a bounded find query)")
-            from bento_spark.streaming.mongodb import mongodb_read
-
-            import json as _json
-
-            flt = o.get("filter")
-            if isinstance(flt, str):
-                flt = _json.loads(flt)
-            return mongodb_read(
-                spark, str(o["url"]), str(o.get("database", "bento")),
-                str(o["collection"]), flt=flt, limit=int(o.get("limit", 0)),
-            )
-        if "binary_file" in inp:
-            # whole-file binary rows (path, modificationTime, length,
-            # content) — the byte-stream the reference's scanners consume;
-            # follow with unarchive_tar/chunker/re_split processors
-            opts = inp["binary_file"]
-            rd = spark.readStream if streaming else spark.read
-            rd = rd.format("binaryFile")
-            if "glob" in opts:
-                rd = rd.option("pathGlobFilter", opts["glob"])
-            if streaming:
-                rd = rd.schema(
-                    "path string, modificationTime timestamp, length bigint, content binary"
-                )
-            return rd.load(opts["path"])
-        if "xml" in inp:
-            # native XML datasource (Spark 4) — the reference's xml scanner/
-            # processor to_json path (internal/impl/xml/processor.go)
-            opts = inp["xml"]
-            rd = spark.readStream if streaming else spark.read
-            rd = rd.format("xml").option("rowTag", opts.get("row_tag", "row"))
-            if streaming and "schema" not in opts:
-                raise ValueError("xml streaming input requires an explicit schema")
-            if "schema" in opts:
-                rd = rd.schema(opts["schema"])
-            return rd.load(opts["path"])
-        if "stdin" in inp:
-            # stdin line input (reference internal/impl/io/input_stdin.go) —
-            # inherently a single-process feed, read on the driver
-            if streaming:
-                raise ValueError("stdin input is batch-only (single-process feed)")
-            import sys as _sys
-
-            col = (inp["stdin"] or {}).get("column", "line")
-            rows = [(ln.rstrip("\n"),) for ln in _sys.stdin]
-            return spark.createDataFrame(rows, f"{col} string")
-        if "websocket" in inp:
-            # ws:// client source (input_websocket.go) via the spool bridge;
-            # the client connects via start_websocket()
-            o = inp["websocket"]
-            if not streaming:
-                raise ValueError("websocket input is streaming-only (push source)")
-            from bento_spark.streaming.http_server import read_spool_stream
-
-            return read_spool_stream(
-                spark,
-                o["spool_dir"],
-                whole_body=True,  # one message per frame, like the reference
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "mqtt" in inp:
-            # MQTT subscription (mqtt/input.go) via the spool bridge —
-            # dependency-free 3.1.1 client (streaming/mqtt.py); the
-            # subscriber starts via start_mqtt_subscriber(). QoS1 PUBACK
-            # fires only after the spool rename, so at-least-once holds
-            # into the replayable file source.
-            o = inp["mqtt"]
-            if not streaming:
-                raise ValueError("mqtt input is streaming-only (push source)")
-            from bento_spark.streaming.mqtt import read_mqtt_stream
-
-            return read_mqtt_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "nats_object_store" in inp:
-            # watch an object-store bucket; each metadata update fetches
-            # the OBJECT and spools it as one message (nats/input_os.go).
-            # Consumer starts via start_nats_os_consumer().
-            o = inp["nats_object_store"]
-            if not streaming:
-                raise ValueError("nats_object_store input is streaming-only (pull source)")
-            from bento_spark.streaming.nats import read_nats_os_stream
-
-            return read_nats_os_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "nats_jetstream" in inp:
-            # durable JetStream pull consumer (nats/input_jetstream.go) via
-            # the spool bridge; +ACK fires only after the spool rename
-            # (at-least-once, server-tracked redelivery). Consumer starts
-            # via start_jetstream_consumer().
-            o = inp["nats_jetstream"]
-            if not streaming:
-                raise ValueError("nats_jetstream input is streaming-only (pull source)")
-            from bento_spark.streaming.nats import read_jetstream_stream
-
-            return read_jetstream_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "nats" in inp:
-            # core-NATS subscription (nats/input.go) via the spool bridge —
-            # dependency-free text-protocol client (streaming/nats.py); the
-            # subscriber starts via start_nats_subscriber(). Core NATS is
-            # at-most-once by protocol (no acks) — everything the spooler
-            # received is durable in the replayable file source.
-            o = inp["nats"]
-            if not streaming:
-                raise ValueError("nats input is streaming-only (push source)")
-            from bento_spark.streaming.nats import read_nats_stream
-
-            return read_nats_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "pulsar" in inp:
-            # Pulsar subscription (pulsar/input.go) via the spool bridge —
-            # dependency-free binary-protocol client (streaming/pulsar.py);
-            # the subscriber starts via start_pulsar_subscriber(). ACK fires
-            # only after the spool rename, so at-least-once holds into the
-            # replayable file source.
-            o = inp["pulsar"]
-            if not streaming:
-                raise ValueError("pulsar input is streaming-only (push source)")
-            from bento_spark.streaming.pulsar import read_pulsar_stream
-
-            return read_pulsar_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "aws_kinesis" in inp:
-            # Kinesis shard iteration (aws/input_kinesis.go) via the spool
-            # bridge — JSON protocol over the vector-pinned SigV4
-            # (streaming/kinesis.py); the consumer starts via
-            # start_kinesis_consumer(). Sequence numbers checkpoint to the
-            # spool dir AFTER the covered records are durable.
-            o = inp["aws_kinesis"]
-            if not streaming:
-                raise ValueError("aws_kinesis input is streaming-only (pull source)")
-            from bento_spark.streaming.kinesis import read_kinesis_stream
-
-            return read_kinesis_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "gcp_spanner_cdc" in inp:
-            # Spanner change-stream consumption (gcp/input_spanner_cdc.go)
-            # via the spool bridge — REST v1 PartialResultSet streaming
-            # client (streaming/spanner.py); the partition-tree watcher
-            # starts via start_spanner_cdc_consumer().
-            o = inp["gcp_spanner_cdc"]
-            if not streaming:
-                raise ValueError(
-                    "gcp_spanner_cdc input is streaming-only (push source)")
-            from bento_spark.streaming.spanner import read_spanner_cdc_stream
-
-            return read_spanner_cdc_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "gcp_pubsub" in inp:
-            # Pub/Sub pull (gcp/input_pubsub.go) via the spool bridge —
-            # dependency-free REST client with service-account JWT-bearer
-            # auth (streaming/pubsub.py); the consumer starts via
-            # start_pubsub_consumer(). acknowledge fires only after the
-            # spool rename — at-least-once via the ack deadline.
-            o = inp["gcp_pubsub"]
-            if not streaming:
-                raise ValueError("gcp_pubsub input is streaming-only (pull source)")
-            from bento_spark.streaming.pubsub import read_pubsub_stream
-
-            return read_pubsub_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "aws_sqs" in inp:
-            # SQS long-poll (aws/input_sqs.go) via the spool bridge —
-            # dependency-free JSON-protocol + SigV4 client
-            # (streaming/sqs.py); the consumer starts via
-            # start_sqs_consumer(). DeleteMessage fires only after the
-            # spool rename — at-least-once via the visibility timeout.
-            o = inp["aws_sqs"]
-            if not streaming:
-                raise ValueError("aws_sqs input is streaming-only (pull source)")
-            from bento_spark.streaming.sqs import read_sqs_stream
-
-            return read_sqs_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "azure_queue_storage" in inp:
-            # queue polling (azure/input_queue_storage.go) via the spool
-            # bridge — Delete Message (pop receipt) only after the rename;
-            # the consumer starts via start_azure_queue_consumer().
-            o = inp["azure_queue_storage"]
-            if not streaming:
-                raise ValueError(
-                    "azure_queue_storage input is streaming-only (pull source)")
-            from bento_spark.streaming.azure_queue import read_azure_queue_stream
-
-            return read_azure_queue_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "azure_blob_storage" in inp:
-            # container-listing consumption (azure/input_blob_storage.go)
-            # via the spool bridge — dependency-free SharedKey REST client
-            # (streaming/azure_blob.py); the consumer starts via
-            # start_azure_blob_consumer().
-            o = inp["azure_blob_storage"]
-            if not streaming:
-                raise ValueError(
-                    "azure_blob_storage input is streaming-only (pull source)")
-            from bento_spark.streaming.azure_blob import read_azure_blob_stream
-
-            return read_azure_blob_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "cypher" in inp:
-            # one-shot graph query (cypher/input_cypher.go) via the spool
-            # bridge — Bolt 4.4 client (streaming/cypher.py); starts via
-            # start_cypher_consumer().
-            o = inp["cypher"]
-            if not streaming:
-                raise ValueError("cypher input is streaming-only (pull source)")
-            from bento_spark.streaming.cypher import read_cypher_stream
-
-            return read_cypher_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "cockroachdb_changefeed" in inp:
-            # core-changefeed consumption (cockroachdb/input_changefeed.go)
-            # via the spool bridge — pgwire v3 client
-            # (streaming/cockroachdb.py); starts via
-            # start_cockroachdb_consumer().
-            o = inp["cockroachdb_changefeed"]
-            if not streaming:
-                raise ValueError(
-                    "cockroachdb_changefeed input is streaming-only "
-                    "(push source)")
-            from bento_spark.streaming.cockroachdb import read_changefeed_stream
-
-            return read_changefeed_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "etcd" in inp:
-            # watch-stream consumption (etcd/input.go) via the spool
-            # bridge — gRPC/HTTP/2 wire client (streaming/etcd.py,
-            # grpc_wire.py); starts via start_etcd_consumer().
-            o = inp["etcd"]
-            if not streaming:
-                raise ValueError("etcd input is streaming-only (push source)")
-            from bento_spark.streaming.etcd import read_etcd_stream
-
-            return read_etcd_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "discord" in inp:
-            # channel-backlog polling (discord/input.go) via the spool
-            # bridge — REST v10 + Bot token (streaming/discord.py); the
-            # poller starts via start_discord_consumer().
-            o = inp["discord"]
-            if not streaming:
-                raise ValueError("discord input is streaming-only (poll source)")
-            from bento_spark.streaming.discord import read_discord_stream
-
-            return read_discord_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "gcp_bigquery_select" in inp:
-            # paged query consumption (gcp/input_bigquery_select.go) via
-            # the spool bridge — BigQuery REST jobs.query
-            # (streaming/bigquery.py); starts via start_bigquery_consumer().
-            o = inp["gcp_bigquery_select"]
-            if not streaming:
-                raise ValueError(
-                    "gcp_bigquery_select input is streaming-only (pull source)")
-            from bento_spark.streaming.bigquery import read_bigquery_stream
-
-            return read_bigquery_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "gcp_cloud_storage" in inp:
-            # bucket-listing consumption (gcp/input_cloud_storage.go) via
-            # the spool bridge — GCS JSON API + service-account OAuth
-            # (streaming/gcs.py); the consumer starts via
-            # start_gcs_consumer().
-            o = inp["gcp_cloud_storage"]
-            if not streaming:
-                raise ValueError(
-                    "gcp_cloud_storage input is streaming-only (pull source)")
-            from bento_spark.streaming.gcs import read_gcs_stream
-
-            return read_gcs_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "sftp" in inp:
-            # glob-resolved file consumption (sftp/input.go) over the
-            # from-scratch SSH transport via the spool bridge; the
-            # consumer starts via start_sftp_consumer().
-            o = inp["sftp"]
-            if not streaming:
-                raise ValueError("sftp input is streaming-only (pull source)")
-            from bento_spark.streaming.sftp import read_sftp_stream
-
-            return read_sftp_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "azure_service_bus_queue" in inp:
-            # CBS-authenticated AMQP 1.0 receiver
-            # (azure/input_service_bus_queue.go) via the spool bridge; the
-            # consumer starts via start_service_bus_consumer().
-            o = inp["azure_service_bus_queue"]
-            if not streaming:
-                raise ValueError(
-                    "azure_service_bus_queue input is streaming-only "
-                    "(push source)")
-            from bento_spark.streaming.azure_servicebus import (
-                read_service_bus_stream,
-            )
-
-            return read_service_bus_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "azure_cosmosdb" in inp:
-            # parametrized-query consumption (azure/input_cosmosdb.go) via
-            # the spool bridge — dependency-free master-key REST client
-            # (streaming/cosmosdb.py); the consumer starts via
-            # start_cosmos_consumer().
-            o = inp["azure_cosmosdb"]
-            if not streaming:
-                raise ValueError(
-                    "azure_cosmosdb input is streaming-only (pull source)")
-            from bento_spark.streaming.cosmosdb import read_cosmos_stream
-
-            return read_cosmos_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "azure_table_storage" in inp:
-            # entity-query consumption (azure/input_table_storage.go) via
-            # the spool bridge — dependency-free SharedKey(Table) REST
-            # client (streaming/azure_table.py); the consumer starts via
-            # start_azure_table_consumer().
-            o = inp["azure_table_storage"]
-            if not streaming:
-                raise ValueError(
-                    "azure_table_storage input is streaming-only (pull source)")
-            from bento_spark.streaming.azure_table import read_azure_table_stream
-
-            return read_azure_table_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "amqp_1" in inp:
-            # AMQP 1.0 receiver link (amqp1/input.go) via the spool bridge
-            # — dependency-free OASIS-spec client (streaming/amqp1.py);
-            # the consumer starts via start_amqp1_consumer(). The accepted
-            # disposition fires only after the spool rename.
-            o = inp["amqp_1"]
-            if not streaming:
-                raise ValueError("amqp_1 input is streaming-only (push source)")
-            from bento_spark.streaming.amqp1 import read_amqp1_stream
-
-            return read_amqp1_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "sql_raw" in inp:
-            # one-shot query, each result row a message (input_sql_raw.go)
-            o = inp["sql_raw"]
-            if streaming:
-                raise ValueError("sql_raw input is batch-only (one-shot query)")
-            from bento_spark.operators.sql_raw import sql_raw_query
-
-            return sql_raw_query(
-                spark, str(o.get("driver", "sqlite")), str(o["dsn"]),
-                str(o["query"]), args=o.get("args"))
-        if "aws_s3" in inp:
-            # S3 object consumption (aws/input_s3.go) via the spool bridge —
-            # one listing pass or SQS-notified objects, fetched with the
-            # dependency-free REST + SigV4 client (streaming/s3.py); the
-            # consumer starts via start_s3_consumer(). DeleteObject /
-            # DeleteMessage fire only after the spool rename.
-            o = inp["aws_s3"]
-            if not streaming:
-                raise ValueError("aws_s3 input is streaming-only (pull source)")
-            from bento_spark.streaming.s3 import read_s3_stream
-
-            return read_s3_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "hdfs" in inp:
-            # HDFS directory consumption, file == message (hdfs/input.go)
-            # via the spool bridge over the public WebHDFS REST API
-            # (streaming/hdfs.py); the consumer starts via
-            # start_hdfs_consumer() and finishes after one listing pass
-            o = inp["hdfs"]
-            if not streaming:
-                raise ValueError("hdfs input is streaming-only (pull source)")
-            from bento_spark.streaming.hdfs import read_hdfs_stream
-
-            return read_hdfs_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "nanomsg" in inp:
-            # nanomsg PULL/SUB (nanomsg/input.go) via the spool bridge —
-            # dependency-free SP-over-TCP implementation
-            # (streaming/nanomsg.py); the socket starts via
-            # start_nanomsg_subscriber(). At-most-once once delivered.
-            o = inp["nanomsg"]
-            if not streaming:
-                raise ValueError("nanomsg input is streaming-only (push source)")
-            from bento_spark.streaming.nanomsg import read_nanomsg_stream
-
-            return read_nanomsg_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "zmq4" in inp:
-            # ZeroMQ PULL/SUB (zeromq/input_zmq4.go) via the spool bridge —
-            # dependency-free ZMTP 3.0 implementation (streaming/zeromq.py);
-            # the socket starts via start_zmq_subscriber(). At-most-once
-            # once delivered, the zmq4 contract (no acks in the protocol).
-            o = inp["zmq4"]
-            if not streaming:
-                raise ValueError("zmq4 input is streaming-only (push source)")
-            from bento_spark.streaming.zeromq import read_zmq_stream
-
-            return read_zmq_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "beanstalkd" in inp:
-            # beanstalkd reserve-poll (beanstalkd/input.go) via the spool
-            # bridge — dependency-free text-protocol client
-            # (streaming/beanstalkd.py); the consumer starts via
-            # start_beanstalkd_consumer(). `delete` fires only after the
-            # spool rename, so at-least-once holds (un-deleted jobs
-            # re-deliver after TTR).
-            o = inp["beanstalkd"]
-            if not streaming:
-                raise ValueError("beanstalkd input is streaming-only (pull source)")
-            from bento_spark.streaming.beanstalkd import read_beanstalkd_stream
-
-            return read_beanstalkd_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "nsq" in inp:
-            # NSQ channel subscription (nsq/input.go) via the spool bridge —
-            # dependency-free V2-protocol client (streaming/nsq.py); the
-            # consumer starts via start_nsq_consumer(). FIN fires only after
-            # the spool rename, so at-least-once holds into the replayable
-            # file source.
-            o = inp["nsq"]
-            if not streaming:
-                raise ValueError("nsq input is streaming-only (push source)")
-            from bento_spark.streaming.nsq import read_nsq_stream
-
-            return read_nsq_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "amqp_0_9" in inp:
-            # AMQP 0.9.1 consume (amqp09/input.go) via the spool bridge —
-            # dependency-free spec client (streaming/amqp.py); the consumer
-            # starts via start_amqp_consumer(). basic.ack fires only after
-            # the spool rename, so at-least-once holds into the replayable
-            # file source.
-            o = inp["amqp_0_9"]
-            if not streaming:
-                raise ValueError("amqp_0_9 input is streaming-only (push source)")
-            from bento_spark.streaming.amqp import read_amqp_stream
-
-            return read_amqp_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "redis_list" in inp or "redis_pubsub" in inp:
-            # redis list pop / pub-sub subscription (redis/input_list.go,
-            # input_pubsub.go) via the spool bridge — dependency-free RESP2
-            # client (streaming/redis.py); the spooler starts via
-            # start_redis_spooler(). The source key/channel rides the spool
-            # filename and decodes JVM-side into `redis_key`/`redis_channel`.
-            name = "redis_list" if "redis_list" in inp else "redis_pubsub"
-            o = inp[name]
-            if not streaming:
-                raise ValueError(f"{name} input is streaming-only (push source)")
-            from bento_spark.streaming.redis import read_redis_spool_stream
-
-            return read_redis_spool_stream(
-                spark, o["spool_dir"],
-                tag_col="redis_key" if name == "redis_list" else "redis_channel",
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "redis_streams" in inp:
-            # redis streams consumer group (redis/input_streams.go) via the
-            # spool bridge: XREADGROUP entries spool with a JSON envelope,
-            # XACK fires only after the atomic rename — at-least-once into
-            # the replayable file source
-            o = inp["redis_streams"]
-            if not streaming:
-                raise ValueError("redis_streams input is streaming-only (push source)")
-            from bento_spark.streaming.redis import read_redis_streams_stream
-
-            return read_redis_streams_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "redis_scan" in inp:
-            # keyspace-as-batch input (redis/input_scan.go): driver-side
-            # SCAN cursor, executor-side pipelined MGET per partition
-            o = inp["redis_scan"]
-            if streaming:
-                raise ValueError("redis_scan input is batch-only (bounded keyspace walk)")
-            from bento_spark.streaming.redis import read_redis_scan
-
-            host, port = self._redis_addr(o)
-            return read_redis_scan(spark, host, port, match=o.get("match", "*"))
-        if "http_client" in inp:
-            # polling HTTP source (input_http_client.go) via the spool
-            # bridge; the poller starts via start_http_poller()
-            o = inp["http_client"]
-            if not streaming:
-                raise ValueError("http_client input is streaming-only (polled source)")
-            from bento_spark.streaming.http_server import read_spool_stream
-
-            return read_spool_stream(
-                spark,
-                o["spool_dir"],
-                whole_body=bool(o.get("whole_body", True)),
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "socket_server" in inp:
-            # listener-side TCP ingestion (input_socket_server.go) via the
-            # spool bridge — replayable, unlike the raw socket source; the
-            # listener itself starts via start_socket_listener()
-            o = inp["socket_server"]
-            if not streaming:
-                raise ValueError("socket_server input is streaming-only (push source)")
-            from bento_spark.streaming.http_server import read_spool_stream
-
-            return read_spool_stream(
-                spark,
-                o["spool_dir"],
-                whole_body=not bool(o.get("lines", True)),
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "socket" in inp:
-            # TCP line source (reference net input internal/impl/io/
-            # input_socket.go) — Spark's native socket source; dev/debug
-            # grade (no offset replay), like the reference's
-            o = inp["socket"]
-            if not streaming:
-                raise ValueError("socket input is streaming-only")
-            return (
-                spark.readStream.format("socket")
-                .option("host", o.get("host", "127.0.0.1"))
-                .option("port", int(o["port"]))
-                .load()
-                .withColumnRenamed("value", o.get("column", "line"))
-            )
-        if "kafka" in inp:
-            from bento_spark.streaming.kafka import read_kafka_stream
-
-            opts = inp["kafka"]
-            if not streaming:
-                raise ValueError("kafka input is streaming-only; use build_stream/run_stream")
-            return read_kafka_stream(
-                spark,
-                addresses=opts["addresses"],
-                topics=opts["topics"],
-                starting_offsets=opts.get("starting_offsets", "earliest"),
-                checkpoint_limit=opts.get("checkpoint_limit"),
-                value_schema=opts.get("value_schema"),
-                value_format=opts.get("value_format", "json"),
-            )
-        if "kafka_franz" in inp:
-            # dependency-free Kafka consumption (kafka/input_kafka_franz.go:
-            # seed_brokers/topics/checkpoint_limit) via the spool bridge —
-            # wire-protocol client (streaming/kafka_wire.py); the consumer
-            # starts via start_kafka_franz_consumer(). Offsets commit only
-            # AFTER the spool rename, so at-least-once holds into the
-            # replayable file source. kafka_* metadata decodes JVM-side.
-            o = inp["kafka_franz"]
-            if not streaming:
-                raise ValueError("kafka_franz input is streaming-only (push source)")
-            from bento_spark.streaming.kafka_wire import read_kafka_wire_stream
-
-            return read_kafka_wire_stream(
-                spark, o["spool_dir"],
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "read_until" in inp:
-            # consume the child input until a predicate fires
-            # (input_read_until.go:34). Granularity is the micro-batch: the
-            # batch containing the first matching row is DELIVERED, later
-            # batches are discarded and the query stops (run_stream wires
-            # the monitor). The check runs on the rows reaching the output.
-            if not streaming:
-                raise ValueError(
-                    "read_until is streaming-only: tables are unordered, so "
-                    "'until the first match' has no batch meaning"
-                )
-            o = inp["read_until"]
-            self._read_until = compile_expr(str(o["check"]))
-            return Pipeline({"input": o["input"]})._input(spark, streaming)
-        if "broker" in inp:
-            # fan-in of child inputs (input_broker.go:78) = streaming union
-            children = inp["broker"]["inputs"]
-            dfs = [Pipeline({"input": c})._input(spark, streaming) for c in children]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-            return out
-        if "dynamic" in inp:
-            # labeled broker (input_dynamic.go): the static `inputs` map
-            # compiles to a fan-in union tagged with _dynamic_label.
-            # Runtime add/remove maps to the StreamManager REST API
-            # (update/recreate) — Spark cannot graft sources onto a live
-            # DAG, and the manager's stream-level mutation is the
-            # supported equivalent of the reference's /inputs/{id}.
-            children = inp["dynamic"].get("inputs") or {}
-            if not children:
-                raise ValueError("dynamic input: `inputs` map is empty")
-            dfs = [
-                Pipeline({"input": c})._input(spark, streaming)
-                .withColumn("_dynamic_label", F.lit(str(label)))
-                for label, c in sorted(children.items())
-            ]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-            return out
-        if "subprocess" in inp:
-            # stdout-line consumption (input_subprocess.go) via the spool
-            # bridge — the child runs driver-side (one OS process, like
-            # the reference itself); starts via start_subprocess_consumer()
-            o = inp["subprocess"]
-            if not streaming:
-                raise ValueError("subprocess input is streaming-only (push source)")
-            from bento_spark.streaming.http_server import read_spool_stream
-
-            return read_spool_stream(
-                spark, o["spool_dir"], whole_body=True,
-                max_files_per_trigger=o.get("max_files_per_trigger"),
-            )
-        if "sequence" in inp:
-            # ordered consumption: child i's rows all precede child i+1's
-            # (input_sequence.go:35 "once that input gracefully terminates
-            # starts consuming from the next"). Tables have no arrival
-            # order, so the sequence position is materialized as _seq_input
-            # — downstream order-sensitive ops sort on it. Batch-only: a
-            # stream never "gracefully terminates".
-            if streaming:
-                raise ValueError("sequence input is batch-only (streams do not terminate)")
-            children = inp["sequence"]["inputs"]
-            dfs = [
-                Pipeline({"input": c})._input(spark, streaming=False).withColumn("_seq_input", F.lit(i))
-                for i, c in enumerate(children)
-            ]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d, allowMissingColumns=True)
-            return out
-        raise ValueError(f"unsupported input config: {list(inp)}")
+        return read_input(spark, self.conf.get("input") or {}, streaming)
 
     @staticmethod
     def stage_clips(spark: SparkSession, path: str, count: int, **kw) -> None:
@@ -963,921 +150,24 @@ class Pipeline:
         (file-)stream source."""
         clips_df(spark, count, **kw).write.mode("overwrite").parquet(path)
 
-    def start_http_listener(self):
-        """Start the driver-side HTTP listener for an `input.http_server`
-        pipeline and return its handle (caller owns `.stop()`; `.url` is the
-        POST endpoint). Separate from build_stream on purpose: the listener
-        is a runtime resource, the stream is a plan."""
-        o = (self.conf.get("input") or {}).get("http_server")
-        if not o:
-            raise ValueError("pipeline has no input.http_server section")
-        from bento_spark.streaming.http_server import HttpSpoolServer
-
-        host, _, port = str(o.get("address", "127.0.0.1:0")).partition(":")
-        return HttpSpoolServer(
-            spool_dir=o["spool_dir"],
-            host=host or "127.0.0.1",
-            port=int(port or 0),
-            path=o.get("path", "/post"),
-            sync_dir=self._sync_dir_of(o) if o.get("sync") else None,
-            sync_timeout=float(o.get("sync_timeout", 15.0)),
-        ).start()
-
-    def start_mqtt_subscriber(self):
-        """Start the subscriber bridge for an `input.mqtt` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("mqtt")
-        if not o:
-            raise ValueError("pipeline has no input.mqtt section")
-        from bento_spark.streaming.mqtt import MqttSpooler
-
-        host, port = self._mqtt_addr(o)
-        return MqttSpooler(
-            host=host, port=port, topics=list(o["topics"]),
-            spool_dir=o["spool_dir"], qos=int(o.get("qos", 1)),
-            client_id=o.get("client_id"),
-            clean_session=bool(o.get("clean_session", True)),
-        ).start()
-
-    @staticmethod
-    def _mqtt_addr(o: dict) -> tuple[str, int]:
-        """First entry of the reference's `urls` list (tcp://host:port)
-        or a bare `address: host:port`."""
-        url = (o.get("urls") or [o.get("address", "127.0.0.1:1883")])[0]
-        hp = str(url).removeprefix("tcp://").removeprefix("mqtt://")
-        host, _, port = hp.partition(":")
-        return host or "127.0.0.1", int(port or 1883)
-
-    def start_kafka_franz_consumer(self):
-        """Start the consumer bridge for an `input.kafka_franz` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("kafka_franz")
-        if not o:
-            raise ValueError("pipeline has no input.kafka_franz section")
-        from bento_spark.streaming.kafka_wire import KafkaSpooler
-
-        host, port = self._kafka_addr(o)
-        return KafkaSpooler(
-            host=host, port=port, topics=list(o["topics"]),
-            spool_dir=o["spool_dir"],
-            checkpoint_limit=int(o.get("checkpoint_limit", 4096)),
-            sasl=self._kafka_sasl(o),
-        ).start()
-
-    @staticmethod
-    def _kafka_sasl(o: dict) -> dict | None:
-        """First entry of the reference's `sasl` list (mechanism/username/
-        password — input_kafka_franz.go saslField); None = no auth."""
-        entries = o.get("sasl") or []
-        if not entries:
-            return None
-        e = entries[0] if isinstance(entries, list) else entries
-        out = {"mechanism": str(e.get("mechanism", "PLAIN")),
-               "username": str(e.get("username", e.get("user", ""))),
-               "password": str(e.get("password", ""))}
-        for k in ("access_key", "secret_key", "region", "host"):
-            if e.get(k) is not None:
-                out[k] = str(e[k])
-        return out
-
-    @staticmethod
-    def _kafka_addr(o: dict) -> tuple[str, int]:
-        """First entry of the reference's `seed_brokers` list (host:port)."""
-        hp = str((o.get("seed_brokers") or ["127.0.0.1:9092"])[0])
-        hp = hp.removeprefix("kafka://").removeprefix("tcp://")
-        host, _, port = hp.partition(":")
-        return host or "127.0.0.1", int(port or 9092)
-
-    def start_nats_os_consumer(self):
-        """Start the bucket-watch bridge for an `input.nats_object_store`
-        pipeline and return its handle (caller owns `.stop()`)."""
-        o = (self.conf.get("input") or {}).get("nats_object_store")
-        if not o:
-            raise ValueError("pipeline has no input.nats_object_store section")
-        from bento_spark.streaming.nats import NatsOsSpooler
-
-        host, port = self._nats_addr(o)
-        return NatsOsSpooler(
-            host=host, port=port, bucket=str(o["bucket"]),
-            durable=str(o.get("durable", "bento_spark_os")),
-            spool_dir=o["spool_dir"],
-        ).start()
-
-    def start_jetstream_consumer(self):
-        """Start the pull-consumer bridge for an `input.nats_jetstream`
-        pipeline and return its handle (caller owns `.stop()`). Same
-        runtime-resource/plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("nats_jetstream")
-        if not o:
-            raise ValueError("pipeline has no input.nats_jetstream section")
-        from bento_spark.streaming.cep import duration_ms
-        from bento_spark.streaming.nats import JetStreamSpooler
-
-        host, port = self._nats_addr(o)
-        return JetStreamSpooler(
-            host=host, port=port, stream=str(o["stream"]),
-            durable=str(o.get("durable", "bento_spark")),
-            spool_dir=o["spool_dir"], subject=str(o.get("subject", "")),
-            deliver=str(o.get("deliver", "all")),
-            ack_wait_s=duration_ms(str(o.get("ack_wait", "30s"))) / 1000.0,
-        ).start()
-
-    def start_nats_subscriber(self):
-        """Start the subscriber bridge for an `input.nats` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("nats")
-        if not o:
-            raise ValueError("pipeline has no input.nats section")
-        from bento_spark.streaming.nats import NatsSpooler
-
-        host, port = self._nats_addr(o)
-        return NatsSpooler(
-            host=host, port=port, subject=o["subject"],
-            spool_dir=o["spool_dir"], queue=o.get("queue"),
-        ).start()
-
-    @staticmethod
-    def _nats_addr(o: dict) -> tuple[str, int]:
-        """First entry of the reference's `urls` list (nats://host:port)
-        or a bare `address: host:port`."""
-        url = (o.get("urls") or [o.get("address", "127.0.0.1:4222")])[0]
-        hp = str(url).removeprefix("nats://").removeprefix("tcp://")
-        host, _, port = hp.partition(":")
-        return host or "127.0.0.1", int(port or 4222)
-
-    def start_pulsar_subscriber(self):
-        """Start the subscriber bridge for an `input.pulsar` pipeline and
-        return its handle (caller owns `.stop()`). Fields follow
-        pulsar/input.go: url, topics / topics_pattern, subscription_name,
-        subscription_type, auth.token."""
-        o = (self.conf.get("input") or {}).get("pulsar")
-        if not o:
-            raise ValueError("pipeline has no input.pulsar section")
-        from bento_spark.streaming.pulsar import PulsarSpooler, parse_pulsar_url
-
-        host, port = parse_pulsar_url(str(o.get("url", "pulsar://127.0.0.1:6650")))
-        auth = (o.get("auth") or {}).get("token") or {}
-        token = auth.get("token") if auth.get("enabled") else None
-        return PulsarSpooler(
-            host=host, port=port, topics=list(o.get("topics") or []),
-            subscription=o["subscription_name"], spool_dir=o["spool_dir"],
-            sub_type=o.get("subscription_type", "shared"),
-            topics_pattern=o.get("topics_pattern"), token=token,
-        ).start()
-
-    def start_kinesis_consumer(self):
-        """Start the consumer bridge for an `input.aws_kinesis` pipeline
-        and return its handle (caller owns `.stop()`)."""
-        import os
-
-        o = (self.conf.get("input") or {}).get("aws_kinesis")
-        if not o:
-            raise ValueError("pipeline has no input.aws_kinesis section")
-        from bento_spark.streaming.kinesis import KinesisSpooler
-
-        return KinesisSpooler(
-            endpoint=str(o.get("endpoint") or
-                         f"https://kinesis.{o.get('region', 'us-east-1')}.amazonaws.com"),
-            streams=[str(s) for s in o["streams"]],
-            access_key=str(o.get("access_key")
-                           or os.environ.get("AWS_ACCESS_KEY_ID", "")),
-            secret_key=str(o.get("secret_key")
-                           or os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-            spool_dir=o["spool_dir"],
-            region=str(o.get("region", "us-east-1")),
-            checkpoint_limit=int(o.get("checkpoint_limit", 1000)),
-        ).start()
-
-    def start_spanner_cdc_consumer(self):
-        """Start the partition-tree watcher for an `input.gcp_spanner_cdc`
-        pipeline (caller owns `.stop()`). Fields follow
-        input_spanner_cdc.go: spanner_dsn, stream_name, start_time,
-        end_time (RFC3339), heartbeat_interval; plus the repo's GCP
-        conventions (endpoint override, credentials file/dict)."""
-        o = (self.conf.get("input") or {}).get("gcp_spanner_cdc")
-        if not o:
-            raise ValueError("pipeline has no input.gcp_spanner_cdc section")
-        from bento_spark.streaming.cep import duration_ms
-        from bento_spark.streaming.spanner import SpannerCdcSpooler
-
-        return SpannerCdcSpooler(
-            dsn=str(o["spanner_dsn"]),
-            stream_name=str(o["stream_name"]),
-            spool_dir=o["spool_dir"],
-            start_time=(str(o["start_time"]) if o.get("start_time") else None),
-            end_time=(str(o["end_time"]) if o.get("end_time") else None),
-            heartbeat_ms=duration_ms(str(o.get("heartbeat_interval", "3s"))),
-            endpoint=str(o.get("endpoint")
-                         or "https://spanner.googleapis.com"),
-            credentials=self._pubsub_creds(o),
-        ).start()
-
-    def start_pubsub_consumer(self):
-        """Start the consumer bridge for an `input.gcp_pubsub` pipeline
-        and return its handle (caller owns `.stop()`). `credentials` is
-        the service-account JSON (path or inline dict); absent =
-        unauthenticated emulator mode (PUBSUB_EMULATOR_HOST contract)."""
-        o = (self.conf.get("input") or {}).get("gcp_pubsub")
-        if not o:
-            raise ValueError("pipeline has no input.gcp_pubsub section")
-        from bento_spark.streaming.pubsub import PubSubSpooler
-
-        creds = self._pubsub_creds(o)
-        create = o.get("create_subscription") or {}
-        return PubSubSpooler(
-            endpoint=str(o.get("endpoint") or "https://pubsub.googleapis.com"),
-            project=str(o["project"]), subscription=str(o["subscription"]),
-            spool_dir=o["spool_dir"], credentials=creds,
-            max_messages=int(o.get("max_outstanding_messages", 10)),
-            create_topic=(str(create["topic"])
-                          if create.get("enabled") else None),
-        ).start()
-
-    @staticmethod
-    def _pubsub_creds(o: dict) -> dict | None:
-        import json as _json
-
-        c = o.get("credentials_json")
-        if c is None:
-            return None
-        if isinstance(c, dict):
-            return c
-        with open(str(c), encoding="utf-8") as f:
-            return _json.load(f)
-
-    def start_sqs_consumer(self):
-        """Start the consumer bridge for an `input.aws_sqs` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener. Credentials come from the
-        section or the standard AWS_* env vars."""
-        import os
-
-        o = (self.conf.get("input") or {}).get("aws_sqs")
-        if not o:
-            raise ValueError("pipeline has no input.aws_sqs section")
-        from bento_spark.streaming.sqs import SqsSpooler
-
-        return SqsSpooler(
-            endpoint=str(o.get("endpoint") or
-                         f"https://sqs.{o.get('region', 'us-east-1')}.amazonaws.com"),
-            queue_url=str(o["url"]),
-            access_key=str(o.get("access_key")
-                           or os.environ.get("AWS_ACCESS_KEY_ID", "")),
-            secret_key=str(o.get("secret_key")
-                           or os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-            spool_dir=o["spool_dir"],
-            region=str(o.get("region", "us-east-1")),
-            wait_time_s=int(o.get("wait_time_seconds", 1)),
-            max_messages=int(o.get("max_number_of_messages", 10)),
-            delete_message=bool(o.get("delete_message", True)),
-        ).start()
-
-    def start_azure_queue_consumer(self):
-        """Start the consumer bridge for an `input.azure_queue_storage`
-        pipeline and return its handle (caller owns `.stop()`)."""
-        import os
-
-        from bento_spark.streaming.cep import duration_ms
-
-        o = (self.conf.get("input") or {}).get("azure_queue_storage")
-        if not o:
-            raise ValueError("pipeline has no input.azure_queue_storage section")
-        from bento_spark.streaming.azure_queue import AzureQueueSpooler
-
-        account = str(o.get("storage_account")
-                      or os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-        vis = o.get("dequeue_visibility_timeout", "30s")
-        return AzureQueueSpooler(
-            endpoint=str(o.get("endpoint")
-                         or f"https://{account}.queue.core.windows.net"),
-            account=account,
-            account_key=str(o.get("storage_access_key")
-                            or os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-            queue=str(o["queue_name"]),
-            spool_dir=o["spool_dir"],
-            max_messages=int(o.get("max_in_flight", 16)),
-            visibility_timeout_s=max(1, duration_ms(str(vis)) // 1000),
-        ).start()
-
-    @staticmethod
-    def _gcs_creds(o: dict) -> dict | None:
-        """Service-account fields from the section, a credentials_file
-        (the service-account JSON), or None (emulator/unauthenticated)."""
-        import json as _json
-
-        if o.get("credentials_file"):
-            from pathlib import Path as _Path
-
-            sa = _json.loads(_Path(str(o["credentials_file"])).read_text())
-            return {"client_email": sa["client_email"],
-                    "private_key": sa["private_key"],
-                    "token_uri": sa.get(
-                        "token_uri", "https://oauth2.googleapis.com/token")}
-        c = o.get("credentials")
-        if c:
-            return {"client_email": str(c["client_email"]),
-                    "private_key": str(c["private_key"]),
-                    "token_uri": str(c.get(
-                        "token_uri", "https://oauth2.googleapis.com/token"))}
-        return None
-
-    def start_cypher_consumer(self):
-        """Start the consumer bridge for an `input.cypher` pipeline
-        (caller owns `.stop()`; `.wait_finished()` — the reference input
-        shuts down once the query's records are exhausted). Fields
-        follow cypher/input_cypher.go + conn_fields.go: uri, database,
-        query, no_auth / basic_auth.{user,password}."""
-        o = (self.conf.get("input") or {}).get("cypher")
-        if not o:
-            raise ValueError("pipeline has no input.cypher section")
-        from bento_spark.streaming.cypher import CypherSpooler
-
-        auth = o.get("basic_auth") or {}
-        no_auth = bool(o.get("no_auth", False))
-        return CypherSpooler(
-            uri=str(o["uri"]), query=str(o["query"]),
-            spool_dir=o["spool_dir"], database=str(o.get("database", "")),
-            user=None if no_auth else auth.get("user"),
-            password=None if no_auth else auth.get("password"),
-        ).start()
-
-    def start_cockroachdb_consumer(self):
-        """Start the consumer bridge for an `input.cockroachdb_changefeed`
-        pipeline (caller owns `.stop()`; the changefeed statement never
-        completes). Fields follow cockroachdb/input_changefeed.go: dsn,
-        tables, options, cursor_cache (here a spool-dir dotfile playing
-        the reference's cache-resource role — set truthy to resume from
-        the last delivered row's `updated` timestamp)."""
-        o = (self.conf.get("input") or {}).get("cockroachdb_changefeed")
-        if not o:
-            raise ValueError(
-                "pipeline has no input.cockroachdb_changefeed section")
-        from bento_spark.streaming.cockroachdb import ChangefeedSpooler
-
-        return ChangefeedSpooler(
-            dsn=str(o["dsn"]),
-            tables=[str(t) for t in (o.get("tables") or [])],
-            spool_dir=o["spool_dir"],
-            options=[str(x) for x in (o.get("options") or [])],
-            cursor_cache=bool(o.get("cursor_cache")),
-        ).start()
-
-    def start_subprocess_consumer(self):
-        """Start the child-process bridge for an `input.subprocess`
-        pipeline (caller owns `.stop()`). Fields follow
-        input_subprocess.go: name, args, restart_on_exit, max_buffer."""
-        o = (self.conf.get("input") or {}).get("subprocess")
-        if not o:
-            raise ValueError("pipeline has no input.subprocess section")
-        from bento_spark.streaming.subprocess_io import SubprocessSpooler
-
-        return SubprocessSpooler(
-            name=str(o["name"]),
-            args=[str(a) for a in (o.get("args") or [])],
-            spool_dir=o["spool_dir"],
-            restart_on_exit=bool(o.get("restart_on_exit", False)),
-            max_buffer=int(o.get("max_buffer", 65536)),
-        ).start()
-
-    def start_etcd_consumer(self):
-        """Start the watcher bridge for an `input.etcd` pipeline (caller
-        owns `.stop()`; the watch never completes). Fields follow
-        etcd/input.go + client.go: endpoints, key, options.{with_prefix,
-        with_range, with_progress_notify, with_created_notify,
-        with_filter_put, with_filter_delete}, auth.{enabled, username,
-        password}."""
-        o = (self.conf.get("input") or {}).get("etcd")
-        if not o:
-            raise ValueError("pipeline has no input.etcd section")
-        from bento_spark.streaming.etcd import EtcdWatchSpooler
-
-        opts = o.get("options") or {}
-        auth = o.get("auth") or {}
-        return EtcdWatchSpooler(
-            endpoints=[str(e) for e in (o.get("endpoints") or [])],
-            key=str(o["key"]),
-            spool_dir=o["spool_dir"],
-            with_prefix=bool(opts.get("with_prefix", False)),
-            with_range=str(opts.get("with_range", "")),
-            progress_notify=bool(opts.get("with_progress_notify", False)),
-            filter_put=bool(opts.get("with_filter_put", False)),
-            filter_delete=bool(opts.get("with_filter_delete", False)),
-            created_notify=bool(opts.get("with_created_notify", False)),
-            username=str(auth.get("username", "")),
-            password=str(auth.get("password", "")),
-            auth_enabled=bool(auth.get("enabled", False)),
-        ).start()
-
-    def start_discord_consumer(self):
-        """Start the poller bridge for an `input.discord` pipeline
-        (caller owns `.stop()`). Fields follow discord/input.go:
-        channel_id, bot_token, poll_period, limit."""
-        o = (self.conf.get("input") or {}).get("discord")
-        if not o:
-            raise ValueError("pipeline has no input.discord section")
-        from bento_spark.streaming.cep import duration_ms
-        from bento_spark.streaming.discord import DiscordSpooler
-
-        return DiscordSpooler(
-            endpoint=str(o.get("endpoint") or "https://discord.com"),
-            channel_id=str(o["channel_id"]),
-            bot_token=str(o["bot_token"]),
-            spool_dir=o["spool_dir"],
-            poll_period_s=duration_ms(str(o.get("poll_period",
-                                                "1m"))) / 1000.0,
-            limit=int(o.get("limit", 100)),
-        ).start()
-
-    def start_bigquery_consumer(self):
-        """Start the consumer bridge for an `input.gcp_bigquery_select`
-        pipeline (caller owns `.stop()`; `.wait_finished()`). Fields
-        follow gcp/input_bigquery_select.go: project, table, columns,
-        where + positional `args`, prefix/suffix."""
-        o = (self.conf.get("input") or {}).get("gcp_bigquery_select")
-        if not o:
-            raise ValueError(
-                "pipeline has no input.gcp_bigquery_select section")
-        from bento_spark.streaming.bigquery import BigQuerySpooler
-
-        return BigQuerySpooler(
-            endpoint=str(o.get("endpoint")
-                         or "https://bigquery.googleapis.com"),
-            project=str(o["project"]), table=str(o["table"]),
-            columns=[str(c) for c in (o.get("columns") or ["*"])],
-            spool_dir=o["spool_dir"], where=str(o.get("where", "")),
-            args=list(o.get("args") or []) or None,
-            prefix=str(o.get("prefix", "")), suffix=str(o.get("suffix", "")),
-            credentials=self._gcs_creds(o),
-        ).start()
-
-    def start_gcs_consumer(self):
-        """Start the consumer bridge for an `input.gcp_cloud_storage`
-        pipeline and return its handle (caller owns `.stop()`;
-        `.wait_finished()` — the reference consumes the listing then
-        stops). Fields follow gcp/input_cloud_storage.go: bucket, prefix,
-        delete_objects."""
-        o = (self.conf.get("input") or {}).get("gcp_cloud_storage")
-        if not o:
-            raise ValueError("pipeline has no input.gcp_cloud_storage section")
-        from bento_spark.streaming.gcs import GcsSpooler
-
-        return GcsSpooler(
-            endpoint=str(o.get("endpoint") or "https://storage.googleapis.com"),
-            bucket=str(o["bucket"]),
-            spool_dir=o["spool_dir"],
-            prefix=str(o.get("prefix", "")),
-            delete_objects=bool(o.get("delete_objects", False)),
-            credentials=self._gcs_creds(o),
-        ).start()
-
-    def start_sftp_consumer(self):
-        """Start the consumer bridge for an `input.sftp` pipeline and
-        return its handle (caller owns `.stop()`; `.wait_finished()` for
-        the one-pass mode). Fields follow sftp/input.go: address,
-        credentials.username/password, paths (globs), delete_on_finish,
-        watcher.{enabled,poll_interval,minimum_age}. private_key_file
-        credentials raise: the transport implements password auth (see
-        streaming/sftp.py's credential-scope note)."""
-        o = (self.conf.get("input") or {}).get("sftp")
-        if not o:
-            raise ValueError("pipeline has no input.sftp section")
-        from bento_spark.streaming.cep import duration_ms
-        from bento_spark.streaming.sftp import SftpSpooler, parse_sftp_address
-
-        creds = o.get("credentials") or {}
-        host, port = parse_sftp_address(str(o.get("address",
-                                                  "127.0.0.1:22")))
-        w = o.get("watcher") or {}
-        return SftpSpooler(
-            host=host, port=port,
-            username=str(creds.get("username", "")),
-            password=str(creds.get("password", "")),
-            private_key_pem=self._sftp_private_key(creds),
-            paths=[str(p) for p in (o.get("paths") or [])],
-            spool_dir=o["spool_dir"],
-            delete_on_finish=bool(o.get("delete_on_finish", False)),
-            watcher=bool(w.get("enabled", False)),
-            poll_interval_s=duration_ms(str(w.get("poll_interval",
-                                                  "1s"))) / 1000.0,
-            minimum_age_s=duration_ms(str(w.get("minimum_age",
-                                                "0s"))) / 1000.0,
-        ).start()
-
-    @staticmethod
-    def _sftp_private_key(creds: dict) -> str | None:
-        """credentials.private_key_file -> PEM text (RFC 4252 §7
-        publickey auth, rsa-sha2-256). Passphrase-encrypted keys need
-        PEM decryption the pure-Python parser doesn't do — name it."""
-        if not creds.get("private_key_file"):
-            return None
-        if creds.get("private_key_pass"):
-            raise ValueError(
-                "sftp: private_key_pass (encrypted PEM) is not supported "
-                "by the built-in SSH transport — decrypt the key first "
-                "(openssl pkcs8) or use credentials.password")
-        from pathlib import Path as _Path
-
-        return _Path(str(creds["private_key_file"])).read_text()
-
-    def start_service_bus_consumer(self):
-        """Start the consumer bridge for an `input.azure_service_bus_queue`
-        pipeline and return its handle (caller owns `.stop()`). The
-        connection string follows the reference
-        (input_service_bus_queue.go): Endpoint=sb://..;
-        SharedAccessKeyName=..;SharedAccessKey=..[;EntityPath=..]."""
-        o = (self.conf.get("input") or {}).get("azure_service_bus_queue")
-        if not o:
-            raise ValueError(
-                "pipeline has no input.azure_service_bus_queue section")
-        from bento_spark.streaming.azure_servicebus import (
-            ServiceBusSpooler,
-            parse_sb_connection_string,
-        )
-
-        host, key_name, key, entity = parse_sb_connection_string(
-            str(o["connection_string"]))
-        # real Service Bus listens on 5671 (amqps); the Endpoint may carry
-        # an explicit port (the mini broker / emulators do)
-        port = int(o.get("port", 0))
-        if not port:
-            m = re.search(r"Endpoint=sb://[^:;/]+:(\d+)",
-                          str(o["connection_string"]))
-            port = int(m.group(1)) if m else 5671
-        return ServiceBusSpooler(
-            host=host, port=port,
-            queue=str(o.get("queue") or entity or ""),
-            spool_dir=o["spool_dir"], key_name=key_name, key=key,
-            nack_reject_patterns=[str(p) for p in
-                                  (o.get("nack_reject_patterns") or [])],
-        ).start()
-
-    def start_cosmos_consumer(self):
-        """Start the consumer bridge for an `input.azure_cosmosdb`
-        pipeline and return its handle (caller owns `.stop()`; exposes
-        `.wait_finished()`). `partition_keys_map` follows the reference:
-        a Bloblang mapping evaluated once with no input — i.e. a literal
-        (input_cosmosdb.go:96)."""
-        o = (self.conf.get("input") or {}).get("azure_cosmosdb")
-        if not o:
-            raise ValueError("pipeline has no input.azure_cosmosdb section")
-        from bento_spark.streaming.cosmosdb import CosmosSpooler, parse_pk_mapping
-
-        endpoint, key = self._cosmos_creds(o)
-        pk = (parse_pk_mapping(str(o["partition_keys_map"]))
-              if o.get("partition_keys_map") is not None
-              else o.get("partition_key"))
-        # engine contract: STRING partition keys end-to-end (the per-row
-        # mapping on the write side compiles to a string column)
-        if pk is not None and not isinstance(pk, str):
-            pk = ("true" if pk is True else "false" if pk is False
-                  else str(pk))
-        params = [{"name": str(p["name"]), "value": p["value"]}
-                  for p in (o.get("args") or [])]
-        return CosmosSpooler(
-            endpoint=endpoint, account_key=key,
-            database=str(o["database"]), container=str(o["container"]),
-            partition_key=pk, query=str(o["query"]),
-            spool_dir=o["spool_dir"], parameters=params,
-            page_size=int(o.get("batch_count", 100)),
-        ).start()
-
-    @staticmethod
-    def _cosmos_creds(o: dict) -> tuple[str, str]:
-        """connection_string wins over endpoint+account_key, like the
-        reference's credential docs."""
-        if o.get("connection_string"):
-            from bento_spark.streaming.cosmosdb import parse_connection_string
-
-            return parse_connection_string(str(o["connection_string"]))
-        return str(o["endpoint"]), str(o["account_key"])
-
-    def start_azure_table_consumer(self):
-        """Start the consumer bridge for an `input.azure_table_storage`
-        pipeline and return its handle (caller owns `.stop()`; exposes
-        `.wait_finished()` — the reference's pager consumes the query then
-        stops). Credentials come from the section or the standard
-        AZURE_STORAGE_* env vars."""
-        import os
-
-        o = (self.conf.get("input") or {}).get("azure_table_storage")
-        if not o:
-            raise ValueError("pipeline has no input.azure_table_storage section")
-        from bento_spark.streaming.azure_table import AzureTableSpooler
-
-        account = str(o.get("storage_account")
-                      or os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-        return AzureTableSpooler(
-            endpoint=str(o.get("endpoint")
-                         or f"https://{account}.table.core.windows.net"),
-            account=account,
-            account_key=str(o.get("storage_access_key")
-                            or os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-            table=str(o["table_name"]),
-            spool_dir=o["spool_dir"],
-            filter=str(o.get("filter", "")),
-            select=str(o.get("select", "")),
-            page_size=int(o.get("page_size", 1000)),
-        ).start()
-
-    def start_azure_blob_consumer(self):
-        """Start the consumer bridge for an `input.azure_blob_storage`
-        pipeline and return its handle (caller owns `.stop()`; exposes
-        `.wait_finished()` — the reference consumes the listing then
-        stops). Credentials come from the section or the standard
-        AZURE_STORAGE_* env vars."""
-        import os
-
-        o = (self.conf.get("input") or {}).get("azure_blob_storage")
-        if not o:
-            raise ValueError("pipeline has no input.azure_blob_storage section")
-        from bento_spark.streaming.azure_blob import AzureBlobSpooler
-
-        account = str(o.get("storage_account")
-                      or os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-        return AzureBlobSpooler(
-            endpoint=str(o.get("endpoint")
-                         or f"https://{account}.blob.core.windows.net"),
-            account=account,
-            account_key=str(o.get("storage_access_key")
-                            or os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-            container=str(o["container"]),
-            spool_dir=o["spool_dir"],
-            prefix=str(o.get("prefix", "")),
-            delete_blobs=bool(o.get("delete_objects", False)),
-        ).start()
-
-    def start_amqp1_consumer(self):
-        """Start the consumer bridge for an `input.amqp_1` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("amqp_1")
-        if not o:
-            raise ValueError("pipeline has no input.amqp_1 section")
-        from bento_spark.streaming.amqp1 import Amqp1Spooler
-
-        url = o.get("url") or (o.get("urls") or [None])[0]
-        if not url:
-            raise ValueError("input.amqp_1 needs `url` (or `urls`)")
-        return Amqp1Spooler(
-            url=str(url),
-            source_address=str(o["source_address"]),
-            spool_dir=o["spool_dir"],
-            credit=int(o.get("credit", 64)),
-        ).start()
-
-    def start_s3_consumer(self):
-        """Start the consumer bridge for an `input.aws_s3` pipeline and
-        return its handle (caller owns `.stop()`; plain-listing mode also
-        exposes `.wait_finished()` — the reference consumes the listing
-        then stops, input_s3.go). Credentials come from the section or
-        the standard AWS_* env vars."""
-        import os
-
-        o = (self.conf.get("input") or {}).get("aws_s3")
-        if not o:
-            raise ValueError("pipeline has no input.aws_s3 section")
-        from bento_spark.streaming.s3 import S3Spooler
-
-        sqs_block = o.get("sqs") or {}
-        return S3Spooler(
-            endpoint=str(o.get("endpoint") or
-                         f"https://s3.{o.get('region', 'us-east-1')}.amazonaws.com"),
-            bucket=str(o["bucket"]),
-            access_key=str(o.get("access_key")
-                           or os.environ.get("AWS_ACCESS_KEY_ID", "")),
-            secret_key=str(o.get("secret_key")
-                           or os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-            spool_dir=o["spool_dir"],
-            prefix=str(o.get("prefix", "")),
-            region=str(o.get("region", "us-east-1")),
-            delete_objects=bool(o.get("delete_objects", False)),
-            sqs_queue_url=(str(sqs_block["url"]) if sqs_block.get("url") else None),
-            sqs_endpoint=(str(sqs_block["endpoint"])
-                          if sqs_block.get("endpoint") else None),
-            sqs_key_path=str(sqs_block.get("key_path", "Records.*.s3.object.key")),
-            sqs_bucket_path=str(sqs_block.get("bucket_path",
-                                              "Records.*.s3.bucket.name")),
-            sqs_wait_time_s=int(sqs_block.get("wait_time_seconds", 1)),
-            sqs_max_messages=int(sqs_block.get("max_number_of_messages", 10)),
-        ).start()
-
-    def start_hdfs_consumer(self):
-        """Start the consumer bridge for an `input.hdfs` pipeline and
-        return its handle (caller owns `.stop()`; `.wait_finished()`
-        blocks for the single listing pass — hdfs/input.go consumes the
-        directory then stops). Same runtime-resource/plan split as
-        start_http_listener."""
-        o = (self.conf.get("input") or {}).get("hdfs")
-        if not o:
-            raise ValueError("pipeline has no input.hdfs section")
-        from bento_spark.streaming.hdfs import HdfsSpooler
-
-        return HdfsSpooler(
-            hosts=o.get("hosts") or [str(o.get("host", "127.0.0.1:9870"))],
-            user=str(o.get("user", "bento")),
-            directory=str(o["directory"]),
-            spool_dir=o["spool_dir"],
-        ).start()
-
-    def start_nanomsg_subscriber(self):
-        """Start the socket bridge for an `input.nanomsg` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("nanomsg")
-        if not o:
-            raise ValueError("pipeline has no input.nanomsg section")
-        from bento_spark.streaming.nanomsg import NanomsgSpooler
-
-        return NanomsgSpooler(
-            socket_type=str(o.get("socket_type", "PULL")).upper(),
-            spool_dir=o["spool_dir"],
-            urls=[str(u) for u in o.get("urls") or []],
-            bind=bool(o.get("bind", False)),
-            sub_filters=[str(f) for f in o["sub_filters"]]
-            if o.get("sub_filters") is not None else None,
-        ).start()
-
-    def start_zmq_subscriber(self):
-        """Start the socket bridge for an `input.zmq4` pipeline and return
-        its handle (caller owns `.stop()`). Same runtime-resource/plan
-        split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("zmq4")
-        if not o:
-            raise ValueError("pipeline has no input.zmq4 section")
-        from bento_spark.streaming.zeromq import ZmqSpooler
-
-        return ZmqSpooler(
-            socket_type=str(o.get("socket_type", "PULL")).upper(),
-            spool_dir=o["spool_dir"],
-            urls=[str(u) for u in o.get("urls") or []],
-            bind=bool(o.get("bind", False)),
-            sub_filters=[str(f) for f in o.get("sub_filters") or []],
-        ).start()
-
-    def start_beanstalkd_consumer(self):
-        """Start the consumer bridge for an `input.beanstalkd` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("beanstalkd")
-        if not o:
-            raise ValueError("pipeline has no input.beanstalkd section")
-        from bento_spark.streaming.beanstalkd import (
-            BeanstalkdSpooler,
-            parse_beanstalkd_addr,
-        )
-
-        host, port = parse_beanstalkd_addr(str(o.get("address", "127.0.0.1:11300")))
-        return BeanstalkdSpooler(host=host, port=port, spool_dir=o["spool_dir"]).start()
-
-    def start_nsq_consumer(self):
-        """Start the consumer bridge for an `input.nsq` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("nsq")
-        if not o:
-            raise ValueError("pipeline has no input.nsq section")
-        from bento_spark.streaming.nsq import NsqSpooler, parse_nsqd_addr
-
-        addr = (o.get("nsqd_tcp_addresses") or ["127.0.0.1:4150"])[0]
-        host, port = parse_nsqd_addr(str(addr))
-        return NsqSpooler(
-            host=host, port=port, topic=str(o["topic"]),
-            channel=str(o.get("channel", "bento_spark")),
-            spool_dir=o["spool_dir"],
-            max_in_flight=int(o.get("max_in_flight", 64)),
-            max_attempts=int(o.get("max_attempts", 5)),
-        ).start()
-
-    def start_amqp_consumer(self):
-        """Start the consumer bridge for an `input.amqp_0_9` pipeline and
-        return its handle (caller owns `.stop()`). Same runtime-resource/
-        plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("amqp_0_9")
-        if not o:
-            raise ValueError("pipeline has no input.amqp_0_9 section")
-        from bento_spark.streaming.amqp import AmqpSpooler, parse_amqp_url
-
-        url = (o.get("urls") or [o.get("url", "amqp://127.0.0.1:5672")])[0]
-        host, port, vhost = parse_amqp_url(str(url))
-        qd = o.get("queue_declare") or {}
-        binds = [
-            (b["exchange"], b.get("key", ""))
-            for b in o.get("bindings_declare") or []
-        ]
-        return AmqpSpooler(
-            host=host, port=port, queue=o["queue"], spool_dir=o["spool_dir"],
-            vhost=vhost, declare=bool(qd.get("enabled", False)), bindings=binds,
-            consumer_tag=o.get("consumer_tag", "bento_spark"),
-            prefetch_count=int(o.get("prefetch_count", 64)),
-        ).start()
-
-    def start_redis_spooler(self):
-        """Start the subscriber/consumer bridge for a redis_list /
-        redis_pubsub / redis_streams input pipeline and return its handle
-        (caller owns `.stop()`). Same runtime-resource/plan split as
-        start_http_listener."""
-        inp = self.conf.get("input") or {}
-        from bento_spark.streaming.redis import (
-            RedisListSpooler,
-            RedisPubSubSpooler,
-            RedisStreamsSpooler,
-        )
-
-        if "redis_list" in inp:
-            o = inp["redis_list"]
-            host, port = self._redis_addr(o)
-            return RedisListSpooler(
-                host=host, port=port, spool_dir=o["spool_dir"], key=o["key"],
-                command=o.get("command", "blpop"),
-            ).start()
-        if "redis_pubsub" in inp:
-            o = inp["redis_pubsub"]
-            host, port = self._redis_addr(o)
-            return RedisPubSubSpooler(
-                host=host, port=port, spool_dir=o["spool_dir"],
-                channels=list(o["channels"]),
-                use_patterns=bool(o.get("use_patterns", False)),
-            ).start()
-        if "redis_streams" in inp:
-            o = inp["redis_streams"]
-            host, port = self._redis_addr(o)
-            return RedisStreamsSpooler(
-                host=host, port=port, spool_dir=o["spool_dir"],
-                streams=list(o["streams"]),
-                body_key=o.get("body_key", "body"),
-                consumer_group=o.get("consumer_group", "bento_spark"),
-                client_id=o.get("client_id", "bento_spark_consumer"),
-                limit=int(o.get("limit", 10)),
-            ).start()
-        raise ValueError(
-            "pipeline has no redis_list/redis_pubsub/redis_streams input section"
-        )
-
-    @staticmethod
-    def _redis_addr(o: dict) -> tuple[str, int]:
-        """First entry of the reference's `url` field (redis://host:port)
-        or a bare `address: host:port`."""
-        from bento_spark.streaming.redis import parse_redis_url
-
-        url = (o.get("urls") or [None])[0] or o.get("url") or o.get("address", "127.0.0.1:6379")
-        return parse_redis_url(str(url))
-
-    @staticmethod
-    def _sync_dir_of(o: dict) -> str:
-        """The reply handoff dir shared by the listener and the
-        sync_response writer (defaults next to the spool dir)."""
-        return str(o.get("sync_dir") or (str(o["spool_dir"]).rstrip("/") + "_resp"))
-
-    def start_http_poller(self):
-        """Start the driver-side poller for an `input.http_client` pipeline
-        and return its handle (caller owns `.stop()`)."""
-        o = (self.conf.get("input") or {}).get("http_client")
-        if not o:
-            raise ValueError("pipeline has no input.http_client section")
-        from bento_spark.streaming.http_server import HttpPollSpooler
-
-        from bento_spark.streaming.cep import duration_ms
-
-        return HttpPollSpooler(
-            url=o["url"],
-            spool_dir=o["spool_dir"],
-            interval_s=duration_ms(str(o.get("interval", "1s"))) / 1000.0,
-            method=o.get("method", "GET"),
-            headers=o.get("headers"),
-            drop_empty=bool(o.get("drop_empty", True)),
-            drop_repeats=bool(o.get("drop_repeats", False)),
-        ).start()
-
-    def start_websocket(self):
-        """Connect the ws:// client for an `input.websocket` pipeline and
-        return its handle (caller owns `.stop()`)."""
-        o = (self.conf.get("input") or {}).get("websocket")
-        if not o:
-            raise ValueError("pipeline has no input.websocket section")
-        from bento_spark.streaming.http_server import WebSocketSpooler
-
-        return WebSocketSpooler(
-            url=o["url"], spool_dir=o["spool_dir"],
-            open_message=o.get("open_message"),
-            tls_insecure=bool(o.get("tls_insecure", False)),
-        ).start()
-
-    def start_socket_listener(self):
-        """Start the TCP listener for an `input.socket_server` pipeline and
-        return its handle (caller owns `.stop()`; `.address` is (host,
-        port)). Same runtime-resource/plan split as start_http_listener."""
-        o = (self.conf.get("input") or {}).get("socket_server")
-        if not o:
-            raise ValueError("pipeline has no input.socket_server section")
-        from bento_spark.streaming.http_server import TcpSpoolServer
-
-        host, _, port = str(o.get("address", "127.0.0.1:0")).partition(":")
-        return TcpSpoolServer(
-            spool_dir=o["spool_dir"], host=host or "127.0.0.1", port=int(port or 0)
-        ).start()
+    @property
+    def bridged(self) -> bool:
+        """Whether the input is a spool bridge, i.e. has a runtime part
+        for start_bridge() to start."""
+        name, _ = select_input(self.conf.get("input") or {})
+        return INPUTS[name].start is not None
+
+    def start_bridge(self):
+        """Start the bridge of a spool-bridge input (the listener,
+        subscriber or poller that writes the spool dir the stream reads)
+        and return its handle: the caller owns `.stop()`. Separate from
+        build_stream on purpose: the bridge is a runtime resource, the
+        stream is a plan."""
+        name, o = select_input(self.conf.get("input") or {})
+        start = INPUTS[name].start
+        if start is None:
+            raise ValueError(f"{name} input has no bridge to start (it reads by itself)")
+        return start(o)
 
     # -------------------------------------------------------- cache resources
     def _cache_backend(self, resource: str, spark: SparkSession, key_col: str = "key",
@@ -2057,7 +347,7 @@ class Pipeline:
                         str(d.get("endpoint")
                             or "https://storage.googleapis.com"),
                         str(d["bucket"]),
-                        credentials=self._gcs_creds(d),
+                        credentials=gcs_creds(d),
                         content_type=str(d.get("content_type",
                                                "application/octet-stream")),
                         key_col=key_col, value_col=d.get("value_col", "value"),
@@ -2564,7 +854,7 @@ class Pipeline:
             from bento_spark.operators.enrich import lookup_join
 
             o = opts or {}
-            dim = Pipeline({"input": o["right"]})._input(df.sparkSession, streaming=False)
+            dim = read_input(df.sparkSession, o["right"], streaming=False)
             # accept `keys:` (preferred — YAML 1.1 parses a bare `on:` key as
             # boolean True, the classic Norway problem) but tolerate both
             on = o.get("keys", o.get("on", o.get(True)))
@@ -2751,7 +1041,7 @@ class Pipeline:
             o = opts or {}
             from bento_spark.streaming.cosmosdb import cosmos_map
 
-            endpoint, key = self._cosmos_creds(o)
+            endpoint, key = cosmos_creds(o)
             op = str(o.get("operation", "Create"))
             work = df
             pk_src = str(o.get("partition_keys_map", "root = null"))
@@ -2909,7 +1199,7 @@ class Pipeline:
             from bento_spark.streaming.nats import nats_request_reply_enrich
 
             o = opts or {}
-            host, port = self._nats_addr(o)
+            host, port = nats_addr(o)
             return nats_request_reply_enrich(
                 df, host, port,
                 compile_interpolated(str(o["subject"])),
@@ -2943,7 +1233,7 @@ class Pipeline:
                 where=str(o.get("where", "")),
                 prefix=str(o.get("prefix", "")),
                 suffix=str(o.get("suffix", "")),
-                credentials=self._gcs_creds(o),
+                credentials=gcs_creds(o),
                 result_col=str(o.get("result_col", "bigquery_rows")))
             return out.drop("_bq_args") if args_col else out
         if name == "sql_raw":
@@ -2999,7 +1289,7 @@ class Pipeline:
             from bento_spark.streaming.nats import nats_os_map
 
             o = opts or {}
-            host, port = self._nats_addr(o)
+            host, port = nats_addr(o)
             d = df.withColumn("_os_name",
                               compile_interpolated(str(o["object_name"])))
             out = nats_os_map(
@@ -3319,7 +1609,7 @@ class Pipeline:
             return df
         from bento_spark.streaming.joins import stream_stream_join
 
-        right = Pipeline({"input": j["right"]})._input(spark, streaming)
+        right = read_input(spark, j["right"], streaming)
         return stream_stream_join(
             df,
             right,
@@ -3413,69 +1703,6 @@ class Pipeline:
 
     def _run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool):
         out = self.conf.get("output") or {}
-        if "path" not in out and not (
-            out.get("switch")
-            or out.get("fan_out")
-            or out.get("round_robin")
-            or out.get("kafka")
-            or out.get("kafka_franz")
-            or out.get("fallback")
-            or out.get("http_client")
-            or out.get("splunk_hec")
-            or out.get("slack_webhook")
-            or out.get("questdb")
-            or out.get("elasticsearch")
-            or out.get("elasticsearch_v2")
-            or out.get("opensearch")
-            or out.get("pusher")
-            or out.get("cassandra")
-            or out.get("mongodb")
-            or out.get("mqtt")
-            or out.get("beanstalkd")
-            or out.get("zmq4")
-            or out.get("aws_sqs")
-            or out.get("aws_s3")
-            or out.get("aws_dynamodb")
-            or out.get("sql_raw")
-            or out.get("aws_kinesis")
-            or out.get("gcp_pubsub")
-            or out.get("nanomsg")
-            or out.get("nsq")
-            or out.get("nats")
-            or out.get("nats_jetstream")
-            or out.get("nats_object_store")
-            or out.get("pulsar")
-            or out.get("redis_list")
-            or out.get("redis_pubsub")
-            or out.get("redis_streams")
-            or out.get("redis_hash")
-            or out.get("amqp_0_9")
-            or out.get("amqp_1")
-            or out.get("azure_blob_storage")
-            or out.get("azure_queue_storage")
-            or out.get("azure_table_storage")
-            or out.get("azure_cosmosdb")
-            or out.get("aws_sns")
-            or out.get("aws_kinesis_firehose")
-            or out.get("snowflake_put")
-            or out.get("sftp")
-            or out.get("gcp_cloud_storage")
-            or out.get("gcp_bigquery")
-            or out.get("discord")
-            or out.get("cypher")
-            or out.get("socket")
-            or out.get("websocket")
-            or out.get("subprocess")
-            or out.get("dynamic")
-            or out.get("http_server")
-            or out.get("hdfs")
-            or "sync_response" in out
-        ):
-            raise ValueError(
-                "output.path (or switch/fan_out/round_robin/kafka/fallback/"
-                "http_client/elasticsearch/mqtt/nats/redis_*/amqp_0_9/"
-                "sync_response) required for run_stream"
-            )
         if "path" in out:
             self._sink = IdempotentParquetSink(require_object_store(spark, out["path"]),
                                                key_cols=out.get("keys"), checkpoint=checkpoint)
@@ -3585,10 +1812,10 @@ class Pipeline:
             if k.get("key"):
                 df = df.withColumn("_kafka_key", compile_interpolated(str(k["key"])))
                 key_col = "_kafka_key"
-            host, port = self._kafka_addr(k)
+            host, port = kafka_addr(k)
             writer = kafka_wire_sink(host, port, str(k["topic"]),
                                      key_col=key_col,
-                                     sasl=self._kafka_sasl(k))
+                                     sasl=kafka_sasl(k))
         elif out.get("http_client"):
             # per-row JSON POSTs, executor-side pooled connections,
             # at-least-once via micro-batch retry (output_http_client.go)
@@ -3815,7 +2042,7 @@ class Pipeline:
             writer = pubsub_sink(
                 str(pb.get("endpoint") or "https://pubsub.googleapis.com"),
                 str(pb["project"]), "_pubsub_topic",
-                credentials=self._pubsub_creds(pb),
+                credentials=pubsub_creds(pb),
             )
         elif out.get("aws_sqs"):
             # SigV4-signed SendMessage per row (aws/output_sqs.go) —
@@ -3978,7 +2205,7 @@ class Pipeline:
             writer = bigquery_sink(
                 str(bq.get("endpoint") or "https://bigquery.googleapis.com"),
                 str(bq["project"]), str(bq["dataset"]), str(bq["table"]),
-                credentials=self._gcs_creds(bq),
+                credentials=gcs_creds(bq),
                 source_format=str(bq.get("format",
                                          "NEWLINE_DELIMITED_JSON")),
                 csv_header=[str(h) for h in (csv_opts.get("header") or [])]
@@ -4000,7 +2227,7 @@ class Pipeline:
             writer = gcs_sink(
                 str(gc.get("endpoint") or "https://storage.googleapis.com"),
                 str(gc["bucket"]), "_gcs_path",
-                credentials=self._gcs_creds(gc),
+                credentials=gcs_creds(gc),
                 content_type=str(gc.get("content_type",
                                         "application/octet-stream")),
                 collision_mode=str(gc.get("collision_mode", "overwrite")),
@@ -4023,7 +2250,7 @@ class Pipeline:
                                str(creds.get("password", "")),
                                "_sftp_path",
                                codec=str(sf.get("codec", "all")),
-                               private_key_pem=self._sftp_private_key(creds))
+                               private_key_pem=sftp_private_key(creds))
         elif out.get("snowflake_put"):
             # snowflake/output_snowflake_put.go: rows group into stage
             # files per interpolated (stage, path), compressed, announced
@@ -4061,7 +2288,7 @@ class Pipeline:
             from bento_spark.streaming.cosmosdb import cosmos_sink
 
             cd = out["azure_cosmosdb"]
-            endpoint, key = self._cosmos_creds(cd)
+            endpoint, key = cosmos_creds(cd)
             df = self.build_stream(spark)
             data_cols = [c for c in df.columns if c != "error"]
             pk_src = str(cd.get("partition_keys_map", "root = null"))
@@ -4275,7 +2502,7 @@ class Pipeline:
 
             df = self.build_stream(spark)
             m = out["mqtt"]
-            host, port = self._mqtt_addr(m)
+            host, port = mqtt_addr(m)
             writer = mqtt_sink(host, port, m["topic"], qos=int(m.get("qos", 1)),
                                retained=bool(m.get("retained", False)))
         elif out.get("nats_object_store"):
@@ -4286,7 +2513,7 @@ class Pipeline:
             no = out["nats_object_store"]
             df = self.build_stream(spark).withColumn(
                 "_os_name", compile_interpolated(str(no["object_name"])))
-            host, port = self._nats_addr(no)
+            host, port = nats_addr(no)
             writer = nats_os_sink(host, port, str(no["bucket"]), "_os_name",
                                   value_col=no.get("value_col"),
                                   chunk_size=int(no.get("chunk_size",
@@ -4299,7 +2526,7 @@ class Pipeline:
             nj = out["nats_jetstream"]
             df = self.build_stream(spark).withColumn(
                 "_js_subject", compile_interpolated(str(nj["subject"])))
-            host, port = self._nats_addr(nj)
+            host, port = nats_addr(nj)
             writer = nats_jetstream_sink(host, port, "_js_subject",
                                          value_col=nj.get("value_col"))
         elif out.get("nats"):
@@ -4311,7 +2538,7 @@ class Pipeline:
             n = out["nats"]
             df = self.build_stream(spark).withColumn(
                 "_nats_subject", compile_interpolated(str(n["subject"])))
-            host, port = self._nats_addr(n)
+            host, port = nats_addr(n)
             writer = nats_sink(host, port, "_nats_subject")
         elif out.get("pulsar"):
             # dependency-free Pulsar producer (pulsar/output.go: topic +
@@ -4370,7 +2597,7 @@ class Pipeline:
 
             name = next(k for k in ("redis_list", "redis_pubsub", "redis_streams", "redis_hash") if out.get(k))
             r = out[name]
-            host, port = self._redis_addr(r)
+            host, port = redis_addr(r)
             df = self.build_stream(spark)
             if name == "redis_list":
                 df = df.withColumn("_redis_key", compile_interpolated(str(r["key"])))
@@ -4404,7 +2631,7 @@ class Pipeline:
             df = self.build_stream(spark)
             sr = out.get("sync_response") or {}
             writer = sync_response_writer(
-                self._sync_dir_of(hs), content_col=sr.get("content"))
+                sync_dir_of(hs), content_col=sr.get("content"))
         elif out.get("fallback"):
             # ordered try-next-sink failover (output_fallback.go:18)
             from bento_spark.streaming.sink import fallback_writer
@@ -4504,6 +2731,12 @@ class Pipeline:
             writer = subprocess_sink(str(sp["name"]),
                                      [str(a) for a in (sp.get("args") or [])])
         else:
+            if self._sink is None:
+                raise ValueError(
+                    "output.path (or switch/fan_out/round_robin/kafka/fallback/"
+                    "http_client/elasticsearch/mqtt/nats/redis_*/amqp_0_9/"
+                    "sync_response) required for run_stream"
+                )
             df = self.build_stream(spark)
             if dlq_path:
                 # same query => same checkpoint binds the DLQ's markers too
@@ -4511,8 +2744,11 @@ class Pipeline:
                 writer = dlq_split_writer(self._sink, dlq)
             else:
                 writer = self._sink.foreach_batch()
-        if self._read_until is not None:
-            writer = self._wrap_read_until(writer)
+        # input.read_until: deliver the batch holding the first row that
+        # matches `check`, then stop the query (input_read_until.go:34)
+        until = (self.conf.get("input") or {}).get("read_until")
+        if until:
+            writer = self._wrap_read_until(writer, compile_expr(str(until["check"])))
         eh = self.conf.get("error_handling") or {}
         if eh.get("strategy") == "retry":
             writer = self._wrap_retry_writer(writer, eh)
@@ -4538,7 +2774,7 @@ class Pipeline:
             .foreachBatch(writer)
         )
         query = q.trigger(**_trigger()).start()
-        if self._read_until is not None:
+        if until:
             import threading
 
             def monitor() -> None:
@@ -4584,12 +2820,11 @@ class Pipeline:
 
         return writer
 
-    def _wrap_read_until(self, inner):
+    def _wrap_read_until(self, inner, cond: Column):
         """Wrap the sink writer with read_until semantics: the triggering
         batch is written, subsequent batches are discarded while the stop
         monitor tears the query down (the reference likewise drops messages
         consumed after the predicate fires)."""
-        cond = self._read_until
 
         def writer(batch_df, epoch_id: int) -> None:
             if self._stop_requested:

@@ -9,10 +9,11 @@ fields, enum values, parseable durations, resolvable `${VAR}`
 interpolations — and leaves expression-level validation to compile time
 (Bloblang compiles to Catalyst Columns, which need a session).
 
-The known-name registries are EXTRACTED from the compiler source at
-import (the `name == "..."` / `"..." in inp` dispatch patterns), so a new
-processor/input section is lintable the moment it is implemented — no
-second list to forget to update.
+Input names come from the input registry (plans/inputs.py), the table the
+compiler reads inputs from; processor names are extracted from the
+compiler source (the `name == "..."` dispatch patterns). Either way a new
+input/processor is lintable the moment it is implemented — no second list
+to forget to update.
 """
 
 from __future__ import annotations
@@ -73,12 +74,10 @@ def known_processors() -> frozenset[str]:
     return frozenset(names) | _EXTRA_PROCESSORS
 
 
-@lru_cache(maxsize=1)
 def known_inputs() -> frozenset[str]:
-    from bento_spark.plans import compiler
+    from bento_spark.plans.inputs import ALIASES, INPUTS
 
-    src = inspect.getsource(compiler.Pipeline._input)
-    return frozenset(re.findall(r'"(\w+)" in inp', src))
+    return frozenset(INPUTS) | frozenset(ALIASES)
 
 
 def _lint_duration(path: str, val, issues: list[str]) -> None:
@@ -136,6 +135,13 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
     if isinstance(inp, dict):
         if inp and not (set(inp) & known_inputs()):
             issues.append(f"input: unknown source {sorted(inp)!r}")
+        elif inp:
+            from bento_spark.plans.inputs import select_input
+
+            try:
+                select_input(inp)
+            except ValueError as e:  # names two inputs: the compiler's rule
+                issues.append(f"input: {e}")
     elif inp:
         issues.append("input: must be a mapping")
 

@@ -191,7 +191,7 @@ output:
 """)
     pub = AmqpClient(broker.host, broker.port)
     pub.exchange_declare("metrics", "topic")
-    sp = p.start_amqp_consumer()
+    sp = p.start_bridge()
     try:
         pub.publish("metrics", "host.a", b"warm")
         pub.publish("metrics", "host.b", b"cold")

@@ -205,7 +205,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_amqp1_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:

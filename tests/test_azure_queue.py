@@ -137,7 +137,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_azure_queue_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:

@@ -182,7 +182,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_service_bus_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 2:

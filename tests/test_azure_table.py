@@ -188,7 +188,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_azure_table_consumer()
+    sp = p.start_bridge()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

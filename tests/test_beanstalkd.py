@@ -131,7 +131,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_beanstalkd_consumer()
+    sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

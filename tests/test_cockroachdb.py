@@ -230,7 +230,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_cockroachdb_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 2:

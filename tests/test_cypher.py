@@ -118,7 +118,7 @@ output:
       city: ${{! this.city }}
       pop: ${{! this.pop }}
 """)
-    sp = p.start_cypher_consumer()
+    sp = p.start_bridge()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

@@ -92,7 +92,7 @@ output:
     channel_id: outbox
     bot_token: {server.bot_token}
 """)
-    sp = p.start_discord_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 2:

@@ -272,7 +272,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_etcd_consumer()
+    sp = p.start_bridge()
     try:
         server.put("sensors/t1", "20.5")
         server.put("sensors/t2", "21.0")

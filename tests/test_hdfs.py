@@ -137,7 +137,7 @@ pipeline:
 output:
   path: {tmp_path / "sink2"}
 """)
-    consumer = p2.start_hdfs_consumer()
+    consumer = p2.start_bridge()
     try:
         consumer.wait_finished(20)
         q2 = p2.run_stream(spark, checkpoint=str(tmp_path / "ck2"))

@@ -36,7 +36,7 @@ output:
   path: {tmp_path}/out
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_bridge()
     try:
         assert srv.url.endswith("/ingest")
         for body in (b"alpha", b"beta\nwith two lines", b"gamma"):
@@ -85,7 +85,7 @@ output:
   path: {tmp_path}/out3
 """
     p = compile_yaml(cfg)
-    srv = p.start_http_listener()
+    srv = p.start_bridge()
     try:
         assert _post(srv.host, srv.port, "/post", b"first") == 200
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ck3"))
@@ -144,7 +144,7 @@ output:
   dlq: {tmp_path}/ws_dlq
 """
     p = compile_yaml(cfg)
-    srv = p.start_http_listener()
+    srv = p.start_bridge()
     try:
         for body in (b"hello webhook", b"second event"):
             assert _post(srv.host, srv.port, "/ingest", body) == 200
@@ -177,7 +177,7 @@ output:
   path: {tmp_path}/sout
 """
     )
-    srv = p.start_socket_listener()
+    srv = p.start_bridge()
     try:
         host, port = srv.address
         for payload in (b"alpha\nbeta\n", b"gamma\n"):
@@ -250,7 +250,7 @@ output:
   path: {tmp_path}/pollout
 """
     )
-    poller = p.start_http_poller()
+    poller = p.start_bridge()
     try:
         import time
 
@@ -612,7 +612,7 @@ output:
   path: {tmp_path}/wsout
 """
     )
-    ws = p.start_websocket()
+    ws = p.start_bridge()
     try:
         deadline = time.monotonic() + 20
         while time.monotonic() < deadline:
@@ -659,7 +659,7 @@ output:
     content: body
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_bridge()
     results: dict[str, tuple[int, bytes]] = {}
 
     def rpc(name: str, payload: bytes) -> None:
@@ -708,7 +708,7 @@ output:
   sync_response: {{}}
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_bridge()
     try:
         # no query running -> the gateway answers 504 after sync_timeout
         assert _post(srv.host, srv.port, "/post", b"orphan") == 504

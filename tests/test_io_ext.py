@@ -103,7 +103,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_subprocess_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while not sp.finished:

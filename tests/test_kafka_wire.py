@@ -318,7 +318,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_kafka_franz_consumer()
+    sp = p.start_bridge()
     try:
         prod = KafkaWireClient("127.0.0.1", broker.port)
         prod.produce("metrics", 0, encode_record_batch(
@@ -561,7 +561,7 @@ pipeline:
 output:
   path: {tmp_path}/out_sasl
 """)
-    sp = p.start_kafka_franz_consumer()
+    sp = p.start_bridge()
     try:
         prod = KafkaWireClient(sasl_broker.host, sasl_broker.port,
                                sasl={"mechanism": "PLAIN", "username": "ada",

@@ -115,7 +115,7 @@ pipeline:
         root.pk = this.kinesis_partition_key
         root.shard = this.kinesis_shard
 """)
-    sp = p_in.start_kinesis_consumer()
+    sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

@@ -13,9 +13,9 @@ from bento_spark.plans.lint import known_inputs, known_processors, lint_yaml
 
 
 def test_known_registries_track_compiler():
-    """The registries are extracted from the compiler source: spot-check
-    that core names are present so a refactor of the dispatch pattern
-    would fail loudly here."""
+    """Processor names are extracted from the compiler source and input
+    names come from the input registry: spot-check that core names are
+    present so a refactor of either would fail loudly here."""
     procs = known_processors()
     for name in ("mapping", "cache", "switch", "while", "match_sequence",
                  "subprocess", "http", "dedupe", "grok"):
@@ -53,6 +53,16 @@ window: {type: hopping, duration: 10 banana}
     assert "strategy must be none|reject|retry" in text
     assert "window.type must be" in text
     assert "bad duration '10 banana'" in text
+
+
+def test_lint_reports_an_input_map_naming_two_inputs():
+    """Same rule as the compiler: one registered input per input map (keys
+    naming no input are ignored), the zmq4n alias counting as zmq4."""
+    issues = lint_yaml("input:\n  parquet: {path: /x}\n  csv: {path: /y}\n")
+    assert len(issues) == 1 and "names 2 inputs (parquet, csv)" in issues[0]
+    issues = lint_yaml("input:\n  zmq4: {urls: [a]}\n  zmq4n: {urls: [b]}\n")
+    assert len(issues) == 1 and "names 2 inputs (zmq4, zmq4n)" in issues[0]
+    assert lint_yaml("input:\n  parquet: {path: /x}\n  label: in\n") == []
 
 
 def test_lint_env_and_yaml_errors_are_issues_not_raises():

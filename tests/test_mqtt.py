@@ -114,7 +114,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_mqtt_subscriber()
+    sp = p.start_bridge()
     try:
         pub = MqttClient(broker.host, broker.port)
         pub.publish("sensor/a", b"warm", qos=1)

@@ -95,7 +95,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_nanomsg_subscriber()
+    sp = p_in.start_bridge()
     try:
         src = tmp_path / "src"
         src.mkdir()

@@ -120,7 +120,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_nats_subscriber()
+    sp = p.start_bridge()
     try:
         pub = NatsClient(server.host, server.port)
         pub.publish("sensor.a", b"warm")

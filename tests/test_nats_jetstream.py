@@ -214,7 +214,7 @@ pipeline:
 output:
   path: {tmp_path / "sink"}
 """)
-    sp = p_in.start_jetstream_consumer()
+    sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 15
         while len(list((tmp_path / "spool").glob("*.msg"))) < 5:
@@ -324,7 +324,7 @@ pipeline:
 output:
   path: {tmp_path / "sink"}
 """)
-    sp = p_in.start_nats_os_consumer()
+    sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 15
         while len(list((tmp_path / "spool").glob("*.msg"))) < 3:

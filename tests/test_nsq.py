@@ -158,7 +158,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_nsq_consumer()
+    sp = p.start_bridge()
     try:
         pub = NsqClient(server.host, server.port)
         pub.pub("sensor", b"warm")

@@ -138,7 +138,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_pubsub_consumer()
+    sp = p_in.start_bridge()
     try:
         src = tmp_path / "src"
         src.mkdir()

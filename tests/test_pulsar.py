@@ -276,7 +276,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_pulsar_subscriber()
+    sp = p.start_bridge()
     try:
         pc = PulsarClient(broker.host, broker.port)
         prod = Producer(pc, topic, name="prod-e2e")

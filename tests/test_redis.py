@@ -250,7 +250,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_redis_spooler()
+    sp = p.start_bridge()
     try:
         pub = RedisClient(server.host, server.port)
         deadline = time.monotonic() + 10
@@ -310,7 +310,7 @@ pipeline:
 output:
   path: {tmp_path}/out2
 """)
-    sp = p.start_redis_spooler()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

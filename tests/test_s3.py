@@ -261,7 +261,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_s3_consumer()
+    sp = p.start_bridge()
     try:
         assert sp.wait_finished(20)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

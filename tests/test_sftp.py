@@ -277,7 +277,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_sftp_consumer()
+    sp = p.start_bridge()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))
@@ -346,7 +346,7 @@ output:
   path: {tmp_path}/out
 """)
     with pytest.raises(ValueError, match="private_key_pass"):
-        p.start_sftp_consumer()
+        p.start_bridge()
 
 
 def test_lint_knows_sftp():

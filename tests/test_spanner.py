@@ -169,7 +169,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_spanner_cdc_consumer()
+    sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 15
         while len(list(spool.glob("*.msg"))) < 4:

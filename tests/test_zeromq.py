@@ -99,7 +99,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_zmq_subscriber()
+    sp = p.start_bridge()
     try:
         push = ZmqSocket("PUSH").connect("127.0.0.1", sp.port)
         push.send([b"warm"])
