@@ -215,6 +215,12 @@ class NanomsgSocket:
     def close(self) -> None:
         self._stop.set()
         if self._server is not None:
+            # shutdown wakes the blocked accept(); close alone leaves the
+            # port listening until the next connection arrives
+            try:
+                self._server.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
             try:
                 self._server.close()
             except OSError:

@@ -73,6 +73,14 @@ def test_incompatible_protocol_numbers_fail():
         pull.close()
 
 
+def test_close_releases_a_bound_port():
+    """close() while the accept thread is blocked frees the port at once:
+    a fresh-per-batch PUB+bind can take it right after."""
+    pull = NanomsgSocket("PULL").bind()
+    time.sleep(0.1)  # the accept thread is blocked in accept()
+    pull.close()
+    NanomsgSocket("PUB").bind("127.0.0.1", pull.port).close()
+
 def test_spooler_sub_requires_filter(tmp_path):
     with pytest.raises(ValueError, match="at least one sub filter"):
         NanomsgSpooler("SUB", str(tmp_path / "s"), urls=["tcp://127.0.0.1:1"]).start()

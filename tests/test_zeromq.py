@@ -84,6 +84,14 @@ def test_incompatible_socket_types_fail_handshake():
 # --------------------------------------------------------------------------
 
 
+def test_close_releases_a_bound_port():
+    """close() while the accept thread is blocked frees the port at once:
+    a fresh-per-batch PUB+bind can take it right after."""
+    pull = ZmqSocket("PULL").bind()
+    time.sleep(0.1)  # the accept thread is blocked in accept()
+    pull.close()
+    ZmqSocket("PUB").bind("127.0.0.1", pull.port).close()
+
 def test_yaml_zmq_pull_input_end_to_end(spark, tmp_path):
     spool = tmp_path / "spool_in"
     p = compile_yaml(f"""
