@@ -130,6 +130,9 @@ def cmd_run(args) -> int:
     finally:
         if bridge is not None:
             bridge.stop()
+        # the output's driver-side resources (a subprocess output's child,
+        # an http_server output's server)
+        p.close()
     return 0
 
 

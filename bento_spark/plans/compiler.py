@@ -11,7 +11,11 @@ owns the physical plan.
 Inputs come from the input registry (plans/inputs.py): one row per
 `input.<name>` section with its reader, whether it reads as a table, a
 stream or both, and, for spool-bridge inputs, the starter that
-`Pipeline.start_bridge()` runs.
+`Pipeline.start_bridge()` runs. Outputs come from the output registry
+(plans/outputs.py): `run_stream` builds the stream once, calls the row of
+the one output the `output` map names, and wraps its writer in the map's
+`dlq` (errored rows to the DLQ, on any output), then `input.read_until`,
+then `error_handling: retry`.
 
 Config shape (the Bento-shaped subset we support, plus `window` which the
 reference expresses as the system_window buffer):
@@ -59,24 +63,12 @@ from pyspark.sql import functions as F
 from bento_spark.audio.generate import clips_df
 from bento_spark.audio.udfs import with_audio_features, with_decoded_pcm, with_normalized_clip
 from bento_spark.functions.bloblang import compile_expr, compile_interpolated, compile_mapping
-from bento_spark.gating import require_object_store
 from bento_spark.operators import errors as err_ops
 from bento_spark.operators import grouping, mapping as map_ops, skew
 from bento_spark.plans.inputs import (
-    INPUTS,
-    cosmos_creds,
-    gcs_creds,
-    kafka_addr,
-    kafka_sasl,
-    mqtt_addr,
-    nats_addr,
-    pubsub_creds,
-    read_input,
-    redis_addr,
-    select_input,
-    sftp_private_key,
-    sync_dir_of,
+    INPUTS, cosmos_creds, gcs_creds, nats_addr, read_input, select_input,
 )
+from bento_spark.plans.outputs import OUTPUTS, select_output
 from bento_spark.streaming.checkpoint import local_checkpoint_commits
 from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed
@@ -128,6 +120,7 @@ class Pipeline:
     _batch_dlq_pending: Any = field(default=None, init=False)
     _reject_errored: Any = field(default=None, init=False)
     _eh_dlq_query: Any = field(default=None, init=False)
+    _close_output: Any = field(default=None, init=False)  # see close()
 
     def __post_init__(self) -> None:
         # zmq4n (zeromq/input_zmq4n.go, output_zmq4n.go): the reference's
@@ -1703,1047 +1696,28 @@ class Pipeline:
 
     def _run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool):
         out = self.conf.get("output") or {}
-        if "path" in out:
-            self._sink = IdempotentParquetSink(require_object_store(spark, out["path"]),
-                                               key_cols=out.get("keys"), checkpoint=checkpoint)
+        name, section = select_output(out)
         self._reject_errored = None  # re-stashed by the build below
-        has_window = bool(self.conf.get("window"))
         dlq_path = out.get("dlq")
-
-        def _trigger() -> dict:
-            """Trigger selection shared by the main query and the DLQ
-            side-query: availableNow in bounded mode; otherwise a
-            processingTime interval — rate_limit.interval (if the pipeline
-            declared one) takes precedence over output.trigger."""
-            if available_now:
-                return {"availableNow": True}
-            rl = self.conf.get("_rate_limit") or {}
-            ivl = rl.get("interval", out.get("trigger", "5 seconds"))
-            # normalize through duration_ms: the pipeline accepts '1s' /
-            # '500 ms' everywhere else, but Spark's trigger parser does not —
-            # render as '<n> milliseconds', which both dialects agree on
-            from bento_spark.streaming.cep import duration_ms
-
-            return {"processingTime": f"{duration_ms(str(ivl))} milliseconds"}
-
-        if dlq_path and has_window and self._sink is None:
-            # the window+dlq dual-query path writes the windowed output
-            # through self._sink, which only exists for output.path configs
-            raise ValueError(
-                "window + dlq requires output.path (the windowed main sink); "
-                "switch/fan_out/round_robin/kafka/fallback outputs cannot take "
-                "the pre-window DLQ split"
-            )
-        if dlq_path and has_window:
-            # Errored rows must be routed BEFORE the window agg (the agg
-            # output has no per-row error column — reference semantics:
-            # reject_errored sits between pipeline and the window-fed
-            # output). Idiomatic Spark: a SECOND streaming query over the
-            # same source feeds the DLQ, each with its own checkpoint —
-            # exactly-once holds independently for both sinks. (A single
-            # query can't window correctly per-micro-batch: a window's rows
-            # may span batches and last-writer-wins MERGE would drop the
-            # earlier partials.)
-            # The two queries share the chain up to its trailing run of
-            # row maps that keep `error` (_split_tail: audio_features in
-            # the shipped clips_window.yaml). The split on `error` comes
-            # there, so the DLQ query decodes only the errored rows and the
-            # main query only the clean ones, instead of each decoding
-            # every clip. DLQ rows come out as if the split were after the
-            # whole chain. The window branch drops `bytes` from the decode
-            # output unless the window or join reads it, so the payload
-            # crosses Arrow once (JVM -> Python) instead of twice.
-            procs = (self.conf.get("pipeline") or {}).get("processors") or []
-            tail = self._split_tail(procs)
-            rows = self._error_strategy(
-                self._chain(procs[: len(procs) - len(tail)]), self._input(spark, streaming=True)
-            )
-            if "error" in rows.columns:
-                dlq = IdempotentParquetSink(dlq_path, checkpoint=checkpoint.rstrip("/") + "_dlq")
-                errored = self._chain(tail)(rows.filter(F.col("error").isNotNull()))
-                self._dlq_query = (
-                    errored.writeStream.outputMode("append")
-                    .option("checkpointLocation", checkpoint.rstrip("/") + "_dlq")
-                    .foreachBatch(dlq.foreach_batch())
-                    .trigger(**_trigger())
-                    .start()
-                )
-                rows = rows.filter(F.col("error").isNull())
-            if tail and not self._window_reads_payload():
-                name, opts = next(iter(tail[-1].items()))
-                tail = [*tail[:-1], {name: {**(opts or {}), "keep_payload": False}}]
-            rows = self._chain(tail)(rows)
-            rows = self._apply_join(rows, spark, streaming=True)
-            df = self._apply_window(rows)
-            writer = self._sink.foreach_batch()
-        elif out.get("switch"):
-            # predicate-routed multi-sink (output_switch.go:164): first
-            # matching case wins; `default: path` is the catch-all
-            from bento_spark.streaming.sink import route_outputs
-
-            df = self.build_stream(spark)
-            cases = [
-                (compile_expr(c["check"]), IdempotentParquetSink(c["path"], checkpoint=checkpoint))
-                for c in out["switch"]
-            ]
-            if out.get("default"):
-                cases.append((None, IdempotentParquetSink(out["default"], checkpoint=checkpoint)))
-            self._case_sinks = [s for _, s in cases]
-            writer = route_outputs(cases, mode="switch")
-        elif out.get("kafka"):
-            # keyed JSON producer (output_kafka.go); availability-gated —
-            # at-least-once into Kafka (exactly-once needs Kafka txns,
-            # out of scope like the reference)
-            from bento_spark.streaming.kafka import kafka_sink
-
-            df = self.build_stream(spark)
-            k = out["kafka"]
-            writer = kafka_sink(spark, k["addresses"], k["topic"], key_col=k.get("key"))
-        elif out.get("kafka_franz"):
-            # dependency-free wire-protocol producer
-            # (kafka/output_kafka_franz.go: seed_brokers, topic,
-            # interpolated key, murmur2 default partitioner) — the per-row
-            # key compiles to a COLUMN, value serializes JVM-side
-            from bento_spark.streaming.kafka_wire import kafka_wire_sink
-
-            k = out["kafka_franz"]
-            df = self.build_stream(spark)
-            key_col = None
-            if k.get("key"):
-                df = df.withColumn("_kafka_key", compile_interpolated(str(k["key"])))
-                key_col = "_kafka_key"
-            host, port = kafka_addr(k)
-            writer = kafka_wire_sink(host, port, str(k["topic"]),
-                                     key_col=key_col,
-                                     sasl=kafka_sasl(k))
-        elif out.get("http_client"):
-            # per-row JSON POSTs, executor-side pooled connections,
-            # at-least-once via micro-batch retry (output_http_client.go)
-            from bento_spark.streaming.sink import http_post_writer
-
-            df = self.build_stream(spark)
-            h = out["http_client"]
-            writer = http_post_writer(
-                h["url"], method=h.get("method", "POST"), headers=h.get("headers"),
-                timeout=float(h.get("timeout", 10)),
-                retries=int(h.get("retries", 3)),
-                backoff_s=float(h.get("backoff", 0.25)),
-            )
-        elif out.get("questdb"):
-            # ILP-over-TCP (questdb/output.go: table, symbols -> tags,
-            # doubles, designated_timestamp_field) — the whole line
-            # renders JVM-side, executors stream pre-built text
-            from bento_spark.streaming.questdb import questdb_sink
-
-            qd = out["questdb"]
-            df = self.build_stream(spark)
-            host, _, port = str(qd.get("address", "127.0.0.1:9009")).partition(":")
-            writer = questdb_sink(
-                host or "127.0.0.1", int(port or 9009), str(qd["table"]),
-                symbols=qd.get("symbols"), doubles=qd.get("doubles"),
-                designated_timestamp_field=qd.get("designated_timestamp_field"),
-            )
-        elif out.get("slack_webhook"):
-            # slack/output_slack_webhook.go: POST the message JSON to the
-            # webhook URL — the message must already be WebhookMessage-
-            # shaped (`text`, `blocks`, ... — the reference passes the
-            # payload through verbatim the same way)
-            from bento_spark.streaming.cep import duration_ms
-            from bento_spark.streaming.sink import http_post_writer
-
-            sl = out["slack_webhook"]
-            df = self.build_stream(spark)
-            writer = http_post_writer(
-                str(sl["webhook"]),
-                timeout=float(duration_ms(str(sl.get("timeout", "5s"))) / 1000.0),
-                retries=int(sl.get("retries", 3)),
-            )
-        elif out.get("splunk_hec"):
-            # Splunk HTTP Event Collector (splunk/template_output.yaml —
-            # the reference implements this output as an http_client
-            # template wrapping rows in the HEC event envelope with
-            # Splunk-token auth; same composition here). The envelope is
-            # built JVM-side: the whole row becomes `event`, the optional
-            # host/source/sourcetype/index fields ride alongside.
-            from bento_spark.streaming.sink import http_post_writer
-
-            s = out["splunk_hec"]
-            df = self.build_stream(spark)
-            envelope = [F.struct(*[F.col(c) for c in df.columns]).alias("event")]
-            for fld in ("host", "source", "sourcetype", "index"):
-                v = s.get(f"event_{fld}")
-                if v:
-                    envelope.append(F.lit(str(v)).alias(fld))
-            df = df.select(*envelope)
-            writer = http_post_writer(
-                str(s["url"]),
-                headers={"Authorization": f"Splunk {s['token']}",
-                         **(s.get("headers") or {})},
-                timeout=float(s.get("timeout", 10)),
-                retries=int(s.get("retries", 3)),
-                backoff_s=float(s.get("backoff", 0.25)),
-            )
-        elif (out.get("elasticsearch") or out.get("opensearch")
-              or out.get("elasticsearch_v2")):
-            # bulk indexer (elasticsearch/output.go; opensearch/output.go
-            # and elasticsearch/output_v2.go register the SAME _bulk API
-            # shape — the reference maintains three near-identical
-            # outputs, this one serves all the names; v2's `auth:` object
-            # is accepted alongside `basic_auth:`):
-            # index/action/id/routing/pipeline interpolate PER MESSAGE
-            # (:353-363) — each compiles to a COLUMN, and both NDJSON bulk
-            # lines are built JVM-side; the executor loop only chunks
-            # bytes and POSTs
-            from bento_spark.streaming.elasticsearch import ACTIONS, es_bulk_writer
-
-            e = (out.get("elasticsearch") or out.get("opensearch")
-                 or out["elasticsearch_v2"])
-            url = (e.get("urls") or [e.get("url", "http://127.0.0.1:9200")])[0]
-            if "index" not in e:
-                raise ValueError("output.elasticsearch requires `index`")
-            action = str(e.get("action", "index"))
-            if "${!" not in action and action not in ACTIONS:
+        window_dlq = bool(dlq_path and self.conf.get("window"))
+        if window_dlq:
+            if name != "path":
+                # the window+dlq dual-query path writes the windowed output
+                # through the path output's sink
                 raise ValueError(
-                    f"elasticsearch action {action!r} is not allowed "
-                    f"(one of {', '.join(ACTIONS)})"  # output.go:499
+                    "window + dlq requires output.path (the windowed main sink); "
+                    f"a {name} output cannot take the pre-window DLQ split"
                 )
-            act = compile_interpolated(action)
-            # an interpolated action resolving outside the allowed set fails
-            # the row at runtime, like the reference's build error
-            act = F.when(act.isin(*ACTIONS), act).otherwise(
-                F.raise_error(F.concat(F.lit("elasticsearch action not allowed: "), act))
-            )
-            hdrs = dict(e.get("headers") or {})
-            auth = e.get("basic_auth") or e.get("auth") or {}
-            if auth.get("enabled"):
-                import base64
-
-                tok = base64.b64encode(
-                    f"{auth.get('username', '')}:{auth.get('password', '')}".encode()
-                ).decode()
-                hdrs["Authorization"] = f"Basic {tok}"
-            df = (
-                self.build_stream(spark)
-                .withColumn("_es_index", compile_interpolated(str(e["index"])))
-                .withColumn("_es_action", act)
-                .withColumn("_es_id", compile_interpolated(str(e.get("id", ""))))
-                .withColumn("_es_routing", compile_interpolated(str(e.get("routing", ""))))
-                .withColumn("_es_pipeline", compile_interpolated(str(e.get("pipeline", ""))))
-            )
-            writer = es_bulk_writer(
-                str(url),
-                max_batch_bytes=int(e.get("max_batch_bytes", 4 * 2**20)),
-                timeout=float(e.get("timeout", 10)),
-                retries=int(e.get("retries", 3)),
-                backoff_s=float(e.get("backoff", 0.25)),
-                headers=hdrs,
-            )
-        elif out.get("pusher"):
-            # signed Pusher Channels REST output (pusher/output_pusher.go:
-            # interpolated channel, event, appId/key/secret) — channel
-            # compiles to a COLUMN, executors sign per request
-            from bento_spark.streaming.pusher import pusher_sink
-
-            pu = out["pusher"]
-            df = self.build_stream(spark).withColumn(
-                "_pusher_channel", compile_interpolated(str(pu["channel"])))
-            host, _, port = str(pu.get("address", "api.pusherapp.com:443")).partition(":")
-            https = bool(pu.get("https", port in ("", "443")))
-            writer = pusher_sink(
-                host, int(port or 443), str(pu["appId"]), str(pu["key"]),
-                str(pu["secret"]), str(pu["event"]), "_pusher_channel",
-                https=https,
-            )
-        elif out.get("cassandra"):
-            # CQL v4 PREPARE/EXECUTE writer (cassandra/output.go: `query` +
-            # `args_mapping` array) — each arg compiles to a typed COLUMN,
-            # rendered as one JVM-side JSON struct; executors bind against
-            # the PREPARED statement's column types
-            from bento_spark.streaming.cassandra import cassandra_writer
-
-            ca = out["cassandra"]
-            df = self.build_stream(spark)
-            am = ca.get("args_mapping")
-            if isinstance(am, list):
-                exprs = [str(e) for e in am]
-            else:
-                exprs = _split_args_array(str(am))
-            args_cols = [compile_expr(e) for e in exprs]
-            addr = (ca.get("addresses") or [ca.get("address", "127.0.0.1:9042")])[0]
-            writer = cassandra_writer(str(addr), str(ca["query"]), args_cols)
-        elif out.get("mongodb"):
-            # write operations per message (mongodb/output.go via
-            # common.go:102-126): document_map/filter_map are maps of
-            # field -> Bloblang expression, each compiling to a COLUMN and
-            # folding into ONE JVM-side to_json struct — the executor only
-            # converts JSON->BSON and batches commands per partition
-            from bento_spark.streaming.mongodb import mongodb_writer
-
-            mg = out["mongodb"]
-            op = str(mg.get("operation", "insert-one"))
-            df = self.build_stream(spark)
-
-            def _json_map(spec, default_all: bool) -> Column:
-                if spec:
-                    return F.to_json(F.struct(*[
-                        compile_expr(str(v)).alias(str(k)) for k, v in spec.items()
-                    ]))
-                if not default_all:
-                    raise ValueError(
-                        f"output.mongodb operation {op!r} requires `filter_map`"
-                    )
-                return F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-
-            if op not in ("delete-one", "delete-many"):
-                df = df.withColumn(
-                    "_mongo_doc", _json_map(mg.get("document_map"), default_all=True)
-                )
-            if op != "insert-one":
-                df = df.withColumn(
-                    "_mongo_filter", _json_map(mg.get("filter_map"), default_all=False)
-                )
-            writer = mongodb_writer(
-                str(mg["url"]), str(mg.get("database", "bento")),
-                str(mg["collection"]), operation=op,
-                upsert=bool(mg.get("upsert", False)),
-            )
-        elif out.get("aws_kinesis"):
-            # SigV4-signed PutRecords (aws/output_kinesis.go) — the
-            # interpolated partition key as a COLUMN, <=500 records per
-            # request
-            import os as _os
-
-            from bento_spark.streaming.kinesis import kinesis_sink
-
-            kn = out["aws_kinesis"]
-            df = self.build_stream(spark)
-            pk_col = None
-            if kn.get("partition_key"):
-                df = df.withColumn(
-                    "_kinesis_pk", compile_interpolated(str(kn["partition_key"])))
-                pk_col = "_kinesis_pk"
-            writer = kinesis_sink(
-                str(kn.get("endpoint") or
-                    f"https://kinesis.{kn.get('region', 'us-east-1')}.amazonaws.com"),
-                str(kn["stream"]),
-                str(kn.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(kn.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                region=str(kn.get("region", "us-east-1")),
-                partition_key_col=pk_col,
-            )
-        elif out.get("gcp_pubsub"):
-            # Pub/Sub publisher (gcp/output_pubsub.go: project +
-            # interpolated topic) — topic as a COLUMN, batched publishes
-            from bento_spark.streaming.pubsub import pubsub_sink
-
-            pb = out["gcp_pubsub"]
-            df = self.build_stream(spark).withColumn(
-                "_pubsub_topic", compile_interpolated(str(pb["topic"])))
-            writer = pubsub_sink(
-                str(pb.get("endpoint") or "https://pubsub.googleapis.com"),
-                str(pb["project"]), "_pubsub_topic",
-                credentials=pubsub_creds(pb),
-            )
-        elif out.get("aws_sqs"):
-            # SigV4-signed SendMessage per row (aws/output_sqs.go) —
-            # optional FIFO message_group_id as an interpolated COLUMN
-            import os as _os
-
-            from bento_spark.streaming.sqs import sqs_sink
-
-            sq = out["aws_sqs"]
-            df = self.build_stream(spark)
-            group_col = None
-            if sq.get("message_group_id"):
-                df = df.withColumn(
-                    "_sqs_group", compile_interpolated(str(sq["message_group_id"])))
-                group_col = "_sqs_group"
-            writer = sqs_sink(
-                str(sq.get("endpoint") or
-                    f"https://sqs.{sq.get('region', 'us-east-1')}.amazonaws.com"),
-                str(sq["url"]),
-                str(sq.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(sq.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                region=str(sq.get("region", "us-east-1")),
-                group_id_col=group_col,
-            )
-        elif out.get("azure_queue_storage"):
-            # one Put Message per row (azure/output_queue_storage.go)
-            import os as _os
-
-            from bento_spark.streaming.azure_queue import azure_queue_sink
-            from bento_spark.streaming.cep import duration_ms
-
-            aq = out["azure_queue_storage"]
-            account = str(aq.get("storage_account")
-                          or _os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-            df = self.build_stream(spark)
-            writer = azure_queue_sink(
-                str(aq.get("endpoint")
-                    or f"https://{account}.queue.core.windows.net"),
-                account,
-                str(aq.get("storage_access_key")
-                    or _os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-                str(aq["queue_name"]),
-                ttl_s=(max(1, duration_ms(str(aq["ttl"])) // 1000)
-                       if aq.get("ttl") else None),
-            )
-        elif out.get("aws_sns"):
-            # PublishBatch per partition (aws/output_sns.go): FIFO
-            # group/dedupe ids as interpolated COLUMNS
-            import os as _os
-
-            from bento_spark.streaming.sns import sns_sink
-
-            sn = out["aws_sns"]
-            df = self.build_stream(spark)
-            group_col = dedupe_col = None
-            if sn.get("message_group_id"):
-                df = df.withColumn(
-                    "_sns_group", compile_interpolated(str(sn["message_group_id"])))
-                group_col = "_sns_group"
-            if sn.get("message_deduplication_id"):
-                df = df.withColumn(
-                    "_sns_dedupe",
-                    compile_interpolated(str(sn["message_deduplication_id"])))
-                dedupe_col = "_sns_dedupe"
-            writer = sns_sink(
-                str(sn.get("endpoint") or
-                    f"https://sns.{sn.get('region', 'us-east-1')}.amazonaws.com"),
-                str(sn["topic_arn"]),
-                str(sn.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(sn.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                region=str(sn.get("region", "us-east-1")),
-                group_id_col=group_col, dedupe_id_col=dedupe_col,
-            )
-        elif out.get("aws_kinesis_firehose"):
-            # PutRecordBatch with per-record failure retry
-            # (aws/output_kinesis_firehose.go)
-            import os as _os
-
-            from bento_spark.streaming.firehose import firehose_sink
-
-            fh = out["aws_kinesis_firehose"]
-            df = self.build_stream(spark)
-            writer = firehose_sink(
-                str(fh.get("endpoint") or
-                    f"https://firehose.{fh.get('region', 'us-east-1')}.amazonaws.com"),
-                str(fh["stream"]),
-                str(fh.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(fh.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                region=str(fh.get("region", "us-east-1")),
-            )
-        elif out.get("azure_blob_storage"):
-            # one Put Blob per message (azure/output_blob_storage.go) —
-            # interpolated blob `path` renders JVM-side as a column
-            import os as _os
-
-            from bento_spark.streaming.azure_blob import azure_blob_sink
-
-            ab = out["azure_blob_storage"]
-            if "path" not in ab:
-                raise ValueError(
-                    "output.azure_blob_storage requires an interpolated `path`")
-            account = str(ab.get("storage_account")
-                          or _os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-            df = self.build_stream(spark)
-            df = df.withColumn("_blob_path",
-                               compile_interpolated(str(ab["path"])))
-            writer = azure_blob_sink(
-                str(ab.get("endpoint")
-                    or f"https://{account}.blob.core.windows.net"),
-                account,
-                str(ab.get("storage_access_key")
-                    or _os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-                str(ab["container"]),
-                path_col="_blob_path",
-                content_type=str(ab.get("content_type",
-                                        "application/octet-stream")),
-                value_col=(str(ab["value_col"]) if ab.get("value_col") else None),
-            )
-        elif out.get("cypher"):
-            # one RUN per row (cypher/output_cypher.go): the `values` map
-            # of interpolations renders JVM-side as ONE JSON column whose
-            # keys feed the query's $param references
-            from bento_spark.streaming.cypher import cypher_sink
-
-            cy = out["cypher"]
-            vals = cy.get("values") or {}
-            df = self.build_stream(spark)
-            df = df.withColumn("_cypher_values", F.to_json(F.struct(*[
-                compile_interpolated(str(v)).alias(str(k))
-                for k, v in vals.items()])) if vals else F.lit("{}"))
-            auth = cy.get("basic_auth") or {}
-            no_auth = bool(cy.get("no_auth", False))
-            writer = cypher_sink(
-                str(cy["uri"]), str(cy["query"]), "_cypher_values",
-                database=str(cy.get("database", "")),
-                user=None if no_auth else auth.get("user"),
-                password=None if no_auth else auth.get("password"))
-        elif out.get("discord"):
-            # one POST per message (discord/output.go: API message objects
-            # post verbatim, plain content wraps) — rendered JVM-side
-            from bento_spark.streaming.discord import discord_sink
-
-            dc = out["discord"]
-            df = self.build_stream(spark)
-            writer = discord_sink(
-                str(dc.get("endpoint") or "https://discord.com"),
-                str(dc["channel_id"]), str(dc["bot_token"]),
-                value_col=(str(dc["value_col"]) if dc.get("value_col")
-                           else None))
-        elif out.get("gcp_bigquery"):
-            # one inline-data load job per partition batch
-            # (gcp/output_bigquery.go: dataset/table, format
-            # NEWLINE_DELIMITED_JSON|CSV + csv.header) — rows render
-            # JVM-side (to_json / to_csv)
-            from bento_spark.streaming.bigquery import bigquery_sink
-
-            bq = out["gcp_bigquery"]
-            csv_opts = bq.get("csv") or {}
-            df = self.build_stream(spark)
-            writer = bigquery_sink(
-                str(bq.get("endpoint") or "https://bigquery.googleapis.com"),
-                str(bq["project"]), str(bq["dataset"]), str(bq["table"]),
-                credentials=gcs_creds(bq),
-                source_format=str(bq.get("format",
-                                         "NEWLINE_DELIMITED_JSON")),
-                csv_header=[str(h) for h in (csv_opts.get("header") or [])]
-                or None,
-                csv_field_delimiter=str(csv_opts.get("field_delimiter", ",")))
-        elif out.get("gcp_cloud_storage"):
-            # one upload per message (gcp/output_cloud_storage.go) —
-            # interpolated object `path` renders JVM-side as a column;
-            # collision_mode overwrite|append|error-if-exists|ignore
-            from bento_spark.streaming.gcs import gcs_sink
-
-            gc = out["gcp_cloud_storage"]
-            if "path" not in gc:
-                raise ValueError(
-                    "output.gcp_cloud_storage requires an interpolated `path`")
-            df = self.build_stream(spark)
-            df = df.withColumn("_gcs_path",
-                               compile_interpolated(str(gc["path"])))
-            writer = gcs_sink(
-                str(gc.get("endpoint") or "https://storage.googleapis.com"),
-                str(gc["bucket"]), "_gcs_path",
-                credentials=gcs_creds(gc),
-                content_type=str(gc.get("content_type",
-                                        "application/octet-stream")),
-                collision_mode=str(gc.get("collision_mode", "overwrite")),
-                value_col=(str(gc["value_col"]) if gc.get("value_col")
-                           else None))
-        elif out.get("sftp"):
-            # per-row upload to the interpolated path (sftp/output.go:
-            # codec all|lines|append) over the from-scratch SSH transport
-            from bento_spark.streaming.sftp import parse_sftp_address, sftp_sink
-
-            sf = out["sftp"]
-            creds = sf.get("credentials") or {}
-            host, port = parse_sftp_address(str(sf.get("address",
-                                                       "127.0.0.1:22")))
-            df = self.build_stream(spark)
-            df = df.withColumn("_sftp_path",
-                               compile_interpolated(str(sf["path"])))
-            writer = sftp_sink(host, port,
-                               str(creds.get("username", "")),
-                               str(creds.get("password", "")),
-                               "_sftp_path",
-                               codec=str(sf.get("codec", "all")),
-                               private_key_pem=sftp_private_key(creds))
-        elif out.get("snowflake_put"):
-            # snowflake/output_snowflake_put.go: rows group into stage
-            # files per interpolated (stage, path), compressed, announced
-            # via the public Snowpipe insertFiles REST (key-pair JWT);
-            # stage upload transport modeled — see streaming/snowflake.py
-            from bento_spark.streaming.snowflake import snowflake_put_sink
-
-            sf = out["snowflake_put"]
-            pem = sf.get("private_key")
-            if not pem and sf.get("private_key_file"):
-                from pathlib import Path as _Path
-
-                pem = _Path(str(sf["private_key_file"])).read_text()
-            if not pem:
-                raise ValueError(
-                    "output.snowflake_put requires private_key or "
-                    "private_key_file (key-pair JWT auth)")
-            account = str(sf["account"])
-            endpoint = str(sf.get("endpoint")
-                           or f"https://{account}.snowflakecomputing.com")
-            df = self.build_stream(spark)
-            df = (df.withColumn("_sf_stage",
-                                compile_interpolated(str(sf["stage"])))
-                    .withColumn("_sf_path",
-                                compile_interpolated(str(sf.get("path", "")))))
-            writer = snowflake_put_sink(
-                endpoint, account, str(sf["user"]), str(pem),
-                stage_col="_sf_stage", path_col="_sf_path",
-                pipe=(str(sf["snowpipe"]) if sf.get("snowpipe") else None),
-                compression=str(sf.get("compression", "AUTO")))
-        elif out.get("azure_cosmosdb"):
-            # per-row document operation (azure/output_cosmosdb.go) — the
-            # partition key compiles to a COLUMN (`partition_keys_map`),
-            # the document renders JVM-side, item_id interpolates
-            from bento_spark.streaming.cosmosdb import cosmos_sink
-
-            cd = out["azure_cosmosdb"]
-            endpoint, key = cosmos_creds(cd)
-            df = self.build_stream(spark)
-            data_cols = [c for c in df.columns if c != "error"]
-            pk_src = str(cd.get("partition_keys_map", "root = null"))
-            df = (df.withColumn("_cdb_pk",
-                                compile_expr(re.sub(r"^\s*root\s*=\s*", "",
-                                                    pk_src)).cast("string"))
-                    .withColumn("_cdb_doc", F.to_json(F.struct(*[
-                        F.col(c) for c in data_cols]))))
-            id_col = None
-            if cd.get("item_id"):
-                df = df.withColumn("_cdb_id",
-                                   compile_interpolated(str(cd["item_id"])))
-                id_col = "_cdb_id"
-            writer = cosmos_sink(
-                endpoint, key, str(cd["database"]), str(cd["container"]),
-                pk_col="_cdb_pk", doc_col="_cdb_doc", id_col=id_col,
-                operation=str(cd.get("operation", "Create")),
-                auto_id=bool(cd.get("auto_id", True)))
-        elif out.get("azure_table_storage"):
-            # per-row entity operation (azure/output_table_storage.go) —
-            # interpolated table_name/partition_key/row_key/transaction_type
-            # render JVM-side as columns; properties default to ALL json
-            # fields stringified (the reference's marshalling contract)
-            import os as _os
-
-            from bento_spark.streaming.azure_table import azure_table_sink
-
-            at = out["azure_table_storage"]
-            account = str(at.get("storage_account")
-                          or _os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
-            df = self.build_stream(spark)
-            data_cols = list(df.columns)
-            df = (df.withColumn("_at_table",
-                                compile_interpolated(str(at["table_name"])))
-                    .withColumn("_at_pk",
-                                compile_interpolated(str(at.get("partition_key", ""))))
-                    .withColumn("_at_rk",
-                                compile_interpolated(str(at.get("row_key", ""))))
-                    .withColumn("_at_op",
-                                compile_interpolated(str(at.get("transaction_type",
-                                                                "INSERT")))))
-            props = at.get("properties") or {}
-            if props:
-                df = df.withColumn("_at_props", F.to_json(F.struct(*[
-                    compile_interpolated(str(v)).alias(str(k))
-                    for k, v in props.items()])))
-            else:
-                df = df.withColumn("_at_props", F.to_json(F.struct(*[
-                    F.col(c) for c in data_cols])))
-            writer = azure_table_sink(
-                str(at.get("endpoint")
-                    or f"https://{account}.table.core.windows.net"),
-                account,
-                str(at.get("storage_access_key")
-                    or _os.environ.get("AZURE_STORAGE_ACCESS_KEY", "")),
-                table_col="_at_table", pk_col="_at_pk", rk_col="_at_rk",
-                op_col="_at_op", props_col="_at_props")
-        elif out.get("amqp_1"):
-            # AMQP 1.0 sender link (amqp1/output.go): rows publish as JSON
-            # amqp-value sections; the batch waits for accepted
-            # dispositions (the reference's outcome wait)
-            from bento_spark.streaming.amqp1 import amqp1_sink
-
-            a1 = out["amqp_1"]
-            url = a1.get("url") or (a1.get("urls") or [None])[0]
-            if not url:
-                raise ValueError("output.amqp_1 needs `url` (or `urls`)")
-            df = self.build_stream(spark)
-            writer = amqp1_sink(str(url), str(a1["target_address"]))
-        elif out.get("aws_dynamodb"):
-            # keyed-document PutItem writer (aws/output_dynamodb.go):
-            # string_columns interpolations render JVM-side into S
-            # attributes; json_map_columns paths render via to_json into
-            # typed attribute trees ('.'/'' = the whole row, the
-            # reference's root-path rule); BatchWriteItem in 25-item chunks
-            import os as _os
-
-            from bento_spark.streaming.dynamodb import dynamodb_sink
-
-            do = out["aws_dynamodb"]
-            df = self.build_stream(spark)
-            base_cols = list(df.columns)
-            string_cols: list[str] = []
-            for attr, expr in (do.get("string_columns") or {}).items():
-                df = df.withColumn(str(attr), compile_interpolated(str(expr)))
-                string_cols.append(str(attr))
-            json_cols: dict[str, str] = {}
-            for attr, path in (do.get("json_map_columns") or {}).items():
-                attr, path = str(attr), str(path or "")
-                if path in ("", "."):
-                    rendered = F.to_json(F.struct(*[F.col(c) for c in base_cols]))
-                else:
-                    src_typ = df.schema[path].dataType.simpleString()
-                    rendered = (F.col(path) if src_typ == "string"
-                                else F.to_json(F.col(path)))
-                df = df.withColumn(f"_ddb_{attr}", rendered)
-                json_cols[attr] = f"_ddb_{attr}"
-            writer = dynamodb_sink(
-                str(do.get("endpoint") or
-                    f"https://dynamodb.{do.get('region', 'us-east-1')}.amazonaws.com"),
-                str(do["table"]),
-                str(do.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(do.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                region=str(do.get("region", "us-east-1")),
-                string_cols=string_cols,
-                json_map_cols=json_cols,
-                ttl=do.get("ttl"), ttl_key=do.get("ttl_key"),
-            )
-        elif out.get("sql_raw"):
-            # statement-with-binds per batch (output_sql_raw.go): the
-            # args_mapping array renders JVM-side; ONE executemany
-            # transaction per micro-batch (at-least-once under replay)
-            from bento_spark.operators.sql_raw import sql_raw_exec
-
-            so = out["sql_raw"]
-            if "args_mapping" not in so:
-                raise ValueError("output.sql_raw requires `args_mapping`")
-            df = self.build_stream(spark)
-            df = df.withColumn("_sql_args", compile_expr(str(so["args_mapping"])))
-            _drv, _dsn, _q = (str(so.get("driver", "sqlite")),
-                              str(so["dsn"]), str(so["query"]))
-
-            def writer(batch_df, epoch_id: int,
-                       _drv=_drv, _dsn=_dsn, _q=_q) -> None:
-                it = batch_df.select("_sql_args").toLocalIterator()
-                sql_raw_exec(_drv, _dsn, _q,
-                             args_rows=(tuple(row[0]) for row in it))
-        elif out.get("aws_s3"):
-            # one PutObject per message (aws/output_s3.go) — the
-            # interpolated object `path` renders JVM-side as a column;
-            # the body is the row JSON-serialized (or `value_col` raw)
-            import os as _os
-
-            from bento_spark.streaming.s3 import s3_sink
-
-            s3o = out["aws_s3"]
-            if "path" not in s3o:
-                # the reference defaults to ${!count(...)}-${!timestamp...}
-                # — wall-clock/counter interpolations violate the repo's
-                # determinism invariant, so the path must be explicit
-                raise ValueError("output.aws_s3 requires an interpolated `path`")
-            df = self.build_stream(spark)
-            df = df.withColumn("_s3_path", compile_interpolated(str(s3o["path"])))
-            writer = s3_sink(
-                str(s3o.get("endpoint") or
-                    f"https://s3.{s3o.get('region', 'us-east-1')}.amazonaws.com"),
-                str(s3o["bucket"]),
-                str(s3o.get("access_key") or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                str(s3o.get("secret_key") or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                path_col="_s3_path",
-                region=str(s3o.get("region", "us-east-1")),
-                content_type=str(s3o.get("content_type", "application/octet-stream")),
-                value_col=(str(s3o["value_col"]) if s3o.get("value_col") else None),
-            )
-        elif out.get("nanomsg"):
-            # dependency-free SP-over-TCP publisher (nanomsg/output.go:
-            # socket_type PUSH|PUB, bind flag) — rows publish as JSON
-            from bento_spark.streaming.nanomsg import nanomsg_sink
-
-            nn = out["nanomsg"]
-            df = self.build_stream(spark)
-            writer = nanomsg_sink(
-                [str(u) for u in nn.get("urls") or []],
-                socket_type=str(nn.get("socket_type", "PUSH")).upper(),
-                bind=bool(nn.get("bind", False)),
-            )
-        elif out.get("zmq4"):
-            # dependency-free ZMTP 3.0 publisher (zeromq/output_zmq4.go:
-            # socket_type PUSH|PUB, bind flag) — rows publish as JSON, the
-            # PUB topic as a pre-computed COLUMN
-            from bento_spark.streaming.zeromq import zmq_sink
-
-            z = out["zmq4"]
-            df = self.build_stream(spark)
-            st = str(z.get("socket_type", "PUSH")).upper()
-            topic_col = None
-            if st == "PUB" and z.get("topic"):
-                df = df.withColumn("_zmq_topic", compile_interpolated(str(z["topic"])))
-                topic_col = "_zmq_topic"
-            writer = zmq_sink(
-                [str(u) for u in z.get("urls") or []], socket_type=st,
-                bind=bool(z.get("bind", False)), topic_col=topic_col,
-            )
-        elif out.get("beanstalkd"):
-            # dependency-free beanstalkd producer (beanstalkd/output.go:
-            # Put pri 2, no delay, 2s TTR) — rows publish as JSON, each
-            # put confirmed by INSERTED
-            from bento_spark.streaming.beanstalkd import (
-                beanstalkd_sink,
-                parse_beanstalkd_addr,
-            )
-
-            df = self.build_stream(spark)
-            o = out["beanstalkd"]
-            host, port = parse_beanstalkd_addr(str(o.get("address", "127.0.0.1:11300")))
-            writer = beanstalkd_sink(host, port)
-        elif out.get("nsq"):
-            # dependency-free NSQ publisher (nsq/output.go:
-            # nsqd_tcp_address, topic) — rows publish as JSON, each PUB
-            # confirmed by its OK frame
-            from bento_spark.streaming.nsq import nsq_sink, parse_nsqd_addr
-
-            df = self.build_stream(spark)
-            o = out["nsq"]
-            host, port = parse_nsqd_addr(str(o.get("nsqd_tcp_address", "127.0.0.1:4150")))
-            writer = nsq_sink(host, port, str(o["topic"]))
-        elif out.get("mqtt"):
-            # dependency-free publisher (mqtt/output.go: topic, qos,
-            # retained) — rows publish as JSON executor-side
-            from bento_spark.streaming.mqtt import mqtt_sink
-
-            df = self.build_stream(spark)
-            m = out["mqtt"]
-            host, port = mqtt_addr(m)
-            writer = mqtt_sink(host, port, m["topic"], qos=int(m.get("qos", 1)),
-                               retained=bool(m.get("retained", False)))
-        elif out.get("nats_object_store"):
-            # chunked object put per row at the interpolated name
-            # (nats/output_os.go)
-            from bento_spark.streaming.nats import nats_os_sink
-
-            no = out["nats_object_store"]
-            df = self.build_stream(spark).withColumn(
-                "_os_name", compile_interpolated(str(no["object_name"])))
-            host, port = nats_addr(no)
-            writer = nats_os_sink(host, port, str(no["bucket"]), "_os_name",
-                                  value_col=no.get("value_col"),
-                                  chunk_size=int(no.get("chunk_size",
-                                                        128 * 1024)))
-        elif out.get("nats_jetstream"):
-            # acknowledged JetStream publish per row
-            # (nats/output_jetstream.go) — error acks fail/replay the task
-            from bento_spark.streaming.nats import nats_jetstream_sink
-
-            nj = out["nats_jetstream"]
-            df = self.build_stream(spark).withColumn(
-                "_js_subject", compile_interpolated(str(nj["subject"])))
-            host, port = nats_addr(nj)
-            writer = nats_jetstream_sink(host, port, "_js_subject",
-                                         value_col=nj.get("value_col"))
-        elif out.get("nats"):
-            # dependency-free core-NATS publisher (nats/output.go:
-            # interpolated subject) — the per-row subject compiles to a
-            # COLUMN (never row-at-a-time Python), rows publish as JSON
-            from bento_spark.streaming.nats import nats_sink
-
-            n = out["nats"]
-            df = self.build_stream(spark).withColumn(
-                "_nats_subject", compile_interpolated(str(n["subject"])))
-            host, port = nats_addr(n)
-            writer = nats_sink(host, port, "_nats_subject")
-        elif out.get("pulsar"):
-            # dependency-free Pulsar producer (pulsar/output.go: topic +
-            # interpolated key / ordering_key, max_in_flight) — the per-row
-            # keys compile to COLUMNS, rows publish as JSON with pipelined
-            # sends + a receipt drain per partition
-            from bento_spark.streaming.pulsar import parse_pulsar_url, pulsar_sink
-
-            p = out["pulsar"]
-            host, port = parse_pulsar_url(
-                str(p.get("url", "pulsar://127.0.0.1:6650")))
-            df = self.build_stream(spark)
-            key_col = ok_col = None
-            if p.get("key"):
-                df = df.withColumn("_pulsar_key",
-                                   compile_interpolated(str(p["key"])))
-                key_col = "_pulsar_key"
-            if p.get("ordering_key"):
-                df = df.withColumn("_pulsar_ordering_key",
-                                   compile_interpolated(str(p["ordering_key"])))
-                ok_col = "_pulsar_ordering_key"
-            auth = (p.get("auth") or {}).get("token") or {}
-            token = auth.get("token") if auth.get("enabled") else None
-            writer = pulsar_sink(host, port, str(p["topic"]), key_col=key_col,
-                                 ordering_key_col=ok_col, token=token,
-                                 max_in_flight=int(p.get("max_in_flight", 64)))
-        elif out.get("amqp_0_9"):
-            # AMQP 0.9.1 publisher (amqp09/output.go: interpolated exchange
-            # `key`) — the routing key compiles to a COLUMN, rows publish
-            # as JSON executor-side
-            from bento_spark.streaming.amqp import amqp_sink, parse_amqp_url
-
-            a = out["amqp_0_9"]
-            url = (a.get("urls") or [a.get("url", "amqp://127.0.0.1:5672")])[0]
-            host, port, vhost = parse_amqp_url(str(url))
-            df = self.build_stream(spark).withColumn(
-                "_amqp_key", compile_interpolated(str(a.get("key", ""))))
-            ex = a.get("exchange", "")
-            exd = a.get("exchange_declare") or {}
-            if exd.get("enabled"):
-                from bento_spark.streaming.amqp import AmqpClient
-
-                c = AmqpClient(host, port, vhost=vhost)
-                try:
-                    c.exchange_declare(ex, exd.get("type", "direct"),
-                                       durable=bool(exd.get("durable", False)))
-                finally:
-                    c.close()
-            writer = amqp_sink(host, port, ex, "_amqp_key", vhost=vhost)
-        elif any(out.get(k) for k in ("redis_list", "redis_pubsub", "redis_streams", "redis_hash")):
-            # redis outputs (redis/output_list.go, output_pubsub.go,
-            # output_streams.go:154, output_hash.go:193): the interpolated
-            # key/channel/stream compiles to a COLUMN, rows write as one
-            # pipelined round-trip per partition
-            from bento_spark.streaming import redis as _redis
-
-            name = next(k for k in ("redis_list", "redis_pubsub", "redis_streams", "redis_hash") if out.get(k))
-            r = out[name]
-            host, port = redis_addr(r)
-            df = self.build_stream(spark)
-            if name == "redis_list":
-                df = df.withColumn("_redis_key", compile_interpolated(str(r["key"])))
-                writer = _redis.redis_list_sink(host, port, "_redis_key")
-            elif name == "redis_pubsub":
-                df = df.withColumn("_redis_channel", compile_interpolated(str(r["channel"])))
-                writer = _redis.redis_pubsub_sink(host, port, "_redis_channel")
-            elif name == "redis_streams":
-                df = df.withColumn("_redis_stream", compile_interpolated(str(r["stream"])))
-                writer = _redis.redis_streams_sink(
-                    host, port, "_redis_stream", body_key=r.get("body_key", "body"),
-                    meta_cols=r.get("metadata"), max_length=r.get("max_length"),
-                )
-            else:
-                df = df.withColumn("_redis_hkey", compile_interpolated(str(r["key"])))
-                writer = _redis.redis_hash_sink(host, port, "_redis_hkey",
-                                                fields=r.get("fields"))
-        elif "sync_response" in out:
-            # reply-to-request output (output_sync_response.go:15): the
-            # processed row answers the HTTP request that produced it,
-            # routed by the request_id the sync http_server input stamped
-            from bento_spark.streaming.sink import sync_response_writer
-
-            hs = (self.conf.get("input") or {}).get("http_server") or {}
-            if not hs.get("sync"):
-                raise ValueError(
-                    "output.sync_response requires input.http_server with "
-                    "`sync: true` (the input must hold requests open and "
-                    "stamp request ids)"
-                )
-            df = self.build_stream(spark)
-            sr = out.get("sync_response") or {}
-            writer = sync_response_writer(
-                sync_dir_of(hs), content_col=sr.get("content"))
-        elif out.get("fallback"):
-            # ordered try-next-sink failover (output_fallback.go:18)
-            from bento_spark.streaming.sink import fallback_writer
-
-            df = self.build_stream(spark)
-            sinks = [IdempotentParquetSink(p, checkpoint=checkpoint) for p in out["fallback"]]
-            self._case_sinks = sinks
-            writer = fallback_writer(sinks)
-        elif out.get("fan_out") or out.get("round_robin"):
-            # broker patterns (output_broker.go:150): fan_out = every sink
-            # gets the batch; round_robin = deterministic row-hash spread
-            from bento_spark.streaming.sink import route_outputs
-
-            df = self.build_stream(spark)
-            mode = "fan_out" if out.get("fan_out") else "round_robin"
-            sinks = [(None, IdempotentParquetSink(p, checkpoint=checkpoint)) for p in out[mode]]
-            self._case_sinks = [s for _, s in sinks]
-            writer = route_outputs(sinks, mode=mode)
-        elif out.get("dynamic"):
-            # labeled fan_out broker (output_dynamic.go: "the broker
-            # pattern used is always fan_out"); runtime add/remove maps
-            # to the StreamManager REST API, like input.dynamic
-            from bento_spark.streaming.sink import route_outputs
-
-            df = self.build_stream(spark)
-            outputs = out["dynamic"].get("outputs") or {}
-            if not outputs:
-                raise ValueError("dynamic output: `outputs` map is empty")
-            sinks = [(None, IdempotentParquetSink(p, checkpoint=checkpoint))
-                     for _label, p in sorted(outputs.items())]
-            self._case_sinks = [s for _, s in sinks]
-            writer = route_outputs(sinks, mode="fan_out")
-        elif out.get("socket"):
-            # tcp/udp/unix lines producer (output_socket.go) — one
-            # connection per partition, rows rendered JVM-side
-            from bento_spark.streaming.sink import socket_sink
-
-            s = out["socket"]
-            df = self.build_stream(spark)
-            writer = socket_sink(str(s.get("network", "tcp")), str(s["address"]))
-        elif out.get("websocket"):
-            # masked text frames over an RFC 6455 client connection
-            # (output_websocket.go) — handshake per partition
-            from bento_spark.streaming.sink import websocket_sink
-
-            w = out["websocket"]
-            df = self.build_stream(spark)
-            tls = w.get("tls") or {}
-            writer = websocket_sink(str(w["url"]),
-                                    tls_insecure=bool(tls.get("skip_cert_verify")))
-        elif out.get("hdfs"):
-            # one file per message at interpolated directory/path over
-            # WebHDFS two-step CREATE (hdfs/output.go)
-            from bento_spark.streaming.hdfs import hdfs_sink
-
-            ho = out["hdfs"]
-            df = self.build_stream(spark)
-            df = (df.withColumn("_hdfs_dir",
-                                compile_interpolated(str(ho["directory"])))
-                    .withColumn("_hdfs_path",
-                                compile_interpolated(str(ho["path"]))))
-            writer = hdfs_sink(
-                ho.get("hosts") or [str(ho.get("host", "127.0.0.1:9870"))],
-                user=str(ho.get("user", "bento")),
-                value_col=ho.get("value_col"),
-            )
-        elif out.get("http_server"):
-            # GET/stream/websocket serving endpoints over a bounded queue
-            # (output_http_server.go:147) — driver-side serving bridge;
-            # push blocks on a full queue (backpressure)
-            from bento_spark.streaming.http_server import (
-                HttpServeOutput,
-                http_serve_sink,
-            )
-
-            hs = out["http_server"]
-            df = self.build_stream(spark)
-            addr = str(hs.get("address", "127.0.0.1:0"))
-            host, _, port = addr.partition(":")
-            self._http_serve = HttpServeOutput(
-                host=host or "127.0.0.1", port=int(port or 0),
-                path=str(hs.get("path", "/get")),
-                stream_path=str(hs.get("stream_path", "/get/stream")),
-                ws_path=str(hs.get("ws_path", "/get/ws")),
-                timeout_s=float(hs.get("timeout", 5.0)),
-                maxsize=int(hs.get("max_pending", 1024)),
-            ).start()
-            writer = http_serve_sink(self._http_serve,
-                                     content_col=hs.get("content_col"))
-        elif out.get("subprocess"):
-            # stdin lines into a driver-side child process
-            # (output_subprocess.go: maxInFlight=1, relaunch on exit)
-            from bento_spark.streaming.subprocess_io import subprocess_sink
-
-            sp = out["subprocess"]
-            df = self.build_stream(spark)
-            writer = subprocess_sink(str(sp["name"]),
-                                     [str(a) for a in (sp.get("args") or [])])
+            df = self._window_dlq_stream(spark, checkpoint, dlq_path, available_now)
         else:
-            if self._sink is None:
-                raise ValueError(
-                    "output.path (or switch/fan_out/round_robin/kafka/fallback/"
-                    "http_client/elasticsearch/mqtt/nats/redis_*/amqp_0_9/"
-                    "sync_response) required for run_stream"
-                )
             df = self.build_stream(spark)
-            if dlq_path:
-                # same query => same checkpoint binds the DLQ's markers too
-                dlq = IdempotentParquetSink(dlq_path, checkpoint=checkpoint)
-                writer = dlq_split_writer(self._sink, dlq)
-            else:
-                writer = self._sink.foreach_batch()
+        df, writer = OUTPUTS[name](self, spark, section, df, checkpoint)
+        self._close_output = getattr(writer, "close", None)
+        if dlq_path and not window_dlq and "error" in df.columns:
+            # reject_errored around the output (output_reject_errored.go:19):
+            # errored rows -> DLQ, the rest -> the output. Same query =>
+            # same checkpoint binds the DLQ's markers too
+            writer = dlq_split_writer(writer, IdempotentParquetSink(dlq_path, checkpoint=checkpoint))
         # input.read_until: deliver the batch holding the first row that
         # matches `check`, then stop the query (input_read_until.go:34)
         until = (self.conf.get("input") or {}).get("read_until")
@@ -2759,21 +1733,14 @@ class Pipeline:
             # window+output.dlq); without this the reject filter silently
             # drops errored rows that batch mode DLQs
             errored, eh_dlq_path = self._reject_errored
-            eh_ck = checkpoint.rstrip("/") + "_ehdlq"
-            eh_sink = IdempotentParquetSink(eh_dlq_path, checkpoint=eh_ck)
-            self._eh_dlq_query = (
-                errored.writeStream.outputMode("append")
-                .option("checkpointLocation", eh_ck)
-                .foreachBatch(eh_sink.foreach_batch())
-                .trigger(**_trigger())
-                .start()
-            )
+            self._eh_dlq_query = self._start_dlq_query(
+                errored, eh_dlq_path, checkpoint.rstrip("/") + "_ehdlq", available_now)
         q = (
             df.writeStream.outputMode(out.get("mode", "append"))
             .option("checkpointLocation", checkpoint)
             .foreachBatch(writer)
         )
-        query = q.trigger(**_trigger()).start()
+        query = q.trigger(**self._trigger(available_now)).start()
         if until:
             import threading
 
@@ -2788,6 +1755,83 @@ class Pipeline:
 
             threading.Thread(target=monitor, daemon=True).start()
         return query
+
+    def _trigger(self, available_now: bool) -> dict:
+        """Trigger selection shared by the main query and the DLQ
+        side-queries: availableNow in bounded mode; otherwise a
+        processingTime interval — rate_limit.interval (if the pipeline
+        declared one) takes precedence over output.trigger."""
+        if available_now:
+            return {"availableNow": True}
+        rl = self.conf.get("_rate_limit") or {}
+        ivl = rl.get("interval", (self.conf.get("output") or {}).get("trigger", "5 seconds"))
+        # normalize through duration_ms: the pipeline accepts '1s' /
+        # '500 ms' everywhere else, but Spark's trigger parser does not —
+        # render as '<n> milliseconds', which both dialects agree on
+        from bento_spark.streaming.cep import duration_ms
+
+        return {"processingTime": f"{duration_ms(str(ivl))} milliseconds"}
+
+    def _start_dlq_query(self, errored: DataFrame, path: str, checkpoint: str,
+                         available_now: bool):
+        """Start a side query writing `errored` to an exactly-once DLQ sink
+        under its own checkpoint: exactly-once holds independently for it
+        and the main query."""
+        dlq = IdempotentParquetSink(path, checkpoint=checkpoint)
+        return (
+            errored.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint)
+            .foreachBatch(dlq.foreach_batch())
+            .trigger(**self._trigger(available_now))
+            .start()
+        )
+
+    def _window_dlq_stream(self, spark: SparkSession, checkpoint: str, dlq_path: str,
+                           available_now: bool) -> DataFrame:
+        """The windowed stream of a window + output.dlq config, with the DLQ
+        side query over its errored rows started."""
+        # Errored rows must be routed BEFORE the window agg (the agg
+        # output has no per-row error column — reference semantics:
+        # reject_errored sits between pipeline and the window-fed
+        # output). Idiomatic Spark: a SECOND streaming query over the
+        # same source feeds the DLQ, each with its own checkpoint —
+        # exactly-once holds independently for both sinks. (A single
+        # query can't window correctly per-micro-batch: a window's rows
+        # may span batches and last-writer-wins MERGE would drop the
+        # earlier partials.)
+        # The two queries share the chain up to its trailing run of
+        # row maps that keep `error` (_split_tail: audio_features in
+        # the shipped clips_window.yaml). The split on `error` comes
+        # there, so the DLQ query decodes only the errored rows and the
+        # main query only the clean ones, instead of each decoding
+        # every clip. DLQ rows come out as if the split were after the
+        # whole chain. The window branch drops `bytes` from the decode
+        # output unless the window or join reads it, so the payload
+        # crosses Arrow once (JVM -> Python) instead of twice.
+        procs = (self.conf.get("pipeline") or {}).get("processors") or []
+        tail = self._split_tail(procs)
+        rows = self._error_strategy(
+            self._chain(procs[: len(procs) - len(tail)]), self._input(spark, streaming=True)
+        )
+        if "error" in rows.columns:
+            errored = self._chain(tail)(rows.filter(F.col("error").isNotNull()))
+            self._dlq_query = self._start_dlq_query(
+                errored, dlq_path, checkpoint.rstrip("/") + "_dlq", available_now)
+            rows = rows.filter(F.col("error").isNull())
+        if tail and not self._window_reads_payload():
+            name, opts = next(iter(tail[-1].items()))
+            tail = [*tail[:-1], {name: {**(opts or {}), "keep_payload": False}}]
+        rows = self._chain(tail)(rows)
+        rows = self._apply_join(rows, spark, streaming=True)
+        return self._apply_window(rows)
+
+    def close(self) -> None:
+        """Release what the output holds on the driver: the `close()` its
+        writer carries (the subprocess output's child, the http_server
+        output's server). Call it once the queries have stopped."""
+        close, self._close_output = self._close_output, None
+        if close is not None:
+            close()
 
     def _wrap_retry_writer(self, inner, eh: dict):
         """Streaming `error_handling: {strategy: retry}` — the reference's

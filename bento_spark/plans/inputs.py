@@ -95,13 +95,18 @@ def _bridge(module: str, reader: str, spooler: str, fields, extra=None) -> Input
 
 
 # ------------------------------------------ connection fields (inputs+outputs)
+def host_port(addr, default: str) -> tuple[str, int]:
+    """`[scheme://]host:port`, the host or port missing from `addr` (or
+    all of it) taken from `default`."""
+    default_host, _, default_port = default.partition(":")
+    host, _, port = re.sub(r"^\w+://", "", str(addr or default)).partition(":")
+    return host or default_host, int(port or default_port)
+
+
 def mqtt_addr(o: dict) -> tuple[str, int]:
     """First entry of the reference's `urls` list (tcp://host:port)
     or a bare `address: host:port`."""
-    url = (o.get("urls") or [o.get("address", "127.0.0.1:1883")])[0]
-    hp = str(url).removeprefix("tcp://").removeprefix("mqtt://")
-    host, _, port = hp.partition(":")
-    return host or "127.0.0.1", int(port or 1883)
+    return host_port((o.get("urls") or [o.get("address")])[0], "127.0.0.1:1883")
 
 
 def kafka_sasl(o: dict) -> dict | None:
@@ -122,19 +127,13 @@ def kafka_sasl(o: dict) -> dict | None:
 
 def kafka_addr(o: dict) -> tuple[str, int]:
     """First entry of the reference's `seed_brokers` list (host:port)."""
-    hp = str((o.get("seed_brokers") or ["127.0.0.1:9092"])[0])
-    hp = hp.removeprefix("kafka://").removeprefix("tcp://")
-    host, _, port = hp.partition(":")
-    return host or "127.0.0.1", int(port or 9092)
+    return host_port((o.get("seed_brokers") or [None])[0], "127.0.0.1:9092")
 
 
 def nats_addr(o: dict) -> tuple[str, int]:
     """First entry of the reference's `urls` list (nats://host:port)
     or a bare `address: host:port`."""
-    url = (o.get("urls") or [o.get("address", "127.0.0.1:4222")])[0]
-    hp = str(url).removeprefix("nats://").removeprefix("tcp://")
-    host, _, port = hp.partition(":")
-    return host or "127.0.0.1", int(port or 4222)
+    return host_port((o.get("urls") or [o.get("address")])[0], "127.0.0.1:4222")
 
 
 def redis_addr(o: dict) -> tuple[str, int]:
@@ -212,9 +211,9 @@ def sync_dir_of(o: dict) -> str:
     return str(o.get("sync_dir") or (str(o["spool_dir"]).rstrip("/") + "_resp"))
 
 
-def _aws(o: dict, service: str) -> dict:
-    """Endpoint, region and credentials of an AWS input; credentials come
-    from the section or the standard AWS_* env vars."""
+def aws_conn(o: dict, service: str) -> dict:
+    """Endpoint, region and credentials of an AWS input or output;
+    credentials come from the section or the standard AWS_* env vars."""
     region = str(o.get("region", "us-east-1"))
     return {
         "endpoint": str(o.get("endpoint") or f"https://{service}.{region}.amazonaws.com"),
@@ -224,9 +223,9 @@ def _aws(o: dict, service: str) -> dict:
     }
 
 
-def _azure(o: dict, service: str) -> dict:
-    """Endpoint and SharedKey credentials of an Azure storage input, from
-    the section or the standard AZURE_STORAGE_* env vars."""
+def azure_conn(o: dict, service: str) -> dict:
+    """Endpoint and SharedKey credentials of an Azure storage input or
+    output, from the section or the standard AZURE_STORAGE_* env vars."""
     account = str(o.get("storage_account") or os.environ.get("AZURE_STORAGE_ACCOUNT", ""))
     return {
         "endpoint": str(o.get("endpoint") or f"https://{account}.{service}.core.windows.net"),
@@ -237,8 +236,7 @@ def _azure(o: dict, service: str) -> dict:
 
 
 def _listen_addr(o: dict) -> dict:
-    host, _, port = str(o.get("address", "127.0.0.1:0")).partition(":")
-    return {"host": host or "127.0.0.1", "port": int(port or 0)}
+    return dict(zip(("host", "port"), host_port(o.get("address"), "127.0.0.1:0")))
 
 
 # ------------------------------------------------------------ input readers
@@ -564,12 +562,12 @@ def _pulsar(o):  # pulsar/input.go
 
 
 def _aws_kinesis(o):  # aws/input_kinesis.go
-    return {**_aws(o, "kinesis"), "streams": [str(s) for s in o["streams"]],
+    return {**aws_conn(o, "kinesis"), "streams": [str(s) for s in o["streams"]],
             "checkpoint_limit": int(o.get("checkpoint_limit", 1000))}
 
 
 def _aws_sqs(o):  # aws/input_sqs.go
-    return {**_aws(o, "sqs"), "queue_url": str(o["url"]),
+    return {**aws_conn(o, "sqs"), "queue_url": str(o["url"]),
             "wait_time_s": int(o.get("wait_time_seconds", 1)),
             "max_messages": int(o.get("max_number_of_messages", 10)),
             "delete_message": bool(o.get("delete_message", True))}
@@ -577,7 +575,7 @@ def _aws_sqs(o):  # aws/input_sqs.go
 
 def _aws_s3(o):  # aws/input_s3.go: one listing pass, or SQS-notified objects
     sqs = o.get("sqs") or {}
-    return {**_aws(o, "s3"), "bucket": str(o["bucket"]), "prefix": str(o.get("prefix", "")),
+    return {**aws_conn(o, "s3"), "bucket": str(o["bucket"]), "prefix": str(o.get("prefix", "")),
             "delete_objects": bool(o.get("delete_objects", False)),
             "sqs_queue_url": str(sqs["url"]) if sqs.get("url") else None,
             "sqs_endpoint": str(sqs["endpoint"]) if sqs.get("endpoint") else None,
@@ -623,19 +621,19 @@ def _gcp_cloud_storage(o):  # gcp/input_cloud_storage.go
 
 def _azure_queue_storage(o):  # azure/input_queue_storage.go
     vis = o.get("dequeue_visibility_timeout", "30s")
-    return {**_azure(o, "queue"), "queue": str(o["queue_name"]),
+    return {**azure_conn(o, "queue"), "queue": str(o["queue_name"]),
             "max_messages": int(o.get("max_in_flight", 16)),
             "visibility_timeout_s": max(1, _ms(vis) // 1000)}
 
 
 def _azure_table_storage(o):  # azure/input_table_storage.go
-    return {**_azure(o, "table"), "table": str(o["table_name"]),
+    return {**azure_conn(o, "table"), "table": str(o["table_name"]),
             "filter": str(o.get("filter", "")), "select": str(o.get("select", "")),
             "page_size": int(o.get("page_size", 1000))}
 
 
 def _azure_blob_storage(o):  # azure/input_blob_storage.go
-    return {**_azure(o, "blob"), "container": str(o["container"]),
+    return {**azure_conn(o, "blob"), "container": str(o["container"]),
             "prefix": str(o.get("prefix", "")),
             "delete_blobs": bool(o.get("delete_objects", False))}
 

@@ -9,11 +9,15 @@ fields, enum values, parseable durations, resolvable `${VAR}`
 interpolations — and leaves expression-level validation to compile time
 (Bloblang compiles to Catalyst Columns, which need a session).
 
-Input names come from the input registry (plans/inputs.py), the table the
-compiler reads inputs from; processor names are extracted from the
+Input and output names come from the input and output registries
+(plans/inputs.py, plans/outputs.py), the tables the compiler reads; an
+input or output map naming two of them is reported with the compiler's own
+error. An `output` key that is neither an output nor a modifier (`keys`,
+`dlq`, `mode`, `trigger`, `default` next to `switch`) is reported, and so
+is `window` + `dlq` without `path`. Processor names are extracted from the
 compiler source (the `name == "..."` dispatch patterns). Either way a new
-input/processor is lintable the moment it is implemented — no second list
-to forget to update.
+component is lintable the moment it is implemented — no second list to
+forget to update.
 """
 
 from __future__ import annotations
@@ -78,6 +82,31 @@ def known_inputs() -> frozenset[str]:
     from bento_spark.plans.inputs import ALIASES, INPUTS
 
     return frozenset(INPUTS) | frozenset(ALIASES)
+
+
+def known_outputs() -> frozenset[str]:
+    from bento_spark.plans.outputs import ALIASES, OUTPUTS
+
+    return frozenset(OUTPUTS) | frozenset(ALIASES)
+
+
+def _lint_output(out: dict, window: bool, issues: list[str]) -> None:
+    from bento_spark.plans.outputs import MODIFIERS, select_output
+
+    # stdout, the reference's default output, is accepted for batch-only
+    # configs: batch runs (`bento test`, build_batch) return the table
+    # instead, and run_stream reports it as naming no output
+    allowed = known_outputs() | MODIFIERS | {"stdout", *(["default"] if "switch" in out else [])}
+    for k in out:
+        if k not in allowed:
+            issues.append(f"output: unknown key {k!r}")
+    if set(out) & known_outputs():
+        try:
+            select_output(out)
+        except ValueError as e:  # names two outputs: the compiler's rule
+            issues.append(f"output: {e}")
+    if window and "dlq" in out and "path" not in out:
+        issues.append("output: window + dlq requires output.path (the windowed main sink)")
 
 
 def _lint_duration(path: str, val, issues: list[str]) -> None:
@@ -269,6 +298,8 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
             _lint_duration(f"rate_limit_resources[{i}].interval", body["interval"], issues)
 
     out = conf.get("output") or {}
-    if isinstance(out, dict) and out.get("trigger") is not None:
-        _lint_duration("output.trigger", out["trigger"], issues)
+    if isinstance(out, dict):
+        _lint_output(out, bool(conf.get("window")), issues)
+        if out.get("trigger") is not None:
+            _lint_duration("output.trigger", out["trigger"], issues)
     return issues

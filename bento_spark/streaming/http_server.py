@@ -546,8 +546,16 @@ class HttpServeOutput:
         return self
 
     def stop(self) -> None:
+        import socket
+
         self._stop.set()
         if self._sock is not None:
+            # shutdown wakes the blocked accept(); close alone leaves the
+            # port listening until the next connection arrives
+            try:
+                self._sock.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
             try:
                 self._sock.close()
             except OSError:
@@ -702,4 +710,5 @@ def http_serve_sink(server: HttpServeOutput, content_col: str | None = None):
             if row._b is not None:
                 server.push(row._b)
 
+    write_batch.close = server.stop  # the server lives as long as the writer
     return write_batch

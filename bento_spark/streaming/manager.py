@@ -12,7 +12,9 @@ independent compiled Pipeline with its own checkpoint dir (exactly-once
 per stream survives manager restarts). Status/stats come from the
 StreamingQuery handles (lastProgress/recentProgress) — Spark's own
 progress facts, the analogue of the reference's per-stream metrics
-(uptime, rows consumed/produced).
+(uptime, rows consumed/produced). A spool-bridge input's bridge runs for
+the life of its stream; delete and update stop it and release what the
+stream's output holds on the driver.
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ class _StreamInfo:
     # per-stream lock for totals accumulation (concurrent /stats requests
     # through ThreadingHTTPServer must not double-count a batch)
     lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+    bridge: Any = None  # the started bridge of a spool-bridge input
 
 
 class StreamManager:
@@ -60,8 +63,15 @@ class StreamManager:
     def _start(self, stream_id: str, config_src: str, available_now: bool):
         pipe = compile_yaml(config_src)
         ck = os.path.join(self.checkpoint_root, stream_id)
-        q = pipe.run_stream(self.spark, checkpoint=ck, available_now=available_now)
-        return pipe, q
+        # a spool-bridge input (http_server, subprocess, mqtt, ...) gets its
+        # listener/subscriber for the life of the stream
+        bridge = pipe.start_bridge() if pipe.bridged else None
+        try:
+            q = pipe.run_stream(self.spark, checkpoint=ck, available_now=available_now)
+        except BaseException:
+            self._release(pipe, bridge)
+            raise
+        return pipe, q, bridge
 
     def _fill_reservation(self, stream_id: str, slot: _StreamInfo,
                           config_src: str, available_now: bool) -> None:
@@ -69,14 +79,14 @@ class StreamManager:
         seconds), then swap the result into the reserved slot; a failed
         start releases the reservation so the id is creatable again."""
         try:
-            pipe, q = self._start(stream_id, config_src, available_now)
+            pipe, q, bridge = self._start(stream_id, config_src, available_now)
         except BaseException:
             with self._lock:
                 if self._streams.get(stream_id) is slot:
                     del self._streams[stream_id]
             raise
         with self._lock:
-            slot.pipeline, slot.query = pipe, q
+            slot.pipeline, slot.query, slot.bridge = pipe, q, bridge
             slot.created_at = time.time()
             slot.starting = False
 
@@ -110,13 +120,23 @@ class StreamManager:
         self._stop_query(info)
         self._fill_reservation(stream_id, slot, config_src, available_now=False)
 
-    @staticmethod
-    def _stop_query(info: _StreamInfo) -> None:
+    @classmethod
+    def _stop_query(cls, info: _StreamInfo) -> None:
         try:
             info.query.stop()
             info.query.awaitTermination(30)
         except Exception:  # noqa: BLE001 — already-failed queries stop dirty
             pass
+        cls._release(info.pipeline, info.bridge)
+
+    @staticmethod
+    def _release(pipe: Pipeline, bridge) -> None:
+        """Stop the input's bridge and release what the output holds on
+        the driver (the subprocess output's child, the http_server
+        output's server)."""
+        if bridge is not None:
+            bridge.stop()
+        pipe.close()
 
     def delete(self, stream_id: str) -> None:
         """DELETE /streams/{id}: stop the query and drop the registration

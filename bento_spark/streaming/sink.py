@@ -171,6 +171,10 @@ class IdempotentParquetSink:
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         return self.write_batch
 
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """The sink is a foreachBatch writer itself."""
+        self.write_batch(batch_df, epoch_id)
+
     def committed_ids(self) -> list[int]:
         return sorted(int(x) for x in os.listdir(self.commit_dir) if x.isdigit())
 
@@ -191,10 +195,11 @@ class IdempotentParquetSink:
 
 
 def route_outputs(
-    sinks: Sequence[tuple[Column | None, IdempotentParquetSink]],
+    sinks: Sequence[tuple[Column | None, Callable[[DataFrame, int], None]]],
     mode: str = "switch",
 ) -> Callable[[DataFrame, int], None]:
-    """Multi-sink router for foreachBatch.
+    """Multi-sink router for foreachBatch; each sink is a foreachBatch
+    writer (an IdempotentParquetSink is one).
 
     mode='switch': each row goes to the FIRST matching predicate's sink
     (None predicate = catch-all) — output_switch.go:164 semantics.
@@ -211,20 +216,20 @@ def route_outputs(
         try:
             if mode == "fan_out":
                 for _, sink in sinks:
-                    sink.write_batch(batch_df, epoch_id)
+                    sink(batch_df, epoch_id)
                 return
             if mode == "round_robin":
                 lane = F.pmod(F.xxhash64(*batch_df.columns), F.lit(len(sinks)))
                 for i, (_, sink) in enumerate(sinks):
-                    sink.write_batch(batch_df.filter(lane == i), epoch_id)
+                    sink(batch_df.filter(lane == i), epoch_id)
                 return
             remaining = batch_df
             for pred, sink in sinks:
                 if pred is None:
-                    sink.write_batch(remaining, epoch_id)
+                    sink(remaining, epoch_id)
                     remaining = remaining.filter(F.lit(False))
                 else:
-                    sink.write_batch(remaining.filter(pred), epoch_id)
+                    sink(remaining.filter(pred), epoch_id)
                     remaining = remaining.filter(~F.coalesce(pred, F.lit(False)))
         finally:
             batch_df.unpersist()
@@ -278,11 +283,13 @@ def fallback_writer(
 
 
 def dlq_split_writer(
-    main: IdempotentParquetSink,
+    main: Callable[[DataFrame, int], None],
     dlq: IdempotentParquetSink,
     error_col: str = "error",
 ) -> Callable[[DataFrame, int], None]:
-    """reject_errored semantics: errored rows -> DLQ sink, rest -> main."""
+    """reject_errored semantics (output_reject_errored.go:19) around any
+    output: errored rows -> DLQ sink, the rest -> `main`, the output's
+    foreachBatch writer (an IdempotentParquetSink is one)."""
     return route_outputs([(F.col(error_col).isNotNull(), dlq), (None, main)])
 
 

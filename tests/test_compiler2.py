@@ -220,6 +220,36 @@ output:
         p.run_stream(spark, checkpoint=str(tmp_path / "wd_ck"))
 
 
+@pytest.mark.parametrize("output", [
+    "fallback: [OUT/a, OUT/b]",
+    'switch:\n    - {check: "this.dur_ms > 5000", path: OUT/a}\n  default: OUT/b',
+], ids=["fallback", "switch"])
+def test_output_dlq_wraps_any_output(spark, tmp_path, output):
+    """output.dlq is the reference's reject_errored around whatever output
+    the map names: errored rows land only in the DLQ, clean rows only in
+    the output's sinks."""
+    src = str(tmp_path / "src")
+    Pipeline.stage_clips(spark, src, 40)
+    p = compile_yaml(f"""
+input:
+  parquet: {{path: {src}}}
+pipeline:
+  processors:
+    - set_error: {{when: "this.sr_hz == 8000", message: "low sr"}}
+output:
+  {output.replace("OUT", str(tmp_path))}
+  dlq: {tmp_path}/dlq
+""")
+    q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))
+    assert q.awaitTermination(90) and q.exception() is None
+    dlq = IdempotentParquetSink(str(tmp_path / "dlq")).read(spark)
+    assert dlq.count() == 10  # sr cycle: every 4th clip is 8000
+    assert dlq.filter((F.col("sr_hz") != 8000) | F.col("error").isNull()).count() == 0
+    clean = [r for s in p._case_sinks if s.committed_ids() for r in s.read(spark).collect()]
+    assert len(clean) == 30
+    assert all(r.sr_hz != 8000 and r.error is None for r in clean)
+
+
 def test_generate_input_batch_and_stream(spark):
     p = compile_yaml(
         """

@@ -9,7 +9,7 @@ import io
 import os
 from contextlib import redirect_stdout
 
-from bento_spark.plans.lint import known_inputs, known_processors, lint_yaml
+from bento_spark.plans.lint import known_inputs, known_outputs, known_processors, lint_yaml
 
 
 def test_known_registries_track_compiler():
@@ -63,6 +63,27 @@ def test_lint_reports_an_input_map_naming_two_inputs():
     issues = lint_yaml("input:\n  zmq4: {urls: [a]}\n  zmq4n: {urls: [b]}\n")
     assert len(issues) == 1 and "names 2 inputs (zmq4, zmq4n)" in issues[0]
     assert lint_yaml("input:\n  parquet: {path: /x}\n  label: in\n") == []
+
+
+def test_lint_reads_the_output_registry():
+    """An output key that is neither an output nor a modifier, an output map
+    naming two outputs (the compiler's rule, zmq4n counting as zmq4) and
+    window + dlq without path are issues."""
+    assert {"path", "fallback", "kafka_franz", "zmq4n"} <= known_outputs()
+    assert lint_yaml("output:\n  pth: /x\n") == ["output: unknown key 'pth'"]
+    issues = lint_yaml("output:\n  path: /x\n  kafka: {addresses: [a], topic: t}\n")
+    assert len(issues) == 1 and "names 2 outputs (path, kafka)" in issues[0]
+    issues = lint_yaml("output:\n  zmq4: {urls: [a]}\n  zmq4n: {urls: [b]}\n")
+    assert len(issues) == 1 and "names 2 outputs (zmq4, zmq4n)" in issues[0]
+    # modifiers, and `default` next to switch, are not unknown keys
+    assert lint_yaml("output:\n  switch: [{check: 'true', path: /a}]\n  default: /b\n"
+                     "  dlq: /d\n  mode: append\n  trigger: 1s\n") == []
+    assert lint_yaml("output:\n  path: /o\n  default: /b\n") == [
+        "output: unknown key 'default'"]
+    window = "window: {type: tumbling, size: 10 seconds}\n"
+    issues = lint_yaml(window + "output:\n  fallback: [/a, /b]\n  dlq: /d\n")
+    assert len(issues) == 1 and "window + dlq requires output.path" in issues[0]
+    assert lint_yaml(window + "output:\n  path: /o\n  keys: [k]\n  dlq: /d\n") == []
 
 
 def test_lint_env_and_yaml_errors_are_issues_not_raises():

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import json
+import socket
+import sys
 import time
 import urllib.request
 
@@ -253,5 +255,57 @@ def test_concurrent_create_update_stats_races(spark, tmp_path):
         assert mgr.ids() == ["delta"]
         assert mgr.stats("delta")["active"]
         assert len(spark.streams.active) == n_active_before + 1
+    finally:
+        mgr.stop_all()
+
+
+def test_manager_starts_and_stops_the_input_bridge(spark, tmp_path):
+    """A manager stream on a spool-bridge input gets the bridge for its
+    life: the subprocess input's child runs and its lines reach the
+    output, and delete stops the child."""
+    lines = ["alpha", "beta", "gamma"]
+    conf = f"""
+input:
+  subprocess:
+    name: {sys.executable}
+    args: ["-c", "import time\\nfor w in {lines!r}: print(w, flush=True)\\ntime.sleep(120)"]
+    spool_dir: {tmp_path}/spool
+output:
+  path: {tmp_path}/out
+  trigger: 500 ms
+"""
+    mgr = StreamManager(spark, str(tmp_path / "cks"))
+    try:
+        mgr.create("sub", conf)
+        out = IdempotentParquetSink(str(tmp_path / "out"))
+        assert _wait(lambda: out.committed_ids() and out.read(spark).count() >= 3)
+        assert sorted(r.value for r in out.read(spark).collect()) == lines
+        child = mgr._streams["sub"].bridge._proc
+        assert child.poll() is None
+        mgr.delete("sub")
+        assert child.poll() is not None
+    finally:
+        mgr.stop_all()
+
+
+def test_delete_releases_the_http_server_output_port(spark, tmp_path):
+    """The http_server output's server lives as long as its stream: after
+    delete its port binds again."""
+    src = _stage(spark, tmp_path, "in", [(1, 10)])
+    conf = f"""
+input:
+  parquet: {{path: {src}, schema: "id int, v int"}}
+output:
+  http_server: {{address: "127.0.0.1:0"}}
+  trigger: 500 ms
+"""
+    mgr = StreamManager(spark, str(tmp_path / "cks"))
+    try:
+        mgr.create("srv", conf)
+        port = mgr._streams["srv"].pipeline._http_serve.port
+        time.sleep(0.1)  # the accept thread is blocked in accept()
+        mgr.delete("srv")
+        with socket.socket() as s:
+            s.bind(("127.0.0.1", port))
     finally:
         mgr.stop_all()
