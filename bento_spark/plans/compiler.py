@@ -11,7 +11,10 @@ owns the physical plan.
 Inputs come from the input registry (plans/inputs.py): one row per
 `input.<name>` section with its reader, whether it reads as a table, a
 stream or both, and, for spool-bridge inputs, the starter that
-`Pipeline.start_bridge()` runs. Outputs come from the output registry
+`Pipeline.start_bridge()` runs. Processors come from the processor
+registry (plans/processors.py): `_chain` looks up each processor's row,
+checks its required fields and calls its builder. Outputs come from the
+output registry
 (plans/outputs.py): `run_stream` builds the stream once, calls the row of
 the one output the `output` map names, and wraps its writer in the map's
 `dlq` (errored rows to the DLQ, on any output), then `input.read_until`,
@@ -61,14 +64,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bento_spark.audio.generate import clips_df
-from bento_spark.audio.udfs import with_audio_features, with_decoded_pcm, with_normalized_clip
-from bento_spark.functions.bloblang import compile_expr, compile_interpolated, compile_mapping
-from bento_spark.operators import errors as err_ops
-from bento_spark.operators import grouping, mapping as map_ops, skew
-from bento_spark.plans.inputs import (
-    INPUTS, cosmos_creds, gcs_creds, nats_addr, read_input, select_input,
-)
+from bento_spark.functions.bloblang import compile_expr
+from bento_spark.plans.inputs import INPUTS, aws_conn, gcs_creds, read_input, select_input
 from bento_spark.plans.outputs import OUTPUTS, select_output
+from bento_spark.plans.processors import ALIASES, CACHE_BACKENDS, PROCESSORS
 from bento_spark.streaming.checkpoint import local_checkpoint_commits
 from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed
@@ -169,8 +168,10 @@ class Pipeline:
         declared under top-level `cache_resources:` wins (the reference
         registers caches as named resources — config/schema.go's
         cache_resources section, 16 backends under internal/impl/*/
-        cache_*.go); an undeclared resource falls back to the historical
-        behavior of treating the string as a parquet KeyValueCache path.
+        cache_*.go); its backend is the first kind of CACHE_BACKENDS
+        (plans/processors.py) it names. An undeclared resource falls back
+        to the historical behavior of treating the string as a parquet
+        KeyValueCache path.
 
         In-process kinds (memory/lru/ttlru/noop) and multilevel compositions
         are memoized per Pipeline by label — a `set` in one processor and a
@@ -183,12 +184,21 @@ class Pipeline:
             return mem[resource]
         for r in self.conf.get("cache_resources") or []:
             if isinstance(r, dict) and r.get("label") == resource:
-                if any(k in r for k in ("memory", "lru", "ttlru", "ristretto")):
+                kind = next((k for k in CACHE_BACKENDS if k in r), None)
+                if kind is None:
+                    raise ValueError(
+                        f"cache resource {resource!r} needs a backend section "
+                        f"(one of {', '.join(CACHE_BACKENDS)})"
+                    )
+                d = r[kind] or {}
+                need = CACHE_BACKENDS[kind]
+                if need is not None and need not in d:
+                    raise ValueError(
+                        f"cache resource {resource!r}: {kind} backend needs `{need}`"
+                    )
+                if kind in ("memory", "lru", "ttlru", "ristretto"):
                     from bento_spark.operators.cache import MemoryCache
 
-                    kind = next(k for k in ("memory", "lru", "ttlru",
-                                            "ristretto") if k in r)
-                    o = r[kind] or {}
                     # reference defaults: lru cap 1000 (cache_lru.go:17),
                     # ttlru cap 1024 + default_ttl 5m (cache_ttlru.go:15-19),
                     # memory uncapped + default_ttl 5m (cache_memory.go);
@@ -197,24 +207,23 @@ class Pipeline:
                     # (the reference's frequency-based admission is an
                     # eviction heuristic, not an API contract), default_ttl
                     # optional like the reference's
-                    cap = o.get("cap", {"lru": 1000, "ttlru": 1024}.get(kind))
-                    ttl = o.get("default_ttl",
+                    cap = d.get("cap", {"lru": 1000, "ttlru": 1024}.get(kind))
+                    ttl = d.get("default_ttl",
                                 "5m" if kind in ("memory", "ttlru") else None)
                     mem[resource] = MemoryCache(
                         spark, cap=cap, default_ttl=ttl,
-                        init_values=o.get("init_values"),
+                        init_values=d.get("init_values"),
                     )
                     return mem[resource]
-                if "noop" in r:
+                if kind == "noop":
                     from bento_spark.operators.cache import NoopCache
 
                     mem[resource] = NoopCache(spark)
                     return mem[resource]
-                if "multilevel" in r:
+                if kind == "multilevel":
                     from bento_spark.operators.cache import MultilevelCache
 
-                    names = r["multilevel"] or []
-                    if resource in names:
+                    if resource in d:
                         raise ValueError(f"multilevel cache {resource!r} references itself")
                     # mutual cycles (A: multilevel [B], B: multilevel [A])
                     # would recurse to RecursionError — the memo entry only
@@ -227,44 +236,24 @@ class Pipeline:
                     mem[resource] = MultilevelCache(
                         [self._cache_backend(str(n), spark,
                                              _visiting=visiting | {resource})
-                         for n in names]
+                         for n in d]
                     )
                     return mem[resource]
-                if "file" in r:
-                    f = r["file"] or {}
-                    if "directory" not in f:
-                        raise ValueError(
-                            f"cache resource {resource!r}: file backend needs `directory`"
-                        )
+                if kind == "file":
                     return FileCache(
-                        spark, f["directory"], key_col=key_col,
-                        value_col=f.get("value_col", "value"), ttl=f.get("ttl"),
+                        spark, d["directory"], key_col=key_col,
+                        value_col=d.get("value_col", "value"), ttl=d.get("ttl"),
                     )
-                if "parquet" in r:
-                    p = r["parquet"] or {}
-                    if "path" not in p:
-                        raise ValueError(
-                            f"cache resource {resource!r}: parquet backend needs `path`"
-                        )
-                    return KeyValueCache(spark, p["path"], key_col=key_col)
-                if "sqlite" in r:
-                    s = r["sqlite"] or {}
-                    if "path" not in s:
-                        raise ValueError(
-                            f"cache resource {resource!r}: sqlite backend needs `path`"
-                        )
+                if kind == "parquet":
+                    return KeyValueCache(spark, d["path"], key_col=key_col)
+                if kind == "sqlite":
                     from bento_spark.operators.cache import SqliteCache
 
                     return SqliteCache(
-                        spark, s["path"], table=s.get("table", "bento_cache"),
-                        key_col=key_col, value_col=s.get("value_col", "value"),
+                        spark, d["path"], table=d.get("table", "bento_cache"),
+                        key_col=key_col, value_col=d.get("value_col", "value"),
                     )
-                if "mongodb" in r:
-                    d = r["mongodb"] or {}
-                    if "url" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: mongodb backend needs `url`"
-                        )
+                if kind == "mongodb":
                     from bento_spark.streaming.mongodb import MongoCache
 
                     return MongoCache(
@@ -274,65 +263,29 @@ class Pipeline:
                         value_field=d.get("value_field", "value"),
                         key_col=key_col, value_col=d.get("value_col", "value"),
                     )
-                if "aws_dynamodb" in r:
-                    d = r["aws_dynamodb"] or {}
-                    if "table" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: aws_dynamodb "
-                            "backend needs `table`"
-                        )
-                    import os as _os
-
+                if kind == "aws_dynamodb":
                     from bento_spark.streaming.dynamodb import DynamoCache
 
                     return DynamoCache(
-                        spark,
-                        str(d.get("endpoint")
-                            or f"https://dynamodb.{d.get('region', 'us-east-1')}.amazonaws.com"),
-                        str(d["table"]),
-                        str(d.get("access_key")
-                            or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                        str(d.get("secret_key")
-                            or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                        region=str(d.get("region", "us-east-1")),
+                        spark, table=str(d["table"]),
                         hash_key=str(d.get("hash_key", "key")),
                         data_key=str(d.get("data_key", "value")),
                         ttl_key=d.get("ttl_key"),
                         default_ttl=d.get("default_ttl"),
                         key_col=key_col, value_col=d.get("value_col", "value"),
+                        **aws_conn(d, "dynamodb"),
                     )
-                if "aws_s3" in r:
-                    d = r["aws_s3"] or {}
-                    if "bucket" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: aws_s3 backend "
-                            "needs `bucket`"
-                        )
-                    import os as _os
-
+                if kind == "aws_s3":
                     from bento_spark.streaming.s3 import S3Cache
 
                     return S3Cache(
-                        spark,
-                        str(d.get("endpoint")
-                            or f"https://s3.{d.get('region', 'us-east-1')}.amazonaws.com"),
-                        str(d["bucket"]),
-                        str(d.get("access_key")
-                            or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                        str(d.get("secret_key")
-                            or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                        region=str(d.get("region", "us-east-1")),
+                        spark, bucket=str(d["bucket"]),
                         content_type=str(d.get("content_type",
                                                "application/octet-stream")),
                         key_col=key_col, value_col=d.get("value_col", "value"),
+                        **aws_conn(d, "s3"),
                     )
-                if "gcp_cloud_storage" in r:
-                    d = r["gcp_cloud_storage"] or {}
-                    if "bucket" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: gcp_cloud_storage "
-                            "backend needs `bucket`"
-                        )
+                if kind == "gcp_cloud_storage":
                     from bento_spark.streaming.gcs import GcsCache
 
                     return GcsCache(
@@ -345,13 +298,7 @@ class Pipeline:
                                                "application/octet-stream")),
                         key_col=key_col, value_col=d.get("value_col", "value"),
                     )
-                if "couchbase" in r:
-                    d = r["couchbase"] or {}
-                    if "url" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: couchbase backend "
-                            "needs `url`"
-                        )
+                if kind == "couchbase":
                     from bento_spark.streaming.couchbase import CouchbaseCache
 
                     return CouchbaseCache(
@@ -360,16 +307,10 @@ class Pipeline:
                         key_col=key_col, value_col=d.get("value_col", "value"),
                         default_ttl=d.get("default_ttl"),
                     )
-                if "nats_kv" in r:
+                if kind == "nats_kv":
                     # KV bucket over JetStream subjects (nats/cache_kv.go):
                     # acknowledged publishes, Create via expected-last-seq 0,
                     # DIRECT.GET last_by_subj reads, DEL markers
-                    d = r["nats_kv"] or {}
-                    if "bucket" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: nats_kv backend "
-                            "needs `bucket`"
-                        )
                     from bento_spark.streaming.nats import NatsKvCache
 
                     url = (d.get("urls") or [d.get("url", "127.0.0.1:4222")])[0]
@@ -378,13 +319,7 @@ class Pipeline:
                         bucket=str(d["bucket"]), key_col=key_col,
                         value_col=d.get("value_col", "value"),
                     )
-                if "memcached" in r:
-                    d = r["memcached"] or {}
-                    if "addresses" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: memcached backend "
-                            "needs `addresses`"
-                        )
+                if kind == "memcached":
                     from bento_spark.streaming.memcached import MemcachedCache
 
                     return MemcachedCache(
@@ -393,27 +328,14 @@ class Pipeline:
                         prefix=d.get("prefix", ""),
                         default_ttl=d.get("default_ttl", "300s"),
                     )
-                if "redis" in r:
-                    d = r["redis"] or {}
-                    if "url" not in d:
-                        raise ValueError(
-                            f"cache resource {resource!r}: redis backend needs `url`"
-                        )
-                    from bento_spark.streaming.redis import RedisCache
+                # redis, the last kind
+                from bento_spark.streaming.redis import RedisCache
 
-                    return RedisCache(
-                        spark, d["url"], key_col=key_col,
-                        value_col=d.get("value_col", "value"),
-                        prefix=d.get("prefix", ""),
-                        default_ttl=d.get("default_ttl"),
-                    )
-                raise ValueError(
-                    f"cache resource {resource!r} needs a backend section "
-                    "(file: {directory: ...}, parquet: {path: ...}, "
-                    "sqlite: {path: ...}, redis: {url: ...}, "
-                    "memcached: {addresses: [...]}, "
-                    "memory/lru/ttlru: {cap, default_ttl, init_values}, "
-                    "noop: {}, or multilevel: [labels...])"
+                return RedisCache(
+                    spark, d["url"], key_col=key_col,
+                    value_col=d.get("value_col", "value"),
+                    prefix=d.get("prefix", ""),
+                    default_ttl=d.get("default_ttl"),
                 )
         return KeyValueCache(spark, resource, key_col=key_col)
 
@@ -591,996 +513,17 @@ class Pipeline:
                 if not isinstance(p, dict) or len(p) != 1:
                     raise ValueError(f"each processor must be a single-key map, got {p!r}")
                 name, opts = next(iter(p.items()))
-                df = self._apply_one(df, name, opts)
+                row = PROCESSORS.get(ALIASES.get(name, name))
+                if row is None:
+                    raise ValueError(f"unsupported processor: {name}")
+                o = {} if opts is None else opts
+                for f in row.required:
+                    if not isinstance(o, dict) or f not in o:
+                        raise ValueError(f"{name} processor: missing required field '{f}'")
+                df = row(self, df, o)
             return df
 
         return run
-
-    def _apply_one(self, df: DataFrame, name: str, opts: Any) -> DataFrame:
-        if name in ("mapping", "mutation", "bloblang"):
-            # mutation = mapping with in-place assignment semantics
-            # (processor_mutation.go:15) — identical compilation here since
-            # our assignments are withColumn either way; `bloblang` is the
-            # reference's older name for the same processor
-            return compile_mapping(opts).apply(df)
-        if name == "sleep":
-            return df  # throttling is a trigger/rate concern in Spark (below)
-        if name == "rate_limit":
-            # token-bucket rate limiting (processor_rate_limit.go:32,
-            # rate_limit_local.go:16) maps to source-side pacing in Spark:
-            # maxFilesPerTrigger/maxOffsetsPerTrigger + trigger interval.
-            # Recorded on the plan; run_stream maps `interval` to the
-            # processingTime trigger in continuous mode (see run_stream).
-            # `resource: label` references a shared rate_limit_resources
-            # entry (the reference processor's only field) — its interval
-            # becomes the pacing interval.
-            o = dict(opts or {})
-            if "resource" in o:
-                body = self._rate_limit_conf(str(o.pop("resource")))
-                o.setdefault(
-                    "interval",
-                    body.get("interval")
-                    or (body.get("redis") or {}).get("interval", "1s"),
-                )
-            self.conf.setdefault("_rate_limit", o)
-            return df
-        if name == "filter":
-            return df.filter(compile_expr(opts))
-        if name == "audio_decode":
-            return with_decoded_pcm(df)
-        if name == "image_resize":
-            # thumbnail stage: decode -> box-average/nearest resize ->
-            # deterministic re-encode (images/udfs.py)
-            from bento_spark.images.udfs import with_image_resize
-
-            o = opts or {}
-            return with_image_resize(
-                df, int(o["width"]), int(o["height"]),
-                col=o.get("column", "bytes"), out_col=o.get("out"),
-            )
-        if name == "image_features":
-            # second multimodal family (images/udfs.py): PNG decode +
-            # feature scalars, same Arrow contract as audio_features
-            from bento_spark.images.udfs import with_image_features
-
-            o = opts or {}
-            return with_image_features(
-                df, col=o.get("column", "bytes"),
-                keep_payload=bool(o.get("keep_payload", True)),
-            )
-        if name == "video_meta":
-            # third multimodal family (video/udfs.py): O(1) header-only
-            # metadata parse, no frame decode
-            from bento_spark.video.udfs import with_video_meta
-
-            o = opts or {}
-            return with_video_meta(df, col=o.get("column", "bytes"))
-        if name == "frame_sample":
-            # explode one row per sampled frame; frames are sliced out of
-            # the container decode-free (video/container.py)
-            from bento_spark.video.udfs import with_frame_sample
-
-            o = opts or {}
-            mf = o.get("max_frames")
-            return with_frame_sample(
-                df, int(o["every"]), col=o.get("column", "bytes"),
-                max_frames=None if mf is None else int(mf),
-                keep_payload=bool(o.get("keep_payload", False)),
-            )
-        if name == "video_features":
-            from bento_spark.video.udfs import with_video_features
-
-            o = opts or {}
-            return with_video_features(
-                df, col=o.get("column", "bytes"),
-                keep_payload=bool(o.get("keep_payload", True)),
-            )
-        if name == "audio_features":
-            o = opts or {}
-            # YAML pipelines keep pass-through semantics by default; set
-            # keep_payload: false to drop `bytes` from the UDF output (the
-            # scale-path default for agg-bound pipelines). run_stream's
-            # window+DLQ path runs this after its split on `error` and sets
-            # keep_payload: false itself on the window branch (the DLQ
-            # branch keeps the configured value).
-            return with_audio_features(df, keep_payload=bool(o.get("keep_payload", True)))
-        if name == "audio_normalize":
-            o = opts or {}
-            return with_normalized_clip(
-                df, target_sr=int(o.get("target_sr", 16000)), target_codec=o.get("codec", "pcm_s16le")
-            )
-        if name == "bounds_check":
-            o = opts or {}
-            return map_ops.bounds_check(
-                df, col=o.get("column", "bytes"), min_len=int(o.get("min", 0)),
-                max_len=int(o["max"]) if "max" in o else None,
-            )
-        if name == "dedupe":
-            o = opts or {}
-            wm = tuple(o["watermark"]) if "watermark" in o else None
-            return grouping.dedupe(df, o["keys"], watermark=wm)
-        if name == "set_error":
-            # message is an interpolated field (`${! expr }` segments,
-            # field/expression.go:19) so errors can carry per-row context
-            msg = compile_interpolated(str(opts.get("message", "error")))
-            return err_ops.set_error_when(df, compile_expr(opts["when"]), msg)
-        if name == "catch":
-            o = opts or {}
-            sets = o.get("set") or {}
-
-            def fix(d: DataFrame) -> DataFrame:
-                for colname, expr_src in sets.items():
-                    d = d.withColumn(colname, compile_expr(str(expr_src)))
-                return d
-
-            fixes = [fix] if sets else []
-            if "processors" in o:
-                fixes.append(self._chain(o["processors"]))
-            return err_ops.catch_(df, *fixes)
-        if name == "try":
-            # try: run children, already-errored rows short-circuit
-            # (processor_try.go:15)
-            return err_ops.try_(df, self._chain(opts["processors"]))
-        if name == "switch":
-            # processor-level switch: first matching case's chain processes
-            # the row (processor_switch.go:181-184)
-            from bento_spark.operators.switch import switch_transform
-
-            o = opts or {}
-            cases = [(compile_expr(c["check"]), self._chain(c.get("processors"))) for c in o["cases"]]
-            default = self._chain(o["default"]) if "default" in o else None
-            return switch_transform(df, cases, default=default)
-        if name == "group_by":
-            # ordered checks label rows; each group gets its own processor
-            # chain (processor_group_by.go:75,130-185)
-            o = opts or {}
-            checks = [(c["name"], compile_expr(c["check"])) for c in o["checks"]]
-            df = grouping.group_by(df, checks, default=o.get("default", "default"))
-            chains = {c["name"]: self._chain(c["processors"]) for c in o["checks"] if c.get("processors")}
-            return grouping.per_group(df, chains) if chains else df
-        if name == "group_by_value":
-            # the reference's group key IS an interpolated string
-            # (processor_group_by_value.go:21)
-            v = str(opts["value"])
-            key = compile_interpolated(v) if "${!" in v else compile_expr(v)
-            return grouping.group_by_value(df, key)
-        if name == "while":
-            # driver-side loop, bounded by max_loops (processor_while.go:20):
-            # re-run children while any row matches `check`. Batch-only —
-            # iteration count is data-dependent, which a streaming plan
-            # cannot express; localCheckpoint truncates lineage per round.
-            o = opts or {}
-            if df.isStreaming:
-                raise ValueError("while is batch-only (data-dependent iteration)")
-            cond = compile_expr(o["check"])
-            body = self._chain(o["processors"])
-            for _ in range(int(o.get("max_loops", 10))):
-                if df.filter(cond).isEmpty():
-                    break
-                df = body(df).localCheckpoint()
-            return df
-        if name == "select_parts":
-            from bento_spark.operators import batching
-
-            o = opts or {}
-            return batching.select_parts(df, o["key"], o["order_by"], o["indexes"])
-        if name == "insert_part":
-            from bento_spark.operators import batching
-
-            o = opts or {}
-            row = {k: compile_expr(str(v)) for k, v in o["row"].items()}
-            return batching.insert_part(df, o["key"], o["order_by"], int(o.get("index", -1)), row)
-        if name == "cache":
-            # per-batch get/set/add/delete on a named keyed state table
-            # (processor_cache.go:125; the key field is interpolated in the
-            # reference — here `key` names the column holding it)
-            o = opts or {}
-            cache = self._cache_backend(
-                o["resource"], df.sparkSession, key_col=o.get("key_col", "key")
-            )
-            op = o.get("operator", "get")
-            key = o["key"]
-            # ttl (seconds or duration string) + optional pinned now_ms for
-            # deterministic tests/oracles (processor_cache.go:150)
-            ttl, now_ms = o.get("ttl"), o.get("now_ms")
-            if op == "get":
-                return cache.get(df, on=key, now_ms=now_ms)
-            if df.isStreaming:
-                raise ValueError(f"cache {op} is batch-only in YAML pipelines; stream writes go through outputs")
-            cols = o.get("columns") or [c for c in df.columns if c != key]
-            if getattr(cache, "single_value", False) and op in ("set", "add"):
-                # one entry holds ONE string value (file: the content IS the
-                # value, cache_file.go; redis: SET k v) — a multi-column
-                # write has no encoding in these backends
-                if len(cols) != 1:
-                    raise ValueError(
-                        f"cache {o['resource']!r} stores a single value column; "
-                        f"got columns={cols} (pick one with `columns: [col]`)"
-                    )
-                sel = df.select(key, F.col(cols[0]).cast("string").alias(cache.value_col))
-                if key != cache.key_col:
-                    sel = sel.withColumnRenamed(key, cache.key_col)
-                if op == "set":
-                    cache.set(sel, ttl=ttl, now_ms=now_ms)
-                    return df
-                # op == "add" falls through to the shared rejection routing
-            else:
-                sel = df.select(key, *cols)
-                if key != cache.key_col:
-                    sel = sel.withColumnRenamed(key, cache.key_col)
-            if op == "set":
-                cache.set(sel, ttl=ttl, now_ms=now_ms)
-                return df
-            if op == "delete":
-                cache.delete(sel.select(cache.key_col))
-                return df
-            if op == "add":
-                # rejected keys (already present) error their rows, matching
-                # the reference's add-operator failure semantics
-                rejected = cache.add(sel, ttl=ttl, now_ms=now_ms).select(F.col(cache.key_col).alias(key)).withColumn(
-                    "_cache_dup", F.lit(True)
-                )
-                out = df.join(F.broadcast(rejected), key, "left")
-                out = err_ops.set_error_when(
-                    out, F.col("_cache_dup").isNotNull(), f"cache add: key exists in {o['resource']}"
-                )
-                return out.drop("_cache_dup")
-            raise ValueError(f"unsupported cache operator: {op}")
-        if name == "cached":
-            # memoize the child chain per key (processor_cached.go)
-            from bento_spark.operators.cache import KeyValueCache, cached
-
-            o = opts or {}
-            cache = self._cache_backend(o["resource"], df.sparkSession)
-            if not isinstance(cache, KeyValueCache):
-                raise ValueError(
-                    "cached memoization needs a parquet-backed cache resource "
-                    "(it stores arbitrary value columns; the file backend holds "
-                    "one string per key)"
-                )
-            return cached(cache, o["key_cols"], self._chain(o["processors"]),
-                          ttl=o.get("ttl"), now_ms=o.get("now_ms"))(df)
-        if name == "lookup":
-            # broadcast dimension enrichment — the reference's cache-get /
-            # sql_select lookup patterns as a real join (enrich.py); works on
-            # streams too (stream-static join, dimension read per micro-batch)
-            from bento_spark.operators.enrich import lookup_join
-
-            o = opts or {}
-            dim = read_input(df.sparkSession, o["right"], streaming=False)
-            # accept `keys:` (preferred — YAML 1.1 parses a bare `on:` key as
-            # boolean True, the classic Norway problem) but tolerate both
-            on = o.get("keys", o.get("on", o.get(True)))
-            if on is None:
-                raise ValueError("lookup needs `keys:` (join key or {left,right} pair)")
-            if isinstance(on, dict):  # differently-named keys: {left: l_k, right: r_k}
-                dim = dim.withColumnRenamed(on["right"], on["left"])
-                on = on["left"]
-            keys = on if isinstance(on, list) else [on]
-            if "columns" in o:
-                dim = dim.select(*keys, *o["columns"])
-            return lookup_join(df, dim, on=on, how=o.get("how", "left"),
-                               broadcast_dim=bool(o.get("broadcast", True)))
-        if name == "spread_skew":
-            o = opts or {}
-            return skew.spread_by_cost(df, cost_col=o.get("cost", "dur_ms"))
-        if name == "repartition":
-            o = opts or {}
-            if "by" in o:
-                return df.repartition(int(o.get("num", 0)) or df.sparkSession.sparkContext.defaultParallelism,
-                                      *[F.col(c) for c in o["by"]])
-            return df.repartition(int(o["num"]))
-        if name == "compress":
-            o = opts or {}
-            from bento_spark.operators.codec import compress_col
-
-            col = o.get("column", "bytes")
-            return df.withColumn(o.get("out", col), compress_col(col, o.get("algorithm", "gzip")))
-        if name == "decompress":
-            o = opts or {}
-            from bento_spark.operators.codec import decompress_col
-
-            col = o.get("column", "bytes")
-            out = o.get("out", col)
-            dfd = df.withColumn(out, decompress_col(col, o.get("algorithm", "gzip")))
-            return err_ops.set_error_when(dfd, F.col(out).isNull() & F.col(col).isNotNull(), "decompress failed")
-        if name == "grok":
-            from bento_spark.operators.codec import grok
-
-            return grok(df, opts["column"], opts["pattern"])
-        if name == "parse_log":
-            from bento_spark.operators.codec import parse_log
-
-            o = opts or {}
-            return parse_log(df, o.get("column", "line"), o.get("format", "apache_common"))
-        if name == "json_map":
-            from bento_spark.operators.codec import json_map
-
-            o = dict(opts)
-            col = o.pop("column")
-            outputs = {k: (v["path"], v.get("type", "string")) for k, v in o["fields"].items()}
-            return json_map(df, col, outputs)
-        if name == "json_schema":
-            from bento_spark.operators.codec import json_schema_check
-
-            return json_schema_check(df, opts["column"], [(f["field"], f["type"]) for f in opts["required"]])
-        if name == "archive":
-            from bento_spark.operators import batching
-
-            o = opts or {}
-            return batching.archive(
-                df, o["key"], o["order_by"], o["column"],
-                fmt=o.get("format", "lines"), out_col=o.get("out", "archived"),
-            )
-        if name == "unarchive":
-            from bento_spark.operators import batching
-
-            o = opts or {}
-            return batching.unarchive(df, o["column"], fmt=o.get("format", "lines"), out_col=o.get("out", "part"))
-        if name == "branch":
-            # expression-only branch: request_map/result_map of Bloblang
-            # exprs, optional skip_when (processor_branch.go:152)
-            from bento_spark.operators.branch import Branch, apply_branch_inline
-
-            o = opts or {}
-            br = Branch(
-                name=o.get("name", "branch"),
-                request_map={k: compile_expr(v) for k, v in (o.get("request_map") or {}).items()} or None,
-                processors=lambda d: d,
-                result_map={k: compile_expr(v) for k, v in o["result_map"].items()},
-                skip_when=compile_expr(o["skip_when"]) if "skip_when" in o else None,
-            )
-            return apply_branch_inline(df, br)
-        if name == "workflow":
-            from bento_spark.operators.branch import Branch, workflow as run_workflow
-
-            brs = []
-            for b in opts["branches"]:
-                brs.append(
-                    Branch(
-                        name=b["name"],
-                        request_map=None,
-                        processors=lambda d: d,
-                        result_map={k: compile_expr(v) for k, v in b["result_map"].items()},
-                        skip_when=compile_expr(b["skip_when"]) if "skip_when" in b else None,
-                        depends_on=b.get("depends_on", ()),
-                    )
-                )
-            return run_workflow(df, brs)
-        if name == "xml_extract":
-            from bento_spark.operators.codec import xml_extract
-
-            o = dict(opts)
-            col = o.pop("column")
-            fields = {k: (v["xpath"], v.get("type", "string")) for k, v in o["fields"].items()}
-            return xml_extract(df, col, fields)
-        if name == "parquet_encode":
-            from bento_spark.operators.codec import parquet_encode
-
-            o = opts or {}
-            return parquet_encode(df, o["group_by"], out_col=o.get("out", "parquet_blob"))
-        if name == "parquet_decode":
-            from bento_spark.operators.codec import parquet_decode
-
-            o = opts or {}
-            return parquet_decode(df, o.get("column", "parquet_blob"), o["schema"],
-                                  keep_cols=o.get("keep", ()))
-        if name == "msgpack_encode":
-            from bento_spark.operators.msgpack_codec import msgpack_encode
-
-            o = opts or {}
-            return msgpack_encode(df, o["columns"], out_col=o.get("out", "msgpack_blob"))
-        if name == "msgpack_decode":
-            from bento_spark.operators.msgpack_codec import msgpack_decode
-
-            o = opts or {}
-            return msgpack_decode(df, o.get("column", "msgpack_blob"), o["schema"],
-                                  keep_cols=o.get("keep", ()))
-        if name == "jmespath":
-            # full JMESPath query over a JSON column (processor_jmespath.go:65);
-            # the result document replaces the column (reference: replaces
-            # the message) unless `out` is given
-            from bento_spark.operators.codec import jmespath_map
-
-            o = opts or {}
-            return jmespath_map(df, o.get("column", "bytes"), o["query"], out_col=o.get("out"))
-        if name == "avro_decode":
-            # dependency-free spec codec by default (avro/scanner.go:46,
-            # processor.go:21 — see operators/avro_codec.py); `engine: spark`
-            # opts into the jar-gated from_avro (struct `out` column) for
-            # clusters that ship spark-avro
-            o = opts or {}
-            if o.get("engine") == "spark":
-                from bento_spark.operators.codec import avro_decode
-
-                return avro_decode(df, o.get("column", "value"), o["schema"],
-                                   out_col=o.get("out", "record"))
-            from bento_spark.operators.avro_codec import avro_record_decode
-
-            return avro_record_decode(df, o.get("column", "value"), o["schema"],
-                                      keep_cols=o.get("keep", ()))
-        if name == "avro_encode":
-            o = opts or {}
-            if o.get("engine") == "spark":
-                from bento_spark.operators.codec import avro_encode
-
-                return avro_encode(df, o["columns"], o["schema"], out_col=o.get("out", "avro_bytes"))
-            from bento_spark.operators.avro_codec import avro_record_encode
-
-            return avro_record_encode(df, o["columns"], o["schema"],
-                                      out_col=o.get("out", "avro_bytes"))
-        if name == "sentry_capture":
-            # sentry/processor_capture.go: interpolated message + tags,
-            # envelope POST per non-errored row, rows pass through
-            o = opts or {}
-            from bento_spark.operators.sentry import sentry_capture
-
-            work = df.withColumn("_sn_msg", compile_interpolated(str(o["message"])))
-            tag_cols = {}
-            for tname, expr in (o.get("tags") or {}).items():
-                col = f"_sn_tag_{tname}"
-                work = work.withColumn(col, compile_interpolated(str(expr)))
-                tag_cols[tname] = col
-            return sentry_capture(
-                work, str(o["dsn"]), "_sn_msg", tag_cols=tag_cols,
-                level=str(o.get("level", "ERROR")).lower(),
-                environment=o.get("environment"), release=o.get("release"),
-            )
-        if name == "azure_cosmosdb":
-            # azure/processor_cosmosdb.go over cosmosdb/docs.go: operation
-            # Create|Upsert|Read|Replace|Delete|Patch, per-row partition
-            # key (`partition_keys_map` compiled to a COLUMN), interpolated
-            # item_id; the document is the message JSON rendered JVM-side
-            o = opts or {}
-            from bento_spark.streaming.cosmosdb import cosmos_map
-
-            endpoint, key = cosmos_creds(o)
-            op = str(o.get("operation", "Create"))
-            work = df
-            pk_src = str(o.get("partition_keys_map", "root = null"))
-            pk_expr = re.sub(r"^\s*root\s*=\s*", "", pk_src)
-            work = work.withColumn(
-                "_cdb_pk", compile_expr(pk_expr).cast("string"))
-            id_col = None
-            if o.get("item_id"):
-                work = work.withColumn(
-                    "_cdb_id", compile_interpolated(str(o["item_id"])))
-                id_col = "_cdb_id"
-            doc_col = None
-            if op in ("Create", "Upsert", "Replace"):
-                data_cols = [c for c in df.columns if c != "error"]
-                work = work.withColumn("_cdb_doc", F.to_json(F.struct(*[
-                    F.col(c) for c in data_cols])))
-                doc_col = "_cdb_doc"
-            patches = [{"operation": str(p["operation"]),
-                        "path": str(p["path"]),
-                        **({"value": p["value"]} if "value" in p else {})}
-                       for p in (o.get("patch_operations") or [])]
-            out = cosmos_map(
-                work, endpoint, key, str(o["database"]), str(o["container"]),
-                "_cdb_pk", operation=op, doc_col=doc_col, id_col=id_col,
-                auto_id=bool(o.get("auto_id", True)),
-                patch_operations=patches or None,
-                patch_condition=(str(o["patch_condition"])
-                                 if o.get("patch_condition") else None),
-                out_col=str(o.get("out", "cosmosdb")))
-            return out
-        if name == "couchbase":
-            # couchbase/processor.go: interpolated id, Bloblang content,
-            # operation get|insert|remove|replace|upsert; KV binary
-            # protocol client (streaming/couchbase.py)
-            o = opts or {}
-            from bento_spark.streaming.couchbase import couchbase_map
-
-            work = df.withColumn("_cb_id", compile_interpolated(str(o["id"])))
-            content_col = None
-            if o.get("content") is not None:
-                work = work.withColumn("_cb_content", compile_expr(str(o["content"])))
-                # object/array content must be JSON on the wire (the gocb
-                # default transcoder) — a bare str() of a struct row would
-                # store Python repr; scalars pass through as strings
-                dt = work.schema["_cb_content"].dataType.simpleString()
-                if dt.startswith(("struct", "array", "map")):
-                    work = work.withColumn("_cb_content", F.to_json("_cb_content"))
-                else:
-                    work = work.withColumn("_cb_content",
-                                           F.col("_cb_content").cast("string"))
-                content_col = "_cb_content"
-            out = couchbase_map(
-                work, str(o.get("url", "127.0.0.1:11210")), "_cb_id",
-                operation=str(o.get("operation", "get")),
-                content_col=content_col, bucket=o.get("bucket"),
-                username=o.get("username"), password=o.get("password"),
-                out_col=o.get("out", "couchbase"),
-            )
-            return out.drop("_cb_id", "_cb_content")
-        if name == "schema_registry_encode":
-            # confluent/processor_schema_registry_encode.go: subject's
-            # latest Avro schema resolved at plan time, wire-format
-            # magic+id header prepended
-            o = opts or {}
-            from bento_spark.operators.schema_registry import schema_registry_encode
-
-            return schema_registry_encode(
-                df, str(o["url"]), str(o["subject"]), o["columns"],
-                out_col=o.get("out", "sr_blob"))
-        if name == "schema_registry_decode":
-            # confluent/processor_schema_registry_decode.go: per-row schema
-            # id, per-executor schema memo, standard-JSON output column
-            o = opts or {}
-            from bento_spark.operators.schema_registry import schema_registry_decode
-
-            keep = o.get("keep") or [c for c in df.columns
-                                     if c != o.get("column", "sr_blob")]
-            return schema_registry_decode(
-                df, str(o["url"]), blob_col=o.get("column", "sr_blob"),
-                out_col=o.get("out", "decoded"), keep_cols=keep)
-        if name == "unarchive_avro":
-            # `avro` scanner (scanner.go:46): a binary column of whole OCF
-            # files -> one row per record, standard-JSON content (schema
-            # carried per file)
-            from bento_spark.operators.avro_codec import avro_ocf_scan
-
-            o = opts or {}
-            return avro_ocf_scan(df, o.get("column", "content"), keep_cols=o.get("keep", ()),
-                                 out_col=o.get("out", "record_json"))
-        if name == "protobuf_decode":
-            # .proto SOURCE schemas (`proto` inline / `proto_file` path —
-            # processor_protobuf.go:66 import_paths model) use the
-            # dependency-free wire codec; `descriptor_file` keeps the
-            # jar-gated spark-protobuf path for compiled descriptor sets.
-            o = opts or {}
-            src = self._proto_source(o)
-            if src is not None:
-                from bento_spark.operators.protobuf_codec import protobuf_record_decode
-
-                keep = o.get("keep", [c for c in df.columns if c != o.get("column", "value")])
-                return protobuf_record_decode(df, o.get("column", "value"), src,
-                                              o["message"], keep_cols=keep)
-            from bento_spark.operators.codec import protobuf_decode
-
-            return protobuf_decode(df, o.get("column", "value"), o["message"], o["descriptor_file"],
-                                   out_col=o.get("out", "record"))
-        if name == "protobuf_encode":
-            o = opts or {}
-            src = self._proto_source(o)
-            if src is not None:
-                from bento_spark.operators.protobuf_codec import protobuf_record_encode
-
-                return protobuf_record_encode(df, o["columns"], src, o["message"],
-                                              out_col=o.get("out", "proto_bytes"))
-            from bento_spark.operators.codec import protobuf_encode
-
-            return protobuf_encode(df, o["columns"], o["message"], o["descriptor_file"],
-                                   out_col=o.get("out", "proto_bytes"))
-        if name == "match_sequence":
-            # CEP funnel: A then B ... within T per key (streaming/cep.py)
-            from bento_spark.streaming.cep import match_sequence, match_sequence_stream
-
-            o = opts or {}
-            steps = [compile_expr(str(s)) for s in o["steps"]]
-            common = dict(key=o["key"], ts_col=o.get("ts", "ts"), steps=steps,
-                          within=o["within"], step_names=o.get("names"))
-            if df.isStreaming:
-                return match_sequence_stream(df, watermark=o.get("watermark", "2 minutes"),
-                                             late_policy=o.get("late_policy", "eager"), **common)
-            return match_sequence(df, **common)
-        if name == "http":
-            # HTTP enrichment (processor_http.go:16): interpolated url/body,
-            # response into out (error column on failure); `rate_limit`
-            # names a shared resource capping request rate across all
-            # parallel components (processor_http.go:18)
-            from bento_spark.operators.http_enrich import http_enrich
-
-            o = opts or {}
-            return http_enrich(
-                df,
-                compile_interpolated(str(o["url"])),
-                out_col=o.get("out", "http_response"),
-                method=o.get("method", "GET"),
-                headers=o.get("headers"),
-                body=compile_interpolated(str(o["body"])) if "body" in o else None,
-                timeout=float(o.get("timeout", 5)),
-                retries=int(o.get("retries", 1)),
-                rate_limit=self._rate_limit_share(o.get("rate_limit"), df),
-            )
-        if name == "nats_request_reply":
-            # request-reply over core NATS (nats/processor_request_reply.go):
-            # interpolated subject, unique inbox reply-to per row, reply
-            # into `out` (timeout -> error column)
-            from bento_spark.streaming.cep import duration_ms
-            from bento_spark.streaming.nats import nats_request_reply_enrich
-
-            o = opts or {}
-            host, port = nats_addr(o)
-            return nats_request_reply_enrich(
-                df, host, port,
-                compile_interpolated(str(o["subject"])),
-                out_col=o.get("out", "nats_reply"),
-                timeout=duration_ms(str(o.get("timeout", "3s"))) / 1000.0,
-                inbox_prefix=str(o.get("inbox_prefix", "_INBOX")),
-            )
-        if name == "gcp_bigquery_select":
-            # gcp/processor_bigquery_select.go: the sql_raw amortization —
-            # args_mapping compiles to a Catalyst ARRAY column, one
-            # jobs.query per DISTINCT args tuple, JSON row arrays
-            # broadcast-joined back
-            from bento_spark.streaming.bigquery import bigquery_select_map
-
-            o = opts or {}
-            args_col = None
-            d = df
-            if o.get("args_mapping"):
-                if df.isStreaming:
-                    raise ValueError(
-                        "gcp_bigquery_select with args_mapping is batch-only "
-                        "(the per-distinct-tuple query runs driver-side); "
-                        "argless enrichment works in streams")
-                d = df.withColumn("_bq_args",
-                                  compile_expr(str(o["args_mapping"])))
-                args_col = "_bq_args"
-            out = bigquery_select_map(
-                d, str(o.get("endpoint") or "https://bigquery.googleapis.com"),
-                str(o["project"]), str(o["table"]),
-                [str(c) for c in (o.get("columns") or ["*"])], args_col,
-                where=str(o.get("where", "")),
-                prefix=str(o.get("prefix", "")),
-                suffix=str(o.get("suffix", "")),
-                credentials=gcs_creds(o),
-                result_col=str(o.get("result_col", "bigquery_rows")))
-            return out.drop("_bq_args") if args_col else out
-        if name == "sql_raw":
-            # arbitrary statement with placeholder binds
-            # (processor_sql_raw.go:30-80): args_mapping compiles to a
-            # Catalyst ARRAY column; SELECTs amortize one query per
-            # DISTINCT args tuple + broadcast join; exec_only runs one
-            # executemany transaction per batch (sqlite DB-API path —
-            # server DBs route to sql_select/sql_insert over JDBC)
-            from bento_spark.operators.sql_raw import sql_raw_processor
-
-            o = opts or {}
-            args_col = None
-            d = df
-            if o.get("args_mapping"):
-                d = df.withColumn("_sql_args", compile_expr(str(o["args_mapping"])))
-                args_col = "_sql_args"
-            out = sql_raw_processor(
-                d, str(o.get("driver", "sqlite")), str(o["dsn"]),
-                str(o["query"]), args_col=args_col,
-                exec_only=bool(o.get("exec_only", False)),
-                result_col=str(o.get("result_col", "sql_rows")),
-            )
-            return out.drop("_sql_args") if args_col else out
-        if name == "mongodb":
-            # find-one enrichment (mongodb/processor.go): filter_map fields
-            # compile to a JVM-side to_json struct; the matched document
-            # lands as a JSON string column (NULL on miss)
-            from bento_spark.streaming.mongodb import mongodb_find_one
-
-            o = opts or {}
-            if str(o.get("operation", "find-one")) != "find-one":
-                raise ValueError(
-                    "mongodb processor supports operation: find-one "
-                    "(write operations belong on output.mongodb)"
-                )
-            flt = o.get("filter_map") or {}
-            if not flt:
-                raise ValueError("mongodb processor requires `filter_map`")
-            df = df.withColumn(
-                "_mongo_filter",
-                F.to_json(F.struct(*[
-                    compile_expr(str(v)).alias(str(k)) for k, v in flt.items()
-                ])),
-            )
-            return mongodb_find_one(
-                df, str(o["url"]), str(o.get("database", "bento")),
-                str(o["collection"]), "_mongo_filter",
-                out_col=o.get("out_col", "mongodb"),
-            ).drop("_mongo_filter")
-        if name == "nats_object_store":
-            # get/put against an object-store bucket (nats/processor_os.go)
-            from bento_spark.streaming.nats import nats_os_map
-
-            o = opts or {}
-            host, port = nats_addr(o)
-            d = df.withColumn("_os_name",
-                              compile_interpolated(str(o["object_name"])))
-            out = nats_os_map(
-                d, host, port, str(o["bucket"]),
-                str(o.get("operation", "get")), name_col="_os_name",
-                value_col=o.get("value_col"),
-                out_col=str(o.get("out", "nats_os")),
-                chunk_size=int(o.get("chunk_size", 128 * 1024)))
-            return out.drop("_os_name")
-        if name == "redis":
-            # one command per row (redis/processor.go): `command`
-            # interpolates, args_mapping -> ARRAY column; legacy
-            # `operator:`+`key:` form maps onto the same path. Batch
-            # pipelines as one round trip per partition.
-            from bento_spark.streaming.redis import (
-                parse_redis_url,
-                redis_command_map,
-            )
-
-            o = opts or {}
-            host, port = parse_redis_url(
-                str(o.get("url") or o.get("address", "127.0.0.1:6379")))
-            d = df
-            if o.get("operator"):
-                if o.get("args_mapping"):
-                    raise ValueError(
-                        "redis processor: args_mapping is invalid with an "
-                        "operator set (processor.go config lint)")
-                op = str(o["operator"])
-                if op not in ("keys", "scard", "sadd", "incrby"):
-                    raise ValueError(f"redis processor: unknown operator {op!r}")
-                key = compile_interpolated(str(o.get("key", "")))
-                content = F.col(o.get("column", "value")).cast("string")
-                args = (F.array(key, content) if op in ("sadd", "incrby")
-                        else F.array(key))
-                d = (d.withColumn("_redis_cmd", F.lit(op))
-                       .withColumn("_redis_args", args))
-            else:
-                if not o.get("command"):
-                    raise ValueError(
-                        "redis processor: one of `operator` or `command` "
-                        "must be specified")
-                d = d.withColumn("_redis_cmd",
-                                 compile_interpolated(str(o["command"])))
-                if o.get("args_mapping"):
-                    d = d.withColumn("_redis_args",
-                                     compile_expr(str(o["args_mapping"])))
-            args_col = "_redis_args" if "_redis_args" in d.columns else None
-            out = redis_command_map(
-                d, host, port, "_redis_cmd", args_col=args_col,
-                out_col=str(o.get("out", "redis")),
-                retries=int(o.get("retries", 3)))
-            return out.drop("_redis_cmd", *([args_col] if args_col else []))
-        if name == "redis_script":
-            # Lua script per row via the script-cache protocol
-            # (redis/script_processor.go): EVALSHA, -NOSCRIPT rows retry
-            # as EVAL with the body
-            from bento_spark.streaming.redis import (
-                parse_redis_url,
-                redis_script_map,
-            )
-
-            o = opts or {}
-            host, port = parse_redis_url(
-                str(o.get("url") or o.get("address", "127.0.0.1:6379")))
-            d = df
-            keys_col = args_col = None
-            if o.get("keys_mapping"):
-                d = d.withColumn("_rs_keys", compile_expr(str(o["keys_mapping"])))
-                keys_col = "_rs_keys"
-            if o.get("args_mapping"):
-                d = d.withColumn("_rs_args", compile_expr(str(o["args_mapping"])))
-                args_col = "_rs_args"
-            out = redis_script_map(
-                d, host, port, str(o["script"]),
-                keys_col=keys_col, args_col=args_col,
-                out_col=str(o.get("out", "redis")),
-                retries=int(o.get("retries", 3)))
-            return out.drop(*[c for c in (keys_col, args_col) if c])
-        if name == "aws_lambda":
-            # invoke a Lambda per message (aws/processor_lambda.go:20):
-            # result replaces the payload column; function errors set
-            # lambda_function_error; transport failures flag the error
-            # column with content unchanged
-            import os as _os
-
-            from bento_spark.streaming.cep import duration_ms
-            from bento_spark.streaming.lambda_proc import lambda_map
-
-            o = opts or {}
-            region = str(o.get("region", "us-east-1"))
-            return lambda_map(
-                df,
-                endpoint=str(o.get("endpoint")
-                             or f"https://lambda.{region}.amazonaws.com"),
-                access_key=str(o.get("access_key")
-                               or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                secret_key=str(o.get("secret_key")
-                               or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                function=str(o["function"]),
-                payload_col=str(o.get("column", "value")),
-                region=region,
-                retries=int(o.get("retries", 3)),
-                # reference-style duration strings ('5s') parse via
-                # duration_ms (ADVICE r05); bare YAML numbers keep the old
-                # seconds semantics
-                timeout=(
-                    float(o["timeout"])
-                    if isinstance(o.get("timeout"), (int, float))
-                    else duration_ms(str(o.get("timeout", "5s"))) / 1000.0
-                ),
-            )
-        if name == "aws_dynamodb_partiql":
-            # PartiQL per message over BatchExecuteStatement
-            # (aws/processor_dynamodb_partiql.go:106); args_mapping
-            # compiles to a Catalyst ARRAY column
-            import os as _os
-
-            from bento_spark.streaming.dynamodb import dynamodb_partiql
-
-            o = opts or {}
-            region = str(o.get("region", "us-east-1"))
-            d, args_col = df, None
-            if o.get("args_mapping"):
-                d = df.withColumn("_pq_args", compile_expr(str(o["args_mapping"])))
-                args_col = "_pq_args"
-            out = dynamodb_partiql(
-                d,
-                endpoint=str(o.get("endpoint")
-                             or f"https://dynamodb.{region}.amazonaws.com"),
-                access_key=str(o.get("access_key")
-                               or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                secret_key=str(o.get("secret_key")
-                               or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                query=str(o["query"]),
-                args_col=args_col,
-                region=region,
-                result_col=str(o.get("result_col", "partiql")),
-            )
-            return out.drop("_pq_args") if args_col else out
-        if name == "aws_s3":
-            # GetObject per message with interpolated bucket/key
-            # (aws/processor_s3.go:26); body lands in out_col,
-            # delete_objects removes only successfully fetched objects
-            import os as _os
-
-            from bento_spark.streaming.s3 import s3_get_map
-
-            o = opts or {}
-            region = str(o.get("region", "us-east-1"))
-            d = (df.withColumn("_s3_bucket", compile_interpolated(str(o["bucket"])))
-                   .withColumn("_s3_key", compile_interpolated(str(o["key"]))))
-            out = s3_get_map(
-                d,
-                endpoint=str(o.get("endpoint")
-                             or f"https://s3.{region}.amazonaws.com"),
-                access_key=str(o.get("access_key")
-                               or _os.environ.get("AWS_ACCESS_KEY_ID", "")),
-                secret_key=str(o.get("secret_key")
-                               or _os.environ.get("AWS_SECRET_ACCESS_KEY", "")),
-                bucket_col="_s3_bucket", key_col="_s3_key",
-                region=region,
-                out_col=str(o.get("out_col", "s3_object")),
-                delete_objects=bool(o.get("delete_objects", False)),
-            )
-            return out.drop("_s3_bucket", "_s3_key")
-        if name == "awk":
-            # per-message AWK run over the system binary with the
-            # reference's custom json_*/metadata_*/timestamp functions
-            # (awk/processor.go; codecs none|text|json) — slow path like
-            # `command`, a fork per message
-            from bento_spark.operators.awk_proc import awk_map
-
-            o = opts or {}
-            return awk_map(
-                df,
-                o["program"],
-                codec=o.get("codec", "text"),
-                col=o.get("column", "text"),
-                meta_cols=o.get("meta_columns"),
-                binary=o.get("binary", "awk"),
-                timeout=float(o.get("timeout", 10)),
-                now_unix=o.get("now_unix"),
-            )
-        if name == "opensnowcat":
-            # Snowplow/OpenSnowcat enriched-TSV events: drop filters, PII
-            # transforms, TSV->flattened-JSON (opensnowcat/
-            # processor_opensnowcat.go) — filters/transforms compile to
-            # codegen over the split line
-            from bento_spark.operators.opensnowcat import opensnowcat
-
-            o = opts or {}
-            flt = o.get("filters") or {}
-            return opensnowcat(
-                df,
-                col=o.get("column", "line"),
-                output_format=o.get("output_format", "tsv"),
-                drop=flt.get("drop"),
-                transform=flt.get("transform"),
-            )
-        if name == "subprocess":
-            # long-lived child per partition, lockstep line protocol
-            # (processor_subprocess.go:47-66); stderr -> error column
-            from bento_spark.operators.subprocess_proc import subprocess_map
-
-            o = opts or {}
-            return subprocess_map(
-                df,
-                o["name"],
-                args=[str(a) for a in o.get("args", [])],
-                col=o.get("column", "text"),
-                codec_send=o.get("codec_send", "lines"),
-                codec_recv=o.get("codec_recv", "lines"),
-                timeout=float(o.get("timeout", 10)),
-                rate_limit=self._rate_limit_share(o.get("rate_limit"), df),
-            )
-        if name == "command":
-            # one exec per message (processor_command.go:17); args_mapping
-            # is a Bloblang expression resolving to array<string> per row
-            from bento_spark.operators.subprocess_proc import command_map
-
-            o = opts or {}
-            args = (
-                compile_expr(str(o["args_mapping"]))
-                if "args_mapping" in o
-                else [str(a) for a in o.get("args", [])]
-            )
-            return command_map(
-                df,
-                o["name"],
-                args=args,
-                col=o.get("column", "text"),
-                timeout=float(o.get("timeout", 10)),
-                rate_limit=self._rate_limit_share(o.get("rate_limit"), df),
-            )
-        if name == "unarchive_tar":
-            from bento_spark.operators.scanners import unarchive_tar
-
-            o = opts or {}
-            return unarchive_tar(df, o.get("column", "content"), keep_cols=o.get("keep", ()),
-                                 fmt=o.get("format", "tar"))
-        if name == "tar_encode":
-            from bento_spark.operators.scanners import tar_encode
-
-            o = opts or {}
-            return tar_encode(df, o["group_by"], o["name"], o["payload"],
-                              out_col=o.get("out", "tar_blob"))
-        if name == "chunker":
-            from bento_spark.operators.scanners import chunker
-
-            o = opts or {}
-            return chunker(df, o["column"], int(o["size"]), out_col=o.get("out", "chunk"))
-        if name == "re_split":
-            from bento_spark.operators.scanners import re_split
-
-            o = opts or {}
-            return re_split(df, o["column"], o["pattern"], out_col=o.get("out", "part"))
-        if name == "skip_bom":
-            from bento_spark.operators.scanners import skip_bom
-
-            return skip_bom(df, (opts or {}).get("column", "line"))
-        if name == "metric":
-            # custom metrics (processor_metric.go:22): counter / counter_by /
-            # gauge over message fields. Spark-first: df.observe() — the
-            # native Observation API evaluates the aggregate DURING the
-            # existing pass (no extra job) and surfaces per-micro-batch
-            # values in QueryProgress.observedMetrics, which the metrics
-            # listener collects (observed_totals()).
-            o = opts or {}
-            if "name" not in o:
-                raise ValueError("metric requires `name`")
-            mtype = o.get("type", "counter")
-            val = compile_expr(str(o["value"])) if "value" in o else None
-            cond = compile_expr(str(o["check"])) if "check" in o else None
-            if mtype == "counter":
-                agg = F.count(F.when(cond, 1)) if cond is not None else F.count(F.lit(1))
-            elif mtype == "counter_by":
-                if val is None:
-                    raise ValueError("metric counter_by requires `value`")
-                agg = F.sum(F.when(cond, val) if cond is not None else val)
-            elif mtype == "gauge":
-                if val is None:
-                    raise ValueError("metric gauge requires `value`")
-                if "order_by" in o:
-                    # deterministic gauge: value of the max-order row
-                    agg = F.max_by(val, compile_expr(str(o["order_by"])))
-                else:
-                    # no total order exists inside a distributed micro-batch
-                    # (the reference processes sequentially): F.last is
-                    # partition-merge-order dependent — pass `order_by`
-                    # (e.g. the event-time column) for a deterministic gauge
-                    agg = F.last(val, ignorenulls=True)
-            else:
-                raise ValueError(f"unsupported metric type {mtype!r} (counter/counter_by/gauge)")
-            return df.observe(str(o["name"]), agg.alias(mtype))
-        if name in ("noop", "log"):
-            return df  # log side effects live in the metrics listener
-        raise ValueError(f"unsupported processor: {name}")
 
     # ------------------------------------------------------------------- join
     def _apply_join(self, df: DataFrame, spark: SparkSession, streaming: bool) -> DataFrame:
@@ -1826,9 +769,14 @@ class Pipeline:
         return self._apply_window(rows)
 
     def close(self) -> None:
-        """Release what the output holds on the driver: the `close()` its
-        writer carries (the subprocess output's child, the http_server
-        output's server). Call it once the queries have stopped."""
+        """Stop the side DLQ queries run_stream started (window +
+        output.dlq, error_handling reject + dlq) and release what the output
+        holds on the driver: the `close()` its writer carries (the
+        subprocess output's child, the http_server output's server). Call
+        it once the main query has stopped."""
+        for side in (self._dlq_query, self._eh_dlq_query):
+            if side is not None:
+                side.stop()  # returns once the query's stream thread has ended
         close, self._close_output = self._close_output, None
         if close is not None:
             close()

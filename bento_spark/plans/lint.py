@@ -9,22 +9,21 @@ fields, enum values, parseable durations, resolvable `${VAR}`
 interpolations — and leaves expression-level validation to compile time
 (Bloblang compiles to Catalyst Columns, which need a session).
 
-Input and output names come from the input and output registries
-(plans/inputs.py, plans/outputs.py), the tables the compiler reads; an
-input or output map naming two of them is reported with the compiler's own
-error. An `output` key that is neither an output nor a modifier (`keys`,
-`dlq`, `mode`, `trigger`, `default` next to `switch`) is reported, and so
-is `window` + `dlq` without `path`. Processor names are extracted from the
-compiler source (the `name == "..."` dispatch patterns). Either way a new
-component is lintable the moment it is implemented — no second list to
-forget to update.
+Input, output and processor names come from the input, output and
+processor registries (plans/inputs.py, plans/outputs.py,
+plans/processors.py), the tables the compiler reads; an input or output map
+naming two of them is reported with the compiler's own error. An `output`
+key that is neither an output nor a modifier (`keys`, `dlq`, `mode`,
+`trigger`, `default` next to `switch`) is reported, and so is `window` +
+`dlq` without `path`. A processor's required fields, and the processor
+lists nested in its options (`switch` cases and default, `group_by` checks,
+`try`/`catch`/`while`/`cached` bodies), come from its registry row; cache
+backends and their required field from the same module's CACHE_BACKENDS.
+Either way a new component is lintable the moment it is registered — no
+second list to forget to update.
 """
 
 from __future__ import annotations
-
-import inspect
-import re
-from functools import lru_cache
 
 import yaml
 
@@ -37,45 +36,11 @@ _TOP_SECTIONS = {
     "metrics", "logger",
 }
 
-# sections handled by the compiler but not via the `name == "..."` pattern
-_EXTRA_PROCESSORS = {"mapping", "mutation", "bloblang"}
 
-_REQUIRED = {
-    # processor -> keys that must be present in its opts
-    "cache": ("resource", "key"),
-    "cached": ("resource", "key_cols", "processors"),
-    "lookup": ("right", "keys"),
-    "match_sequence": ("key", "within", "steps"),
-    "dedupe": ("keys",),
-    "set_error": ("when",),
-    "subprocess": ("name",),
-    "command": ("name",),
-    "http": ("url",),
-    "sql_raw": ("dsn", "query"),
-    "msgpack_decode": ("schema",),
-    "avro_decode": ("schema",),
-    "jmespath": ("query",),
-    "redis_script": ("script",),
-    "aws_lambda": ("function",),
-    "aws_dynamodb_partiql": ("query",),
-    "aws_s3": ("bucket", "key"),
-    "image_resize": ("width", "height"),
-    "frame_sample": ("every",),
-    "avro_encode": ("columns", "schema"),
-    "protobuf_decode": ("message",),
-    "protobuf_encode": ("columns", "message"),
-}
-
-
-@lru_cache(maxsize=1)
 def known_processors() -> frozenset[str]:
-    from bento_spark.plans import compiler
+    from bento_spark.plans.processors import ALIASES, PROCESSORS
 
-    src = inspect.getsource(compiler.Pipeline._apply_one)
-    names = set(re.findall(r'name == "(\w+)"', src))
-    for m in re.findall(r'name in \(([^)]*)\)', src):
-        names |= set(re.findall(r'"(\w+)"', m))
-    return frozenset(names) | _EXTRA_PROCESSORS
+    return frozenset(PROCESSORS) | frozenset(ALIASES)
 
 
 def known_inputs() -> frozenset[str]:
@@ -118,24 +83,41 @@ def _lint_duration(path: str, val, issues: list[str]) -> None:
         issues.append(f"{path}: bad duration {val!r} (e.g. '500 ms', '10 seconds')")
 
 
+def _nested_lists(opts: dict, position: str):
+    """(path, list) of each processor list at a row's nested position:
+    `key` names one list, `key[].sub` one list in each map of `key`."""
+    key, _, sub = position.partition("[].")
+    if not sub:
+        yield key, opts.get(key)
+        return
+    items = opts.get(key)
+    for j, item in enumerate(items if isinstance(items, list) else []):
+        if isinstance(item, dict):
+            yield f"{key}[{j}].{sub}", item.get(sub)
+
+
 def _lint_processor(i: int, p, issues: list[str], path: str = "pipeline.processors") -> None:
+    from bento_spark.plans.processors import ALIASES, PROCESSORS
+
     if not isinstance(p, dict) or len(p) != 1:
         issues.append(f"{path}[{i}]: each processor must be a single-key map, got {p!r}")
         return
     name, opts = next(iter(p.items()))
-    if name not in known_processors():
+    row = PROCESSORS.get(ALIASES.get(name, name))
+    if row is None:
         issues.append(f"{path}[{i}]: unknown processor {name!r}")
         return
-    for req in _REQUIRED.get(name, ()):
+    for req in row.required:
         if not isinstance(opts, dict) or req not in opts:
             issues.append(f"{path}[{i}] ({name}): missing required field {req!r}")
     if isinstance(opts, dict):
         for k, v in opts.items():
             if k in _DUR_KEYS and v is not None:
                 _lint_duration(f"{path}[{i}] ({name}).{k}", v, issues)
-        for nested in ("processors",):
-            for j, child in enumerate(opts.get(nested) or []):
-                _lint_processor(j, child, issues, path=f"{path}[{i}].{name}.{nested}")
+        for position in row.nested:
+            for sub, children in _nested_lists(opts, position):
+                for j, child in enumerate(children or []):
+                    _lint_processor(j, child, issues, path=f"{path}[{i}].{name}.{sub}")
 
 
 def lint_yaml(src: str, env: dict | None = None) -> list[str]:
@@ -143,6 +125,7 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
     Raises nothing — every problem becomes an issue string, like the
     reference's lint output."""
     from bento_spark.plans.compiler import interpolate_env
+    from bento_spark.plans.processors import CACHE_BACKENDS
 
     issues: list[str] = []
     try:
@@ -206,69 +189,43 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
         if not isinstance(r, dict) or not r.get("label"):
             issues.append(f"cache_resources[{i}]: needs a 'label'")
             continue
-        if "file" in r:
-            if not isinstance(r["file"], dict) or "directory" not in r["file"]:
-                issues.append(f"cache_resources[{i}] (file): missing 'directory'")
-            elif r["file"].get("ttl") is not None:
-                _lint_duration(f"cache_resources[{i}].file.ttl", r["file"]["ttl"], issues)
-        elif "parquet" in r:
-            if not isinstance(r["parquet"], dict) or "path" not in r["parquet"]:
-                issues.append(f"cache_resources[{i}] (parquet): missing 'path'")
-        elif "sqlite" in r:
-            if not isinstance(r["sqlite"], dict) or "path" not in r["sqlite"]:
-                issues.append(f"cache_resources[{i}] (sqlite): missing 'path'")
-        elif "mongodb" in r:
-            if not isinstance(r["mongodb"], dict) or "url" not in r["mongodb"]:
-                issues.append(f"cache_resources[{i}] (mongodb): missing 'url'")
-        elif "redis" in r:
-            if not isinstance(r["redis"], dict) or "url" not in r["redis"]:
-                issues.append(f"cache_resources[{i}] (redis): missing 'url'")
-            elif r["redis"].get("default_ttl") is not None:
-                _lint_duration(
-                    f"cache_resources[{i}].redis.default_ttl",
-                    r["redis"]["default_ttl"], issues,
-                )
-        elif any(k in r for k in ("memory", "lru", "ttlru")):
-            kind = "memory" if "memory" in r else ("lru" if "lru" in r else "ttlru")
-            o = r[kind] or {}
-            if not isinstance(o, dict):
-                issues.append(f"cache_resources[{i}] ({kind}): options must be a mapping")
-            else:
-                if o.get("cap") is not None and not isinstance(o["cap"], int):
-                    issues.append(f"cache_resources[{i}] ({kind}): 'cap' must be an integer")
-                if o.get("default_ttl") is not None:
-                    _lint_duration(
-                        f"cache_resources[{i}].{kind}.default_ttl", o["default_ttl"], issues
-                    )
-                if o.get("init_values") is not None and not isinstance(o["init_values"], dict):
-                    issues.append(
-                        f"cache_resources[{i}] ({kind}): 'init_values' must be a mapping"
-                    )
-        elif "noop" in r:
-            pass
-        elif "multilevel" in r:
+        kind = next((k for k in CACHE_BACKENDS if k in r), None)
+        if kind is None:
+            issues.append(f"cache_resources[{i}]: needs a backend (one of {', '.join(CACHE_BACKENDS)})")
+            continue
+        if kind == "multilevel":
             levels = r["multilevel"]
             if not isinstance(levels, list) or len(levels) < 2:
                 issues.append(
                     f"cache_resources[{i}] (multilevel): needs a list of >=2 cache labels"
                 )
-            else:
-                known = {
-                    c.get("label") for c in crs or [] if isinstance(c, dict)
-                }
-                for n in levels:
-                    if n == r.get("label"):
-                        issues.append(f"cache_resources[{i}] (multilevel): references itself")
-                    elif n not in known:
-                        issues.append(
-                            f"cache_resources[{i}] (multilevel): unknown cache label {n!r}"
-                        )
-        else:
-            issues.append(
-                f"cache_resources[{i}]: needs a backend (file: {{directory}}, "
-                "parquet: {path}, sqlite: {path}, redis: {url}, "
-                "memory/lru/ttlru: {...}, noop: {}, or multilevel: [labels])"
-            )
+                continue
+            known = {
+                c.get("label") for c in crs or [] if isinstance(c, dict)
+            }
+            for n in levels:
+                if n == r.get("label"):
+                    issues.append(f"cache_resources[{i}] (multilevel): references itself")
+                elif n not in known:
+                    issues.append(
+                        f"cache_resources[{i}] (multilevel): unknown cache label {n!r}"
+                    )
+            continue
+        o = r[kind] or {}
+        if not isinstance(o, dict):
+            issues.append(f"cache_resources[{i}] ({kind}): options must be a mapping")
+            continue
+        need = CACHE_BACKENDS[kind]
+        if need is not None and need not in o:
+            issues.append(f"cache_resources[{i}] ({kind}): missing {need!r}")
+        if o.get("cap") is not None and not isinstance(o["cap"], int):
+            issues.append(f"cache_resources[{i}] ({kind}): 'cap' must be an integer")
+        for k in ("ttl", "default_ttl"):
+            # a number is seconds; a string is a duration
+            if isinstance(o.get(k), str):
+                _lint_duration(f"cache_resources[{i}].{kind}.{k}", o[k], issues)
+        if o.get("init_values") is not None and not isinstance(o["init_values"], dict):
+            issues.append(f"cache_resources[{i}] ({kind}): 'init_values' must be a mapping")
 
     rls = conf.get("rate_limit_resources")
     if rls is not None and not isinstance(rls, list):

@@ -76,12 +76,14 @@ ALIASES = {"zmq4n": "zmq4"}
 MODIFIERS = frozenset({"keys", "dlq", "mode", "trigger"})
 
 
-def _opt_col(df: DataFrame, name: str, template) -> tuple[DataFrame, str | None]:
-    """(df with column `name` = the interpolated template, name), or
-    (df, None) when the optional template is unset."""
+def opt_col(df: DataFrame, name: str, template,
+            compile: Callable[[str], Column] = compile_interpolated) -> tuple[DataFrame, str | None]:
+    """(df with column `name` = the compiled template, name), or (df, None)
+    when the optional template is unset. Templates are interpolated strings
+    unless `compile` says otherwise (compile_expr for an `args_mapping`)."""
     if not template:
         return df, None
-    return df.withColumn(name, compile_interpolated(str(template))), name
+    return df.withColumn(name, compile(str(template))), name
 
 
 def _case_sinks(p, paths, checkpoint: str) -> list[IdempotentParquetSink]:
@@ -148,7 +150,7 @@ def _kafka_franz(p, spark, k, df, ck, kafka_wire_sink):
     # (kafka/output_kafka_franz.go: seed_brokers, topic,
     # interpolated key, murmur2 default partitioner) — the per-row
     # key compiles to a COLUMN, value serializes JVM-side
-    df, key_col = _opt_col(df, "_kafka_key", k.get("key"))
+    df, key_col = opt_col(df, "_kafka_key", k.get("key"))
     host, port = kafka_addr(k)
     return df, kafka_wire_sink(host, port, str(k["topic"]), key_col=key_col, sasl=kafka_sasl(k))
 
@@ -323,7 +325,7 @@ def _aws_kinesis(p, spark, kn, df, ck, kinesis_sink):
     # SigV4-signed PutRecords (aws/output_kinesis.go) — the
     # interpolated partition key as a COLUMN, <=500 records per
     # request
-    df, pk_col = _opt_col(df, "_kinesis_pk", kn.get("partition_key"))
+    df, pk_col = opt_col(df, "_kinesis_pk", kn.get("partition_key"))
     return df, kinesis_sink(stream=str(kn["stream"]), partition_key_col=pk_col,
                             **aws_conn(kn, "kinesis"))
 
@@ -342,7 +344,7 @@ def _gcp_pubsub(p, spark, pb, df, ck, pubsub_sink):
 def _aws_sqs(p, spark, sq, df, ck, sqs_sink):
     # SigV4-signed SendMessage per row (aws/output_sqs.go) —
     # optional FIFO message_group_id as an interpolated COLUMN
-    df, group_col = _opt_col(df, "_sqs_group", sq.get("message_group_id"))
+    df, group_col = opt_col(df, "_sqs_group", sq.get("message_group_id"))
     return df, sqs_sink(queue_url=str(sq["url"]), group_id_col=group_col, **aws_conn(sq, "sqs"))
 
 
@@ -360,8 +362,8 @@ def _azure_queue_storage(p, spark, aq, df, ck, azure_queue_sink):
 def _aws_sns(p, spark, sn, df, ck, sns_sink):
     # PublishBatch per partition (aws/output_sns.go): FIFO
     # group/dedupe ids as interpolated COLUMNS
-    df, group_col = _opt_col(df, "_sns_group", sn.get("message_group_id"))
-    df, dedupe_col = _opt_col(df, "_sns_dedupe", sn.get("message_deduplication_id"))
+    df, group_col = opt_col(df, "_sns_group", sn.get("message_group_id"))
+    df, dedupe_col = opt_col(df, "_sns_dedupe", sn.get("message_deduplication_id"))
     return df, sns_sink(topic_arn=str(sn["topic_arn"]), group_id_col=group_col,
                         dedupe_id_col=dedupe_col, **aws_conn(sn, "sns"))
 
@@ -494,7 +496,7 @@ def _azure_cosmosdb(p, spark, cd, df, ck, cosmos_sink):
     df = (df.withColumn("_cdb_pk",
                         compile_expr(re.sub(r"^\s*root\s*=\s*", "", pk_src)).cast("string"))
             .withColumn("_cdb_doc", F.to_json(F.struct(*[F.col(c) for c in data_cols]))))
-    df, id_col = _opt_col(df, "_cdb_id", cd.get("item_id"))
+    df, id_col = opt_col(df, "_cdb_id", cd.get("item_id"))
     return df, cosmos_sink(
         endpoint, key, str(cd["database"]), str(cd["container"]),
         pk_col="_cdb_pk", doc_col="_cdb_doc", id_col=id_col,
@@ -608,7 +610,7 @@ def _zmq4(p, spark, z, df, ck, zmq_sink):
     # socket_type PUSH|PUB, bind flag) — rows publish as JSON, the
     # PUB topic as a pre-computed COLUMN
     st = str(z.get("socket_type", "PUSH")).upper()
-    df, topic_col = _opt_col(df, "_zmq_topic", z.get("topic") if st == "PUB" else None)
+    df, topic_col = opt_col(df, "_zmq_topic", z.get("topic") if st == "PUB" else None)
     return df, zmq_sink(
         [str(u) for u in z.get("urls") or []], socket_type=st,
         bind=bool(z.get("bind", False)), topic_col=topic_col,
@@ -677,8 +679,8 @@ def _pulsar(p, spark, o, df, ck, pulsar_sink):
     from bento_spark.streaming.pulsar import parse_pulsar_url
 
     host, port = parse_pulsar_url(str(o.get("url", "pulsar://127.0.0.1:6650")))
-    df, key_col = _opt_col(df, "_pulsar_key", o.get("key"))
-    df, ok_col = _opt_col(df, "_pulsar_ordering_key", o.get("ordering_key"))
+    df, key_col = opt_col(df, "_pulsar_key", o.get("key"))
+    df, ok_col = opt_col(df, "_pulsar_ordering_key", o.get("ordering_key"))
     auth = (o.get("auth") or {}).get("token") or {}
     token = auth.get("token") if auth.get("enabled") else None
     return df, pulsar_sink(host, port, str(o["topic"]), key_col=key_col,

@@ -257,3 +257,17 @@ output: {stdout: {}}
     issues = lint_yaml(bad)
     assert any("'cap' must be an integer" in i for i in issues)
     assert any("unknown cache label 'ghost'" in i for i in issues)
+    # every backend the compiler builds: clean with its required field,
+    # reported without it
+    required = {
+        "memory": None, "lru": None, "ttlru": None, "ristretto": None, "noop": None,
+        "file": "directory", "parquet": "path", "sqlite": "path", "mongodb": "url",
+        "aws_dynamodb": "table", "aws_s3": "bucket", "gcp_cloud_storage": "bucket",
+        "couchbase": "url", "nats_kv": "bucket", "memcached": "addresses", "redis": "url",
+    }
+    for kind, need in required.items():
+        opts = f"{{{need}: x}}" if need else "{}"
+        assert lint_yaml(f"cache_resources:\n  - label: c\n    {kind}: {opts}\n") == [], kind
+        if need:
+            assert lint_yaml(f"cache_resources:\n  - label: c\n    {kind}: {{}}\n") == [
+                f"cache_resources[0] ({kind}): missing {need!r}"], kind

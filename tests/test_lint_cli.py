@@ -13,9 +13,9 @@ from bento_spark.plans.lint import known_inputs, known_outputs, known_processors
 
 
 def test_known_registries_track_compiler():
-    """Processor names are extracted from the compiler source and input
-    names come from the input registry: spot-check that core names are
-    present so a refactor of either would fail loudly here."""
+    """Processor and input names come from the processor and input
+    registries, the tables the compiler dispatches on: spot-check that
+    core names are present so a refactor of either would fail loudly here."""
     procs = known_processors()
     for name in ("mapping", "cache", "switch", "while", "match_sequence",
                  "subprocess", "http", "dedupe", "grok"):
@@ -53,6 +53,29 @@ window: {type: hopping, duration: 10 banana}
     assert "strategy must be none|reject|retry" in text
     assert "window.type must be" in text
     assert "bad duration '10 banana'" in text
+
+
+def test_lint_recurses_into_every_nested_processor_list():
+    """switch cases and default and group_by checks hold processor lists
+    the compiler compiles: an unknown name in any of them is reported with
+    its path."""
+    issues = lint_yaml("""
+pipeline:
+  processors:
+    - switch:
+        cases:
+          - check: 'true'
+            processors: [{frobnicate: {}}]
+        default: [{nope: {}}]
+    - group_by:
+        checks:
+          - {name: a, check: 'true', processors: [{bogus: {}}]}
+""")
+    assert issues == [
+        "pipeline.processors[0].switch.cases[0].processors[0]: unknown processor 'frobnicate'",
+        "pipeline.processors[0].switch.default[0]: unknown processor 'nope'",
+        "pipeline.processors[1].group_by.checks[0].processors[0]: unknown processor 'bogus'",
+    ]
 
 
 def test_lint_reports_an_input_map_naming_two_inputs():

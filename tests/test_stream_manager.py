@@ -309,3 +309,37 @@ output:
             s.bind(("127.0.0.1", port))
     finally:
         mgr.stop_all()
+
+
+def test_delete_stops_the_side_dlq_queries(spark, tmp_path):
+    """The side DLQ queries of a stream (window + output.dlq, and
+    error_handling reject + dlq) live as long as the stream: delete stops
+    them with the main query."""
+    from bento_spark.plans.compiler import Pipeline
+
+    src = tmp_path / "clips"
+    Pipeline.stage_clips(spark, str(src), 8)
+    conf = f"""
+input:
+  parquet: {{path: {src}}}
+pipeline:
+  processors:
+    - mapping: 'root.key = this.codec'
+    - set_error: {{when: "this.sr_hz <= 8000", message: "sample rate too low"}}
+error_handling: {{strategy: reject, dlq: {tmp_path}/ehdlq}}
+window: {{type: tumbling, size: 10 seconds, keys: [key], lateness: 2 seconds}}
+output:
+  path: {tmp_path}/out
+  keys: [window_start, key]
+  dlq: {tmp_path}/dlq
+  trigger: 500 ms
+"""
+    n_active_before = len(spark.streams.active)
+    mgr = StreamManager(spark, str(tmp_path / "cks"))
+    try:
+        mgr.create("clips", conf)
+        assert len(spark.streams.active) == n_active_before + 3
+        mgr.delete("clips")
+        assert len(spark.streams.active) == n_active_before
+    finally:
+        mgr.stop_all()
