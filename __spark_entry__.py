@@ -1605,9 +1605,9 @@ def q_etcd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import tempfile
     import time as _time
-    from pathlib import Path as _Path
 
     from bento_spark.streaming.etcd import EtcdWatchSpooler, MiniEtcdServer
+    from bento_spark.streaming.spool import entries
 
     srv = MiniEtcdServer(users={"root": "pw"}).start()
     spool = tempfile.mkdtemp(prefix="etcd_spool_")
@@ -1626,8 +1626,7 @@ def q_etcd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                         _json.dumps({"nk": nk, "score": rk * 10}))
 
             def events() -> list[dict]:
-                return [e for f in sorted(_Path(spool).glob("*.msg"))
-                        for e in _json.loads(f.read_text())]
+                return [e for _meta, body in entries(spool) for e in _json.loads(body)]
 
             deadline = _time.monotonic() + 30
             while len(events()) < len(n):
@@ -1657,10 +1656,8 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition tree over real chunked-JSON streams (incl. a chunkedValue
     split) and spools one message per mod. Seeding is driver-side
     control-plane (25 rows) — bulk data rides parquet/Iceberg."""
-    import json as _json
     import tempfile
     import time as _time
-    from pathlib import Path as _Path
 
     from bento_spark.streaming.spanner import (
         MiniSpannerServer,
@@ -1668,6 +1665,7 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         child_partitions_value,
         data_change_value,
     )
+    from bento_spark.streaming.spool import entries
 
     srv = MiniSpannerServer().start()
     spool = tempfile.mkdtemp(prefix="spanner_spool_")
@@ -1692,19 +1690,17 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).start()
         try:
             deadline = _time.monotonic() + 30
-            while len(list(_Path(spool).glob("*.msg"))) < len(n):
+            while len(entries(spool)) < len(n):
                 if _time.monotonic() > deadline:
                     raise TimeoutError(f"spanner cdc: {sp.error}")
                 _time.sleep(0.05)
-            rows = [_json.loads(f.read_text())
-                    for f in sorted(_Path(spool).glob("*.msg"))]
+            rows = [(body.decode(), meta["gcp_spanner_cdc_mod_type"],
+                     meta["gcp_spanner_table_name"]) for meta, body in entries(spool)]
         finally:
             sp.stop()
     finally:
         srv.stop()
-    out = spark.createDataFrame(
-        [(e["mod"], e["mod_type"], e["table_name"]) for e in rows],
-        "mod string, mod_type string, table_name string")
+    out = spark.createDataFrame(rows, "mod string, mod_type string, table_name string")
     m = F.from_json("mod", "keys struct<nk:int>, "
                            "new_values struct<name:string,score:bigint>")
     return out.select(
@@ -1720,7 +1716,7 @@ def q_sql_raw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sql_raw family end-to-end (sql/input_sql_raw.go +
     processor_sql_raw.go:30-80 over the stdlib sqlite3 DB-API path):
     nations insert through the exec_only processor (args_mapping binds,
-    ONE executemany transaction per batch), then read back through the
+    executed when the plan runs), then read back through the
     one-shot sql_raw input. Text binds re-type through sqlite column
     affinity — the DB-API convention the reference's drivers share."""
     from bento_spark.operators.sql_raw import sql_raw_exec
@@ -1743,7 +1739,7 @@ pipeline:
         args_mapping: '[ this.n_nationkey.string(), this.n_name, (this.n_regionkey * 10).string() ]'
         exec_only: true
 """)
-    writer.build_batch(spark)
+    writer.build_batch(spark).collect()  # runs the INSERTs
     reader = compile_yaml(f"""
 input:
   sql_raw:
@@ -1767,12 +1763,8 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     S3Spooler (the reference's plain-listing mode: one pass, then stop)
     and decoded from the spool. The in-process signature-VERIFYING
     MiniS3Server stands in for S3."""
-    from bento_spark.streaming.s3 import (
-        MiniS3Server,
-        S3Spooler,
-        read_s3_spool_batch,
-        s3_sink,
-    )
+    from bento_spark.streaming.s3 import MiniS3Server, S3Spooler, s3_sink
+    from bento_spark.streaming.spool import entries
 
     srv = MiniS3Server().start()
     try:
@@ -1800,7 +1792,9 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError(f"s3 spooler did not finish: {sp.error}")
         finally:
             sp.stop()
-        out = read_s3_spool_batch(spark, spool)
+        out = spark.createDataFrame(
+            [(meta["s3_key"], body.decode()) for meta, body in entries(spool)],
+            "s3_key string, value string")
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "s3_key",
@@ -1821,12 +1815,8 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, then stop — the reference's contract) and decoded from the
     spool. The in-process MiniWebHdfsServer enforces user.name auth and
     the redirect protocol."""
-    from bento_spark.streaming.hdfs import (
-        HdfsSpooler,
-        MiniWebHdfsServer,
-        hdfs_sink,
-        read_hdfs_spool_batch,
-    )
+    from bento_spark.streaming.hdfs import HdfsSpooler, MiniWebHdfsServer, hdfs_sink
+    from bento_spark.streaming.spool import entries
 
     srv = MiniWebHdfsServer().start()
     try:
@@ -1850,7 +1840,9 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             sp.wait_finished(60)
         finally:
             sp.stop()
-        out = read_hdfs_spool_batch(spark, spool)
+        out = spark.createDataFrame(
+            [(meta["hdfs_path"], body.decode()) for meta, body in entries(spool)],
+            "hdfs_path string, value string")
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "hdfs_path",
@@ -1877,6 +1869,7 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         MiniNatsServer,
         nats_jetstream_sink,
     )
+    from bento_spark.streaming.spool import entries
 
     srv = MiniNatsServer().start()
     try:
@@ -1900,9 +1893,7 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             total = srv._js_streams["NATIONS"]["seq"]
             deadline = _time.monotonic() + 60
-            import glob as _glob
-
-            while len(_glob.glob(f"{spool}/*.msg")) < total:
+            while len(entries(spool)) < total:
                 if sp.error:
                     raise RuntimeError(f"jetstream spooler: {sp.error}")
                 if _time.monotonic() > deadline:
@@ -1910,9 +1901,9 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _time.sleep(0.05)
         finally:
             sp.stop()
-        from bento_spark.streaming.nats import read_jetstream_spool_batch
-
-        out = read_jetstream_spool_batch(spark, spool)
+        out = spark.createDataFrame(
+            [(meta["nats_subject"], body.decode()) for meta, body in entries(spool)],
+            "nats_subject string, value string")
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "nats_subject",

@@ -20,10 +20,14 @@ reference pays one query PER MESSAGE; a distributed engine must not):
   driver-side, and broadcast-join the JSON-encoded result rows back —
   every pipeline row with the same args shares one query, the same
   shape as the cached http/sql_select enrichments.
-- processor/output (exec_only / output.sql_raw) -> bind the batch's
-  argument tuples through ONE executemany in ONE transaction per
-  micro-batch (streamed via toLocalIterator — bounded driver memory).
-  At-least-once under replay, like the reference's output.
+- processor (exec_only) -> a pass-through that executes each row's
+  statement when the plan runs, in the task that produces the row (one
+  executemany transaction per Arrow batch). Building the plan executes
+  nothing, so `build_batch` / `bento test` repeat no writes.
+- output.sql_raw -> bind the micro-batch's argument tuples through ONE
+  executemany in ONE transaction (streamed via toLocalIterator — bounded
+  driver memory). At-least-once under replay, like the reference's
+  output.
 
 Scale note: sqlite is a single-file engine — a driver-side single-writer
 is its only correct topology. For server databases the bulk data path is
@@ -112,6 +116,13 @@ def sql_raw_exec(driver: str, dsn: str, query: str,
         conn.close()
 
 
+def sql_raw_exec_batch(batch_df, driver: str, dsn: str, query: str, args_col: str) -> None:
+    """`sql_raw` output (output_sql_raw.go): the micro-batch's argument
+    tuples execute in one transaction via executemany."""
+    it = batch_df.select(args_col).toLocalIterator()
+    sql_raw_exec(driver, dsn, query, args_rows=(tuple(row[0]) for row in it))
+
+
 def sql_raw_processor(df, driver: str, dsn: str, query: str,
                       args_col: str | None = None,
                       exec_only: bool = False,
@@ -127,24 +138,31 @@ def sql_raw_processor(df, driver: str, dsn: str, query: str,
     `result_map`-style consumption). Rows whose args matched no result
     get '[]', matching the reference's empty-array behavior.
 
-    exec mode (`exec_only=True`): the batch's argument tuples execute in
-    one transaction via executemany; rows pass through unchanged."""
+    exec mode (`exec_only=True`): rows pass through unchanged; when the
+    plan runs, each row's statement executes once (empty binds without
+    `args_col`), one executemany transaction per Arrow batch."""
     from pyspark.sql import functions as F
 
+    if exec_only:
+        def exec_rows(batches):
+            conn = _connect(driver, dsn)
+            try:
+                for batch in batches:
+                    binds = (batch.column(args_col).to_pylist() if args_col
+                             else [()] * batch.num_rows)
+                    with conn:  # one transaction
+                        conn.executemany(query, [tuple(b) for b in binds])
+                    yield batch
+            finally:
+                conn.close()
+
+        return df.mapInArrow(exec_rows, df.schema)
+
     if args_col is None:
-        if exec_only:
-            sql_raw_exec(driver, dsn, query)
-            return df
         out = sql_raw_query(df.sparkSession, driver, dsn, query)
         payload = F.to_json(F.collect_list(F.struct(*out.columns)))
         blob = out.agg(payload.alias(result_col))
         return df.crossJoin(F.broadcast(blob))
-
-    if exec_only:
-        it = df.select(args_col).toLocalIterator()
-        sql_raw_exec(driver, dsn, query,
-                     args_rows=(tuple(row[0]) for row in it))
-        return df
 
     # SELECT with binds: distinct arg tuples -> one query each
     distinct = [tuple(r[0]) for r in df.select(args_col).distinct().collect()]

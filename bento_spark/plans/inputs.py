@@ -9,10 +9,10 @@ internal/bundle/inputs.go) and its lint and docs read that registry. Here
 - `read`: `(spark, section, streaming) -> DataFrame`;
 - `start`: for a spool-bridge input, `(section) -> started handle`. The
   bridge is the driver-side listener, subscriber or poller that writes each
-  message as one file under `spool_dir` (atomic rename, acked after the
-  rename where the protocol acks). The stream is a replayable file source
-  over that dir, so the offset log and the exactly-once sink hold end to
-  end. `Pipeline.start_bridge()` starts it; the caller owns `.stop()`.
+  message as one file under `spool_dir` (streaming/spool.py: the format,
+  and why a push source is a bridge). `Pipeline.start_bridge()` starts it;
+  the caller owns `.stop()`. A bridge's reader is `spool.read_spool` with
+  the row's metadata DDL, so reading one imports no connector module.
 
 Connector modules are named as strings and imported when a row is used, so
 importing the compiler loads none of them. `Pipeline._input` (via
@@ -59,18 +59,22 @@ def _ms(v) -> int:
 
 @dataclass(frozen=True)
 class _Spool:
-    """Reader of a spool-bridge input: `<module>.<function>(spark,
-    spool_dir, max_files_per_trigger=..., **extra(section))`."""
+    """Reader of a spool-bridge input: `read_spool(spark, spool_dir,
+    meta_ddl=meta, max_files_per_trigger=..., **extra(section))`, then
+    `post` (`<module>.<function>`, df -> df) for the columns a connector
+    computes rather than types."""
 
-    module: str
-    function: str
+    meta: str = ""
     extra: Callable[[dict], dict] | None = None
+    post: str | None = None
 
     def __call__(self, spark: SparkSession, o: dict, streaming: bool) -> DataFrame:
-        return _resolve(self.module, self.function)(
-            spark, o["spool_dir"], max_files_per_trigger=o.get("max_files_per_trigger"),
-            **(self.extra(o) if self.extra else {}),
-        )
+        from bento_spark.streaming.spool import read_spool
+
+        kw = {"meta_ddl": self.meta, **(self.extra(o) if self.extra else {})}
+        df = read_spool(spark, o["spool_dir"],
+                        max_files_per_trigger=o.get("max_files_per_trigger"), **kw)
+        return _resolve(*self.post.split("."))(df) if self.post else df
 
 
 @dataclass(frozen=True)
@@ -88,10 +92,11 @@ class _Bridge:
         return cls(spool_dir=o["spool_dir"], **self.fields(o)).start()
 
 
-def _bridge(module: str, reader: str, spooler: str, fields, extra=None) -> Input:
-    """Row of a streaming-only spool-bridge input whose reader and spooler
-    live in one module."""
-    return Input("streaming", _Spool(module, reader, extra), _Bridge(module, spooler, fields))
+def _bridge(module: str, spooler: str, fields, meta: str = "", extra=None,
+            post: str | None = None) -> Input:
+    """Row of a streaming-only spool-bridge input: `module.spooler` writes
+    the spool, whose header holds the columns of the DDL `meta`."""
+    return Input("streaming", _Spool(meta, extra, post), _Bridge(module, spooler, fields))
 
 
 # ------------------------------------------ connection fields (inputs+outputs)
@@ -485,10 +490,6 @@ def _sequence(spark, o, streaming):
     ])
 
 
-def _whole_body(o: dict) -> dict:
-    return {"whole_body": True}  # one message per frame / stdout line
-
-
 # ------------------------------------------------------ bridge field specs
 # Each maps an input section onto its spooler's arguments (spool_dir is
 # added by _Bridge); the fields follow the reference input named.
@@ -830,71 +831,90 @@ INPUTS: dict[str, Input] = {
     "broker": Input("both", _broker),
     "dynamic": Input("both", _dynamic),
     "sequence": Input("batch", _sequence),
-    # spool bridges
+    # spool bridges: a row names the spool header's columns; they follow
+    # each reference input's metadata fields
     "http_server": _bridge(
-        "http_server", "read_spool_stream", "HttpSpoolServer", _http_server,
-        # sync mode stamps the spool stem as request_id, the routing key
-        # output.sync_response replies by
-        lambda o: {"whole_body": bool(o.get("whole_body", True)),
-                   "with_request_id": bool(o.get("sync"))}),
-    "http_client": _bridge(
-        "http_server", "read_spool_stream", "HttpPollSpooler", _http_client,
-        lambda o: {"whole_body": bool(o.get("whole_body", True))}),
-    "socket_server": _bridge(
-        "http_server", "read_spool_stream", "TcpSpoolServer", _listen_addr,
-        lambda o: {"whole_body": not bool(o.get("lines", True))}),
-    "websocket": _bridge("http_server", "read_spool_stream", "WebSocketSpooler", _websocket,
-                         _whole_body),
-    "subprocess": Input("streaming", _Spool("http_server", "read_spool_stream", _whole_body),
-                        _Bridge("subprocess_io", "SubprocessSpooler", _subprocess)),
-    "mqtt": _bridge("mqtt", "read_mqtt_stream", "MqttSpooler", _mqtt),
-    "kafka_franz": _bridge("kafka_wire", "read_kafka_wire_stream", "KafkaSpooler", _kafka_franz),
-    "nats": _bridge("nats", "read_nats_stream", "NatsSpooler", _nats),
-    "nats_jetstream": _bridge("nats", "read_jetstream_stream", "JetStreamSpooler",
-                              _nats_jetstream),
-    "nats_object_store": _bridge("nats", "read_nats_os_stream", "NatsOsSpooler",
-                                 _nats_object_store),
-    "pulsar": _bridge("pulsar", "read_pulsar_stream", "PulsarSpooler", _pulsar),
-    "aws_kinesis": _bridge("kinesis", "read_kinesis_stream", "KinesisSpooler", _aws_kinesis),
-    "aws_sqs": _bridge("sqs", "read_sqs_stream", "SqsSpooler", _aws_sqs),
-    "aws_s3": _bridge("s3", "read_s3_stream", "S3Spooler", _aws_s3),
-    "gcp_spanner_cdc": _bridge("spanner", "read_spanner_cdc_stream", "SpannerCdcSpooler",
-                               _gcp_spanner_cdc),
-    "gcp_pubsub": _bridge("pubsub", "read_pubsub_stream", "PubSubSpooler", _gcp_pubsub),
-    "gcp_bigquery_select": _bridge("bigquery", "read_bigquery_stream", "BigQuerySpooler",
-                                   _gcp_bigquery_select),
-    "gcp_cloud_storage": _bridge("gcs", "read_gcs_stream", "GcsSpooler", _gcp_cloud_storage),
-    "azure_queue_storage": _bridge("azure_queue", "read_azure_queue_stream",
-                                   "AzureQueueSpooler", _azure_queue_storage),
-    "azure_table_storage": _bridge("azure_table", "read_azure_table_stream",
-                                   "AzureTableSpooler", _azure_table_storage),
-    "azure_blob_storage": _bridge("azure_blob", "read_azure_blob_stream",
-                                  "AzureBlobSpooler", _azure_blob_storage),
-    "azure_service_bus_queue": _bridge("azure_servicebus", "read_service_bus_stream",
-                                       "ServiceBusSpooler", _azure_service_bus_queue),
-    "azure_cosmosdb": _bridge("cosmosdb", "read_cosmos_stream", "CosmosSpooler",
-                              _azure_cosmosdb),
-    "cypher": _bridge("cypher", "read_cypher_stream", "CypherSpooler", _cypher),
-    "cockroachdb_changefeed": _bridge("cockroachdb", "read_changefeed_stream",
-                                      "ChangefeedSpooler", _cockroachdb_changefeed),
-    "etcd": _bridge("etcd", "read_etcd_stream", "EtcdWatchSpooler", _etcd),
-    "discord": _bridge("discord", "read_discord_stream", "DiscordSpooler", _discord),
-    "sftp": _bridge("sftp", "read_sftp_stream", "SftpSpooler", _sftp),
-    "amqp_1": _bridge("amqp1", "read_amqp1_stream", "Amqp1Spooler", _amqp_1),
-    "amqp_0_9": _bridge("amqp", "read_amqp_stream", "AmqpSpooler", _amqp_0_9),
-    "hdfs": _bridge("hdfs", "read_hdfs_stream", "HdfsSpooler", _hdfs),
-    "nanomsg": _bridge("nanomsg", "read_nanomsg_stream", "NanomsgSpooler", _nanomsg),
-    "zmq4": _bridge("zeromq", "read_zmq_stream", "ZmqSpooler", _zmq4),
-    "beanstalkd": _bridge("beanstalkd", "read_beanstalkd_stream", "BeanstalkdSpooler",
-                          _beanstalkd),
-    "nsq": _bridge("nsq", "read_nsq_stream", "NsqSpooler", _nsq),
-    # the source key/channel rides the spool filename and decodes JVM-side
-    "redis_list": _bridge("redis", "read_redis_spool_stream", "RedisListSpooler", _redis_list,
-                          lambda o: {"tag_col": "redis_key"}),
-    "redis_pubsub": _bridge("redis", "read_redis_spool_stream", "RedisPubSubSpooler",
-                            _redis_pubsub, lambda o: {"tag_col": "redis_channel"}),
-    "redis_streams": _bridge("redis", "read_redis_streams_stream", "RedisStreamsSpooler",
-                             _redis_streams),
+        "http_server", "HttpSpoolServer", _http_server,
+        # sync mode: request_id is the routing key output.sync_response
+        # replies by
+        extra=lambda o: {"lines": not o.get("whole_body", True),
+                         "meta_ddl": "request_id string" if o.get("sync") else ""}),
+    "http_client": _bridge("http_server", "HttpPollSpooler", _http_client,
+                           extra=lambda o: {"lines": not o.get("whole_body", True)}),
+    "socket_server": _bridge("http_server", "TcpSpoolServer", _listen_addr,
+                             extra=lambda o: {"lines": bool(o.get("lines", True))}),
+    "websocket": _bridge("http_server", "WebSocketSpooler", _websocket),
+    "subprocess": _bridge("subprocess_io", "SubprocessSpooler", _subprocess),
+    "mqtt": _bridge("mqtt", "MqttSpooler", _mqtt, "mqtt_topic string"),
+    "kafka_franz": _bridge(
+        "kafka_wire", "KafkaSpooler", _kafka_franz,
+        "kafka_topic string, kafka_partition int, kafka_offset bigint, kafka_ts bigint, "
+        "kafka_key string, kafka_tombstone boolean", post="kafka_wire.kafka_columns"),
+    "nats": _bridge("nats", "NatsSpooler", _nats,
+                    "nats_subject string, nats_reply_subject string"),
+    "nats_jetstream": _bridge("nats", "JetStreamSpooler", _nats_jetstream,
+                              "nats_subject string, nats_sequence bigint"),
+    "nats_object_store": _bridge("nats", "NatsOsSpooler", _nats_object_store,
+                                 "nats_object_name string, nats_object_size bigint"),
+    "pulsar": _bridge(
+        "pulsar", "PulsarSpooler", _pulsar,
+        "pulsar_topic string, pulsar_message_id string, pulsar_key string, "
+        "pulsar_ordering_key string, pulsar_publish_time_unix bigint, "
+        "pulsar_redelivery_count int, pulsar_event_time_unix bigint, "
+        "pulsar_producer_name string, pulsar_properties map<string,string>"),
+    "aws_kinesis": _bridge(
+        "kinesis", "KinesisSpooler", _aws_kinesis,
+        "kinesis_stream string, kinesis_shard string, kinesis_sequence string, "
+        "kinesis_partition_key string"),
+    "aws_sqs": _bridge("sqs", "SqsSpooler", _aws_sqs, "sqs_message_id string"),
+    "aws_s3": _bridge("s3", "S3Spooler", _aws_s3,
+                      "s3_bucket string, s3_key string, s3_last_modified_unix bigint"),
+    "gcp_spanner_cdc": _bridge(
+        "spanner", "SpannerCdcSpooler", _gcp_spanner_cdc,
+        "gcp_spanner_commit_timestamp string, gcp_spanner_cdc_mod_type string, "
+        "gcp_spanner_table_name string, gcp_spanner_cdc_server_transaction_id string, "
+        "gcp_spanner_cdc_record_sequence string"),
+    "gcp_pubsub": _bridge("pubsub", "PubSubSpooler", _gcp_pubsub, "pubsub_message_id string"),
+    "gcp_bigquery_select": _bridge("bigquery", "BigQuerySpooler", _gcp_bigquery_select),
+    "gcp_cloud_storage": _bridge(
+        "gcs", "GcsSpooler", _gcp_cloud_storage,
+        "gcs_key string, gcs_bucket string, gcs_last_modified string, "
+        "gcs_content_type string, gcs_content_encoding string", post="gcs.gcs_columns"),
+    "azure_queue_storage": _bridge("azure_queue", "AzureQueueSpooler", _azure_queue_storage,
+                                   "queue_storage_message_id string"),
+    "azure_table_storage": _bridge("azure_table", "AzureTableSpooler", _azure_table_storage,
+                                   "table_storage_name string, row_num bigint"),
+    "azure_blob_storage": _bridge("azure_blob", "AzureBlobSpooler", _azure_blob_storage,
+                                  "blob_storage_container string, blob_storage_key string"),
+    "azure_service_bus_queue": _bridge(
+        "azure_servicebus", "ServiceBusSpooler", _azure_service_bus_queue,
+        "service_bus_message_id string, service_bus_sequence_number bigint, "
+        "service_bus_enqueued_time bigint, service_bus_delivery_count int, "
+        "service_bus_content_type string, service_bus_correlation_id string"),
+    "azure_cosmosdb": _bridge("cosmosdb", "CosmosSpooler", _azure_cosmosdb,
+                              "cosmosdb_database string, cosmosdb_container string, "
+                              "row_num bigint"),
+    "cypher": _bridge("cypher", "CypherSpooler", _cypher),
+    "cockroachdb_changefeed": _bridge("cockroachdb", "ChangefeedSpooler",
+                                      _cockroachdb_changefeed),
+    "etcd": _bridge("etcd", "EtcdWatchSpooler", _etcd),
+    "discord": _bridge("discord", "DiscordSpooler", _discord),
+    "sftp": _bridge("sftp", "SftpSpooler", _sftp, "sftp_path string"),
+    "amqp_1": _bridge("amqp1", "Amqp1Spooler", _amqp_1, "amqp_delivery_id bigint"),
+    "amqp_0_9": _bridge("amqp", "AmqpSpooler", _amqp_0_9, "amqp_key string"),
+    "hdfs": _bridge("hdfs", "HdfsSpooler", _hdfs, "hdfs_path string, hdfs_modified_ms bigint"),
+    "nanomsg": _bridge("nanomsg", "NanomsgSpooler", _nanomsg),
+    "zmq4": _bridge("zeromq", "ZmqSpooler", _zmq4),
+    "beanstalkd": _bridge("beanstalkd", "BeanstalkdSpooler", _beanstalkd,
+                          "beanstalkd_id bigint"),
+    "nsq": _bridge("nsq", "NsqSpooler", _nsq,
+                   "nsq_id string, nsq_attempts int, nsq_timestamp bigint"),
+    "redis_list": _bridge("redis", "RedisListSpooler", _redis_list, "redis_key string"),
+    "redis_pubsub": _bridge("redis", "RedisPubSubSpooler", _redis_pubsub,
+                            "redis_channel string"),
+    "redis_streams": _bridge("redis", "RedisStreamsSpooler", _redis_streams,
+                             "redis_stream string, redis_id string, "
+                             "redis_meta map<string,string>"),
 }
 
 

@@ -564,17 +564,16 @@ def _aws_dynamodb(p, spark, do, df, ck, dynamodb_sink):
     )
 
 
-def _sql_raw(p, spark, so, df, ck, sql_raw_processor):
+def _sql_raw(p, spark, so, df, ck, sql_raw_exec_batch):
     # statement-with-binds per batch (output_sql_raw.go): the
     # args_mapping array renders JVM-side; ONE executemany
-    # transaction per micro-batch (at-least-once under replay) — the
-    # processor's exec_only mode run on each written batch
+    # transaction per micro-batch (at-least-once under replay)
     if "args_mapping" not in so:
         raise ValueError("output.sql_raw requires `args_mapping`")
     df = df.withColumn("_sql_args", compile_expr(str(so["args_mapping"])))
     drv, dsn, query = str(so.get("driver", "sqlite")), str(so["dsn"]), str(so["query"])
-    return df, lambda batch_df, epoch_id: sql_raw_processor(
-        batch_df, drv, dsn, query, args_col="_sql_args", exec_only=True)
+    return df, lambda batch_df, epoch_id: sql_raw_exec_batch(
+        batch_df, drv, dsn, query, "_sql_args")
 
 
 def _aws_s3(p, spark, s3o, df, ck, s3_sink):
@@ -838,7 +837,7 @@ OUTPUTS: dict[str, Output] = {
                                   _azure_table_storage),
     "amqp_1": Output("streaming.amqp1", "amqp1_sink", _amqp_1),
     "aws_dynamodb": Output("streaming.dynamodb", "dynamodb_sink", _aws_dynamodb),
-    "sql_raw": Output("operators.sql_raw", "sql_raw_processor", _sql_raw),
+    "sql_raw": Output("operators.sql_raw", "sql_raw_exec_batch", _sql_raw),
     "aws_s3": Output("streaming.s3", "s3_sink", _aws_s3),
     "nanomsg": Output("streaming.nanomsg", "nanomsg_sink", _nanomsg),
     "zmq4": Output("streaming.zeromq", "zmq_sink", _zmq4),

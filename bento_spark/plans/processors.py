@@ -647,8 +647,8 @@ def _sql_raw(p, df, o, sql_raw_processor):
     # arbitrary statement with placeholder binds
     # (processor_sql_raw.go:30-80): args_mapping compiles to a
     # Catalyst ARRAY column; SELECTs amortize one query per
-    # DISTINCT args tuple + broadcast join; exec_only runs one
-    # executemany transaction per batch (sqlite DB-API path —
+    # DISTINCT args tuple + broadcast join; exec_only executes each
+    # row's statement when the plan runs (sqlite DB-API path —
     # server DBs route to sql_select/sql_insert over JDBC)
     d, args_col = opt_col(df, "_sql_args", o.get("args_mapping"), compile_expr)
     out = sql_raw_processor(

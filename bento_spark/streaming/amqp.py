@@ -18,8 +18,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   exactly-once downstream hold. basic.ack fires only AFTER the spool
   file is durably renamed — the broker redelivers anything unacked,
   giving at-least-once into the spool, dedupe-able downstream. The
-  routing key rides the spool FILENAME (hex) and surfaces as an
-  `amqp_key` column decoded JVM-side — no Python in the hot path.
+  routing key rides the spool file's header and surfaces as an
+  `amqp_key` column parsed JVM-side — no Python in the hot path.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON executor-side with an interpolated routing-key
   COLUMN (never a driver loop). At-least-once across checkpoint replay.
@@ -41,7 +41,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -327,7 +328,7 @@ def parse_amqp_url(url: str) -> tuple[str, int, str]:
 @dataclass
 class AmqpSpooler:
     """`amqp_0_9` input (amqp09/input.go): consume -> spool; ack only
-    after the atomic rename, so unspooled deliveries are redelivered
+    after the spool put, so unspooled deliveries are redelivered
     (at-least-once into the replayable file source)."""
 
     host: str
@@ -344,8 +345,7 @@ class AmqpSpooler:
     _client: "AmqpClient | None" = field(default=None, repr=False)
 
     def start(self) -> "AmqpSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = AmqpClient(self.host, self.port, vhost=self.vhost)
         if self.declare:
             client.queue_declare(self.queue)
@@ -355,7 +355,6 @@ class AmqpSpooler:
             client.qos(self.prefetch_count)
         client.consume(self.queue, self.consumer_tag)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -366,11 +365,7 @@ class AmqpSpooler:
                 if got is None:
                     return
                 delivery_tag, _exchange, key, body = got
-                name = f"{seq['n']:012d}-{key.encode().hex()}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)  # durable BEFORE the ack
-                seq["n"] += 1
+                spool.put(body, amqp_key=key)  # durable BEFORE the ack
                 try:
                     client.ack(delivery_tag)
                 except (ConnectionError, OSError):
@@ -389,16 +384,6 @@ class AmqpSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_amqp_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an AmqpSpooler dir: `value string` plus the
-    routing key decoded from the filename JVM-side (`amqp_key`). Shares
-    the redis spool filename contract (streaming/redis.py)."""
-    from bento_spark.streaming.redis import read_redis_spool_stream
-
-    return read_redis_spool_stream(spark, spool_dir, tag_col="amqp_key",
-                                   max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

@@ -38,7 +38,8 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 PROTO_AMQP = b"AMQP\x00\x01\x00\x00"
 PROTO_SASL = b"AMQP\x03\x01\x00\x00"
@@ -609,12 +610,10 @@ class Amqp1Spooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "Amqp1Spooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         host, port, user, pwd = parse_amqp1_url(self.url)
         client = Amqp1Client(host, port, username=user, password=pwd)
         handle = client.attach_receiver(self.source_address, credit=self.credit)
-        seq = {"n": 0}
 
         def run() -> None:
             import sys
@@ -629,12 +628,7 @@ class Amqp1Spooler:
                         body = decode_message_body(payload)
                         raw = (body if isinstance(body, (bytes, bytearray))
                                else str(body if body is not None else "").encode("utf-8"))
-                        seq["n"] += 1
-                        name = f"{seq['n']:012d}-{did:012d}-{uuid.uuid4().hex}.msg"
-                        tmp = spool / f".{name}.tmp"
-                        # 1-byte pad: 0-byte files emit no row (kafka_wire)
-                        tmp.write_bytes(b"." + raw)
-                        tmp.rename(spool / name)
+                        spool.put(raw, amqp_delivery_id=did)
                         done.append(did)
                     client.settle(done)  # ack AFTER durability
                     # top up credit so the broker keeps delivering
@@ -656,25 +650,6 @@ class Amqp1Spooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_amqp1_stream(spark, spool_dir: str,
-                      max_files_per_trigger: int | None = None):
-    """File stream over an Amqp1Spooler's dir: `value string` plus the
-    delivery id decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-(\d{12})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("amqp_delivery_id",
-                      F.regexp_extract(fname, pat, 1).cast("bigint"))
-    )
 
 
 # --------------------------------------------------------------------------

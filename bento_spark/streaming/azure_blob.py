@@ -16,8 +16,8 @@ signer is validated end-to-end, not assumed. Against real Azure, point
 Spark-first mapping (identical topology to streaming/s3.py):
 - input  -> AzureBlobSpooler makes ONE pass over the container listing
   (the reference consumes the listing then stops) spooling each blob as
-  a durable file; blob name/container ride the FILENAME and surface as
-  columns JVM-side.
+  a durable file; blob name/container ride the spool file's header and
+  surface as columns JVM-side.
 - output -> one Put Blob per row, the interpolated blob path arriving as
   a pre-computed COLUMN, body rendered JVM-side.
 
@@ -31,9 +31,9 @@ import hmac
 import threading
 import time
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2021-08-06"
 
@@ -240,10 +240,8 @@ class AzureBlobSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "AzureBlobSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = AzureBlobClient(self.endpoint, self.account, self.account_key)
-        seq = {"n": 0}
 
         def run() -> None:
             import sys
@@ -253,13 +251,9 @@ class AzureBlobSpooler:
                     if self._stop.is_set():
                         return
                     body, _ = client.get_blob(self.container, name)
-                    seq["n"] += 1
-                    fname = (f"{seq['n']:012d}-{self.container.encode().hex()}"
-                             f"-{name.encode().hex()}-{uuid.uuid4().hex}.msg")
-                    tmp = spool / f".{fname}.tmp"
-                    # 1-byte pad: 0-byte files emit no row (see kafka_wire)
-                    tmp.write_bytes(b"." + body)
-                    tmp.rename(spool / fname)
+                    # the reference's metadata surface
+                    spool.put(body, blob_storage_container=self.container,
+                              blob_storage_key=name)
                     if self.delete_blobs:
                         try:
                             client.delete_blob(self.container, name)
@@ -286,28 +280,6 @@ class AzureBlobSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_azure_blob_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over an AzureBlobSpooler's dir: `value string` +
-    blob_storage_key / blob_storage_container decoded from the filename
-    (the reference's metadata surface)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("blob_storage_container",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("blob_storage_key",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8"))
-    )
 
 
 # --------------------------------------------------------------------------

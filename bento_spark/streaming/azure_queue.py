@@ -25,7 +25,6 @@ import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.streaming.azure_blob import (
     _xml_escape,
@@ -33,6 +32,8 @@ from bento_spark.streaming.azure_blob import (
     shared_key_signature,
     shared_key_string_to_sign,
 )
+
+from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2021-08-06"
 
@@ -167,10 +168,8 @@ class AzureQueueSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "AzureQueueSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = AzureQueueClient(self.endpoint, self.account, self.account_key)
-        seq = {"n": 0}
 
         def run() -> None:
             import sys
@@ -189,13 +188,7 @@ class AzureQueueSpooler:
                     continue
                 try:
                     for m in msgs:
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}-{m['id'].encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        # 1-byte pad: 0-byte files emit no row (kafka_wire)
-                        tmp.write_bytes(b"." + m["text"].encode("utf-8"))
-                        tmp.rename(spool / name)
+                        spool.put(m["text"], queue_storage_message_id=m["id"])
                         try:
                             client.delete_message(self.queue, m["id"],
                                                   m["pop_receipt"])
@@ -215,25 +208,6 @@ class AzureQueueSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_azure_queue_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over an AzureQueueSpooler's dir: `value string` +
-    queue_storage_message_id decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("queue_storage_message_id",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-    )
 
 
 # --------------------------------------------------------------------------

@@ -16,16 +16,16 @@ in-process broker RECOMPUTES every SAS signature.
 
 Spark-first mapping (same spool bridge as input.amqp_1):
 - ServiceBusSpooler: CBS put-token, then a receiver link on the queue;
-  each delivery spools as a JSON envelope BEFORE its accepted
+  each delivery spools as one file BEFORE its accepted
   disposition (at-least-once — unsettled deliveries redeliver).
   `nack_reject_patterns` matching bodies get a REJECTED disposition and
   never spool (the reference nacks them to the dead-letter queue).
   `renew_lock` is accepted-and-documented: the spool bridge settles
-  immediately after the durable rename, so there is no long-held lock
+  immediately after the durable spool put, so there is no long-held lock
   to renew.
 - Metadata (service_bus_message_id / sequence_number / enqueued_time /
   delivery_count / content_type / correlation_id) parses JVM-side from
-  the envelope.
+  the spool file's header.
 """
 
 from __future__ import annotations
@@ -33,14 +33,12 @@ from __future__ import annotations
 import base64
 import hashlib
 import hmac
-import json
 import re
 import threading
 import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.streaming.amqp1 import (
     Amqp1Client,
@@ -52,6 +50,8 @@ from bento_spark.streaming.amqp1 import (
     enc_value,
     performative,
 )
+
+from bento_spark.streaming.spool import Spool
 
 # message-section descriptors (OASIS AMQP 1.0 §3.2)
 S_HEADER, S_DELIVERY_ANN, S_MESSAGE_ANN = 0x70, 0x71, 0x72
@@ -224,8 +224,7 @@ class ServiceBusSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "ServiceBusSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = Amqp1Client(self.host, self.port)
         audience = f"sb://{self.host}/{self.queue}"
         token = generate_sas_token(audience, self.key_name, self.key,
@@ -234,7 +233,6 @@ class ServiceBusSpooler:
         handle = client.attach_receiver(self.queue, credit=256)
         self._client = client
         rejects = [re.compile(p) for p in self.nack_reject_patterns]
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -259,23 +257,20 @@ class ServiceBusSpooler:
                     props = sections["properties"] + [None] * 8
                     ann = sections["message_annotations"]
                     hdr = sections["header"] + [None] * 5
-                    env = {
-                        "value": text,
-                        "message_id": (str(props[0])
-                                       if props[0] is not None else None),
-                        "correlation_id": (str(props[5])
-                                           if props[5] is not None else None),
-                        "content_type": (str(props[6])
-                                         if props[6] is not None else None),
-                        "sequence_number": ann.get(ANN_SEQUENCE),
-                        "enqueued_time_ms": ann.get(ANN_ENQUEUED),
-                        "delivery_count": hdr[4] if hdr[4] is not None else 0,
-                    }
-                    seq["n"] += 1
-                    name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
+                    enqueued_ms = ann.get(ANN_ENQUEUED)
+                    # the reference's metadata (input_service_bus_queue.go:112-120)
+                    spool.put(
+                        text,
+                        service_bus_message_id=(str(props[0])
+                                                if props[0] is not None else None),
+                        service_bus_sequence_number=ann.get(ANN_SEQUENCE),
+                        service_bus_enqueued_time=(int(enqueued_ms) // 1000
+                                                   if enqueued_ms is not None else None),
+                        service_bus_delivery_count=hdr[4] if hdr[4] is not None else 0,
+                        service_bus_content_type=(str(props[6])
+                                                  if props[6] is not None else None),
+                        service_bus_correlation_id=(str(props[5])
+                                                    if props[5] is not None else None))
                     # durable BEFORE the accepted disposition
                     try:
                         client.settle([did])
@@ -295,33 +290,6 @@ class ServiceBusSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_service_bus_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a ServiceBusSpooler's dir: JSON envelopes ->
-    `value` + the reference's service_bus_* metadata columns
-    (input_service_bus_queue.go:112-120), parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "value STRING, message_id STRING, correlation_id STRING, "
-        "content_type STRING, sequence_number BIGINT, "
-        "enqueued_time_ms BIGINT, delivery_count INT"))
-    return df.select(
-        env["value"].alias("value"),
-        env["message_id"].alias("service_bus_message_id"),
-        env["sequence_number"].alias("service_bus_sequence_number"),
-        (env["enqueued_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("service_bus_enqueued_time"),
-        env["delivery_count"].alias("service_bus_delivery_count"),
-        env["content_type"].alias("service_bus_content_type"),
-        env["correlation_id"].alias("service_bus_correlation_id"),
-    )
 
 
 # ---------------------------------------------------------------------------

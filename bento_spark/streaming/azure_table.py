@@ -22,8 +22,7 @@ https://<account>.table.core.windows.net (or Azurite).
 Spark-first mapping:
 - input  -> AzureTableSpooler makes ONE pass over the entity query (the
   reference is a pager that consumes the listing then stops), spooling
-  each entity as a JSON file; columns parse JVM-side with from_json and
-  the row payload stays the entity's own JSON.
+  each entity as one file; the row payload is the entity's own JSON.
 - output -> per-row REST operation; table/partition_key/row_key/
   transaction_type interpolations arrive as pre-computed COLUMNS, the
   property payload rendered JVM-side (to_json) and stringified
@@ -40,9 +39,9 @@ import re
 import threading
 import time
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2019-02-02"
 _ODATA_HDRS = {
@@ -265,8 +264,7 @@ class AzureTableSpooler:
     error: Exception | None = None
 
     def start(self) -> "AzureTableSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = AzureTableClient(self.endpoint, self.account, self.account_key)
 
         def run() -> None:
@@ -277,11 +275,9 @@ class AzureTableSpooler:
                     if self._stop.is_set():
                         return
                     n += 1
-                    env = {"entity": entity, "table": self.table, "row_num": n}
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
+                    # the reference's metadata (input_table_storage.go:162-163)
+                    spool.put(json.dumps(entity, separators=(",", ":"), ensure_ascii=False),
+                              table_storage_name=self.table, row_num=n)
             except Exception as e:  # surfaced via wait_finished/error
                 self.error = e
             finally:
@@ -302,27 +298,6 @@ class AzureTableSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_azure_table_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over an AzureTableSpooler's dir: the entity JSON is the
-    row `value`; `table_storage_name` / `row_num` are the reference's
-    metadata columns (input_table_storage.go:162-163) — all parsed
-    JVM-side with from_json/get_json_object."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"),
-                      "table STRING, row_num BIGINT")
-    return df.select(
-        F.get_json_object(F.col("value"), "$.entity").alias("value"),
-        env["table"].alias("table_storage_name"),
-        env["row_num"].alias("row_num"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
   durable spool file BEFORE sending `delete` (ack-after-durability =
   at-least-once: a crash between rename and delete re-delivers after the
   job's TTR, the protocol's contract). The job id rides the spool
-  FILENAME and surfaces as a `beanstalkd_id` column decoded JVM-side.
+  file's header and surfaces as a `beanstalkd_id` column parsed JVM-side.
 - output -> foreachBatch producer: one connection per partition, rows
   publish as JSON serialized JVM-side; each `put` waits for its INSERTED
   reply so a rejected job fails the micro-batch (checkpoint-replay
@@ -24,12 +24,12 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
 
 from __future__ import annotations
 
+import socket
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
-import socket
+
+from bento_spark.streaming.spool import Spool
 
 _CRLF = b"\r\n"
 
@@ -121,7 +121,7 @@ def parse_beanstalkd_addr(addr: str) -> tuple[str, int]:
 class BeanstalkdSpooler:
     """`beanstalkd` input (input.go): reserve-poll the default tube and
     spool each job as one durable file; `delete` fires only AFTER the
-    atomic rename — at-least-once (an un-deleted job re-delivers after
+    spool put — at-least-once (an un-deleted job re-delivers after
     TTR)."""
 
     host: str
@@ -133,11 +133,9 @@ class BeanstalkdSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "BeanstalkdSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = BeanstalkdClient(self.host, self.port)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -148,11 +146,7 @@ class BeanstalkdSpooler:
                 if got is None:
                     continue
                 job_id, body = got
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{job_id:012d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)
+                spool.put(body, beanstalkd_id=job_id)
                 try:
                     client.delete(job_id)  # ack AFTER durability
                 except (ConnectionError, OSError):
@@ -170,22 +164,6 @@ class BeanstalkdSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_beanstalkd_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a BeanstalkdSpooler's dir: `value string` +
-    `beanstalkd_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-(\d{12})-[0-9a-f]{32}\.msg$"
-    return df.withColumn(
-        "beanstalkd_id", F.regexp_extract(fname, pat, 1).cast("bigint"))
 
 
 # --------------------------------------------------------------------------

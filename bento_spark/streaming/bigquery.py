@@ -42,9 +42,9 @@ import threading
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.streaming.gcs import GcsClient
+from bento_spark.streaming.spool import Spool
 
 FORMATS = ("NEWLINE_DELIMITED_JSON", "CSV")
 
@@ -184,23 +184,17 @@ class BigQuerySpooler:
     error: Exception | None = None
 
     def start(self) -> "BigQuerySpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = BigQueryClient(self.endpoint, self.credentials)
         sql = build_select(self.table, self.columns, self.where,
                            self.prefix, self.suffix)
 
         def run() -> None:
             try:
-                n = 0
                 for row in client.query(self.project, sql, self.args):
                     if self._stop.is_set():
                         return
-                    n += 1
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(row))
-                    tmp.rename(spool / name)
+                    spool.put(json.dumps(row))
             except Exception as e:
                 self.error = e
             finally:
@@ -221,16 +215,6 @@ class BigQuerySpooler:
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
-
-
-def read_bigquery_stream(spark, spool_dir: str,
-                         max_files_per_trigger: int | None = None):
-    """File stream over a BigQuerySpooler's dir: each row's JSON object
-    is the message `value` (reference: one message per row)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

@@ -47,9 +47,10 @@ import socket
 import struct
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 PROTOCOL_3_0 = 196608  # 3 << 16
 
@@ -423,14 +424,12 @@ class ChangefeedSpooler:
                                           self.cursor_cache)
 
     def start(self) -> "ChangefeedSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         stmt = self.statement  # resolves the cached cursor BEFORE connect
         self._client = PgWireClient(self.dsn)
         # the changefeed blocks indefinitely between rows; the connect/auth
         # timeout must not tear down an idle feed
         self._client.sock.settimeout(None)
-        counter = {"n": 0}
 
         def run() -> None:
             import sys
@@ -446,22 +445,17 @@ class ChangefeedSpooler:
                         row[1] or b"").decode("utf-8")
                     val = row[2] if isinstance(row[2], str) else (
                         row[2] or b"").decode("utf-8")
-                    msg = json.dumps({"primary_key": key, "row": val,
-                                      "table": table}, sort_keys=True)
-                    counter["n"] += 1
-                    name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(msg)
-                    tmp.rename(spool / name)
+                    spool.put(json.dumps({"primary_key": key, "row": val,
+                                          "table": table}, sort_keys=True))
                     if self.cursor_cache:
                         try:
                             ts = json.loads(val).get("updated")
                         except (json.JSONDecodeError, AttributeError):
                             ts = None
                         if ts:
-                            ctmp = spool / ".cursor.tmp"
+                            ctmp = spool.dir / ".cursor.tmp"
                             ctmp.write_text(str(ts))
-                            ctmp.rename(spool / ".cursor")
+                            ctmp.rename(spool.dir / ".cursor")
             except (ConnectionError, OSError) as e:
                 if not self._stop.is_set():
                     self.error = f"cockroachdb_changefeed: {e}"
@@ -483,16 +477,6 @@ class ChangefeedSpooler:
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
-
-
-def read_changefeed_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a ChangefeedSpooler's dir: each changefeed row's
-    JSON object is the message `value`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,8 @@ URI.
 
 Spark-first mapping:
 - input  -> CosmosSpooler runs ONE parametrized query (the reference's
-  pager consumes the query then stops) spooling each item as a JSON
-  file; the row `value` is the item's own JSON, parsed JVM-side.
+  pager consumes the query then stops) spooling each item as one file;
+  the row `value` is the item's own JSON.
 - processor -> cosmos_map: one REST op per row over one client per
   partition (mapInPandas, Arrow-batched); Read fills the out column,
   write ops flag the error column on conflict/miss — the same
@@ -56,7 +56,8 @@ import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2018-12-31"
 
@@ -302,8 +303,7 @@ class CosmosSpooler:
     error: Exception | None = None
 
     def start(self) -> "CosmosSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = CosmosClient(self.endpoint, self.account_key)
 
         def run() -> None:
@@ -315,12 +315,9 @@ class CosmosSpooler:
                     if self._stop.is_set():
                         return
                     n += 1
-                    env = {"item": item, "database": self.database,
-                           "container": self.container, "row_num": n}
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
+                    spool.put(json.dumps(item, separators=(",", ":"), ensure_ascii=False),
+                              cosmosdb_database=self.database,
+                              cosmosdb_container=self.container, row_num=n)
             except Exception as e:
                 self.error = e
             finally:
@@ -341,28 +338,6 @@ class CosmosSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_cosmos_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a CosmosSpooler's dir: the item JSON is the row
-    `value` plus cosmosdb_database / cosmosdb_container / row_num columns,
-    parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(
-        F.col("value"),
-        "database STRING, container STRING, row_num BIGINT")
-    return df.select(
-        F.get_json_object(F.col("value"), "$.item").alias("value"),
-        env["database"].alias("cosmosdb_database"),
-        env["container"].alias("cosmosdb_container"),
-        env["row_num"].alias("row_num"),
-    )
 
 
 # ---------------------------------------------------------------------------

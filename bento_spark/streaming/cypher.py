@@ -31,9 +31,9 @@ import socket
 import struct
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 BOLT_MAGIC = b"\x60\x60\xb0\x17"
 # propose 4.4 only — single-suite negotiation like the SSH transport
@@ -352,8 +352,7 @@ class CypherSpooler:
     error: Exception | None = None
 
     def start(self) -> "CypherSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
 
         def run() -> None:
             client = None
@@ -361,12 +360,8 @@ class CypherSpooler:
                 client = BoltClient(self.uri, user=self.user,
                                     password=self.password)
                 fields, rows = client.run(self.query, database=self.database)
-                for n, row in enumerate(rows, start=1):
-                    obj = dict(zip(fields, row))
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(obj, default=str))
-                    tmp.rename(spool / name)
+                for row in rows:
+                    spool.put(json.dumps(dict(zip(fields, row)), default=str))
             except Exception as e:
                 self.error = e
             finally:
@@ -388,16 +383,6 @@ class CypherSpooler:
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
-
-
-def read_cypher_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a CypherSpooler's dir: each record's JSON object
-    is the message `value` (reference: one message per record)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

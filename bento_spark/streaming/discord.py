@@ -27,9 +27,9 @@ import json
 import threading
 import time
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _API_BASE = "/api/v10"
 
@@ -132,10 +132,9 @@ class DiscordSpooler:
     error: Exception | None = None
 
     def start(self) -> "DiscordSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = DiscordClient(self.endpoint, self.bot_token)
-        state = {"after": None, "n": 0}
+        state = {"after": None}
 
         def one_poll() -> None:
             while True:
@@ -146,11 +145,7 @@ class DiscordSpooler:
                 if not msgs:
                     return
                 for m in msgs:
-                    state["n"] += 1
-                    name = f"{state['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(m))
-                    tmp.rename(spool / name)
+                    spool.put(json.dumps(m))
                     state["after"] = str(m.get("id"))
                 if len(msgs) < self.limit:
                     return
@@ -175,16 +170,6 @@ class DiscordSpooler:
             self._thread = None
         if self.error is not None:
             raise self.error
-
-
-def read_discord_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a DiscordSpooler's dir: the message's API JSON is
-    the row `value` (reference: raw message object per message)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

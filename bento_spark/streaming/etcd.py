@@ -34,9 +34,7 @@ import base64
 import json
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.operators.protobuf_codec import (
     decode_message,
@@ -44,6 +42,7 @@ from bento_spark.operators.protobuf_codec import (
     parse_proto,
 )
 from bento_spark.streaming.grpc_wire import GrpcChannel, MiniGrpcServer
+from bento_spark.streaming.spool import Spool
 
 # Published field numbers: etcd api/etcdserverpb/rpc.proto and
 # api/mvccpb/kv.proto (the subset the watch input needs).
@@ -295,8 +294,7 @@ class EtcdWatchSpooler:
                                    repr=False)
 
     def start(self) -> "EtcdWatchSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         self._watcher = EtcdWatcher(
             self.endpoints, username=self.username, password=self.password,
             auth_enabled=self.auth_enabled)
@@ -306,14 +304,6 @@ class EtcdWatchSpooler:
             with_range=self.with_range,
             progress_notify=self.progress_notify,
             filter_put=self.filter_put, filter_delete=self.filter_delete))
-        counter = {"n": 0}
-
-        def spool_one(events: list) -> None:
-            counter["n"] += 1
-            name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_text(json.dumps(events))
-            tmp.rename(spool / name)
 
         # Block until the server confirms creation — start() returning
         # means the watch horizon is ESTABLISHED: every mutation after
@@ -325,7 +315,7 @@ class EtcdWatchSpooler:
             raise ConnectionError(
                 f"etcd: watch not created: {first.get('cancel_reason', '')}")
         if self.created_notify:  # clientv3 WithCreatedNotify delivers it
-            spool_one(events_to_maps(first.get("events") or []))
+            spool.put(json.dumps(events_to_maps(first.get("events") or [])))
 
         def run() -> None:
             import sys
@@ -337,7 +327,7 @@ class EtcdWatchSpooler:
                     events = events_to_maps(resp.get("events") or [])
                     if not events and not self.progress_notify:
                         continue
-                    spool_one(events)
+                    spool.put(json.dumps(events))
             except (ConnectionError, OSError) as e:
                 if not self._stop.is_set():
                     self.error = f"etcd: {e}"
@@ -354,16 +344,6 @@ class EtcdWatchSpooler:
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
-
-
-def read_etcd_stream(spark, spool_dir: str,
-                     max_files_per_trigger: int | None = None):
-    """File stream over an EtcdWatchSpooler's dir: each WatchResponse's
-    flattened events array is the message `value`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,8 @@ and supply the service-account JSON fields.
 
 Spark-first mapping (identical topology to the S3/Azure listing inputs):
 - input  -> GcsSpooler makes ONE pass over the bucket listing, spooling
-  each object as a JSON envelope (payload base64 + the reference's gcs_*
-  metadata), deleting objects only AFTER the durable rename when
+  each object as one file (the reference's gcs_* metadata in its
+  header), deleting objects only AFTER the durable spool put when
   delete_objects is set.
 - output -> one upload per row, interpolated path as a COLUMN; the four
   collision modes map to ifGenerationMatch / read-concat / existence
@@ -34,7 +34,8 @@ import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _SCOPE = "https://www.googleapis.com/auth/devstorage.read_write"
 
@@ -216,8 +217,8 @@ class GcsClient:
 @dataclass
 class GcsSpooler:
     """`gcp_cloud_storage` input: one pass over the bucket listing
-    (prefix-filtered), one JSON-envelope spool file per object; objects
-    delete only AFTER the durable rename when delete_objects is set."""
+    (prefix-filtered), one spool file per object; objects
+    delete only AFTER the durable spool put when delete_objects is set."""
 
     endpoint: str
     bucket: str
@@ -231,13 +232,11 @@ class GcsSpooler:
     error: Exception | None = None
 
     def start(self) -> "GcsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = GcsClient(self.endpoint, self.credentials)
 
         def run() -> None:
             try:
-                n = 0
                 for item in client.list_objects(self.bucket, self.prefix):
                     if self._stop.is_set():
                         return
@@ -245,19 +244,11 @@ class GcsSpooler:
                     body = client.get_object(self.bucket, name)
                     if body is None:
                         continue  # raced a delete
-                    n += 1
-                    env = {
-                        "payload_b64": base64.b64encode(body).decode(),
-                        "key": name,
-                        "bucket": self.bucket,
-                        "last_modified": item.get("updated"),
-                        "content_type": item.get("contentType"),
-                        "content_encoding": item.get("contentEncoding"),
-                    }
-                    fname = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{fname}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / fname)
+                    # the reference's gcs_* metadata (input_cloud_storage.go:312-317)
+                    spool.put(body, gcs_key=name, gcs_bucket=self.bucket,
+                              gcs_last_modified=item.get("updated"),
+                              gcs_content_type=item.get("contentType"),
+                              gcs_content_encoding=item.get("contentEncoding"))
                     if self.delete_objects:
                         client.delete_object(self.bucket, name)
             except Exception as e:
@@ -282,30 +273,15 @@ class GcsSpooler:
             self._thread = None
 
 
-def read_gcs_stream(spark, spool_dir: str,
-                    max_files_per_trigger: int | None = None):
-    """File stream over a GcsSpooler's dir: JSON envelopes -> `value` +
-    the reference's gcs_* metadata columns
-    (input_cloud_storage.go:312-317), parsed JVM-side."""
+def gcs_columns(df):
+    """A GcsSpooler spool's computed column: `gcs_last_modified_unix`
+    from the RFC 3339 `gcs_last_modified`."""
     from pyspark.sql import functions as F
 
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "payload_b64 STRING, key STRING, bucket STRING, "
-        "last_modified STRING, content_type STRING, content_encoding STRING"))
     return df.select(
-        F.decode(F.unbase64(env["payload_b64"]), "UTF-8").alias("value"),
-        env["key"].alias("gcs_key"),
-        env["bucket"].alias("gcs_bucket"),
-        env["last_modified"].alias("gcs_last_modified"),
-        F.unix_timestamp(
-            F.to_timestamp(env["last_modified"])).alias("gcs_last_modified_unix"),
-        env["content_type"].alias("gcs_content_type"),
-        env["content_encoding"].alias("gcs_content_encoding"),
-    )
+        "value", "gcs_key", "gcs_bucket", "gcs_last_modified",
+        F.unix_timestamp(F.to_timestamp("gcs_last_modified")).alias("gcs_last_modified_unix"),
+        "gcs_content_type", "gcs_content_encoding")
 
 
 # ---------------------------------------------------------------------------

@@ -24,9 +24,9 @@ from __future__ import annotations
 
 import json
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 
 class WebHdfsClient:
@@ -188,7 +188,7 @@ class HdfsSpooler:
     """`hdfs` input (input.go): one LISTSTATUS pass over `directory`,
     each FILE fetched and spooled as one durable message file, then
     `finished` flips True — the reference consumes the listing and
-    stops too. At-least-once: the spool rename is the ack."""
+    stops too. At-least-once: the spool put is the ack."""
 
     hosts: list[str] | str
     user: str
@@ -200,13 +200,11 @@ class HdfsSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "HdfsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
 
         def run() -> None:
             try:
                 client = WebHdfsClient(self.hosts, user=self.user)
-                seq = 0
                 for st in client.list_status(self.directory):
                     if self._stop.is_set():
                         return
@@ -215,15 +213,8 @@ class HdfsSpooler:
                     name_part = st["pathSuffix"]
                     body = client.open(
                         self.directory.rstrip("/") + "/" + name_part)
-                    seq += 1
-                    mt = int(st.get("modificationTime", 0))
-                    name = (f"{seq:012d}-{name_part.encode().hex()}"
-                            f"-{mt:020d}-{uuid.uuid4().hex}.msg")
-                    tmp = spool / f".{name}.tmp"
-                    # 1-byte pad: the text source emits no row for a
-                    # 0-byte file (same fix as the S3 spooler)
-                    tmp.write_bytes(b"." + body)
-                    tmp.rename(spool / name)
+                    spool.put(body, hdfs_path=name_part,
+                              hdfs_modified_ms=int(st.get("modificationTime", 0)))
                 self.finished = True
             except Exception as e:  # surfaced to the caller, not swallowed
                 self.error = f"{type(e).__name__}: {e}"
@@ -239,35 +230,6 @@ class HdfsSpooler:
 
     def stop(self) -> None:
         self._stop.set()
-
-
-def _decorate_hdfs_spool(df):
-    from pyspark.sql import functions as F
-
-    parts = F.split(F.regexp_extract(F.input_file_name(), r"([^/]+)\.msg$", 1), "-")
-    return (df
-            .withColumn("hdfs_path", F.unhex(F.element_at(parts, 2)).cast("string"))
-            .withColumn("hdfs_modified_ms", F.element_at(parts, 3).cast("long"))
-            .withColumn("value", F.expr("substring(value, 2)")))
-
-
-def read_hdfs_stream(spark, spool_dir: str,
-                     max_files_per_trigger: int | None = None):
-    """File stream over an HdfsSpooler's dir: `value string` +
-    hdfs_path / hdfs_modified_ms columns."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return _decorate_hdfs_spool(df)
-
-
-def read_hdfs_spool_batch(spark, spool_dir: str):
-    """Batch twin of read_hdfs_stream for bounded listing-mode
-    consumption (one listing pass == a complete batch, input.go)."""
-    df = (spark.read.format("text").option("wholetext", "true")
-          .load(f"{spool_dir}/*.msg"))
-    return _decorate_hdfs_spool(df)
 
 
 class MiniWebHdfsServer:

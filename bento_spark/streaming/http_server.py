@@ -2,24 +2,16 @@
 
 Reference: the http_server input exposes a POST endpoint and turns each
 request body into a message (multipart parts become a batch)
-(/root/reference/internal/impl/io/input_http_server.go:44,461-478). It is
+(internal/impl/io/input_http_server.go:44,461-478). It is
 the reference's webhook-style push source.
 
-Spark-first mapping — the spool-directory bridge: Structured Streaming has
-no push source (sources must be replayable), so a driver-side HTTP listener
-persists each accepted request body as one spool file, and the stream is a
-plain file source over the spool directory. That keeps every streaming
-guarantee intact: the file source's offset log makes ingestion replayable
-and exactly-once downstream, which a socket-style push source can never be.
-The same pattern is how production Spark ingests webhooks without Kafka
-(HTTP -> durable object store -> file stream); at scale the listener is a
-fleet writing to S3/GCS and ONLY the spool location changes — the Spark
-side of this module is already that shape.
+Spark-first mapping: a spool bridge (streaming/spool.py). A driver-side
+HTTP listener persists each accepted request body as one spool file, and
+the stream is a file source over the spool dir.
 
 The listener is dev-grade like the reference's (single host, no TLS/auth):
-it acknowledges with 200 only AFTER the spool file is durably renamed into
-place (write-to-temp + atomic rename, so the file source never reads a
-partial body). Responses: 200 on accept, 404 wrong path, 405 non-POST.
+it acknowledges with 200 only after the spool file is durably in place.
+Responses: 200 on accept, 404 wrong path, 405 non-POST.
 """
 
 from __future__ import annotations
@@ -29,7 +21,7 @@ import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from bento_spark.streaming.spool import Spool
 
 
 @dataclass
@@ -54,14 +46,11 @@ class HttpSpoolServer:
         import os
         import time
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         sync_dir, sync_timeout = self.sync_dir, self.sync_timeout
         if sync_dir:
             Path(sync_dir).mkdir(parents=True, exist_ok=True)
         route = self.path
-        seq = {"n": 0}
-        lock = threading.Lock()
 
         def await_response(request_id: str) -> bytes | None:
             """File-based reply handoff: executor tasks (separate
@@ -90,23 +79,16 @@ class HttpSpoolServer:
                     # body would violate the durable-ack contract
                     self.send_error(411)
                     return
+                # sync mode: the routing key the row carries as request_id
+                request_id = uuid.uuid4().hex if sync_dir else None
                 try:
-                    n = int(self.headers["Content-Length"])
-                    body = self.rfile.read(n)
-                    with lock:
-                        seq["n"] += 1
-                        i = seq["n"]
-                    # monotonic prefix keeps arrival order sortable; uuid
-                    # disambiguates across restarts sharing a spool dir
-                    name = f"{i:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_bytes(body)
-                    tmp.rename(spool / name)  # atomic: never a partial file
+                    body = self.rfile.read(int(self.headers["Content-Length"]))
+                    spool.put(body, request_id=request_id)
                 except Exception as e:  # noqa: BLE001 — fault -> 500, keep serving
                     self.send_error(500, str(e))
                     return
-                if sync_dir:
-                    reply = await_response(name[:-len(".msg")])
+                if request_id:
+                    reply = await_response(request_id)
                     if reply is None:
                         # reference gateway semantics: processing didn't
                         # produce a response in time
@@ -167,23 +149,13 @@ class TcpSpoolServer:
     def start(self) -> "TcpSpoolServer":
         import socketserver
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        seq = {"n": 0}
-        lock = threading.Lock()
+        spool = Spool(self.spool_dir)
 
         class Handler(socketserver.StreamRequestHandler):
             def handle(self) -> None:
                 data = self.rfile.read()
-                if not data:
-                    return
-                with lock:
-                    seq["n"] += 1
-                    i = seq["n"]
-                name = f"{i:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(data)
-                tmp.rename(spool / name)
+                if data:
+                    spool.put(data)
 
         class Server(socketserver.ThreadingTCPServer):
             allow_reuse_address = True
@@ -307,13 +279,11 @@ class WebSocketSpooler:
     def start(self) -> "WebSocketSpooler":
         import os as _os
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         sock, rest = ws_connect(self.url, tls_insecure=self.tls_insecure)
         if self.open_message is not None:
             sock.sendall(self.client_frame(0x1, self.open_message.encode(), _os.urandom(4)))
         self._sock = sock
-        seq = {"n": 0}
 
         def read_exact(n: int, pre: bytearray) -> bytes:
             while len(pre) < n:
@@ -354,13 +324,8 @@ class WebSocketSpooler:
                     if opcode in (0x1, 0x2, 0x0):
                         fragments.append(payload)
                         if fin:
-                            msg = b"".join(fragments)
+                            spool.put(b"".join(fragments))
                             fragments = []
-                            seq["n"] += 1
-                            name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                            tmp = spool / f".{name}.tmp"
-                            tmp.write_bytes(msg)
-                            tmp.rename(spool / name)
             except (ConnectionError, OSError):
                 # socket teardown ends the input, like the reference; close
                 # eagerly so a protocol failure (masked server frame) tears
@@ -417,9 +382,7 @@ class HttpPollSpooler:
     def start(self) -> "HttpPollSpooler":
         import urllib.request
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        seq = {"n": 0}
+        spool = Spool(self.spool_dir)
         state = {"last": None}
 
         def poll_loop() -> None:
@@ -434,11 +397,7 @@ class HttpPollSpooler:
                         self.drop_repeats and body == state["last"]
                     ):
                         state["last"] = body
-                        seq["n"] += 1
-                        name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(body)
-                        tmp.rename(spool / name)
+                        spool.put(body)
                 except Exception:  # noqa: BLE001 — poll faults retry next tick
                     pass
                 self._stop.wait(self.interval_s)
@@ -452,33 +411,6 @@ class HttpPollSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_spool_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    whole_body: bool = True,
-    max_files_per_trigger: int | None = None,
-    with_request_id: bool = False,
-) -> DataFrame:
-    """File stream over the spool dir: one row per request body
-    (whole_body=True, the reference's message-per-request semantics) or one
-    row per body line (False). Column: `value string`; `with_request_id`
-    adds the spool file's stem as `request_id` — the routing key a
-    `sync_response` output uses to reply to the originating HTTP request."""
-    from pyspark.sql import functions as F
-
-    rd = spark.readStream.format("text").option("wholetext", str(whole_body).lower())
-    if max_files_per_trigger is not None:
-        rd = rd.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    # only completed spool files (dotfiles/tmp are hidden from file sources
-    # by Spark's default path filter; the glob keeps it explicit)
-    df = rd.load(f"{spool_dir}/*.msg")
-    if with_request_id:
-        df = df.withColumn(
-            "request_id", F.regexp_extract(F.input_file_name(), r"([^/]+)\.msg$", 1)
-        )
-    return df
 
 
 class HttpServeOutput:

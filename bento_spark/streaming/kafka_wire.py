@@ -22,9 +22,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
 - input  -> KafkaSpooler fetches per-partition from tracked offsets and
   persists each record as a durable spool file BEFORE advancing the
   offset file (write-then-commit = at-least-once, the reference input's
-  guarantee). topic/partition/offset/key ride the spool FILENAME
-  hex-encoded and surface as `kafka_topic`/`kafka_partition`/
-  `kafka_offset`/`kafka_key` columns decoded JVM-side, so replays keep
+  guarantee). topic/partition/offset/key ride the spool file's header
+  and surface as `kafka_topic`/`kafka_partition`/
+  `kafka_offset`/`kafka_key` columns parsed JVM-side, so replays keep
   exact record identity and downstream dedupe-by-offset is a pure
   relational op.
 - output -> foreachBatch producer: the value is serialized JVM-side
@@ -51,7 +51,8 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) — slice-by-8
@@ -688,12 +689,11 @@ class KafkaSpooler:
         return False
 
     def start(self) -> "KafkaSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = KafkaWireClient(self.host, self.port, sasl=self.sasl)
         self._client = client
         meta = client.metadata(self.topics)
-        offsets_path = spool / ".offsets.json"
+        offsets_path = spool.dir / ".offsets.json"
         offsets: dict[str, int] = {}
         if offsets_path.exists():
             offsets = {k: int(v) for k, v in json.loads(offsets_path.read_text()).items()}
@@ -704,10 +704,9 @@ class KafkaSpooler:
                 key = f"{topic}/{pid}"
                 if key not in offsets:
                     offsets[key] = client.list_offsets(topic, pid, -2)
-        seq = {"n": 0}
 
         def commit_offsets() -> None:
-            tmp = spool / ".offsets.json.tmp"
+            tmp = spool.dir / ".offsets.json.tmp"
             tmp.write_text(json.dumps(offsets))
             tmp.rename(offsets_path)
 
@@ -743,27 +742,15 @@ class KafkaSpooler:
                         print(self.error, file=sys.stderr)
                         return
                     for off, ts, rkey, value, _hdrs in recs[: self.checkpoint_limit]:
-                        seq["n"] += 1
-                        # topic/partition/offset/key ride the filename ->
                         # kafka_* metadata columns (input_kafka_franz.go
-                        # record metadata), decoded JVM-side. The spec's
-                        # "no timestamp" sentinel -1 clamps to 0 so the
-                        # fixed-width filename stays parseable.
-                        # the 1-char flag distinguishes a tombstone (null
-                        # value, compacted-topic delete) from an empty
-                        # message; the body gets a 1-byte pad because
-                        # Spark's text source emits NO row for a 0-byte
-                        # file — tombstones and empty messages would
-                        # silently vanish from the stream
-                        name = (
-                            f"{seq['n']:012d}-{topic.encode().hex()}-{pid:05d}"
-                            f"-{off:020d}-{max(ts, 0):020d}-{(rkey or b'').hex()}"
-                            f"-{'n' if value is None else 'v'}"
-                            f"-{uuid.uuid4().hex}.msg"
-                        )
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(b"." + (value or b""))
-                        tmp.rename(spool / name)
+                        # record metadata). The spec's "no timestamp"
+                        # sentinel -1 clamps to 0; the tombstone flag tells
+                        # a null value (compacted-topic delete) from an
+                        # empty message
+                        spool.put(value or b"", kafka_topic=topic, kafka_partition=pid,
+                                  kafka_offset=off, kafka_ts=max(ts, 0),
+                                  kafka_key=rkey.decode("utf-8", "replace") if rkey else None,
+                                  kafka_tombstone=value is None)
                         offsets[key] = off + 1
                         progressed = True
                     if progressed:
@@ -785,38 +772,18 @@ class KafkaSpooler:
             self._thread = None
 
 
-def read_kafka_wire_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a KafkaSpooler's dir: `value string` plus
-    kafka_topic/kafka_partition/kafka_offset/kafka_ts/kafka_key columns
-    decoded from the filename JVM-side — the same metadata surface as the
-    jar-backed source (streaming/kafka.py), so pipelines swap freely."""
+def kafka_columns(df):
+    """A KafkaSpooler spool's computed columns: a tombstone reads as a NULL
+    `value` (compacted-topic delete semantics survive the spool bridge) and
+    `kafka_ts` is a timestamp from the record's millis — the same surface
+    as the jar-backed source (streaming/kafka.py), so pipelines swap
+    freely."""
     from pyspark.sql import functions as F
 
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = (r"/\d{12}-([0-9a-f]*)-(\d{5})-(\d{20})-(\d{20})-([0-9a-f]*)"
-           r"-([nv])-[0-9a-f]{32}\.msg$")
-    key = F.decode(F.unhex(F.regexp_extract(fname, pat, 5)), "UTF-8")
-    return (
-        # strip the 1-byte pad (see the spooler: 0-byte files emit no row
-        # from the text source); tombstones (flag 'n') surface value as
-        # NULL — compacted-topic delete semantics survive the spool bridge
-        df.withColumn("value", F.when(
-              F.regexp_extract(fname, pat, 6) == "n",
-              F.lit(None).cast("string"))
-          .otherwise(F.expr("substring(value, 2)")))
-          .withColumn("kafka_topic",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("kafka_partition", F.regexp_extract(fname, pat, 2).cast("int"))
-          .withColumn("kafka_offset", F.regexp_extract(fname, pat, 3).cast("bigint"))
-          .withColumn("kafka_ts", F.timestamp_millis(
-              F.regexp_extract(fname, pat, 4).cast("bigint")))
-          .withColumn("kafka_key", F.when(key != "", key))
-    )
+    return df.select(
+        F.when(~F.col("kafka_tombstone"), F.col("value")).alias("value"),
+        "kafka_topic", "kafka_partition", "kafka_offset",
+        F.timestamp_millis("kafka_ts").alias("kafka_ts"), "kafka_key")
 
 
 # --------------------------------------------------------------------------

@@ -18,7 +18,7 @@ Spark-first mapping (same spool-bridge rationale as kafka_franz):
 - input  -> KinesisSpooler iterates every shard from TRIM_HORIZON (or
   the checkpointed sequence), spools each record BEFORE advancing the
   sequence file (files-then-checkpoint = at-least-once). shard id +
-  sequence number + partition key ride the spool FILENAME and surface as
+  sequence number + partition key ride the spool file's header and surface as
   `kinesis_shard`/`kinesis_sequence`/`kinesis_partition_key` columns.
 - output -> foreachBatch PutRecords (<=500/request, the API cap), data
   serialized JVM-side, the interpolated partition key as a COLUMN.
@@ -30,10 +30,9 @@ import base64
 import hashlib
 import json
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
+from bento_spark.streaming.spool import Spool
 from bento_spark.streaming.sqs import sigv4_headers
 
 _TARGET = "Kinesis_20131202"
@@ -150,11 +149,10 @@ class KinesisSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "KinesisSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = KinesisClient(self.endpoint, self.access_key, self.secret_key,
                                region=self.region)
-        ckpt_path = spool / ".sequences.json"
+        ckpt_path = spool.dir / ".sequences.json"
         sequences: dict[str, str] = {}
         if ckpt_path.exists():
             sequences = json.loads(ckpt_path.read_text())
@@ -164,10 +162,9 @@ class KinesisSpooler:
                 key = f"{stream}/{shard}"
                 iterators[(stream, shard)] = client.get_shard_iterator(
                     stream, shard, after_sequence=sequences.get(key))
-        seq_counter = {"n": 0}
 
         def commit() -> None:
-            tmp = spool / ".sequences.json.tmp"
+            tmp = spool.dir / ".sequences.json.tmp"
             tmp.write_text(json.dumps(sequences))
             tmp.rename(ckpt_path)
 
@@ -204,18 +201,12 @@ class KinesisSpooler:
                             del iterators[(stream, shard)]
                             continue
                         for rec in records:
-                            seq_counter["n"] += 1
-                            data = base64.b64decode(rec.get("Data", ""))
                             sn = rec.get("SequenceNumber", "")
-                            pk = rec.get("PartitionKey", "")
-                            name = (f"{seq_counter['n']:012d}"
-                                    f"-{stream.encode().hex()}"
-                                    f"-{shard.encode().hex()}"
-                                    f"-{sn.encode().hex()}-{pk.encode().hex()}"
-                                    f"-{uuid.uuid4().hex}.msg")
-                            tmp = spool / f".{name}.tmp"
-                            tmp.write_bytes(data)
-                            tmp.rename(spool / name)
+                            # the reference's record metadata
+                            spool.put(base64.b64decode(rec.get("Data", "")),
+                                      kinesis_stream=stream, kinesis_shard=shard,
+                                      kinesis_sequence=sn,
+                                      kinesis_partition_key=rec.get("PartitionKey", ""))
                             sequences[f"{stream}/{shard}"] = sn
                             progressed = True
                         if records:
@@ -238,33 +229,6 @@ class KinesisSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_kinesis_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a KinesisSpooler's dir: `value string` +
-    kinesis_stream/kinesis_shard/kinesis_sequence/kinesis_partition_key
-    decoded from the filename JVM-side (the reference's record
-    metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = (r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-([0-9a-f]*)-([0-9a-f]*)"
-           r"-[0-9a-f]{32}\.msg$")
-
-    def hexcol(i: int):
-        return F.decode(F.unhex(F.regexp_extract(fname, pat, i)), "UTF-8")
-
-    return (
-        df.withColumn("kinesis_stream", hexcol(1))
-          .withColumn("kinesis_shard", hexcol(2))
-          .withColumn("kinesis_sequence", hexcol(3))
-          .withColumn("kinesis_partition_key", hexcol(4))
-    )
 
 
 # --------------------------------------------------------------------------

@@ -16,8 +16,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   replayable Spark source; QoS1 PUBACK is only sent AFTER the spool file
   is durably renamed — the broker redelivers anything unacked, giving
   at-least-once into the spool, dedupe-able downstream).
-  The topic rides the spool FILENAME (hex-encoded) and surfaces as an
-  `mqtt_topic` column, decoded JVM-side — no Python in the hot path.
+  The topic rides the spool file's header and surfaces as an
+  `mqtt_topic` column, parsed JVM-side — no Python in the hot path.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON (executor-side, never a driver loop); QoS1 waits
   for PUBACK per message. At-least-once across checkpoint replay, like
@@ -36,7 +36,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 CONNECT, CONNACK, PUBLISH, PUBACK = 1, 2, 3, 4
 SUBSCRIBE, SUBACK, UNSUBSCRIBE, UNSUBACK = 8, 9, 10, 11
@@ -207,7 +208,7 @@ class MqttClient:
 class MqttSpooler:
     """`mqtt` input (input.go): subscribe and spool each message as one
     durable file. QoS1 semantics hold end-to-end: recv_publish PUBACKs
-    only after this loop's atomic rename (the file IS the ack barrier)."""
+    only after this loop's spool put (the file IS the ack barrier)."""
 
     host: str
     port: int
@@ -221,8 +222,7 @@ class MqttSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "MqttSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         # subscribe BEFORE returning so no publish races the subscription
         client = MqttClient(self.host, self.port, client_id=self.client_id,
                             clean_session=self.clean_session)
@@ -231,7 +231,6 @@ class MqttSpooler:
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -242,14 +241,8 @@ class MqttSpooler:
                 if got is None:
                     return
                 topic, payload, qos, retained = got
-                seq["n"] += 1
-                # topic rides the filename hex-encoded -> an mqtt_topic
-                # column decodable JVM-side (unhex), mirroring the
-                # reference's mqtt_topic metadata
-                name = f"{seq['n']:012d}-{topic.encode('utf-8').hex()}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(payload)
-                tmp.rename(spool / name)
+                # the reference's mqtt_topic metadata
+                spool.put(payload, mqtt_topic=topic)
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -263,22 +256,6 @@ class MqttSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_mqtt_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an MqttSpooler's dir: `value string` + `mqtt_topic`
-    (decoded from the filename JVM-side — input.go's mqtt_topic meta)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return df.withColumn(
-        "mqtt_topic",
-        F.decode(F.unhex(F.regexp_extract(
-            F.input_file_name(), r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$", 1)), "UTF-8"),
-    )
 
 
 # --------------------------------------------------------------------------

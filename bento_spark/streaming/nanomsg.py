@@ -29,9 +29,9 @@ from __future__ import annotations
 import socket
 import struct
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _PROTO = {"PAIR": 16, "PUB": 32, "SUB": 33, "REQ": 48, "REP": 49,
           "PUSH": 80, "PULL": 81}
@@ -263,8 +263,7 @@ class NanomsgSpooler:
                 "must provide at least one sub filter when connecting with a "
                 "SUB socket, in order to subscribe to all messages add an "
                 "empty string")  # input.go:109 verbatim contract
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         sock = NanomsgSocket(
             self.socket_type,
             [f.encode("utf-8") for f in (self.sub_filters or [])])
@@ -275,18 +274,12 @@ class NanomsgSpooler:
             for u in self.urls:
                 sock.connect(*parse_nanomsg_url(u))
         self._sock = sock
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
                 msg = sock.recv(timeout=0.2)
-                if msg is None:
-                    continue
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(msg)
-                tmp.rename(spool / name)
+                if msg is not None:
+                    spool.put(msg)
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -304,15 +297,6 @@ class NanomsgSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_nanomsg_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a NanomsgSpooler's dir: `value string`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

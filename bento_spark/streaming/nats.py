@@ -17,8 +17,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   (at-most-once — no acks in the protocol; JetStream adds them but is a
   different protocol layer), matching the reference core-`nats` input's
   delivery guarantee. The subject and reply subject ride the spool
-  FILENAME hex-encoded and surface as `nats_subject` /
-  `nats_reply_subject` columns, decoded JVM-side.
+  file's header and surface as `nats_subject` /
+  `nats_reply_subject` columns, parsed JVM-side.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON executor-side. The subject supports `${! expr }`
   interpolation (output.go's InterpolatedStringField) — computed as a
@@ -37,7 +37,8 @@ import socket
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _CRLF = b"\r\n"
 
@@ -218,8 +219,7 @@ class NatsSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "NatsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         # subscribe + flush BEFORE returning so no publish races it
         client = NatsClient(self.host, self.port)
         client.subscribe(self.subject, queue=self.queue)
@@ -228,7 +228,6 @@ class NatsSpooler:
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -237,15 +236,8 @@ class NatsSpooler:
                 except (ConnectionError, OSError, ValueError):
                     return  # socket closed by stop() or server
                 subject, _sid, reply, payload = got
-                seq["n"] += 1
-                # subject + reply ride the filename hex-encoded ->
-                # nats_subject / nats_reply_subject columns decodable
-                # JVM-side (input.go:200-201 metadata)
-                name = (f"{seq['n']:012d}-{subject.encode().hex()}"
-                        f"-{(reply or '').encode().hex()}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(payload)
-                tmp.rename(spool / name)
+                # input.go:200-201 metadata
+                spool.put(payload, nats_subject=subject, nats_reply_subject=reply or None)
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -259,26 +251,6 @@ class NatsSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_nats_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over a NatsSpooler's dir: `value string` +
-    `nats_subject` / `nats_reply_subject` (decoded from the filename
-    JVM-side — input.go's metadata fields; reply is NULL when absent)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    reply = F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8")
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_reply_subject", F.when(reply != "", reply))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -923,8 +895,7 @@ class JetStreamSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "JetStreamSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = NatsJsClient(self.host, self.port)
         cfg = {
             "stream_name": self.stream,
@@ -939,7 +910,6 @@ class JetStreamSpooler:
         client.js_api(f"CONSUMER.DURABLE.CREATE.{self.stream}.{self.durable}",
                       cfg)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             next_subj = f"CONSUMER.MSG.NEXT.{self.stream}.{self.durable}"
@@ -958,13 +928,8 @@ class JetStreamSpooler:
                 # ($JS.ACK.<stream>.<consumer>.<delivered>.<sseq>...)
                 toks = (reply or "").split(".")
                 sseq = toks[5] if len(toks) > 5 else "0"
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{subject.encode().hex()}"
-                        f"-{int(sseq):020d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(b"." + payload)  # 1-byte pad (empty KV values)
-                tmp.rename(spool / name)
-                if reply:  # ack AFTER the durable rename
+                spool.put(payload, nats_subject=subject, nats_sequence=int(sseq))
+                if reply:  # ack AFTER the durable put
                     client.publish(reply, b"+ACK")
 
         self._thread = threading.Thread(target=run, daemon=True)
@@ -998,45 +963,6 @@ class JetStreamSpooler:
             self._client = None
         if self._thread is not None:
             self._thread.join(timeout=2)
-
-
-def read_jetstream_stream(spark, spool_dir: str,
-                          max_files_per_trigger: int | None = None):
-    """File stream over a JetStreamSpooler's dir: `value string` +
-    nats_subject / nats_sequence columns."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_sequence",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )
-
-
-def read_jetstream_spool_batch(spark, spool_dir: str):
-    """Batch twin of read_jetstream_stream for bounded drains (a fully
-    acked spool IS a complete batch)."""
-    from pyspark.sql import functions as F
-
-    df = (spark.read.format("text").option("wholetext", "true")
-          .load(f"{spool_dir}/*.msg"))
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_sequence",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )
 
 
 class NatsKvCache:
@@ -1448,8 +1374,7 @@ class NatsOsSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "NatsOsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = NatsJsClient(self.host, self.port)
         stream = f"OBJ_{self.bucket}"
         client.js_api(f"CONSUMER.DURABLE.CREATE.{stream}.{self.durable}", {
@@ -1459,7 +1384,6 @@ class NatsOsSpooler:
                        "filter_subject": f"$O.{self.bucket}.M.>"}})
         self._client = client
         store = NatsObjectStore(client, self.bucket)
-        seq = {"n": 0}
 
         def run() -> None:
             next_subj = f"CONSUMER.MSG.NEXT.{stream}.{self.durable}"
@@ -1472,15 +1396,8 @@ class NatsOsSpooler:
                         continue
                     meta = json.loads(payload)
                     if not meta.get("deleted"):
-                        body = store._assemble(meta)
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}"
-                                f"-{meta['name'].encode().hex()}"
-                                f"-{int(meta['size']):020d}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(b"." + body)
-                        tmp.rename(spool / name)
+                        spool.put(store._assemble(meta), nats_object_name=meta["name"],
+                                  nats_object_size=int(meta["size"]))
                     if reply:
                         client.publish(reply, b"+ACK")
                 except (ConnectionError, OSError, ValueError, KeyError) as e:
@@ -1499,24 +1416,3 @@ class NatsOsSpooler:
             self._client = None
         if self._thread is not None:
             self._thread.join(timeout=2)
-
-
-def read_nats_os_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a NatsOsSpooler's dir: `value string` +
-    nats_object_name / nats_object_size columns (input_os.go metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_object_name",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_object_size",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )

@@ -15,11 +15,11 @@ availability-gated.
 Spark-first mapping (same spool-bridge rationale as every push source):
 - input  -> NsqSpooler SUBs a channel with RDY flow control and persists
   each message as a durable spool file; FIN is sent only AFTER the
-  atomic rename, so at-least-once holds into the replayable file source
+  spool put, so at-least-once holds into the replayable file source
   (a crash before FIN means nsqd re-delivers with attempts+1 — the
   protocol's contract and the reference's). attempts/id/timestamp ride
-  the spool FILENAME and surface as `nsq_attempts`/`nsq_id`/
-  `nsq_timestamp` columns decoded JVM-side.
+  the spool file's header and surface as `nsq_attempts`/`nsq_id`/
+  `nsq_timestamp` columns parsed JVM-side.
 - output -> foreachBatch publisher: one connection per partition, rows
   publish as JSON serialized JVM-side (to_json); each PUB waits for its
   OK response frame, so a failed publish fails the micro-batch for
@@ -39,7 +39,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _I32 = struct.Struct(">i")
 _MAGIC = b"  V2"
@@ -146,7 +147,7 @@ def parse_nsqd_addr(addr: str) -> tuple[str, int]:
 @dataclass
 class NsqSpooler:
     """`nsq` input (input.go): SUB a channel, RDY `max_in_flight`, spool
-    each message as one durable file, FIN only after the atomic rename —
+    each message as one durable file, FIN only after the spool put —
     at-least-once. Messages whose attempts exceed `max_attempts` are
     FINned without spooling (the reference's discard path)."""
 
@@ -162,14 +163,12 @@ class NsqSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "NsqSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = NsqClient(self.host, self.port)
         client.sub(self.topic, self.channel)
         client.rdy(self.max_in_flight)
         client.sock.settimeout(None)  # idle subscriber blocks on push traffic
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -181,12 +180,9 @@ class NsqSpooler:
                     client.fin(msg_id)  # poison message discard (input.go)
                     client.rdy(self.max_in_flight)
                     continue
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{msg_id.decode('ascii')}"
-                        f"-{attempts:05d}-{ts:020d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)
+                # input.go:248-251 metadata
+                spool.put(body, nsq_id=msg_id.decode("ascii"), nsq_attempts=attempts,
+                          nsq_timestamp=ts)
                 try:
                     client.fin(msg_id)  # ack AFTER durability
                     # RDY is a decrementing allowance (spec: the server
@@ -208,25 +204,6 @@ class NsqSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_nsq_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an NsqSpooler's dir: `value string` +
-    `nsq_id`/`nsq_attempts`/`nsq_timestamp` (decoded from the filename
-    JVM-side — input.go:248-251 metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]{16})-(\d{5})-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nsq_id", F.regexp_extract(fname, pat, 1))
-          .withColumn("nsq_attempts", F.regexp_extract(fname, pat, 2).cast("int"))
-          .withColumn("nsq_timestamp", F.regexp_extract(fname, pat, 3).cast("bigint"))
-    )
 
 
 # --------------------------------------------------------------------------

@@ -19,7 +19,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
 - input  -> PubSubSpooler pulls and spools each message BEFORE
   acknowledge (ack-after-durability = at-least-once: an un-acked message
   re-delivers after the ack deadline, the Pub/Sub contract). messageId
-  rides the spool FILENAME as `pubsub_message_id`.
+  rides the spool file's header as `pubsub_message_id`.
 - output -> foreachBatch publish; the interpolated topic arrives as a
   COLUMN, data is base64 of the JVM-serialized JSON row.
 """
@@ -30,9 +30,9 @@ import base64
 import json
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 
 # --------------------------------------------------------------------------
@@ -212,13 +212,11 @@ class PubSubSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "PubSubSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = PubSubClient(self.endpoint, credentials=self.credentials)
         if self.create_topic:
             client.create_subscription(self.project, self.subscription,
                                        self.create_topic)
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -236,14 +234,8 @@ class PubSubSpooler:
                     acks = []
                     for rm in got:
                         msg = rm.get("message") or {}
-                        data = base64.b64decode(msg.get("data", ""))
-                        mid = msg.get("messageId", "")
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}-{mid.encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(data)
-                        tmp.rename(spool / name)
+                        spool.put(base64.b64decode(msg.get("data", "")),
+                                  pubsub_message_id=msg.get("messageId") or None)
                         acks.append(rm["ackId"])
                 except Exception as e:  # disk/decode faults: surface loudly
                     import sys
@@ -265,22 +257,6 @@ class PubSubSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_pubsub_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a PubSubSpooler's dir: `value string` +
-    `pubsub_message_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    mid = F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8")
-    return df.withColumn("pubsub_message_id", F.when(mid != "", mid))
 
 
 # --------------------------------------------------------------------------

@@ -32,9 +32,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
 - input  -> PulsarSpooler subscribes (SUBSCRIBE/FLOW/MESSAGE/ACK) and
   persists each message as a durable spool file BEFORE acking, so
   unacked messages redeliver on reconnect: at-least-once, the reference
-  input's guarantee. Each spool file is a JSON envelope; payload +
-  pulsar_* metadata columns are extracted JVM-side with from_json — no
-  Python touches rows after the driver-side control-plane bridge.
+  input's guarantee. The pulsar_* metadata rides the spool file's header
+  and is parsed JVM-side — no Python touches rows after the driver-side
+  control-plane bridge.
 - output -> foreachBatch producer: rows render to JSON JVM-side
   (to_json), interpolated key / ordering_key arrive as pre-computed
   COLUMNS, one connection per partition, sends pipelined with a receipt
@@ -49,17 +49,13 @@ routes by hash of the key. The mini broker implements shared round-robin
 
 from __future__ import annotations
 
-import base64
-import json
 import re
 import socket
 import struct
 import threading
 import time
-import uuid
 import zlib
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.operators.protobuf_codec import (
     _tag,
@@ -68,6 +64,7 @@ from bento_spark.operators.protobuf_codec import (
     parse_proto,
 )
 from bento_spark.streaming.kafka_wire import crc32c
+from bento_spark.streaming.spool import Spool
 
 _MAGIC = b"\x0e\x01"
 
@@ -536,19 +533,12 @@ class Consumer:
 # input bridge
 # ---------------------------------------------------------------------------
 
-_ENVELOPE_DDL = (
-    "payload_b64 STRING, topic STRING, message_id STRING, key STRING, "
-    "ordering_key STRING, publish_time_ms BIGINT, event_time_ms BIGINT, "
-    "redelivery_count INT, producer_name STRING, properties MAP<STRING,STRING>"
-)
-
-
 @dataclass
 class PulsarSpooler:
     """`pulsar` input (input.go): subscribe to one or more topics (or a
     topics_pattern resolved via GetTopicsOfNamespace against the pattern's
-    namespace) and spool each message as one durable JSON-envelope file.
-    The ACK is sent only AFTER the atomic rename — a crash between
+    namespace) and spool each message as one durable file.
+    The ACK is sent only AFTER the spool put — a crash between
     delivery and ack leaves the message unacked, so the broker redelivers:
     at-least-once, the reference's guarantee."""
 
@@ -566,8 +556,7 @@ class PulsarSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "PulsarSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         topics = list(self.topics)
         if self.topics_pattern:
             # pattern namespace = everything before the final path segment
@@ -584,8 +573,6 @@ class PulsarSpooler:
         if not topics:
             raise ValueError("pulsar input: no topics (set topics or "
                              "topics_pattern matching existing topics)")
-        seq = {"n": 0}
-        lock = threading.Lock()
         for topic in topics:
             client = PulsarClient(self.host, self.port, token=self.token)
             consumer = Consumer(client, topic, self.subscription,
@@ -593,13 +580,12 @@ class PulsarSpooler:
             client.sock.settimeout(None)  # idle subscriber blocks on push
             self._clients.append((client, consumer))
             t = threading.Thread(
-                target=self._run, args=(consumer, spool, seq, lock), daemon=True)
+                target=self._run, args=(consumer, spool), daemon=True)
             t.start()
             self._threads.append(t)
         return self
 
-    def _run(self, consumer: Consumer, spool: Path, seq: dict,
-             lock: threading.Lock) -> None:
+    def _run(self, consumer: Consumer, spool: Spool) -> None:
         while not self._stop.is_set():
             try:
                 msg = consumer.receive()
@@ -610,27 +596,22 @@ class PulsarSpooler:
             props = {kv["key"]: kv["value"]
                      for kv in (smm.get("properties") or meta.get("properties")
                                 or [])}
-            env = {
-                "payload_b64": base64.b64encode(msg.payload).decode(),
-                "topic": msg.topic,
-                "message_id": f"{msg.message_id[0]}:{msg.message_id[1]}",
-                "key": smm.get("partition_key") or meta.get("partition_key"),
-                "ordering_key": (
+            event_time_ms = int(smm.get("event_time") or meta.get("event_time") or 0)
+            # the reference's pulsar_* metadata (input.go:267-284)
+            spool.put(
+                msg.payload,
+                pulsar_topic=msg.topic,
+                pulsar_message_id=f"{msg.message_id[0]}:{msg.message_id[1]}",
+                pulsar_key=smm.get("partition_key") or meta.get("partition_key"),
+                pulsar_ordering_key=(
                     (smm.get("ordering_key") or meta.get("ordering_key")
                      or b"").decode("utf-8", "replace") or None),
-                "publish_time_ms": int(meta.get("publish_time") or 0),
-                "event_time_ms": int(smm.get("event_time")
-                                     or meta.get("event_time") or 0) or None,
-                "redelivery_count": msg.redelivery_count,
-                "producer_name": meta.get("producer_name"),
-                "properties": props,
-            }
-            with lock:
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_text(json.dumps(env))
-            tmp.rename(spool / name)
+                pulsar_publish_time_unix=int(meta.get("publish_time") or 0) // 1000,
+                pulsar_redelivery_count=msg.redelivery_count,
+                pulsar_event_time_unix=event_time_ms // 1000 if event_time_ms else None,
+                pulsar_producer_name=meta.get("producer_name"),
+                pulsar_properties=props,
+            )
             # durable BEFORE ack -> at-least-once
             try:
                 consumer.ack(msg.message_id)
@@ -645,34 +626,6 @@ class PulsarSpooler:
         for t in self._threads:
             t.join(timeout=5)
         self._threads.clear()
-
-
-def read_pulsar_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a PulsarSpooler's dir: JSON envelopes parsed
-    JVM-side (from_json, codegen) into `value` plus the reference's
-    pulsar_* metadata columns (input.go:267-284)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), _ENVELOPE_DDL)
-    return df.select(
-        F.decode(F.unbase64(env["payload_b64"]), "UTF-8").alias("value"),
-        env["topic"].alias("pulsar_topic"),
-        env["message_id"].alias("pulsar_message_id"),
-        env["key"].alias("pulsar_key"),
-        env["ordering_key"].alias("pulsar_ordering_key"),
-        (env["publish_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("pulsar_publish_time_unix"),
-        env["redelivery_count"].alias("pulsar_redelivery_count"),
-        (env["event_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("pulsar_event_time_unix"),
-        env["producer_name"].alias("pulsar_producer_name"),
-        env["properties"].alias("pulsar_properties"),
-    )
 
 
 # ---------------------------------------------------------------------------

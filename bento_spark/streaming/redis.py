@@ -22,7 +22,7 @@ in-process instead of availability-gated.
 Spark-first mapping:
 - push/pop inputs spool to durable files (the replayable-source bridge
   every push source here uses). The streams input XACKs only AFTER the
-  spool rename — at-least-once into the file source, the same ack-barrier
+  spool put — at-least-once into the file source, the same ack-barrier
   contract as the reference (and the MQTT QoS1 input). The list input is
   destructive-read (BLPOP), so loss is bounded to one in-flight message
   on a crash, exactly the reference's window; pubsub is fire-and-forget
@@ -42,9 +42,9 @@ import json
 import socket
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _CRLF = b"\r\n"
 
@@ -217,25 +217,15 @@ def parse_redis_url(url: str) -> tuple[str, int]:
 
 
 @dataclass
-class _SpoolerBase:
+class _RedisSubscriber:
+    """The connection and reader thread a redis input spooler owns."""
+
     host: str
     port: int
     spool_dir: str
     _thread: "threading.Thread | None" = field(default=None, repr=False)
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
     _client: "RedisClient | None" = field(default=None, repr=False)
-
-    def _spool_path(self) -> Path:
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        return spool
-
-    @staticmethod
-    def _write(spool: Path, seq: int, tag: str, payload: bytes) -> None:
-        name = f"{seq:012d}-{tag.encode().hex()}-{uuid.uuid4().hex}.msg"
-        tmp = spool / f".{name}.tmp"
-        tmp.write_bytes(payload)
-        tmp.rename(spool / name)
 
     def stop(self) -> None:
         self._stop.set()
@@ -248,9 +238,9 @@ class _SpoolerBase:
 
 
 @dataclass
-class RedisListSpooler(_SpoolerBase):
+class RedisListSpooler(_RedisSubscriber):
     """`redis_list` input (input_list.go): BLPOP/BRPOP loop -> spool. The
-    pop is destructive, so a crash between pop and rename loses at most
+    pop is destructive, so a crash between pop and spool put loses at most
     the one in-flight message — the reference's own window."""
 
     key: str = ""
@@ -259,10 +249,9 @@ class RedisListSpooler(_SpoolerBase):
     def start(self) -> "RedisListSpooler":
         if self.command not in ("blpop", "brpop"):
             raise ValueError(f"redis_list command must be blpop|brpop, got {self.command!r}")
-        spool = self._spool_path()
+        spool = Spool(self.spool_dir)
         client = RedisClient(self.host, self.port)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -274,8 +263,7 @@ class RedisListSpooler(_SpoolerBase):
                 if got is None:
                     continue  # timeout tick
                 _key, payload = got
-                seq["n"] += 1
-                self._write(spool, seq["n"], self.key, payload)
+                spool.put(payload, redis_key=self.key)
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -283,7 +271,7 @@ class RedisListSpooler(_SpoolerBase):
 
 
 @dataclass
-class RedisPubSubSpooler(_SpoolerBase):
+class RedisPubSubSpooler(_RedisSubscriber):
     """`redis_pubsub` input (input_pubsub.go): SUBSCRIBE (or PSUBSCRIBE
     with `use_patterns`) -> spool. Fire-and-forget by protocol (redis
     pub/sub has no delivery guarantee), like the reference input."""
@@ -292,14 +280,13 @@ class RedisPubSubSpooler(_SpoolerBase):
     use_patterns: bool = False
 
     def start(self) -> "RedisPubSubSpooler":
-        spool = self._spool_path()
+        spool = Spool(self.spool_dir)
         client = RedisClient(self.host, self.port)
         client.subscribe(list(self.channels), patterns=self.use_patterns)
         # block forever on push traffic — the connect-time timeout would
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -310,8 +297,7 @@ class RedisPubSubSpooler(_SpoolerBase):
                 if got is None:
                     continue
                 channel, payload = got
-                seq["n"] += 1
-                self._write(spool, seq["n"], channel, payload)
+                spool.put(payload, redis_channel=channel)
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -319,11 +305,11 @@ class RedisPubSubSpooler(_SpoolerBase):
 
 
 @dataclass
-class RedisStreamsSpooler(_SpoolerBase):
+class RedisStreamsSpooler(_RedisSubscriber):
     """`redis_streams` input (input_streams.go): XREADGROUP consumer-group
     loop; each entry's `body_key` field is the message body, remaining
-    fields ride as JSON metadata in the spool file's first line. XACK
-    fires only AFTER the spool rename (input_streams.go:241 acks after
+    fields ride as `redis_meta` in the spool file's header. XACK
+    fires only AFTER the spool put (input_streams.go:241 acks after
     handoff) — the broker re-delivers anything unacked via the PEL, so
     at-least-once holds into the replayable file source."""
 
@@ -335,7 +321,7 @@ class RedisStreamsSpooler(_SpoolerBase):
     limit: int = 10
 
     def start(self) -> "RedisStreamsSpooler":
-        spool = self._spool_path()
+        spool = Spool(self.spool_dir)
         client = RedisClient(self.host, self.port)
         offset = "0" if self.start_from_oldest else "$"
         for s in self.streams:
@@ -345,7 +331,6 @@ class RedisStreamsSpooler(_SpoolerBase):
                 if "BUSYGROUP" not in str(e):  # already exists is fine
                     raise
         self._client = client
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
@@ -365,13 +350,8 @@ class RedisStreamsSpooler(_SpoolerBase):
                         fields = {kv[i].decode(): kv[i + 1] for i in range(0, len(kv), 2)}
                         body = fields.pop(self.body_key, b"")
                         meta = {k: v.decode(errors="replace") for k, v in fields.items()}
-                        seq["n"] += 1
-                        # first line = JSON envelope (stream, id, metadata),
-                        # rest = raw body — parsed back JVM-side
-                        head = json.dumps({"stream": sname,
-                                           "id": entry_id.decode(), "meta": meta})
-                        self._write(spool, seq["n"], sname,
-                                    head.encode() + b"\n" + body)
+                        spool.put(body, redis_stream=sname, redis_id=entry_id.decode(),
+                                  redis_meta=meta)
                         acks.setdefault(sname, []).append(entry_id)
                 for sname, ids in acks.items():
                     try:
@@ -382,45 +362,6 @@ class RedisStreamsSpooler(_SpoolerBase):
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
         return self
-
-
-def read_redis_spool_stream(spark, spool_dir: str, tag_col: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a list/pubsub spooler dir: `value string` plus the
-    hex-filename tag (source key or channel) decoded JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return df.withColumn(
-        tag_col,
-        F.decode(F.unhex(F.regexp_extract(
-            F.input_file_name(), r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$", 1)), "UTF-8"),
-    )
-
-
-def read_redis_streams_stream(spark, spool_dir: str,
-                              max_files_per_trigger: int | None = None):
-    """File stream over a RedisStreamsSpooler dir: splits the JSON
-    envelope line from the body JVM-side -> columns (value, redis_stream,
-    redis_id, redis_meta map<string,string>)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    head = F.substring_index(F.col("value"), "\n", 1)
-    body = F.expr("substring(value, length(substring_index(value, '\\n', 1)) + 2)")
-    env = F.from_json(head, "stream string, id string, meta map<string,string>")
-    return df.select(
-        body.alias("value"),
-        env["stream"].alias("redis_stream"),
-        env["id"].alias("redis_id"),
-        env["meta"].alias("redis_meta"),
-    )
 
 
 def read_redis_scan(spark, host: str, port: int, match: str = "*",

@@ -24,8 +24,8 @@ Spark-first mapping:
   each object as a durable file, or (b) long-polls an SQS queue for S3
   event notifications and fetches exactly the notified objects —
   DeleteMessage/DeleteObject fire only AFTER the atomic spool rename
-  (at-least-once). Object key/bucket/mtime ride the spool FILENAME and
-  surface as s3_key/s3_bucket/s3_last_modified_unix columns JVM-side.
+  (at-least-once). Object key/bucket/mtime ride the spool file's header
+  and surface as s3_key/s3_bucket/s3_last_modified_unix columns JVM-side.
 - output -> one PutObject per row; the interpolated object path arrives
   as a pre-computed COLUMN (Catalyst-rendered, the repo's interpolation
   contract) and the body is serialized JVM-side; executors only stream
@@ -46,10 +46,9 @@ import json
 import threading
 import time
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
+from bento_spark.streaming.spool import Spool
 from bento_spark.streaming.sqs import sigv4_signature
 
 _SAFE = "-_.~"  # RFC 3986 unreserved minus alnum (quote() keeps alnum)
@@ -321,17 +320,11 @@ class S3Spooler:
     _thread: threading.Thread | None = field(default=None, repr=False)
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def _spool_object(self, spool: Path, client: S3Client, seq: dict,
+    def _spool_object(self, spool: Spool, client: S3Client,
                       bucket: str, key: str, lm_unix: int) -> None:
         body, _ = client.get_object(bucket, key)
-        seq["n"] += 1
-        name = (f"{seq['n']:012d}-{bucket.encode().hex()}-{key.encode().hex()}"
-                f"-{lm_unix:020d}-{uuid.uuid4().hex}.msg")
-        tmp = spool / f".{name}.tmp"
-        # 1-byte pad: Spark's text source emits NO row for a 0-byte file,
-        # so empty objects would silently vanish (same fix as kafka_wire)
-        tmp.write_bytes(b"." + body)
-        tmp.rename(spool / name)
+        # the reference's metadata surface, input_s3.go:735-739
+        spool.put(body, s3_bucket=bucket, s3_key=key, s3_last_modified_unix=lm_unix)
         if self.delete_objects:
             try:
                 client.delete_object(bucket, key)
@@ -339,11 +332,9 @@ class S3Spooler:
                 pass  # object re-lists / notification re-delivers
 
     def start(self) -> "S3Spooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = S3Client(self.endpoint, self.access_key, self.secret_key,
                           region=self.region)
-        seq = {"n": 0}
 
         def run_listing() -> None:
             import sys
@@ -352,7 +343,7 @@ class S3Spooler:
                 for obj in client.list_objects(self.bucket, prefix=self.prefix):
                     if self._stop.is_set():
                         return
-                    self._spool_object(spool, client, seq, self.bucket,
+                    self._spool_object(spool, client, self.bucket,
                                        obj["key"], obj["last_modified_unix"])
             except Exception as e:  # surface, don't vanish
                 self.error = f"aws_s3: {e}"
@@ -393,8 +384,7 @@ class S3Spooler:
                             # (input_s3.go:500 url.QueryUnescape)
                             key = urllib.parse.unquote_plus(key)
                             try:
-                                self._spool_object(spool, client, seq, bkt,
-                                                   key, 0)
+                                self._spool_object(spool, client, bkt, key, 0)
                             except NoSuchKeyError:
                                 continue  # deleted before we fetched it
                         try:
@@ -425,44 +415,6 @@ class S3Spooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def _decorate_s3_spool(df):
-    """Strip the 1-byte pad and decode s3_key / s3_bucket /
-    s3_last_modified_unix from the spool FILENAME, all JVM-side (the
-    reference's metadata surface, input_s3.go:735-739)."""
-    from pyspark.sql import functions as F
-
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("s3_bucket",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("s3_key",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8"))
-          .withColumn("s3_last_modified_unix",
-                      F.regexp_extract(fname, pat, 3).cast("bigint"))
-    )
-
-
-def read_s3_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an S3Spooler's dir: `value string` + s3_key /
-    s3_bucket / s3_last_modified_unix columns."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return _decorate_s3_spool(df)
-
-
-def read_s3_spool_batch(spark, spool_dir: str):
-    """Batch twin of read_s3_stream for bounded listing-mode consumption
-    (the reference's plain aws_s3 input reads the listing once and stops,
-    so a finished spool IS a complete batch)."""
-    df = (spark.read.format("text").option("wholetext", "true")
-          .load(f"{spool_dir}/*.msg"))
-    return _decorate_s3_spool(df)
 
 
 # --------------------------------------------------------------------------

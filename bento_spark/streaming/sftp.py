@@ -39,7 +39,6 @@ import stat as stat_mod
 import struct
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -49,6 +48,8 @@ from bento_spark.streaming.ssh_transport import (
     SshServerConn,
     sp,
 )
+
+from bento_spark.streaming.spool import Spool
 
 SSH_FXP_INIT, SSH_FXP_VERSION = 1, 2
 SSH_FXP_OPEN, SSH_FXP_CLOSE, SSH_FXP_READ, SSH_FXP_WRITE = 3, 4, 5, 6
@@ -327,7 +328,7 @@ def parse_sftp_address(address: str) -> tuple[str, int]:
 @dataclass
 class SftpSpooler:
     """`sftp` input (input.go): resolve the path globs, download each
-    file into the spool, optionally delete it AFTER the durable rename
+    file into the spool, optionally delete it AFTER the durable spool put
     (at-least-once). Watcher mode re-polls, skipping young files
     (minimum_age) and (name, mtime, size) triples already consumed."""
 
@@ -348,13 +349,11 @@ class SftpSpooler:
     error: Exception | None = None
 
     def start(self) -> "SftpSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = SftpClient(self.host, self.port, self.username,
                             self.password,
                             private_key_pem=self.private_key_pem)
         seen: set[tuple[str, int, int]] = set()
-        seq = {"n": 0}
 
         def one_pass() -> None:
             for pattern in self.paths:
@@ -370,12 +369,7 @@ class SftpSpooler:
                             continue  # young file: retry next poll
                     body = client.read_file(path)
                     seen.add(key)
-                    seq["n"] += 1
-                    name = (f"{seq['n']:012d}-{path.encode().hex()}"
-                            f"-{uuid.uuid4().hex}.msg")
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_bytes(body)
-                    tmp.rename(spool / name)
+                    spool.put(body, sftp_path=path)
                     if self.delete_on_finish:
                         client.remove(path)
 
@@ -412,24 +406,6 @@ class SftpSpooler:
             self._thread = None
         if self.error is not None:
             raise self.error
-
-
-def read_sftp_stream(spark, spool_dir: str,
-                     max_files_per_trigger: int | None = None):
-    """File stream over an SftpSpooler's dir: file body = `value`, the
-    remote path rides the FILENAME hex-encoded -> `sftp_path` column,
-    decoded JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return df.withColumn(
-        "sftp_path",
-        F.decode(F.unhex(F.regexp_extract(F.input_file_name(), pat, 1)),
-                 "UTF-8"))
 
 
 # ---------------------------------------------------------------------------

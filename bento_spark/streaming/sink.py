@@ -474,8 +474,8 @@ def sync_response_writer(sync_dir: str, content_col: str | None = None,
     """`sync_response` output (internal/impl/pure/output_sync_response.go:15):
     the processed message becomes the HTTP response of the request that
     produced it. Spark mapping of Bento's transaction-scoped response
-    store: the input's spool file stem rides the row as `request_id`
-    (engine metadata — survives `root = {...}` remaps like `error`), and
+    store: the id the input stamps in the spool header rides the row as
+    `request_id` (engine metadata — survives `root = {...}` remaps like `error`), and
     this writer drops one `<request_id>.resp` file into the shared sync
     dir, where the blocked HttpSpoolServer handler picks it up and
     replies. Reply files are written EXECUTOR-side (foreachPartition,

@@ -29,9 +29,9 @@ from __future__ import annotations
 import json
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _JSONDecoder = json.JSONDecoder()
 
@@ -305,9 +305,9 @@ class SpannerCdcSpooler:
     threads — the root query (partition_token NULL) yields data changes
     and child-partition records; every child spawns its own reader, with
     token dedup so a partition announced by two parents reads once
-    (input_spanner_cdc.go trackPartition). One spool file per mod:
-    {"mod": <Mod.ToMap JSON>, commit_timestamp, mod_type, table_name,
-    server_transaction_id, record_sequence}."""
+    (input_spanner_cdc.go trackPartition). One spool file per mod: the
+    body is the Mod.ToMap JSON, the header the reference's gcp_spanner_*
+    metadata (input_spanner_cdc.go:33-37)."""
 
     dsn: str
     stream_name: str
@@ -325,11 +325,10 @@ class SpannerCdcSpooler:
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
     _stop: threading.Event = field(default_factory=threading.Event,
                                    repr=False)
-    _counter: int = field(default=0, repr=False)
+    _spool: Spool | None = field(default=None, repr=False)
 
     def start(self) -> "SpannerCdcSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        self._spool = Spool(self.spool_dir)
         self._client = SpannerClient(self.dsn, endpoint=self.endpoint,
                                      credentials=self.credentials)
         self._session = self._client.create_session()
@@ -360,22 +359,13 @@ class SpannerCdcSpooler:
     def _spool_mod(self, dc: dict, mod: dict) -> None:
         out = {k: mod[k] for k in ("keys", "new_values", "old_values")
                if mod.get(k) is not None}  # Mod.ToMap: only valid fields
-        env = {
-            "mod": json.dumps(out),
-            "commit_timestamp": dc.get("commit_timestamp"),
-            "mod_type": dc.get("mod_type"),
-            "table_name": dc.get("table_name"),
-            "server_transaction_id": dc.get("server_transaction_id"),
-            "record_sequence": dc.get("record_sequence"),
-        }
-        with self._lock:
-            self._counter += 1
-            n = self._counter
-        spool = Path(self.spool_dir)
-        name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-        tmp = spool / f".{name}.tmp"
-        tmp.write_text(json.dumps(env))
-        tmp.rename(spool / name)
+        self._spool.put(
+            json.dumps(out),
+            gcp_spanner_commit_timestamp=dc.get("commit_timestamp"),
+            gcp_spanner_cdc_mod_type=dc.get("mod_type"),
+            gcp_spanner_table_name=dc.get("table_name"),
+            gcp_spanner_cdc_server_transaction_id=dc.get("server_transaction_id"),
+            gcp_spanner_cdc_record_sequence=dc.get("record_sequence"))
 
     def _read_partition(self, token: str | None, start_ts: str) -> None:
         sql = (f"SELECT ChangeRecord FROM READ_{self.stream_name} ("
@@ -424,32 +414,6 @@ class SpannerCdcSpooler:
             threads = list(self._threads)
         for t in threads:
             t.join(timeout=10)
-
-
-def read_spanner_cdc_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a SpannerCdcSpooler's dir: `value` carries the
-    Mod.ToMap JSON, plus the reference's gcp_spanner_* metadata columns
-    (input_spanner_cdc.go:33-37), parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "mod STRING, commit_timestamp STRING, mod_type STRING, "
-        "table_name STRING, server_transaction_id STRING, "
-        "record_sequence STRING"))
-    return df.select(
-        env["mod"].alias("value"),
-        env["commit_timestamp"].alias("gcp_spanner_commit_timestamp"),
-        env["mod_type"].alias("gcp_spanner_cdc_mod_type"),
-        env["table_name"].alias("gcp_spanner_table_name"),
-        env["server_transaction_id"]
-            .alias("gcp_spanner_cdc_server_transaction_id"),
-        env["record_sequence"].alias("gcp_spanner_cdc_record_sequence"),
-    )
 
 
 # ---------------------------------------------------------------------------

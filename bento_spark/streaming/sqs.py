@@ -20,7 +20,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
   message as a durable spool file BEFORE DeleteMessage (ack-after-
   durability = at-least-once: an un-deleted message re-appears after its
   visibility timeout, the SQS contract). MessageId rides the spool
-  FILENAME and surfaces as `sqs_message_id`.
+  file's header and surfaces as `sqs_message_id`.
 - output -> foreachBatch SendMessageBatch in <=10-entry chunks (the API
   cap), bodies serialized JVM-side.
 
@@ -35,9 +35,9 @@ import hmac
 import json
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 
 # --------------------------------------------------------------------------
@@ -235,11 +235,9 @@ class SqsSpooler:
     _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
     def start(self) -> "SqsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         client = SqsClient(self.endpoint, self.access_key, self.secret_key,
                            region=self.region)
-        seq = {"n": 0}
         # leave-in-queue mode only: remember spooled ids so re-visible
         # messages don't duplicate; delete_message mode never consults it
         # (tracking there would be an unbounded leak for zero benefit)
@@ -267,14 +265,7 @@ class SqsSpooler:
                             if mid in seen:
                                 continue
                             seen.add(mid)
-                        seq["n"] += 1
-                        # message id rides the filename hex-encoded (ids
-                        # are service-defined strings, not filename-safe)
-                        name = (f"{seq['n']:012d}-{mid.encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(m.get("Body", "").encode("utf-8"))
-                        tmp.rename(spool / name)
+                        spool.put(m.get("Body", ""), sqs_message_id=mid or None)
                         if self.delete_message:
                             try:
                                 client.delete_message(self.queue_url,
@@ -295,21 +286,6 @@ class SqsSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_sqs_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an SqsSpooler's dir: `value string` +
-    `sqs_message_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    mid = F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8")
-    return df.withColumn("sqs_message_id", F.when(mid != "", mid))
 
 
 # --------------------------------------------------------------------------

@@ -22,11 +22,11 @@ from __future__ import annotations
 import subprocess
 import sys
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import functions as F
+
+from bento_spark.streaming.spool import Spool
 
 
 @dataclass
@@ -52,16 +52,7 @@ class SubprocessSpooler:
                                    repr=False)
 
     def start(self) -> "SubprocessSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        counter = {"n": 0}
-
-        def spool_one(line: bytes) -> None:
-            counter["n"] += 1
-            name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_bytes(line)
-            tmp.rename(spool / name)
+        spool = Spool(self.spool_dir)
 
         def pump_stderr(proc: subprocess.Popen) -> None:
             # input_subprocess.go logs subprocess stderr lines
@@ -97,7 +88,7 @@ class SubprocessSpooler:
                         proc.wait()
                         self.finished = True
                         return
-                    spool_one(line.rstrip(b"\r\n"))
+                    spool.put(line.rstrip(b"\r\n"))
                 proc.wait()
                 et.join(timeout=5)
                 if not self.restart_on_exit or self._stop.is_set():

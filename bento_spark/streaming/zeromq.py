@@ -35,9 +35,9 @@ from __future__ import annotations
 import socket
 import struct
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import Spool
 
 _GREETING_SIG = b"\xff" + b"\x00" * 8 + b"\x7f"
 _FLAG_MORE, _FLAG_LONG, _FLAG_COMMAND = 0x01, 0x02, 0x04
@@ -357,8 +357,7 @@ class ZmqSpooler:
     def start(self) -> "ZmqSpooler":
         if self.socket_type not in ("PULL", "SUB"):
             raise ValueError("zmq input socket_type must be PULL or SUB")
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        spool = Spool(self.spool_dir)
         sock = ZmqSocket(self.socket_type,
                          [f.encode("utf-8") for f in self.sub_filters])
         if self.bind:
@@ -368,20 +367,15 @@ class ZmqSpooler:
             for u in self.urls:
                 sock.connect(*parse_zmq_url(u))
         self._sock = sock
-        seq = {"n": 0}
 
         def run() -> None:
             while not self._stop.is_set():
                 frames = sock.recv(timeout=0.2)
                 if frames is None:
                     continue
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
                 # multi-frame messages concatenate like the reference's
                 # part-per-frame batch collapsed to one payload
-                tmp.write_bytes(b"".join(frames))
-                tmp.rename(spool / name)
+                spool.put(b"".join(frames))
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -399,14 +393,6 @@ class ZmqSpooler:
         if self._thread is not None:
             self._thread.join(timeout=5)
             self._thread = None
-
-
-def read_zmq_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over a ZmqSpooler's dir: `value string`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from bento_spark.streaming.amqp import (
     parse_amqp_url,
     shortstr,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -150,16 +151,16 @@ def test_spooler_acks_after_spool(broker, tmp_path):
         pub.publish("", "evt", b"one")
         pub.publish("", "evt", b"two")
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
     finally:
         sp.stop()
         pub.close()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"one", b"two"]
-    # routing key rides the filename (hex segment)
-    assert all(bytes.fromhex(f.name.split("-")[1]) == b"evt" for f in files)
+    got = entries(spool)
+    assert [body for _, body in got] == [b"one", b"two"]
+    # the routing key rides the spool header
+    assert all(meta["amqp_key"] == "evt" for meta, _ in got)
     # everything spooled was acked — broker holds no pending redelivery
     with broker._lock:
         assert all(not c["unacked"] for c in broker._consumers)
@@ -196,7 +197,7 @@ output:
         pub.publish("metrics", "host.a", b"warm")
         pub.publish("metrics", "host.b", b"cold")
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

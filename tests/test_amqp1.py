@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import json
 import time
-from pathlib import Path
 
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.amqp1 import (
     Amqp1Client,
     Amqp1Spooler,
@@ -23,8 +23,8 @@ from bento_spark.streaming.amqp1 import (
     decode_value,
     enc_value,
     parse_amqp1_url,
-    read_amqp1_stream,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -141,11 +141,11 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:
-            if len(list(Path(spool).glob("*.msg"))) >= 4:
+            if len(entries(spool)) >= 4:
                 break
             time.sleep(0.05)
         assert sp.error is None
-        df = read_amqp1_stream(spark, spool)
+        df = read_input(spark, {"amqp_1": {"spool_dir": spool}}, True)
         q = (df.writeStream.format("memory").queryName("amqp1_e2e")
              .trigger(availableNow=True).start())
         q.awaitTermination(60)
@@ -209,7 +209,7 @@ output:
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:
-            if len(list(spool.glob("*.msg"))) >= 2:
+            if len(entries(spool)) >= 2:
                 break
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

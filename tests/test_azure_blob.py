@@ -11,12 +11,12 @@ import time
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.azure_blob import (
     AzureBlobClient,
     AzureBlobSpooler,
     BlobNotFoundError,
     MiniAzureBlobServer,
-    read_azure_blob_stream,
     shared_key_signature,
     shared_key_string_to_sign,
 )
@@ -97,7 +97,7 @@ def test_listing_spooler_to_stream(server, spark, tmp_path):
         assert sp.wait_finished(20) and sp.error is None
     finally:
         sp.stop()
-    df = read_azure_blob_stream(spark, spool)
+    df = read_input(spark, {"azure_blob_storage": {"spool_dir": spool}}, True)
     q = (df.writeStream.format("memory").queryName("azblob_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)

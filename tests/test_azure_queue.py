@@ -11,12 +11,13 @@ import time
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.azure_queue import (
     AzureQueueClient,
     AzureQueueSpooler,
     MiniAzureQueueServer,
-    read_azure_queue_stream,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -81,7 +82,7 @@ def test_spooler_to_stream(server, spark, tmp_path):
         assert sp.error is None
     finally:
         sp.stop()
-    df = read_azure_queue_stream(spark, spool)
+    df = read_input(spark, {"azure_queue_storage": {"spool_dir": spool}}, True)
     q = (df.writeStream.format("memory").queryName("azq_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
@@ -141,7 +142,7 @@ output:
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:
-            if len(list(spool.glob("*.msg"))) >= 2:
+            if len(entries(spool)) >= 2:
                 break
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

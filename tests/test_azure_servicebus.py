@@ -24,6 +24,7 @@ from bento_spark.streaming.azure_servicebus import (
     parse_sb_connection_string,
     verify_sas_token,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -142,23 +143,22 @@ def test_spooler_metadata_and_reject_patterns(broker, tmp_path):
         nack_reject_patterns=[r"POISON"]).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, "messages never spooled"
             time.sleep(0.05)
         time.sleep(0.3)  # allow an (incorrect) third spool to surface
     finally:
         sp.stop()
-    envs = sorted((json.loads(f.read_text()) for f in spool.glob("*.msg")),
-                  key=lambda e: e["sequence_number"])
-    assert [e["value"] for e in envs] == ['{"status": "ok-1"}',
-                                          '{"status": "ok-2"}']
-    assert envs[0]["message_id"] == "m-1"
-    assert envs[0]["correlation_id"] == "corr-1"
-    assert envs[0]["content_type"] == "application/json"
-    assert envs[0]["sequence_number"] == 1
-    assert envs[1]["sequence_number"] == 3
-    assert envs[0]["enqueued_time_ms"] > 0
-    assert envs[0]["delivery_count"] == 0
+    envs = sorted(entries(spool), key=lambda e: e[0]["service_bus_sequence_number"])
+    assert [body for _, body in envs] == [b'{"status": "ok-1"}',
+                                          b'{"status": "ok-2"}']
+    assert envs[0][0]["service_bus_message_id"] == "m-1"
+    assert envs[0][0]["service_bus_correlation_id"] == "corr-1"
+    assert envs[0][0]["service_bus_content_type"] == "application/json"
+    assert envs[0][0]["service_bus_sequence_number"] == 1
+    assert envs[1][0]["service_bus_sequence_number"] == 3
+    assert envs[0][0]["service_bus_enqueued_time"] > 0
+    assert envs[0][0]["service_bus_delivery_count"] == 0
     # the POISON message was rejected (dead-lettered), not requeued
     assert broker.queue_size("orders") == 0
 
@@ -185,7 +185,7 @@ output:
     sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

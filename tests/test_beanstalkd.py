@@ -16,6 +16,7 @@ from bento_spark.streaming.beanstalkd import (
     BeanstalkdSpooler,
     MiniBeanstalkdServer,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -89,10 +90,9 @@ def test_spooler_acks_after_durability(server, tmp_path):
     sp = BeanstalkdSpooler(server.host, server.port, str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 5:
+        while time.monotonic() < deadline and len(entries(spool)) < 5:
             time.sleep(0.05)
-        files = sorted(spool.glob("*.msg"))
-        assert [f.read_bytes() for f in files] == [f"j{i}".encode() for i in range(5)]
+        assert [body for _, body in entries(spool)] == [f"j{i}".encode() for i in range(5)]
         # all jobs deleted from the tube after spooling
         assert pub.reserve(0) is None
     finally:
@@ -134,7 +134,7 @@ output:
     sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p_in.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

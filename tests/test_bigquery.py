@@ -17,6 +17,7 @@ from bento_spark.streaming.bigquery import (
     MiniBigQueryServer,
     build_select,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -77,8 +78,7 @@ def test_spooler_one_row_per_message(server, tmp_path):
         where="site = ?", args=["bergen"]).start()
     assert sp.wait_finished(30)
     sp.stop()
-    rows = sorted(json.loads(f.read_text())["name"]
-                  for f in spool.glob("*.msg"))
+    rows = sorted(json.loads(body)["name"] for _, body in entries(spool))
     assert rows == ["cyd", "eli", "gus", "ivy"]
 
 

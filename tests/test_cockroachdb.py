@@ -22,6 +22,7 @@ from bento_spark.streaming.cockroachdb import (
     build_changefeed_statement,
     parse_pg_dsn,
 )
+from bento_spark.streaming.spool import entries
 
 
 # ---------------------------------------------------------------------------
@@ -153,18 +154,18 @@ def test_changefeed_spooler_message_shape(server, tmp_path):
                            spool_dir=str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         # live row after the feed started streaming
         server.append_row("strm", ["c", 3], {"after": {"k": "c", "v": 3}},
                           "1000.0000000004")
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
     finally:
         sp.stop()
-    msgs = [json.loads(f.read_text()) for f in sorted(spool.glob("*.msg"))]
+    msgs = [json.loads(body) for _, body in entries(spool)]
     # reference message shape (input_changefeed.go:289-296): table name,
     # stringified key array, stringified row object; no UPDATED without
     # a cursor cache, and the `other` table is excluded
@@ -181,13 +182,13 @@ def test_changefeed_cursor_resume(server, tmp_path):
                            spool_dir=str(spool), cursor_cache=True).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
     finally:
         sp.stop()
     assert (spool / ".cursor").read_text() == "1000.0000000002"
-    first = {f.name for f in spool.glob("*.msg")}
+    first = len(entries(spool))
     # rows landing while the input is down
     server.append_row("strm", ["d", 4], {"after": {"k": "d", "v": 4}},
                       "1000.0000000005")
@@ -198,14 +199,13 @@ def test_changefeed_cursor_resume(server, tmp_path):
     sp2.start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline, sp2.error
             time.sleep(0.05)
         time.sleep(0.3)  # would re-backfill a/b if the cursor were broken
     finally:
         sp2.stop()
-    fresh = [json.loads(f.read_text())
-             for f in sorted(spool.glob("*.msg")) if f.name not in first]
+    fresh = [json.loads(body) for _, body in entries(spool)[first:]]
     assert len(fresh) == 1
     row = json.loads(fresh[0]["row"])
     assert row["after"] == {"k": "d", "v": 4}
@@ -233,7 +233,7 @@ output:
     sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

@@ -19,6 +19,7 @@ from bento_spark.streaming.cypher import (
     ps_pack,
     ps_unpack,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -83,8 +84,7 @@ def test_spooler(server, tmp_path):
         spool_dir=str(spool), user="neo4j", password="pw").start()
     assert sp.wait_finished(30)
     sp.stop()
-    rows = sorted(json.loads(f.read_text())["name"]
-                  for f in spool.glob("*.msg"))
+    rows = sorted(json.loads(body)["name"] for _, body in entries(spool))
     assert rows == ["ada", "bob"]
 
 

@@ -15,6 +15,7 @@ from bento_spark.streaming.discord import (
     DiscordSpooler,
     MiniDiscordServer,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -54,19 +55,18 @@ def test_spooler_cursor(server, tmp_path):
                         poll_period_s=0.1, limit=2).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 1:
+        while len(entries(spool)) < 1:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         for i in range(5):
             server.seed("c3", f"late{i}")
-        while len(list(spool.glob("*.msg"))) < 6:
+        while len(entries(spool)) < 6:
             assert time.monotonic() < deadline, "poller missed the backlog"
             time.sleep(0.05)
         time.sleep(0.3)  # would duplicate if the cursor were broken
     finally:
         sp.stop()
-    msgs = [json.loads(f.read_text())["content"]
-            for f in sorted(spool.glob("*.msg"))]
+    msgs = [json.loads(body)["content"] for _, body in entries(spool)]
     assert msgs == ["first", "late0", "late1", "late2", "late3", "late4"]
 
 
@@ -95,7 +95,7 @@ output:
     sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

@@ -29,6 +29,7 @@ from bento_spark.streaming.grpc_wire import (
     huffman_decode,
     huffman_encode,
 )
+from bento_spark.streaming.spool import entries
 
 # ---------------------------------------------------------------------------
 # HPACK — RFC 7541 Appendix C, pinned verbatim
@@ -217,8 +218,7 @@ def test_watch_horizon_filters_and_delete(server, tmp_path):
     deadline = time.monotonic() + 10
 
     def events():
-        return [e for f in sorted(spool.glob("*.msg"))
-                for e in json.loads(f.read_text())]
+        return [e for _, body in entries(spool) for e in json.loads(body)]
 
     while len(events()) < 2:
         assert time.monotonic() < deadline, sp.error
@@ -241,13 +241,12 @@ def test_watch_filter_put(server, tmp_path):
     server.put("k", "v1")
     server.delete("k")
     deadline = time.monotonic() + 10
-    while not list(spool.glob("*.msg")):
+    while not entries(spool):
         assert time.monotonic() < deadline, sp.error
         time.sleep(0.05)
     time.sleep(0.3)
     sp.stop()
-    evs = [e for f in sorted(spool.glob("*.msg"))
-           for e in json.loads(f.read_text())]
+    evs = [e for _, body in entries(spool) for e in json.loads(body)]
     assert [(e["key"], e["type"]) for e in evs] == [("k", "DELETE")]
 
 
@@ -278,8 +277,7 @@ output:
         server.put("sensors/t2", "21.0")
         deadline = time.monotonic() + 10
         # both puts may coalesce into ONE WatchResponse -> count events
-        while sum(len(json.loads(f.read_text()))
-                  for f in spool.glob("*.msg")) < 2:
+        while sum(len(json.loads(body)) for _, body in entries(spool)) < 2:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

@@ -19,6 +19,7 @@ from bento_spark.streaming.gcs import (
     MiniGcsServer,
     ObjectExistsError,
 )
+from bento_spark.streaming.spool import entries
 
 _OPENSSL = shutil.which("openssl")
 
@@ -99,9 +100,7 @@ def test_spooler_delete_objects(server, tmp_path):
                     delete_objects=True).start()
     assert sp.wait_finished(30)
     sp.stop()
-    envs = sorted((json.loads(f.read_text()) for f in spool.glob("*.msg")),
-                  key=lambda e: e["key"])
-    assert [e["key"] for e in envs] == ["in/a.json", "in/b.json"]
+    assert sorted(meta["gcs_key"] for meta, _ in entries(spool)) == ["in/a.json", "in/b.json"]
     assert sorted(server.buckets["b"]) == ["keep/c.json"]
 
 

@@ -16,6 +16,7 @@ from bento_spark.streaming.hdfs import (
     MiniWebHdfsServer,
     WebHdfsClient,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -82,9 +83,9 @@ def test_spooler_one_listing_pass(srv, tmp_path):
                      spool_dir=str(tmp_path / "spool")).start()
     sp.wait_finished(15)
     assert sp.finished
-    msgs = sorted((tmp_path / "spool").glob("*.msg"))
+    msgs = entries(tmp_path / "spool")
     assert len(msgs) == 3
-    assert sorted(m.read_bytes()[1:] for m in msgs) == [b"body-0", b"body-1", b"body-2"]
+    assert sorted(body for _, body in msgs) == [b"body-0", b"body-1", b"body-2"]
 
 
 def test_spooler_surfaces_listing_error(tmp_path, srv):

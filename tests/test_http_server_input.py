@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.sink import IdempotentParquetSink
+from bento_spark.streaming.spool import entries
 
 
 def _post(host: str, port: int, path: str, body: bytes) -> int:
@@ -114,9 +115,7 @@ def test_http_server_requires_content_length(spark, tmp_path):
         status = s.recv(4096).split(b"\r\n", 1)[0]
         s.close()
         assert b"411" in status
-        import os
-
-        assert not any(f.endswith(".msg") for f in os.listdir(tmp_path / "spool411"))
+        assert not entries(tmp_path / "spool411")
     finally:
         srv.stop()
 
@@ -492,7 +491,7 @@ def test_websocket_masked_server_frame_fails_connection(tmp_path):
         while time.monotonic() < deadline and (ws._thread and ws._thread.is_alive()):
             time.sleep(0.1)
         assert not (ws._thread and ws._thread.is_alive()), "reader kept running after violation"
-        msgs = [f.read_bytes() for f in sorted(spool.glob("*.msg"))]
+        msgs = [body for _, body in entries(spool)]
         assert msgs == [b"good-one"], msgs  # nothing after the violation spooled
     finally:
         ws.stop()
@@ -559,11 +558,11 @@ def test_websocket_wss_tls_handshake(tmp_path):
     try:
         deadline = time.monotonic() + 20
         while time.monotonic() < deadline:
-            if len(list(spool.glob("*.msg"))) >= 3:
+            if len(entries(spool)) >= 3:
                 break
             time.sleep(0.2)
         assert srv.received_open == (0x1, b"hello-tls")
-        msgs = [f.read_bytes() for f in sorted(spool.glob("*.msg"))]
+        msgs = [body for _, body in entries(spool)]
         assert b"msg-one" in msgs and b"frag-mented" in msgs
     finally:
         ws.stop()
@@ -616,7 +615,7 @@ output:
     try:
         deadline = time.monotonic() + 20
         while time.monotonic() < deadline:
-            if len(list((tmp_path / "wspool").glob("*.msg"))) >= 3:
+            if len(entries(tmp_path / "wspool")) >= 3:
                 break
             time.sleep(0.2)
         assert srv.received_open == (0x1, b"subscribe-please")
@@ -680,7 +679,7 @@ output:
             t.start()
         # both requests must be spooled before the bounded query starts
         deadline = time.monotonic() + 10
-        while len(list(Path(spool).glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, "requests never spooled"
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_sync"))

@@ -20,6 +20,7 @@ from bento_spark.streaming.sink import (
     socket_sink,
     websocket_sink,
 )
+from bento_spark.streaming.spool import entries
 from bento_spark.streaming.subprocess_io import SubprocessSpooler, subprocess_sink
 
 PY = sys.executable
@@ -42,7 +43,7 @@ def test_subprocess_input_lines(tmp_path):
         time.sleep(0.02)
     sp.stop()
     assert sp.error is None
-    msgs = sorted(f.read_text() for f in (tmp_path / "sp").glob("*.msg"))
+    msgs = sorted(body.decode() for _, body in entries(tmp_path / "sp"))
     assert msgs == [f"line-{i}" for i in range(5)]
 
 
@@ -65,13 +66,12 @@ def test_subprocess_input_restart_on_exit(tmp_path):
         spool_dir=str(tmp_path / "sp"), restart_on_exit=True,
     ).start()
     deadline = time.monotonic() + 15
-    while len(list((tmp_path / "sp").glob("*.msg"))) < 3:
+    while len(entries(tmp_path / "sp")) < 3:
         assert time.monotonic() < deadline, sp.error
         time.sleep(0.05)
     sp.stop()
     assert sp.restarts >= 2
-    assert all(f.read_text() == "tick"
-               for f in (tmp_path / "sp").glob("*.msg"))
+    assert all(body == b"tick" for _, body in entries(tmp_path / "sp"))
 
 
 def test_subprocess_input_stderr_logged(tmp_path, capfd):

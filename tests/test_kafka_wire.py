@@ -10,6 +10,7 @@ from pathlib import Path
 
 import pytest
 
+from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.kafka_wire import (
     KafkaSpooler,
     KafkaWireClient,
@@ -21,9 +22,9 @@ from bento_spark.streaming.kafka_wire import (
     encode_record_batch,
     murmur2,
     partition_for_key,
-    read_kafka_wire_stream,
     kafka_wire_sink,
 )
+from bento_spark.streaming.spool import entries
 
 
 # --------------------------------------------------------------------------
@@ -191,10 +192,10 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:
-            if len(list(Path(spool).glob("*.msg"))) >= 6:
+            if len(entries(spool)) >= 6:
                 break
             time.sleep(0.05)
-        df = read_kafka_wire_stream(spark, spool)
+        df = read_input(spark, {"kafka_franz": {"spool_dir": spool}}, True)
         q = (
             df.writeStream.format("memory").queryName("kafka_wire_e2e")
             .trigger(availableNow=True).start()
@@ -227,7 +228,7 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     p.produce("r", 0, encode_record_batch(0, [(0, None, b"one", [])]))
     sp = KafkaSpooler("127.0.0.1", broker.port, ["r"], spool).start()
     deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(list(Path(spool).glob("*.msg"))) < 1:
+    while time.monotonic() < deadline and len(entries(spool)) < 1:
         time.sleep(0.05)
     sp.stop()
     offsets = json.loads((Path(spool) / ".offsets.json").read_text())
@@ -236,13 +237,12 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     p.produce("r", 0, encode_record_batch(0, [(0, None, b"two", [])]))
     sp2 = KafkaSpooler("127.0.0.1", broker.port, ["r"], spool).start()
     deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(list(Path(spool).glob("*.msg"))) < 2:
+    while time.monotonic() < deadline and len(entries(spool)) < 2:
         time.sleep(0.05)
     sp2.stop()
-    files = sorted(Path(spool).glob("*.msg"))
-    assert len(files) == 2
-    # spool bodies carry the 1-byte pad (see KafkaSpooler)
-    assert [f.read_bytes() for f in files] == [b".one", b".two"]
+    got = entries(spool)
+    assert len(got) == 2
+    assert [body for _, body in got] == [b"one", b"two"]
     p.close()
 
 
@@ -326,7 +326,7 @@ output:
         prod.produce("metrics", 1, encode_record_batch(0, [(0, None, b"mild", [])]))
         prod.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))
@@ -385,8 +385,7 @@ def test_lint_knows_kafka_franz():
 
 
 def test_spooler_clamps_no_timestamp_sentinel(broker, tmp_path):
-    """The spec's 'no timestamp' (-1) must not break the fixed-width spool
-    filename (kafka_* metadata would silently NULL)."""
+    """The spec's 'no timestamp' (-1) clamps to 0 in the spool header."""
     p = KafkaWireClient("127.0.0.1", broker.port)
     p.produce("nots", 0, encode_record_batch(0, [(-1, b"k", b"v", [])]))
     p.close()
@@ -394,10 +393,10 @@ def test_spooler_clamps_no_timestamp_sentinel(broker, tmp_path):
     sp = KafkaSpooler("127.0.0.1", broker.port, ["nots"], str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and not list(spool.glob("*.msg")):
+        while time.monotonic() < deadline and not entries(spool):
             time.sleep(0.05)
-        files = list(spool.glob("*.msg"))
-        assert files and "-" + "0" * 20 + "-" in files[0].name  # ts clamped to 0
+        got = entries(spool)
+        assert got and got[0][0]["kafka_ts"] == 0  # ts clamped to 0
     finally:
         sp.stop()
 
@@ -422,7 +421,7 @@ def test_spooler_surfaces_undecodable_batch(broker, tmp_path):
         while time.monotonic() < deadline and sp.error is None:
             time.sleep(0.05)
         assert sp.error and "compressed" in sp.error and "badbatch" in sp.error
-        assert not list(spool.glob("*.msg"))  # nothing half-spooled
+        assert not entries(spool)  # nothing half-spooled
     finally:
         sp.stop()
 
@@ -570,7 +569,7 @@ output:
             0, [(0, b"a", b"warm", []), (0, b"b", b"cold", [])]))
         prod.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, "spooler never fetched (SASL startup failed?)"
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_sasl_in"))

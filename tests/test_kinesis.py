@@ -17,6 +17,7 @@ from bento_spark.streaming.kinesis import (
     KinesisSpooler,
     MiniKinesisServer,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -59,7 +60,7 @@ def test_spooler_checkpoint_resume(server, tmp_path):
     sp = KinesisSpooler(server.endpoint, ["logs"], server.access_key,
                         server.secret_key, str(spool)).start()
     deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 1:
+    while time.monotonic() < deadline and len(entries(spool)) < 1:
         time.sleep(0.05)
     sp.stop()
     assert (spool / ".sequences.json").exists()
@@ -68,11 +69,10 @@ def test_spooler_checkpoint_resume(server, tmp_path):
     sp2 = KinesisSpooler(server.endpoint, ["logs"], server.access_key,
                          server.secret_key, str(spool)).start()
     deadline = time.monotonic() + 10
-    while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 2:
+    while time.monotonic() < deadline and len(entries(spool)) < 2:
         time.sleep(0.05)
     sp2.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"one", b"two"]
+    assert [body for _, body in entries(spool)] == [b"one", b"two"]
 
 
 def test_yaml_kinesis_roundtrip(spark, server, tmp_path):
@@ -118,7 +118,7 @@ pipeline:
     sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         out = tmp_path / "out"

@@ -21,6 +21,7 @@ from bento_spark.streaming.mqtt import (
     encode_remaining_len,
     topic_matches,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -87,15 +88,15 @@ def test_spooler_qos1_ack_after_spool(broker, tmp_path):
             pub.publish(f"ev/{i % 2}", f"m{i}".encode(), qos=1)
         pub.disconnect()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 5:
+        while len(entries(spool)) < 5:
             assert time.monotonic() < deadline, "messages never spooled"
             time.sleep(0.05)
     finally:
         sp.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
-    # topic is hex-embedded in the filename
-    assert files[0].name.split("-")[1] == "ev/0".encode().hex()
+    got = entries(spool)
+    assert [body for _, body in got] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
+    # the topic rides the spool header
+    assert got[0][0]["mqtt_topic"] == "ev/0"
 
 
 def test_yaml_mqtt_input_end_to_end(spark, broker, tmp_path):
@@ -121,7 +122,7 @@ output:
         pub.publish("sensor/b", b"cold", qos=1)
         pub.disconnect()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

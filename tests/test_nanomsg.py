@@ -11,6 +11,7 @@ import pytest
 
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.nanomsg import NanomsgSocket, NanomsgSpooler
+from bento_spark.streaming.spool import entries
 
 
 def test_push_pull_roundtrip():
@@ -120,7 +121,7 @@ output:
         q = p_out.run_stream(spark, checkpoint=str(tmp_path / "ckpt_out"))
         q.awaitTermination(90)
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p_in.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

@@ -19,6 +19,7 @@ from bento_spark.streaming.nats import (
     NatsSpooler,
     subject_matches,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -93,15 +94,15 @@ def test_spooler_spools_with_subject(server, tmp_path):
         pub.flush()
         pub.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 5:
+        while len(entries(spool)) < 5:
             assert time.monotonic() < deadline, "messages never spooled"
             time.sleep(0.05)
     finally:
         sp.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
-    # subject is hex-embedded in the filename
-    assert files[0].name.split("-")[1] == "ev.0".encode().hex()
+    got = entries(spool)
+    assert [body for _, body in got] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
+    # the subject rides the spool header
+    assert got[0][0]["nats_subject"] == "ev.0"
 
 
 def test_yaml_nats_input_end_to_end(spark, server, tmp_path):
@@ -128,7 +129,7 @@ output:
         pub.flush()
         pub.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

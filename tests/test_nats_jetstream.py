@@ -18,6 +18,7 @@ from bento_spark.streaming.nats import (
     MiniNatsServer,
     NatsJsClient,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -64,13 +65,13 @@ def test_pull_consumer_spools_and_acks(server, tmp_path):
                           ack_wait_s=30).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list((tmp_path / "spool").glob("*.msg"))) < 3:
+        while len(entries(tmp_path / "spool")) < 3:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.02)
         time.sleep(0.2)  # let the acks land
     finally:
         sp.stop()
-    bodies = sorted(m.read_bytes()[1:] for m in (tmp_path / "spool").glob("*.msg"))
+    bodies = sorted(body for _, body in entries(tmp_path / "spool"))
     assert bodies == [b"m0", b"m1", b"m2"]
     # all three acked server-side: nothing pending
     cons = server._js_consumers[("EV", "d1")]
@@ -217,7 +218,7 @@ output:
     sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 15
-        while len(list((tmp_path / "spool").glob("*.msg"))) < 5:
+        while len(entries(tmp_path / "spool")) < 5:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         q2 = p_in.run_stream(spark, checkpoint=str(tmp_path / "ck2"))
@@ -327,7 +328,7 @@ output:
     sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 15
-        while len(list((tmp_path / "spool").glob("*.msg"))) < 3:
+        while len(entries(tmp_path / "spool")) < 3:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         q2 = p_in.run_stream(spark, checkpoint=str(tmp_path / "ck2"))

@@ -18,6 +18,7 @@ from bento_spark.streaming.nsq import (
     NsqClient,
     NsqSpooler,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -126,12 +127,12 @@ def test_spooler_rdy_refresh_beyond_max_in_flight(server, tmp_path):
             pub.pub("bulk", f"b{i}".encode())
         pub.close()
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 7:
+        while time.monotonic() < deadline and len(entries(spool)) < 7:
             time.sleep(0.05)
-        files = sorted(spool.glob("*.msg"))
-        assert [f.read_bytes() for f in files] == [f"b{i}".encode() for i in range(7)]
-        # id + attempts + timestamp ride the filename
-        assert files[0].name.split("-")[2] == "00001"
+        got = entries(spool)
+        assert [body for _, body in got] == [f"b{i}".encode() for i in range(7)]
+        # id + attempts + timestamp ride the spool header
+        assert got[0][0]["nsq_attempts"] == 1
     finally:
         sp.stop()
 
@@ -165,7 +166,7 @@ output:
         pub.pub("sensor", b"cold")
         pub.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

@@ -17,6 +17,7 @@ from bento_spark.streaming.pubsub import (
     PubSubClient,
     PubSubSpooler,
 )
+from bento_spark.streaming.spool import entries
 
 _OPENSSL = shutil.which("openssl")
 
@@ -109,10 +110,9 @@ def test_spooler_acks_after_durability(server, tmp_path):
     sp = PubSubSpooler(server.endpoint, "proj", "sub-c", str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 4:
+        while time.monotonic() < deadline and len(entries(spool)) < 4:
             time.sleep(0.05)
-        files = sorted(spool.glob("*.msg"))
-        assert sorted(f.read_bytes() for f in files) == [b"j0", b"j1", b"j2", b"j3"]
+        assert sorted(body for _, body in entries(spool)) == [b"j0", b"j1", b"j2", b"j3"]
         assert server.subscription_size("sub-c") == 0
     finally:
         sp.stop()
@@ -156,7 +156,7 @@ output:
         q = p_out.run_stream(spark, checkpoint=str(tmp_path / "ckpt_out"))
         q.awaitTermination(90)
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p_in.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

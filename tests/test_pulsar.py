@@ -32,6 +32,7 @@ from bento_spark.streaming.pulsar import (
     parse_pulsar_url,
     read_frame,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -240,13 +241,12 @@ def test_topics_pattern_discovery(broker, tmp_path):
     sp.start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, "pattern topics never spooled"
             time.sleep(0.05)
     finally:
         sp.stop()
-    bodies = sorted(json.loads(f.read_text())["topic"].rsplit("/", 1)[1]
-                    for f in spool.glob("*.msg"))
+    bodies = sorted(meta["pulsar_topic"].rsplit("/", 1)[1] for meta, _ in entries(spool))
     assert bodies == ["ev-a", "ev-b"]
 
 
@@ -285,7 +285,7 @@ output:
         prod.close()
         pc.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

@@ -23,6 +23,7 @@ from bento_spark.streaming.redis import (
     parse_redis_url,
     read_redis_scan,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -161,13 +162,12 @@ def test_list_spooler(server, tmp_path):
             c.cmd("RPUSH", "jobs", f"m{i}")
         c.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 4:
+        while len(entries(spool)) < 4:
             assert time.monotonic() < deadline
             time.sleep(0.05)
     finally:
         sp.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3"]
+    assert [body for _, body in entries(spool)] == [b"m0", b"m1", b"m2", b"m3"]
 
 
 def test_pubsub_spooler_patterns(server, tmp_path):
@@ -181,15 +181,15 @@ def test_pubsub_spooler_patterns(server, tmp_path):
         c.cmd("PUBLISH", "ev.b", "two")
         c.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
     finally:
         sp.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"one", b"two"]
-    # channel rides the filename
-    assert files[0].name.split("-")[1] == "ev.a".encode().hex()
+    got = entries(spool)
+    assert [body for _, body in got] == [b"one", b"two"]
+    # the channel rides the spool header
+    assert got[0][0]["redis_channel"] == "ev.a"
 
 
 def test_streams_spooler_acks_after_spool(server, tmp_path):
@@ -201,7 +201,7 @@ def test_streams_spooler_acks_after_spool(server, tmp_path):
     try:
         c.cmd("XADD", "s1", "*", "body", "m2")
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         # everything spooled got acked — PEL drains to zero
@@ -212,11 +212,9 @@ def test_streams_spooler_acks_after_spool(server, tmp_path):
     finally:
         sp.stop()
         c.close()
-    files = sorted(spool.glob("*.msg"))
-    head, body = files[0].read_bytes().split(b"\n", 1)
-    env = json.loads(head)
-    assert body == b"m1" and env["stream"] == "s1"
-    assert env["meta"] == {"origin": "unit"}
+    meta, body = entries(spool)[0]
+    assert body == b"m1" and meta["redis_stream"] == "s1"
+    assert meta["redis_meta"] == {"origin": "unit"}
 
 
 def test_read_redis_scan_distributed(spark, server):
@@ -260,7 +258,7 @@ output:
         pub.cmd("PUBLISH", "news.y", "cold")
         pub.close()
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))
@@ -313,7 +311,7 @@ output:
     sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q2 = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in2"))

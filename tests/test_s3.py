@@ -12,6 +12,7 @@ from pathlib import Path
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.s3 import (
     MiniS3Server,
     NoSuchKeyError,
@@ -19,10 +20,9 @@ from bento_spark.streaming.s3 import (
     S3Spooler,
     _extract_paths,
     canonical_query,
-    read_s3_spool_batch,
-    read_s3_stream,
     sigv4_verify_request,
 )
+from bento_spark.streaming.spool import entries
 
 
 @pytest.fixture()
@@ -129,7 +129,7 @@ def test_listing_spooler_end_to_end(server, spark, tmp_path):
         assert sp.wait_finished(20) and sp.error is None
     finally:
         sp.stop()
-    df = read_s3_stream(spark, spool)
+    df = read_input(spark, {"aws_s3": {"spool_dir": spool}}, True)
     q = (df.writeStream.format("memory").queryName("s3_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
@@ -145,6 +145,22 @@ def test_listing_spooler_end_to_end(server, spark, tmp_path):
                                   "skip/c.json"]
 
 
+def test_listing_spooler_keeps_a_key_too_long_for_a_file_name(server, tmp_path):
+    """Bucket and key ride the spool header, so a key whose hex form would
+    overflow a 255-byte file name is spooled intact."""
+    key = "warehouse/raw/events/year=2026/month=10/day=18/hour=08/part-00000-6f1c2e3a.snappy.parquet"
+    _client(server).put_object("bkt", key, b"p")
+    sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
+                   access_key=server.access_key, secret_key=server.secret_key,
+                   spool_dir=str(tmp_path / "sp")).start()
+    try:
+        assert sp.wait_finished(20) and sp.error is None
+    finally:
+        sp.stop()
+    assert [(m["s3_bucket"], m["s3_key"], body) for m, body in entries(tmp_path / "sp")] == [
+        ("bkt", key, b"p")]
+
+
 def test_listing_spooler_delete_objects(server, tmp_path):
     c = _client(server)
     c.put_object("bkt", "d/x.txt", b"1")
@@ -158,7 +174,7 @@ def test_listing_spooler_delete_objects(server, tmp_path):
     finally:
         sp.stop()
     assert server.keys("bkt") == []
-    assert len(list((tmp_path / "sp").glob("*.msg"))) == 2
+    assert len(entries(tmp_path / "sp")) == 2
 
 
 def test_sqs_notification_mode(server, tmp_path):
@@ -187,12 +203,12 @@ def test_sqs_notification_mode(server, tmp_path):
         try:
             deadline = time.monotonic() + 15
             while time.monotonic() < deadline:
-                if list((tmp_path / "sp").glob("*.msg")):
+                if entries(tmp_path / "sp"):
                     break
                 time.sleep(0.05)
-            files = list((tmp_path / "sp").glob("*.msg"))
-            assert len(files) == 1
-            assert files[0].read_bytes() == b'.{"ok": true}'  # 1-byte pad
+            got = entries(tmp_path / "sp")
+            assert len(got) == 1
+            assert got[0][1] == b'{"ok": true}'
             # notification acked after spool
             deadline = time.monotonic() + 5
             while time.monotonic() < deadline and sqs_srv.queue_size(q_url):
@@ -334,21 +350,6 @@ def test_s3_cache_add_and_delete_contract(server, spark):
     assert got == {"k1": "v1", "k3": "v3", "nope": None}
     cache.delete(spark.createDataFrame([("k1",)], "key string"))
     assert server.object("bkt", "k1") is None
-
-
-def test_read_s3_spool_batch_matches_stream(server, spark, tmp_path):
-    c = _client(server)
-    c.put_object("bkt", "b/one.txt", b"payload")
-    sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
-                   access_key=server.access_key, secret_key=server.secret_key,
-                   spool_dir=str(tmp_path / "sp"), prefix="b/").start()
-    try:
-        assert sp.wait_finished(20)
-    finally:
-        sp.stop()
-    rows = read_s3_spool_batch(spark, str(tmp_path / "sp")).collect()
-    assert [(r.s3_bucket, r.s3_key, r.value) for r in rows] == [
-        ("bkt", "b/one.txt", "payload")]
 
 
 def test_lint_knows_aws_s3_sections():

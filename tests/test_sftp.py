@@ -22,6 +22,7 @@ from bento_spark.streaming.sftp import (
     parse_sftp_address,
     sftp_sink,
 )
+from bento_spark.streaming.spool import entries
 from bento_spark.streaming.ssh_transport import (
     AES,
     AesCtr,
@@ -220,8 +221,7 @@ def test_spooler_one_pass_and_delete(server, tmp_path):
         delete_on_finish=True).start()
     assert sp.wait_finished(30)
     sp.stop()
-    files = sorted(spool.glob("*.msg"))
-    assert [json.loads(f.read_bytes())["n"] for f in files] == [0, 1, 2]
+    assert [json.loads(body)["n"] for _, body in entries(spool)] == [0, 1, 2]
     # consumed files were deleted, the non-matching one remains
     assert sorted(p.name for p in (server.root_path / "inbox").iterdir()) \
         == ["skip.txt"]
@@ -237,16 +237,16 @@ def test_spooler_watcher_picks_up_new_files(server, tmp_path):
         watcher=True, poll_interval_s=0.2).start()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 1:
+        while len(entries(spool)) < 1:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         (server.root_path / "watch" / "b.json").write_text('{"v": "second"}')
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline, "watcher missed the new file"
             time.sleep(0.05)
     finally:
         sp.stop()
-    got = sorted(json.loads(f.read_bytes())["v"] for f in spool.glob("*.msg"))
+    got = sorted(json.loads(body)["v"] for _, body in entries(spool))
     assert got == ["first", "second"]
 
 

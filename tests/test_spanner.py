@@ -22,6 +22,7 @@ from bento_spark.streaming.spanner import (
     decode_value,
     merge_chunked,
 )
+from bento_spark.streaming.spool import entries
 
 DSN = "projects/p/instances/i/databases/db"
 
@@ -82,10 +83,6 @@ def _seed_tree(server):
         "2026-01-01T00:00:04Z", seq="00000003", txn="txn-c"))
 
 
-def _events(spool):
-    return [json.loads(f.read_text()) for f in sorted(spool.glob("*.msg"))]
-
-
 def test_partition_tree_and_mods(server, tmp_path):
     _seed_tree(server)
     spool = tmp_path / "sp"
@@ -94,24 +91,24 @@ def test_partition_tree_and_mods(server, tmp_path):
         start_time="2026-01-01T00:00:00Z", endpoint=server.endpoint,
     ).start()
     deadline = time.monotonic() + 15
-    while len(_events(spool)) < 4:
+    while len(entries(spool)) < 4:
         assert time.monotonic() < deadline, sp.error
         time.sleep(0.05)
     sp.stop()
     assert sp.error is None
-    evs = _events(spool)
     by_table = {}
-    for e in evs:
-        by_table.setdefault((e["table_name"], e["mod_type"]), []).append(e)
+    for meta, mod in entries(spool):
+        key = (meta["gcp_spanner_table_name"], meta["gcp_spanner_cdc_mod_type"])
+        by_table.setdefault(key, []).append((meta, mod))
     ins = by_table[("users", "INSERT")]
     assert len(ins) == 1
-    assert json.loads(ins[0]["mod"]) == {
+    assert json.loads(ins[0][1]) == {
         "keys": {"id": 1}, "new_values": {"id": 1, "name": "ada"}}
-    assert ins[0]["commit_timestamp"] == "2026-01-01T00:00:02.5Z"
-    assert ins[0]["server_transaction_id"] == "txn-a"
+    assert ins[0][0]["gcp_spanner_commit_timestamp"] == "2026-01-01T00:00:02.5Z"
+    assert ins[0][0]["gcp_spanner_cdc_server_transaction_id"] == "txn-a"
     assert len(by_table[("users", "UPDATE")]) == 2  # one message per MOD
     dele = by_table[("orders", "DELETE")][0]
-    assert json.loads(dele["mod"]) == {
+    assert json.loads(dele[1]) == {
         "keys": {"oid": 9}, "old_values": {"oid": 9, "qty": 1}}
     # dedup: part-b queried exactly once despite two announcements
     tokens = [(q.get("params") or {}).get("partition_token")
@@ -172,7 +169,7 @@ output:
     sp = p.start_bridge()
     try:
         deadline = time.monotonic() + 15
-        while len(list(spool.glob("*.msg"))) < 4:
+        while len(entries(spool)) < 4:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

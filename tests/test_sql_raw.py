@@ -105,6 +105,62 @@ pipeline:
     assert got == [(10, "dee", 4.0), (11, "eli", 5.0)]
 
 
+def _ids(db, lo):
+    con = sqlite3.connect(db)
+    try:
+        return [r[0] for r in con.execute(
+            "SELECT id FROM users WHERE id >= ? ORDER BY id", (lo,))]
+    finally:
+        con.close()
+
+
+def test_exec_only_runs_when_the_plan_runs(spark, db, tmp_path):
+    """Building an exec_only pipeline writes nothing; each run of the plan
+    executes each row's statement once."""
+    src = tmp_path / "src"
+    spark.createDataFrame([(20,), (21,), (22,)], "id int").write.parquet(str(src))
+    p = compile_yaml(f"""
+input:
+  parquet: {{path: {src}}}
+pipeline:
+  processors:
+    - sql_raw:
+        dsn: {db}
+        query: 'INSERT INTO users (id, name) VALUES (?, ?)'
+        args_mapping: '[ this.id.string(), "n" + this.id.string() ]'
+        exec_only: true
+""")
+    out = p.build_batch(spark)
+    assert _ids(db, 20) == []
+    assert sorted(r.id for r in out.collect()) == [20, 21, 22]  # pass-through
+    assert _ids(db, 20) == [20, 21, 22]
+
+
+def test_streaming_exec_only_with_args_mapping(spark, db, tmp_path):
+    from bento_spark.streaming.sink import IdempotentParquetSink
+
+    src = tmp_path / "lines"
+    src.mkdir()
+    (src / "a.txt").write_text("30\n31")
+    p = compile_yaml(f"""
+input:
+  lines: {{path: {src}}}
+pipeline:
+  processors:
+    - sql_raw:
+        dsn: {db}
+        query: 'INSERT INTO users (id, name) VALUES (?, ?)'
+        args_mapping: '[ this.line, "s" + this.line ]'
+        exec_only: true
+output:
+  path: {tmp_path}/out
+""")
+    p.run_stream(spark, checkpoint=str(tmp_path / "ck")).awaitTermination(90)
+    assert _ids(db, 30) == [30, 31]
+    rows = IdempotentParquetSink(str(tmp_path / "out")).read(spark).collect()
+    assert sorted(r.line for r in rows) == ["30", "31"]
+
+
 def test_yaml_sql_raw_input_section(spark, db):
     p = compile_yaml(f"""
 input:

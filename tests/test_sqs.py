@@ -11,6 +11,7 @@ import time
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.streaming.spool import entries
 from bento_spark.streaming.sqs import (
     MiniSqsServer,
     SqsClient,
@@ -83,10 +84,9 @@ def test_spooler_acks_after_durability(server, tmp_path):
                     str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 4:
+        while time.monotonic() < deadline and len(entries(spool)) < 4:
             time.sleep(0.05)
-        files = sorted(spool.glob("*.msg"))
-        assert sorted(f.read_bytes() for f in files) == [b"j0", b"j1", b"j2", b"j3"]
+        assert sorted(body for _, body in entries(spool)) == [b"j0", b"j1", b"j2", b"j3"]
         assert server.queue_size(_Q) == 0  # all deleted after spooling
     finally:
         sp.stop()
@@ -135,7 +135,7 @@ output:
     sp = p_in.start_bridge()
     try:
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 3:
+        while len(entries(spool)) < 3:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         q = p_in.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

@@ -11,6 +11,7 @@ import time
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
+from bento_spark.streaming.spool import entries
 from bento_spark.streaming.zeromq import ZmqSocket, ZmqSpooler
 
 
@@ -113,7 +114,7 @@ output:
         push.send([b"warm"])
         push.send([b"cold"])
         deadline = time.monotonic() + 10
-        while len(list(spool.glob("*.msg"))) < 2:
+        while len(entries(spool)) < 2:
             assert time.monotonic() < deadline
             time.sleep(0.05)
         push.close()
@@ -171,12 +172,11 @@ def test_spooler_sub_filters(tmp_path):
         pub.send([b"drop.b", b"2"])
         pub.send([b"keep.c", b"3"])
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 2:
+        while time.monotonic() < deadline and len(entries(spool)) < 2:
             time.sleep(0.05)
         time.sleep(0.2)
-        files = sorted(spool.glob("*.msg"))
         # topic frame + payload concatenate into the spooled body
-        assert [f.read_bytes() for f in files] == [b"keep.a1", b"keep.c3"]
+        assert [body for _, body in entries(spool)] == [b"keep.a1", b"keep.c3"]
     finally:
         sp.stop()
         pub.close()
