@@ -21,19 +21,29 @@ reference pays one query PER MESSAGE; a distributed engine must not):
   every pipeline row with the same args shares one query, the same
   shape as the cached http/sql_select enrichments.
 - processor (exec_only) -> a pass-through that executes each row's
-  statement when the plan runs, in the task that produces the row (one
+  statement when the plan runs, once per row, in ONE writer task (one
   executemany transaction per Arrow batch). Building the plan executes
-  nothing, so `build_batch` / `bento test` repeat no writes.
+  no statement, so `build_batch` / `bento test` repeat no writes. Every later
+  read of the rows reuses that task's output instead of re-running it:
+  a batch frame is a lazy localCheckpoint (a `switch` branch or a second
+  action reads the written rows); a micro-batch reads them through one
+  shuffle, which Spark reuses for every branch of the plan. A task retry
+  runs its statements again (at-least-once, like the output); so does a
+  second streaming query over the same chain (window + output.dlq).
 - output.sql_raw -> bind the micro-batch's argument tuples through ONE
   executemany in ONE transaction (streamed via toLocalIterator — bounded
   driver memory). At-least-once under replay, like the reference's
   output.
 
-Scale note: sqlite is a single-file engine — a driver-side single-writer
-is its only correct topology. For server databases the bulk data path is
-the JDBC datasource (sql_select / sql_insert, partitioned reads +
-parallel writes); sql_raw is the control-plane tool (DDL, migrations,
-small dimension upserts), exactly how the reference positions it.
+Scale note: sqlite is a single-file engine — a single writer is its only
+correct topology. The input, SELECT mode and the output run their
+statements on the driver; the exec_only writer is one task, so the
+database file must be reachable from the executor that runs it (the
+driver's host under a `local` master). For server databases the bulk
+data path is the JDBC datasource (sql_select / sql_insert, partitioned
+reads + parallel writes); sql_raw is the control-plane tool (DDL,
+migrations, small dimension upserts), exactly how the reference
+positions it.
 """
 
 from __future__ import annotations
@@ -123,6 +133,10 @@ def sql_raw_exec_batch(batch_df, driver: str, dsn: str, query: str, args_col: st
     sql_raw_exec(driver, dsn, query, args_rows=(tuple(row[0]) for row in it))
 
 
+def _pass_through(batches):
+    yield from batches
+
+
 def sql_raw_processor(df, driver: str, dsn: str, query: str,
                       args_col: str | None = None,
                       exec_only: bool = False,
@@ -140,7 +154,8 @@ def sql_raw_processor(df, driver: str, dsn: str, query: str,
 
     exec mode (`exec_only=True`): rows pass through unchanged; when the
     plan runs, each row's statement executes once (empty binds without
-    `args_col`), one executemany transaction per Arrow batch."""
+    `args_col`) in one writer task, one executemany transaction per Arrow
+    batch, and every later read of the rows reuses that task's output."""
     from pyspark.sql import functions as F
 
     if exec_only:
@@ -156,7 +171,15 @@ def sql_raw_processor(df, driver: str, dsn: str, query: str,
             finally:
                 conn.close()
 
-        return df.mapInArrow(exec_rows, df.schema)
+        written = df.coalesce(1).mapInArrow(exec_rows, df.schema)
+        if not df.isStreaming:
+            return written.localCheckpoint(eager=False)
+        # a micro-batch cannot be checkpointed mid-plan: every branch
+        # reads the writes through one shuffle, which Spark reuses across
+        # branches; the opaque pass-through above it keeps a branch's
+        # filter from being pushed below the shuffle
+        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return written.repartition(parts).mapInArrow(_pass_through, df.schema)
 
     if args_col is None:
         out = sql_raw_query(df.sparkSession, driver, dsn, query)

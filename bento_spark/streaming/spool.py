@@ -23,8 +23,9 @@ File layout, `<seq:012d>-<uuid32>.msg`:
 
 The header line means a file is never empty (Spark's text source emits no
 row for a 0-byte file) and no file name carries metadata (a name longer
-than 255 bytes cannot be created). `seq` keeps arrival order sortable; the
-uuid keeps names distinct across spoolers sharing a dir.
+than 255 bytes cannot be created). `seq` counts one `Spool`'s messages from
+1, so a spooler's files sort in arrival order; the uuid keeps names
+distinct across spoolers sharing a dir, and across restarts.
 """
 
 from __future__ import annotations
@@ -45,16 +46,12 @@ class Spool:
     def __init__(self, spool_dir: str | os.PathLike):
         self.dir = Path(spool_dir)
         self.dir.mkdir(parents=True, exist_ok=True)
-        self.error: str | None = None
         self._lock = threading.Lock()
-        # continue the dir's sequence, so a restarted spooler's files sort
-        # after the ones it left
-        self._seq = max((int(p.name[:12]) for p in self.dir.glob(f"*{SUFFIX}")
-                         if p.name[:12].isdigit()), default=0)
+        self._seq = 0
 
-    def put(self, body: bytes | str, **meta) -> str:
-        """Write one message durably; returns the file's stem. A failure is
-        recorded in `error`, printed to stderr and raised."""
+    def put(self, body: bytes | str, **meta) -> None:
+        """Write one message durably. A failure is printed to stderr and
+        raised."""
         if isinstance(body, str):
             body = body.encode("utf-8")
         with self._lock:
@@ -67,10 +64,8 @@ class Spool:
             tmp.write_bytes(json.dumps(meta, separators=(",", ":")).encode() + b"\n" + body)
             tmp.rename(self.dir / f"{stem}{SUFFIX}")
         except Exception as e:
-            self.error = f"spool {self.dir}: {e}"
-            print(self.error, file=sys.stderr)
+            print(f"spool {self.dir}: {e}", file=sys.stderr)
             raise
-        return stem
 
 
 def decode(data: bytes) -> tuple[dict, bytes]:
@@ -82,7 +77,8 @@ def decode(data: bytes) -> tuple[dict, bytes]:
 
 
 def entries(spool_dir: str | os.PathLike) -> list[tuple[dict, bytes]]:
-    """Every complete message in a spool dir as (meta, body), in seq order."""
+    """Every complete message in a spool dir as (meta, body), in seq
+    order (one spooler's arrival order)."""
     return [decode(p.read_bytes()) for p in sorted(Path(spool_dir).glob(f"*{SUFFIX}"))]
 
 
@@ -93,7 +89,9 @@ def read_spool(spark, spool_dir: str, meta_ddl: str = "", lines: bool = False,
     file whose header is not a JSON object fails the query (FAILFAST).
     `lines=True` gives one row per body line, split the way Spark's text
     source splits a file (\\n, \\r\\n or \\r; no row for a final terminator;
-    none for an empty body)."""
+    none for an empty body). The header is split off a whole file, so in
+    either mode one body must fit in one JVM string (under 2 GB); a
+    line-mode body is held about three times over while it is split."""
     # pyspark is imported here: the spoolers' modules also run in Python
     # workers, which need only `Spool`
     from pyspark.sql import functions as F

@@ -188,7 +188,7 @@ def test_changefeed_cursor_resume(server, tmp_path):
     finally:
         sp.stop()
     assert (spool / ".cursor").read_text() == "1000.0000000002"
-    first = len(entries(spool))
+    before = entries(spool)
     # rows landing while the input is down
     server.append_row("strm", ["d", 4], {"after": {"k": "d", "v": 4}},
                       "1000.0000000005")
@@ -205,8 +205,9 @@ def test_changefeed_cursor_resume(server, tmp_path):
         time.sleep(0.3)  # would re-backfill a/b if the cursor were broken
     finally:
         sp2.stop()
-    fresh = [json.loads(body) for _, body in entries(spool)[first:]]
-    assert len(fresh) == 1
+    after = entries(spool)
+    fresh = [json.loads(body) for meta, body in after if (meta, body) not in before]
+    assert len(after) == len(before) + 1 and len(fresh) == 1
     row = json.loads(fresh[0]["row"])
     assert row["after"] == {"k": "d", "v": 4}
     assert row["updated"] == "1000.0000000005"  # UPDATED forced by cache

@@ -240,7 +240,8 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     while time.monotonic() < deadline and len(entries(spool)) < 2:
         time.sleep(0.05)
     sp2.stop()
-    got = entries(spool)
+    # each spooler run numbers its files from 1: order by offset
+    got = sorted(entries(spool), key=lambda e: e[0]["kafka_offset"])
     assert len(got) == 2
     assert [body for _, body in got] == [b"one", b"two"]
     p.close()

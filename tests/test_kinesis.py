@@ -72,7 +72,9 @@ def test_spooler_checkpoint_resume(server, tmp_path):
     while time.monotonic() < deadline and len(entries(spool)) < 2:
         time.sleep(0.05)
     sp2.stop()
-    assert [body for _, body in entries(spool)] == [b"one", b"two"]
+    # each spooler run numbers its files from 1: order by sequence number
+    got = sorted(entries(spool), key=lambda e: int(e[0]["kinesis_sequence"]))
+    assert [body for _, body in got] == [b"one", b"two"]
 
 
 def test_yaml_kinesis_roundtrip(spark, server, tmp_path):

@@ -115,8 +115,10 @@ def _ids(db, lo):
 
 
 def test_exec_only_runs_when_the_plan_runs(spark, db, tmp_path):
-    """Building an exec_only pipeline writes nothing; each run of the plan
-    executes each row's statement once."""
+    """Building an exec_only pipeline writes nothing; running it executes
+    each row's statement once, although the two-case switch after it reads
+    the rows three times (a second INSERT would break the primary key),
+    and a second action executes none again."""
     src = tmp_path / "src"
     spark.createDataFrame([(20,), (21,), (22,)], "id int").write.parquet(str(src))
     p = compile_yaml(f"""
@@ -129,19 +131,28 @@ pipeline:
         query: 'INSERT INTO users (id, name) VALUES (?, ?)'
         args_mapping: '[ this.id.string(), "n" + this.id.string() ]'
         exec_only: true
+    - switch:
+        cases:
+          - {{check: 'this.id < 21', processors: [{{mapping: 'root.id = this.id'}}]}}
+          - {{check: 'this.id < 22', processors: []}}
+        default: []
 """)
     out = p.build_batch(spark)
     assert _ids(db, 20) == []
     assert sorted(r.id for r in out.collect()) == [20, 21, 22]  # pass-through
     assert _ids(db, 20) == [20, 21, 22]
+    assert out.count() == 3
+    assert _ids(db, 20) == [20, 21, 22]
 
 
 def test_streaming_exec_only_with_args_mapping(spark, db, tmp_path):
+    """A streaming exec_only plan builds and writes each row once, with a
+    two-case switch reading its rows three times per micro-batch."""
     from bento_spark.streaming.sink import IdempotentParquetSink
 
     src = tmp_path / "lines"
     src.mkdir()
-    (src / "a.txt").write_text("30\n31")
+    (src / "a.txt").write_text("30\n31\n32")
     p = compile_yaml(f"""
 input:
   lines: {{path: {src}}}
@@ -152,13 +163,20 @@ pipeline:
         query: 'INSERT INTO users (id, name) VALUES (?, ?)'
         args_mapping: '[ this.line, "s" + this.line ]'
         exec_only: true
+    - switch:
+        cases:
+          - {{check: 'this.line == "30"', processors: [{{mapping: 'root.line = this.line'}}]}}
+          - {{check: 'this.line == "31"', processors: []}}
+        default: []
 output:
   path: {tmp_path}/out
 """)
-    p.run_stream(spark, checkpoint=str(tmp_path / "ck")).awaitTermination(90)
-    assert _ids(db, 30) == [30, 31]
+    q = p.run_stream(spark, checkpoint=str(tmp_path / "ck"))
+    q.awaitTermination(90)
+    assert q.exception() is None
+    assert _ids(db, 30) == [30, 31, 32]
     rows = IdempotentParquetSink(str(tmp_path / "out")).read(spark).collect()
-    assert sorted(r.line for r in rows) == ["30", "31"]
+    assert sorted(r.line for r in rows) == ["30", "31", "32"]
 
 
 def test_yaml_sql_raw_input_section(spark, db):
