@@ -26,13 +26,13 @@ import urllib.parse
 import uuid
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.azure_blob import (
     _xml_escape,
     _xml_unescape,
     shared_key_signature,
     shared_key_string_to_sign,
 )
-
 from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2021-08-06"
@@ -40,66 +40,38 @@ _API_VERSION = "2021-08-06"
 
 class AzureQueueClient:
     """Minimal Queue REST client: Put Message / Get Messages / Delete
-    Message, SharedKey-signed, bounded in-call retry."""
+    Message, SharedKey-signed."""
 
     def __init__(self, endpoint: str, account: str, account_key: str,
                  timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.account, self.account_key = account, account_key
-        self.timeout = timeout
 
     def _request(self, method: str, path: str,
                  query_pairs: list[tuple[str, str]] | None = None,
-                 body: bytes = b"", retries: int = 3, backoff_s: float = 0.25,
-                 ) -> tuple[int, bytes]:
-        import http.client
-
+                 body: bytes = b"") -> bytes:
         pairs = list(query_pairs or [])
-        attempt = 0
-        while True:
-            headers = {
+
+        def headers() -> dict[str, str]:
+            h = {
                 "x-ms-date": time.strftime("%a, %d %b %Y %H:%M:%S GMT",
                                            time.gmtime()),
                 "x-ms-version": _API_VERSION,
                 "Content-Length": str(len(body)),
-                "Host": self.host_hdr,
+                "Host": self._ep.host_hdr,
             }
             if body:
-                headers["Content-Type"] = "application/xml"
-            sts = shared_key_string_to_sign(method, path, pairs, headers,
+                h["Content-Type"] = "application/xml"
+            sts = shared_key_string_to_sign(method, path, pairs, h,
                                             self.account)
-            headers["Authorization"] = (
+            h["Authorization"] = (
                 f"SharedKey {self.account}:"
                 f"{shared_key_signature(sts, self.account_key)}")
-            qs = urllib.parse.urlencode(pairs)
-            target = path + (f"?{qs}" if qs else "")
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request(method, target, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return status, data
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"azure_queue: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"azure_queue: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+            return h
+
+        qs = urllib.parse.urlencode(pairs)
+        return rest.call(self._ep, method, path + (f"?{qs}" if qs else ""),
+                         body, headers, name="azure_queue")[1]
 
     def put_message(self, queue: str, text: str, ttl_s: int | None = None) -> None:
         """Put Message: base64 message text (the storage-SDK convention)."""
@@ -115,7 +87,7 @@ class AzureQueueClient:
         """Get Messages -> [{'id', 'pop_receipt', 'text'}]."""
         import re
 
-        _status, data = self._request(
+        data = self._request(
             "GET", f"/{urllib.parse.quote(queue)}/messages",
             [("numofmessages", str(num)),
              ("visibilitytimeout", str(visibility_timeout_s))])

@@ -41,6 +41,7 @@ import time
 import urllib.parse
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2019-02-02"
@@ -101,70 +102,38 @@ class AzureTableClient:
     """Minimal Table REST client: Create Table, Insert / InsertOrMerge /
     InsertOrReplace / Update / Merge / Delete Entity, Query Entities with
     $filter/$select/$top + continuation-token pagination. SharedKey
-    (Table flavor) signed, bounded in-call retry on transport/5xx/429."""
+    (Table flavor) signed."""
 
     def __init__(self, endpoint: str, account: str, account_key: str,
                  timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.account, self.account_key = account, account_key
-        self.timeout = timeout
 
     def _request(self, method: str, path: str,
                  query_pairs: list[tuple[str, str]] | None = None,
                  body: bytes = b"", extra_headers: dict | None = None,
-                 retries: int = 3, backoff_s: float = 0.25,
                  ) -> tuple[int, bytes, dict[str, str]]:
-        import http.client
-
-        pairs = list(query_pairs or [])
-        attempt = 0
-        while True:
-            headers = {
+        def headers() -> dict[str, str]:
+            h = {
                 "x-ms-date": time.strftime("%a, %d %b %Y %H:%M:%S GMT",
                                            time.gmtime()),
                 "x-ms-version": _API_VERSION,
                 "Content-Length": str(len(body)),
-                "Host": self.host_hdr,
+                "Host": self._ep.host_hdr,
                 **_ODATA_HDRS,
             }
             if body:
-                headers["Content-Type"] = "application/json"
-            for k, v in (extra_headers or {}).items():
-                headers[k] = v
-            sts = table_string_to_sign(method, path, headers, self.account)
+                h["Content-Type"] = "application/json"
+            h.update(extra_headers or {})
+            sts = table_string_to_sign(method, path, h, self.account)
             sig = table_signature(sts, self.account_key)
-            headers["Authorization"] = f"SharedKey {self.account}:{sig}"
-            qs = urllib.parse.urlencode(pairs)
-            target = path + (f"?{qs}" if qs else "")
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, resp_headers, fault = None, b"", {}, None
-            try:
-                conn.request(method, target, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-                resp_headers = {k.lower(): v for k, v in resp.getheaders()}
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and (status // 100 == 2
-                                       or status in (404, 409, 412)):
-                return status, data, resp_headers
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"azure_table: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"azure_table: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+            h["Authorization"] = f"SharedKey {self.account}:{sig}"
+            return h
+
+        qs = urllib.parse.urlencode(list(query_pairs or []))
+        return rest.call(self._ep, method, path + (f"?{qs}" if qs else ""),
+                         body, headers, name="azure_table",
+                         ok=(404, 409, 412))
 
     def create_table(self, table: str) -> None:
         """Create Table; an existing table (409) is fine — the reference

@@ -57,6 +57,7 @@ import urllib.parse
 import uuid
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 
 _API_VERSION = "2018-12-31"
@@ -96,27 +97,19 @@ def parse_connection_string(cs: str) -> tuple[str, str]:
 class CosmosClient:
     """Minimal CosmosDB document client: Create/Upsert/Read/Replace/
     Delete/Patch item + parametrized Query Documents with continuation,
-    master-key signed, bounded in-call retry on transport/5xx/429."""
+    master-key signed."""
 
     def __init__(self, endpoint: str, account_key: str, timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.account_key = account_key
-        self.timeout = timeout
 
     def _request(self, verb: str, resource_type: str, resource_link: str,
                  path: str, body: bytes = b"",
                  extra_headers: dict | None = None,
-                 retries: int = 3, backoff_s: float = 0.25,
                  ) -> tuple[int, bytes, dict[str, str]]:
-        import http.client
-
-        attempt = 0
-        while True:
+        def headers() -> dict[str, str]:
             date = time.strftime("%a, %d %b %Y %H:%M:%S GMT", time.gmtime())
-            headers = {
+            h = {
                 "x-ms-date": date,
                 "x-ms-version": _API_VERSION,
                 "Authorization": master_key_token(
@@ -125,34 +118,12 @@ class CosmosClient:
                 "Accept": "application/json",
             }
             if body and "Content-Type" not in (extra_headers or {}):
-                headers["Content-Type"] = "application/json"
-            for k, v in (extra_headers or {}).items():
-                headers[k] = v
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, resp_headers, fault = None, b"", {}, None
-            try:
-                conn.request(verb, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-                resp_headers = {k.lower(): v for k, v in resp.getheaders()}
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and (status // 100 == 2
-                                       or status in (404, 409, 412)):
-                return status, data, resp_headers
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"cosmosdb: {verb} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"cosmosdb: {verb} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+                h["Content-Type"] = "application/json"
+            h.update(extra_headers or {})
+            return h
+
+        return rest.call(self._ep, verb, path, body, headers, name="cosmosdb",
+                         ok=(404, 409, 412))
 
     @staticmethod
     def _pk_header(pk_value) -> str:

@@ -25,85 +25,57 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 import urllib.parse
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 
 _API_BASE = "/api/v10"
 
 
+def _retry_after(status: int, data: bytes, wait: float) -> float | None:
+    """rest.call's hook: a 429 waits the `retry_after` of the documented
+    rate-limit envelope, capped at 5 s."""
+    if status != 429:
+        return None
+    try:
+        return min(float(json.loads(data).get("retry_after", 0.25)), 5.0)
+    except ValueError:
+        return 0.25
+
+
 class DiscordClient:
     """Minimal channel-message client: list (after/limit paging) and
-    create, bot-token auth, bounded in-call retry incl. 429
-    retry_after."""
+    create, bot-token auth; a 429 waits its retry_after."""
 
     def __init__(self, endpoint: str, bot_token: str, timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.bot_token = bot_token
-        self.timeout = timeout
 
-    def _call(self, method: str, path: str, body: bytes = b"",
-              retries: int = 3) -> tuple[int, bytes]:
-        import http.client
-
-        attempt = 0
-        while True:
-            headers = {
-                "Authorization": f"Bot {self.bot_token}",
-                "Content-Type": "application/json",
-                "Content-Length": str(len(body)),
-            }
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request(method, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return status, data
-            if status == 429 and attempt < retries:
-                # the documented rate-limit envelope carries retry_after
-                try:
-                    wait = float(json.loads(data).get("retry_after", 0.25))
-                except (ValueError, json.JSONDecodeError):
-                    wait = 0.25
-                time.sleep(min(wait, 5.0))
-                attempt += 1
-                continue
-            transient = fault is not None or (status or 500) >= 500
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"discord: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"discord: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(0.25 * (2 ** (attempt - 1)))
+    def _call(self, method: str, path: str, body: bytes = b"") -> bytes:
+        headers = {
+            "Authorization": f"Bot {self.bot_token}",
+            "Content-Type": "application/json",
+            "Content-Length": str(len(body)),
+        }
+        _, data, _ = rest.call(self._ep, method, path, body, lambda: headers,
+                               name="discord", throttled=_retry_after)
+        return data
 
     def channel_messages(self, channel_id: str, limit: int = 100,
                          after: str | None = None) -> list[dict]:
         q = [("limit", str(limit))]
         if after:
             q.append(("after", after))
-        _status, data = self._call(
+        data = self._call(
             "GET",
             f"{_API_BASE}/channels/{urllib.parse.quote(channel_id)}/messages?"
             + urllib.parse.urlencode(q))
         return json.loads(data or b"[]")
 
     def create_message(self, channel_id: str, payload: dict) -> dict:
-        _status, data = self._call(
+        data = self._call(
             "POST",
             f"{_API_BASE}/channels/{urllib.parse.quote(channel_id)}/messages",
             body=json.dumps(payload).encode())

@@ -25,6 +25,7 @@ import re
 import threading
 import time
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.sqs import sigv4_headers
 
 _TARGET = "DynamoDB_20120810"
@@ -36,67 +37,38 @@ class DynamoClient:
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 10.0):
-        import urllib.parse
-
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
     def call(self, op: str, body: dict, retries: int = 3,
              backoff_s: float = 0.25) -> dict:
-        """One signed request; bounded in-call retry on transport errors /
-        5xx / throttling (a raise inside foreachPartition fails the task);
-        the conditional-put rejection maps to KeyExistsError; status is
-        checked BEFORE JSON parsing so non-JSON error bodies (proxy 502s)
-        surface as the informative ConnectionError."""
-        import http.client
-
+        """One signed request -> the response JSON."""
         payload = json.dumps(body).encode("utf-8")
-        attempt = 0
-        while True:
-            headers = sigv4_headers(
-                "POST", self.host_hdr, "/", payload, self.access_key,
-                self.secret_key, self.region, "dynamodb", f"{_TARGET}.{op}")
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request("POST", "/", body=payload, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return json.loads(data) if data else {}
-            if status is not None and status // 100 == 4:
-                try:
-                    err_type = json.loads(data).get("__type", "")
-                except ValueError:
-                    err_type = ""
-                if err_type.endswith("ConditionalCheckFailedException"):
-                    raise KeyExistsError()
-                # AWS throttling surfaces under several 400-level names —
-                # all must heal in-call, not fail the executor task
-                throttled = (
-                    err_type.endswith("ProvisionedThroughputExceededException")
-                    or err_type.endswith("ThrottlingException")
-                    or err_type.endswith("RequestLimitExceeded"))
-                if not throttled:
-                    raise ConnectionError(
-                        f"dynamodb: {op} -> {status} {data[:160]!r}")
-            if attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(f"dynamodb: {op} -> {fault}") from fault
-                raise ConnectionError(f"dynamodb: {op} -> {status} {data[:160]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+        _, data, _ = rest.call(
+            self._ep, "POST", "/", payload,
+            lambda: sigv4_headers(
+                "POST", self._ep.host_hdr, "/", payload, self.access_key,
+                self.secret_key, self.region, "dynamodb", f"{_TARGET}.{op}"),
+            name=f"dynamodb {op}", retries=retries, backoff_s=backoff_s,
+            throttled=_throttled)
+        return json.loads(data) if data else {}
+
+
+# the 400-level names AWS throttling surfaces under
+_THROTTLES = ("ProvisionedThroughputExceededException", "ThrottlingException",
+              "RequestLimitExceeded")
+
+
+def _throttled(status: int, data: bytes, wait: float) -> float | None:
+    """rest.call's hook: a 4xx whose `__type` names a throttle retries
+    after `wait`; the conditional-put rejection raises KeyExistsError."""
+    try:
+        err_type = json.loads(data).get("__type", "")
+    except ValueError:
+        err_type = ""
+    if err_type.endswith("ConditionalCheckFailedException"):
+        raise KeyExistsError()
+    return wait if err_type.endswith(_THROTTLES) else None
 
 
 def _batch_write(client: "DynamoClient", table: str, requests: list) -> None:

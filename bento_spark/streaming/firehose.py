@@ -22,6 +22,7 @@ import json
 import threading
 import time
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.sqs import sigv4_headers
 
 _TARGET = "Firehose_20150804"
@@ -34,49 +35,19 @@ class FirehoseClient:
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 10.0):
-        import urllib.parse
-
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
-    def _call(self, op: str, body: dict, retries: int = 3,
-              backoff_s: float = 0.25) -> dict:
-        import http.client
-
+    def _call(self, op: str, body: dict) -> dict:
         payload = json.dumps(body).encode("utf-8")
-        attempt = 0
-        while True:
-            headers = sigv4_headers(
-                "POST", self.host_hdr, "/", payload, self.access_key,
+        _, data, _ = rest.call(
+            self._ep, "POST", "/", payload,
+            lambda: sigv4_headers(
+                "POST", self._ep.host_hdr, "/", payload, self.access_key,
                 self.secret_key, self.region, "firehose", f"{_TARGET}.{op}",
-                content_type=_JSON11)
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request("POST", "/", body=payload, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return json.loads(data) if data else {}
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(f"firehose: {op} -> {fault}") from fault
-                raise ConnectionError(
-                    f"firehose: {op} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+                content_type=_JSON11),
+            name=f"firehose {op}")
+        return json.loads(data) if data else {}
 
     def describe(self, stream: str) -> dict:
         return self._call("DescribeDeliveryStream",

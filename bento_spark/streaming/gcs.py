@@ -30,11 +30,12 @@ from __future__ import annotations
 import base64
 import json
 import threading
-import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
+from bento_spark.streaming.pubsub import ServiceAccountToken, bearer_headers
 from bento_spark.streaming.spool import Spool
 
 _SCOPE = "https://www.googleapis.com/auth/devstorage.read_write"
@@ -54,86 +55,18 @@ class GcsClient:
 
     def __init__(self, endpoint: str, credentials: dict | None = None,
                  timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.timeout = timeout
-        self._creds = credentials
-        self._token: str | None = None
-        self._token_exp = 0.0
-
-    def _bearer(self) -> str | None:
-        if self._creds is None:
-            return None
-        if self._token is not None and time.time() < self._token_exp - 60:
-            return self._token
-        from bento_spark.streaming.pubsub import build_assertion
-
-        assertion = build_assertion(
-            self._creds["client_email"], self._creds["private_key"],
-            self._creds["token_uri"], int(time.time()))
-        # the assertion flow is scope-agnostic at the wire level; the mini
-        # service checks the signature, real GCS checks IAM
-        body = ("grant_type=urn%3Aietf%3Aparams%3Aoauth%3A"
-                "grant-type%3Ajwt-bearer"
-                f"&assertion={assertion}&scope={urllib.parse.quote(_SCOPE)}"
-                ).encode("ascii")
-        tu = urllib.parse.urlsplit(self._creds["token_uri"])
-        status, data, _ = self._raw(
-            tu.hostname, tu.port or (443 if tu.scheme == "https" else 80),
-            tu.scheme == "https", "POST", tu.path, body,
-            {"Content-Type": "application/x-www-form-urlencoded"})
-        if status != 200:
-            raise ConnectionError(f"gcs: token exchange -> {status}")
-        tok = json.loads(data)
-        self._token = tok["access_token"]
-        self._token_exp = time.time() + float(tok.get("expires_in", 3600))
-        return self._token
-
-    def _raw(self, host, port, https, method, path, body, headers,
-             retries: int = 3, backoff_s: float = 0.25,
-             ) -> tuple[int, bytes, dict]:
-        import http.client
-
-        cls = (http.client.HTTPSConnection if https
-               else http.client.HTTPConnection)
-        attempt = 0
-        while True:
-            conn = cls(host, port, timeout=self.timeout)
-            status, data, resp_headers, fault = None, b"", {}, None
-            try:
-                conn.request(method, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-                resp_headers = {k.lower(): v for k, v in resp.getheaders()}
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and (status // 100 == 2
-                                       or status in (404, 412)):
-                return status, data, resp_headers
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"gcs: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"gcs: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+        self._ep = rest.Endpoint(endpoint, timeout)
+        self._token = (None if credentials is None else ServiceAccountToken(
+            credentials, "gcs", timeout, scope=_SCOPE))
 
     def _call(self, method: str, path: str, body: bytes = b"",
               content_type: str | None = None) -> tuple[int, bytes, dict]:
         headers = {"Content-Length": str(len(body))}
         if content_type:
             headers["Content-Type"] = content_type
-        tok = self._bearer()
-        if tok:
-            headers["Authorization"] = f"Bearer {tok}"
-        return self._raw(self.host, self.port, self._https, method, path,
-                         body, headers)
+        return rest.call(self._ep, method, path, body,
+                    lambda: bearer_headers(self._token, headers),
+                    name="gcs", ok=(404, 412))
 
     # -- objects --------------------------------------------------------------
 

@@ -32,6 +32,7 @@ import json
 import threading
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 from bento_spark.streaming.sqs import sigv4_headers
 
@@ -43,34 +44,18 @@ class KinesisClient:
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 10.0):
-        import urllib.parse
-
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
     def _call(self, op: str, body: dict) -> dict:
-        import http.client
-
         payload = json.dumps(body).encode("utf-8")
-        headers = sigv4_headers(
-            "POST", self.host_hdr, "/", payload, self.access_key,
-            self.secret_key, self.region, "kinesis", f"{_TARGET}.{op}")
-        cls = http.client.HTTPSConnection if self._https else http.client.HTTPConnection
-        conn = cls(self.host, self.port, timeout=self.timeout)
-        try:
-            conn.request("POST", "/", body=payload, headers=headers)
-            resp = conn.getresponse()
-            data = resp.read()
-            if resp.status // 100 != 2:
-                raise ConnectionError(f"kinesis: {op} -> {resp.status} {data[:160]!r}")
-            return json.loads(data) if data else {}
-        finally:
-            conn.close()
+        _, data, _ = rest.call(
+            self._ep, "POST", "/", payload,
+            lambda: sigv4_headers(
+                "POST", self._ep.host_hdr, "/", payload, self.access_key,
+                self.secret_key, self.region, "kinesis", f"{_TARGET}.{op}"),
+            name=f"kinesis {op}")
+        return json.loads(data) if data else {}
 
     def list_shards(self, stream: str) -> list[str]:
         out = self._call("ListShards", {"StreamName": stream})
@@ -97,8 +82,7 @@ class KinesisClient:
         """records: [(data, partition_key)] — <=500 per request (API cap).
         Per-record failures (routine throttling returns FailedRecordCount>0
         with ErrorCode on the failed entries) retry ONLY the failed subset
-        with backoff, like every real producer; a raise here would kill the
-        whole streaming query (foreachBatch has no in-run retry)."""
+        with backoff, like every real producer."""
         import time as _time
 
         for i in range(0, len(records), 500):

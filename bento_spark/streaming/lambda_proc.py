@@ -16,7 +16,7 @@ the `X-Amz-Function-Error` response header on an HTTP 200.
 
 Spark-first: rows fan out across partitions (the reference's `parallel`
 flag maps to partition parallelism — repartition upstream to widen); one
-pooled HTTP connection per partition, Arrow-batched via mapInPandas. A
+client per partition, Arrow-batched via mapInPandas. A
 per-row round trip is inherent to the operator, same family as the `http`
 enrichment processor.
 """
@@ -26,70 +26,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from bento_spark.operators.errors import ERROR_COL, ensure_error_col
+from bento_spark.streaming import rest
 
 FUNC_ERROR_COL = "lambda_function_error"
 
 
 class LambdaClient:
-    """Minimal Invoke-API client: one signed POST per call, bounded
-    in-call retry on transport errors / 5xx / 429 (a raise inside a task
-    fails the task — same contract as SqsClient/S3Client)."""
+    """Minimal Invoke-API client: one signed POST per call."""
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 30.0):
-        import urllib.parse
-
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
     def invoke(self, function: str, payload: bytes, retries: int = 3,
                backoff_s: float = 0.25) -> tuple[bytes, str | None]:
         """Returns (response payload, function_error or None); raises
-        ConnectionError once transport retries are exhausted."""
-        import http.client
-        import time as _time
+        ConnectionError under rest.call's rule."""
         import urllib.parse
 
         from bento_spark.streaming.s3 import sigv4_rest_headers
 
         path = f"/2015-03-31/functions/{urllib.parse.quote(function)}/invocations"
-        attempt = 0
-        while True:
-            headers = sigv4_rest_headers(
-                "POST", self.host_hdr, path, "", payload,
+        _, data, headers = rest.call(
+            self._ep, "POST", path, payload,
+            lambda: sigv4_rest_headers(
+                "POST", self._ep.host_hdr, path, "", payload,
                 self.access_key, self.secret_key, self.region,
                 service="lambda",
-                extra_headers={"content-type": "application/json"})
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, func_err, fault = None, b"", None, None
-            try:
-                conn.request("POST", path, body=payload, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-                func_err = resp.getheader("X-Amz-Function-Error")
-            except OSError as e:
-                fault = e
-            finally:
-                conn.close()
-            if fault is None and status is not None and status < 500 and status != 429:
-                if status >= 400:
-                    raise ConnectionError(
-                        f"lambda Invoke {function}: HTTP {status} "
-                        f"{data[:200]!r}")
-                return data, func_err
-            attempt += 1
-            if attempt > retries:
-                raise ConnectionError(
-                    f"lambda Invoke {function} failed after {retries} "
-                    f"retries: {fault or f'HTTP {status}'}")
-            _time.sleep(backoff_s * (2 ** (attempt - 1)))
+                extra_headers={"content-type": "application/json"}),
+            name=f"lambda Invoke {function}", retries=retries,
+            backoff_s=backoff_s)
+        return data, headers.get("x-amz-function-error")
 
 
 def lambda_map(df: DataFrame, endpoint: str, access_key: str, secret_key: str,

@@ -162,25 +162,29 @@ class MqttClient:
             if ptype != PUBACK or struct.unpack(">H", ack[:2])[0] != pid:
                 raise ConnectionError("mqtt: PUBACK missing for QoS1 publish")
 
-    def recv_publish(self) -> tuple[str, bytes, int, bool] | None:
-        """Block for the next inbound PUBLISH -> (topic, payload, qos,
-        retained); answers PINGREQ-level housekeeping; None on DISCONNECT."""
+    def recv_publish(self) -> tuple[str, bytes, int | None, bool] | None:
+        """Block for the next inbound PUBLISH -> (topic, payload, packet
+        id, retained); the packet id is None at QoS0, else the caller
+        acks it with `puback` once the message is safe. Skips PINGRESP;
+        None on DISCONNECT."""
         while True:
             ptype, flags, body = read_packet(self.sock)
             if ptype == PUBLISH:
-                qos = (flags >> 1) & 0x03
                 tlen = struct.unpack(">H", body[:2])[0]
                 topic = body[2:2 + tlen].decode("utf-8")
                 i = 2 + tlen
-                if qos:
+                pid = None
+                if (flags >> 1) & 0x03:
                     pid = struct.unpack(">H", body[i:i + 2])[0]
                     i += 2
-                    self.sock.sendall(encode_packet(PUBACK, 0, struct.pack(">H", pid)))
-                return topic, body[i:], qos, bool(flags & 0x01)
+                return topic, body[i:], pid, bool(flags & 0x01)
             if ptype == PINGRESP:
                 continue
             if ptype == DISCONNECT:
                 return None
+
+    def puback(self, pid: int) -> None:
+        self.sock.sendall(encode_packet(PUBACK, 0, struct.pack(">H", pid)))
 
     def ping(self) -> None:
         self.sock.sendall(encode_packet(PINGREQ, 0, b""))
@@ -207,8 +211,9 @@ class MqttClient:
 @dataclass
 class MqttSpooler:
     """`mqtt` input (input.go): subscribe and spool each message as one
-    durable file. QoS1 semantics hold end-to-end: recv_publish PUBACKs
-    only after this loop's spool put (the file IS the ack barrier)."""
+    durable file. QoS1 semantics hold end-to-end: the loop PUBACKs a
+    message only after its spool put returns (the file IS the ack
+    barrier); a put that raises acks nothing and ends the loop."""
 
     host: str
     port: int
@@ -240,9 +245,14 @@ class MqttSpooler:
                     return  # socket closed by stop() or broker
                 if got is None:
                     return
-                topic, payload, qos, retained = got
+                topic, payload, pid, _retained = got
                 # the reference's mqtt_topic metadata
                 spool.put(payload, mqtt_topic=topic)
+                if pid is not None:
+                    try:
+                        client.puback(pid)
+                    except OSError:
+                        return  # socket closed by stop() or broker
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()

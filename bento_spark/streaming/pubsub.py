@@ -30,8 +30,10 @@ import base64
 import json
 import threading
 import time
+import urllib.parse
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 
 
@@ -63,86 +65,67 @@ def build_assertion(client_email: str, private_key_pem: str, token_uri: str,
     return f"{signing_input}.{b64url(sig)}"
 
 
+class ServiceAccountToken:
+    """A service account's bearer token: the JWT-bearer grant, an RS256
+    assertion exchanged at the credentials' `token_uri`, cached until 60 s
+    before it expires. `scope`, when given, is also sent in the exchange
+    form. `credentials` = dict with client_email / private_key / token_uri
+    (the service-account JSON's fields)."""
+
+    def __init__(self, credentials: dict, name: str, timeout: float,
+                 scope: str | None = None):
+        self._creds, self._name, self._scope = credentials, name, scope
+        self._ep = rest.Endpoint(credentials["token_uri"], timeout)
+        self._value: str | None = None
+        self._exp = 0.0
+
+    def get(self) -> str:
+        if self._value is not None and time.time() < self._exp - 60:
+            return self._value
+        c = self._creds
+        form = {"grant_type": _GRANT, "assertion": build_assertion(
+            c["client_email"], c["private_key"], c["token_uri"], int(time.time()))}
+        if self._scope:
+            form["scope"] = self._scope
+        _, data, _ = rest.call(
+            self._ep, "POST", urllib.parse.urlsplit(c["token_uri"]).path,
+            urllib.parse.urlencode(form).encode("ascii"),
+            lambda: {"Content-Type": "application/x-www-form-urlencoded"},
+            name=f"{self._name} token")
+        tok = json.loads(data)
+        self._value = tok["access_token"]
+        self._exp = time.time() + float(tok.get("expires_in", 3600))
+        return self._value
+
+
+def bearer_headers(token: ServiceAccountToken | None,
+                   headers: dict[str, str]) -> dict[str, str]:
+    """`headers` plus the token's Authorization header; unchanged without
+    a token (the emulator contract)."""
+    if token is None:
+        return headers
+    return {**headers, "Authorization": f"Bearer {token.get()}"}
+
+
 class PubSubClient:
     """Minimal synchronous REST client: publish / pull / acknowledge /
-    createSubscription. `credentials` = dict with client_email /
-    private_key / token_uri (the service-account JSON's fields) enables
+    createSubscription. `credentials` (see ServiceAccountToken) enables
     the JWT-bearer token flow; None = unauthenticated (the emulator
     contract)."""
 
     def __init__(self, endpoint: str, credentials: dict | None = None,
                  timeout: float = 35.0):
-        import urllib.parse
-
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.timeout = timeout
-        self._creds = credentials
-        self._token: str | None = None
-        self._token_exp = 0.0
-
-    def _bearer(self) -> str | None:
-        if self._creds is None:
-            return None
-        if self._token is not None and time.time() < self._token_exp - 60:
-            return self._token
-        assertion = build_assertion(
-            self._creds["client_email"], self._creds["private_key"],
-            self._creds["token_uri"], int(time.time()))
-        body = (f"grant_type={_GRANT.replace(':', '%3A')}"
-                f"&assertion={assertion}").encode("ascii")
-        import urllib.parse as up
-
-        tu = up.urlsplit(self._creds["token_uri"])
-        resp = self._raw_request(
-            tu.hostname, tu.port or (443 if tu.scheme == "https" else 80),
-            tu.scheme == "https", "POST", tu.path, body,
-            {"Content-Type": "application/x-www-form-urlencoded"})
-        self._token = resp["access_token"]
-        self._token_exp = time.time() + float(resp.get("expires_in", 3600))
-        return self._token
-
-    def _raw_request(self, host, port, https, method, path, body, headers,
-                     retries: int = 3, backoff_s: float = 0.25) -> dict:
-        """Bounded in-call retry on transport errors / 5xx / 429 (a raise
-        inside foreachBatch kills the query); permanent 4xx fail fast."""
-        import http.client
-
-        cls = http.client.HTTPSConnection if https else http.client.HTTPConnection
-        attempt = 0
-        while True:
-            conn = cls(host, port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request(method, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return json.loads(data) if data else {}
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"pubsub: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"pubsub: {method} {path} -> {status} {data[:160]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+        self._ep = rest.Endpoint(endpoint, timeout)
+        self._token = (None if credentials is None
+                       else ServiceAccountToken(credentials, "pubsub", timeout))
 
     def _call(self, method: str, path: str, body: dict | None = None) -> dict:
-        headers = {"Content-Type": "application/json"}
-        tok = self._bearer()
-        if tok:
-            headers["Authorization"] = f"Bearer {tok}"
         payload = None if body is None else json.dumps(body).encode("utf-8")
-        return self._raw_request(self.host, self.port, self._https, method,
-                                 path, payload, headers)
+        _, data, _ = rest.call(
+            self._ep, method, path, payload,
+            lambda: bearer_headers(self._token, {"Content-Type": "application/json"}),
+            name="pubsub")
+        return json.loads(data) if data else {}
 
     def publish(self, project: str, topic: str,
                 messages: list[tuple[bytes, dict]]) -> list[str]:

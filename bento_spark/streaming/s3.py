@@ -48,6 +48,7 @@ import time
 import urllib.parse
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.spool import Spool
 from bento_spark.streaming.sqs import sigv4_signature
 
@@ -139,58 +140,26 @@ class NoSuchKeyError(KeyError):
 
 class S3Client:
     """Minimal path-style S3 REST client: ListObjectsV2 / GetObject /
-    PutObject / DeleteObject / HeadObject, SigV4-signed, bounded in-call
-    retry on transport errors / 5xx / 429 (the SqsClient contract — a
-    raise inside foreachPartition fails the task)."""
+    PutObject / DeleteObject / HeadObject, SigV4-signed."""
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
     def _request(self, method: str, path: str,
                  query_pairs: list[tuple[str, str]] | None = None,
                  body: bytes = b"", content_type: str | None = None,
-                 retries: int = 3, backoff_s: float = 0.25,
                  ) -> tuple[int, bytes, dict[str, str]]:
-        import http.client
-
         query = canonical_query(query_pairs or [])
         extra = {"content-type": content_type} if content_type else None
-        attempt = 0
-        while True:
-            headers = sigv4_rest_headers(
-                method, self.host_hdr, path, query, body,
+        return rest.call(
+            self._ep, method, path + (f"?{query}" if query else ""), body,
+            lambda: sigv4_rest_headers(
+                method, self._ep.host_hdr, path, query, body,
                 self.access_key, self.secret_key, self.region,
-                extra_headers=extra)
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            target = path + (f"?{query}" if query else "")
-            status, data, resp_headers, fault = None, b"", {}, None
-            try:
-                conn.request(method, target, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-                resp_headers = {k.lower(): v for k, v in resp.getheaders()}
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and (status // 100 == 2 or status == 404):
-                return status, data, resp_headers
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(f"s3: {method} {path} -> {fault}") from fault
-                raise ConnectionError(f"s3: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+                extra_headers=extra),
+            name="s3", ok=(404,))
 
     @staticmethod
     def _obj_path(bucket: str, key: str) -> str:

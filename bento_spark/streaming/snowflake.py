@@ -41,6 +41,8 @@ import urllib.parse
 import uuid
 import zlib
 
+from bento_spark.streaming import rest
+
 COMPRESSIONS = ("NONE", "AUTO", "GZIP", "DEFLATE", "RAW_DEFLATE")
 
 
@@ -137,25 +139,16 @@ class SnowflakeClient:
 
     def __init__(self, endpoint: str, account: str, user: str,
                  private_key_pem: str, timeout: float = 30.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.account, self.user = account, user
         self.private_key_pem = private_key_pem
-        self.timeout = timeout
 
     def _request(self, method: str, path: str, body: bytes = b"",
-                 content_type: str = "application/json",
-                 retries: int = 3, backoff_s: float = 0.25,
-                 ) -> tuple[int, bytes]:
-        import http.client
-
-        attempt = 0
-        while True:
+                 content_type: str = "application/json") -> bytes:
+        def headers() -> dict[str, str]:
             jwt = snowflake_jwt(self.account, self.user,
                                 self.private_key_pem, int(time.time()))
-            headers = {
+            return {
                 "Authorization": f"Bearer {jwt}",
                 # the documented Snowpipe REST token-type marker
                 "X-Snowflake-Authorization-Token-Type": "KEYPAIR_JWT",
@@ -163,30 +156,9 @@ class SnowflakeClient:
                 "Content-Length": str(len(body)),
                 "Accept": "application/json",
             }
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request(method, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return status, data
-            transient = fault is not None or (status or 500) >= 500 \
-                or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(
-                        f"snowflake: {method} {path} -> {fault}") from fault
-                raise ConnectionError(
-                    f"snowflake: {method} {path} -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+
+        return rest.call(self._ep, method, path, body, headers,
+                         name="snowflake")[1]
 
     def put_stage_file(self, stage: str, path: str, body: bytes) -> str:
         """Upload one rendered file to the stage (modeled transport).
@@ -205,7 +177,7 @@ class SnowflakeClient:
         rid = request_id or str(uuid.uuid4())
         body = json.dumps(
             {"files": [{"path": p} for p in files]}).encode()
-        _status, data = self._request(
+        data = self._request(
             "POST",
             f"/v1/data/pipes/{urllib.parse.quote(pipe)}/insertFiles"
             f"?requestId={urllib.parse.quote(rid)}",
@@ -213,7 +185,7 @@ class SnowflakeClient:
         return json.loads(data or b"{}")
 
     def insert_report(self, pipe: str) -> dict:
-        _status, data = self._request(
+        data = self._request(
             "GET", f"/v1/data/pipes/{urllib.parse.quote(pipe)}/insertReport")
         return json.loads(data or b"{}")
 

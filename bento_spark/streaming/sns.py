@@ -15,9 +15,9 @@ partition — at-least-once under checkpoint replay."""
 from __future__ import annotations
 
 import threading
-import time
 import urllib.parse
 
+from bento_spark.streaming import rest
 from bento_spark.streaming.sqs import sigv4_headers
 
 _VERSION = "2010-03-31"
@@ -29,49 +29,20 @@ class SnsClient:
 
     def __init__(self, endpoint: str, access_key: str, secret_key: str,
                  region: str = "us-east-1", timeout: float = 10.0):
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
+        self._ep = rest.Endpoint(endpoint, timeout)
         self.access_key, self.secret_key, self.region = access_key, secret_key, region
-        self.timeout = timeout
 
-    def _call(self, params: dict[str, str], retries: int = 3,
-              backoff_s: float = 0.25) -> str:
-        """One signed Query-protocol request -> response XML text, with
-        the SqsClient retry contract (transport/5xx/429 heal in-call)."""
-        import http.client
-
+    def _call(self, params: dict[str, str]) -> str:
+        """One signed Query-protocol request -> response XML text."""
         payload = urllib.parse.urlencode(
             dict(sorted(params.items()))).encode("utf-8")
-        attempt = 0
-        while True:
-            headers = sigv4_headers(
-                "POST", self.host_hdr, "/", payload, self.access_key,
-                self.secret_key, self.region, "sns", "",
-                content_type=_FORM)
-            cls = (http.client.HTTPSConnection if self._https
-                   else http.client.HTTPConnection)
-            conn = cls(self.host, self.port, timeout=self.timeout)
-            status, data, fault = None, b"", None
-            try:
-                conn.request("POST", "/", body=payload, headers=headers)
-                resp = conn.getresponse()
-                status, data = resp.status, resp.read()
-            except (OSError, http.client.HTTPException) as e:
-                fault = e
-            finally:
-                conn.close()
-            if status is not None and status // 100 == 2:
-                return data.decode("utf-8")
-            transient = fault is not None or status >= 500 or status == 429
-            if not transient or attempt >= retries:
-                if fault is not None:
-                    raise ConnectionError(f"sns: -> {fault}") from fault
-                raise ConnectionError(f"sns: -> {status} {data[:200]!r}")
-            attempt += 1
-            time.sleep(backoff_s * (2 ** (attempt - 1)))
+        _, data, _ = rest.call(
+            self._ep, "POST", "/", payload,
+            lambda: sigv4_headers(
+                "POST", self._ep.host_hdr, "/", payload, self.access_key,
+                self.secret_key, self.region, "sns", "", content_type=_FORM),
+            name=f"sns {params['Action']}")
+        return data.decode("utf-8")
 
     def publish(self, topic_arn: str, message: str,
                 group_id: str | None = None,

@@ -31,6 +31,8 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+from bento_spark.streaming import rest
+from bento_spark.streaming.pubsub import ServiceAccountToken, bearer_headers
 from bento_spark.streaming.spool import Spool
 
 _JSONDecoder = json.JSONDecoder()
@@ -94,71 +96,21 @@ class SpannerClient:
 
     def __init__(self, dsn: str, endpoint: str = "https://spanner.googleapis.com",
                  credentials: dict | None = None, timeout: float = 60.0):
-        import urllib.parse
-
         self.dsn = dsn.strip("/")  # projects/p/instances/i/databases/d
-        u = urllib.parse.urlsplit(endpoint)
-        self._https = u.scheme == "https"
-        self.host = u.hostname
-        self.port = u.port or (443 if self._https else 80)
-        self.host_hdr = u.netloc
-        self.timeout = timeout
-        self._creds = credentials
-        self._token: str | None = None
-        self._token_exp = 0.0
+        self._ep = rest.Endpoint(endpoint, timeout)
+        self._token = (None if credentials is None
+                       else ServiceAccountToken(credentials, "spanner", timeout))
         self._open_conns: list = []  # live streaming conns, closed by close()
         self._lock = threading.Lock()
         self.closed = False
 
-    # -- auth (the Pub/Sub connector's flow) --------------------------------
-    def _bearer(self) -> str | None:
-        if self._creds is None:
-            return None
-        if self._token is not None and time.time() < self._token_exp - 60:
-            return self._token
-        import urllib.parse as up
-
-        from bento_spark.streaming.pubsub import build_assertion
-
-        assertion = build_assertion(
-            self._creds["client_email"], self._creds["private_key"],
-            self._creds["token_uri"], int(time.time()))
-        grant = up.quote("urn:ietf:params:oauth:grant-type:jwt-bearer")
-        body = f"grant_type={grant}&assertion={assertion}".encode("ascii")
-        tu = up.urlsplit(self._creds["token_uri"])
-        resp = json.loads(self._request(
-            tu.hostname, tu.port or (443 if tu.scheme == "https" else 80),
-            tu.scheme == "https", tu.path, body,
-            {"Content-Type": "application/x-www-form-urlencoded"}))
-        self._token = resp["access_token"]
-        self._token_exp = time.time() + float(resp.get("expires_in", 3600))
-        return self._token
-
-    def _request(self, host, port, https, path, body: bytes,
-                 headers: dict) -> bytes:
-        import http.client
-
-        cls = (http.client.HTTPSConnection if https
-               else http.client.HTTPConnection)
-        conn = cls(host, port, timeout=self.timeout)
-        try:
-            conn.request("POST", path, body=body, headers=headers)
-            resp = conn.getresponse()
-            data = resp.read()
-            if resp.status // 100 != 2:
-                raise ConnectionError(
-                    f"spanner: {path} -> {resp.status} {data[:200]!r}")
-            return data
-        finally:
-            conn.close()
+    def _headers(self) -> dict[str, str]:
+        return bearer_headers(self._token, {"Content-Type": "application/json"})
 
     def _call(self, path: str, body: dict) -> dict:
-        headers = {"Content-Type": "application/json"}
-        tok = self._bearer()
-        if tok:
-            headers["Authorization"] = f"Bearer {tok}"
-        data = self._request(self.host, self.port, self._https, path,
-                             json.dumps(body).encode("utf-8"), headers)
+        _, data, _ = rest.call(self._ep, "POST", path,
+                          json.dumps(body).encode("utf-8"), self._headers,
+                          name="spanner")
         return json.loads(data) if data else {}
 
     # -- sessions & queries --------------------------------------------------
@@ -185,19 +137,12 @@ class SpannerClient:
         `on_row(row)` as it arrives — incremental parse of the streamed
         JSON array of PartialResultSet objects, with chunkedValue
         resumption and row re-assembly from the flat values stream."""
-        import http.client
-
         body: dict = {"sql": sql}
         if params:
             body["params"] = params
             body["paramTypes"] = param_types or {}
-        headers = {"Content-Type": "application/json"}
-        tok = self._bearer()
-        if tok:
-            headers["Authorization"] = f"Bearer {tok}"
-        cls = (http.client.HTTPSConnection if self._https
-               else http.client.HTTPConnection)
-        conn = cls(self.host, self.port, timeout=self.timeout)
+        headers = self._headers()
+        conn = self._ep.connect()
         with self._lock:
             if self.closed:
                 conn.close()

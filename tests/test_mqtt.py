@@ -6,6 +6,8 @@ publisher output."""
 from __future__ import annotations
 
 import json
+import socket
+import struct
 import threading
 import time
 from pathlib import Path
@@ -14,14 +16,19 @@ import pytest
 
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.mqtt import (
+    CONNACK,
+    PUBACK,
+    PUBLISH,
+    SUBACK,
     MiniMqttBroker,
     MqttClient,
     MqttSpooler,
     encode_packet,
     encode_remaining_len,
+    read_packet,
     topic_matches,
 )
-from bento_spark.streaming.spool import entries
+from bento_spark.streaming.spool import Spool, entries
 
 
 @pytest.fixture()
@@ -97,6 +104,46 @@ def test_spooler_qos1_ack_after_spool(broker, tmp_path):
     assert [body for _, body in got] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
     # the topic rides the spool header
     assert got[0][0]["mqtt_topic"] == "ev/0"
+
+
+@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
+@pytest.mark.parametrize("put_fails", [False, True])
+def test_spooler_puback_follows_put(tmp_path, monkeypatch, put_fails):
+    """A scripted broker sends one QoS1 PUBLISH: the PUBACK arrives only
+    once the message is spooled, and never when the spool put raises."""
+    if put_fails:
+        def boom(self, body, **meta):
+            raise OSError("disk full")
+
+        monkeypatch.setattr(Spool, "put", boom)
+    spool = tmp_path / "spool"
+    srv = socket.create_server(("127.0.0.1", 0))
+    seen: list = []
+
+    def broker() -> None:
+        conn, _ = srv.accept()
+        with conn:
+            read_packet(conn)  # CONNECT
+            conn.sendall(encode_packet(CONNACK, 0, b"\x00\x00"))
+            _, _, sub = read_packet(conn)  # SUBSCRIBE
+            conn.sendall(encode_packet(SUBACK, 0, sub[:2] + b"\x01"))
+            conn.sendall(encode_packet(PUBLISH, 0x02, b"\x00\x01t" + struct.pack(">H", 7) + b"m"))
+            conn.settimeout(1.0)
+            try:
+                ptype, _, body = read_packet(conn)
+                seen.append((ptype, body, len(entries(spool))))
+            except TimeoutError:
+                seen.append(None)
+
+    t = threading.Thread(target=broker, daemon=True)
+    t.start()
+    sp = MqttSpooler("127.0.0.1", srv.getsockname()[1], ["t"], str(spool)).start()
+    try:
+        t.join(timeout=10)
+    finally:
+        sp.stop()
+        srv.close()
+    assert seen == ([None] if put_fails else [(PUBACK, struct.pack(">H", 7), 1)])
 
 
 def test_yaml_mqtt_input_end_to_end(spark, broker, tmp_path):
