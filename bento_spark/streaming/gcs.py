@@ -65,8 +65,8 @@ class GcsClient:
         if content_type:
             headers["Content-Type"] = content_type
         return rest.call(self._ep, method, path, body,
-                    lambda: bearer_headers(self._token, headers),
-                    name="gcs", ok=(404, 412))
+                         lambda: bearer_headers(self._token, headers),
+                         name="gcs", ok=(404, 412))
 
     # -- objects --------------------------------------------------------------
 
