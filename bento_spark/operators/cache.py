@@ -23,6 +23,7 @@ how the reference amortizes multi-gets (processor_cache.go batch path).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import time
@@ -31,6 +32,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from bento_spark.streaming.sink import write_partitions
 
 _EXPIRES = "_expires_ms"
 
@@ -197,7 +200,7 @@ class FileCache:
 
     Spark-first mapping: reads are ONE distributed `binaryFile` scan of the
     directory joined to the batch (never a per-row driver round-trip);
-    writes run executor-side in foreachPartition — `set` is tmp-file +
+    writes run executor-side, one file per key — `set` is tmp-file +
     atomic os.replace, `add` is O_EXCL create (cache_file.go:71), both
     correct on a shared/posix filesystem.
 
@@ -258,7 +261,6 @@ class FileCache:
         rows = df.select(key_col, value_col)
 
         def write(part) -> None:
-            import os as _os
             import uuid as _uuid
 
             for r in part:
@@ -268,21 +270,21 @@ class FileCache:
                 key = str(key)
                 if key.startswith("/") or ".." in key.split("/"):
                     raise ValueError(f"file cache key escapes the directory: {key!r}")
-                path = _os.path.join(base, key)
-                _os.makedirs(_os.path.dirname(path), exist_ok=True)
+                path = os.path.join(base, key)
+                os.makedirs(os.path.dirname(path), exist_ok=True)
                 data = ("" if val is None else str(val)).encode("utf-8")
                 if exclusive:
                     try:
-                        fd = _os.open(path, _os.O_WRONLY | _os.O_CREAT | _os.O_EXCL, 0o644)
+                        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
                     except FileExistsError:
                         continue  # rejection handled by the caller's anti-join
-                    with _os.fdopen(fd, "wb") as f:
+                    with os.fdopen(fd, "wb") as f:
                         f.write(data)
                 else:
                     tmp = f"{path}.{_uuid.uuid4().hex}.tmp"
                     with open(tmp, "wb") as f:
                         f.write(data)
-                    _os.replace(tmp, path)
+                    os.replace(tmp, path)
 
         rows.foreachPartition(write)
 
@@ -317,9 +319,7 @@ class FileCache:
     def delete(self, keys: DataFrame) -> None:
         base, key_col = self.dir, self.key_col
 
-        def rm(part) -> None:
-            import os as _os
-
+        def rm(_, part) -> None:
             for r in part:
                 if r[key_col] is None:
                     continue
@@ -327,11 +327,12 @@ class FileCache:
                 if key.startswith("/") or ".." in key.split("/"):
                     continue
                 try:
-                    _os.remove(_os.path.join(base, key))
+                    os.remove(os.path.join(base, key))
                 except OSError:
                     pass
 
-        keys.select(key_col).foreachPartition(rm)
+        # a file delete holds no client: `open` returns None
+        write_partitions(keys.select(key_col), lambda: None, rm)
 
     def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
             now_ms: int | None = None) -> DataFrame:
@@ -406,21 +407,15 @@ class SqliteCache:
             F.col(self.value_col).cast("string").alias("v"),
         )
 
-        def write(part) -> None:
-            from bento_spark.operators.cache import SqliteCache as _S
+        def send(con, rows) -> None:
+            con.executemany(
+                f"INSERT INTO {table}(k, v) VALUES(?, ?) "
+                "ON CONFLICT(k) DO UPDATE SET v=excluded.v",
+                ((r.k, r.v) for r in rows),
+            )
+            con.commit()
 
-            con = _S._connect(path)
-            try:
-                con.executemany(
-                    f"INSERT INTO {table}(k, v) VALUES(?, ?) "
-                    "ON CONFLICT(k) DO UPDATE SET v=excluded.v",
-                    [(r.k, r.v) for r in part],
-                )
-                con.commit()
-            finally:
-                con.close()
-
-        rows.foreachPartition(write)
+        write_partitions(rows, functools.partial(SqliteCache._connect, path), send)
 
     def add(self, df: DataFrame, ttl=None, now_ms=None) -> DataFrame:
         """Insert-if-absent (INSERT OR IGNORE; an ignored row = the
@@ -461,22 +456,14 @@ class SqliteCache:
         return fresh.join(F.broadcast(rejected_keys), key_col, "left_semi")
 
     def delete(self, keys: DataFrame) -> None:
-        path, table = self.path, self.table
+        table = self.table
 
-        def rm(part) -> None:
-            from bento_spark.operators.cache import SqliteCache as _S
+        def send(con, rows) -> None:
+            con.executemany(f"DELETE FROM {table} WHERE k = ?", ((str(r[0]),) for r in rows))
+            con.commit()
 
-            con = _S._connect(path)
-            try:
-                con.executemany(
-                    f"DELETE FROM {table} WHERE k = ?",
-                    [(str(r[0]),) for r in part],
-                )
-                con.commit()
-            finally:
-                con.close()
-
-        keys.select(F.col(self.key_col).cast("string")).foreachPartition(rm)
+        write_partitions(keys.select(F.col(self.key_col).cast("string")),
+                         functools.partial(SqliteCache._connect, self.path), send)
 
     def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
             now_ms=None) -> DataFrame:

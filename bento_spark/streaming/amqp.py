@@ -20,9 +20,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   giving at-least-once into the spool, dedupe-able downstream. The
   routing key rides the spool file's header and surfaces as an
   `amqp_key` column parsed JVM-side — no Python in the hot path.
-- output -> foreachBatch publisher: one pooled connection per partition,
-  rows publish as JSON executor-side with an interpolated routing-key
-  COLUMN (never a driver loop). At-least-once across checkpoint replay.
+- output -> rows publish as JSON executor-side with an interpolated
+  routing-key COLUMN (never a driver loop). At-least-once across
+  checkpoint replay.
 
 Protocol subset implemented (amqp0-9-1 spec §2.3 framing, §1 classes):
 protocol header; method/header/body frames (frame-end 0xCE);
@@ -36,6 +36,7 @@ spec's `*`/`#` wildcards (broker side).
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import threading
@@ -393,31 +394,20 @@ class AmqpSpooler:
 
 def amqp_sink(host: str, port: int, exchange: str, key_col: str, vhost: str = "/"):
     """`amqp_0_9` output (amqp09/output.go): publish per row — the
-    interpolated routing key is a pre-computed COLUMN; one connection per
-    partition, rows as JSON."""
+    interpolated routing key is a pre-computed COLUMN, rows as JSON."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for r in rows:
+            client.publish(exchange, r.k, r.v.encode("utf-8"))
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != key_col]
-        payloads = batch_df.select(
-            F.col(key_col).alias("k"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            from bento_spark.streaming.amqp import AmqpClient as _C
-
-            rows = list(rows)
-            if not rows:
-                return
-            client = _C(host, port, vhost=vhost)
-            try:
-                for r in rows:
-                    client.publish(exchange, r.k, r.v.encode("utf-8"))
-            finally:
-                client.close()
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.col(key_col).alias("k"),
+                                   json_body(batch_df, key_col).alias("v"))
+        write_partitions(payloads, functools.partial(AmqpClient, host, port, vhost=vhost),
+                         send, chunk=500)
 
     return write_batch
 

@@ -17,10 +17,9 @@ Spark-first mapping (the repo's spool-bridge rationale):
   credit, persists each transfer as a durable spool file, and sends the
   accepted disposition only AFTER the atomic rename — unsettled
   deliveries redeliver, so at-least-once holds into the spool.
-- output -> foreachBatch publisher: one connection per partition, rows
-  publish as JSON amqp-value sections; transfers are sent UNSETTLED and
-  the batch waits for accepted dispositions (the reference's outcome
-  wait) — at-least-once across checkpoint replay.
+- output -> rows publish as JSON amqp-value sections; transfers are sent
+  UNSETTLED and each 500-row chunk waits for accepted dispositions (the
+  reference's outcome wait) — at-least-once across checkpoint replay.
 
 Spec subset: §1.6 type encodings (null/bool/uint/ulong/long/ushort/ubyte/
 string/symbol/binary/list/map/described), §2.3.1 frame framing (8-byte
@@ -31,6 +30,7 @@ outcome, ANONYMOUS + PLAIN)."""
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import struct
@@ -657,38 +657,32 @@ class Amqp1Spooler:
 # --------------------------------------------------------------------------
 
 
+def _open_sender(url: str, target_address: str) -> "Amqp1Client":
+    """A client with a sender link attached to `target_address` as `.sender`."""
+    host, port, user, pwd = parse_amqp1_url(url)
+    client = Amqp1Client(host, port, username=user, password=pwd)
+    try:
+        client.sender = client.attach_sender(target_address)
+    except BaseException:
+        client.close()
+        raise
+    return client
+
+
 def amqp1_sink(url: str, target_address: str):
     """`amqp_1` output (amqp1/output.go): rows serialize as JSON JVM-side
     and publish as amqp-value sections; the batch waits for accepted
     dispositions (outcome wait) — at-least-once under replay."""
-    from pyspark.sql import functions as F
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        client.send_batch(client.sender, [enc_value(Described(S_AMQP_VALUE, row.v))
+                                          for row in rows])
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.amqp1 import (
-                Amqp1Client,
-                Described,
-                S_AMQP_VALUE,
-                enc_value,
-                parse_amqp1_url,
-            )
-
-            bodies = [enc_value(Described(S_AMQP_VALUE, row.v)) for row in rows]
-            if not bodies:
-                return
-            host, port, user, pwd = parse_amqp1_url(url)
-            client = Amqp1Client(host, port, username=user, password=pwd)
-            try:
-                handle = client.attach_sender(target_address)
-                client.send_batch(handle, bodies)
-            finally:
-                client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(_open_sender, url, target_address),
+                         send, chunk=500)
 
     return write_batch
 

@@ -26,6 +26,7 @@ x-ms-date is transport metadata SharedKey requires — never row content."""
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import threading
@@ -267,26 +268,19 @@ def azure_blob_sink(endpoint: str, account: str, account_key: str,
     the body is `value_col` raw if named, else the row JSON-serialized."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.put_blob(container, row.p, (row.v or "").encode("utf-8"),
+                            content_type=content_type)
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns if c != path_col]
-            body = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, path_col))
         payloads = batch_df.select(F.col(path_col).alias("p"), body.alias("v"))
-
-        def send(rows) -> None:
-            from bento_spark.streaming.azure_blob import AzureBlobClient
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = AzureBlobClient(endpoint, account, account_key)
-                client.put_blob(container, row.p,
-                                (row.v or "").encode("utf-8"),
-                                content_type=content_type)
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(
+            AzureBlobClient, endpoint, account, account_key), send)
 
     return write_batch
 

@@ -14,12 +14,12 @@ Spark-first mapping (same spool-bridge rationale as aws_sqs):
 - input  -> AzureQueueSpooler long-polls Get Messages and spools each
   message durably BEFORE Delete Message (pop receipt) — un-deleted
   messages re-appear after the visibility timeout (at-least-once).
-- output -> rows serialize as JSON JVM-side and Put Message per row,
-  one client per partition."""
+- output -> rows serialize as JSON JVM-side and Put Message per row."""
 
 from __future__ import annotations
 
 import base64
+import functools
 import threading
 import time
 import urllib.parse
@@ -191,22 +191,16 @@ def azure_queue_sink(endpoint: str, account: str, account_key: str,
                      queue: str, ttl_s: int | None = None):
     """`azure_queue_storage` output (output_queue_storage.go): rows
     serialize as JSON JVM-side, one Put Message per row."""
-    from pyspark.sql import functions as F
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.put_message(queue, row.v, ttl_s=ttl_s)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v"))
-
-        def send(rows) -> None:
-            from bento_spark.streaming.azure_queue import AzureQueueClient
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = AzureQueueClient(endpoint, account, account_key)
-                client.put_message(queue, row.v, ttl_s=ttl_s)
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(AzureQueueClient, endpoint, account, account_key),
+                         send)
 
     return write_batch
 

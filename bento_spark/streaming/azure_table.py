@@ -32,6 +32,7 @@ Spark-first mapping:
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import json
@@ -299,38 +300,31 @@ def azure_table_sink(endpoint: str, account: str, account_key: str, *,
     """`azure_table_storage` output: per-row operation against the
     interpolated (table, PartitionKey, RowKey) with transaction_type
     semantics; all five per-row values arrive as pre-computed COLUMNS
-    (props as a JVM-rendered JSON string), one client per partition.
-    Tables auto-create on first use, like the reference writer."""
+    (props as a JVM-rendered JSON string). Tables auto-create on first
+    use, like the reference writer."""
+
+    def send(client, rows) -> None:
+        created: set[str] = set()
+        for row in rows:
+            if row.t not in created:
+                client.create_table(row.t)
+                created.add(row.t)
+            entity = stringify_properties(json.loads(row.props))
+            entity["PartitionKey"] = row.pk or ""
+            entity["RowKey"] = row.rk or ""
+            client.apply((row.op or "INSERT").upper(), row.t, entity)
 
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
+
+        from bento_spark.streaming.sink import write_partitions
 
         payloads = batch_df.select(
             F.col(table_col).alias("t"), F.col(pk_col).alias("pk"),
             F.col(rk_col).alias("rk"), F.col(op_col).alias("op"),
             F.col(props_col).alias("props"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.azure_table import (
-                AzureTableClient,
-                stringify_properties,
-            )
-
-            client = None
-            created: set[str] = set()
-            for row in rows:
-                if client is None:
-                    client = AzureTableClient(endpoint, account, account_key)
-                if row.t not in created:
-                    client.create_table(row.t)
-                    created.add(row.t)
-                entity = stringify_properties(json.loads(row.props))
-                entity["PartitionKey"] = row.pk or ""
-                entity["RowKey"] = row.rk or ""
-                client.apply((row.op or "INSERT").upper(), row.t, entity)
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(
+            AzureTableClient, endpoint, account, account_key), send)
 
     return write_batch
 

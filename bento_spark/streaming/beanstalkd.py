@@ -16,14 +16,15 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
   at-least-once: a crash between rename and delete re-delivers after the
   job's TTR, the protocol's contract). The job id rides the spool
   file's header and surfaces as a `beanstalkd_id` column parsed JVM-side.
-- output -> foreachBatch producer: one connection per partition, rows
-  publish as JSON serialized JVM-side; each `put` waits for its INSERTED
-  reply so a rejected job fails the micro-batch (checkpoint-replay
-  at-least-once, like the reference's error-propagating Put).
+- output -> rows publish as JSON serialized JVM-side; each `put` waits
+  for its INSERTED reply so a rejected job fails the micro-batch
+  (checkpoint-replay at-least-once, like the reference's
+  error-propagating Put).
 """
 
 from __future__ import annotations
 
+import functools
 import socket
 import threading
 import time
@@ -174,28 +175,15 @@ class BeanstalkdSpooler:
 def beanstalkd_sink(host: str, port: int, priority: int = 2, ttr_s: int = 2):
     """`beanstalkd` output (output.go): rows publish as JSON serialized
     JVM-side; each put waits for INSERTED."""
-    from pyspark.sql import functions as F
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.put(row.v.encode("utf-8"), priority=priority, ttr_s=ttr_s)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v")
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.beanstalkd import BeanstalkdClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = BeanstalkdClient(host, port)
-                    client.put(row.v.encode("utf-8"), priority=priority, ttr_s=ttr_s)
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(BeanstalkdClient, host, port), send)
 
     return write_batch
 

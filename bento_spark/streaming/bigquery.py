@@ -37,6 +37,7 @@ Spark-first mapping:
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
 import urllib.parse
@@ -273,36 +274,29 @@ def bigquery_sink(endpoint: str, project: str, dataset: str, table: str, *,
         raise ValueError(
             f"bigquery: format {source_format!r} not one of {FORMATS}")
 
+    def send(client, rows) -> None:
+        lines = [row.v for row in rows]
+        if source_format == "CSV" and csv_header:
+            lines.insert(0, csv_field_delimiter.join(csv_header))
+        client.load(project, dataset, table,
+                    ("\n".join(lines) + "\n").encode("utf-8"),
+                    source_format=source_format,
+                    csv_options={"field_delimiter": csv_field_delimiter,
+                                 "skip_leading_rows": 1 if csv_header else 0})
+
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
+        from bento_spark.streaming.sink import json_body, write_partitions
+
         if source_format == "CSV":
             cols = csv_header or batch_df.columns
-            rendered = batch_df.select(F.to_csv(F.struct(
-                *[F.col(c) for c in cols]),
-                {"sep": csv_field_delimiter}).alias("v"))
+            body = F.to_csv(F.struct(*[F.col(c) for c in cols]),
+                            {"sep": csv_field_delimiter})
         else:
-            rendered = batch_df.select(F.to_json(F.struct(
-                *[F.col(c) for c in batch_df.columns])).alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.bigquery import BigQueryClient
-
-            lines = [row.v for row in rows]
-            if not lines:
-                return
-            if source_format == "CSV" and csv_header:
-                lines.insert(0, csv_field_delimiter.join(csv_header))
-            client = BigQueryClient(endpoint, credentials)
-            client.load(project, dataset, table,
-                        ("\n".join(lines) + "\n").encode("utf-8"),
-                        source_format=source_format,
-                        csv_options={"field_delimiter": csv_field_delimiter,
-                                     "skip_leading_rows":
-                                         1 if csv_header else 0})
-
-        rendered.foreachPartition(send)
+            body = json_body(batch_df)
+        write_partitions(batch_df.select(body.alias("v")),
+                         functools.partial(BigQueryClient, endpoint, credentials), send)
 
     return write_batch
 

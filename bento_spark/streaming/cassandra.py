@@ -18,14 +18,15 @@ Rows metadata into typed Python values.
 Spark-first mapping:
 - output -> foreachBatch: the args array is rendered JVM-side as one JSON
   column (to_json of the args_mapping's array — the reference's
-  args_mapping contract), executors decode JSON -> typed binds over one
-  connection per partition.
+  args_mapping contract), executors decode JSON -> typed binds.
 - input  -> batch-only driver-side read (control-plane tables, like the
   mongodb input; bulk data rides parquet/Iceberg) -> spark.createDataFrame.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import socket
 import struct
 import threading
@@ -273,45 +274,29 @@ def cassandra_writer(address: str, query: str, args_cols: list):
     PREPARED statement's column types."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import write_partitions
+
     host, port = parse_cassandra_addr(address)
+
+    n_args = len(args_cols)
+
+    def send(client, rows) -> None:
+        stmt_id, cols = client.prepare(query)
+        if len(cols) != n_args:
+            raise ValueError(
+                f"cassandra: query has {len(cols)} bind variables, "
+                f"args_mapping produced {n_args}")
+        for row in rows:
+            vals = json.loads(row.a)
+            client.execute(stmt_id, [encode_value(vals.get(f"v{i}"), cols[i][1])
+                                     for i in range(n_args)])
 
     def write_batch(batch_df, epoch_id: int) -> None:
         # one JSON struct keeps numbers/bools typed through Arrow; a NULL
         # arg drops out of to_json and binds as CQL NULL
         payloads = batch_df.select(
-            F.to_json(F.struct(*[c.alias(f"v{i}") for i, c in enumerate(args_cols)])).alias("a")
-        )
-        n_args = len(args_cols)
-
-        def send(rows) -> None:
-            import json as _json
-
-            from bento_spark.streaming.cassandra import (
-                CassandraClient,
-                encode_value,
-            )
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = CassandraClient(host, port)
-                        stmt_id, cols = client.prepare(query)
-                        if len(cols) != n_args:
-                            raise ValueError(
-                                f"cassandra: query has {len(cols)} bind variables, "
-                                f"args_mapping produced {n_args}")
-                    vals = _json.loads(row.a)
-                    binds = [
-                        encode_value(vals.get(f"v{i}"), cols[i][1])
-                        for i in range(n_args)
-                    ]
-                    client.execute(stmt_id, binds)
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+            F.to_json(F.struct(*[c.alias(f"v{i}") for i, c in enumerate(args_cols)])).alias("a"))
+        write_partitions(payloads, functools.partial(CassandraClient, host, port), send)
 
     return write_batch
 

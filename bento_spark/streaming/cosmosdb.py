@@ -47,6 +47,7 @@ row content instead (the docstring-level contract the reference shares).
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import json
@@ -414,35 +415,30 @@ def cosmos_sink(endpoint: str, account_key: str, database: str,
                 auto_id: bool = True):
     """`azure_cosmosdb` output (output_cosmosdb.go): per-row document
     operation; partition key / document / item id arrive as pre-computed
-    COLUMNS, one client per partition."""
+    COLUMNS."""
     if operation not in OPERATIONS:
         raise ValueError(
             f"cosmosdb: invalid operation {operation!r} (one of {OPERATIONS})")
 
+    def send(client, rows) -> None:
+        for row in rows:
+            doc = json.loads(row.doc) if row.doc else None
+            if doc is not None and operation in ("Create", "Upsert") \
+                    and auto_id and not doc.get("id"):
+                doc["id"] = str(uuid.uuid4())
+            client.write(operation, database, container, row.pk,
+                         doc=doc, item_id=row.iid)
+
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        sel = [F.col(pk_col).alias("pk"), F.col(doc_col).alias("doc"),
-               (F.col(id_col) if id_col else F.lit(None).cast("string"))
-               .alias("iid")]
-        payloads = batch_df.select(*sel)
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.cosmosdb import CosmosClient
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = CosmosClient(endpoint, account_key)
-                doc = json.loads(row.doc) if row.doc else None
-                if doc is not None and operation in ("Create", "Upsert") \
-                        and auto_id and not doc.get("id"):
-                    doc["id"] = str(uuid.uuid4())
-                client.write(operation, database, container, row.pk,
-                             doc=doc, item_id=row.iid)
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(
+            F.col(pk_col).alias("pk"), F.col(doc_col).alias("doc"),
+            (F.col(id_col) if id_col else F.lit(None).cast("string")).alias("iid"))
+        write_partitions(payloads, functools.partial(CosmosClient, endpoint, account_key),
+                         send)
 
     return write_batch
 

@@ -23,6 +23,7 @@ Spark-first mapping:
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import threading
@@ -133,6 +134,13 @@ class CouchbaseClient:
             self.sock.close()
         except OSError:
             pass
+
+
+def _connect(url: str, bucket: str, username: str | None,
+             password: str | None) -> "CouchbaseClient":
+    host, port = parse_couchbase_url(url)
+    return CouchbaseClient(host, port, bucket=bucket, username=username,
+                           password=password)
 
 
 def parse_couchbase_url(url: str) -> tuple[str, int]:
@@ -269,8 +277,9 @@ class CouchbaseCache:
         from bento_spark.operators.cache import _ttl_ms
 
         self.spark = spark
-        self.url = url
-        self.bucket, self.username, self.password = bucket, username, password
+        # the executors' client factory: the cache itself holds the
+        # SparkSession and cannot be pickled
+        self._open = functools.partial(_connect, url, bucket, username, password)
         self.key_col, self.value_col = key_col, value_col
         self.default_ttl_ms = None if default_ttl is None else _ttl_ms(default_ttl)
 
@@ -280,66 +289,35 @@ class CouchbaseCache:
         ms = self.default_ttl_ms if ttl is None else _ttl_ms(ttl)
         return 0 if ms is None else max(1, -(-int(ms) // 1000))
 
-    def _client(self):
-        host, port = parse_couchbase_url(self.url)
-        return CouchbaseClient(host, port, bucket=self.bucket,
-                               username=self.username, password=self.password)
-
-    def _conn_args(self):
-        return (self.url, self.bucket, self.username, self.password)
-
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
+        from bento_spark.streaming.sink import write_partitions
+
         expiry = self._expiry_of(ttl)
-        args = self._conn_args()
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"),
         )
 
-        def send(it) -> None:
-            from bento_spark.streaming.couchbase import (
-                CouchbaseClient,
-                parse_couchbase_url,
-            )
+        def send(client, rows) -> None:
+            for row in rows:
+                client.upsert(row.k, ("" if row.v is None else row.v).encode(), expiry)
 
-            url, bucket, user, pw = args
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        host, port = parse_couchbase_url(url)
-                        client = CouchbaseClient(host, port, bucket=bucket,
-                                                 username=user, password=pw)
-                    client.upsert(row.k, ("" if row.v is None else row.v).encode(),
-                                  expiry)
-            finally:
-                if client is not None:
-                    client.close()
-
-        rows.foreachPartition(send)
+        write_partitions(rows, self._open, send)
 
     def add(self, df, ttl=None, now_ms=None):
         from pyspark.sql import functions as F
 
         expiry = self._expiry_of(ttl)
-        args = self._conn_args()
+        open_ = self._open
         key_col, value_col = self.key_col, self.value_col
         fresh = df.dropDuplicates([key_col])
 
         def attempt(iter_pdf):
             import pandas as pd
 
-            from bento_spark.streaming.couchbase import (
-                CouchbaseClient,
-                parse_couchbase_url,
-            )
-
-            url, bucket, user, pw = args
-            host, port = parse_couchbase_url(url)
-            client = CouchbaseClient(host, port, bucket=bucket,
-                                     username=user, password=pw)
+            client = open_()
             try:
                 for pdf in iter_pdf:
                     accepted = [
@@ -366,50 +344,27 @@ class CouchbaseCache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        args = self._conn_args()
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.couchbase import (
-                CouchbaseClient,
-                parse_couchbase_url,
-            )
+        def send(client, rows) -> None:
+            for row in rows:
+                client.remove(row.k)
 
-            url, bucket, user, pw = args
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        host, port = parse_couchbase_url(url)
-                        client = CouchbaseClient(host, port, bucket=bucket,
-                                                 username=user, password=pw)
-                    client.remove(row.k)
-            finally:
-                if client is not None:
-                    client.close()
-
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         self._open, send)
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         from pyspark.sql import functions as F
 
         key = on or self.key_col
-        args = self._conn_args()
+        open_ = self._open
         key_col, value_col = self.key_col, self.value_col
         distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
 
         def fetch(iter_pdf):
             import pandas as pd
 
-            from bento_spark.streaming.couchbase import (
-                CouchbaseClient,
-                parse_couchbase_url,
-            )
-
-            url, bucket, user, pw = args
-            host, port = parse_couchbase_url(url)
-            client = CouchbaseClient(host, port, bucket=bucket,
-                                     username=user, password=pw)
+            client = open_()
             try:
                 for pdf in iter_pdf:
                     ks = [str(k) for k in pdf[key_col]]

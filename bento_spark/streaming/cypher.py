@@ -14,8 +14,8 @@ Spark-first mapping:
 - input  -> CypherSpooler runs ONE query (RUN/PULL -1), spooling each
   record as a JSON object keyed by the result's field names.
 - output -> one RUN per row with the row's interpolated $values params
-  (rendered JVM-side as a JSON column), one connection per partition,
-  failures surfaced as ConnectionError (the query dies loudly, the
+  (rendered JVM-side as a JSON column), failures surfaced as
+  ConnectionError (the query dies loudly, the
   engine's error_handling owns retries).
 
 The MiniBoltServer VERIFIES basic-auth credentials in HELLO, answers
@@ -26,6 +26,7 @@ repo's other capture servers; it is not a graph engine.
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import struct
@@ -395,30 +396,20 @@ def cypher_sink(uri: str, query: str, values_col: str, *,
                 password: str | None = None):
     """`cypher` output (output_cypher.go): one RUN per row; the `values`
     map of interpolations arrives as ONE pre-rendered JSON COLUMN whose
-    keys feed the query's $param references. One connection per
-    partition."""
+    keys feed the query's $param references."""
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.run(query, json.loads(row.v or "{}"), database=database)
 
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        payloads = batch_df.select(F.col(values_col).alias("v"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.cypher import BoltClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = BoltClient(uri, user=user, password=password)
-                    client.run(query, json.loads(row.v or "{}"),
-                               database=database)
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(F.col(values_col).alias("v")),
+                         functools.partial(BoltClient, uri, user=user, password=password),
+                         send)
 
     return write_batch
 

@@ -23,6 +23,7 @@ Spark-first mapping:
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
 import urllib.parse
@@ -153,40 +154,31 @@ def discord_sink(endpoint: str, channel_id: str, bot_token: str,
                  value_col: str | None = None):
     """`discord` output (output.go:20): a row whose rendered JSON already
     is a Discord message object (carries `content`) posts verbatim;
-    anything else wraps as {"content": <rendered>}. One client per
-    partition."""
+    anything else wraps as {"content": <rendered>}."""
+
+    def send(client, rows) -> None:
+        for row in rows:
+            text = row.v or ""
+            payload = None
+            if text.startswith("{"):
+                try:
+                    obj = json.loads(text)
+                    if isinstance(obj, dict) and "content" in obj:
+                        payload = obj
+                except json.JSONDecodeError:
+                    pass
+            if payload is None:
+                payload = {"content": text}
+            client.create_message(channel_id, payload)
 
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            body = F.to_json(F.struct(*[F.col(c) for c in batch_df.columns]))
-        payloads = batch_df.select(body.alias("v"))
+        from bento_spark.streaming.sink import json_body, write_partitions
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.discord import DiscordClient
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = DiscordClient(endpoint, bot_token)
-                text = row.v or ""
-                payload = None
-                if text.startswith("{"):
-                    try:
-                        obj = json.loads(text)
-                        if isinstance(obj, dict) and "content" in obj:
-                            payload = obj
-                    except json.JSONDecodeError:
-                        pass
-                if payload is None:
-                    payload = {"content": text}
-                client.create_message(channel_id, payload)
-
-        payloads.foreachPartition(send)
+        body = F.col(value_col).cast("string") if value_col else json_body(batch_df)
+        write_partitions(batch_df.select(body.alias("v")),
+                         functools.partial(DiscordClient, endpoint, bot_token), send)
 
     return write_batch
 

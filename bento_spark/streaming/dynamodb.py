@@ -20,6 +20,7 @@ honors them on read, like DynamoDB's filtered expiry)."""
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import threading
@@ -69,6 +70,9 @@ def _throttled(status: int, data: bytes, wait: float) -> float | None:
     if err_type.endswith("ConditionalCheckFailedException"):
         raise KeyExistsError()
     return wait if err_type.endswith(_THROTTLES) else None
+
+
+BATCH_WRITE_MAX = 25  # BatchWriteItem's per-request item cap
 
 
 def _batch_write(client: "DynamoClient", table: str, requests: list) -> None:
@@ -122,43 +126,30 @@ class DynamoCache:
             return None
         return int(time.time()) + max(1, -(-int(ms) // 1000))
 
-    def _item(self, k: str, v: str | None, expires: int | None) -> dict:
-        item = {self.hash_key: {"S": k},
-                self.data_key: {"S": "" if v is None else v}}
-        if expires is not None and self.ttl_key:
-            item[self.ttl_key] = {"N": str(expires)}
-        return item
-
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
+        from bento_spark.streaming.sink import write_partitions
+
         expires = self._ttl_attr(ttl)
-        args, table = self.args, self.table
+        table = self.table
         hk, dk, tk = self.hash_key, self.data_key, self.ttl_key
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"),
         )
 
-        def send(it) -> None:
-            from bento_spark.streaming.dynamodb import DynamoClient, _batch_write
+        def put(row) -> dict:
+            item = {hk: {"S": row.k}, dk: {"S": "" if row.v is None else row.v}}
+            if expires is not None and tk:
+                item[tk] = {"N": str(expires)}
+            return {"PutRequest": {"Item": item}}
 
-            client = None
-            pending = []
-            for row in it:
-                if client is None:
-                    client = DynamoClient(*args)
-                item = {hk: {"S": row.k}, dk: {"S": "" if row.v is None else row.v}}
-                if expires is not None and tk:
-                    item[tk] = {"N": str(expires)}
-                pending.append({"PutRequest": {"Item": item}})
-                if len(pending) >= 25:  # BatchWriteItem API cap
-                    _batch_write(client, table, pending)
-                    pending = []
-            if client is not None and pending:
-                _batch_write(client, table, pending)
+        def send(client, rows) -> None:
+            _batch_write(client, table, [put(row) for row in rows])
 
-        rows.foreachPartition(send)
+        write_partitions(rows, functools.partial(DynamoClient, *self.args), send,
+                         chunk=BATCH_WRITE_MAX)
 
     def add(self, df, ttl=None, now_ms=None):
         from pyspark.sql import functions as F
@@ -208,25 +199,17 @@ class DynamoCache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        args, table, hk = self.args, self.table, self.hash_key
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.dynamodb import DynamoClient, _batch_write
+        table, hk = self.table, self.hash_key
 
-            client = None
-            pending = []
-            for row in it:
-                if client is None:
-                    client = DynamoClient(*args)
-                pending.append({"DeleteRequest": {"Key": {hk: {"S": row.k}}}})
-                if len(pending) >= 25:
-                    _batch_write(client, table, pending)
-                    pending = []
-            if client is not None and pending:
-                _batch_write(client, table, pending)
+        def send(client, rows) -> None:
+            _batch_write(client, table, [{"DeleteRequest": {"Key": {hk: {"S": row.k}}}}
+                                         for row in rows])
 
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         functools.partial(DynamoClient, *self.args), send,
+                         chunk=BATCH_WRITE_MAX)
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         """Enrich df with the cached value by key (miss = NULL).
@@ -317,6 +300,7 @@ def dynamodb_sink(endpoint: str, table: str, access_key: str, secret_key: str,
     from pyspark.sql import functions as F
 
     from bento_spark.operators.cache import _ttl_ms
+    from bento_spark.streaming.sink import write_partitions
 
     string_cols = list(string_cols or [])
     # attribute name -> column holding its JSON text
@@ -337,40 +321,22 @@ def dynamodb_sink(endpoint: str, table: str, access_key: str, secret_key: str,
         sel = [F.col(c).cast("string").alias(c) for c in string_cols]
         sel += [F.col(c).cast("string").alias(c)
                 for c in json_map_cols.values()]
-        rows = batch_df.select(*sel)
 
-        def send(it) -> None:
-            from bento_spark.streaming.dynamodb import (
-                DynamoClient,
-                _batch_write,
-                attr_value,
-            )
+        def put(row) -> dict:
+            item = {c: {"S": row[c]} for c in string_cols if row[c] is not None}
+            for attr, c in json_map_cols.items():
+                if row[c] is not None:
+                    item[attr] = attr_value(json.loads(row[c]))
+            if expires is not None:
+                item[ttl_key] = {"N": str(expires)}
+            return {"PutRequest": {"Item": item}}
 
-            client = None
-            pending = []
-            for row in it:
-                if client is None:
-                    client = DynamoClient(endpoint, access_key, secret_key,
-                                          region=region)
-                item = {}
-                for c in string_cols:
-                    v = row[c]
-                    if v is not None:
-                        item[c] = {"S": v}
-                for attr, c in json_map_cols.items():
-                    v = row[c]
-                    if v is not None:
-                        item[attr] = attr_value(json.loads(v))
-                if expires is not None:
-                    item[ttl_key] = {"N": str(expires)}
-                pending.append({"PutRequest": {"Item": item}})
-                if len(pending) >= 25:  # BatchWriteItem API cap
-                    _batch_write(client, table, pending)
-                    pending = []
-            if client is not None and pending:
-                _batch_write(client, table, pending)
+        def send(client, rows) -> None:
+            _batch_write(client, table, [put(row) for row in rows])
 
-        rows.foreachPartition(send)
+        write_partitions(batch_df.select(*sel), functools.partial(
+            DynamoClient, endpoint, access_key, secret_key, region=region),
+            send, chunk=BATCH_WRITE_MAX)
 
     return write_batch
 

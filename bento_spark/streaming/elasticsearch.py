@@ -26,11 +26,16 @@ tests need, with per-item fault injection to exercise the retry path.
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
+import time
+import urllib.parse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bento_spark.streaming.sink import KeepAlive, write_partitions
 
 ACTIONS = ("index", "create", "update", "upsert", "delete")
 
@@ -69,6 +74,15 @@ def build_bulk_lines(df: DataFrame) -> DataFrame:
     return df.select(action_line.alias("action_line"), source_line.alias("source_line"))
 
 
+def _with_es_port(url: str) -> str:
+    """`url` with Elasticsearch's port 9200 filled in when a plain-http URL
+    names none; an https URL keeps the scheme's 443."""
+    u = urllib.parse.urlsplit(url)
+    if u.scheme == "https" or u.port is not None:
+        return url
+    return u._replace(netloc=f"{u.netloc}:9200").geturl()
+
+
 def es_bulk_writer(
     url: str,
     max_batch_bytes: int = 4 * 2**20,
@@ -81,103 +95,72 @@ def es_bulk_writer(
     partition. Input DataFrame must carry the `_es_*` meta columns."""
     hdrs = {"Content-Type": "application/x-ndjson", **(headers or {})}
 
+    def post_items(pool: KeepAlive, items: list[tuple[str, str | None]]) -> None:
+        """One bulk POST + per-item retry of transient failures."""
+        pending = items
+        for attempt in range(retries + 1):
+            body = "".join(
+                a + "\n" + (s + "\n" if s is not None else "")
+                for a, s in pending
+            ).encode("utf-8")
+            try:
+                conn = pool.get()
+                conn.request("POST", "/_bulk", body=body, headers=hdrs)
+                resp = conn.getresponse()
+                payload = resp.read()
+                if resp.status >= 300:
+                    raise ConnectionError(f"bulk http status {resp.status}")
+            except (ConnectionError, OSError):
+                # transport failure: drop the pooled conn, retry whole chunk
+                pool.close()
+                if attempt >= retries:
+                    raise
+                time.sleep(backoff_s * (2**attempt))
+                continue
+            result = json.loads(payload)
+            if not result.get("errors"):
+                return
+            transient, permanent = [], []
+            for item, sent in zip(result["items"], pending):
+                st = next(iter(item.values())).get("status", 500)
+                if st >= 300:
+                    # ES overload / shard unavailable retry codes
+                    (transient if st in (429, 503) else permanent).append((st, sent))
+            if permanent:
+                detail = "; ".join(
+                    f"status {st}: {a[:200]}" for st, (a, _) in permanent[:5]
+                )
+                raise ValueError(
+                    f"elasticsearch bulk: {len(permanent)} item(s) "
+                    f"permanently rejected — {detail}"
+                )
+            if not transient:
+                return
+            if attempt >= retries:
+                raise ConnectionError(
+                    f"elasticsearch bulk: {len(transient)} item(s) still "
+                    f"failing transiently after {retries} retries"
+                )
+            pending = [sent for _, sent in transient]
+            time.sleep(backoff_s * (2**attempt))
+
+    def send(pool: KeepAlive, rows) -> None:
+        chunk: list[tuple[str, str | None]] = []
+        size = 0
+        for r in rows:
+            item_sz = len(r.action_line) + (len(r.source_line or "")) + 2
+            if chunk and size + item_sz > max_batch_bytes:
+                post_items(pool, chunk)
+                chunk, size = [], 0
+            chunk.append((r.action_line, r.source_line))
+            size += item_sz
+        if chunk:
+            post_items(pool, chunk)
+
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        lines = build_bulk_lines(batch_df)
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            # (a captured `http.client` unpickles as the bare package)
-            import http.client
-            import time as _time
-            import urllib.parse
-
-            u = urllib.parse.urlsplit(url)
-            cls = (
-                http.client.HTTPSConnection
-                if u.scheme == "https"
-                else http.client.HTTPConnection
-            )
-            state = {"conn": None}
-
-            def connect():
-                if state["conn"] is None:
-                    state["conn"] = cls(
-                        u.hostname,
-                        u.port or (443 if u.scheme == "https" else 9200),
-                        timeout=timeout,
-                    )
-                return state["conn"]
-
-            def post_items(items: list[tuple[str, str | None]]) -> None:
-                """One bulk POST + per-item retry of transient failures."""
-                pending = items
-                for attempt in range(retries + 1):
-                    body = "".join(
-                        a + "\n" + (s + "\n" if s is not None else "")
-                        for a, s in pending
-                    ).encode("utf-8")
-                    try:
-                        conn = connect()
-                        conn.request("POST", "/_bulk", body=body, headers=hdrs)
-                        resp = conn.getresponse()
-                        payload = resp.read()
-                        if resp.status >= 300:
-                            raise ConnectionError(f"bulk http status {resp.status}")
-                    except (ConnectionError, OSError):
-                        # transport failure: drop the pooled conn, retry whole chunk
-                        try:
-                            if state["conn"] is not None:
-                                state["conn"].close()
-                        finally:
-                            state["conn"] = None
-                        if attempt >= retries:
-                            raise
-                        _time.sleep(backoff_s * (2**attempt))
-                        continue
-                    result = json.loads(payload)
-                    if not result.get("errors"):
-                        return
-                    transient, permanent = [], []
-                    for item, sent in zip(result["items"], pending):
-                        st = next(iter(item.values())).get("status", 500)
-                        if st >= 300:
-                            # ES overload / shard unavailable retry codes
-                            (transient if st in (429, 503) else permanent).append(
-                                (st, sent)
-                            )
-                    if permanent:
-                        detail = "; ".join(
-                            f"status {st}: {a[:200]}" for st, (a, _) in permanent[:5]
-                        )
-                        raise ValueError(
-                            f"elasticsearch bulk: {len(permanent)} item(s) "
-                            f"permanently rejected — {detail}"
-                        )
-                    if not transient:
-                        return
-                    if attempt >= retries:
-                        raise ConnectionError(
-                            f"elasticsearch bulk: {len(transient)} item(s) still "
-                            f"failing transiently after {retries} retries"
-                        )
-                    pending = [sent for _, sent in transient]
-                    _time.sleep(backoff_s * (2**attempt))
-
-            chunk: list[tuple[str, str | None]] = []
-            size = 0
-            for r in rows:
-                item_sz = len(r.action_line) + (len(r.source_line or "")) + 2
-                if chunk and size + item_sz > max_batch_bytes:
-                    post_items(chunk)
-                    chunk, size = [], 0
-                chunk.append((r.action_line, r.source_line))
-                size += item_sz
-            if chunk:
-                post_items(chunk)
-            if state["conn"] is not None:
-                state["conn"].close()
-
-        lines.foreachPartition(send)
+        write_partitions(build_bulk_lines(batch_df),
+                         functools.partial(KeepAlive, _with_es_port(url), timeout),
+                         send)
 
     return write_batch
 

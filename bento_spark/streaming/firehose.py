@@ -18,6 +18,7 @@ backoff — at-least-once under checkpoint replay."""
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import threading
 import time
@@ -93,29 +94,16 @@ def firehose_sink(endpoint: str, stream: str, access_key: str,
     PutRecordBatch chunks with per-record failure retry."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        client.put_record_batch(stream, [row.v.encode("utf-8") for row in rows])
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.concat(
-                F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])),
-                F.lit("\n"),
-            ).alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.firehose import FirehoseClient
-
-            client = FirehoseClient(endpoint, access_key, secret_key,
-                                    region=region)
-            pending: list[bytes] = []
-            for row in rows:
-                pending.append(row.v.encode("utf-8"))
-                if len(pending) >= 500:  # PutRecordBatch API cap
-                    client.put_record_batch(stream, pending)
-                    pending = []
-            if pending:
-                client.put_record_batch(stream, pending)
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.concat(json_body(batch_df), F.lit("\n")).alias("v"))
+        write_partitions(payloads, functools.partial(
+            FirehoseClient, endpoint, access_key, secret_key, region=region),
+            send, chunk=500)  # PutRecordBatch API cap
 
     return write_batch
 

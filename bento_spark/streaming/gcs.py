@@ -28,6 +28,7 @@ Spark-first mapping (identical topology to the S3/Azure listing inputs):
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import threading
 import urllib.parse
@@ -236,30 +237,22 @@ def gcs_sink(endpoint: str, bucket: str, path_col: str, *,
             f"gcs: collision_mode {collision_mode!r} not one of "
             f"{COLLISION_MODES}")
 
+    def send(client, rows) -> None:
+        for row in rows:
+            client.write_with_collision_mode(
+                bucket, row.p, (row.v or "").encode("utf-8"),
+                collision_mode, content_type)
+
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        if value_col:
-            body_col = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns if c != path_col]
-            body_col = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
-        payloads = batch_df.select(F.col(path_col).alias("p"),
-                                   body_col.alias("v"))
+        from bento_spark.streaming.sink import json_body, write_partitions
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.gcs import GcsClient
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = GcsClient(endpoint, credentials)
-                client.write_with_collision_mode(
-                    bucket, row.p, (row.v or "").encode("utf-8"),
-                    collision_mode, content_type)
-
-        payloads.foreachPartition(send)
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, path_col))
+        payloads = batch_df.select(F.col(path_col).alias("p"), body.alias("v"))
+        write_partitions(payloads, functools.partial(GcsClient, endpoint, credentials),
+                         send)
 
     return write_batch
 
@@ -291,23 +284,20 @@ class GcsCache:
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
-        args, bucket, ctype = self.args, self.bucket, self.content_type
+        from bento_spark.streaming.sink import write_partitions
+
+        bucket, ctype = self.bucket, self.content_type
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"))
 
-        def send(it) -> None:
-            from bento_spark.streaming.gcs import GcsClient
-
-            client = None
-            for row in it:
-                if client is None:
-                    client = GcsClient(*args)
+        def send(client, rows) -> None:
+            for row in rows:
                 client.upload(bucket, row.k,
                               ("" if row.v is None else row.v).encode("utf-8"),
                               content_type=ctype)
 
-        rows.foreachPartition(send)
+        write_partitions(rows, functools.partial(GcsClient, *self.args), send)
 
     def add(self, df, ttl=None, now_ms=None):
         """Insert-if-absent via the create-only precondition. Returns the
@@ -346,19 +336,16 @@ class GcsCache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        args, bucket = self.args, self.bucket
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.gcs import GcsClient
+        bucket = self.bucket
 
-            client = None
-            for row in it:
-                if client is None:
-                    client = GcsClient(*args)
+        def send(client, rows) -> None:
+            for row in rows:
                 client.delete_object(bucket, row.k)
 
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         functools.partial(GcsClient, *self.args), send)
 
     def get(self, df, on: str | None = None, broadcast: bool = True,
             now_ms=None):

@@ -22,6 +22,7 @@ message-level semantics (file == message) the reference provides.
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
 from dataclasses import dataclass, field
@@ -153,32 +154,23 @@ def hdfs_sink(hosts: list[str] | str, user: str,
     partition. Body = value_col raw when named, else the row as JSON."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        made = set()
+        for row in rows:
+            if row.d not in made:
+                client.mkdirs(row.d)
+                made.add(row.d)
+            client.create(row.d.rstrip("/") + "/" + row.p, (row.v or "").encode("utf-8"))
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns
-                         if c not in (dir_col, path_col)]
-            body = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, dir_col, path_col))
         payloads = batch_df.select(
-            F.col(dir_col).alias("d"), F.col(path_col).alias("p"),
-            body.alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.hdfs import WebHdfsClient
-
-            client, made = None, set()
-            for row in rows:
-                if client is None:
-                    client = WebHdfsClient(hosts, user=user)
-                if row.d not in made:
-                    client.mkdirs(row.d)
-                    made.add(row.d)
-                full = row.d.rstrip("/") + "/" + row.p
-                client.create(full, (row.v or "").encode("utf-8"))
-
-        payloads.foreachPartition(send)
+            F.col(dir_col).alias("d"), F.col(path_col).alias("p"), body.alias("v"))
+        write_partitions(payloads, functools.partial(WebHdfsClient, hosts, user=user),
+                         send)
 
     return write_batch
 

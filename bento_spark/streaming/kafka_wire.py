@@ -44,6 +44,7 @@ compressed batches with a clear error rather than mis-parsing.
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import struct
@@ -810,50 +811,32 @@ def kafka_wire_sink(host: str, port: int, topic: str,
     data paths)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        n_parts = max(1, len(client.metadata([topic]).get(topic, {})))
+        now_ms = int(time.time() * 1000)
+        pending: dict[int, list] = {}
+        rr = 0
+        for row in rows:
+            key = row.k.encode("utf-8") if row.k is not None else None
+            if key is None:
+                pid = rr % n_parts
+                rr += 1
+            else:
+                pid = partition_for_key(key, n_parts)
+            pending.setdefault(pid, []).append((now_ms, key, row.v.encode("utf-8"), []))
+            if len(pending[pid]) >= max_batch_records:
+                client.produce(topic, pid, encode_record_batch(0, pending.pop(pid)))
+        for pid, recs in pending.items():
+            client.produce(topic, pid, encode_record_batch(0, recs))
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != key_col]
         payloads = batch_df.select(
-            *([F.col(key_col).cast("string").alias("k")] if key_col else [F.lit(None).cast("string").alias("k")]),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            import time as _time
-
-            from bento_spark.streaming.kafka_wire import (
-                KafkaWireClient,
-                encode_record_batch,
-                partition_for_key,
-            )
-
-            client = None
-            pending: dict[int, list] = {}
-            rr = 0
-            now_ms = int(_time.time() * 1000)
-            try:
-                for row in rows:
-                    if client is None:
-                        client = KafkaWireClient(host, port, sasl=sasl)
-                        n_parts = max(1, len(client.metadata([topic]).get(topic, {})))
-                    key = row.k.encode("utf-8") if row.k is not None else None
-                    if key is None:
-                        pid = rr % n_parts
-                        rr += 1
-                    else:
-                        pid = partition_for_key(key, n_parts)
-                    pending.setdefault(pid, []).append(
-                        (now_ms, key, row.v.encode("utf-8"), []))
-                    if len(pending[pid]) >= max_batch_records:
-                        client.produce(topic, pid, encode_record_batch(0, pending.pop(pid)))
-                if client is not None:
-                    for pid, recs in pending.items():
-                        client.produce(topic, pid, encode_record_batch(0, recs))
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+            (F.col(key_col).cast("string") if key_col else F.lit(None).cast("string")).alias("k"),
+            json_body(batch_df, key_col).alias("v"))
+        write_partitions(payloads, functools.partial(KafkaWireClient, host, port, sasl=sasl),
+                         send)
 
     return write_batch
 

@@ -27,6 +27,7 @@ Spark-first mapping (same spool-bridge rationale as kafka_franz):
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import json
 import threading
@@ -228,30 +229,18 @@ def kinesis_sink(endpoint: str, stream: str, access_key: str, secret_key: str,
     reference's default spreads the same way)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        client.put_records(stream, [(row.v.encode("utf-8"), row.pk) for row in rows])
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != partition_key_col]
         payloads = batch_df.select(
-            *([F.col(partition_key_col).alias("pk")] if partition_key_col
-              else [F.expr("uuid()").alias("pk")]),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.kinesis import KinesisClient
-
-            client = KinesisClient(endpoint, access_key, secret_key,
-                                   region=region)
-            pending: list[tuple[bytes, str]] = []
-            for row in rows:
-                pending.append((row.v.encode("utf-8"), row.pk))
-                if len(pending) >= 500:
-                    client.put_records(stream, pending)
-                    pending = []
-            if pending:
-                client.put_records(stream, pending)
-
-        payloads.foreachPartition(send)
+            (F.col(partition_key_col) if partition_key_col else F.expr("uuid()")).alias("pk"),
+            json_body(batch_df, partition_key_col).alias("v"))
+        write_partitions(payloads, functools.partial(
+            KinesisClient, endpoint, access_key, secret_key, region=region),
+            send, chunk=500)  # PutRecords API cap
 
     return write_batch
 

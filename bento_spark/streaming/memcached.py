@@ -14,7 +14,7 @@ Spark-first mapping (same contract as RedisCache — streaming/redis.py):
 - `get` fetches only the batch's DISTINCT keys, one multi-key `get` per
   partition, then broadcast-joins the fetched slice back; the full
   keyspace never crosses the wire.
-- `set`/`delete` run executor-side, one connection per partition.
+- `set`/`delete` run executor-side.
 - `add` attempts per key executor-side and returns the REJECTED rows for
   the error-column routing; the verdict split is localCheckpoint-ed
   eagerly (re-evaluating a lazy plan would re-run the adds against state
@@ -29,6 +29,7 @@ parquet/file backends; this backend's tests use real short TTLs).
 
 from __future__ import annotations
 
+import functools
 import socket
 import threading
 import time
@@ -159,29 +160,21 @@ class MemcachedCache:
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
+        from bento_spark.streaming.sink import write_partitions
+
         exptime, prefix = self._exptime_of(ttl), self.prefix
-        host, port = self.host, self.port
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"),
         )
 
-        def send(it) -> None:
-            from bento_spark.streaming.memcached import MemcachedClient as _C
+        def send(client, rows) -> None:
+            for row in rows:
+                client.set(prefix + row.k,
+                           ("" if row.v is None else row.v).encode("utf-8"), exptime)
 
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        client = _C(host, port)
-                    client.set(prefix + row.k,
-                               ("" if row.v is None else row.v).encode("utf-8"),
-                               exptime)
-            finally:
-                if client is not None:
-                    client.close()
-
-        rows.foreachPartition(send)
+        write_partitions(rows, functools.partial(MemcachedClient, self.host, self.port),
+                         send)
 
     def add(self, df, ttl=None, now_ms=None):
         """Insert-if-absent; returns the rejected rows (cache.go maps
@@ -225,23 +218,16 @@ class MemcachedCache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        prefix, host, port = self.prefix, self.host, self.port
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.memcached import MemcachedClient as _C
+        prefix = self.prefix
 
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        client = _C(host, port)
-                    client.delete(prefix + row.k)
-            finally:
-                if client is not None:
-                    client.close()
+        def send(client, rows) -> None:
+            for row in rows:
+                client.delete(prefix + row.k)
 
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         functools.partial(MemcachedClient, self.host, self.port), send)
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         """Enrich df with the cached value by key (miss = NULL value

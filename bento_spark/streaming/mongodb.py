@@ -17,8 +17,8 @@ server or the in-process MiniMongoServer twin.
 
 Spark-first mapping: `document_map`/`filter_map` compile to JSON COLUMNS
 JVM-side (Bloblang -> to_json), so the executor loop only converts
-JSON->BSON and batches commands over one pooled socket per partition:
-inserts group into one `insert` command per chunk, updates/deletes pipe
+JSON->BSON: inserts group into one `insert` command per chunk,
+updates/deletes pipe
 one command per row (the command shape MongoDB itself requires), and the
 cache's batched `get` issues ONE `$in` find per partition, broadcast-
 joined back — the same multi-get amortization as the sqlite backend.
@@ -27,12 +27,16 @@ joined back — the same multi-get amortization as the sqlite backend.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
+import json
 import socket
 import struct
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bento_spark.streaming.sink import write_partitions
 
 # --------------------------------------------------------------------- BSON
 
@@ -163,7 +167,7 @@ class MongoClient:
             self.sock.sendall(_frame(self._rid, {**cmd, "$db": db}))
             reply = _read_msg(self.sock)
         if reply.get("ok") != 1 and reply.get("ok") != 1.0:
-            raise ConnectionError(f"mongodb command failed: {reply}")
+            raise ConnectionError(f"mongodb {next(iter(cmd))} failed: {reply}")
         return reply
 
     def insert(self, db: str, coll: str, docs: list[dict]) -> dict:
@@ -418,21 +422,15 @@ class MongoCache:
         )
 
     def set(self, df: DataFrame, ttl=None, now_ms=None) -> None:
-        host, port, db, coll = self.host, self.port, self.db, self.coll
+        db, coll = self.db, self.coll
         kf, vf = self.key_field, self.value_field
 
-        def write(part) -> None:
-            from bento_spark.streaming.mongodb import MongoClient as _C
+        def send(client, rows) -> None:
+            for r in rows:
+                client.update(db, coll, {kf: r.k}, {"$set": {vf: r.v}}, upsert=True)
 
-            c = None
-            for r in part:
-                if c is None:
-                    c = _C(host, port)
-                c.update(db, coll, {kf: r.k}, {"$set": {vf: r.v}}, upsert=True)
-            if c is not None:
-                c.close()
-
-        self._rows(df).foreachPartition(write)
+        write_partitions(self._rows(df), functools.partial(MongoClient, self.host, self.port),
+                         send)
 
     def add(self, df: DataFrame, ttl=None, now_ms=None) -> DataFrame:
         host, port, db, coll = self.host, self.port, self.db, self.coll
@@ -461,21 +459,14 @@ class MongoCache:
         return rejected.localCheckpoint(eager=True)
 
     def delete(self, keys: DataFrame) -> None:
-        host, port, db, coll = self.host, self.port, self.db, self.coll
-        kf = self.key_field
+        db, coll, kf = self.db, self.coll, self.key_field
 
-        def drop(part) -> None:
-            from bento_spark.streaming.mongodb import MongoClient as _C
+        def send(client, rows) -> None:
+            for r in rows:
+                client.delete(db, coll, {kf: r[0]}, limit=1)
 
-            c = None
-            for r in part:
-                if c is None:
-                    c = _C(host, port)
-                c.delete(db, coll, {kf: r[0]}, limit=1)
-            if c is not None:
-                c.close()
-
-        keys.select(F.col(self.key_col).cast("string")).foreachPartition(drop)
+        write_partitions(keys.select(F.col(self.key_col).cast("string")),
+                         functools.partial(MongoClient, self.host, self.port), send)
 
     def snapshot(self, now_ms: int | None = None) -> DataFrame | None:
         c = self._client()
@@ -528,8 +519,8 @@ def mongodb_writer(url: str, database: str, collection: str,
                    insert_chunk: int = 500):
     """foreachBatch writer. Expects `_mongo_doc` / `_mongo_filter` JSON
     columns (stamped by the compiler from document_map/filter_map —
-    common.go's writeMaps). insert-one groups rows into one `insert`
-    command per chunk; update/replace/delete issue one command per row,
+    common.go's writeMaps). insert-one sends one `insert` command per
+    `insert_chunk` rows; update/replace/delete issue one command per row,
     which is the command shape the protocol requires."""
     if operation not in OPERATIONS:
         raise ValueError(
@@ -538,52 +529,33 @@ def mongodb_writer(url: str, database: str, collection: str,
         )
     host, port = parse_mongo_url(url)
 
+    def send(client, rows) -> None:
+        if operation == "insert-one":
+            reply = client.insert(database, collection,
+                                  [json.loads(r._mongo_doc) for r in rows])
+            if reply.get("writeErrors"):
+                raise ValueError(f"mongodb insert rejected: {reply['writeErrors'][:3]}")
+            return
+        for r in rows:
+            flt = json.loads(r._mongo_filter)
+            if operation == "update-one":
+                client.update(database, collection, flt,
+                              {"$set": json.loads(r._mongo_doc)}, upsert=upsert)
+            elif operation == "replace-one":
+                client.update(database, collection, flt, json.loads(r._mongo_doc),
+                              upsert=upsert)
+            else:  # delete-one / delete-many
+                client.delete(database, collection, flt,
+                              limit=1 if operation == "delete-one" else 0)
+
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cols = []
         if operation != "delete-one" and operation != "delete-many":
             cols.append("_mongo_doc")
         if operation != "insert-one":
             cols.append("_mongo_filter")
-        rows = batch_df.select(*cols)
-
-        def send(part) -> None:
-            import json as _json
-
-            from bento_spark.streaming.mongodb import MongoClient as _C
-
-            c = None
-            pending: list[dict] = []
-
-            def flush() -> None:
-                if pending:
-                    reply = c.insert(database, collection, list(pending))
-                    if reply.get("writeErrors"):
-                        raise ValueError(
-                            f"mongodb insert rejected: {reply['writeErrors'][:3]}"
-                        )
-                    pending.clear()
-
-            for r in part:
-                if c is None:
-                    c = _C(host, port)
-                if operation == "insert-one":
-                    pending.append(_json.loads(r._mongo_doc))
-                    if len(pending) >= insert_chunk:
-                        flush()
-                elif operation == "update-one":
-                    c.update(database, collection, _json.loads(r._mongo_filter),
-                             {"$set": _json.loads(r._mongo_doc)}, upsert=upsert)
-                elif operation == "replace-one":
-                    c.update(database, collection, _json.loads(r._mongo_filter),
-                             _json.loads(r._mongo_doc), upsert=upsert)
-                else:  # delete-one / delete-many
-                    c.delete(database, collection, _json.loads(r._mongo_filter),
-                             limit=1 if operation == "delete-one" else 0)
-            if c is not None:
-                flush()
-                c.close()
-
-        rows.foreachPartition(send)
+        write_partitions(batch_df.select(*cols), functools.partial(MongoClient, host, port),
+                         send, chunk=insert_chunk)
 
     return write_batch
 

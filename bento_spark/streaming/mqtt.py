@@ -18,10 +18,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   at-least-once into the spool, dedupe-able downstream).
   The topic rides the spool file's header and surfaces as an
   `mqtt_topic` column, parsed JVM-side — no Python in the hot path.
-- output -> foreachBatch publisher: one pooled connection per partition,
-  rows publish as JSON (executor-side, never a driver loop); QoS1 waits
-  for PUBACK per message. At-least-once across checkpoint replay, like
-  the reference output.
+- output -> rows publish as JSON (executor-side, never a driver loop);
+  QoS1 waits for PUBACK per message. At-least-once across checkpoint
+  replay, like the reference output.
 
 Packet subset implemented (MQTT 3.1.1 §2-3): CONNECT/CONNACK,
 PUBLISH (QoS 0/1, retain, dup), PUBACK, SUBSCRIBE/SUBACK,
@@ -31,6 +30,7 @@ prefixed strings; topic filters with `+`/`#` wildcards (broker side).
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import threading
@@ -273,34 +273,31 @@ class MqttSpooler:
 # --------------------------------------------------------------------------
 
 
+class _Publisher(MqttClient):
+    """The output's connection: closing it says DISCONNECT first."""
+
+    def close(self) -> None:
+        try:
+            self.sock.sendall(encode_packet(DISCONNECT, 0, b""))
+        except OSError:
+            pass
+        MqttClient.close(self)
+
+
 def mqtt_sink(host: str, port: int, topic: str, qos: int = 1, retained: bool = False):
     """`mqtt` output (output.go: topic, qos, retained): rows publish as
-    JSON, serialized JVM-side (to_json), one connection per partition
-    executor-side; QoS1 waits for each PUBACK. At-least-once across
-    micro-batch replay (MQTT has no transactions — same contract as the
-    reference output)."""
-    from pyspark.sql import functions as F
+    JSON, serialized JVM-side (to_json); QoS1 waits for each PUBACK.
+    At-least-once across micro-batch replay (MQTT has no transactions —
+    same contract as the reference output)."""
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.publish(topic, row.v.encode("utf-8"), qos=qos, retain=retained)
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v")
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.mqtt import MqttClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = MqttClient(host, port)
-                    client.publish(topic, row.v.encode("utf-8"), qos=qos, retain=retained)
-            finally:
-                if client is not None:
-                    client.disconnect()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(_Publisher, host, port), send)
 
     return write_batch
 

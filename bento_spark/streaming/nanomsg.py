@@ -26,6 +26,7 @@ PUSH/PUB output with JVM-side serialization.
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import threading
@@ -304,44 +305,38 @@ class NanomsgSpooler:
 # --------------------------------------------------------------------------
 
 
+def _open_socket(socket_type: str, urls: list[str], bind: bool) -> NanomsgSocket:
+    sock = NanomsgSocket(socket_type)
+    try:
+        if bind:
+            sock.bind(*parse_nanomsg_url(urls[0]))
+        else:
+            for u in urls:
+                sock.connect(*parse_nanomsg_url(u))
+    except BaseException:
+        sock.close()
+        raise
+    return sock
+
+
 def nanomsg_sink(urls: list[str], socket_type: str = "PUSH", bind: bool = False):
     """`nanomsg` output (output.go: PUSH|PUB): rows serialize JVM-side;
     PUSH round-robins across PULL peers, PUB fans out (SUBs filter on the
     payload prefix, so a topic convention is just a payload prefix). Bind
     mode coalesces to one partition (a single bind endpoint)."""
-    from pyspark.sql import functions as F
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(sock, rows) -> None:
+        if socket_type == "PUB":
+            sock.wait_for_peer()  # slow-joiner mitigation
+        for row in rows:
+            sock.send(row.v.encode("utf-8"))
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v")
-        )
+        payloads = batch_df.select(json_body(batch_df).alias("v"))
         if bind:
             payloads = payloads.coalesce(1)
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.nanomsg import (
-                NanomsgSocket,
-                parse_nanomsg_url,
-            )
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:
-                        sock = NanomsgSocket(socket_type)
-                        if bind:
-                            sock.bind(*parse_nanomsg_url(urls[0]))
-                        else:
-                            for u in urls:
-                                sock.connect(*parse_nanomsg_url(u))
-                        if socket_type == "PUB":
-                            sock.wait_for_peer()  # slow-joiner mitigation
-                    sock.send(row.v.encode("utf-8"))
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(_open_socket, socket_type, urls, bind),
+                         send)
 
     return write_batch

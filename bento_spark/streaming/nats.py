@@ -19,8 +19,7 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   delivery guarantee. The subject and reply subject ride the spool
   file's header and surface as `nats_subject` /
   `nats_reply_subject` columns, parsed JVM-side.
-- output -> foreachBatch publisher: one pooled connection per partition,
-  rows publish as JSON executor-side. The subject supports `${! expr }`
+- output -> rows publish as JSON executor-side. The subject supports `${! expr }`
   interpolation (output.go's InterpolatedStringField) — computed as a
   COLUMN next to the payload, so per-row subjects never touch Python
   row-at-a-time.
@@ -32,6 +31,7 @@ the production behavior a horizontally-scaled consumer fleet relies on.
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import threading
@@ -261,38 +261,23 @@ class NatsSpooler:
 def nats_sink(host: str, port: int, subject_col: str):
     """`nats` output (output.go: interpolated subject): rows publish as
     JSON, serialized JVM-side (to_json); the per-row subject arrives as a
-    pre-computed COLUMN (interpolation compiled by the caller), one
-    connection per partition executor-side. Fire-and-forget like core
-    NATS itself; a flush per partition bounds loss to the final batch of
-    a crashed executor — the same at-most-once contract as the
-    reference's core-nats output."""
+    pre-computed COLUMN (interpolation compiled by the caller).
+    Fire-and-forget like core NATS itself; a flush per partition bounds
+    loss to the final batch of a crashed executor — the same at-most-once
+    contract as the reference's core-nats output."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.publish(row.s, row.v.encode("utf-8"))
+        client.flush()
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != subject_col]
-        payloads = batch_df.select(
-            F.col(subject_col).alias("s"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.nats import NatsClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = NatsClient(host, port)
-                    client.publish(row.s, row.v.encode("utf-8"))
-            finally:
-                if client is not None:
-                    try:
-                        client.flush()
-                    finally:
-                        client.close()
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.col(subject_col).alias("s"),
+                                   json_body(batch_df, subject_col).alias("v"))
+        write_partitions(payloads, functools.partial(NatsClient, host, port), send)
 
     return write_batch
 
@@ -845,29 +830,17 @@ def nats_jetstream_sink(host: str, port: int, subject_col: str = "_js_subject",
     level)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.js_publish(row.s, (row.v or "").encode("utf-8"))
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns if c != subject_col]
-            body = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, subject_col))
         payloads = batch_df.select(F.col(subject_col).alias("s"), body.alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.nats import NatsJsClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = NatsJsClient(host, port)
-                    client.js_publish(row.s, (row.v or "").encode("utf-8"))
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(NatsJsClient, host, port), send)
 
     return write_batch
 
@@ -996,27 +969,20 @@ class NatsKvCache:
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
+        from bento_spark.streaming.sink import write_partitions
+
         self._reject_ttl(ttl)
-        host, port, bucket = self.host, self.port, self.bucket
+        bucket = self.bucket
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"))
 
-        def send(it) -> None:
-            from bento_spark.streaming.nats import NatsJsClient as _C
+        def send(client, rows) -> None:
+            for row in rows:
+                client.js_publish(f"$KV.{bucket}.{row.k}",
+                                  ("" if row.v is None else row.v).encode())
 
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        client = _C(host, port)
-                    client.js_publish(f"$KV.{bucket}.{row.k}",
-                                      ("" if row.v is None else row.v).encode())
-            finally:
-                if client is not None:
-                    client.close()
-
-        rows.foreachPartition(send)
+        write_partitions(rows, functools.partial(NatsJsClient, self.host, self.port), send)
 
     def add(self, df, ttl=None, now_ms=None):
         from pyspark.sql import functions as F
@@ -1064,24 +1030,17 @@ class NatsKvCache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        host, port, bucket = self.host, self.port, self.bucket
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.nats import NatsJsClient as _C
+        bucket = self.bucket
 
-            client = None
-            try:
-                for row in it:
-                    if client is None:
-                        client = _C(host, port)
-                    client.js_publish(f"$KV.{bucket}.{row.k}", b"",
-                                      headers={"KV-Operation": "DEL"})
-            finally:
-                if client is not None:
-                    client.close()
+        def send(client, rows) -> None:
+            for row in rows:
+                client.js_publish(f"$KV.{bucket}.{row.k}", b"",
+                                  headers={"KV-Operation": "DEL"})
 
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         functools.partial(NatsJsClient, self.host, self.port), send)
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         from pyspark.sql import functions as F
@@ -1269,32 +1228,18 @@ def nats_os_sink(host: str, port: int, bucket: str,
     at the interpolated object name; body = value_col raw or row JSON."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        store = NatsObjectStore(client, bucket, chunk_size=chunk_size)
+        for row in rows:
+            store.put(row.n, (row.v or "").encode("utf-8"))
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns if c != name_col]
-            body = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, name_col))
         payloads = batch_df.select(F.col(name_col).alias("n"), body.alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.nats import NatsJsClient, NatsObjectStore
-
-            store = None
-            client = None
-            try:
-                for row in rows:
-                    if store is None:
-                        client = NatsJsClient(host, port)
-                        store = NatsObjectStore(client, bucket,
-                                                chunk_size=chunk_size)
-                    store.put(row.n, (row.v or "").encode("utf-8"))
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(NatsJsClient, host, port), send)
 
     return write_batch
 

@@ -20,10 +20,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   protocol's contract and the reference's). attempts/id/timestamp ride
   the spool file's header and surface as `nsq_attempts`/`nsq_id`/
   `nsq_timestamp` columns parsed JVM-side.
-- output -> foreachBatch publisher: one connection per partition, rows
-  publish as JSON serialized JVM-side (to_json); each PUB waits for its
-  OK response frame, so a failed publish fails the micro-batch for
-  checkpoint-level retry (at-least-once).
+- output -> rows publish as JSON serialized JVM-side (to_json); each PUB
+  waits for its OK response frame, so a failed publish fails the
+  micro-batch for checkpoint-level retry (at-least-once).
 
 Channel semantics (spec §"topics and channels"): every channel gets a
 COPY of each topic message; within a channel, messages distribute across
@@ -33,6 +32,7 @@ on. The mini nsqd implements exactly that.
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import struct
@@ -216,28 +216,15 @@ def nsq_sink(host: str, port: int, topic: str):
     JSON serialized JVM-side; each PUB waits for its OK frame so a
     rejected publish fails the micro-batch (checkpoint-replay
     at-least-once, like the reference's error-propagating Publish)."""
-    from pyspark.sql import functions as F
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.pub(topic, row.v.encode("utf-8"))
 
     def write_batch(batch_df, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v")
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.nsq import NsqClient
-
-            client = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = NsqClient(host, port)
-                    client.pub(topic, row.v.encode("utf-8"))
-            finally:
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(NsqClient, host, port), send)
 
     return write_batch
 

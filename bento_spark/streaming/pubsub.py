@@ -27,6 +27,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import threading
 import time
@@ -254,28 +255,22 @@ def pubsub_sink(endpoint: str, project: str, topic_col: str,
     size-bounded batches."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        pending: dict[str, list] = {}
+        for row in rows:
+            pending.setdefault(row.t, []).append((row.v.encode("utf-8"), {}))
+            if len(pending[row.t]) >= batch_size:
+                client.publish(project, row.t, pending.pop(row.t))
+        for t, msgs in pending.items():
+            client.publish(project, t, msgs)
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != topic_col]
-        payloads = batch_df.select(
-            F.col(topic_col).alias("t"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.pubsub import PubSubClient
-
-            client = PubSubClient(endpoint, credentials=credentials)
-            pending: dict[str, list] = {}
-            for row in rows:
-                pending.setdefault(row.t, []).append(
-                    (row.v.encode("utf-8"), {}))
-                if len(pending[row.t]) >= batch_size:
-                    client.publish(project, row.t, pending.pop(row.t))
-            for t, msgs in pending.items():
-                client.publish(project, t, msgs)
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.col(topic_col).alias("t"),
+                                   json_body(batch_df, topic_col).alias("v"))
+        write_partitions(payloads, functools.partial(
+            PubSubClient, endpoint, credentials=credentials), send)
 
     return write_batch
 

@@ -37,8 +37,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   control-plane bridge.
 - output -> foreachBatch producer: rows render to JSON JVM-side
   (to_json), interpolated key / ordering_key arrive as pre-computed
-  COLUMNS, one connection per partition, sends pipelined with a receipt
-  drain (producer_id/sequence_id receipts, spec §"Producer").
+  COLUMNS, sends pipelined with a receipt drain (producer_id/sequence_id
+  receipts, spec §"Producer").
 
 Delivery notes: subscription_type maps to the spec SubType enum —
 `shared` splits a topic round-robin across consumers (the horizontal
@@ -49,6 +49,7 @@ routes by hash of the key. The mini broker implements shared round-robin
 
 from __future__ import annotations
 
+import functools
 import re
 import socket
 import struct
@@ -638,43 +639,29 @@ def pulsar_sink(host: str, port: int, topic: str, *,
                 token: str | None = None, max_in_flight: int = 64):
     """`pulsar` output (output.go: topic + interpolated key/ordering_key,
     max_in_flight): rows publish as JSON rendered JVM-side; per-row
-    key/ordering_key arrive as pre-computed COLUMNS; one connection +
-    producer per partition with pipelined sends and a receipt drain —
-    at-least-once (a crashed partition replays its whole task)."""
+    key/ordering_key arrive as pre-computed COLUMNS; one producer per
+    partition with pipelined sends and a receipt drain — at-least-once
+    (a crashed partition replays its whole task)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        producer = Producer(client, topic)
+        for row in rows:
+            producer.send(row.v.encode("utf-8"), key=row.k,
+                          ordering_key=row.ok.encode() if row.ok else None,
+                          max_in_flight=max_in_flight)
+        producer.close()  # the receipt drain: a lost send fails the task
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        special = {key_col, ordering_key_col}
-        data_cols = [c for c in batch_df.columns if c not in special]
-        sel = [F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-               (F.col(key_col) if key_col else F.lit(None).cast("string"))
-               .alias("k"),
-               (F.col(ordering_key_col) if ordering_key_col
-                else F.lit(None).cast("string")).alias("ok")]
-        payloads = batch_df.select(*sel)
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.pulsar import Producer, PulsarClient
-
-            client = producer = None
-            try:
-                for row in rows:
-                    if client is None:
-                        client = PulsarClient(host, port, token=token)
-                        producer = Producer(client, topic)
-                    producer.send(
-                        row.v.encode("utf-8"),
-                        key=row.k,
-                        ordering_key=row.ok.encode() if row.ok else None,
-                        max_in_flight=max_in_flight)
-            finally:
-                if producer is not None:
-                    producer.close()
-                if client is not None:
-                    client.close()
-
-        payloads.foreachPartition(send)
+        none = F.lit(None).cast("string")
+        payloads = batch_df.select(
+            json_body(batch_df, key_col, ordering_key_col).alias("v"),
+            (F.col(key_col) if key_col else none).alias("k"),
+            (F.col(ordering_key_col) if ordering_key_col else none).alias("ok"))
+        write_partitions(payloads, functools.partial(PulsarClient, host, port, token=token),
+                         send)
 
     return write_batch
 

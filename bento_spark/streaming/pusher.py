@@ -15,6 +15,11 @@ invariant governs data paths)."""
 
 from __future__ import annotations
 
+import functools
+import http.client
+import json
+import time
+
 
 def pusher_auth_query(key: str, secret: str, path: str, body: bytes,
                       timestamp: int) -> str:
@@ -44,44 +49,26 @@ def pusher_sink(host: str, port: int, app_id: str, key: str, secret: str,
     checkpoint-replay at-least-once."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    path = f"/apps/{app_id}/events"
+    cls = http.client.HTTPSConnection if https else http.client.HTTPConnection
+
+    def send(conn, rows) -> None:
+        for row in rows:
+            body = json.dumps({"name": event, "channels": [row.ch],
+                               "data": row.v}).encode("utf-8")
+            qs = pusher_auth_query(key, secret, path, body, int(time.time()))
+            conn.request("POST", f"{path}?{qs}", body=body,
+                         headers={"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            data = resp.read()
+            if resp.status // 100 != 2:
+                raise ConnectionError(f"pusher: {resp.status} {data[:120]!r}")
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != channel_col]
-        payloads = batch_df.select(
-            F.col(channel_col).alias("ch"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            import http.client
-            import json as _json
-            import time as _time
-
-            from bento_spark.streaming.pusher import pusher_auth_query
-
-            path = f"/apps/{app_id}/events"
-            cls = http.client.HTTPSConnection if https else http.client.HTTPConnection
-            conn = None
-            try:
-                for row in rows:
-                    if conn is None:
-                        conn = cls(host, port, timeout=10)
-                    body = _json.dumps({
-                        "name": event, "channels": [row.ch], "data": row.v,
-                    }).encode("utf-8")
-                    qs = pusher_auth_query(key, secret, path, body,
-                                           int(_time.time()))
-                    conn.request("POST", f"{path}?{qs}", body=body,
-                                 headers={"Content-Type": "application/json"})
-                    resp = conn.getresponse()
-                    data = resp.read()
-                    if resp.status // 100 != 2:
-                        raise ConnectionError(
-                            f"pusher: {resp.status} {data[:120]!r}")
-            finally:
-                if conn is not None:
-                    conn.close()
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.col(channel_col).alias("ch"),
+                                   json_body(batch_df, channel_col).alias("v"))
+        write_partitions(payloads, functools.partial(cls, host, port, timeout=10), send)
 
     return write_batch

@@ -11,7 +11,7 @@ is needed at all.
 Spark-first mapping: the ENTIRE ILP line is built JVM-side as one
 Catalyst concat over escaped columns (table/symbols/fields/timestamp are
 all known at plan time from the schema) — executors just write
-pre-rendered lines down one socket per partition. No per-row Python.
+pre-rendered lines down a socket. No per-row Python.
 
 Delivery: ILP-over-TCP is fire-and-forget by protocol (errors surface
 only as dropped connections); a socket failure raises and fails the
@@ -21,6 +21,7 @@ the reference's sender flush.
 
 from __future__ import annotations
 
+import functools
 import socket
 import threading
 
@@ -107,26 +108,18 @@ def questdb_sink(host: str, port: int, table: str,
                  doubles: list[str] | None = None,
                  designated_timestamp_field: str | None = None):
     """`questdb` output (output.go): pre-rendered ILP lines stream down
-    one TCP connection per partition."""
+    one TCP connection."""
+    from bento_spark.streaming.sink import write_partitions
+
+    def send(sock, rows) -> None:
+        for row in rows:
+            sock.sendall(row._ilp.encode("utf-8") + b"\n")
 
     def write_batch(batch_df, epoch_id: int) -> None:
         lines = ilp_line(batch_df, table, symbols=symbols, doubles=doubles,
                          designated_timestamp_field=designated_timestamp_field)
-
-        def send(rows) -> None:
-            import socket as _socket
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:
-                        sock = _socket.create_connection((host, port), timeout=10)
-                    sock.sendall(row._ilp.encode("utf-8") + b"\n")
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        lines.foreachPartition(send)
+        write_partitions(lines, functools.partial(
+            socket.create_connection, (host, port), timeout=10), send)
 
     return write_batch
 

@@ -30,14 +30,15 @@ Spark-first mapping:
 - `redis_scan` is a BATCH source: keys are SCANned driver-side (keys are
   tiny), values are fetched with per-partition pipelined MGET batches —
   the scan parallelizes across executors instead of a driver GET loop.
-- outputs run one pooled connection per partition in foreachBatch and
-  PIPELINE their commands (write N commands, then read N replies) so a
-  micro-batch costs partitions round-trips, not rows.
+- outputs PIPELINE their commands (write N commands, then read N
+  replies) in 500-row chunks, so a micro-batch costs one round-trip per
+  chunk, not per row.
 """
 
 from __future__ import annotations
 
 import fnmatch
+import functools
 import json
 import socket
 import threading
@@ -414,26 +415,18 @@ def read_redis_scan(spark, host: str, port: int, match: str = "*",
 # --------------------------------------------------------------------------
 
 
-def _foreach_partition_pipeline(host: str, port: int, make_commands):
-    """Shared output shape: per partition, build the command list from the
-    rows and send it as ONE pipelined round-trip."""
+def _pipeline(df, host: str, port: int, make_commands) -> None:
+    """Shared writer shape: every 500 rows of a partition send their
+    `make_commands(row)` lists as ONE pipelined round-trip."""
+    from bento_spark.streaming.sink import write_partitions
 
-    def send(rows) -> None:
-        from bento_spark.streaming.redis import RedisClient as _C
+    def send(client, rows) -> None:
+        replies = client.pipeline([c for row in rows for c in make_commands(row)])
+        errs = [r for r in replies if isinstance(r, Exception)]
+        if errs:
+            raise errs[0]
 
-        cmds = [c for row in rows for c in make_commands(row)]
-        if not cmds:
-            return
-        client = _C(host, port)
-        try:
-            replies = client.pipeline(cmds)
-            errs = [r for r in replies if isinstance(r, Exception)]
-            if errs:
-                raise errs[0]
-        finally:
-            client.close()
-
-    return send
+    write_partitions(df, functools.partial(RedisClient, host, port), send, chunk=500)
 
 
 def redis_list_sink(host: str, port: int, key_col: str):
@@ -441,13 +434,12 @@ def redis_list_sink(host: str, port: int, key_col: str):
     pre-computed interpolated COLUMN."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != key_col]
-        payloads = batch_df.select(
-            F.col(key_col).alias("k"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"))
-        payloads.foreachPartition(_foreach_partition_pipeline(
-            host, port, lambda row: [("RPUSH", row.k, row.v)]))
+        payloads = batch_df.select(F.col(key_col).alias("k"),
+                                   json_body(batch_df, key_col).alias("v"))
+        _pipeline(payloads, host, port, lambda row: [("RPUSH", row.k, row.v)])
 
     return write_batch
 
@@ -457,13 +449,12 @@ def redis_pubsub_sink(host: str, port: int, channel_col: str):
     interpolated channel column; no delivery guarantee (protocol)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != channel_col]
-        payloads = batch_df.select(
-            F.col(channel_col).alias("k"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"))
-        payloads.foreachPartition(_foreach_partition_pipeline(
-            host, port, lambda row: [("PUBLISH", row.k, row.v)]))
+        payloads = batch_df.select(F.col(channel_col).alias("k"),
+                                   json_body(batch_df, channel_col).alias("v"))
+        _pipeline(payloads, host, port, lambda row: [("PUBLISH", row.k, row.v)])
 
     return write_batch
 
@@ -476,27 +467,25 @@ def redis_streams_sink(host: str, port: int, stream_col: str,
     MAXLEN ~ when configured."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body
+
     metas = list(meta_cols or [])
 
+    def mk(row):
+        cmd = ["XADD", row.k]
+        if max_length is not None:
+            cmd += ["MAXLEN", "~", str(max_length)]
+        cmd += ["*", body_key, row.v]
+        for i, m in enumerate(metas):
+            mv = getattr(row, f"m{i}")
+            if mv is not None:
+                cmd += [m, mv]
+        return [tuple(cmd)]
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != stream_col]
-        sel = [F.col(stream_col).alias("k"),
-               F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v")]
+        sel = [F.col(stream_col).alias("k"), json_body(batch_df, stream_col).alias("v")]
         sel += [F.col(m).cast("string").alias(f"m{i}") for i, m in enumerate(metas)]
-        payloads = batch_df.select(*sel)
-
-        def mk(row):
-            cmd = ["XADD", row.k]
-            if max_length is not None:
-                cmd += ["MAXLEN", "~", str(max_length)]
-            cmd += ["*", body_key, row.v]
-            for i, m in enumerate(metas):
-                mv = getattr(row, f"m{i}")
-                if mv is not None:
-                    cmd += [m, mv]
-            return [tuple(cmd)]
-
-        payloads.foreachPartition(_foreach_partition_pipeline(host, port, mk))
+        _pipeline(batch_df.select(*sel), host, port, mk)
 
     return write_batch
 
@@ -520,7 +509,7 @@ def redis_hash_sink(host: str, port: int, key_col: str,
                 cmd += [c, "" if v is None else v]
             return [tuple(cmd)]
 
-        payloads.foreachPartition(_foreach_partition_pipeline(host, port, mk))
+        _pipeline(payloads, host, port, mk)
 
     return write_batch
 
@@ -593,7 +582,7 @@ class RedisCache:
             cmd = ("SET", prefix + row.k, "" if row.v is None else row.v)
             return [cmd if ttl_ms is None else cmd + ("PX", str(ttl_ms))]
 
-        rows.foreachPartition(_foreach_partition_pipeline(self.host, self.port, mk))
+        _pipeline(rows, self.host, self.port, mk)
 
     def add(self, df, ttl=None, now_ms=None):
         """Insert-if-absent (SET..NX — cache.go:182 maps redis.Nil to
@@ -640,9 +629,8 @@ class RedisCache:
         from pyspark.sql import functions as F
 
         prefix = self.prefix
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
-        rows.foreachPartition(_foreach_partition_pipeline(
-            self.host, self.port, lambda row: [("DEL", prefix + row.k)]))
+        _pipeline(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                  self.host, self.port, lambda row: [("DEL", prefix + row.k)])
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         """Enrich df with the cached value by key (miss = NULL value

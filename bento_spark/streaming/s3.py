@@ -29,7 +29,7 @@ Spark-first mapping:
 - output -> one PutObject per row; the interpolated object path arrives
   as a pre-computed COLUMN (Catalyst-rendered, the repo's interpolation
   contract) and the body is serialized JVM-side; executors only stream
-  pre-rendered (path, body) pairs. One client per partition.
+  pre-rendered (path, body) pairs.
 - cache  -> shared cache-operator contract (see DynamoCache): set =
   PutObject, get = mapInPandas GetObject over the batch's distinct keys,
   add = head-then-put (the reference's non-atomic semantics, documented),
@@ -41,6 +41,7 @@ governs data paths, which carry only key/body here."""
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import threading
@@ -401,28 +402,19 @@ def s3_sink(endpoint: str, bucket: str, access_key: str, secret_key: str,
     row JSON-serialized JVM-side (the repo's connector-sink convention)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        for row in rows:
+            client.put_object(bucket, row.p, (row.v or "").encode("utf-8"),
+                              content_type=content_type)
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        if value_col:
-            body = F.col(value_col).cast("string")
-        else:
-            data_cols = [c for c in batch_df.columns if c != path_col]
-            body = F.to_json(F.struct(*[F.col(c) for c in data_cols]))
+        body = (F.col(value_col).cast("string") if value_col
+                else json_body(batch_df, path_col))
         payloads = batch_df.select(F.col(path_col).alias("p"), body.alias("v"))
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.s3 import S3Client
-
-            client = None
-            for row in rows:
-                if client is None:
-                    client = S3Client(endpoint, access_key, secret_key,
-                                      region=region)
-                client.put_object(bucket, row.p,
-                                  (row.v or "").encode("utf-8"),
-                                  content_type=content_type)
-
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(
+            S3Client, endpoint, access_key, secret_key, region=region), send)
 
     return write_batch
 
@@ -455,24 +447,21 @@ class S3Cache:
     def set(self, df, ttl=None, now_ms=None) -> None:
         from pyspark.sql import functions as F
 
-        args, bucket, ctype = self.args, self.bucket, self.content_type
+        from bento_spark.streaming.sink import write_partitions
+
+        bucket, ctype = self.bucket, self.content_type
         rows = df.dropDuplicates([self.key_col]).select(
             F.col(self.key_col).cast("string").alias("k"),
             F.col(self.value_col).cast("string").alias("v"),
         )
 
-        def send(it) -> None:
-            from bento_spark.streaming.s3 import S3Client
-
-            client = None
-            for row in it:
-                if client is None:
-                    client = S3Client(*args)
+        def send(client, rows) -> None:
+            for row in rows:
                 client.put_object(bucket, row.k,
                                   ("" if row.v is None else row.v).encode("utf-8"),
                                   content_type=ctype)
 
-        rows.foreachPartition(send)
+        write_partitions(rows, functools.partial(S3Client, *self.args), send)
 
     def add(self, df, ttl=None, now_ms=None):
         """Insert-if-absent. Returns the rows that were REJECTED (key
@@ -517,19 +506,16 @@ class S3Cache:
     def delete(self, keys) -> None:
         from pyspark.sql import functions as F
 
-        args, bucket = self.args, self.bucket
-        rows = keys.select(F.col(self.key_col).cast("string").alias("k"))
+        from bento_spark.streaming.sink import write_partitions
 
-        def send(it) -> None:
-            from bento_spark.streaming.s3 import S3Client
+        bucket = self.bucket
 
-            client = None
-            for row in it:
-                if client is None:
-                    client = S3Client(*args)
+        def send(client, rows) -> None:
+            for row in rows:
                 client.delete_object(bucket, row.k)
 
-        rows.foreachPartition(send)
+        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
+                         functools.partial(S3Client, *self.args), send)
 
     def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
         """Enrich df with the cached value by key (miss = NULL): GetObject

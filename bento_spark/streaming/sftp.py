@@ -32,6 +32,7 @@ testable contract; private_key_file configs raise a clear error."""
 from __future__ import annotations
 
 import fnmatch
+import functools
 import os
 import posixpath
 import socket
@@ -178,7 +179,7 @@ class SftpClient:
         code, msg = self._status(body)
         raise SftpStatusError(code, msg or path)
 
-    def close(self, handle: bytes) -> None:
+    def close_handle(self, handle: bytes) -> None:
         kind, body = self._call(SSH_FXP_CLOSE, sp(handle))
         self._expect_ok(kind, body)
 
@@ -209,7 +210,7 @@ class SftpClient:
                 out += got
                 offset += len(got)
         finally:
-            self.close(h)
+            self.close_handle(h)
 
     def write_file(self, path: str, data: bytes, *, append: bool = False,
                    chunk: int = 32768) -> None:
@@ -229,7 +230,7 @@ class SftpClient:
             if not data:
                 self.write(h, offset, b"")
         finally:
-            self.close(h)
+            self.close_handle(h)
 
     def listdir(self, path: str) -> list[tuple[str, dict]]:
         kind, body = self._call(SSH_FXP_OPENDIR, sp(path))
@@ -252,7 +253,7 @@ class SftpClient:
                     r.string()  # longname
                     names.append((fname, _parse_attrs(r)))
         finally:
-            self.close(h)
+            self.close_handle(h)
 
     def stat(self, path: str) -> dict:
         kind, body = self._call(SSH_FXP_STAT, sp(path))
@@ -310,7 +311,7 @@ class SftpClient:
         raise ValueError("sftp: glob wildcards are supported in the final "
                          "path segment only")
 
-    def close_session(self) -> None:
+    def close(self) -> None:
         self.ssh.close()
 
 
@@ -384,7 +385,7 @@ class SftpSpooler:
                 self.error = e
             finally:
                 try:
-                    client.close_session()
+                    client.close()
                 except OSError:
                     pass
                 self._done.set()
@@ -418,46 +419,36 @@ def sftp_sink(host: str, port: int, username: str, password: str,
               private_key_pem: str | None = None):
     """`sftp` output (output.go): per-row upload to the interpolated
     path COLUMN; codec `all` truncates per message, `lines` appends
-    message + newline, `append` appends raw. One SSH session per
-    partition; parent directories auto-create."""
+    message + newline, `append` appends raw. Parent directories
+    auto-create."""
     if codec not in CODECS:
         raise ValueError(f"sftp: codec {codec!r} not one of {CODECS}")
+
+    def send(client, rows) -> None:
+        made_dirs: set[str] = set()
+        for row in rows:
+            d = posixpath.dirname(row.p)
+            if d and d not in made_dirs:
+                client.mkdirs(d)
+                made_dirs.add(d)
+            body = row.v.encode("utf-8")
+            if codec == "all":
+                client.write_file(row.p, body)
+            elif codec == "lines":
+                client.write_file(row.p, body + b"\n", append=True)
+            else:
+                client.write_file(row.p, body, append=True)
 
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        data_cols = [c for c in batch_df.columns if c != path_col]
-        payloads = batch_df.select(
-            F.col(path_col).alias("p"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"))
+        from bento_spark.streaming.sink import json_body, write_partitions
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.sftp import SftpClient
-
-            client = None
-            made_dirs: set[str] = set()
-            try:
-                for row in rows:
-                    if client is None:
-                        client = SftpClient(host, port, username, password,
-                                            private_key_pem=private_key_pem)
-                    d = posixpath.dirname(row.p)
-                    if d and d not in made_dirs:
-                        client.mkdirs(d)
-                        made_dirs.add(d)
-                    body = row.v.encode("utf-8")
-                    if codec == "all":
-                        client.write_file(row.p, body)
-                    elif codec == "lines":
-                        client.write_file(row.p, body + b"\n", append=True)
-                    else:
-                        client.write_file(row.p, body, append=True)
-            finally:
-                if client is not None:
-                    client.close_session()
-
-        payloads.foreachPartition(send)
+        payloads = batch_df.select(F.col(path_col).alias("p"),
+                                   json_body(batch_df, path_col).alias("v"))
+        write_partitions(payloads, functools.partial(
+            SftpClient, host, port, username, password,
+            private_key_pem=private_key_pem), send)
 
     return write_batch
 

@@ -30,12 +30,23 @@ DLQ routing re-creates the reference's `switch`/`fallback`/
 `reject_errored` outputs (output_switch.go:164, output_fallback.go:18,
 output_reject_errored.go:19) as predicate-filtered writes per sink inside
 one foreachBatch.
+
+Every message output and cache-backend writer sends a micro-batch through
+`write_partitions`, the Spark counterpart of the reference's one async
+writer and batcher (component/output/async_writer.go:61, batcher.go).
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
-from collections.abc import Callable, Sequence
+import socket
+import time
+import urllib.parse
+import uuid
+from collections.abc import Callable, Iterable, Sequence
+from http.client import HTTPException
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -293,91 +304,156 @@ def dlq_split_writer(
     return route_outputs([(F.col(error_col).isNotNull(), dlq), (None, main)])
 
 
+def json_body(df: DataFrame, *meta: str | None) -> Column:
+    """The row as one JSON document: every column except `meta`, the
+    per-row columns (key, topic, group id, path, ...) that the output's
+    builder in plans/outputs.py added next to the message."""
+    return F.to_json(F.struct(*[F.col(c) for c in df.columns if c not in meta]))
+
+
+def write_partitions(df: DataFrame, open: Callable[[], object],
+                     write: Callable[[object, Iterable], None], *,
+                     chunk: int | None = None) -> None:
+    """Send `df` executor-side, one client per non-empty partition: the
+    first row calls `open()`, `write(client, rows)` gets lists of at most
+    `chunk` rows in order (with `chunk=None` the rest of the partition as
+    one iterator, for writers that batch on their own), and
+    `client.close()` runs last whatever happened; a client without
+    `close` (a connection-per-request REST client) holds nothing to
+    release. A failing `close` never hides the error of a failed `write`.
+    Delivery confirmation (receipts, acks) belongs in `write`, so a lost
+    message fails the task; `close` only releases the client.
+
+    `open` and `write` are pickled to the workers: pass module-level
+    classes or functions (`functools.partial(SnsClient, endpoint, ...)`)
+    and closures over plain values, never a captured submodule (an
+    `http.client` captured that way unpickles as the bare `http`
+    package)."""
+    df.foreachPartition(functools.partial(_write_partition, open, write, chunk))
+
+
+def _write_partition(open, write, chunk, rows: Iterable) -> None:
+    rows = iter(rows)
+    for first in rows:
+        break
+    else:
+        return  # an empty partition opens nothing
+    rows = itertools.chain((first,), rows)
+    client = open()
+    close = getattr(client, "close", None)
+    try:
+        if chunk is None:
+            write(client, rows)
+        else:
+            while batch := list(itertools.islice(rows, chunk)):
+                write(client, batch)
+    except BaseException:
+        if close is not None:
+            try:
+                close()
+            except Exception:  # noqa: BLE001 — the write's error is the one to raise
+                pass
+        raise
+    if close is not None:
+        close()
+
+
+def _socket_connect(network: str, address: str) -> socket.socket:
+    if network == "udp":
+        return socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+    if network == "unix":
+        sock = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
+        sock.settimeout(10)
+        sock.connect(address)
+        return sock
+    host, _, port = address.rpartition(":")
+    return socket.create_connection((host, int(port)), timeout=10)
+
+
 def socket_sink(network: str, address: str):
     """`socket` output (internal/impl/io/output_socket.go): connect to a
-    tcp/udp/unix server and send rows with the `lines` codec — JSON
-    rendered JVM-side, ONE connection per partition opened executor-side
-    (the questdb ILP pattern; the reference holds one process-wide
-    connection, which a distributed writer generalizes)."""
+    tcp/udp/unix server and send rows with the `lines` codec, rendered
+    to JSON JVM-side (the reference holds one process-wide connection,
+    which a distributed writer generalizes to one per partition)."""
     if network not in ("tcp", "udp", "unix"):
         raise ValueError(f"socket output network must be tcp/udp/unix, got {network!r}")
+    host, _, port = address.rpartition(":")
+
+    def send(sock, rows) -> None:
+        for row in rows:
+            data = row.v.encode("utf-8") + b"\n"
+            if network == "udp":
+                sock.sendto(data, (host, int(port)))
+            else:
+                sock.sendall(data)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v"))
-
-        def send(rows) -> None:
-            import socket as _socket
-
-            sock = None
-            try:
-                for row in rows:
-                    data = row.v.encode("utf-8") + b"\n"
-                    if network == "udp":
-                        if sock is None:
-                            sock = _socket.socket(_socket.AF_INET,
-                                                  _socket.SOCK_DGRAM)
-                        host, _, port = address.rpartition(":")
-                        sock.sendto(data, (host, int(port)))
-                        continue
-                    if sock is None:
-                        if network == "unix":
-                            sock = _socket.socket(_socket.AF_UNIX,
-                                                  _socket.SOCK_STREAM)
-                            sock.settimeout(10)
-                            sock.connect(address)
-                        else:
-                            host, _, port = address.rpartition(":")
-                            sock = _socket.create_connection(
-                                (host, int(port)), timeout=10)
-                    sock.sendall(data)
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(_socket_connect, network, address), send)
 
     return write_batch
+
+
+class _WebSocket:
+    """A websocket output connection: RFC 6455 handshake on open, masked
+    text frames, a close frame (§5.5.1) on the way out."""
+
+    def __init__(self, url: str, tls_insecure: bool):
+        from bento_spark.streaming.http_server import ws_connect
+
+        self.sock, _ = ws_connect(url, tls_insecure=tls_insecure)
+
+    def _frame(self, opcode: int, payload: bytes) -> None:
+        from bento_spark.streaming.http_server import WebSocketSpooler
+
+        self.sock.sendall(WebSocketSpooler.client_frame(opcode, payload, os.urandom(4)))
+
+    def send(self, text: str) -> None:
+        self._frame(0x1, text.encode("utf-8"))
+
+    def close(self) -> None:
+        try:
+            self._frame(0x8, b"")
+        except OSError:
+            pass
+        self.sock.close()
 
 
 def websocket_sink(url: str, tls_insecure: bool = False):
     """`websocket` output (internal/impl/io/output_websocket.go): rows
-    send as masked text frames over a client connection — JSON rendered
-    JVM-side, one RFC 6455 handshake per partition executor-side, a
-    close frame (§5.5.1) on the way out."""
+    send as text frames over a client connection, JSON rendered JVM-side."""
+
+    def send(ws, rows) -> None:
+        for row in rows:
+            ws.send(row.v)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v"))
-
-        def send(rows) -> None:
-            # worker closures must import submodules inside the function
-            import os as _os
-
-            from bento_spark.streaming.http_server import (
-                WebSocketSpooler,
-                ws_connect,
-            )
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:
-                        sock, _ = ws_connect(url, tls_insecure=tls_insecure)
-                    sock.sendall(WebSocketSpooler.client_frame(
-                        0x1, row.v.encode("utf-8"), _os.urandom(4)))
-            finally:
-                if sock is not None:
-                    try:
-                        sock.sendall(WebSocketSpooler.client_frame(
-                            0x8, b"", _os.urandom(4)))
-                    except OSError:
-                        pass
-                    sock.close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(_WebSocket, url, tls_insecure), send)
 
     return write_batch
+
+
+class KeepAlive:
+    """A partition's pooled keep-alive HTTP connection (the http_client and
+    elasticsearch outputs): opened on first use, dropped after a transport
+    fault."""
+
+    def __init__(self, url: str, timeout: float):
+        from bento_spark.streaming.rest import Endpoint
+
+        self.endpoint = Endpoint(url, timeout)
+        self.conn = None
+
+    def get(self):
+        if self.conn is None:
+            self.conn = self.endpoint.connect()
+        return self.conn
+
+    def close(self) -> None:
+        conn, self.conn = self.conn, None
+        if conn is not None:
+            conn.close()
 
 
 def http_post_writer(
@@ -390,7 +466,7 @@ def http_post_writer(
 ):
     """`http_client` output (internal/impl/io/output_http_client.go): each
     row POSTs as one JSON request — serialization happens JVM-side
-    (to_json), the requests fire EXECUTOR-side with one pooled keep-alive
+    (to_json), the requests fire EXECUTOR-side over one pooled keep-alive
     connection per partition (never a driver loop).
 
     Retry contract: each request retries IN-WRITER with exponential
@@ -404,67 +480,42 @@ def http_post_writer(
     429) are permanent and fail fast; duplicate sends on replay are
     inherent (HTTP has no transactional sink)."""
     hdrs = {"Content-Type": "application/json", **(headers or {})}
+    u = urllib.parse.urlsplit(url)
+    path = (u.path or "/") + (f"?{u.query}" if u.query else "")
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in batch_df.columns])).alias("v")
+    def one(pool: KeepAlive, body: bytes, epoch_id: int) -> None:
+        last = "no attempt"
+        for attempt in range(retries + 1):
+            try:
+                conn = pool.get()
+                conn.request(method, path, body=body, headers=hdrs)
+                resp = conn.getresponse()
+                resp.read()
+                if resp.status < 300:
+                    return
+                last = f"http status {resp.status}"
+                if 400 <= resp.status < 500 and resp.status not in (408, 429):
+                    break  # permanent client error: retrying can't help
+            except (OSError, HTTPException) as e:
+                last = f"{type(e).__name__}: {e}"
+                try:
+                    pool.close()  # drop the broken keep-alive conn
+                except Exception:  # noqa: BLE001
+                    pass
+            if attempt < retries:
+                time.sleep(backoff_s * (2**attempt))
+        raise RuntimeError(
+            f"http_client output: {last} from {url} (epoch {epoch_id}, "
+            f"{retries + 1} attempts)"
         )
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            # (a captured `http.client` unpickles as the bare package)
-            import http.client
-            import time as _time
-            import urllib.parse
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def send(pool, rows) -> None:
+            for row in rows:
+                one(pool, row.v.encode("utf-8"), epoch_id)
 
-            u = urllib.parse.urlsplit(url)
-            cls = http.client.HTTPSConnection if u.scheme == "https" else http.client.HTTPConnection
-            path = (u.path or "/") + (f"?{u.query}" if u.query else "")
-            state = {"conn": None}
-
-            def connect():
-                if state["conn"] is None:
-                    state["conn"] = cls(
-                        u.hostname, u.port or (443 if u.scheme == "https" else 80),
-                        timeout=timeout,
-                    )
-                return state["conn"]
-
-            def one(body: bytes) -> None:
-                last = "no attempt"
-                for attempt in range(retries + 1):
-                    try:
-                        conn = connect()
-                        conn.request(method, path, body=body, headers=hdrs)
-                        resp = conn.getresponse()
-                        resp.read()
-                        if resp.status < 300:
-                            return
-                        last = f"http status {resp.status}"
-                        if 400 <= resp.status < 500 and resp.status not in (408, 429):
-                            break  # permanent client error: retrying can't help
-                    except (OSError, http.client.HTTPException) as e:
-                        last = f"{type(e).__name__}: {e}"
-                        try:
-                            state["conn"].close()
-                        except Exception:  # noqa: BLE001
-                            pass
-                        state["conn"] = None  # drop the broken keep-alive conn
-                    if attempt < retries:
-                        _time.sleep(backoff_s * (2**attempt))
-                raise RuntimeError(
-                    f"http_client output: {last} from {url} (epoch {epoch_id}, "
-                    f"{retries + 1} attempts)"
-                )
-
-            try:
-                for row in rows:
-                    one(row.v.encode("utf-8"))
-            finally:
-                if state["conn"] is not None:
-                    state["conn"].close()
-
-        payloads.foreachPartition(send)
+        write_partitions(batch_df.select(json_body(batch_df).alias("v")),
+                         functools.partial(KeepAlive, url, timeout), send)
 
     return write_batch
 
@@ -505,15 +556,11 @@ def sync_response_writer(sync_dir: str, content_col: str | None = None,
         sel = batch_df.select(F.col(id_col).alias("_rid"), body.alias("_body"))
 
         def reply(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            import os
-            import uuid as _uuid
-
             for r in rows:
                 if not r._rid:
                     continue
                 final = os.path.join(sync_dir, f"{r._rid}.resp")
-                tmp = os.path.join(sync_dir, f".{r._rid}.{_uuid.uuid4().hex}.tmp")
+                tmp = os.path.join(sync_dir, f".{r._rid}.{uuid.uuid4().hex}.tmp")
                 with open(tmp, "wb") as fh:
                     fh.write(("" if r._body is None else str(r._body)).encode("utf-8"))
                 os.replace(tmp, final)

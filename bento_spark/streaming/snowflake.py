@@ -33,6 +33,7 @@ interpolated stage/path arriving as COLUMNS; file names carry
 from __future__ import annotations
 
 import base64
+import functools
 import gzip
 import hashlib
 import json
@@ -211,28 +212,18 @@ def snowflake_put_sink(endpoint: str, account: str, user: str,
     def write_batch(batch_df, epoch_id: int) -> None:
         from pyspark.sql import functions as F
 
-        data_cols = [c for c in batch_df.columns
-                     if c not in (stage_col, path_col)]
+        from bento_spark.streaming.sink import json_body, write_partitions
+
         payloads = batch_df.select(
             F.col(stage_col).alias("stage"), F.col(path_col).alias("path"),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
+            json_body(batch_df, stage_col, path_col).alias("v"),
             F.spark_partition_id().alias("pid"))
 
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.snowflake import (
-                SnowflakeClient,
-                compress_payload,
-            )
-
+        def send(client, rows) -> None:
             groups: dict[tuple[str, str], list[str]] = {}
-            pid = 0
             for row in rows:
                 pid = row.pid
                 groups.setdefault((row.stage, row.path), []).append(row.v)
-            if not groups:
-                return
-            client = SnowflakeClient(endpoint, account, user, private_key_pem)
             for seq, ((stage, path), lines) in enumerate(sorted(groups.items())):
                 body, suffix = compress_payload(
                     ("\n".join(lines) + "\n").encode("utf-8"), compression)
@@ -241,7 +232,8 @@ def snowflake_put_sink(endpoint: str, account: str, user: str,
                 if pipe:
                     client.insert_files(pipe, [rel])
 
-        payloads.foreachPartition(send)
+        write_partitions(payloads, functools.partial(
+            SnowflakeClient, endpoint, account, user, private_key_pem), send)
 
     return write_batch
 

@@ -9,11 +9,12 @@ uses aws-sdk-go-v2; the Query protocol is public, so no SDK is needed.
 
 Spark-first mapping: rows serialize as JSON JVM-side; the optional FIFO
 group/dedupe ids arrive as pre-computed COLUMNS; executors publish in
-PublishBatch chunks of <=10 entries (the API cap), one client per
-partition — at-least-once under checkpoint replay."""
+PublishBatch chunks of <=10 entries (the API cap) — at-least-once under
+checkpoint replay."""
 
 from __future__ import annotations
 
+import functools
 import threading
 import urllib.parse
 
@@ -91,32 +92,20 @@ def sns_sink(endpoint: str, topic_arn: str, access_key: str, secret_key: str,
     FIFO group/dedupe ids as pre-computed columns, PublishBatch chunks."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        client.publish_batch(topic_arn, [(row.v, row.g, row.d) for row in rows])
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        meta_cols = {c for c in (group_id_col, dedupe_id_col) if c}
-        data_cols = [c for c in batch_df.columns if c not in meta_cols]
+        none = F.lit(None).cast("string")
         payloads = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-            (F.col(group_id_col) if group_id_col
-             else F.lit(None).cast("string")).alias("g"),
-            (F.col(dedupe_id_col) if dedupe_id_col
-             else F.lit(None).cast("string")).alias("d"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.sns import SnsClient
-
-            client = SnsClient(endpoint, access_key, secret_key, region=region)
-            pending: list[tuple[str, str | None, str | None]] = []
-            for row in rows:
-                pending.append((row.v, row.g, row.d))
-                if len(pending) >= 10:
-                    client.publish_batch(topic_arn, pending)
-                    pending = []
-            if pending:
-                client.publish_batch(topic_arn, pending)
-
-        payloads.foreachPartition(send)
+            json_body(batch_df, group_id_col, dedupe_id_col).alias("v"),
+            (F.col(group_id_col) if group_id_col else none).alias("g"),
+            (F.col(dedupe_id_col) if dedupe_id_col else none).alias("d"))
+        write_partitions(payloads, functools.partial(
+            SnsClient, endpoint, access_key, secret_key, region=region),
+            send, chunk=10)  # PublishBatch API cap
 
     return write_batch
 

@@ -30,6 +30,7 @@ data paths)."""
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import hmac
 import json
@@ -268,29 +269,18 @@ def sqs_sink(endpoint: str, queue_url: str, access_key: str, secret_key: str,
     pre-computed COLUMN."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(client, rows) -> None:
+        client.send_message_batch(queue_url, [(row.v, row.g) for row in rows])
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != group_id_col]
         payloads = batch_df.select(
-            *([F.col(group_id_col).alias("g")] if group_id_col
-              else [F.lit(None).cast("string").alias("g")]),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.sqs import SqsClient
-
-            client = SqsClient(endpoint, access_key, secret_key, region=region)
-            pending: list[tuple[str, str | None]] = []
-            for row in rows:
-                pending.append((row.v, row.g))
-                if len(pending) >= 10:  # SendMessageBatch API cap
-                    client.send_message_batch(queue_url, pending)
-                    pending = []
-            if pending:
-                client.send_message_batch(queue_url, pending)
-
-        payloads.foreachPartition(send)
+            (F.col(group_id_col) if group_id_col else F.lit(None).cast("string")).alias("g"),
+            json_body(batch_df, group_id_col).alias("v"))
+        write_partitions(payloads, functools.partial(
+            SqsClient, endpoint, access_key, secret_key, region=region),
+            send, chunk=10)  # SendMessageBatch API cap
 
     return write_batch
 

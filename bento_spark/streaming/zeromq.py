@@ -32,6 +32,7 @@ Spark-first mapping (same spool-bridge rationale as every push source):
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import threading
@@ -400,49 +401,44 @@ class ZmqSpooler:
 # --------------------------------------------------------------------------
 
 
+def _open_socket(socket_type: str, urls: list[str], bind: bool) -> ZmqSocket:
+    sock = ZmqSocket(socket_type)
+    try:
+        if bind:
+            sock.bind(*parse_zmq_url(urls[0]))
+        else:
+            for u in urls:
+                sock.connect(*parse_zmq_url(u))
+    except BaseException:
+        sock.close()
+        raise
+    return sock
+
+
 def zmq_sink(urls: list[str], socket_type: str = "PUSH", bind: bool = False,
              topic_col: str | None = None):
     """`zmq4` output (output_zmq4.go): rows serialize JVM-side; PUSH
     round-robins across PULL peers, PUB sends [topic, payload] with the
-    per-row topic as a pre-computed COLUMN. One socket per partition
-    (connect mode); bind mode must be driver-side-single so it runs the
-    batch through a single partition."""
+    per-row topic as a pre-computed COLUMN. Bind mode runs the batch
+    through a single partition (one bind endpoint total)."""
     from pyspark.sql import functions as F
 
+    from bento_spark.streaming.sink import json_body, write_partitions
+
+    def send(sock, rows) -> None:
+        if socket_type == "PUB":
+            sock.wait_for_subscription()
+        for row in rows:
+            body = row.v.encode("utf-8")
+            sock.send([row.t.encode("utf-8"), body] if socket_type == "PUB" else [body])
+
     def write_batch(batch_df, epoch_id: int) -> None:
-        data_cols = [c for c in batch_df.columns if c != topic_col]
         payloads = batch_df.select(
-            *([F.col(topic_col).alias("t")] if topic_col else [F.lit("").alias("t")]),
-            F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("v"),
-        )
+            (F.col(topic_col) if topic_col else F.lit("")).alias("t"),
+            json_body(batch_df, topic_col).alias("v"))
         if bind:
-            payloads = payloads.coalesce(1)  # one bind endpoint total
-
-        def send(rows) -> None:
-            # imported here: worker closures must re-resolve submodules
-            from bento_spark.streaming.zeromq import ZmqSocket, parse_zmq_url
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:
-                        sock = ZmqSocket(socket_type)
-                        if bind:
-                            sock.bind(*parse_zmq_url(urls[0]))
-                        else:
-                            for u in urls:
-                                sock.connect(*parse_zmq_url(u))
-                        if socket_type == "PUB":
-                            sock.wait_for_subscription()
-                    body = row.v.encode("utf-8")
-                    if socket_type == "PUB":
-                        sock.send([row.t.encode("utf-8"), body])
-                    else:
-                        sock.send([body])
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        payloads.foreachPartition(send)
+            payloads = payloads.coalesce(1)
+        write_partitions(payloads, functools.partial(_open_socket, socket_type, urls, bind),
+                         send)
 
     return write_batch

@@ -142,7 +142,7 @@ def test_parse_sftp_address():
 def test_auth_and_host_signature(server):
     c = SftpClient("127.0.0.1", server.port, "bento", "hunter2")
     assert c.version == 3
-    c.close_session()
+    c.close()
     with pytest.raises(ConnectionError, match="authentication failed"):
         SftpClient("127.0.0.1", server.port, "bento", "wrong")
     with pytest.raises(ConnectionError, match="authentication failed"):
@@ -174,7 +174,7 @@ def test_publickey_auth(host_key, tmp_path):
         c = SftpClient("127.0.0.1", srv.port, "keyuser", "",
                        private_key_pem=user_pem)
         assert c.read_file("f.txt") == b"keyed"
-        c.close_session()
+        c.close()
         # an unauthorized key is rejected
         with pytest.raises(ConnectionError, match="authentication failed"):
             SftpClient("127.0.0.1", srv.port, "keyuser", "",
@@ -205,7 +205,7 @@ def test_file_operations(server):
         with pytest.raises(SftpStatusError):
             c.read_file("../../../etc/hostname")
     finally:
-        c.close_session()
+        c.close()
 
 
 def test_spooler_one_pass_and_delete(server, tmp_path):
