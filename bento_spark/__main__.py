@@ -117,14 +117,6 @@ def cmd_run(args) -> int:
     try:
         q = p.run_stream(spark, checkpoint=args.checkpoint, available_now=not args.continuous)
         q.awaitTermination(args.timeout or None)
-        # side DLQ queries (window+output.dlq / error_handling reject) run as
-        # separate StreamingQueries with their own checkpoints — wait for them
-        # too so a bounded run exits with the DLQ fully flushed
-        for side in (p._dlq_query, p._eh_dlq_query):
-            if side is not None:
-                side.awaitTermination(args.timeout or None)
-                if args.continuous and side.isActive:
-                    side.stop()
         if args.continuous and q.isActive:
             q.stop()
     finally:

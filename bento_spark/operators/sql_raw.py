@@ -29,7 +29,7 @@ reference pays one query PER MESSAGE; a distributed engine must not):
   action reads the written rows); a micro-batch reads them through one
   shuffle, which Spark reuses for every branch of the plan. A task retry
   runs its statements again (at-least-once, like the output); so does a
-  second streaming query over the same chain (window + output.dlq).
+  window + dlq pipeline, whose one query reads the chain once per branch.
 - output.sql_raw -> bind the micro-batch's argument tuples through ONE
   executemany in ONE transaction (streamed via toLocalIterator — bounded
   driver memory). At-least-once under replay, like the reference's

@@ -18,7 +18,9 @@ output registry
 (plans/outputs.py): `run_stream` builds the stream once, calls the row of
 the one output the `output` map names, and wraps its writer in the map's
 `dlq` (errored rows to the DLQ, on any output), then `input.read_until`,
-then `error_handling: retry`.
+then `error_handling: retry`. Before a window or join the DLQ split comes
+first, and the errored rows join the windowed ones as a tagged union, so a
+pipeline runs as one streaming query.
 
 Config shape (the Bento-shaped subset we support, plus `window` which the
 reference expresses as the system_window buffer):
@@ -55,6 +57,7 @@ reference expresses as the system_window buffer):
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass, field
 from typing import Any
@@ -69,7 +72,7 @@ from bento_spark.plans.inputs import INPUTS, aws_conn, gcs_creds, read_input, se
 from bento_spark.plans.outputs import OUTPUTS, select_output
 from bento_spark.plans.processors import ALIASES, CACHE_BACKENDS, PROCESSORS
 from bento_spark.streaming.checkpoint import local_checkpoint_commits
-from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer
+from bento_spark.streaming.sink import IdempotentParquetSink, dlq_split_writer, tagged_union
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed
 
 _AGG_RE = re.compile(r"^\s*(\w+)\s*\(\s*(.*?)\s*\)\s*$")
@@ -77,7 +80,7 @@ _AGG_RE = re.compile(r"^\s*(\w+)\s*\(\s*(.*?)\s*\)\s*$")
 # Processors that turn each row into exactly one row, leave `error` as it
 # is and take `keep_payload`. A filter on `error` commutes with them, so the
 # window+DLQ path of run_stream runs a trailing run of them after its split
-# on `error`: each query decodes only the rows it keeps. Each member is
+# on `error`: each branch decodes only the rows it keeps. Each member is
 # pinned by a test in tests/test_window_dlq.py.
 _ROW_MAPS_KEEPING_ERROR = frozenset({"audio_features"})
 
@@ -110,15 +113,11 @@ def _parse_agg(src: str) -> Column:
 class Pipeline:
     conf: dict[str, Any]
     _sink: IdempotentParquetSink | None = field(default=None, init=False)
-    _dlq_query: Any = field(default=None, init=False)  # StreamingQuery for window+dlq configs
     _case_sinks: list = field(default_factory=list, init=False)  # switch/fan_out sinks
     _stop_requested: bool = field(default=False, init=False)
     # error_handling reject capture: batch defers the DLQ write to
-    # run_batch/flush time; streaming stashes the errored branch for a side
-    # DLQ query started by run_stream
+    # run_batch/flush time (streaming routes it inside the query)
     _batch_dlq_pending: Any = field(default=None, init=False)
-    _reject_errored: Any = field(default=None, init=False)
-    _eh_dlq_query: Any = field(default=None, init=False)
     _close_output: Any = field(default=None, init=False)  # see close()
 
     def __post_init__(self) -> None:
@@ -457,16 +456,9 @@ class Pipeline:
             # micro-batch (task retries + checkpoint restart), the native
             # analogue of the reference's feedback pipeline (see run_stream's
             # retry wrapper)
-            if strategy == "reject" and "error" in out.columns:
-                if eh.get("dlq"):
-                    # capture BEFORE the filter: run_stream starts a side
-                    # DLQ query over this branch (same dual-query pattern
-                    # as window+output.dlq) — filtering first would mean
-                    # the DLQ sink never sees an errored row
-                    self._reject_errored = (
-                        out.filter(F.col("error").isNotNull()),
-                        str(eh["dlq"]),
-                    )
+            # reject with a dlq keeps the errored rows: run_stream routes
+            # them to the DLQ inside the query
+            if strategy == "reject" and "error" in out.columns and not eh.get("dlq"):
                 return out.filter(F.col("error").isNull())
             return out
         if strategy == "retry":
@@ -627,10 +619,16 @@ class Pipeline:
         return self._apply_window(df)
 
     def run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool = True):
-        """Execute as a StreamingQuery with the exactly-once parquet sink
+        """Execute as one StreamingQuery with the exactly-once parquet sink
         (Iceberg MERGE on a real cluster) and optional DLQ routing."""
-        # Local checkpoints (the main query's and the DLQ side queries',
-        # which sit next to it) commit through rename(2), an atomic replace:
+        for old in (checkpoint.rstrip("/") + "_dlq", checkpoint.rstrip("/") + "_ehdlq"):
+            if os.path.exists(old):
+                raise ValueError(
+                    f"{old} is the checkpoint of a DLQ side query from an earlier build; this "
+                    "build routes errored rows inside the main query and cannot resume it. "
+                    "Drain the pipeline with the previous build, then remove that directory "
+                    f"(a window or join pipeline also needs a fresh {checkpoint})")
+        # A local checkpoint commits through rename(2), an atomic replace:
         # Spark's default FileContext manager forks /usr/bin/readlink for
         # every rename on a host without libhadoop. Other filesystems keep
         # the default, whose rename is the atomic one there.
@@ -640,44 +638,27 @@ class Pipeline:
     def _run_stream(self, spark: SparkSession, checkpoint: str, available_now: bool):
         out = self.conf.get("output") or {}
         name, section = select_output(out)
-        self._reject_errored = None  # re-stashed by the build below
-        dlq_path = out.get("dlq")
-        window_dlq = bool(dlq_path and self.conf.get("window"))
-        if window_dlq:
-            if name != "path":
-                # the window+dlq dual-query path writes the windowed output
-                # through the path output's sink
-                raise ValueError(
-                    "window + dlq requires output.path (the windowed main sink); "
-                    f"a {name} output cannot take the pre-window DLQ split"
-                )
-            df = self._window_dlq_stream(spark, checkpoint, dlq_path, available_now)
-        else:
-            df = self.build_stream(spark)
+        eh = self.conf.get("error_handling") or {}
+        # reject_errored (output_reject_errored.go:19) inside the one query:
+        # errored rows -> the DLQ, the rest -> the output. The query's
+        # checkpoint binds the DLQ sink's markers too.
+        dlq_path = eh.get("dlq") if eh.get("strategy") == "reject" else out.get("dlq")
+        split = bool(dlq_path and (self.conf.get("window") or self.conf.get("join")))
+        df, errored = self._split_stream(spark) if split else (self.build_stream(spark), None)
         df, writer = OUTPUTS[name](self, spark, section, df, checkpoint)
         self._close_output = getattr(writer, "close", None)
-        if dlq_path and not window_dlq and "error" in df.columns:
-            # reject_errored around the output (output_reject_errored.go:19):
-            # errored rows -> DLQ, the rest -> the output. Same query =>
-            # same checkpoint binds the DLQ's markers too
+        if dlq_path and not split and "error" in df.columns:
             writer = dlq_split_writer(writer, IdempotentParquetSink(dlq_path, checkpoint=checkpoint))
         # input.read_until: deliver the batch holding the first row that
         # matches `check`, then stop the query (input_read_until.go:34)
         until = (self.conf.get("input") or {}).get("read_until")
         if until:
             writer = self._wrap_read_until(writer, compile_expr(str(until["check"])))
-        eh = self.conf.get("error_handling") or {}
         if eh.get("strategy") == "retry":
             writer = self._wrap_retry_writer(writer, eh)
-        if self._reject_errored is not None:
-            # streaming error_handling: {strategy: reject, dlq: ...} —
-            # the errored branch stashed by _error_strategy feeds a SIDE
-            # query with its own checkpoint (same dual-query pattern as
-            # window+output.dlq); without this the reject filter silently
-            # drops errored rows that batch mode DLQs
-            errored, eh_dlq_path = self._reject_errored
-            self._eh_dlq_query = self._start_dlq_query(
-                errored, eh_dlq_path, checkpoint.rstrip("/") + "_ehdlq", available_now)
+        if errored is not None:
+            df, writer = tagged_union(df, errored, writer,
+                                      IdempotentParquetSink(dlq_path, checkpoint=checkpoint))
         q = (
             df.writeStream.outputMode(out.get("mode", "append"))
             .option("checkpointLocation", checkpoint)
@@ -700,10 +681,9 @@ class Pipeline:
         return query
 
     def _trigger(self, available_now: bool) -> dict:
-        """Trigger selection shared by the main query and the DLQ
-        side-queries: availableNow in bounded mode; otherwise a
-        processingTime interval — rate_limit.interval (if the pipeline
-        declared one) takes precedence over output.trigger."""
+        """availableNow in bounded mode; otherwise a processingTime
+        interval — rate_limit.interval (if the pipeline declared one) takes
+        precedence over output.trigger."""
         if available_now:
             return {"availableNow": True}
         rl = self.conf.get("_rate_limit") or {}
@@ -715,68 +695,44 @@ class Pipeline:
 
         return {"processingTime": f"{duration_ms(str(ivl))} milliseconds"}
 
-    def _start_dlq_query(self, errored: DataFrame, path: str, checkpoint: str,
-                         available_now: bool):
-        """Start a side query writing `errored` to an exactly-once DLQ sink
-        under its own checkpoint: exactly-once holds independently for it
-        and the main query."""
-        dlq = IdempotentParquetSink(path, checkpoint=checkpoint)
-        return (
-            errored.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(dlq.foreach_batch())
-            .trigger(**self._trigger(available_now))
-            .start()
-        )
-
-    def _window_dlq_stream(self, spark: SparkSession, checkpoint: str, dlq_path: str,
-                           available_now: bool) -> DataFrame:
-        """The windowed stream of a window + output.dlq config, with the DLQ
-        side query over its errored rows started."""
+    def _split_stream(self, spark: SparkSession) -> tuple[DataFrame, DataFrame | None]:
+        """The stream of a config with a DLQ and a window or join, split on
+        `error` before them: (the clean rows, joined and windowed; the
+        errored rows, or None when the chain sets no `error`)."""
         # Errored rows must be routed BEFORE the window agg (the agg
         # output has no per-row error column — reference semantics:
         # reject_errored sits between pipeline and the window-fed
-        # output). Idiomatic Spark: a SECOND streaming query over the
-        # same source feeds the DLQ, each with its own checkpoint —
-        # exactly-once holds independently for both sinks. (A single
-        # query can't window correctly per-micro-batch: a window's rows
-        # may span batches and last-writer-wins MERGE would drop the
-        # earlier partials.)
-        # The two queries share the chain up to its trailing run of
-        # row maps that keep `error` (_split_tail: audio_features in
-        # the shipped clips_window.yaml). The split on `error` comes
-        # there, so the DLQ query decodes only the errored rows and the
-        # main query only the clean ones, instead of each decoding
-        # every clip. DLQ rows come out as if the split were after the
-        # whole chain. The window branch drops `bytes` from the decode
-        # output unless the window or join reads it, so the payload
-        # crosses Arrow once (JVM -> Python) instead of twice.
+        # output), and before a join, so an errored row reaches the DLQ
+        # whether it matches or not. run_stream unions the two branches
+        # into its one query.
+        # The split comes before the chain's trailing run of row maps that
+        # keep `error` (_split_tail: audio_features in the shipped
+        # clips_window.yaml), so the DLQ branch decodes only the errored
+        # rows and the window branch only the clean ones, instead of each
+        # decoding every clip. DLQ rows come out as if the split were after
+        # the whole chain. The window branch drops `bytes` from the decode
+        # output unless the window or join reads it, so the payload crosses
+        # Arrow once (JVM -> Python) instead of twice.
         procs = (self.conf.get("pipeline") or {}).get("processors") or []
         tail = self._split_tail(procs)
         rows = self._error_strategy(
             self._chain(procs[: len(procs) - len(tail)]), self._input(spark, streaming=True)
         )
+        errored = None
         if "error" in rows.columns:
             errored = self._chain(tail)(rows.filter(F.col("error").isNotNull()))
-            self._dlq_query = self._start_dlq_query(
-                errored, dlq_path, checkpoint.rstrip("/") + "_dlq", available_now)
             rows = rows.filter(F.col("error").isNull())
         if tail and not self._window_reads_payload():
             name, opts = next(iter(tail[-1].items()))
             tail = [*tail[:-1], {name: {**(opts or {}), "keep_payload": False}}]
         rows = self._chain(tail)(rows)
         rows = self._apply_join(rows, spark, streaming=True)
-        return self._apply_window(rows)
+        return self._apply_window(rows), errored
 
     def close(self) -> None:
-        """Stop the side DLQ queries run_stream started (window +
-        output.dlq, error_handling reject + dlq) and release what the output
-        holds on the driver: the `close()` its writer carries (the
-        subprocess output's child, the http_server output's server). Call
-        it once the main query has stopped."""
-        for side in (self._dlq_query, self._eh_dlq_query):
-            if side is not None:
-                side.stop()  # returns once the query's stream thread has ended
+        """Release what the output holds on the driver: the `close()` its
+        writer carries (the subprocess output's child, the http_server
+        output's server). Call it once the query has stopped."""
         close, self._close_output = self._close_output, None
         if close is not None:
             close()

@@ -55,7 +55,7 @@ def known_outputs() -> frozenset[str]:
     return frozenset(OUTPUTS) | frozenset(ALIASES)
 
 
-def _lint_output(out: dict, window: bool, issues: list[str]) -> None:
+def _lint_output(out: dict, issues: list[str]) -> None:
     from bento_spark.plans.outputs import MODIFIERS, select_output
 
     # stdout, the reference's default output, is accepted for batch-only
@@ -70,8 +70,6 @@ def _lint_output(out: dict, window: bool, issues: list[str]) -> None:
             select_output(out)
         except ValueError as e:  # names two outputs: the compiler's rule
             issues.append(f"output: {e}")
-    if window and "dlq" in out and "path" not in out:
-        issues.append("output: window + dlq requires output.path (the windowed main sink)")
 
 
 def _lint_duration(path: str, val, issues: list[str]) -> None:
@@ -256,7 +254,7 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
 
     out = conf.get("output") or {}
     if isinstance(out, dict):
-        _lint_output(out, bool(conf.get("window")), issues)
+        _lint_output(out, issues)
         if out.get("trigger") is not None:
             _lint_duration("output.trigger", out["trigger"], issues)
     return issues

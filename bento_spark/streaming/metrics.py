@@ -169,8 +169,8 @@ class _ProgressEvent:
         self.progress = progress
 
 
-def collect_progress(listener: BentoMetricsListener, *queries) -> BentoMetricsListener:
-    """Pull-based alternative to addListener: replay each query's
+def collect_progress(listener: BentoMetricsListener, query) -> BentoMetricsListener:
+    """Pull-based alternative to addListener: replay the query's
     recentProgress through the listener AFTER the run. spark-submit jobs use
     this instead of the py4j callback server — concurrent push callbacks
     from multiple queries can garble the py4j channel ('Received empty
@@ -179,11 +179,8 @@ def collect_progress(listener: BentoMetricsListener, *queries) -> BentoMetricsLi
     callback channel at all. Bounded by numRecentProgressUpdates (default
     100 micro-batches) — plenty for bounded drains; long-lived jobs should
     poll per-interval."""
-    for q in queries:
-        if q is None:
-            continue
-        for p in q.recentProgress:
-            listener.onQueryProgress(_ProgressEvent(p))
+    for p in query.recentProgress:
+        listener.onQueryProgress(_ProgressEvent(p))
     return listener
 
 

@@ -441,14 +441,16 @@ class MongoCache:
             from bento_spark.streaming.mongodb import MongoClient as _C
 
             c, out = None, []
-            for r in part:
-                if c is None:
-                    c = _C(host, port)
-                reply = c.insert(db, coll, [{kf: r.k, vf: r.v}])
-                if reply.get("writeErrors"):
-                    out.append((r.k,))
-            if c is not None:
-                c.close()
+            try:
+                for r in part:
+                    if c is None:
+                        c = _C(host, port)
+                    reply = c.insert(db, coll, [{kf: r.k, vf: r.v}])
+                    if reply.get("writeErrors"):
+                        out.append((r.k,))
+            finally:
+                if c is not None:
+                    c.close()
             return iter(out)
 
         rejected = fresh.rdd.mapPartitions(try_insert).toDF(
@@ -584,22 +586,24 @@ def mongodb_find_one(df: DataFrame, url: str, database: str, collection: str,
         from bento_spark.streaming.mongodb import MongoClient as _C
 
         c = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            found = []
-            for flt in pdf[filter_col]:
-                if c is None:
-                    c = _C(host, port)
-                docs = c.find(database, collection, _json.loads(flt), limit=1)
-                found.append(
-                    _json.dumps(docs[0], default=str) if docs else None
-                )
-            pdf = pdf[cols].copy()
-            pdf[out_col] = found
-            yield pd.DataFrame(pdf)
-        if c is not None:
-            c.close()
+        try:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                found = []
+                for flt in pdf[filter_col]:
+                    if c is None:
+                        c = _C(host, port)
+                    docs = c.find(database, collection, _json.loads(flt), limit=1)
+                    found.append(
+                        _json.dumps(docs[0], default=str) if docs else None
+                    )
+                pdf = pdf[cols].copy()
+                pdf[out_col] = found
+                yield pd.DataFrame(pdf)
+        finally:
+            if c is not None:
+                c.close()
 
     return df.mapInPandas(run, schema=out_schema)
 

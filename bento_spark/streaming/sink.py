@@ -304,6 +304,32 @@ def dlq_split_writer(
     return route_outputs([(F.col(error_col).isNotNull(), dlq), (None, main)])
 
 
+def tagged_union(
+    main: DataFrame,
+    errored: DataFrame,
+    writer: Callable[[DataFrame, int], None],
+    dlq: IdempotentParquetSink,
+) -> tuple[DataFrame, Callable[[DataFrame, int], None]]:
+    """reject_errored for errored rows split off before a window or join:
+    one frame and one foreachBatch writer for the two streams. A row holds
+    its stream's columns in the struct `_main` or `_dlq` (the other is
+    null); `_dlq.*` goes to the DLQ sink and `_main.*` to `writer`."""
+    df = main.select(F.struct("*").alias("_main")).unionByName(
+        errored.select(F.struct("*").alias("_dlq")), allowMissingColumns=True)
+    # The union has the window's (or join's) shuffle partitions plus the
+    # errored branch's scan partitions, and each write runs a task per
+    # partition, half of them empty for that write. Every task deserializes
+    # the whole plan, Python functions included (about 25 ms of CPU each on
+    # a 4-core host), so the errored rows ride in the window's tasks.
+    df = df.coalesce(int(main.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+
+    def unpacked(tag: str, sink: Callable[[DataFrame, int], None]):
+        return lambda batch_df, epoch_id: sink(batch_df.select(f"{tag}.*"), epoch_id)
+
+    return df, route_outputs([(F.col("_dlq").isNotNull(), unpacked("_dlq", dlq)),
+                              (None, unpacked("_main", writer))])
+
+
 def json_body(df: DataFrame, *meta: str | None) -> Column:
     """The row as one JSON document: every column except `meta`, the
     per-row columns (key, topic, group id, path, ...) that the output's

@@ -123,7 +123,12 @@ def subprocess_sink(name: str, args: list[str] | None = None,
     toLocalIterator keeps the batch off the driver heap. An unexpected
     exit logs stderr + the exit code and re-executes the command
     (bounded at max_retries per write so a command that always dies
-    fails the query instead of spinning)."""
+    fails the query instead of spinning).
+
+    Delivery contract: a line is delivered once it is flushed to the
+    child's stdin. Lines the child has not read yet when it dies are lost;
+    the relaunched child gets only the lines written after the death was
+    seen."""
     args = list(args or [])
     state: dict = {"proc": None}
 

@@ -62,17 +62,10 @@ def main() -> int:
     q.awaitTermination(args.timeout or None)
     if args.continuous and q.isActive:
         q.stop()
-        # stop the DLQ side-query too: in continuous mode it runs a
-        # processingTime trigger nobody else terminates, so awaiting it
-        # below would block a SECOND full --timeout
-        if pipe._dlq_query is not None and pipe._dlq_query.isActive:
-            pipe._dlq_query.stop()
-    if pipe._dlq_query is not None:
-        pipe._dlq_query.awaitTermination(args.timeout or None)
     # metrics are PULLED from recentProgress after the run — a push listener
     # over the py4j callback server can garble under concurrent-query
     # callbacks and take the whole job down (see metrics.collect_progress)
-    listener = collect_progress(BentoMetricsListener(), q, pipe._dlq_query)
+    listener = collect_progress(BentoMetricsListener(), q)
 
     import json
 

@@ -198,26 +198,58 @@ output:
     assert a + b == 40 and a > 0 and b > 0
 
 
-def test_window_dlq_requires_path_output(spark, tmp_path):
+def test_window_dlq_takes_any_output(spark, tmp_path):
+    """window + output.dlq on a switch output runs as one query: errored
+    rows reach the DLQ before the window, and each closed window of the
+    clean rows reaches the first case that matches it."""
+    import pandas as pd
+
     src = str(tmp_path / "wd_src")
-    Pipeline.stage_clips(spark, src, 10)
+    Pipeline.stage_clips(spark, src, 300)  # 100 ms apart: two windows close
     p = compile_yaml(
         f"""
 input:
   parquet: {{path: {src}}}
+pipeline:
+  processors:
+    - set_error: {{when: "this.sr_hz == 8000", message: "low sr"}}
 window:
   type: tumbling
   size: 10 seconds
   keys: [codec]
+  lateness: 2 seconds
   aggs: {{n: "count()"}}
 output:
   switch:
-    - {{check: "this.n > 0", path: {tmp_path}/w_out}}
+    - {{check: 'this.codec == "wav"', path: {tmp_path}/w_wav}}
+  default: {tmp_path}/w_rest
   dlq: {tmp_path}/w_dlq
 """
     )
-    with pytest.raises(ValueError, match="window \\+ dlq requires output.path"):
-        p.run_stream(spark, checkpoint=str(tmp_path / "wd_ck"))
+    n_active = len(spark.streams.active)
+    q = p.run_stream(spark, checkpoint=str(tmp_path / "wd_ck"))
+    assert len(spark.streams.active) == n_active + 1
+    assert q.awaitTermination(120) and q.exception() is None
+
+    pdf = spark.read.parquet(src).toPandas()
+    dlq = IdempotentParquetSink(str(tmp_path / "w_dlq")).read(spark).toPandas()
+    assert sorted(dlq["clip_id"]) == sorted(pdf.loc[pdf["sr_hz"] == 8000, "clip_id"])
+    assert (dlq["error"] == "low sr").all()
+
+    watermark = pd.Timestamp(q.lastProgress["eventTime"]["watermark"]).tz_localize(None)
+    clean = pdf[pdf["sr_hz"] != 8000].assign(
+        window_start=pd.to_datetime(pdf["event_ts"]).dt.floor("10s"))
+    want = clean.groupby(["window_start", "codec"]).size().reset_index(name="n")
+    want = want[want["window_start"] + pd.Timedelta(seconds=10) <= watermark]
+    assert len(want) == 6
+    wav, rest = (IdempotentParquetSink(str(tmp_path / d)).read(spark).toPandas()
+                 for d in ("w_wav", "w_rest"))
+    assert set(wav["codec"]) == {"wav"} and "wav" not in set(rest["codec"])
+    got = pd.concat([wav, rest])[["window_start", "codec", "n"]]
+    got["window_start"] = pd.to_datetime(got["window_start"])
+    key = ["window_start", "codec"]
+    pd.testing.assert_frame_equal(got.sort_values(key).reset_index(drop=True),
+                                  want.sort_values(key).reset_index(drop=True), check_dtype=False)
 
 
 @pytest.mark.parametrize("output", [

@@ -78,7 +78,7 @@ def test_strategy_reject_build_is_side_effect_free(spark, tmp_path):
 def test_stream_strategy_reject_dlqs(spark, tmp_path):
     """Streaming twin of test_strategy_reject_drops_and_dlqs (ADVICE r03
     medium): error_handling reject + dlq on a streaming pipeline must
-    capture errored rows via the side DLQ query, not silently drop them."""
+    capture errored rows inside its one query, not silently drop them."""
     from bento_spark.streaming.sink import IdempotentParquetSink
 
     src = _stage(spark, tmp_path, "sin_rej")
@@ -94,10 +94,10 @@ output:
   path: {tmp_path}/sout_rej
 """
     p = compile_yaml(conf)
+    n_active = len(spark.streams.active)
     q = p.run_stream(spark, checkpoint=str(tmp_path / "ck_rej"))
-    q.awaitTermination(120)
-    assert p._eh_dlq_query is not None
-    p._eh_dlq_query.awaitTermination(120)
+    assert len(spark.streams.active) == n_active + 1
+    assert q.awaitTermination(120) and q.exception() is None
     main = IdempotentParquetSink(str(tmp_path / "sout_rej")).read(spark)
     assert sorted(r.id for r in main.collect()) == [1, 3]
     dlq_rows = IdempotentParquetSink(str(dlq)).read(spark)

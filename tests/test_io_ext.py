@@ -151,6 +151,12 @@ def test_subprocess_sink_relaunches_dead_child(spark, tmp_path):
     ])
     df1 = spark.range(2).select(F.col("id").cast("int").alias("i"))
     writer(df1, 0)
+    # a line is delivered once flushed to stdin; one the child has not read
+    # yet dies with it, so wait until the child has written rows 0 and 1
+    deadline = time.monotonic() + 30
+    while not (out_file.exists() and out_file.read_text().count("\n") == 2):
+        assert time.monotonic() < deadline, "the child did not write the first batch"
+        time.sleep(0.01)
     # kill the child between batches: the writer must log exit + relaunch
     proc = writer.state["proc"]
     proc.kill()

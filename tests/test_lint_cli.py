@@ -90,8 +90,8 @@ def test_lint_reports_an_input_map_naming_two_inputs():
 
 def test_lint_reads_the_output_registry():
     """An output key that is neither an output nor a modifier, an output map
-    naming two outputs (the compiler's rule, zmq4n counting as zmq4) and
-    window + dlq without path are issues."""
+    naming two outputs (the compiler's rule, zmq4n counting as zmq4) are
+    issues; window + dlq takes any output."""
     assert {"path", "fallback", "kafka_franz", "zmq4n"} <= known_outputs()
     assert lint_yaml("output:\n  pth: /x\n") == ["output: unknown key 'pth'"]
     issues = lint_yaml("output:\n  path: /x\n  kafka: {addresses: [a], topic: t}\n")
@@ -104,8 +104,7 @@ def test_lint_reads_the_output_registry():
     assert lint_yaml("output:\n  path: /o\n  default: /b\n") == [
         "output: unknown key 'default'"]
     window = "window: {type: tumbling, size: 10 seconds}\n"
-    issues = lint_yaml(window + "output:\n  fallback: [/a, /b]\n  dlq: /d\n")
-    assert len(issues) == 1 and "window + dlq requires output.path" in issues[0]
+    assert lint_yaml(window + "output:\n  fallback: [/a, /b]\n  dlq: /d\n") == []
     assert lint_yaml(window + "output:\n  path: /o\n  keys: [k]\n  dlq: /d\n") == []
 
 

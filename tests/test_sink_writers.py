@@ -1,7 +1,8 @@
 """Message outputs and cache writers on streaming/sink.py's partition
 writer, run over one partition in this process (so the client classes can
 be watched): a failed command still closes the connection and raises an
-error naming the command, and the amqp/amqp1/redis writers send a large
+error naming the command, in the mongodb output, cache `add` and find-one
+processor too, and the amqp/amqp1/redis writers send a large
 partition in 500-row chunks, in order, instead of holding it whole.
 The elasticsearch output's pooled connection takes 9200 only for a
 plain-http URL without a port."""
@@ -12,8 +13,10 @@ import json
 import socket
 import threading
 
+import pandas as pd
 import pytest
 from pyspark.sql import Row
+from pyspark.sql.types import StringType, StructField, StructType
 
 from bento_spark.streaming import amqp, amqp1, elasticsearch, mongodb, redis
 from bento_spark.streaming.sink import KeepAlive
@@ -105,6 +108,54 @@ def test_mongodb_writer_closes_its_socket_when_a_command_fails():
     assert srv.closed.wait(5), "the writer left its connection open"
     assert "scripted rejection" in str(err.value)
     assert srv.commands == ["update"]
+
+
+class Partition:
+    """A frame whose rdd.mapPartitions runs here over one partition."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.rdd = self
+
+    def localCheckpoint(self, eager=True):
+        return self
+
+    def mapPartitions(self, f):
+        return list(f(iter(self.rows)))
+
+
+def test_mongodb_cache_add_closes_its_socket_when_insert_fails(monkeypatch):
+    srv = ScriptedMongo(reject="insert")
+    cache = mongodb.MongoCache(None, f"mongodb://127.0.0.1:{srv.port}")
+    monkeypatch.setattr(mongodb.MongoCache, "_rows",
+                        lambda self, df: Partition([Row(k="a", v="1"), Row(k="b", v="2")]))
+    with pytest.raises(ConnectionError, match="mongodb insert failed") as err:
+        cache.add(None)
+    assert srv.closed.wait(5), "add left its connection open"
+    assert "scripted rejection" in str(err.value)
+    assert srv.commands == ["insert"]
+
+
+class Pandas:
+    """A frame whose mapInPandas runs here over one pandas batch."""
+
+    def __init__(self, pdf):
+        self.pdf = pdf
+        self.columns = list(pdf.columns)
+        self.schema = StructType([StructField(c, StringType()) for c in self.columns])
+
+    def mapInPandas(self, f, schema):
+        return list(f(iter([self.pdf])))
+
+
+def test_mongodb_find_one_closes_its_socket_when_find_fails():
+    srv = ScriptedMongo(reject="find")
+    df = Pandas(pd.DataFrame({"q": ['{"k": "x"}', '{"k": "y"}']}))
+    with pytest.raises(ConnectionError, match="mongodb find failed") as err:
+        mongodb.mongodb_find_one(df, f"mongodb://127.0.0.1:{srv.port}", "db", "c", "q")
+    assert srv.closed.wait(5), "find-one left its connection open"
+    assert "scripted rejection" in str(err.value)
+    assert srv.commands == ["find"]
 
 
 # --------------------------------------------------------------------------

@@ -311,10 +311,9 @@ output:
         mgr.stop_all()
 
 
-def test_delete_stops_the_side_dlq_queries(spark, tmp_path):
-    """The side DLQ queries of a stream (window + output.dlq, and
-    error_handling reject + dlq) live as long as the stream: delete stops
-    them with the main query."""
+def test_delete_stops_a_window_dlq_stream(spark, tmp_path):
+    """A stream with window + output.dlq and error_handling reject + dlq
+    runs as one query, which delete stops."""
     from bento_spark.plans.compiler import Pipeline
 
     src = tmp_path / "clips"
@@ -338,7 +337,7 @@ output:
     mgr = StreamManager(spark, str(tmp_path / "cks"))
     try:
         mgr.create("clips", conf)
-        assert len(spark.streams.active) == n_active_before + 3
+        assert len(spark.streams.active) == n_active_before + 1
         mgr.delete("clips")
         assert len(spark.streams.active) == n_active_before
     finally:

@@ -1,5 +1,6 @@
-"""The window+DLQ path of run_stream: the split on `error` runs before the
-trailing payload UDFs, so each query decodes only the rows it keeps.
+"""The window+DLQ path of run_stream: one query whose two branches split on
+`error` before the trailing payload UDFs, so each branch decodes only the
+rows it keeps.
 
 Driven through the shipped config/examples/clips_window.yaml on generated
 clips (every 4th clip has sr_hz 8000 and goes to the DLQ)."""
@@ -7,11 +8,13 @@ clips (every 4th clip has sr_hz 8000 and goes to the DLQ)."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 import threading
 
 import pandas as pd
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from bento_spark.audio.udfs import audio_feature_frame, with_audio_features
@@ -85,9 +88,10 @@ def _expected_windows(spark, src: str, watermark: pd.Timestamp) -> pd.DataFrame:
 
 def test_shipped_clips_window_decodes_each_clip_once(spark, clips, tmp_path):
     p = _shipped(clips, tmp_path)
+    n_active = len(spark.streams.active)
     q = p.run_stream(spark, str(tmp_path / "ck"), available_now=True)
-    assert q.awaitTermination(180) and p._dlq_query.awaitTermination(180)
-    assert q.exception() is None and p._dlq_query.exception() is None
+    assert len(spark.streams.active) == n_active + 1
+    assert q.awaitTermination(180) and q.exception() is None
 
     # windows: a batch computation over the sr_hz > 8000 clips, up to the
     # final watermark (later windows stay open in append mode)
@@ -115,15 +119,114 @@ def test_shipped_clips_window_decodes_each_clip_once(spark, clips, tmp_path):
     assert set(got_dlq["clip_id"]) == set(pdf.loc[pdf["sr_hz"] <= 8000, "clip_id"])
     pd.testing.assert_frame_equal(got_dlq, want_dlq)
 
-    # plans: the DLQ filter sits below the decode; the main decode drops bytes
-    dlq_plan = p._dlq_query._jsq.explainInternal(False).splitlines()
-    at = next(i for i, line in enumerate(dlq_plan) if "MapInPandas" in line)
-    assert any("Filter" in line and "8000" in line for line in dlq_plan[at + 1:]), dlq_plan
-    assert not any("Filter" in line for line in dlq_plan[:at]), dlq_plan
-    main_plan = q._jsq.explainInternal(False)
-    decode = next(line for line in main_plan.splitlines() if "MapInPandas" in line)
-    output = decode.rsplit("[", 1)[1]
-    assert "rms#" in output and "bytes#" not in output, decode
+    # plan: the DLQ branch's filter sits below its decode; the window
+    # branch's decode drops bytes
+    tree, node = _first_batch_plan(spark, q)
+    decodes = [i for i, line in enumerate(tree) if "MapInPandas" in line]
+    assert len(decodes) == 2, tree
+    dlq_at, main_at = sorted(decodes, key=lambda i: "bytes#" not in _decode_output(node, tree[i]))
+    assert any("Filter" in line and "8000" in node[_number(line)]
+               for line in _subtree(tree, dlq_at)), tree
+    assert not any("Filter" in line for line in _ancestors(tree, dlq_at)), tree
+    output = _decode_output(node, tree[main_at])
+    assert "rms#" in output and "bytes#" not in output, output
+
+
+def _first_batch_plan(spark, q) -> tuple[list[str], dict[int, str]]:
+    """The physical plan tree of `q`'s first micro-batch and each node's
+    details by number, from the SQL status store. `q`'s own explain shows
+    its last batch: the no-data batch that closes the windows, whose empty
+    input folds the filters away."""
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    want = ["id", "=", q.id, "runId", "=", q.runId, "batch", "=", "0"]
+    plan = next(ex.apply(i).physicalPlanDescription() for i in range(ex.size())
+                if ex.apply(i).description().split() == want)
+    tree, *blocks = plan.split("\n\n")
+    node = {int(m.group(1)): b for b in blocks if (m := re.match(r"\((\d+)\)", b))}
+    return tree.splitlines()[1:], node
+
+
+def _number(line: str) -> int:
+    return int(re.search(r"\((\d+)\)\s*$", line).group(1))
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _subtree(tree: list[str], at: int) -> list[str]:
+    below = []
+    for line in tree[at + 1:]:
+        if _depth(line) <= _depth(tree[at]):
+            break
+        below.append(line)
+    return below
+
+
+def _ancestors(tree: list[str], at: int) -> list[str]:
+    up, depth = [], _depth(tree[at])
+    for line in reversed(tree[:at]):
+        if _depth(line) < depth:
+            up.append(line)
+            depth = _depth(line)
+    return up
+
+
+def _decode_output(node: dict[int, str], line: str) -> str:
+    """The output columns of a MapInPandas node."""
+    return node[_number(line)].rsplit("[", 1)[1]
+
+
+def test_output_failure_after_the_dlq_commit_replays_exactly_once(spark, clips, tmp_path,
+                                                                  monkeypatch):
+    """The window output fails epoch 1 after the DLQ sink of the same query
+    has committed it. A restart on the same checkpoint replays epoch 1: the
+    committed windows and DLQ rows equal those of an uninterrupted run."""
+    one_file = {"input.parquet.max_files_per_trigger": 1}  # epochs 0 and 1 carry data
+    ref = tmp_path / "ref"
+    p = _shipped(clips, ref, **one_file)
+    q = p.run_stream(spark, str(ref / "ck"), available_now=True)
+    assert q.awaitTermination(180) and q.exception() is None
+
+    run = tmp_path / "run"
+    write, dlq_done = IdempotentParquetSink.write_batch, []
+
+    def fail_once(self, batch_df, epoch_id):
+        if self.path == str(run / "out") and epoch_id == 1 and not dlq_done:
+            dlq_done.append(IdempotentParquetSink(str(run / "dlq")).is_committed(1))
+            raise RuntimeError("output down")
+        write(self, batch_df, epoch_id)
+
+    monkeypatch.setattr(IdempotentParquetSink, "write_batch", fail_once)
+    q = _shipped(clips, run, **one_file).run_stream(spark, str(run / "ck"), available_now=True)
+    with pytest.raises(StreamingQueryException, match="output down"):
+        q.awaitTermination(180)
+    assert dlq_done == [True]
+    assert IdempotentParquetSink(str(run / "out")).committed_ids() == [0]
+    q = _shipped(clips, run, **one_file).run_stream(spark, str(run / "ck"), available_now=True)
+    assert q.awaitTermination(180) and q.exception() is None
+
+    for sink, key in (("out", ["window_start", "key", "codec"]), ("dlq", ["clip_id"])):
+        got, want = (IdempotentParquetSink(str(d / sink)).read(spark).toPandas()
+                     .sort_values(key).reset_index(drop=True) for d in (run, ref))
+        assert len(want) > 0 and not want.duplicated(key).any()
+        pd.testing.assert_frame_equal(got, want)
+    assert IdempotentParquetSink(str(run / "out")).committed_ids() == \
+        IdempotentParquetSink(str(ref / "out")).committed_ids()
+
+
+@pytest.mark.parametrize("suffix", ["_dlq", "_ehdlq"])
+def test_refuses_a_checkpoint_with_a_side_query_dir(spark, tmp_path, suffix):
+    """Earlier builds ran the DLQ as a side query whose checkpoint sat next
+    to the main one. run_stream refuses that layout before it starts
+    anything, and names the directory."""
+    old = tmp_path / f"ck{suffix}"
+    old.mkdir()
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="previous build") as err:
+        _shipped("unused", tmp_path).run_stream(spark, str(tmp_path / "ck"), available_now=True)
+    assert str(old) in str(err.value)
+    assert len(spark.streams.active) == n_active and not (tmp_path / "ck").exists()
 
 
 def _checkpoint_managers(q) -> list[str]:
@@ -149,13 +252,12 @@ def test_resumed_run_commits_local_checkpoints_by_rename(spark, clips, tmp_path)
     p = _shipped(clips, tmp_path, **{"error_handling.strategy": "reject",
                                      "error_handling.dlq": str(tmp_path / "ehdlq")})
     q = p.run_stream(spark, ck, available_now=True)
-    queries = [q, p._dlq_query, p._eh_dlq_query]
-    assert all(x is not None for x in queries)
     assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
-    for x in queries:
-        assert x.awaitTermination(180) and x.exception() is None
-        managers = _checkpoint_managers(x)
-        assert len(managers) == 3 and set(managers) == {FILE_SYSTEM_MANAGER}, managers
+    assert q.awaitTermination(180) and q.exception() is None
+    # offset and commit logs, and one log per source: the window and DLQ
+    # branches each read the input
+    managers = _checkpoint_managers(q)
+    assert len(managers) == 2 + 2 and set(managers) == {FILE_SYSTEM_MANAGER}, managers
     rows = p.sink.read(spark).count()
     assert rows > 0
 
@@ -164,9 +266,8 @@ def test_resumed_run_commits_local_checkpoints_by_rename(spark, clips, tmp_path)
     try:
         p = _shipped(clips, tmp_path)
         q = p.run_stream(spark, ck, available_now=True)
-        for x in (q, p._dlq_query):
-            assert x.awaitTermination(180) and x.exception() is None
-            assert set(_checkpoint_managers(x)) == {named}
+        assert q.awaitTermination(180) and q.exception() is None
+        assert set(_checkpoint_managers(q)) == {named}
         assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == named
     finally:
         spark.conf.unset(CHECKPOINT_MANAGER_KEY)
