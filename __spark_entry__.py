@@ -1596,7 +1596,7 @@ def q_dynamodb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_etcd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """etcd watch input end-to-end (etcd/input.go over the from-scratch
     gRPC/HTTP/2 wire layer, streaming/grpc_wire.py + etcd.py): an
-    EtcdWatchSpooler authenticates (Auth/Authenticate token), opens a
+    etcd_watch_bridge authenticates (Auth/Authenticate token), opens a
     prefix watch on `nations/`, then nation rows land as PUT operations
     against the in-process MiniEtcdServer; the watcher receives every
     event over the real HPACK/h2 stream and spools the flattened
@@ -1606,13 +1606,13 @@ def q_etcd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
-    from bento_spark.streaming.etcd import EtcdWatchSpooler, MiniEtcdServer
+    from bento_spark.streaming.etcd import MiniEtcdServer, etcd_watch_bridge
     from bento_spark.streaming.spool import entries
 
     srv = MiniEtcdServer(users={"root": "pw"}).start()
     spool = tempfile.mkdtemp(prefix="etcd_spool_")
     try:
-        sp = EtcdWatchSpooler(
+        sp = etcd_watch_bridge(
             endpoints=[srv.endpoint], key="nations/", spool_dir=spool,
             with_prefix=True, username="root", password="pw",
             auth_enabled=True,
@@ -1652,7 +1652,7 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gcp_spanner_cdc input end-to-end (gcp/input_spanner_cdc.go over the
     REST v1 PartialResultSet streaming client, streaming/spanner.py):
     nation rows land as INSERT mods across two change-stream partitions
-    announced by the root query; the SpannerCdcSpooler walks the
+    announced by the root query; the spanner_cdc_bridge walks the
     partition tree over real chunked-JSON streams (incl. a chunkedValue
     split) and spools one message per mod. Seeding is driver-side
     control-plane (25 rows) — bulk data rides parquet/Iceberg."""
@@ -1661,9 +1661,9 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bento_spark.streaming.spanner import (
         MiniSpannerServer,
-        SpannerCdcSpooler,
         child_partitions_value,
         data_change_value,
+        spanner_cdc_bridge,
     )
     from bento_spark.streaming.spool import entries
 
@@ -1683,7 +1683,7 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     [({"nk": nk}, {"name": name, "score": rk * 10}, None)],
                     "2026-01-01T00:00:01Z", seq=f"{nk:08d}",
                     txn=f"txn-{nk}"))
-        sp = SpannerCdcSpooler(
+        sp = spanner_cdc_bridge(
             dsn="projects/p/instances/i/databases/tpch",
             stream_name="nation_stream", spool_dir=spool,
             start_time="2026-01-01T00:00:00Z", endpoint=srv.endpoint,
@@ -1760,10 +1760,10 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/s3.py): nations write one object each through the output
     writer (interpolated object path + body rendered JVM-side, executors
     PutObject), then the bucket listing is consumed back through the
-    S3Spooler (the reference's plain-listing mode: one pass, then stop)
+    s3_bridge (the reference's plain-listing mode: one pass, then stop)
     and decoded from the spool. The in-process signature-VERIFYING
     MiniS3Server stands in for S3."""
-    from bento_spark.streaming.s3 import MiniS3Server, S3Spooler, s3_sink
+    from bento_spark.streaming.s3 import MiniS3Server, s3_bridge, s3_sink
     from bento_spark.streaming.spool import entries
 
     srv = MiniS3Server().start()
@@ -1782,7 +1782,7 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 path_col="_s3_path", value_col="body")(df, 0)
         spool = _scratch_dir(
             f"s3_spool_{os.path.basename(sf_dir.rstrip('/'))}", fresh=True)
-        sp = S3Spooler(
+        sp = s3_bridge(
             endpoint=srv.endpoint, bucket="bento",
             access_key=srv.access_key, secret_key=srv.secret_key,
             spool_dir=spool, prefix="nations/",
@@ -1811,11 +1811,11 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the public WebHDFS REST API, streaming/hdfs.py): nations write
     one file each through the output writer (two-step CREATE against the
     namenode's 307 datanode redirect, executors hold the clients), then
-    the directory listing is consumed back through the HdfsSpooler (one
+    the directory listing is consumed back through the hdfs_bridge (one
     pass, then stop — the reference's contract) and decoded from the
     spool. The in-process MiniWebHdfsServer enforces user.name auth and
     the redirect protocol."""
-    from bento_spark.streaming.hdfs import HdfsSpooler, MiniWebHdfsServer, hdfs_sink
+    from bento_spark.streaming.hdfs import MiniWebHdfsServer, hdfs_bridge, hdfs_sink
     from bento_spark.streaming.spool import entries
 
     srv = MiniWebHdfsServer().start()
@@ -1834,7 +1834,7 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         hdfs_sink(srv.endpoint, user="bento", value_col="body")(df, 0)
         spool = _scratch_dir(
             f"hdfs_spool_{os.path.basename(sf_dir.rstrip('/'))}", fresh=True)
-        sp = HdfsSpooler(hosts=srv.endpoint, user="bento",
+        sp = hdfs_bridge(hosts=srv.endpoint, user="bento",
                          directory="/data/nations", spool_dir=spool).start()
         try:
             sp.wait_finished(60)
@@ -1865,8 +1865,8 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from bento_spark.streaming.nats import (
-        JetStreamSpooler,
         MiniNatsServer,
+        jetstream_bridge,
         nats_jetstream_sink,
     )
     from bento_spark.streaming.spool import entries
@@ -1888,7 +1888,7 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                             value_col="body")(df, 0)
         spool = _scratch_dir(
             f"js_spool_{os.path.basename(sf_dir.rstrip('/'))}", fresh=True)
-        sp = JetStreamSpooler(host=srv.host, port=srv.port, stream="NATIONS",
+        sp = jetstream_bridge(host=srv.host, port=srv.port, stream="NATIONS",
                               durable="oracle", spool_dir=spool).start()
         try:
             total = srv._js_streams["NATIONS"]["seq"]

@@ -111,20 +111,13 @@ def cmd_run(args) -> int:
             print("--stage-clips needs input.parquet.path", file=sys.stderr)
             return 1
         p.stage_clips(spark, inp["path"], args.stage_clips)
-    # a spool-bridge input (http_server, subprocess, mqtt, ...) gets its
-    # listener/subscriber for the length of the run
-    bridge = p.start_bridge() if p.bridged else None
+    from bento_spark.streaming.bridge import BridgeFailed
+
     try:
-        q = p.run_stream(spark, checkpoint=args.checkpoint, available_now=not args.continuous)
-        q.awaitTermination(args.timeout or None)
-        if args.continuous and q.isActive:
-            q.stop()
-    finally:
-        if bridge is not None:
-            bridge.stop()
-        # the output's driver-side resources (a subprocess output's child,
-        # an http_server output's server)
-        p.close()
+        p.run(spark, args.checkpoint, continuous=args.continuous, timeout=args.timeout)
+    except BridgeFailed as e:
+        print(e, file=sys.stderr)
+        return 1
     return 0
 
 

@@ -737,6 +737,40 @@ class Pipeline:
         if close is not None:
             close()
 
+    def run(self, spark: SparkSession, checkpoint: str, continuous: bool = False,
+            timeout: float = 0):
+        """Run the pipeline as `python -m bento_spark run` and
+        jobs/run_pipeline.py do: start the input's bridge (a spool-bridge
+        input), then the query, and wait for the query in steps of at most
+        1 s, for at most `timeout` seconds (0: until it ends). A continuous
+        query still running then is stopped. A bridge that fails stops the
+        query and raises `BridgeFailed("input <name>: <cause>")`. The
+        bridge and what the output holds on the driver are released
+        whatever happens. Returns the query."""
+        import time
+
+        from bento_spark.streaming.bridge import BridgeFailed
+
+        name, _ = select_input(self.conf.get("input") or {})
+        bridge = self.start_bridge() if self.bridged else None
+        try:
+            q = self.run_stream(spark, checkpoint=checkpoint, available_now=not continuous)
+            deadline = time.monotonic() + timeout if timeout else None
+            while True:
+                if bridge is not None and bridge.state == "failed":
+                    q.stop()
+                    raise BridgeFailed(f"input {name}: {bridge.cause}")
+                step = 1.0 if deadline is None else min(1.0, deadline - time.monotonic())
+                if step <= 0 or q.awaitTermination(step):
+                    break
+            if continuous and q.isActive:
+                q.stop()
+            return q
+        finally:
+            if bridge is not None:
+                bridge.stop()
+            self.close()
+
     def _wrap_retry_writer(self, inner, eh: dict):
         """Streaming `error_handling: {strategy: retry}` — the reference's
         feedback pipeline (bundle/strict/pipeline.go) re-feeds failed

@@ -10,9 +10,13 @@ internal/bundle/inputs.go) and its lint and docs read that registry. Here
 - `start`: for a spool-bridge input, `(section) -> started handle`. The
   bridge is the driver-side listener, subscriber or poller that writes each
   message as one file under `spool_dir` (streaming/spool.py: the format,
-  and why a push source is a bridge). `Pipeline.start_bridge()` starts it;
-  the caller owns `.stop()`. A bridge's reader is `spool.read_spool` with
-  the row's metadata DDL, so reading one imports no connector module.
+  and why a push source is a bridge). A client-side bridge is a
+  `streaming.bridge.Bridge` (its connector's `<name>_bridge` function
+  makes it), which owns the thread, the reconnects and the ack-after-put
+  rule; the two listeners (`HttpSpoolServer`, `TcpSpoolServer`) keep their
+  own servers. `Pipeline.start_bridge()` starts it; the caller owns
+  `.stop()`. A bridge's reader is `spool.read_spool` with the row's
+  metadata DDL, so reading one imports no connector module.
 
 Connector modules are named as strings and imported when a row is used, so
 importing the compiler loads none of them. `Pipeline._input` (via
@@ -79,24 +83,25 @@ class _Spool:
 
 @dataclass(frozen=True)
 class _Bridge:
-    """Starter of a spool bridge: `<module>.<spooler>(spool_dir=...,
+    """Starter of a spool bridge: `<module>.<factory>(spool_dir=...,
     **fields(section)).start()`. `fields` maps the section's keys onto the
-    spooler's arguments: it is the component's config spec."""
+    factory's arguments: it is the component's config spec."""
 
     module: str
-    spooler: str
+    factory: str
     fields: Callable[[dict], dict]
 
     def __call__(self, o: dict):
-        cls = _resolve(self.module, self.spooler)
-        return cls(spool_dir=o["spool_dir"], **self.fields(o)).start()
+        make = _resolve(self.module, self.factory)
+        return make(spool_dir=o["spool_dir"], **self.fields(o)).start()
 
 
-def _bridge(module: str, spooler: str, fields, meta: str = "", extra=None,
+def _bridge(module: str, factory: str, fields, meta: str = "", extra=None,
             post: str | None = None) -> Input:
-    """Row of a streaming-only spool-bridge input: `module.spooler` writes
-    the spool, whose header holds the columns of the DDL `meta`."""
-    return Input("streaming", _Spool(meta, extra, post), _Bridge(module, spooler, fields))
+    """Row of a streaming-only spool-bridge input: `module.factory` makes
+    the bridge that writes the spool, whose header holds the columns of
+    the DDL `meta`."""
+    return Input("streaming", _Spool(meta, extra, post), _Bridge(module, factory, fields))
 
 
 # ------------------------------------------ connection fields (inputs+outputs)
@@ -491,7 +496,7 @@ def _sequence(spark, o, streaming):
 
 
 # ------------------------------------------------------ bridge field specs
-# Each maps an input section onto its spooler's arguments (spool_dir is
+# Each maps an input section onto its bridge factory's arguments (spool_dir is
 # added by _Bridge); the fields follow the reference input named.
 def _http_server(o):  # input_http_server.go
     return {**_listen_addr(o), "path": o.get("path", "/post"),
@@ -839,80 +844,80 @@ INPUTS: dict[str, Input] = {
         # replies by
         extra=lambda o: {"lines": not o.get("whole_body", True),
                          "meta_ddl": "request_id string" if o.get("sync") else ""}),
-    "http_client": _bridge("http_server", "HttpPollSpooler", _http_client,
+    "http_client": _bridge("http_server", "http_poll_bridge", _http_client,
                            extra=lambda o: {"lines": not o.get("whole_body", True)}),
     "socket_server": _bridge("http_server", "TcpSpoolServer", _listen_addr,
                              extra=lambda o: {"lines": bool(o.get("lines", True))}),
-    "websocket": _bridge("http_server", "WebSocketSpooler", _websocket),
-    "subprocess": _bridge("subprocess_io", "SubprocessSpooler", _subprocess),
-    "mqtt": _bridge("mqtt", "MqttSpooler", _mqtt, "mqtt_topic string"),
+    "websocket": _bridge("http_server", "websocket_bridge", _websocket),
+    "subprocess": _bridge("subprocess_io", "subprocess_bridge", _subprocess),
+    "mqtt": _bridge("mqtt", "mqtt_bridge", _mqtt, "mqtt_topic string"),
     "kafka_franz": _bridge(
-        "kafka_wire", "KafkaSpooler", _kafka_franz,
+        "kafka_wire", "kafka_bridge", _kafka_franz,
         "kafka_topic string, kafka_partition int, kafka_offset bigint, kafka_ts bigint, "
         "kafka_key string, kafka_tombstone boolean", post="kafka_wire.kafka_columns"),
-    "nats": _bridge("nats", "NatsSpooler", _nats,
+    "nats": _bridge("nats", "nats_bridge", _nats,
                     "nats_subject string, nats_reply_subject string"),
-    "nats_jetstream": _bridge("nats", "JetStreamSpooler", _nats_jetstream,
+    "nats_jetstream": _bridge("nats", "jetstream_bridge", _nats_jetstream,
                               "nats_subject string, nats_sequence bigint"),
-    "nats_object_store": _bridge("nats", "NatsOsSpooler", _nats_object_store,
+    "nats_object_store": _bridge("nats", "nats_os_bridge", _nats_object_store,
                                  "nats_object_name string, nats_object_size bigint"),
     "pulsar": _bridge(
-        "pulsar", "PulsarSpooler", _pulsar,
+        "pulsar", "pulsar_bridge", _pulsar,
         "pulsar_topic string, pulsar_message_id string, pulsar_key string, "
         "pulsar_ordering_key string, pulsar_publish_time_unix bigint, "
         "pulsar_redelivery_count int, pulsar_event_time_unix bigint, "
         "pulsar_producer_name string, pulsar_properties map<string,string>"),
     "aws_kinesis": _bridge(
-        "kinesis", "KinesisSpooler", _aws_kinesis,
+        "kinesis", "kinesis_bridge", _aws_kinesis,
         "kinesis_stream string, kinesis_shard string, kinesis_sequence string, "
         "kinesis_partition_key string"),
-    "aws_sqs": _bridge("sqs", "SqsSpooler", _aws_sqs, "sqs_message_id string"),
-    "aws_s3": _bridge("s3", "S3Spooler", _aws_s3,
+    "aws_sqs": _bridge("sqs", "sqs_bridge", _aws_sqs, "sqs_message_id string"),
+    "aws_s3": _bridge("s3", "s3_bridge", _aws_s3,
                       "s3_bucket string, s3_key string, s3_last_modified_unix bigint"),
     "gcp_spanner_cdc": _bridge(
-        "spanner", "SpannerCdcSpooler", _gcp_spanner_cdc,
+        "spanner", "spanner_cdc_bridge", _gcp_spanner_cdc,
         "gcp_spanner_commit_timestamp string, gcp_spanner_cdc_mod_type string, "
         "gcp_spanner_table_name string, gcp_spanner_cdc_server_transaction_id string, "
         "gcp_spanner_cdc_record_sequence string"),
-    "gcp_pubsub": _bridge("pubsub", "PubSubSpooler", _gcp_pubsub, "pubsub_message_id string"),
-    "gcp_bigquery_select": _bridge("bigquery", "BigQuerySpooler", _gcp_bigquery_select),
+    "gcp_pubsub": _bridge("pubsub", "pubsub_bridge", _gcp_pubsub, "pubsub_message_id string"),
+    "gcp_bigquery_select": _bridge("bigquery", "bigquery_bridge", _gcp_bigquery_select),
     "gcp_cloud_storage": _bridge(
-        "gcs", "GcsSpooler", _gcp_cloud_storage,
+        "gcs", "gcs_bridge", _gcp_cloud_storage,
         "gcs_key string, gcs_bucket string, gcs_last_modified string, "
         "gcs_content_type string, gcs_content_encoding string", post="gcs.gcs_columns"),
-    "azure_queue_storage": _bridge("azure_queue", "AzureQueueSpooler", _azure_queue_storage,
+    "azure_queue_storage": _bridge("azure_queue", "azure_queue_bridge", _azure_queue_storage,
                                    "queue_storage_message_id string"),
-    "azure_table_storage": _bridge("azure_table", "AzureTableSpooler", _azure_table_storage,
+    "azure_table_storage": _bridge("azure_table", "azure_table_bridge", _azure_table_storage,
                                    "table_storage_name string, row_num bigint"),
-    "azure_blob_storage": _bridge("azure_blob", "AzureBlobSpooler", _azure_blob_storage,
+    "azure_blob_storage": _bridge("azure_blob", "azure_blob_bridge", _azure_blob_storage,
                                   "blob_storage_container string, blob_storage_key string"),
     "azure_service_bus_queue": _bridge(
-        "azure_servicebus", "ServiceBusSpooler", _azure_service_bus_queue,
+        "azure_servicebus", "service_bus_bridge", _azure_service_bus_queue,
         "service_bus_message_id string, service_bus_sequence_number bigint, "
         "service_bus_enqueued_time bigint, service_bus_delivery_count int, "
         "service_bus_content_type string, service_bus_correlation_id string"),
-    "azure_cosmosdb": _bridge("cosmosdb", "CosmosSpooler", _azure_cosmosdb,
+    "azure_cosmosdb": _bridge("cosmosdb", "cosmos_bridge", _azure_cosmosdb,
                               "cosmosdb_database string, cosmosdb_container string, "
                               "row_num bigint"),
-    "cypher": _bridge("cypher", "CypherSpooler", _cypher),
-    "cockroachdb_changefeed": _bridge("cockroachdb", "ChangefeedSpooler",
+    "cypher": _bridge("cypher", "cypher_bridge", _cypher),
+    "cockroachdb_changefeed": _bridge("cockroachdb", "changefeed_bridge",
                                       _cockroachdb_changefeed),
-    "etcd": _bridge("etcd", "EtcdWatchSpooler", _etcd),
-    "discord": _bridge("discord", "DiscordSpooler", _discord),
-    "sftp": _bridge("sftp", "SftpSpooler", _sftp, "sftp_path string"),
-    "amqp_1": _bridge("amqp1", "Amqp1Spooler", _amqp_1, "amqp_delivery_id bigint"),
-    "amqp_0_9": _bridge("amqp", "AmqpSpooler", _amqp_0_9, "amqp_key string"),
-    "hdfs": _bridge("hdfs", "HdfsSpooler", _hdfs, "hdfs_path string, hdfs_modified_ms bigint"),
-    "nanomsg": _bridge("nanomsg", "NanomsgSpooler", _nanomsg),
-    "zmq4": _bridge("zeromq", "ZmqSpooler", _zmq4),
-    "beanstalkd": _bridge("beanstalkd", "BeanstalkdSpooler", _beanstalkd,
+    "etcd": _bridge("etcd", "etcd_watch_bridge", _etcd),
+    "discord": _bridge("discord", "discord_bridge", _discord),
+    "sftp": _bridge("sftp", "sftp_bridge", _sftp, "sftp_path string"),
+    "amqp_1": _bridge("amqp1", "amqp1_bridge", _amqp_1, "amqp_delivery_id bigint"),
+    "amqp_0_9": _bridge("amqp", "amqp_bridge", _amqp_0_9, "amqp_key string"),
+    "hdfs": _bridge("hdfs", "hdfs_bridge", _hdfs, "hdfs_path string, hdfs_modified_ms bigint"),
+    "nanomsg": _bridge("nanomsg", "nanomsg_bridge", _nanomsg),
+    "zmq4": _bridge("zeromq", "zmq_bridge", _zmq4),
+    "beanstalkd": _bridge("beanstalkd", "beanstalkd_bridge", _beanstalkd,
                           "beanstalkd_id bigint"),
-    "nsq": _bridge("nsq", "NsqSpooler", _nsq,
+    "nsq": _bridge("nsq", "nsq_bridge", _nsq,
                    "nsq_id string, nsq_attempts int, nsq_timestamp bigint"),
-    "redis_list": _bridge("redis", "RedisListSpooler", _redis_list, "redis_key string"),
-    "redis_pubsub": _bridge("redis", "RedisPubSubSpooler", _redis_pubsub,
+    "redis_list": _bridge("redis", "redis_list_bridge", _redis_list, "redis_key string"),
+    "redis_pubsub": _bridge("redis", "redis_pubsub_bridge", _redis_pubsub,
                             "redis_channel string"),
-    "redis_streams": _bridge("redis", "RedisStreamsSpooler", _redis_streams,
+    "redis_streams": _bridge("redis", "redis_streams_bridge", _redis_streams,
                              "redis_stream string, redis_id string, "
                              "redis_meta map<string,string>"),
 }

@@ -12,7 +12,7 @@ from the published spec, which makes the connector REAL and
 e2e-testable in-process instead of availability-gated.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> AmqpSpooler consumes from a queue (declaring/binding it
+- input  -> amqp_bridge consumes from a queue (declaring/binding it
   first when configured) and persists each delivery as a durable spool
   file; the stream is the replayable file source, so offset log +
   exactly-once downstream hold. basic.ack fires only AFTER the spool
@@ -41,9 +41,9 @@ import socket
 import struct
 import threading
 import uuid
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -111,22 +111,12 @@ class _Reader:
         self.pos += 4 + struct.unpack_from(">I", self.buf, self.pos)[0]
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        got = sock.recv(n - len(buf))
-        if not got:
-            raise ConnectionError("amqp peer closed the connection")
-        buf += got
-    return buf
-
-
-def read_frame(sock: socket.socket) -> tuple[int, int, bytes]:
+def read_frame(reader: SocketReader) -> tuple[int, int, bytes]:
     """-> (frame_type, channel, payload); validates the frame-end octet."""
-    head = _read_exact(sock, 7)
+    head = reader.exact(7)
     ftype, channel, size = struct.unpack(">BHI", head)
-    payload = _read_exact(sock, size)
-    if _read_exact(sock, 1)[0] != FRAME_END:
+    payload = reader.exact(size)
+    if reader.exact(1)[0] != FRAME_END:
         raise ConnectionError("amqp frame missing end octet")
     return ftype, channel, payload
 
@@ -178,6 +168,7 @@ class AmqpClient:
                  timeout: float = 30.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
         self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self.reader = SocketReader(self.sock, "amqp")
         self.sock.sendall(PROTO_HEADER)
         cls, mid, _ = self._expect_method()
         if (cls, mid) != (10, 10):
@@ -208,7 +199,7 @@ class AmqpClient:
 
     def _expect_method(self) -> tuple[int, int, bytes]:
         while True:
-            ftype, _ch, payload = read_frame(self.sock)
+            ftype, _ch, payload = read_frame(self.reader)
             if ftype == FRAME_HEARTBEAT:
                 continue
             if ftype != FRAME_METHOD:
@@ -280,13 +271,13 @@ class AmqpClient:
         delivery_tag = r.longlong()
         r.octet()  # redelivered bit
         exchange, key = r.sstr(), r.sstr()
-        ftype, _ch, payload = read_frame(self.sock)
+        ftype, _ch, payload = read_frame(self.reader)
         if ftype != FRAME_HEADER:
             raise ConnectionError(f"expected content header, got frame type {ftype}")
         body_size = struct.unpack_from(">Q", payload, 4)[0]
         body = b""
         while len(body) < body_size:
-            ftype, _ch, chunk = read_frame(self.sock)
+            ftype, _ch, chunk = read_frame(self.reader)
             if ftype != FRAME_BODY:
                 raise ConnectionError(f"expected content body, got frame type {ftype}")
             body += chunk
@@ -326,65 +317,35 @@ def parse_amqp_url(url: str) -> tuple[str, int, str]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class AmqpSpooler:
+def amqp_bridge(host: str, port: int, queue: str, spool_dir: str,
+                vhost: str = "/", declare: bool = False,
+                bindings: list[tuple[str, str]] = (), consumer_tag: str = "bento_spark",
+                prefetch_count: int = 64) -> Bridge:
     """`amqp_0_9` input (amqp09/input.go): consume -> spool; ack only
     after the spool put, so unspooled deliveries are redelivered
     (at-least-once into the replayable file source)."""
 
-    host: str
-    port: int
-    queue: str
-    spool_dir: str
-    vhost: str = "/"
-    declare: bool = False
-    bindings: list[tuple[str, str]] = field(default_factory=list)  # (exchange, key)
-    consumer_tag: str = "bento_spark"
-    prefetch_count: int = 64
-    _thread: "threading.Thread | None" = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _client: "AmqpClient | None" = field(default=None, repr=False)
+    def connect() -> AmqpClient:
+        client = AmqpClient(host, port, vhost=vhost)
+        if declare:
+            client.queue_declare(queue)
+        for exchange, key in bindings:
+            client.queue_bind(queue, exchange, key)
+        if prefetch_count:
+            client.qos(prefetch_count)
+        client.consume(queue, consumer_tag)
+        client.sock.settimeout(None)  # an idle consumer blocks on push traffic
+        return client
 
-    def start(self) -> "AmqpSpooler":
-        spool = Spool(self.spool_dir)
-        client = AmqpClient(self.host, self.port, vhost=self.vhost)
-        if self.declare:
-            client.queue_declare(self.queue)
-        for exchange, key in self.bindings:
-            client.queue_bind(self.queue, exchange, key)
-        if self.prefetch_count:
-            client.qos(self.prefetch_count)
-        client.consume(self.queue, self.consumer_tag)
-        self._client = client
+    def messages(client: AmqpClient, stop):
+        while True:
+            got = client.recv_deliver()
+            if got is None:
+                raise ConnectionError("amqp: broker closed the channel")
+            delivery_tag, _exchange, key, body = got
+            yield body, {"amqp_key": key}, functools.partial(client.ack, delivery_tag)
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_deliver()
-                except (ConnectionError, OSError):
-                    return
-                if got is None:
-                    return
-                delivery_tag, _exchange, key, body = got
-                spool.put(body, amqp_key=key)  # durable BEFORE the ack
-                try:
-                    client.ack(delivery_tag)
-                except (ConnectionError, OSError):
-                    return
-
-        t = threading.Thread(target=run, daemon=True)
-        t.start()
-        self._thread = t
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("amqp_0_9", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------
@@ -532,8 +493,9 @@ class MiniAmqpBroker:
     # -- per-connection protocol loop ---------------------------------------
     def _serve(self, conn: socket.socket) -> None:
         me: dict | None = None
+        reader = SocketReader(conn, "amqp")
         try:
-            if _read_exact(conn, 8) != PROTO_HEADER:
+            if reader.exact(8) != PROTO_HEADER:
                 conn.sendall(PROTO_HEADER)  # spec: offer the version we speak
                 return
             wlock = threading.Lock()
@@ -548,7 +510,7 @@ class MiniAmqpBroker:
                  + longstr(b"en_US"), channel=0)
             pending_publish: dict | None = None
             while not self._stop.is_set():
-                ftype, _ch, payload = read_frame(conn)
+                ftype, _ch, payload = read_frame(reader)
                 if ftype == FRAME_HEARTBEAT:
                     continue
                 if ftype == FRAME_HEADER and pending_publish is not None:

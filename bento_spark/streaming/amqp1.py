@@ -13,7 +13,7 @@ protocol is implemented from the published OASIS spec — REAL and
 e2e-testable in-process, like the MQTT/RFC-6455/Kafka connectors.
 
 Spark-first mapping (the repo's spool-bridge rationale):
-- input  -> Amqp1Spooler attaches a receiver link with `credit` link
+- input  -> amqp1_bridge attaches a receiver link with `credit` link
   credit, persists each transfer as a durable spool file, and sends the
   accepted disposition only AFTER the atomic rename — unsettled
   deliveries redeliver, so at-least-once holds into the spool.
@@ -37,9 +37,9 @@ import struct
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge, batch, close_client
+from bento_spark.streaming.reader import SocketReader
 
 PROTO_AMQP = b"AMQP\x00\x01\x00\x00"
 PROTO_SASL = b"AMQP\x03\x01\x00\x00"
@@ -323,52 +323,27 @@ def write_frame(sock: socket.socket, body: bytes, channel: int = 0,
     sock.sendall(struct.pack(">IBBH", len(body) + 8, 2, ftype, channel) + body)
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("amqp1: connection closed")
-        buf += chunk
-    return buf
-
-
-def read_frame(sock: socket.socket) -> tuple[int, int, bytes]:
+def read_frame(reader: SocketReader) -> tuple[int, int, bytes]:
     """-> (type, channel, body). Empty frames (keepalive) yield b''."""
-    head = _read_exact(sock, 8)
+    head = reader.exact(8)
     size, doff, ftype, channel = struct.unpack(">IBBH", head)
-    body = _read_exact(sock, size - 8)
+    body = reader.exact(size - 8)
     return ftype, channel, body[(doff * 4) - 8:]
 
 
-class _FrameBuffer:
-    """Non-blocking-ish frame assembly for the broker loop: a short recv
-    timeout must NOT desync the stream on a partial frame, so bytes
-    accumulate here and only complete frames pop."""
-
-    def __init__(self, sock: socket.socket):
-        self.sock = sock
-        self.buf = bytearray()
-
-    def poll(self) -> tuple[int, int, bytes] | None:
-        """One recv attempt, then parse: a complete frame or None."""
-        if len(self.buf) < 8 or len(self.buf) < struct.unpack(
-                ">I", self.buf[:4])[0]:
-            try:
-                chunk = self.sock.recv(65536)
-                if not chunk:
-                    raise ConnectionError("amqp1: connection closed")
-                self.buf.extend(chunk)
-            except (TimeoutError, socket.timeout):
-                pass
-        if len(self.buf) < 8:
-            return None
-        size, doff, ftype, channel = struct.unpack(">IBBH", self.buf[:8])
-        if len(self.buf) < size:
-            return None
-        frame = bytes(self.buf[:size])
-        del self.buf[:size]
-        return ftype, channel, frame[doff * 4:]
+def poll_frame(reader: SocketReader) -> tuple[int, int, bytes] | None:
+    """One recv attempt (the socket has a short timeout), then a complete
+    frame or None: a timeout never desyncs the stream on a partial
+    frame, because the bytes stay in the reader."""
+    buf = reader.buf
+    if len(buf) < 8 or len(buf) < struct.unpack(">I", buf[:4])[0]:
+        try:
+            reader.fill()
+        except (TimeoutError, socket.timeout):
+            pass
+    if len(buf) < 8 or len(buf) < struct.unpack(">I", buf[:4])[0]:
+        return None
+    return read_frame(reader)
 
 
 # --------------------------------------------------------------------------
@@ -387,7 +362,7 @@ class Amqp1Client:
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
         self.timeout = timeout
-        self._fb = _FrameBuffer(self.sock)
+        self.reader = SocketReader(self.sock, "amqp1")
         self.container_id = container_id or f"bento-{uuid.uuid4().hex[:12]}"
         self._next_handle = 0
         self._next_delivery = 0
@@ -400,7 +375,7 @@ class Amqp1Client:
                        username or "", password or "")
         self.sock.settimeout(self.timeout)  # headers read blocking
         self.sock.sendall(PROTO_AMQP)
-        if _read_exact(self.sock, 8) != PROTO_AMQP:
+        if self.reader.exact(8) != PROTO_AMQP:
             raise ConnectionError("amqp1: protocol header mismatch")
         write_frame(self.sock, performative(D_OPEN, [
             self.container_id, None, 1 << 20, 1024]))
@@ -414,14 +389,14 @@ class Amqp1Client:
         desync on partial reads), or None at the deadline."""
         self.sock.settimeout(0.05)
         while time.monotonic() < deadline:
-            got = self._fb.poll()
+            got = poll_frame(self.reader)
             if got is not None:
                 return got
         return None
 
     def _sasl(self, mech: str, user: str, pwd: str) -> None:
         self.sock.sendall(PROTO_SASL)
-        if _read_exact(self.sock, 8) != PROTO_SASL:
+        if self.reader.exact(8) != PROTO_SASL:
             raise ConnectionError("amqp1: SASL header mismatch")
         got = self._next_frame(time.monotonic() + self.timeout)
         if got is None:
@@ -595,61 +570,36 @@ def parse_amqp1_url(url: str) -> tuple[str, int, str | None, str | None]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class Amqp1Spooler:
+def amqp1_bridge(url: str, source_address: str, spool_dir: str,
+                 credit: int = 64) -> Bridge:
     """`amqp_1` input (amqp1/input.go): receiver link with `credit` link
     credit; each delivery spools as one durable file BEFORE its accepted
-    disposition — unsettled deliveries redeliver (at-least-once)."""
+    disposition: unsettled deliveries redeliver (at-least-once)."""
 
-    url: str
-    source_address: str
-    spool_dir: str
-    credit: int = 64
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "Amqp1Spooler":
-        spool = Spool(self.spool_dir)
-        host, port, user, pwd = parse_amqp1_url(self.url)
+    def connect() -> tuple[Amqp1Client, int]:
+        host, port, user, pwd = parse_amqp1_url(url)
         client = Amqp1Client(host, port, username=user, password=pwd)
-        handle = client.attach_receiver(self.source_address, credit=self.credit)
+        return client, client.attach_receiver(source_address, credit=credit)
 
-        def run() -> None:
-            import sys
+    def raw(payload: bytes) -> bytes:
+        body = decode_message_body(payload)
+        return (body if isinstance(body, (bytes, bytearray))
+                else str(body if body is not None else "").encode("utf-8"))
 
-            try:
-                while not self._stop.is_set():
-                    msgs = client.receive(wait_s=0.2)
-                    if not msgs:
-                        continue
-                    done = []
-                    for did, payload in msgs:
-                        body = decode_message_body(payload)
-                        raw = (body if isinstance(body, (bytes, bytearray))
-                               else str(body if body is not None else "").encode("utf-8"))
-                        spool.put(raw, amqp_delivery_id=did)
-                        done.append(did)
-                    client.settle(done)  # ack AFTER durability
-                    # top up credit so the broker keeps delivering
-                    write_frame(client.sock, performative(D_FLOW, [
-                        0, 1 << 11, 0, 1 << 11, handle, 0, self.credit]))
-            except (ConnectionError, OSError, ValueError) as e:
-                if not self._stop.is_set():
-                    self.error = f"amqp_1: {e}"
-                    print(self.error, file=sys.stderr)
-            finally:
-                client.close()
+    def settle(client: Amqp1Client, handle: int, done: list[int]) -> None:
+        client.settle(done)
+        # top up credit so the broker keeps delivering
+        write_frame(client.sock, performative(D_FLOW, [
+            0, 1 << 11, 0, 1 << 11, handle, 0, credit]))
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def messages(conn, stop):
+        client, handle = conn
+        while not stop.is_set():
+            msgs = client.receive(wait_s=0.2)
+            yield from batch([(raw(payload), {"amqp_delivery_id": did}) for did, payload in msgs],
+                             functools.partial(settle, client, handle, [d for d, _ in msgs]))
 
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("amqp_1", spool_dir, connect, messages, close=lambda c: close_client(c[0]))
 
 
 # --------------------------------------------------------------------------
@@ -697,7 +647,7 @@ class MiniAmqp1Broker:
     session per connection, sender links get link credit, transfers
     enqueue per target address, receiver links drain queues against
     their credit; unsettled deliveries return to the queue when the
-    consumer disconnects (the redelivery contract the spooler relies on)."""
+    consumer disconnects (the redelivery contract the input bridge relies on)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
                  username: str | None = None, password: str | None = None,
@@ -758,13 +708,14 @@ class MiniAmqp1Broker:
         unsettled: dict[int, tuple[str, bytes]] = {}  # did -> (addr, payload)
         try:
             conn.settimeout(10)
-            header = _read_exact(conn, 8)
+            reader = SocketReader(conn, "amqp1")
+            header = reader.exact(8)
             if header == PROTO_SASL:
                 conn.sendall(PROTO_SASL)
                 write_frame(conn, performative(
                     D_SASL_MECHS, [[Symbol("ANONYMOUS"), Symbol("PLAIN")]]),
                     ftype=1)
-                _ft, _ch, body = read_frame(conn)
+                _ft, _ch, body = read_frame(reader)
                 perf, _ = decode_frame_body(body)
                 mech = str(perf.value[0])
                 ok = True
@@ -780,15 +731,14 @@ class MiniAmqp1Broker:
                     D_SASL_OUTCOME, [0 if ok else 1]), ftype=1)
                 if not ok:
                     return
-                header = _read_exact(conn, 8)
+                header = reader.exact(8)
             if header != PROTO_AMQP:
                 return
             conn.sendall(PROTO_AMQP)
             conn.settimeout(0.05)
-            fb = _FrameBuffer(conn)
             opened = False
             while not self._stop.is_set():
-                got = fb.poll()
+                got = poll_frame(reader)
                 if got is None:
                     self._deliver(conn, links, next_out_delivery, unsettled)
                     continue

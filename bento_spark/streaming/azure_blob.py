@@ -14,7 +14,7 @@ signer is validated end-to-end, not assumed. Against real Azure, point
 `endpoint` at https://<account>.blob.core.windows.net (or Azurite).
 
 Spark-first mapping (identical topology to streaming/s3.py):
-- input  -> AzureBlobSpooler makes ONE pass over the container listing
+- input  -> azure_blob_bridge makes ONE pass over the container listing
   (the reference consumes the listing then stops) spooling each blob as
   a durable file; blob name/container ride the spool file's header and
   surface as columns JVM-side.
@@ -32,10 +32,9 @@ import hmac
 import threading
 import time
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
 
 _API_VERSION = "2021-08-06"
 
@@ -192,66 +191,30 @@ def _xml_unescape(s: str) -> str:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class AzureBlobSpooler:
+def azure_blob_bridge(endpoint: str, account: str, account_key: str, container: str,
+                      spool_dir: str, prefix: str = "", delete_blobs: bool = False) -> Bridge:
     """`azure_blob_storage` input (input_blob_storage.go): one pass over
-    the container listing, each blob spooled as one durable file;
-    `finished` flips True when the listing is consumed (the reference's
+    the container listing, each blob spooled as one durable file; the
+    bridge finishes when the listing is consumed (the reference's
     consume-then-stop contract)."""
 
-    endpoint: str
-    account: str
-    account_key: str
-    container: str
-    spool_dir: str
-    prefix: str = ""
-    delete_blobs: bool = False
-    finished: bool = field(default=False, repr=False)
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def delete(client: AzureBlobClient, name: str) -> None:
+        try:
+            client.delete_blob(container, name)
+        except (ConnectionError, OSError):
+            pass  # re-lists on the next run
 
-    def start(self) -> "AzureBlobSpooler":
-        spool = Spool(self.spool_dir)
-        client = AzureBlobClient(self.endpoint, self.account, self.account_key)
+    def messages(client: AzureBlobClient, stop):
+        for name in client.list_blobs(container, prefix=prefix):
+            if stop.is_set():
+                return
+            body, _ = client.get_blob(container, name)
+            # the reference's metadata surface
+            yield body, {"blob_storage_container": container, "blob_storage_key": name}, (
+                functools.partial(delete, client, name) if delete_blobs else None)
 
-        def run() -> None:
-            import sys
-
-            try:
-                for name in client.list_blobs(self.container, prefix=self.prefix):
-                    if self._stop.is_set():
-                        return
-                    body, _ = client.get_blob(self.container, name)
-                    # the reference's metadata surface
-                    spool.put(body, blob_storage_container=self.container,
-                              blob_storage_key=name)
-                    if self.delete_blobs:
-                        try:
-                            client.delete_blob(self.container, name)
-                        except (ConnectionError, OSError):
-                            pass  # re-lists on the next run
-            except Exception as e:
-                self.error = f"azure_blob_storage: {e}"
-                print(self.error, file=sys.stderr)
-            finally:
-                self.finished = True
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline and not self.finished:
-            time.sleep(0.02)
-        return self.finished
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("azure_blob_storage", spool_dir,
+                  functools.partial(AzureBlobClient, endpoint, account, account_key), messages)
 
 
 # --------------------------------------------------------------------------

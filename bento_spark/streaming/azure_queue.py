@@ -11,7 +11,7 @@ queue_name, ttl). The reference uses azure-sdk-for-go; the REST protocol
 is public, so no SDK is needed.
 
 Spark-first mapping (same spool-bridge rationale as aws_sqs):
-- input  -> AzureQueueSpooler long-polls Get Messages and spools each
+- input  -> azure_queue_bridge long-polls Get Messages and spools each
   message durably BEFORE Delete Message (pop receipt) — un-deleted
   messages re-appear after the visibility timeout (at-least-once).
 - output -> rows serialize as JSON JVM-side and Put Message per row."""
@@ -24,7 +24,6 @@ import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
 from bento_spark.streaming.azure_blob import (
@@ -33,7 +32,7 @@ from bento_spark.streaming.azure_blob import (
     shared_key_signature,
     shared_key_string_to_sign,
 )
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
 
 _API_VERSION = "2021-08-06"
 
@@ -122,64 +121,31 @@ class AzureQueueClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class AzureQueueSpooler:
+def azure_queue_bridge(endpoint: str, account: str, account_key: str, queue: str,
+                       spool_dir: str, max_messages: int = 16,
+                       visibility_timeout_s: int = 30) -> Bridge:
     """`azure_queue_storage` input (input_queue_storage.go): poll Get
     Messages; Delete Message (pop receipt) fires only AFTER the atomic
-    spool rename — at-least-once via the visibility timeout."""
+    spool rename: at-least-once via the visibility timeout."""
 
-    endpoint: str
-    account: str
-    account_key: str
-    queue: str
-    spool_dir: str
-    max_messages: int = 16
-    visibility_timeout_s: int = 30
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def delete(client: AzureQueueClient, m: dict) -> None:
+        try:
+            client.delete_message(queue, m["id"], m["pop_receipt"])
+        except (ConnectionError, OSError):
+            pass  # the visibility timeout re-delivers
 
-    def start(self) -> "AzureQueueSpooler":
-        spool = Spool(self.spool_dir)
-        client = AzureQueueClient(self.endpoint, self.account, self.account_key)
+    def messages(client: AzureQueueClient, stop):
+        while not stop.is_set():
+            msgs = client.get_messages(queue, num=max_messages,
+                                       visibility_timeout_s=visibility_timeout_s)
+            if not msgs:
+                stop.wait(EMPTY_POLL_S)
+            for m in msgs:
+                yield m["text"], {"queue_storage_message_id": m["id"]}, functools.partial(
+                    delete, client, m)
 
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                try:
-                    msgs = client.get_messages(
-                        self.queue, num=self.max_messages,
-                        visibility_timeout_s=self.visibility_timeout_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        spool.put(m["text"], queue_storage_message_id=m["id"])
-                        try:
-                            client.delete_message(self.queue, m["id"],
-                                                  m["pop_receipt"])
-                        except (ConnectionError, OSError):
-                            pass  # visibility timeout re-delivers
-                except Exception as e:
-                    self.error = f"azure_queue_storage: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("azure_queue_storage", spool_dir,
+                  functools.partial(AzureQueueClient, endpoint, account, account_key), messages)
 
 
 # --------------------------------------------------------------------------

@@ -15,7 +15,7 @@ signing are all implemented from their public specifications, and the
 in-process broker RECOMPUTES every SAS signature.
 
 Spark-first mapping (same spool bridge as input.amqp_1):
-- ServiceBusSpooler: CBS put-token, then a receiver link on the queue;
+- service_bus_bridge: CBS put-token, then a receiver link on the queue;
   each delivery spools as one file BEFORE its accepted
   disposition (at-least-once — unsettled deliveries redeliver).
   `nack_reject_patterns` matching bodies get a REJECTED disposition and
@@ -31,14 +31,13 @@ Spark-first mapping (same spool bridge as input.amqp_1):
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import re
-import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
 
 from bento_spark.streaming.amqp1 import (
     Amqp1Client,
@@ -49,9 +48,9 @@ from bento_spark.streaming.amqp1 import (
     _Reader,
     enc_value,
     performative,
+    write_frame,
 )
-
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
 
 # message-section descriptors (OASIS AMQP 1.0 §3.2)
 S_HEADER, S_DELIVERY_ANN, S_MESSAGE_ANN = 0x70, 0x71, 0x72
@@ -205,91 +204,52 @@ def cbs_put_token(client: Amqp1Client, audience: str, token: str,
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class ServiceBusSpooler:
+def service_bus_bridge(host: str, port: int, queue: str, spool_dir: str, key_name: str,
+                       key: str, nack_reject_patterns: list[str] = (),
+                       token_ttl_s: int = 3600) -> Bridge:
     """`azure_service_bus_queue` input: CBS-authenticated receiver link,
     spool-then-settle (at-least-once), reject-disposition for
     nack_reject_patterns matches."""
+    rejects = [re.compile(p) for p in nack_reject_patterns]
 
-    host: str
-    port: int
-    queue: str
-    spool_dir: str
-    key_name: str
-    key: str
-    nack_reject_patterns: list[str] = field(default_factory=list)
-    token_ttl_s: int = 3600
-    _client: Amqp1Client | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "ServiceBusSpooler":
-        spool = Spool(self.spool_dir)
-        client = Amqp1Client(self.host, self.port)
-        audience = f"sb://{self.host}/{self.queue}"
-        token = generate_sas_token(audience, self.key_name, self.key,
-                                   int(time.time()) + self.token_ttl_s)
+    def connect() -> Amqp1Client:
+        client = Amqp1Client(host, port)
+        audience = f"sb://{host}/{queue}"
+        token = generate_sas_token(audience, key_name, key, int(time.time()) + token_ttl_s)
         cbs_put_token(client, audience, token)
-        handle = client.attach_receiver(self.queue, credit=256)
-        self._client = client
-        rejects = [re.compile(p) for p in self.nack_reject_patterns]
+        client.attach_receiver(queue, credit=256)
+        return client
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.receive(max_messages=64, wait_s=0.5)
-                except (ConnectionError, OSError, ValueError):
-                    return
-                for did, payload in got:
-                    sections = decode_sections(payload)
-                    body = sections["body"]
-                    text = (body.decode("utf-8", "replace")
-                            if isinstance(body, (bytes, bytearray))
-                            else "" if body is None else str(body))
-                    if any(rx.search(text) for rx in rejects):
-                        # dead-letter path: rejected disposition, no spool
-                        from bento_spark.streaming.amqp1 import write_frame
+    def messages(client: Amqp1Client, stop):
+        while not stop.is_set():
+            for did, payload in client.receive(max_messages=64, wait_s=0.5):
+                sections = decode_sections(payload)
+                body = sections["body"]
+                text = (body.decode("utf-8", "replace")
+                        if isinstance(body, (bytes, bytearray))
+                        else "" if body is None else str(body))
+                if any(rx.search(text) for rx in rejects):
+                    # dead-letter path: rejected disposition, no spool
+                    write_frame(client.sock, performative(
+                        D_DISPOSITION, [True, did, did, True, Described(D_REJECTED, [])]))
+                    continue
+                props = sections["properties"] + [None] * 8
+                ann = sections["message_annotations"]
+                hdr = sections["header"] + [None] * 5
+                enqueued_ms = ann.get(ANN_ENQUEUED)
+                # the reference's metadata (input_service_bus_queue.go:112-120);
+                # durable BEFORE the accepted disposition
+                yield text, {
+                    "service_bus_message_id": str(props[0]) if props[0] is not None else None,
+                    "service_bus_sequence_number": ann.get(ANN_SEQUENCE),
+                    "service_bus_enqueued_time": (int(enqueued_ms) // 1000
+                                                  if enqueued_ms is not None else None),
+                    "service_bus_delivery_count": hdr[4] if hdr[4] is not None else 0,
+                    "service_bus_content_type": str(props[6]) if props[6] is not None else None,
+                    "service_bus_correlation_id": str(props[5]) if props[5] is not None else None,
+                }, functools.partial(client.settle, [did])
 
-                        write_frame(client.sock, performative(
-                            D_DISPOSITION,
-                            [True, did, did, True, Described(D_REJECTED, [])]))
-                        continue
-                    props = sections["properties"] + [None] * 8
-                    ann = sections["message_annotations"]
-                    hdr = sections["header"] + [None] * 5
-                    enqueued_ms = ann.get(ANN_ENQUEUED)
-                    # the reference's metadata (input_service_bus_queue.go:112-120)
-                    spool.put(
-                        text,
-                        service_bus_message_id=(str(props[0])
-                                                if props[0] is not None else None),
-                        service_bus_sequence_number=ann.get(ANN_SEQUENCE),
-                        service_bus_enqueued_time=(int(enqueued_ms) // 1000
-                                                   if enqueued_ms is not None else None),
-                        service_bus_delivery_count=hdr[4] if hdr[4] is not None else 0,
-                        service_bus_content_type=(str(props[6])
-                                                  if props[6] is not None else None),
-                        service_bus_correlation_id=(str(props[5])
-                                                    if props[5] is not None else None))
-                    # durable BEFORE the accepted disposition
-                    try:
-                        client.settle([did])
-                    except (ConnectionError, OSError):
-                        return
-            _ = handle
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("azure_service_bus_queue", spool_dir, connect, messages)
 
 
 # ---------------------------------------------------------------------------
@@ -303,7 +263,7 @@ class MiniServiceBusBroker(MiniAmqp1Broker):
     name, audience, and expiry) and replies on the message's reply-to
     address; entity-queue messages gain broker annotations
     (x-opt-sequence-number, x-opt-enqueued-time) and a header with
-    delivery-count on enqueue — the surface the spooler's metadata
+    delivery-count on enqueue — the surface the input bridge's metadata
     extraction runs against."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,

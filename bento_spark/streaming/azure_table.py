@@ -20,7 +20,7 @@ Against real Azure, point `endpoint` at
 https://<account>.table.core.windows.net (or Azurite).
 
 Spark-first mapping:
-- input  -> AzureTableSpooler makes ONE pass over the entity query (the
+- input  -> azure_table_bridge makes ONE pass over the entity query (the
   reference is a pager that consumes the listing then stops), spooling
   each entity as one file; the row payload is the entity's own JSON.
 - output -> per-row REST operation; table/partition_key/row_key/
@@ -40,10 +40,9 @@ import re
 import threading
 import time
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
 
 _API_VERSION = "2019-02-02"
 _ODATA_HDRS = {
@@ -213,61 +212,23 @@ class AzureTableClient:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class AzureTableSpooler:
+def azure_table_bridge(endpoint: str, account: str, account_key: str, table: str,
+                       spool_dir: str, filter: str = "", select: str = "",
+                       page_size: int = 1000) -> Bridge:
     """`azure_table_storage` input: one pass over the entity query
-    (filter/select/page_size — input_table_storage.go's pager), one spool
-    file per entity. `wait_finished()` mirrors the blob spooler — the
-    reference consumes the listing then stops."""
+    (filter/select/page_size, input_table_storage.go's pager), one spool
+    file per entity; the bridge finishes with the listing."""
 
-    endpoint: str
-    account: str
-    account_key: str
-    table: str
-    spool_dir: str
-    filter: str = ""
-    select: str = ""
-    page_size: int = 1000
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def messages(client: AzureTableClient, stop):
+        for n, entity in enumerate(client.query(table, filter, select, page_size), 1):
+            if stop.is_set():
+                return
+            # the reference's metadata (input_table_storage.go:162-163)
+            yield (json.dumps(entity, separators=(",", ":"), ensure_ascii=False),
+                   {"table_storage_name": table, "row_num": n}, None)
 
-    def start(self) -> "AzureTableSpooler":
-        spool = Spool(self.spool_dir)
-        client = AzureTableClient(self.endpoint, self.account, self.account_key)
-
-        def run() -> None:
-            try:
-                n = 0
-                for entity in client.query(self.table, self.filter,
-                                           self.select, self.page_size):
-                    if self._stop.is_set():
-                        return
-                    n += 1
-                    # the reference's metadata (input_table_storage.go:162-163)
-                    spool.put(json.dumps(entity, separators=(",", ":"), ensure_ascii=False),
-                              table_storage_name=self.table, row_num=n)
-            except Exception as e:  # surfaced via wait_finished/error
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("azure_table_storage", spool_dir,
+                  functools.partial(AzureTableClient, endpoint, account, account_key), messages)
 
 
 # ---------------------------------------------------------------------------

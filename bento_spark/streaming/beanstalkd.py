@@ -11,7 +11,7 @@ spec — the connector is REAL and e2e-testable in-process instead of
 availability-gated.
 
 Spark-first mapping (same spool-bridge rationale as every pull source):
-- input  -> BeanstalkdSpooler reserves jobs and persists each as a
+- input  -> beanstalkd_bridge reserves jobs and persists each as a
   durable spool file BEFORE sending `delete` (ack-after-durability =
   at-least-once: a crash between rename and delete re-delivers after the
   job's TTR, the protocol's contract). The job id rides the spool
@@ -28,11 +28,13 @@ import functools
 import socket
 import threading
 import time
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader, hang_up
 
 _CRLF = b"\r\n"
+# input.go's Reserve(200ms) poll
+POLL_TIMEOUT_S = 0.2
 
 
 class BeanstalkdClient:
@@ -41,29 +43,7 @@ class BeanstalkdClient:
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
-
-    def _read_line(self) -> bytes:
-        while True:
-            i = self._buf.find(_CRLF)
-            if i >= 0:
-                line = bytes(self._buf[:i])
-                del self._buf[: i + 2]
-                return line
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("beanstalkd: connection closed")
-            self._buf += chunk
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("beanstalkd: connection closed mid-job")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
+        self.reader = SocketReader(self.sock, "beanstalkd")
 
     def put(self, body: bytes, priority: int = 2, delay_s: int = 0,
             ttr_s: int = 2) -> int:
@@ -72,7 +52,7 @@ class BeanstalkdClient:
             f"put {priority} {delay_s} {ttr_s} {len(body)}".encode()
             + _CRLF + body + _CRLF
         )
-        resp = self._read_line().decode()
+        resp = self.reader.line(_CRLF).decode()
         if resp.startswith("INSERTED "):
             return int(resp.split(" ")[1])
         raise ConnectionError(f"beanstalkd: put -> {resp[:60]!r}")
@@ -82,23 +62,23 @@ class BeanstalkdClient:
         Reserve(200ms) poll)."""
         # the protocol takes whole seconds; 0 = return immediately if empty
         self.sock.sendall(f"reserve-with-timeout {int(-(-timeout_s // 1))}".encode() + _CRLF)
-        resp = self._read_line().decode()
+        resp = self.reader.line(_CRLF).decode()
         if resp == "TIMED_OUT":
             return None
         if resp.startswith("RESERVED "):
             _, job_id, nbytes = resp.split(" ")
-            body = self._read_exact(int(nbytes))
-            self._read_exact(2)
+            body = self.reader.exact(int(nbytes))
+            self.reader.exact(2)
             return int(job_id), body
         raise ConnectionError(f"beanstalkd: reserve -> {resp[:60]!r}")
 
     def delete(self, job_id: int) -> bool:
         self.sock.sendall(f"delete {job_id}".encode() + _CRLF)
-        return self._read_line() == b"DELETED"
+        return self.reader.line(_CRLF) == b"DELETED"
 
     def release(self, job_id: int, priority: int = 2, delay_s: int = 0) -> bool:
         self.sock.sendall(f"release {job_id} {priority} {delay_s}".encode() + _CRLF)
-        return self._read_line() == b"RELEASED"
+        return self.reader.line(_CRLF) == b"RELEASED"
 
     def close(self) -> None:
         try:
@@ -118,53 +98,20 @@ def parse_beanstalkd_addr(addr: str) -> tuple[str, int]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class BeanstalkdSpooler:
+def beanstalkd_bridge(host: str, port: int, spool_dir: str) -> Bridge:
     """`beanstalkd` input (input.go): reserve-poll the default tube and
     spool each job as one durable file; `delete` fires only AFTER the
-    spool put — at-least-once (an un-deleted job re-delivers after
-    TTR)."""
+    spool put: at-least-once (an un-deleted job re-delivers after TTR)."""
 
-    host: str
-    port: int
-    spool_dir: str
-    poll_timeout_s: float = 0.2
-    _client: BeanstalkdClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "BeanstalkdSpooler":
-        spool = Spool(self.spool_dir)
-        client = BeanstalkdClient(self.host, self.port)
-        self._client = client
-
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.reserve(self.poll_timeout_s)
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server gone
-                if got is None:
-                    continue
+    def messages(client: BeanstalkdClient, stop):
+        while not stop.is_set():
+            got = client.reserve(POLL_TIMEOUT_S)
+            if got is not None:
                 job_id, body = got
-                spool.put(body, beanstalkd_id=job_id)
-                try:
-                    client.delete(job_id)  # ack AFTER durability
-                except (ConnectionError, OSError):
-                    return
+                yield body, {"beanstalkd_id": job_id}, functools.partial(client.delete, job_id)
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("beanstalkd", spool_dir,
+                  functools.partial(BeanstalkdClient, host, port), messages)
 
 
 # --------------------------------------------------------------------------
@@ -212,6 +159,7 @@ class MiniBeanstalkdServer:
         self._stop = threading.Event()
         self._server: socket.socket | None = None
         self._threads: list[threading.Thread] = []
+        self._conns: set[socket.socket] = set()
 
     def start(self) -> "MiniBeanstalkdServer":
         srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -226,14 +174,16 @@ class MiniBeanstalkdServer:
         return self
 
     def stop(self) -> None:
+        """Die like a daemon: the port is free for a new server at once
+        and every client sees its connection drop."""
         self._stop.set()
         if self._server is not None:
-            try:
-                self._server.close()
-            except OSError:
-                pass
+            hang_up(self._server)
         with self._lock:
+            conns, self._conns = list(self._conns), set()
             self._wake.notify_all()
+        for c in conns:
+            hang_up(c)
         for t in self._threads:
             t.join(timeout=2)
 
@@ -248,6 +198,8 @@ class MiniBeanstalkdServer:
                 conn, _ = self._server.accept()
             except OSError:
                 return
+            with self._lock:
+                self._conns.add(conn)
             t = threading.Thread(target=self._serve, args=(conn,), daemon=True)
             t.start()
             self._threads.append(t)
@@ -271,39 +223,16 @@ class MiniBeanstalkdServer:
             self._wake.notify_all()
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
-
-        def read_line() -> bytes:
-            while True:
-                i = buf.find(_CRLF)
-                if i >= 0:
-                    line = bytes(buf[:i])
-                    del buf[: i + 2]
-                    return line
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
-
+        reader = SocketReader(conn, "beanstalkd")
         try:
             while not self._stop.is_set():
-                parts = read_line().decode("utf-8", "replace").split(" ")
+                parts = reader.line(_CRLF).decode("utf-8", "replace").split(" ")
                 verb = parts[0]
                 if verb == "put":
                     pri, _delay, ttr, nbytes = (int(parts[1]), int(parts[2]),
                                                 int(parts[3]), int(parts[4]))
-                    body = read_exact(nbytes)
-                    read_exact(2)
+                    body = reader.exact(nbytes)
+                    reader.exact(2)
                     with self._lock:
                         self._seq += 1
                         self._ready.append((pri, self._seq, self._seq, body))
@@ -353,7 +282,6 @@ class MiniBeanstalkdServer:
             pass
         finally:
             self._drop_conn(conn)
-            try:
-                conn.close()
-            except OSError:
-                pass
+            with self._lock:
+                self._conns.discard(conn)
+            hang_up(conn)

@@ -25,7 +25,7 @@ engine) and loads NDJSON/CSV job media into DuckDB tables, so the output
 OAuth token endpoint VERIFIES the RS256 assertion like MiniGcsServer.
 
 Spark-first mapping:
-- input  -> BigQuerySpooler: ONE paged query, each row spooled as its
+- input  -> bigquery_bridge: ONE paged query, each row spooled as its
   JSON object (the reference emits one message per row).
 - processor -> bigquery_select_map: args compile to an ARRAY column,
   ONE query per DISTINCT args tuple driver-side (control-plane), results
@@ -42,10 +42,9 @@ import json
 import threading
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
 
+from bento_spark.streaming.bridge import Bridge
 from bento_spark.streaming.gcs import GcsClient
-from bento_spark.streaming.spool import Spool
 
 FORMATS = ("NEWLINE_DELIMITED_JSON", "CSV")
 
@@ -163,59 +162,23 @@ def build_select(table: str, columns: list[str], where: str = "",
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class BigQuerySpooler:
+def bigquery_bridge(endpoint: str, project: str, table: str, columns: list[str],
+                    spool_dir: str, where: str = "", args: list | None = None,
+                    prefix: str = "", suffix: str = "",
+                    credentials: dict | None = None) -> Bridge:
     """`gcp_bigquery_select` input: one paged query, one spool file per
-    row (the row's JSON object — the reference emits one message per
-    row). `wait_finished()` mirrors the other one-pass pullers."""
+    row (the row's JSON object; the reference emits one message per
+    row); the bridge finishes with the result."""
+    sql = build_select(table, columns, where, prefix, suffix)
 
-    endpoint: str
-    project: str
-    table: str
-    columns: list[str]
-    spool_dir: str
-    where: str = ""
-    args: list | None = None
-    prefix: str = ""
-    suffix: str = ""
-    credentials: dict | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def messages(client: BigQueryClient, stop):
+        for row in client.query(project, sql, args):
+            if stop.is_set():
+                return
+            yield json.dumps(row), {}, None
 
-    def start(self) -> "BigQuerySpooler":
-        spool = Spool(self.spool_dir)
-        client = BigQueryClient(self.endpoint, self.credentials)
-        sql = build_select(self.table, self.columns, self.where,
-                           self.prefix, self.suffix)
-
-        def run() -> None:
-            try:
-                for row in client.query(self.project, sql, self.args):
-                    if self._stop.is_set():
-                        return
-                    spool.put(json.dumps(row))
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+    return Bridge("gcp_bigquery_select", spool_dir,
+                  functools.partial(BigQueryClient, endpoint, credentials), messages)
 
 
 # ---------------------------------------------------------------------------

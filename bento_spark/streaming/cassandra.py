@@ -31,6 +31,8 @@ import socket
 import struct
 import threading
 
+from bento_spark.streaming.reader import SocketReader
+
 _OP_ERROR, _OP_STARTUP, _OP_READY = 0x00, 0x01, 0x02
 _OP_QUERY, _OP_RESULT, _OP_PREPARE, _OP_EXECUTE = 0x07, 0x08, 0x09, 0x0A
 
@@ -161,30 +163,20 @@ class CassandraClient:
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "cassandra")
         self._stream = 0
         body = struct.pack(">H", 1) + _enc_string("CQL_VERSION") + _enc_string("3.0.0")
         op, _ = self._call(_OP_STARTUP, body)
         if op != _OP_READY:
             raise ConnectionError(f"cassandra: STARTUP -> opcode 0x{op:02x}")
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("cassandra: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
     def _call(self, opcode: int, body: bytes) -> tuple[int, _Reader]:
         self._stream = (self._stream + 1) % 32768
         self.sock.sendall(
             struct.pack(">BBhBI", 0x04, 0, self._stream, opcode, len(body)) + body)
-        hdr = self._read_exact(9)
+        hdr = self.reader.exact(9)
         _ver, _flags, _stream, op, ln = struct.unpack(">BBhBI", hdr)
-        r = _Reader(self._read_exact(ln))
+        r = _Reader(self.reader.exact(ln))
         if op == _OP_ERROR:
             code = r.i32()
             raise ConnectionError(f"cassandra: error 0x{code:04x}: {r.string()}")
@@ -404,17 +396,9 @@ class MiniCassandraServer:
         return m.group(1), [c.strip() for c in m.group(2).split(",")]
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "cassandra")
 
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
+        read_exact = reader.exact
 
         def reply(stream: int, opcode: int, body: bytes) -> None:
             conn.sendall(

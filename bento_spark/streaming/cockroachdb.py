@@ -19,13 +19,13 @@ documentation (message formats: StartupMessage, Authentication*,
 RowDescription 'T', DataRow 'D', ErrorResponse 'E', ReadyForQuery 'Z').
 
 Spark-first mapping:
-- input -> ChangefeedSpooler runs the changefeed statement over ONE
+- input -> changefeed_bridge runs the changefeed statement over ONE
   driver-side connection (control-plane, like the repo's other pull
   bridges) and spools each row as a message; the cursor is persisted to
   a spool-dir dotfile AFTER the covered row is durable (files-then-
   checkpoint = at-least-once), playing the reference's cursor-cache
   role; the bulk-data route into Spark stays the spool file stream.
-- The changefeed statement never completes; the spooler streams rows
+- The changefeed statement never completes; the input bridge streams rows
   until `.stop()`.
 
 MiniCockroachServer VERIFIES SCRAM-SHA-256 client proofs server-side
@@ -39,6 +39,7 @@ is not a database.
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import hmac
 import json
@@ -47,10 +48,10 @@ import socket
 import struct
 import threading
 import urllib.parse
-from dataclasses import dataclass, field
 from pathlib import Path
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge, close_client
+from bento_spark.streaming.reader import SocketReader
 
 PROTOCOL_3_0 = 196608  # 3 << 16
 
@@ -72,29 +73,18 @@ OID_BYTEA = 17
 # ---------------------------------------------------------------------------
 
 
-def _read_exact(sock: socket.socket, buf: bytearray, n: int) -> bytes:
-    while len(buf) < n:
-        chunk = sock.recv(65536)
-        if not chunk:
-            raise ConnectionError("pgwire: connection closed")
-        buf += chunk
-    out = bytes(buf[:n])
-    del buf[:n]
-    return out
-
-
 def send_msg(sock: socket.socket, type_byte: bytes, payload: bytes) -> None:
     """Typed frontend/backend message: type byte + int32 length
     (including itself) + payload."""
     sock.sendall(type_byte + struct.pack(">I", len(payload) + 4) + payload)
 
 
-def recv_msg(sock: socket.socket, buf: bytearray) -> tuple[bytes, bytes]:
-    head = _read_exact(sock, buf, 5)
+def recv_msg(reader: SocketReader) -> tuple[bytes, bytes]:
+    head = reader.exact(5)
     type_byte, size = head[:1], struct.unpack(">I", head[1:])[0]
     if size < 4 or size > 64 * 1024 * 1024:
         raise ConnectionError(f"pgwire: bad message length {size}")
-    return type_byte, _read_exact(sock, buf, size - 4)
+    return type_byte, reader.exact(size - 4)
 
 
 def _cstr(b: bytes, pos: int) -> tuple[str, int]:
@@ -258,7 +248,7 @@ class PgWireClient:
         self.user, self.database = cfg["user"], cfg["database"]
         self.sock = socket.create_connection((cfg["host"], cfg["port"]),
                                              timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "pgwire")
         params = (f"user\x00{self.user}\x00database\x00{self.database}\x00"
                   "application_name\x00bento-spark\x00\x00").encode("utf-8")
         startup = struct.pack(">I", PROTOCOL_3_0) + params
@@ -268,7 +258,7 @@ class PgWireClient:
     def _authenticate(self, password: str) -> None:
         scram: ScramClient | None = None
         while True:
-            t, payload = recv_msg(self.sock, self._buf)
+            t, payload = recv_msg(self.reader)
             if t == b"E":
                 f = parse_error_fields(payload)
                 raise ConnectionError(
@@ -308,7 +298,7 @@ class PgWireClient:
                 raise ConnectionError(f"pgwire: unsupported auth method {sub}")
         # drain ParameterStatus / BackendKeyData until ReadyForQuery
         while True:
-            t, payload = recv_msg(self.sock, self._buf)
+            t, payload = recv_msg(self.reader)
             if t == b"Z":
                 return
             if t == b"E":
@@ -326,7 +316,7 @@ class PgWireClient:
         send_msg(self.sock, b"Q", sql.encode("utf-8") + b"\x00")
         oids: list[int] = []
         while True:
-            t, payload = recv_msg(self.sock, self._buf)
+            t, payload = recv_msg(self.reader)
             if t == b"T":
                 nf = struct.unpack(">H", payload[:2])[0]
                 pos, oids = 2, []
@@ -394,89 +384,69 @@ def build_changefeed_statement(tables: list[str], options: list[str],
     return f"EXPERIMENTAL CHANGEFEED FOR {', '.join(tables)}{suffix}"
 
 
-@dataclass
-class ChangefeedSpooler:
+class _ChangefeedBridge(Bridge):
+    """A changefeed bridge, which also shows the statement its next
+    connect runs (with the cached cursor it resumes from)."""
+
+    def __init__(self, spool_dir: str, statement, connect, messages):
+        super().__init__("cockroachdb_changefeed", spool_dir, connect, messages,
+                         close=lambda conn: close_client(conn[0]))
+        self._statement = statement
+
+    @property
+    def statement(self) -> str:
+        return self._statement()
+
+
+def changefeed_bridge(dsn: str, tables: list[str], spool_dir: str,
+                      options: list[str] = (), cursor_cache: bool = False) -> Bridge:
     """`cockroachdb_changefeed` input: stream the core changefeed over
     one driver-side pgwire connection, one spool file per row, message =
     the reference's {"primary_key","row","table"} JSON (keys sorted like
     Go's json.Marshal). When cursor_cache=True, the row's `updated`
     timestamp is persisted to `<spool>/.cursor` AFTER the covering spool
-    file is durable, and the next start() resumes WITH CURSOR=<ts>."""
+    file is durable, and every (re)connect resumes WITH CURSOR=<ts>."""
+    cursor_path = Path(spool_dir) / ".cursor"
 
-    dsn: str
-    tables: list[str]
-    spool_dir: str
-    options: list[str] = field(default_factory=list)
-    cursor_cache: bool = False
-    error: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _client: PgWireClient | None = field(default=None, repr=False)
-
-    @property
-    def statement(self) -> str:
+    def statement() -> str:
         cursor = None
-        if self.cursor_cache:
-            p = Path(self.spool_dir) / ".cursor"
-            if p.exists():
-                cursor = p.read_text().strip() or None
-        return build_changefeed_statement(self.tables, self.options, cursor,
-                                          self.cursor_cache)
+        if cursor_cache and cursor_path.exists():
+            cursor = cursor_path.read_text().strip() or None
+        return build_changefeed_statement(tables, list(options), cursor, cursor_cache)
 
-    def start(self) -> "ChangefeedSpooler":
-        spool = Spool(self.spool_dir)
-        stmt = self.statement  # resolves the cached cursor BEFORE connect
-        self._client = PgWireClient(self.dsn)
+    def connect():
+        stmt = statement()  # resolves the cached cursor BEFORE connect
+        client = PgWireClient(dsn)
         # the changefeed blocks indefinitely between rows; the connect/auth
         # timeout must not tear down an idle feed
-        self._client.sock.settimeout(None)
+        client.sock.settimeout(None)
+        return client, stmt
 
-        def run() -> None:
-            import sys
+    def save_cursor(val: str) -> None:
+        try:
+            ts = json.loads(val).get("updated")
+        except (json.JSONDecodeError, AttributeError):
+            ts = None
+        if ts:
+            tmp = cursor_path.with_name(".cursor.tmp")
+            tmp.write_text(str(ts))
+            tmp.rename(cursor_path)
 
-            client = self._client
-            try:
-                for row in client.query_stream(stmt):
-                    if self._stop.is_set():
-                        return
-                    table = row[0] if isinstance(row[0], str) else (
-                        row[0] or b"").decode("utf-8")
-                    key = row[1] if isinstance(row[1], str) else (
-                        row[1] or b"").decode("utf-8")
-                    val = row[2] if isinstance(row[2], str) else (
-                        row[2] or b"").decode("utf-8")
-                    spool.put(json.dumps({"primary_key": key, "row": val,
-                                          "table": table}, sort_keys=True))
-                    if self.cursor_cache:
-                        try:
-                            ts = json.loads(val).get("updated")
-                        except (json.JSONDecodeError, AttributeError):
-                            ts = None
-                        if ts:
-                            ctmp = spool.dir / ".cursor.tmp"
-                            ctmp.write_text(str(ts))
-                            ctmp.rename(spool.dir / ".cursor")
-            except (ConnectionError, OSError) as e:
-                if not self._stop.is_set():
-                    self.error = f"cockroachdb_changefeed: {e}"
-                    print(self.error, file=sys.stderr)
-            finally:
-                client.close()
+    def text(v) -> str:
+        return v if isinstance(v, str) else (v or b"").decode("utf-8")
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def messages(conn, stop):
+        client, stmt = conn
+        for row in client.query_stream(stmt):
+            if stop.is_set():
+                return
+            table, key, val = text(row[0]), text(row[1]), text(row[2])
+            yield json.dumps({"primary_key": key, "row": val, "table": table},
+                             sort_keys=True), {}, (
+                functools.partial(save_cursor, val) if cursor_cache else None)
+        raise ConnectionError("cockroachdb_changefeed: the server ended the changefeed")
 
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            try:
-                self._client.sock.close()  # unblocks the reader
-            except OSError:
-                pass
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+    return _ChangefeedBridge(spool_dir, statement, connect, messages)
 
 
 # ---------------------------------------------------------------------------
@@ -587,7 +557,7 @@ class MiniCockroachServer:
                    + b"\x00")
         send_msg(conn, b"E", payload)
 
-    def _authenticate(self, conn: socket.socket, buf: bytearray,
+    def _authenticate(self, conn: socket.socket, reader: SocketReader,
                       user: str) -> bool:
         if user != self.user:
             self._fail(conn, "28000", f"unknown user {user!r}")
@@ -596,7 +566,7 @@ class MiniCockroachServer:
             return True
         if self.auth == "cleartext":
             send_msg(conn, b"R", struct.pack(">I", AUTH_CLEARTEXT))
-            t, payload = recv_msg(conn, buf)
+            t, payload = recv_msg(reader)
             ok = (t == b"p"
                   and payload.rstrip(b"\x00").decode() == self.password)
             if not ok:
@@ -605,7 +575,7 @@ class MiniCockroachServer:
         if self.auth == "md5":
             salt = secrets.token_bytes(4)
             send_msg(conn, b"R", struct.pack(">I", AUTH_MD5) + salt)
-            t, payload = recv_msg(conn, buf)
+            t, payload = recv_msg(reader)
             inner = hashlib.md5(
                 self.password.encode() + user.encode()).hexdigest()
             expect = b"md5" + hashlib.md5(
@@ -617,7 +587,7 @@ class MiniCockroachServer:
         # SCRAM-SHA-256
         send_msg(conn, b"R", struct.pack(">I", AUTH_SASL)
                  + SCRAM_SHA_256.encode() + b"\x00\x00")
-        t, payload = recv_msg(conn, buf)
+        t, payload = recv_msg(reader)
         if t != b"p":
             return False
         mech, pos = _cstr(payload, 0)
@@ -630,7 +600,7 @@ class MiniCockroachServer:
         try:
             send_msg(conn, b"R", struct.pack(">I", AUTH_SASL_CONTINUE)
                      + server.server_first(client_first))
-            t, payload = recv_msg(conn, buf)
+            t, payload = recv_msg(reader)
             if t != b"p":
                 return False
             final = server.server_final(payload)
@@ -661,28 +631,27 @@ class MiniCockroachServer:
         return body
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "pgwire")
         try:
             conn.settimeout(30)
-            head = _read_exact(conn, buf, 4)
+            head = reader.exact(4)
             ln = struct.unpack(">I", head)[0]
-            startup = _read_exact(conn, buf, ln - 4)
+            startup = reader.exact(ln - 4)
             proto = struct.unpack(">I", startup[:4])[0]
             if proto == 80877103:  # SSLRequest: refuse, client retries plain
                 conn.sendall(b"N")
-                head = _read_exact(conn, buf, 4)
-                startup = _read_exact(
-                    conn, buf, struct.unpack(">I", head)[0] - 4)
+                head = reader.exact(4)
+                startup = reader.exact(struct.unpack(">I", head)[0] - 4)
                 proto = struct.unpack(">I", startup[:4])[0]
             if proto != PROTOCOL_3_0:
                 return
             kv = startup[4:].decode("utf-8").split("\x00")
             params = dict(zip(kv[0::2], kv[1::2]))
-            if not self._authenticate(conn, buf, params.get("user", "")):
+            if not self._authenticate(conn, reader, params.get("user", "")):
                 return
             self._auth_ok(conn)
             while not self._stop.is_set():
-                t, payload = recv_msg(conn, buf)
+                t, payload = recv_msg(reader)
                 if t == b"X":
                     return
                 if t != b"Q":

@@ -19,7 +19,7 @@ real CosmosDB (or its local emulator) point `endpoint` at the account
 URI.
 
 Spark-first mapping:
-- input  -> CosmosSpooler runs ONE parametrized query (the reference's
+- input  -> cosmos_bridge runs ONE parametrized query (the reference's
   pager consumes the query then stops) spooling each item as one file;
   the row `value` is the item's own JSON.
 - processor -> cosmos_map: one REST op per row over one client per
@@ -56,10 +56,9 @@ import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
 
 _API_VERSION = "2018-12-31"
 
@@ -254,62 +253,24 @@ def parse_pk_mapping(src: str):
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class CosmosSpooler:
+def cosmos_bridge(endpoint: str, account_key: str, database: str, container: str,
+                  partition_key: object, query: str, spool_dir: str,
+                  parameters: list[dict] | None = None, page_size: int = 100) -> Bridge:
     """`azure_cosmosdb` input: one pass over a parametrized SQL query
     against (database, container, partition key), one spool file per
-    item. `wait_finished()` mirrors the other one-pass pullers."""
+    item; the bridge finishes with the result."""
 
-    endpoint: str
-    account_key: str
-    database: str
-    container: str
-    partition_key: object
-    query: str
-    spool_dir: str
-    parameters: list[dict] | None = None
-    page_size: int = 100
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def messages(client: CosmosClient, stop):
+        items = client.query(database, container, partition_key, query, parameters, page_size)
+        for n, item in enumerate(items, 1):
+            if stop.is_set():
+                return
+            yield json.dumps(item, separators=(",", ":"), ensure_ascii=False), {
+                "cosmosdb_database": database, "cosmosdb_container": container,
+                "row_num": n}, None
 
-    def start(self) -> "CosmosSpooler":
-        spool = Spool(self.spool_dir)
-        client = CosmosClient(self.endpoint, self.account_key)
-
-        def run() -> None:
-            try:
-                n = 0
-                for item in client.query(self.database, self.container,
-                                         self.partition_key, self.query,
-                                         self.parameters, self.page_size):
-                    if self._stop.is_set():
-                        return
-                    n += 1
-                    spool.put(json.dumps(item, separators=(",", ":"), ensure_ascii=False),
-                              cosmosdb_database=self.database,
-                              cosmosdb_container=self.container, row_num=n)
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("azure_cosmosdb", spool_dir,
+                  functools.partial(CosmosClient, endpoint, account_key), messages)
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,8 @@ import socket
 import struct
 import threading
 
+from bento_spark.streaming.reader import SocketReader
+
 _OP_GET, _OP_SET, _OP_ADD, _OP_REPLACE, _OP_DELETE = 0x00, 0x01, 0x02, 0x03, 0x04
 _OP_SASL_AUTH, _OP_SELECT_BUCKET = 0x21, 0x89
 _ST_OK, _ST_NOT_FOUND, _ST_EXISTS = 0x0000, 0x0001, 0x0002
@@ -44,7 +46,7 @@ class CouchbaseClient:
                  username: str | None = None, password: str | None = None,
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "couchbase")
         if username is not None:
             token = b"\x00" + username.encode() + b"\x00" + (password or "").encode()
             st, _ = self._call(_OP_SASL_AUTH, b"PLAIN", token)
@@ -55,16 +57,6 @@ class CouchbaseClient:
             if st != _ST_OK:
                 raise ConnectionError(
                     f"couchbase: select bucket {bucket!r} failed (0x{st:04x})")
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("couchbase: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
 
     def _call(self, opcode: int, key: bytes, value: bytes,
               extras: bytes = b"") -> tuple[int, bytes]:
@@ -78,11 +70,11 @@ class CouchbaseClient:
         vb = ((zlib.crc32(key) >> 16) & 0x7FFF) % 1024 if key and opcode <= 0x04 else 0
         self.sock.sendall(_HDR.pack(0x80, opcode, len(key), len(extras), 0, vb,
                                     len(body), 0, 0) + body)
-        hdr = self._read_exact(24)
+        hdr = self.reader.exact(24)
         magic, _op, klen, elen, _dt, status, blen, _opq, _cas = _HDR.unpack(hdr)
         if magic != 0x81:
             raise ConnectionError(f"couchbase: bad response magic 0x{magic:02x}")
-        payload = self._read_exact(blen)
+        payload = self.reader.exact(blen)
         return status, payload[elen + klen :]
 
     def get(self, key: str) -> bytes | None:
@@ -458,19 +450,11 @@ class MiniCouchbaseServer:
     def _serve(self, conn: socket.socket) -> None:
         import time as _time
 
-        buf = bytearray()
+        reader = SocketReader(conn, "couchbase")
         bucket = "default" if self.username is None else None
         authed = self.username is None
 
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
+        read_exact = reader.exact
 
         def reply(opcode: int, status: int, value: bytes = b"") -> None:
             conn.sendall(_HDR.pack(0x81, opcode, 0, 0, 0, status,

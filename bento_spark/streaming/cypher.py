@@ -11,7 +11,7 @@ reference uses neo4j-go-driver; no neo4j wheel ships here, so the wire
 protocol is implemented from the published Bolt specification.
 
 Spark-first mapping:
-- input  -> CypherSpooler runs ONE query (RUN/PULL -1), spooling each
+- input  -> cypher_bridge runs ONE query (RUN/PULL -1), spooling each
   record as a JSON object keyed by the result's field names.
 - output -> one RUN per row with the row's interpolated $values params
   (rendered JVM-side as a JSON column), failures surfaced as
@@ -32,9 +32,9 @@ import socket
 import struct
 import threading
 import urllib.parse
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader
 
 BOLT_MAGIC = b"\x60\x60\xb0\x17"
 # propose 4.4 only — single-suite negotiation like the SSH transport
@@ -220,26 +220,15 @@ def send_message(sock: socket.socket, tag: int, fields: list) -> None:
     sock.sendall(out + b"\x00\x00")
 
 
-def _read_exact(sock: socket.socket, buf: bytearray, n: int) -> bytes:
-    while len(buf) < n:
-        chunk = sock.recv(65536)
-        if not chunk:
-            raise ConnectionError("bolt: connection closed")
-        buf += chunk
-    out = bytes(buf[:n])
-    del buf[:n]
-    return out
-
-
-def recv_message(sock: socket.socket, buf: bytearray) -> Structure:
+def recv_message(reader: SocketReader) -> Structure:
     payload = b""
     while True:
-        size = struct.unpack(">H", _read_exact(sock, buf, 2))[0]
+        size = struct.unpack(">H", reader.exact(2))[0]
         if size == 0:
             if payload:
                 break
             continue  # NOOP chunk (keepalive)
-        payload += _read_exact(sock, buf, size)
+        payload += reader.exact(size)
     msg = ps_unpack(payload)
     if not isinstance(msg, Structure):
         raise ConnectionError("bolt: non-structure message")
@@ -263,9 +252,9 @@ class BoltClient:
                  timeout: float = 15.0):
         host, port = parse_bolt_uri(uri)
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "bolt")
         self.sock.sendall(BOLT_MAGIC + VERSION_4_4 + b"\x00" * 12)
-        chosen = _read_exact(self.sock, self._buf, 4)
+        chosen = self.reader.exact(4)
         if chosen != VERSION_4_4:
             raise ConnectionError(f"bolt: server chose {chosen.hex()}")
         extra: dict = {"user_agent": "bento-spark/0.1"}
@@ -277,7 +266,7 @@ class BoltClient:
         else:
             extra["scheme"] = "none"
         send_message(self.sock, M_HELLO, [extra])
-        resp = recv_message(self.sock, self._buf)
+        resp = recv_message(self.reader)
         if resp.tag == M_FAILURE:
             meta = resp.fields[0] if resp.fields else {}
             raise ConnectionError(f"bolt: HELLO failed: {meta.get('message')}")
@@ -289,7 +278,7 @@ class BoltClient:
         """RUN + PULL(-1) -> (field names, record rows)."""
         extra = {"db": database} if database else {}
         send_message(self.sock, M_RUN, [query, params or {}, extra])
-        head = recv_message(self.sock, self._buf)
+        head = recv_message(self.reader)
         if head.tag == M_FAILURE:
             meta = head.fields[0] if head.fields else {}
             self._reset()
@@ -299,7 +288,7 @@ class BoltClient:
         send_message(self.sock, M_PULL, [{"n": -1}])
         rows: list[list] = []
         while True:
-            msg = recv_message(self.sock, self._buf)
+            msg = recv_message(self.reader)
             if msg.tag == M_RECORD:
                 rows.append(list(msg.fields[0]))
             elif msg.tag == M_SUCCESS:
@@ -315,7 +304,7 @@ class BoltClient:
     def _reset(self) -> None:
         try:
             send_message(self.sock, M_RESET, [])
-            recv_message(self.sock, self._buf)
+            recv_message(self.reader)
         except (ConnectionError, OSError):
             pass
 
@@ -335,55 +324,20 @@ class BoltClient:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class CypherSpooler:
+def cypher_bridge(uri: str, query: str, spool_dir: str, database: str = "",
+                  user: str | None = None, password: str | None = None) -> Bridge:
     """`cypher` input (input_cypher.go): run the query once, one spool
     file per record (a JSON object keyed by the result's field names),
-    then finish — the reference input shuts down when records are
+    then finish: the reference input shuts down when records are
     exhausted."""
 
-    uri: str
-    query: str
-    spool_dir: str
-    database: str = ""
-    user: str | None = None
-    password: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def messages(client: BoltClient, stop):
+        fields, rows = client.run(query, database=database)
+        for row in rows:
+            yield json.dumps(dict(zip(fields, row)), default=str), {}, None
 
-    def start(self) -> "CypherSpooler":
-        spool = Spool(self.spool_dir)
-
-        def run() -> None:
-            client = None
-            try:
-                client = BoltClient(self.uri, user=self.user,
-                                    password=self.password)
-                fields, rows = client.run(self.query, database=self.database)
-                for row in rows:
-                    spool.put(json.dumps(dict(zip(fields, row)), default=str))
-            except Exception as e:
-                self.error = e
-            finally:
-                if client is not None:
-                    client.close()
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+    return Bridge("cypher", spool_dir,
+                  functools.partial(BoltClient, uri, user=user, password=password), messages)
 
 
 # ---------------------------------------------------------------------------
@@ -476,18 +430,18 @@ class MiniBoltServer:
             self._threads.append(t)
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "bolt")
         pending: tuple[list[str], list[list]] | None = None
         try:
             conn.settimeout(15)
-            if _read_exact(conn, buf, 4) != BOLT_MAGIC:
+            if reader.exact(4) != BOLT_MAGIC:
                 return
-            versions = _read_exact(conn, buf, 16)
+            versions = reader.exact(16)
             if VERSION_4_4 not in [versions[i : i + 4] for i in range(0, 16, 4)]:
                 conn.sendall(b"\x00\x00\x00\x00")
                 return
             conn.sendall(VERSION_4_4)
-            hello = recv_message(conn, buf)
+            hello = recv_message(reader)
             if hello.tag != M_HELLO:
                 return
             extra = hello.fields[0] if hello.fields else {}
@@ -503,7 +457,7 @@ class MiniBoltServer:
             send_message(conn, M_SUCCESS, [{"server": "mini-bolt/4.4",
                                             "connection_id": "c0"}])
             while not self._stop.is_set():
-                msg = recv_message(conn, buf)
+                msg = recv_message(reader)
                 if msg.tag == M_RUN:
                     query = str(msg.fields[0])
                     params = dict(msg.fields[1] or {})

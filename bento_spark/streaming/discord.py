@@ -10,7 +10,7 @@ already a Discord API message object posts as-is, otherwise it wraps as
 the documented REST endpoints are implemented directly.
 
 Spark-first mapping:
-- input  -> DiscordSpooler polls `GET /channels/{id}/messages?after=`
+- input  -> discord_bridge polls `GET /channels/{id}/messages?after=`
   on poll_period, spooling each message's API JSON object (ascending id
   order, the reference's backfill direction); the cursor is the last
   spooled snowflake, so a crash re-polls from the durable position
@@ -27,10 +27,9 @@ import functools
 import json
 import threading
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
 
 _API_BASE = "/api/v10"
 
@@ -88,61 +87,28 @@ class DiscordClient:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class DiscordSpooler:
+def discord_bridge(endpoint: str, channel_id: str, bot_token: str, spool_dir: str,
+                   poll_period_s: float = 1.0, limit: int = 100) -> Bridge:
     """`discord` input: poll the channel's backlog ascending from the
     last spooled snowflake (input.go's `after` cursor), one spool file
     per message (the API JSON object)."""
+    cursor = {"after": None}
 
-    endpoint: str
-    channel_id: str
-    bot_token: str
-    spool_dir: str
-    poll_period_s: float = 1.0
-    limit: int = 100
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def advance(after: str) -> None:
+        cursor["after"] = after
 
-    def start(self) -> "DiscordSpooler":
-        spool = Spool(self.spool_dir)
-        client = DiscordClient(self.endpoint, self.bot_token)
-        state = {"after": None}
+    def messages(client: DiscordClient, stop):
+        while not stop.is_set():
+            msgs = client.channel_messages(channel_id, limit=limit, after=cursor["after"])
+            # the API returns newest-first; ascending spool order
+            msgs.sort(key=lambda m: int(m.get("id", 0)))
+            for m in msgs:
+                yield json.dumps(m), {}, functools.partial(advance, str(m.get("id")))
+            if len(msgs) < limit:
+                stop.wait(poll_period_s)
 
-        def one_poll() -> None:
-            while True:
-                msgs = client.channel_messages(
-                    self.channel_id, limit=self.limit, after=state["after"])
-                # the API returns newest-first; ascending spool order
-                msgs.sort(key=lambda m: int(m.get("id", 0)))
-                if not msgs:
-                    return
-                for m in msgs:
-                    spool.put(json.dumps(m))
-                    state["after"] = str(m.get("id"))
-                if len(msgs) < self.limit:
-                    return
-
-        def run() -> None:
-            try:
-                while not self._stop.is_set():
-                    one_poll()
-                    if self._stop.wait(self.poll_period_s):
-                        return
-            except Exception as e:
-                self.error = e
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-        if self.error is not None:
-            raise self.error
+    return Bridge("discord", spool_dir,
+                  functools.partial(DiscordClient, endpoint, bot_token), messages)
 
 
 # ---------------------------------------------------------------------------

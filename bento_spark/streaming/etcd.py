@@ -14,7 +14,7 @@ the Auth/Authenticate RPC with the resulting token attached as gRPC
 metadata (client.go's auth fields).
 
 Spark-first mapping:
-- input -> EtcdWatchSpooler holds ONE driver-side watch stream
+- input -> etcd_watch_bridge holds ONE driver-side watch stream
   (control-plane, like the repo's other push bridges) and spools each
   WatchResponse's flattened event array as one message; the bulk-data
   route into Spark stays the spool file stream.
@@ -34,15 +34,14 @@ import base64
 import json
 import threading
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.operators.protobuf_codec import (
     decode_message,
     encode_message,
     parse_proto,
 )
+from bento_spark.streaming.bridge import Bridge, close_client
 from bento_spark.streaming.grpc_wire import GrpcChannel, MiniGrpcServer
-from bento_spark.streaming.spool import Spool
 
 # Published field numbers: etcd api/etcdserverpb/rpc.proto and
 # api/mvccpb/kv.proto (the subset the watch input needs).
@@ -266,84 +265,57 @@ class EtcdWatcher:
         self.channel.close()
 
 
-@dataclass
-class EtcdWatchSpooler:
+def etcd_watch_bridge(endpoints: list[str], key: str, spool_dir: str,
+                      with_prefix: bool = False, with_range: str = "",
+                      progress_notify: bool = False, filter_put: bool = False,
+                      filter_delete: bool = False, created_notify: bool = False,
+                      username: str = "", password: str = "",
+                      auth_enabled: bool = False) -> Bridge:
     """`etcd` input: watch a key/prefix/range, one spool file per
     WatchResponse carrying the flattened events array (the reference
     emits ONE message per response with the array as its structured
-    payload — input.go:195-216). Created/progress notifications with no
+    payload, input.go:195-216). Created/progress notifications with no
     events surface as empty arrays only when the reference would deliver
     them (created notify is opt-in; progress responses always flow)."""
 
-    endpoints: list[str]
-    key: str
-    spool_dir: str
-    with_prefix: bool = False
-    with_range: str = ""
-    progress_notify: bool = False
-    filter_put: bool = False
-    filter_delete: bool = False
-    created_notify: bool = False
-    username: str = ""
-    password: str = ""
-    auth_enabled: bool = False
-    error: str | None = None
-    _watcher: EtcdWatcher | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
+    def connect():
+        watcher = EtcdWatcher(endpoints, username=username, password=password,
+                              auth_enabled=auth_enabled)
+        try:
+            watcher.channel.conn.sock.settimeout(None)  # long-lived watch
+            watcher.watch(build_create_request(
+                key, with_prefix=with_prefix, with_range=with_range,
+                progress_notify=progress_notify, filter_put=filter_put,
+                filter_delete=filter_delete))
+            # Block until the server confirms creation: connect returning
+            # means the watch horizon is ESTABLISHED, so every mutation
+            # after it is observed (the async-create race would otherwise
+            # silently drop writes landing before the server snapshot).
+            responses = watcher.responses()
+            first = next(responses, None) or {}
+            if not first.get("created"):
+                raise ConnectionError(
+                    f"etcd: watch not created: {first.get('cancel_reason', '')}")
+        except BaseException:
+            close(watcher)
+            raise
+        return watcher, responses, first
 
-    def start(self) -> "EtcdWatchSpooler":
-        spool = Spool(self.spool_dir)
-        self._watcher = EtcdWatcher(
-            self.endpoints, username=self.username, password=self.password,
-            auth_enabled=self.auth_enabled)
-        self._watcher.channel.conn.sock.settimeout(None)  # long-lived watch
-        self._watcher.watch(build_create_request(
-            self.key, with_prefix=self.with_prefix,
-            with_range=self.with_range,
-            progress_notify=self.progress_notify,
-            filter_put=self.filter_put, filter_delete=self.filter_delete))
+    def close(watcher: EtcdWatcher) -> None:
+        close_client(watcher.channel.conn.sock)
+        watcher.close()
 
-        # Block until the server confirms creation — start() returning
-        # means the watch horizon is ESTABLISHED: every mutation after
-        # this point is observed (the async-create race would otherwise
-        # silently drop writes landing before the server snapshot).
-        gen = self._watcher.responses()
-        first = next(gen)
-        if not first.get("created"):
-            raise ConnectionError(
-                f"etcd: watch not created: {first.get('cancel_reason', '')}")
-        if self.created_notify:  # clientv3 WithCreatedNotify delivers it
-            spool.put(json.dumps(events_to_maps(first.get("events") or [])))
+    def messages(conn, stop):
+        _watcher, responses, first = conn
+        if created_notify:  # clientv3 WithCreatedNotify delivers it
+            yield json.dumps(events_to_maps(first.get("events") or [])), {}, None
+        for resp in responses:
+            events = events_to_maps(resp.get("events") or [])
+            if events or progress_notify:
+                yield json.dumps(events), {}, None
+        raise ConnectionError("etcd: the watch stream ended")
 
-        def run() -> None:
-            import sys
-
-            try:
-                for resp in gen:
-                    if self._stop.is_set():
-                        return
-                    events = events_to_maps(resp.get("events") or [])
-                    if not events and not self.progress_notify:
-                        continue
-                    spool.put(json.dumps(events))
-            except (ConnectionError, OSError) as e:
-                if not self._stop.is_set():
-                    self.error = f"etcd: {e}"
-                    print(self.error, file=sys.stderr)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._watcher is not None:
-            self._watcher.close()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+    return Bridge("etcd", spool_dir, connect, messages, close=lambda conn: close(conn[0]))
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ Against real GCS, leave `endpoint` unset (https://storage.googleapis.com)
 and supply the service-account JSON fields.
 
 Spark-first mapping (identical topology to the S3/Azure listing inputs):
-- input  -> GcsSpooler makes ONE pass over the bucket listing, spooling
+- input  -> gcs_bridge makes ONE pass over the bucket listing, spooling
   each object as one file (the reference's gcs_* metadata in its
   header), deleting objects only AFTER the durable spool put when
   delete_objects is set.
@@ -33,11 +33,10 @@ import json
 import threading
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
+from bento_spark.streaming.bridge import Bridge
 from bento_spark.streaming.pubsub import ServiceAccountToken, bearer_headers
-from bento_spark.streaming.spool import Spool
 
 _SCOPE = "https://www.googleapis.com/auth/devstorage.read_write"
 
@@ -148,67 +147,33 @@ class GcsClient:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class GcsSpooler:
+def gcs_bridge(endpoint: str, bucket: str, spool_dir: str, prefix: str = "",
+               delete_objects: bool = False, credentials: dict | None = None) -> Bridge:
     """`gcp_cloud_storage` input: one pass over the bucket listing
-    (prefix-filtered), one spool file per object; objects
-    delete only AFTER the durable spool put when delete_objects is set."""
+    (prefix-filtered), one spool file per object; an object is deleted
+    only AFTER its durable spool put when delete_objects is set."""
 
-    endpoint: str
-    bucket: str
-    spool_dir: str
-    prefix: str = ""
-    delete_objects: bool = False
-    credentials: dict | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def messages(client: GcsClient, stop):
+        for item in client.list_objects(bucket, prefix):
+            if stop.is_set():
+                return
+            name = item["name"]
+            body = client.get_object(bucket, name)
+            if body is None:
+                continue  # raced a delete
+            # the reference's gcs_* metadata (input_cloud_storage.go:312-317)
+            yield body, {"gcs_key": name, "gcs_bucket": bucket,
+                         "gcs_last_modified": item.get("updated"),
+                         "gcs_content_type": item.get("contentType"),
+                         "gcs_content_encoding": item.get("contentEncoding")}, (
+                functools.partial(client.delete_object, bucket, name) if delete_objects else None)
 
-    def start(self) -> "GcsSpooler":
-        spool = Spool(self.spool_dir)
-        client = GcsClient(self.endpoint, self.credentials)
-
-        def run() -> None:
-            try:
-                for item in client.list_objects(self.bucket, self.prefix):
-                    if self._stop.is_set():
-                        return
-                    name = item["name"]
-                    body = client.get_object(self.bucket, name)
-                    if body is None:
-                        continue  # raced a delete
-                    # the reference's gcs_* metadata (input_cloud_storage.go:312-317)
-                    spool.put(body, gcs_key=name, gcs_bucket=self.bucket,
-                              gcs_last_modified=item.get("updated"),
-                              gcs_content_type=item.get("contentType"),
-                              gcs_content_encoding=item.get("contentEncoding"))
-                    if self.delete_objects:
-                        client.delete_object(self.bucket, name)
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+    return Bridge("gcp_cloud_storage", spool_dir,
+                  functools.partial(GcsClient, endpoint, credentials), messages)
 
 
 def gcs_columns(df):
-    """A GcsSpooler spool's computed column: `gcs_last_modified_unix`
+    """A gcs_bridge spool's computed column: `gcs_last_modified_unix`
     from the RFC 3339 `gcs_last_modified`."""
     from pyspark.sql import functions as F
 

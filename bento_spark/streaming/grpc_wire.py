@@ -29,6 +29,8 @@ import socket
 import struct
 import threading
 
+from bento_spark.streaming.reader import SocketReader
+
 # ---------------------------------------------------------------------------
 # HPACK — RFC 7541
 # ---------------------------------------------------------------------------
@@ -327,24 +329,12 @@ MAX_FRAME = 16384
 INITIAL_WINDOW = 65535
 
 
-def _read_exact(sock: socket.socket, buf: bytearray, n: int) -> bytes:
-    while len(buf) < n:
-        chunk = sock.recv(65536)
-        if not chunk:
-            raise ConnectionError("h2: connection closed")
-        buf += chunk
-    out = bytes(buf[:n])
-    del buf[:n]
-    return out
-
-
-def read_frame(sock: socket.socket,
-               buf: bytearray) -> tuple[int, int, int, bytes]:
-    head = _read_exact(sock, buf, 9)
+def read_frame(reader: SocketReader) -> tuple[int, int, int, bytes]:
+    head = reader.exact(9)
     length = int.from_bytes(head[:3], "big")
     ftype, flags = head[3], head[4]
     stream_id = int.from_bytes(head[5:9], "big") & 0x7FFFFFFF
-    return ftype, flags, stream_id, _read_exact(sock, buf, length)
+    return ftype, flags, stream_id, reader.exact(length)
 
 
 def frame(ftype: int, flags: int, stream_id: int, payload: bytes) -> bytes:
@@ -359,7 +349,7 @@ class _H2Conn:
 
     def __init__(self, sock: socket.socket):
         self.sock = sock
-        self.buf = bytearray()
+        self.reader = SocketReader(sock, "h2")
         self.wlock = threading.Lock()
         self.flow = threading.Condition()
         self.conn_window = INITIAL_WINDOW
@@ -512,8 +502,7 @@ class GrpcChannel:
         hdr_kind: dict[int, int] = {}
         try:
             while True:
-                ftype, flags, sid, payload = read_frame(self.conn.sock,
-                                                        self.conn.buf)
+                ftype, flags, sid, payload = read_frame(self.conn.reader)
                 if ftype == F_SETTINGS:
                     if not (flags & FLAG_ACK):
                         for i in range(0, len(payload) - 5, 6):
@@ -757,11 +746,11 @@ class MiniGrpcServer:
         hdr_flags: dict[int, int] = {}
         try:
             sock.settimeout(30)
-            if _read_exact(sock, conn.buf, len(PREFACE)) != PREFACE:
+            if conn.reader.exact(len(PREFACE)) != PREFACE:
                 return
             conn.write_frame(F_SETTINGS, 0, 0, b"")
             while not self._stop.is_set():
-                ftype, flags, sid, payload = read_frame(sock, conn.buf)
+                ftype, flags, sid, payload = read_frame(conn.reader)
                 if ftype == F_SETTINGS:
                     if not (flags & FLAG_ACK):
                         conn.write_frame(F_SETTINGS, FLAG_ACK, 0, b"")

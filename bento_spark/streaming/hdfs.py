@@ -25,9 +25,13 @@ from __future__ import annotations
 import functools
 import json
 import threading
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+
+
+class RemoteError(ConnectionError):
+    """The namenode's or datanode's answer to a request: an HTTP 4xx
+    carrying a RemoteException (a missing file, a denied user)."""
 
 
 class WebHdfsClient:
@@ -121,7 +125,7 @@ class WebHdfsClient:
                 msg = json.loads(data)["RemoteException"]["message"]
             except (ValueError, KeyError):
                 msg = data[:200].decode("utf-8", "replace")
-            raise ConnectionError(f"webhdfs {op} {path}: HTTP {status}: {msg}")
+            raise RemoteError(f"webhdfs {op} {path}: HTTP {status}: {msg}")
 
     # -- operations ----------------------------------------------------------
     def list_status(self, directory: str) -> list[dict]:
@@ -175,53 +179,31 @@ def hdfs_sink(hosts: list[str] | str, user: str,
     return write_batch
 
 
-@dataclass
-class HdfsSpooler:
+def hdfs_bridge(hosts: list[str] | str, user: str, directory: str, spool_dir: str) -> Bridge:
     """`hdfs` input (input.go): one LISTSTATUS pass over `directory`,
-    each FILE fetched and spooled as one durable message file, then
-    `finished` flips True — the reference consumes the listing and
-    stops too. At-least-once: the spool put is the ack."""
+    each FILE fetched and spooled as one durable message file, then the
+    bridge finishes; the reference consumes the listing and stops too.
+    At-least-once: the spool put is the ack. The namenode's answer to the
+    listing (a missing directory, a denied user) fails the bridge: a
+    retry would get the same answer."""
 
-    hosts: list[str] | str
-    user: str
-    directory: str
-    spool_dir: str
-    finished: bool = field(default=False, repr=False)
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def messages(client: WebHdfsClient, stop):
+        try:
+            statuses = client.list_status(directory)
+        except RemoteError as e:
+            raise RuntimeError(str(e)) from e
+        for st in statuses:
+            if stop.is_set():
+                return
+            if st.get("type") != "FILE":
+                continue
+            name_part = st["pathSuffix"]
+            body = client.open(directory.rstrip("/") + "/" + name_part)
+            yield body, {"hdfs_path": name_part,
+                         "hdfs_modified_ms": int(st.get("modificationTime", 0))}, None
 
-    def start(self) -> "HdfsSpooler":
-        spool = Spool(self.spool_dir)
-
-        def run() -> None:
-            try:
-                client = WebHdfsClient(self.hosts, user=self.user)
-                for st in client.list_status(self.directory):
-                    if self._stop.is_set():
-                        return
-                    if st.get("type") != "FILE":
-                        continue
-                    name_part = st["pathSuffix"]
-                    body = client.open(
-                        self.directory.rstrip("/") + "/" + name_part)
-                    spool.put(body, hdfs_path=name_part,
-                              hdfs_modified_ms=int(st.get("modificationTime", 0)))
-                self.finished = True
-            except Exception as e:  # surfaced to the caller, not swallowed
-                self.error = f"{type(e).__name__}: {e}"
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> None:
-        self._thread.join(timeout)
-        if self.error:
-            raise RuntimeError(f"hdfs input: {self.error}")
-
-    def stop(self) -> None:
-        self._stop.set()
+    return Bridge("hdfs", spool_dir, functools.partial(WebHdfsClient, hosts, user=user),
+                  messages)
 
 
 class MiniWebHdfsServer:

@@ -16,11 +16,14 @@ Responses: 200 on accept, 404 wrong path, 405 non-POST.
 
 from __future__ import annotations
 
+import os
 import threading
 import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader, hang_up
 from bento_spark.streaming.spool import Spool
 
 
@@ -187,10 +190,9 @@ def ws_connect(url: str, *, tls_insecure: bool = False,
     HTTP upgrade with Sec-WebSocket-Key, 101 + Sec-WebSocket-Accept
     verification. Returns (socket, leftover_bytes) — any bytes the
     server sent after the handshake response belong to the frame
-    stream. Shared by the websocket input spooler and output sink."""
+    stream. Shared by the websocket input bridge and output sink."""
     import base64
     import hashlib
-    import os as _os
     import socket
     import urllib.parse
 
@@ -200,7 +202,7 @@ def ws_connect(url: str, *, tls_insecure: bool = False,
     host, port = u.hostname or "127.0.0.1", u.port or (443 if u.scheme == "wss" else 80)
     path = (u.path or "/") + (f"?{u.query}" if u.query else "")
 
-    key = base64.b64encode(_os.urandom(16)).decode()
+    key = base64.b64encode(os.urandom(16)).decode()
     want_accept = base64.b64encode(
         hashlib.sha1((key + _WS_GUID).encode()).digest()
     ).decode()
@@ -221,13 +223,8 @@ def ws_connect(url: str, *, tls_insecure: bool = False,
             f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
         ).encode()
     )
-    buf = b""
-    while b"\r\n\r\n" not in buf:
-        chunk = sock.recv(4096)
-        if not chunk:
-            raise ConnectionError("websocket handshake: connection closed")
-        buf += chunk
-    head, _, rest = buf.partition(b"\r\n\r\n")
+    reader = SocketReader(sock, "websocket handshake")
+    head, rest = reader.line(b"\r\n\r\n"), bytes(reader.buf)
     lines = head.decode("latin-1").split("\r\n")
     if " 101 " not in lines[0] + " ":
         raise ConnectionError(f"websocket handshake rejected: {lines[0]!r}")
@@ -238,179 +235,108 @@ def ws_connect(url: str, *, tls_insecure: bool = False,
     return sock, rest
 
 
-@dataclass
-class WebSocketSpooler:
+def client_frame(opcode: int, payload: bytes, mask_key: bytes) -> bytes:
+    """One masked client->server websocket frame (RFC 6455 §5.2-5.3)."""
+    n = len(payload)
+    head = bytes([0x80 | opcode])
+    if n < 126:
+        head += bytes([0x80 | n])
+    elif n < 1 << 16:
+        head += bytes([0x80 | 126]) + n.to_bytes(2, "big")
+    else:
+        head += bytes([0x80 | 127]) + n.to_bytes(8, "big")
+    masked = bytes(b ^ mask_key[i % 4] for i, b in enumerate(payload))
+    return head + mask_key + masked
+
+
+def websocket_bridge(url: str, spool_dir: str, open_message: str | None = None,
+                     tls_insecure: bool = False) -> Bridge:
     """`websocket` input: connect to a ws:// URL as a client, spool each
     received text/binary message as one durable file (reference
-    internal/impl/io/input_websocket.go — url + optional open_message).
+    internal/impl/io/input_websocket.go: url + optional open_message).
 
     Dependency-free RFC 6455 client over stdlib sockets: handshake
     (Sec-WebSocket-Key/-Accept, §4), frame parsing with extended lengths
-    (§5.2), ping→pong keepalive (§5.5.2-5.5.3), client-side masking (§5.3;
+    (§5.2), ping->pong keepalive (§5.5.2-5.5.3), client-side masking (§5.3;
     server frames arrive unmasked). Fragmented messages (FIN=0)
-    re-assemble before spooling. Same spool-bridge rationale as the other
-    push sources: the stream is the replayable file source."""
+    re-assemble before spooling. A close frame is a dropped connection;
+    a masked server frame is a protocol violation that fails the bridge
+    (§5.1). `tls_insecure` (input_websocket.go's tls.skip_cert_verify)
+    trusts any wss:// chain: in-process test servers and private CAs."""
 
-    url: str
-    spool_dir: str
-    open_message: str | None = None
-    # wss:// verification knob (input_websocket.go's tls.skip_cert_verify):
-    # True trusts any chain — in-process test servers and private CAs
-    tls_insecure: bool = False
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _sock: object = field(default=None, repr=False)
+    def connect() -> SocketReader:
+        sock, rest = ws_connect(url, tls_insecure=tls_insecure)
+        if open_message is not None:
+            sock.sendall(client_frame(0x1, open_message.encode(), os.urandom(4)))
+        sock.settimeout(None)  # an idle subscriber blocks on push traffic
+        return SocketReader(sock, "websocket", rest)
 
-    # -- frame helpers (client side) ---------------------------------------
-    @staticmethod
-    def client_frame(opcode: int, payload: bytes, mask_key: bytes) -> bytes:
-        """One masked client->server frame (§5.2-5.3)."""
-        n = len(payload)
-        head = bytes([0x80 | opcode])
-        if n < 126:
-            head += bytes([0x80 | n])
-        elif n < 1 << 16:
-            head += bytes([0x80 | 126]) + n.to_bytes(2, "big")
-        else:
-            head += bytes([0x80 | 127]) + n.to_bytes(8, "big")
-        masked = bytes(b ^ mask_key[i % 4] for i, b in enumerate(payload))
-        return head + mask_key + masked
+    def close(reader: SocketReader) -> None:
+        try:
+            reader.sock.sendall(client_frame(0x8, b"", os.urandom(4)))
+        except OSError:
+            pass
+        hang_up(reader.sock)
 
-    def start(self) -> "WebSocketSpooler":
-        import os as _os
+    def messages(reader: SocketReader, stop):
+        fragments: list[bytes] = []
+        while True:
+            b0, b1 = reader.exact(2)
+            fin, opcode = b0 & 0x80, b0 & 0x0F
+            n = b1 & 0x7F
+            if n == 126:
+                n = int.from_bytes(reader.exact(2), "big")
+            elif n == 127:
+                n = int.from_bytes(reader.exact(8), "big")
+            if b1 & 0x80:
+                # a masked server->client frame is a protocol error the
+                # client MUST fail the connection on (§5.1): spooling it
+                # (even unmasked) would feed a non-conforming peer's bytes
+                # into the pipeline
+                raise ValueError("websocket: masked server frame (RFC 6455 §5.1)")
+            payload = reader.exact(n)
+            if opcode == 0x9:  # ping -> pong with same payload
+                reader.sock.sendall(client_frame(0xA, payload, os.urandom(4)))
+            elif opcode == 0x8:
+                raise ConnectionError("websocket: the server closed the connection")
+            elif opcode in (0x1, 0x2, 0x0):
+                fragments.append(payload)
+                if fin:
+                    yield b"".join(fragments), {}, None
+                    fragments = []
 
-        spool = Spool(self.spool_dir)
-        sock, rest = ws_connect(self.url, tls_insecure=self.tls_insecure)
-        if self.open_message is not None:
-            sock.sendall(self.client_frame(0x1, self.open_message.encode(), _os.urandom(4)))
-        self._sock = sock
-
-        def read_exact(n: int, pre: bytearray) -> bytes:
-            while len(pre) < n:
-                chunk = sock.recv(65536)
-                if not chunk:
-                    raise ConnectionError("closed")
-                pre.extend(chunk)
-            out = bytes(pre[:n])
-            del pre[:n]
-            return out
-
-        def reader() -> None:
-            pre = bytearray(rest)
-            fragments: list[bytes] = []
-            try:
-                while not self._stop.is_set():
-                    b0, b1 = read_exact(2, pre)
-                    fin, opcode = b0 & 0x80, b0 & 0x0F
-                    n = b1 & 0x7F
-                    if n == 126:
-                        n = int.from_bytes(read_exact(2, pre), "big")
-                    elif n == 127:
-                        n = int.from_bytes(read_exact(8, pre), "big")
-                    if b1 & 0x80:
-                        # a masked server->client frame is a protocol error
-                        # the client MUST fail the connection on (§5.1) —
-                        # spooling it (even unmasked) would feed a
-                        # non-conforming peer's bytes into the pipeline
-                        raise ConnectionError(
-                            "websocket: masked server frame (RFC 6455 §5.1) — failing the connection"
-                        )
-                    payload = read_exact(n, pre)
-                    if opcode == 0x9:  # ping -> pong with same payload
-                        sock.sendall(self.client_frame(0xA, payload, _os.urandom(4)))
-                        continue
-                    if opcode == 0x8:  # close
-                        return
-                    if opcode in (0x1, 0x2, 0x0):
-                        fragments.append(payload)
-                        if fin:
-                            spool.put(b"".join(fragments))
-                            fragments = []
-            except (ConnectionError, OSError):
-                # socket teardown ends the input, like the reference; close
-                # eagerly so a protocol failure (masked server frame) tears
-                # the connection down rather than leaving it half-open
-                try:
-                    sock.close()
-                except OSError:
-                    pass
-                return
-
-        self._thread = threading.Thread(target=reader, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._sock is not None:
-            try:
-                import os as _os
-
-                self._sock.sendall(self.client_frame(0x8, b"", _os.urandom(4)))
-                self._sock.close()
-            except OSError:
-                pass
-            self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("websocket", spool_dir, connect, messages, close=close)
 
 
-@dataclass
-class HttpPollSpooler:
+def http_poll_bridge(url: str, spool_dir: str, interval_s: float = 1.0,
+                     method: str = "GET", headers: dict | None = None,
+                     drop_empty: bool = True, drop_repeats: bool = False) -> Bridge:
     """`http_client` input: poll a URL on an interval and spool each
     response body as one durable file (reference
-    internal/impl/io/input_http_client.go — GET-per-interval with an
-    optional payload; streaming codecs apply downstream).
+    internal/impl/io/input_http_client.go: GET-per-interval with an
+    optional payload; streaming codecs apply downstream). A failed poll
+    is a dropped connection, retried with the bridge's backoff.
 
     Spool-bridge rationale as above: polling is a side effect, the stream
     is the replayable file source. Dedup of identical consecutive
     responses is opt-in (`drop_repeats`, the reference's drop_empty
     cousin): pollers against mostly-static endpoints would otherwise spool
     one copy per tick."""
+    import urllib.request
 
-    url: str
-    spool_dir: str
-    interval_s: float = 1.0
-    method: str = "GET"
-    headers: dict | None = None
-    drop_empty: bool = True
-    drop_repeats: bool = False
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
+    last = {"body": None}
 
-    def start(self) -> "HttpPollSpooler":
-        import urllib.request
+    def messages(_client, stop):
+        while not stop.is_set():
+            req = urllib.request.Request(url, method=method, headers=headers or {})
+            with urllib.request.urlopen(req, timeout=10) as resp:
+                body = resp.read()
+            if (body or not drop_empty) and not (drop_repeats and body == last["body"]):
+                last["body"] = body
+                yield body, {}, None
+            stop.wait(interval_s)
 
-        spool = Spool(self.spool_dir)
-        state = {"last": None}
-
-        def poll_loop() -> None:
-            while not self._stop.is_set():
-                try:
-                    req = urllib.request.Request(
-                        self.url, method=self.method, headers=self.headers or {}
-                    )
-                    with urllib.request.urlopen(req, timeout=10) as resp:
-                        body = resp.read()
-                    if (body or not self.drop_empty) and not (
-                        self.drop_repeats and body == state["last"]
-                    ):
-                        state["last"] = body
-                        spool.put(body)
-                except Exception:  # noqa: BLE001 — poll faults retry next tick
-                    pass
-                self._stop.wait(self.interval_s)
-
-        self._thread = threading.Thread(target=poll_loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("http_client", spool_dir, lambda: None, messages)
 
 
 class HttpServeOutput:

@@ -19,7 +19,7 @@ availability-gated. The jar-backed `input.kafka`/`output.kafka` path
 executors, while this client consumes on the driver-side spool bridge.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> KafkaSpooler fetches per-partition from tracked offsets and
+- input  -> kafka_bridge fetches per-partition from tracked offsets and
   persists each record as a durable spool file BEFORE advancing the
   offset file (write-then-commit = at-least-once, the reference input's
   guarantee). topic/partition/offset/key ride the spool file's header
@@ -51,9 +51,10 @@ import struct
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from pathlib import Path
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge, batch, close_client
+from bento_spark.streaming.reader import SocketReader
 
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) — slice-by-8
@@ -377,6 +378,10 @@ _API_SASL_HANDSHAKE = 17
 _API_VERSIONS = 18
 _API_SASL_AUTHENTICATE = 36
 
+# the broker-side wait of a fetch that finds nothing, and the input's wait
+# after a pass over the partitions that spooled nothing
+POLL_WAIT_MS = 200
+
 
 class _TransientMetadataError(ConnectionError):
     """Topic error the broker resolves by itself (leader election,
@@ -392,9 +397,9 @@ class KafkaWireClient:
     def __init__(self, host: str, port: int, client_id: str = "bento-spark",
                  timeout: float = 10.0, sasl: dict | None = None):
         self.sock = socket.create_connection((host, port), timeout=timeout)
+        self.reader = SocketReader(self.sock, "kafka")
         self.client_id = client_id
         self._corr = 0
-        self._buf = bytearray()
         self.api_versions = self._api_versions()
         if sasl:
             self._sasl_auth(sasl)
@@ -453,16 +458,6 @@ class KafkaWireClient:
 
     # -- framing ------------------------------------------------------------
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("kafka: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
     def _call(self, api_key: int, api_version: int, body: bytes) -> _Reader:
         self._corr += 1
         header = (
@@ -473,8 +468,8 @@ class KafkaWireClient:
         )
         frame = header + body
         self.sock.sendall(_I32.pack(len(frame)) + frame)
-        size = _I32.unpack(self._read_exact(4))[0]
-        resp = self._read_exact(size)
+        size = _I32.unpack(self.reader.exact(4))[0]
+        resp = self.reader.exact(size)
         r = _Reader(resp)
         corr = r.i32()
         if corr != self._corr:
@@ -654,127 +649,72 @@ class KafkaWireClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class KafkaSpooler:
+def kafka_bridge(host: str, port: int, topics: list[str], spool_dir: str,
+                 checkpoint_limit: int = 4096, sasl: dict | None = None) -> Bridge:
     """`kafka_franz` input (input_kafka_franz.go): fetch every partition of
     the subscribed topics from tracked offsets and spool each record as one
-    durable file. Commit order is files-then-offsets (the offset file is
-    atomically renamed AFTER the records it covers are durable), so a crash
-    between the two replays records instead of losing them — at-least-once,
-    the reference's guarantee. `checkpoint_limit` bounds records fetched
-    per poll (the reference's in-flight bound)."""
+    durable file. Commit order is files-then-offsets (`<spool>/.offsets.json`
+    is atomically renamed AFTER the records it covers are durable), so a
+    crash between the two replays records instead of losing them:
+    at-least-once, the reference's guarantee. Every (re)connect resumes
+    from that file. `checkpoint_limit` bounds records spooled per fetch
+    (the reference's in-flight bound). An undecodable batch (compression,
+    CRC, magic) fails the bridge: skipping would lose data, retrying
+    would spin on the same offset."""
+    offsets_path = Path(spool_dir) / ".offsets.json"
 
-    host: str
-    port: int
-    topics: list[str]
-    spool_dir: str
-    checkpoint_limit: int = 4096
-    poll_wait_ms: int = 200
-    sasl: dict | None = None
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _client: KafkaWireClient | None = field(default=None, repr=False)
-
-    def _reconnect(self) -> bool:
-        """Replace the dead connection with backoff; False once stopped."""
-        delay = 0.2
-        while not self._stop.is_set():
-            try:
-                self._client = KafkaWireClient(self.host, self.port,
-                                               sasl=self.sasl)
-                return True
-            except (ConnectionError, OSError):
-                self._stop.wait(delay)
-                delay = min(delay * 2, 5.0)
-        return False
-
-    def start(self) -> "KafkaSpooler":
-        spool = Spool(self.spool_dir)
-        client = KafkaWireClient(self.host, self.port, sasl=self.sasl)
-        self._client = client
-        meta = client.metadata(self.topics)
-        offsets_path = spool.dir / ".offsets.json"
-        offsets: dict[str, int] = {}
-        if offsets_path.exists():
-            offsets = {k: int(v) for k, v in json.loads(offsets_path.read_text()).items()}
-        partitions: list[tuple[str, int]] = []
-        for topic, parts in meta.items():
+    def connect():
+        client = KafkaWireClient(host, port, sasl=sasl)
+        offsets = ({k: int(v) for k, v in json.loads(offsets_path.read_text()).items()}
+                   if offsets_path.exists() else {})
+        partitions = []
+        for topic, parts in client.metadata(topics).items():
             for pid in sorted(parts):
                 partitions.append((topic, pid))
+                if f"{topic}/{pid}" not in offsets:
+                    offsets[f"{topic}/{pid}"] = client.list_offsets(topic, pid, -2)
+        return client, partitions, offsets
+
+    def commit(offsets: dict, key: str, next_offset: int) -> None:
+        offsets[key] = next_offset
+        tmp = offsets_path.with_name(".offsets.json.tmp")
+        tmp.write_text(json.dumps(offsets))
+        tmp.rename(offsets_path)
+
+    def messages(conn, stop):
+        client, partitions, offsets = conn
+        while not stop.is_set():
+            progressed = False
+            for topic, pid in partitions:
                 key = f"{topic}/{pid}"
-                if key not in offsets:
-                    offsets[key] = client.list_offsets(topic, pid, -2)
+                try:
+                    _hw, recs = client.fetch(topic, pid, offsets[key],
+                                             max_wait_ms=POLL_WAIT_MS)
+                except ValueError as e:
+                    raise ValueError(f"{e} (topic={topic} p={pid} offset={offsets[key]})") from e
+                recs = recs[:checkpoint_limit]
+                if recs:
+                    progressed = True
+                    # kafka_* metadata columns (input_kafka_franz.go record
+                    # metadata). The spec's "no timestamp" sentinel -1
+                    # clamps to 0; the tombstone flag tells a null value
+                    # (compacted-topic delete) from an empty message
+                    yield from batch([(value or b"", {
+                        "kafka_topic": topic, "kafka_partition": pid, "kafka_offset": off,
+                        "kafka_ts": max(ts, 0),
+                        "kafka_key": rkey.decode("utf-8", "replace") if rkey else None,
+                        "kafka_tombstone": value is None,
+                    }) for off, ts, rkey, value, _hdrs in recs],
+                        functools.partial(commit, offsets, key, recs[-1][0] + 1))
+            if not progressed:
+                stop.wait(POLL_WAIT_MS / 1000.0)
 
-        def commit_offsets() -> None:
-            tmp = spool.dir / ".offsets.json.tmp"
-            tmp.write_text(json.dumps(offsets))
-            tmp.rename(offsets_path)
-
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                progressed = False
-                for topic, pid in partitions:
-                    if self._stop.is_set():
-                        return
-                    key = f"{topic}/{pid}"
-                    try:
-                        assert self._client is not None
-                        _hw, recs = self._client.fetch(
-                            topic, pid, offsets[key], max_wait_ms=self.poll_wait_ms
-                        )
-                    except (ConnectionError, OSError, AssertionError) as e:
-                        if self._stop.is_set():
-                            return  # socket closed by stop()
-                        # transient broker loss: reconnect with backoff
-                        # instead of silently killing the consumer
-                        print(f"kafka_franz: fetch failed ({e}); reconnecting",
-                              file=sys.stderr)
-                        if not self._reconnect():
-                            return
-                        continue
-                    except ValueError as e:
-                        # un-decodable batch (compression/CRC/magic):
-                        # surface loudly — skipping would lose data,
-                        # looping would spin on the same offset
-                        self.error = f"kafka_franz: {e} (topic={topic} p={pid} offset={offsets[key]})"
-                        print(self.error, file=sys.stderr)
-                        return
-                    for off, ts, rkey, value, _hdrs in recs[: self.checkpoint_limit]:
-                        # kafka_* metadata columns (input_kafka_franz.go
-                        # record metadata). The spec's "no timestamp"
-                        # sentinel -1 clamps to 0; the tombstone flag tells
-                        # a null value (compacted-topic delete) from an
-                        # empty message
-                        spool.put(value or b"", kafka_topic=topic, kafka_partition=pid,
-                                  kafka_offset=off, kafka_ts=max(ts, 0),
-                                  kafka_key=rkey.decode("utf-8", "replace") if rkey else None,
-                                  kafka_tombstone=value is None)
-                        offsets[key] = off + 1
-                        progressed = True
-                    if progressed:
-                        commit_offsets()
-                if not progressed:
-                    self._stop.wait(self.poll_wait_ms / 1000.0)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("kafka_franz", spool_dir, connect, messages,
+                  close=lambda conn: close_client(conn[0]))
 
 
 def kafka_columns(df):
-    """A KafkaSpooler spool's computed columns: a tombstone reads as a NULL
+    """A kafka_bridge spool's computed columns: a tombstone reads as a NULL
     `value` (compacted-topic delete semantics survive the spool bridge) and
     `kafka_ts` is a timestamp from the record's millis — the same surface
     as the jar-backed source (streaming/kafka.py), so pipelines swap
@@ -915,17 +855,7 @@ class MiniKafkaBroker:
             self._threads.append(t)
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
-
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
+        read_exact = SocketReader(conn, "kafka").exact
 
         # per-connection SASL session (sasl.go; KIP-152): authed starts
         # True only on brokers without credentials

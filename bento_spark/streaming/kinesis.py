@@ -9,13 +9,13 @@ ranges exactly like the real service.
 Reference: internal/impl/aws/input_kinesis.go (`streams`,
 `checkpoint_limit`; the reference checkpoints shard sequence numbers to
 DynamoDB for consumer-group balancing) and output_kinesis.go
-(interpolated partition key). Balancing across MULTIPLE spooler
-instances (the DynamoDB lease table) is out of scope — one spooler owns
+(interpolated partition key). Balancing across MULTIPLE bridge
+instances (the DynamoDB lease table) is out of scope — one bridge owns
 all shards of its streams, checkpointing sequence numbers to the spool
 dir the same way the kafka_franz bridge checkpoints offsets.
 
 Spark-first mapping (same spool-bridge rationale as kafka_franz):
-- input  -> KinesisSpooler iterates every shard from TRIM_HORIZON (or
+- input  -> kinesis_bridge iterates every shard from TRIM_HORIZON (or
   the checkpointed sequence), spools each record BEFORE advancing the
   sequence file (files-then-checkpoint = at-least-once). shard id +
   sequence number + partition key ride the spool file's header and surface as
@@ -31,10 +31,10 @@ import functools
 import hashlib
 import json
 import threading
-from dataclasses import dataclass, field
+from pathlib import Path
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge, batch, close_client
 from bento_spark.streaming.sqs import sigv4_headers
 
 _TARGET = "Kinesis_20131202"
@@ -113,107 +113,60 @@ class KinesisClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class KinesisSpooler:
+def kinesis_bridge(endpoint: str, streams: list[str], access_key: str, secret_key: str,
+                   spool_dir: str, region: str = "us-east-1",
+                   checkpoint_limit: int = 1000) -> Bridge:
     """`aws_kinesis` input (input_kinesis.go): iterate every shard of the
     subscribed streams, spool each record, checkpoint sequence numbers to
-    the spool dir AFTER the covered records are durable (files-then-
-    checkpoint = at-least-once — the reference's DynamoDB checkpointer
-    plays this role across balanced consumers)."""
+    `<spool>/.sequences.json` AFTER the covered records are durable
+    (files-then-checkpoint = at-least-once; the reference's DynamoDB
+    checkpointer plays this role across balanced consumers). Every
+    (re)connect re-acquires each shard's iterator after its checkpointed
+    sequence: an expired iterator or a lost connection resumes there."""
+    ckpt_path = Path(spool_dir) / ".sequences.json"
 
-    endpoint: str
-    streams: list[str]
-    access_key: str
-    secret_key: str
-    spool_dir: str
-    region: str = "us-east-1"
-    checkpoint_limit: int = 1000
-    poll_wait_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def connect():
+        client = KinesisClient(endpoint, access_key, secret_key, region=region)
+        sequences = json.loads(ckpt_path.read_text()) if ckpt_path.exists() else {}
+        iterators = {(stream, shard): client.get_shard_iterator(
+                         stream, shard, after_sequence=sequences.get(f"{stream}/{shard}"))
+                     for stream in streams for shard in client.list_shards(stream)}
+        return client, iterators, sequences
 
-    def start(self) -> "KinesisSpooler":
-        spool = Spool(self.spool_dir)
-        client = KinesisClient(self.endpoint, self.access_key, self.secret_key,
-                               region=self.region)
-        ckpt_path = spool.dir / ".sequences.json"
-        sequences: dict[str, str] = {}
-        if ckpt_path.exists():
-            sequences = json.loads(ckpt_path.read_text())
-        iterators: dict[tuple[str, str], str] = {}
-        for stream in self.streams:
-            for shard in client.list_shards(stream):
-                key = f"{stream}/{shard}"
-                iterators[(stream, shard)] = client.get_shard_iterator(
-                    stream, shard, after_sequence=sequences.get(key))
+    def commit(sequences: dict, key: str, sn: str) -> None:
+        sequences[key] = sn
+        tmp = ckpt_path.with_name(".sequences.json.tmp")
+        tmp.write_text(json.dumps(sequences))
+        tmp.rename(ckpt_path)
 
-        def commit() -> None:
-            tmp = spool.dir / ".sequences.json.tmp"
-            tmp.write_text(json.dumps(sequences))
-            tmp.rename(ckpt_path)
+    def messages(conn, stop):
+        client, iterators, sequences = conn
+        while not stop.is_set():
+            progressed = False
+            for (stream, shard), it in list(iterators.items()):
+                records, nxt = client.get_records(it, limit=checkpoint_limit)
+                if nxt:
+                    iterators[(stream, shard)] = nxt
+                else:
+                    # closed shard (resharding): a null iterator means the
+                    # shard is drained once these records are spooled
+                    del iterators[(stream, shard)]
+                if records:
+                    progressed = True
+                    # the reference's record metadata; the checkpoint
+                    # rides the batch's last record
+                    yield from batch([(base64.b64decode(rec.get("Data", "")), {
+                        "kinesis_stream": stream, "kinesis_shard": shard,
+                        "kinesis_sequence": rec.get("SequenceNumber", ""),
+                        "kinesis_partition_key": rec.get("PartitionKey", "")})
+                        for rec in records], functools.partial(
+                            commit, sequences, f"{stream}/{shard}",
+                            records[-1].get("SequenceNumber", "")))
+            if not progressed:
+                stop.wait(EMPTY_POLL_S)
 
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                progressed = False
-                for (stream, shard), it in list(iterators.items()):
-                    if self._stop.is_set():
-                        return
-                    try:
-                        try:
-                            records, nxt = client.get_records(
-                                it, limit=self.checkpoint_limit)
-                        except (ConnectionError, OSError):
-                            if self._stop.wait(0.5):
-                                return
-                            # expired/invalid iterator or network loss:
-                            # re-acquire from the checkpointed sequence
-                            # (retrying the same token would stall forever)
-                            try:
-                                iterators[(stream, shard)] = client.get_shard_iterator(
-                                    stream, shard,
-                                    after_sequence=sequences.get(f"{stream}/{shard}"))
-                            except (ConnectionError, OSError):
-                                pass
-                            continue
-                        if nxt:
-                            iterators[(stream, shard)] = nxt
-                        elif not records:
-                            # closed shard (resharding): a null iterator
-                            # with no records means the shard is drained
-                            del iterators[(stream, shard)]
-                            continue
-                        for rec in records:
-                            sn = rec.get("SequenceNumber", "")
-                            # the reference's record metadata
-                            spool.put(base64.b64decode(rec.get("Data", "")),
-                                      kinesis_stream=stream, kinesis_shard=shard,
-                                      kinesis_sequence=sn,
-                                      kinesis_partition_key=rec.get("PartitionKey", ""))
-                            sequences[f"{stream}/{shard}"] = sn
-                            progressed = True
-                        if records:
-                            commit()
-                        if not nxt and records:
-                            del iterators[(stream, shard)]  # closed, drained
-                    except Exception as e:  # decode/disk/protocol faults
-                        self.error = f"kinesis: {stream}/{shard}: {e}"
-                        print(self.error, file=sys.stderr)
-                        return
-                if not progressed:
-                    self._stop.wait(self.poll_wait_s)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("aws_kinesis", spool_dir, connect, messages,
+                  close=lambda conn: close_client(conn[0]))
 
 
 # --------------------------------------------------------------------------

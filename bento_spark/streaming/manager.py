@@ -205,7 +205,20 @@ class StreamManager:
             "state_rows": sum(
                 s.get("numRowsTotal", 0) for s in last.get("stateOperators", [])
             ),
+            "bridge": self._bridge_stats(info),
         }
+
+    @staticmethod
+    def _bridge_stats(info: _StreamInfo) -> dict | None:
+        """A spool-bridge input's bridge: {state, since, cause}
+        (streaming/bridge.py); a listener input is running while its
+        stream is."""
+        b = info.bridge
+        if b is None:
+            return None
+        return {"state": getattr(b, "state", "running"),
+                "since": getattr(b, "since", info.created_at),
+                "cause": getattr(b, "cause", None)}
 
     def list_streams(self) -> dict[str, dict]:
         """GET /streams: id -> {active, uptime}."""
@@ -238,11 +251,12 @@ class StreamManager:
         return out
 
     def ready(self) -> bool:
-        """GET /ready: every registered stream active (no streams = ready,
-        manager/api.go:32)."""
+        """GET /ready: every registered stream active and no input bridge
+        failed (no streams = ready, manager/api.go:32)."""
         with self._lock:
             infos = list(self._streams.values())
-        return all((not i.starting) and i.query.isActive for i in infos)
+        return all((not i.starting) and i.query.isActive
+                   and getattr(i.bridge, "state", None) != "failed" for i in infos)
 
     def stop_all(self) -> None:
         for sid in self.ids():

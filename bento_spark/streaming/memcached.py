@@ -34,6 +34,8 @@ import socket
 import threading
 import time
 
+from bento_spark.streaming.reader import SocketReader
+
 _CRLF = b"\r\n"
 
 
@@ -43,29 +45,7 @@ class MemcachedClient:
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
-
-    def _read_line(self) -> bytes:
-        while True:
-            i = self._buf.find(_CRLF)
-            if i >= 0:
-                line = bytes(self._buf[:i])
-                del self._buf[: i + 2]
-                return line
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("memcached: connection closed")
-            self._buf += chunk
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("memcached: connection closed mid-value")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
+        self.reader = SocketReader(self.sock, "memcached")
 
     def _store(self, verb: str, key: str, value: bytes, exptime_s: int) -> bool:
         if " " in key or "\r" in key or "\n" in key:
@@ -73,7 +53,7 @@ class MemcachedClient:
         self.sock.sendall(
             f"{verb} {key} 0 {exptime_s} {len(value)}".encode() + _CRLF + value + _CRLF
         )
-        resp = self._read_line()
+        resp = self.reader.line(_CRLF)
         if resp == b"STORED":
             return True
         if resp == b"NOT_STORED":
@@ -94,7 +74,7 @@ class MemcachedClient:
         self.sock.sendall(("get " + " ".join(keys)).encode() + _CRLF)
         out: dict[str, bytes] = {}
         while True:
-            line = self._read_line()
+            line = self.reader.line(_CRLF)
             if line == b"END":
                 return out
             # VALUE <key> <flags> <bytes>
@@ -102,12 +82,12 @@ class MemcachedClient:
             if parts[0] != "VALUE":
                 raise ConnectionError(f"memcached: get -> {line[:60]!r}")
             n = int(parts[3])
-            out[parts[1]] = self._read_exact(n)
-            self._read_exact(2)  # trailing CRLF
+            out[parts[1]] = self.reader.exact(n)
+            self.reader.exact(2)  # trailing CRLF
 
     def delete(self, key: str) -> bool:
         self.sock.sendall(f"delete {key}".encode() + _CRLF)
-        return self._read_line() == b"DELETED"
+        return self.reader.line(_CRLF) == b"DELETED"
 
     def close(self) -> None:
         try:
@@ -338,29 +318,12 @@ class MiniMemcachedServer:
             self._threads.append(t)
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "memcached")
 
         def read_line() -> bytes:
-            while True:
-                i = buf.find(_CRLF)
-                if i >= 0:
-                    line = bytes(buf[:i])
-                    del buf[: i + 2]
-                    return line
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
+            return reader.line(_CRLF)
 
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
+        read_exact = reader.exact
 
         try:
             while not self._stop.is_set():

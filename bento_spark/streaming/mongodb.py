@@ -36,6 +36,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bento_spark.streaming.reader import SocketReader, reader_of
 from bento_spark.streaming.sink import write_partitions
 
 # --------------------------------------------------------------------- BSON
@@ -133,19 +134,10 @@ def _frame(request_id: int, body: dict) -> bytes:
     return header + payload
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("mongodb connection closed")
-        buf += chunk
-    return buf
-
-
-def _read_msg(sock: socket.socket) -> dict:
-    length, _rid, _resp, opcode = struct.unpack("<iiii", _read_exact(sock, 16))
-    body = _read_exact(sock, length - 16)
+def _read_msg(src: SocketReader | socket.socket) -> dict:
+    reader = reader_of(src, "mongodb")
+    length, _rid, _resp, opcode = struct.unpack("<iiii", reader.exact(16))
+    body = reader.exact(length - 16)
     if opcode != _OP_MSG:
         raise ConnectionError(f"unexpected opcode {opcode}")
     # flagBits(4) + kind byte, then the body document
@@ -158,6 +150,7 @@ class MongoClient:
     def __init__(self, host: str = "127.0.0.1", port: int = 27017,
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
+        self.reader = SocketReader(self.sock, "mongodb")
         self._rid = 0
         self._lock = threading.Lock()
 
@@ -165,7 +158,7 @@ class MongoClient:
         with self._lock:
             self._rid += 1
             self.sock.sendall(_frame(self._rid, {**cmd, "$db": db}))
-            reply = _read_msg(self.sock)
+            reply = _read_msg(self.reader)
         if reply.get("ok") != 1 and reply.get("ok") != 1.0:
             raise ConnectionError(f"mongodb {next(iter(cmd))} failed: {reply}")
         return reply
@@ -340,16 +333,11 @@ class MiniMongoServer:
         return {"ok": 0, "errmsg": f"unknown command {list(cmd)[:1]}"}
 
     def _serve_conn(self, conn: socket.socket) -> None:
+        reader = SocketReader(conn, "mongodb")
         try:
             while not self._stop.is_set():
-                length_raw = b""
-                while len(length_raw) < 16:
-                    chunk = conn.recv(16 - len(length_raw))
-                    if not chunk:
-                        return
-                    length_raw += chunk
-                length, rid, _, opcode = struct.unpack("<iiii", length_raw)
-                body = _read_exact(conn, length - 16)
+                length, rid, _, opcode = struct.unpack("<iiii", reader.exact(16))
+                body = reader.exact(length - 16)
                 cmd = bson_decode(body[5:])
                 with self._lock:
                     reply = self._handle(cmd)

@@ -10,7 +10,7 @@ spec, which makes the connector REAL and e2e-testable in-process instead
 of availability-gated.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> MqttSpooler subscribes and persists each PUBLISH payload as a
+- input  -> mqtt_bridge subscribes and persists each PUBLISH payload as a
   durable spool file; the stream is the replayable file source, so offset
   log + exactly-once downstream hold (a raw MQTT socket could never be a
   replayable Spark source; QoS1 PUBACK is only sent AFTER the spool file
@@ -35,9 +35,9 @@ import socket
 import struct
 import threading
 import uuid
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader, hang_up, reader_of
 
 CONNECT, CONNACK, PUBLISH, PUBACK = 1, 2, 3, 4
 SUBSCRIBE, SUBACK, UNSUBSCRIBE, UNSUBACK = 8, 9, 10, 11
@@ -68,32 +68,22 @@ def encode_packet(ptype: int, flags: int, body: bytes) -> bytes:
     return bytes([(ptype << 4) | flags]) + encode_remaining_len(len(body)) + body
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = bytearray()
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("mqtt: connection closed mid-packet")
-        buf += chunk
-    return bytes(buf)
-
-
-def read_packet(sock: socket.socket) -> tuple[int, int, bytes]:
-    """-> (type, flags, body). Raises ConnectionError on EOF."""
-    first = sock.recv(1)
-    if not first:
-        raise ConnectionError("mqtt: connection closed")
-    ptype, flags = first[0] >> 4, first[0] & 0x0F
+def read_packet(src: SocketReader | socket.socket) -> tuple[int, int, bytes]:
+    """-> (type, flags, body) from a reader, or from a socket that nothing
+    else reads ahead on. Raises ConnectionError on EOF."""
+    reader = reader_of(src, "mqtt")
+    first = reader.exact(1)[0]
+    ptype, flags = first >> 4, first & 0x0F
     mult, n = 1, 0
     for _ in range(4):
-        b = _read_exact(sock, 1)[0]
+        b = reader.exact(1)[0]
         n += (b & 0x7F) * mult
         if not b & 0x80:
             break
         mult *= 128
     else:
         raise ValueError("mqtt: malformed remaining length")
-    return ptype, flags, _read_exact(sock, n) if n else b""
+    return ptype, flags, reader.exact(n) if n else b""
 
 
 def topic_matches(filt: str, topic: str) -> bool:
@@ -122,12 +112,13 @@ class MqttClient:
     def __init__(self, host: str, port: int, client_id: str | None = None,
                  keepalive: int = 60, clean_session: bool = True, timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
+        self.reader = SocketReader(self.sock, "mqtt")
         self._pid = 0
         cid = client_id or f"bento-spark-{uuid.uuid4().hex[:12]}"
         flags = 0x02 if clean_session else 0x00
         body = _enc_str("MQTT") + bytes([4, flags]) + struct.pack(">H", keepalive) + _enc_str(cid)
         self.sock.sendall(encode_packet(CONNECT, 0, body))
-        ptype, _, ack = read_packet(self.sock)
+        ptype, _, ack = read_packet(self.reader)
         if ptype != CONNACK or len(ack) != 2:
             raise ConnectionError(f"mqtt: expected CONNACK, got type {ptype}")
         if ack[1] != 0:
@@ -143,7 +134,7 @@ class MqttClient:
         for t in topics:
             body += _enc_str(t) + bytes([qos])
         self.sock.sendall(encode_packet(SUBSCRIBE, 0x02, body))
-        ptype, _, ack = read_packet(self.sock)
+        ptype, _, ack = read_packet(self.reader)
         if ptype != SUBACK or struct.unpack(">H", ack[:2])[0] != pid:
             raise ConnectionError("mqtt: SUBSCRIBE not acknowledged")
         if any(rc == 0x80 for rc in ack[2:]):
@@ -158,7 +149,7 @@ class MqttClient:
             body += struct.pack(">H", pid)
         self.sock.sendall(encode_packet(PUBLISH, flags, body + payload))
         if qos:
-            ptype, _, ack = read_packet(self.sock)
+            ptype, _, ack = read_packet(self.reader)
             if ptype != PUBACK or struct.unpack(">H", ack[:2])[0] != pid:
                 raise ConnectionError("mqtt: PUBACK missing for QoS1 publish")
 
@@ -168,7 +159,7 @@ class MqttClient:
         acks it with `puback` once the message is safe. Skips PINGRESP;
         None on DISCONNECT."""
         while True:
-            ptype, flags, body = read_packet(self.sock)
+            ptype, flags, body = read_packet(self.reader)
             if ptype == PUBLISH:
                 tlen = struct.unpack(">H", body[:2])[0]
                 topic = body[2:2 + tlen].decode("utf-8")
@@ -208,64 +199,32 @@ class MqttClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class MqttSpooler:
+def mqtt_bridge(host: str, port: int, topics: list[str], spool_dir: str,
+                qos: int = 1, client_id: str | None = None,
+                clean_session: bool = True) -> Bridge:
     """`mqtt` input (input.go): subscribe and spool each message as one
-    durable file. QoS1 semantics hold end-to-end: the loop PUBACKs a
-    message only after its spool put returns (the file IS the ack
-    barrier); a put that raises acks nothing and ends the loop."""
+    durable file. QoS1 semantics hold end-to-end: a message is PUBACKed
+    only after its spool put returns (the file IS the ack barrier)."""
 
-    host: str
-    port: int
-    topics: list[str]
-    spool_dir: str
-    qos: int = 1
-    client_id: str | None = None
-    clean_session: bool = True
-    _client: MqttClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "MqttSpooler":
-        spool = Spool(self.spool_dir)
-        # subscribe BEFORE returning so no publish races the subscription
-        client = MqttClient(self.host, self.port, client_id=self.client_id,
-                            clean_session=self.clean_session)
-        client.subscribe(list(self.topics), qos=self.qos)
-        # block forever on push traffic — the connect-time timeout would
+    def connect() -> MqttClient:
+        client = MqttClient(host, port, client_id=client_id, clean_session=clean_session)
+        client.subscribe(list(topics), qos=qos)
+        # block forever on push traffic: the connect-time timeout would
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
-        self._client = client
+        return client
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_publish()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or broker
-                if got is None:
-                    return
-                topic, payload, pid, _retained = got
-                # the reference's mqtt_topic metadata
-                spool.put(payload, mqtt_topic=topic)
-                if pid is not None:
-                    try:
-                        client.puback(pid)
-                    except OSError:
-                        return  # socket closed by stop() or broker
+    def messages(client: MqttClient, stop):
+        while True:
+            got = client.recv_publish()
+            if got is None:
+                raise ConnectionError("mqtt: broker sent DISCONNECT")
+            topic, payload, pid, _retained = got
+            ack = None if pid is None else functools.partial(client.puback, pid)
+            # the reference's mqtt_topic metadata
+            yield payload, {"mqtt_topic": topic}, ack
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()  # unblocks the recv loop
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("mqtt", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------
@@ -323,6 +282,7 @@ class MiniMqttBroker:
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
+        self._conns: set[socket.socket] = set()
 
     def start(self) -> "MiniMqttBroker":
         srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -338,6 +298,8 @@ class MiniMqttBroker:
                     conn, _ = srv.accept()
                 except OSError:
                     return
+                with self._lock:
+                    self._conns.add(conn)
                 t = threading.Thread(target=self._serve, args=(conn,), daemon=True)
                 t.start()
                 self._threads.append(t)
@@ -348,15 +310,16 @@ class MiniMqttBroker:
         return self
 
     def _serve(self, conn: socket.socket) -> None:
+        reader = SocketReader(conn, "mqtt")
         try:
-            ptype, _, body = read_packet(conn)
+            ptype, _, body = read_packet(reader)
             if ptype != CONNECT:
                 conn.close()
                 return
             # accept any 3.1.1 client: session-present=0, rc=0
             conn.sendall(encode_packet(CONNACK, 0, b"\x00\x00"))
             while not self._stop.is_set():
-                ptype, flags, body = read_packet(conn)
+                ptype, flags, body = read_packet(reader)
                 if ptype == SUBSCRIBE:
                     pid = struct.unpack(">H", body[:2])[0]
                     i, granted = 2, bytearray()
@@ -402,10 +365,8 @@ class MiniMqttBroker:
         finally:
             with self._lock:
                 self._subs = [(c, f, q) for c, f, q in self._subs if c is not conn]
-            try:
-                conn.close()
-            except OSError:
-                pass
+                self._conns.discard(conn)
+            hang_up(conn)
 
     @staticmethod
     def _deliver(conn: socket.socket, topic: str, payload: bytes,
@@ -417,17 +378,13 @@ class MiniMqttBroker:
             pass  # dead subscriber: pruned when its serve loop exits
 
     def stop(self) -> None:
+        """Die like a broker: the port is free for a new broker at once
+        and every client sees its connection drop."""
         self._stop.set()
         if self._server is not None:
-            try:
-                self._server.close()
-            except OSError:
-                pass
+            hang_up(self._server)
             self._server = None
         with self._lock:
-            for c, _, _ in self._subs:
-                try:
-                    c.close()
-                except OSError:
-                    pass
-            self._subs = []
+            conns, self._conns, self._subs = list(self._conns), set(), []
+        for c in conns:
+            hang_up(c)

@@ -30,9 +30,9 @@ import functools
 import socket
 import struct
 import threading
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader
 
 _PROTO = {"PAIR": 16, "PUB": 32, "SUB": 33, "REQ": 48, "REP": 49,
           "PUSH": 80, "PULL": 81}
@@ -45,9 +45,9 @@ class NanomsgConnection:
 
     def __init__(self, sock: socket.socket, socket_type: str):
         self.sock = sock
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "nanomsg")
         self.sock.sendall(b"\x00SP\x00" + struct.pack(">HH", _PROTO[socket_type], 0))
-        hdr = self._read_exact(8)
+        hdr = self.reader.exact(8)
         if hdr[:4] != b"\x00SP\x00":
             raise ConnectionError("nanomsg: bad handshake header")
         peer_proto = struct.unpack(">H", hdr[4:6])[0]
@@ -57,22 +57,12 @@ class NanomsgConnection:
                 f"nanomsg: incompatible peer protocol {peer_proto} for "
                 f"{socket_type} (want {want})")
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("nanomsg: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
     def send_msg(self, payload: bytes) -> None:
         self.sock.sendall(struct.pack(">Q", len(payload)) + payload)
 
     def recv_msg(self) -> bytes:
-        n = struct.unpack(">Q", self._read_exact(8))[0]
-        return self._read_exact(n)
+        n = struct.unpack(">Q", self.reader.exact(8))[0]
+        return self.reader.exact(n)
 
     def close(self) -> None:
         try:
@@ -240,64 +230,37 @@ class NanomsgSocket:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class NanomsgSpooler:
+def nanomsg_bridge(socket_type: str, spool_dir: str, urls: list[str] = (),
+                   bind: bool = False, sub_filters: list[str] | None = None) -> Bridge:
     """`nanomsg` input (input.go): PULL or SUB per `socket_type`; SUB
-    REQUIRES at least one sub_filter ('' = everything — input.go:109).
+    REQUIRES at least one sub_filter ('' = everything, input.go:109).
     Each message spools as one durable file (at-most-once once delivered,
-    the mangos contract — no acks in the protocol)."""
+    the mangos contract: no acks in the protocol). In bind mode the
+    bridge's `port` is the bound port."""
+    if socket_type not in ("PULL", "SUB"):
+        raise ValueError("nanomsg input socket_type must be PULL or SUB")
+    if socket_type == "SUB" and not sub_filters:
+        raise ValueError(
+            "must provide at least one sub filter when connecting with a "
+            "SUB socket, in order to subscribe to all messages add an "
+            "empty string")  # input.go:109 verbatim contract
 
-    socket_type: str  # PULL | SUB
-    spool_dir: str
-    urls: list[str] = field(default_factory=list)
-    bind: bool = False
-    sub_filters: list[str] | None = None
-    _sock: NanomsgSocket | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "NanomsgSpooler":
-        if self.socket_type not in ("PULL", "SUB"):
-            raise ValueError("nanomsg input socket_type must be PULL or SUB")
-        if self.socket_type == "SUB" and not self.sub_filters:
-            raise ValueError(
-                "must provide at least one sub filter when connecting with a "
-                "SUB socket, in order to subscribe to all messages add an "
-                "empty string")  # input.go:109 verbatim contract
-        spool = Spool(self.spool_dir)
-        sock = NanomsgSocket(
-            self.socket_type,
-            [f.encode("utf-8") for f in (self.sub_filters or [])])
-        if self.bind:
-            host, port = parse_nanomsg_url(self.urls[0])
-            sock.bind(host, port)
+    def connect() -> NanomsgSocket:
+        sock = NanomsgSocket(socket_type, [f.encode("utf-8") for f in (sub_filters or [])])
+        if bind:
+            sock.bind(*parse_nanomsg_url(urls[0]))
         else:
-            for u in self.urls:
+            for u in urls:
                 sock.connect(*parse_nanomsg_url(u))
-        self._sock = sock
+        return sock
 
-        def run() -> None:
-            while not self._stop.is_set():
-                msg = sock.recv(timeout=0.2)
-                if msg is not None:
-                    spool.put(msg)
+    def messages(sock: NanomsgSocket, stop):
+        while not stop.is_set():
+            msg = sock.recv(timeout=0.2)
+            if msg is not None:
+                yield msg, {}, None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    @property
-    def port(self) -> int | None:
-        return self._sock.port if self._sock else None
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._sock is not None:
-            self._sock.close()
-            self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("nanomsg", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------

@@ -11,7 +11,7 @@ spec, which makes the connector REAL and e2e-testable in-process instead
 of availability-gated.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> NatsSpooler subscribes and persists each MSG payload as a
+- input  -> nats_bridge subscribes and persists each MSG payload as a
   durable spool file; the stream is the replayable file source, so offset
   log + exactly-once downstream hold. Core NATS is fire-and-forget
   (at-most-once — no acks in the protocol; JetStream adds them but is a
@@ -36,9 +36,9 @@ import json
 import socket
 import threading
 import uuid
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
+from bento_spark.streaming.reader import SocketReader
 
 _CRLF = b"\r\n"
 
@@ -62,42 +62,6 @@ def subject_matches(filt: str, subject: str) -> bool:
     return len(fparts) == len(sparts)
 
 
-class _LineSocket:
-    """Buffered reader over a socket: CRLF-terminated protocol lines plus
-    exact-size payload reads (MSG/PUB bodies)."""
-
-    def __init__(self, sock: socket.socket):
-        self.sock = sock
-        self._buf = bytearray()
-
-    def read_line(self) -> bytes:
-        while True:
-            i = self._buf.find(_CRLF)
-            if i >= 0:
-                line = bytes(self._buf[:i])
-                del self._buf[: i + 2]
-                return line
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("nats: connection closed")
-            self._buf += chunk
-
-    def read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("nats: connection closed mid-payload")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
-
-# --------------------------------------------------------------------------
-# client
-# --------------------------------------------------------------------------
-
-
 class NatsClient:
     """Minimal synchronous core-NATS client: connect (INFO/CONNECT
     handshake), publish, subscribe (with optional queue group), blocking
@@ -107,9 +71,9 @@ class NatsClient:
     def __init__(self, host: str, port: int, name: str | None = None,
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._io = _LineSocket(self.sock)
+        self._io = SocketReader(self.sock, "nats")
         self._sid = 0
-        info = self._io.read_line()
+        info = self._io.line(_CRLF)
         if not info.startswith(b"INFO "):
             raise ConnectionError(f"nats: expected INFO, got {info[:40]!r}")
         self.server_info = json.loads(info[5:])
@@ -119,7 +83,7 @@ class NatsClient:
         self.sock.sendall(b"CONNECT " + json.dumps(opts).encode() + _CRLF)
         # flush barrier so CONNECT errors surface deterministically
         self.sock.sendall(b"PING" + _CRLF)
-        line = self._io.read_line()
+        line = self._io.line(_CRLF)
         if line.startswith(b"-ERR"):
             raise ConnectionError(f"nats: {line.decode(errors='replace')}")
         if line != b"PONG":
@@ -142,15 +106,15 @@ class NatsClient:
         """Block for the next MSG -> (subject, sid, reply_subject, payload);
         answers PING inline; skips +OK."""
         while True:
-            line = self._io.read_line()
+            line = self._io.line(_CRLF)
             if line.startswith(b"MSG "):
                 parts = line.decode().split(" ")
                 # MSG <subject> <sid> [reply-to] <#bytes>
                 subject, sid = parts[1], int(parts[2])
                 reply = parts[3] if len(parts) == 5 else None
                 nbytes = int(parts[-1])
-                payload = self._io.read_exact(nbytes)
-                self._io.read_exact(2)  # trailing CRLF
+                payload = self._io.exact(nbytes)
+                self._io.exact(2)  # trailing CRLF
                 return subject, sid, reply, payload
             if line == b"PING":
                 self.sock.sendall(b"PONG" + _CRLF)
@@ -164,7 +128,7 @@ class NatsClient:
         """PING/PONG round-trip — everything written before it has been
         processed by the server when this returns."""
         self.sock.sendall(b"PING" + _CRLF)
-        while self._io.read_line() != b"PONG":
+        while self._io.line(_CRLF) != b"PONG":
             pass
 
     def request(self, subject: str, payload: bytes, timeout: float = 5.0,
@@ -202,55 +166,31 @@ class NatsClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class NatsSpooler:
+def nats_bridge(host: str, port: int, subject: str, spool_dir: str,
+                queue: str | None = None) -> Bridge:
     """`nats` input (input.go): subscribe (optionally as a queue-group
     member) and spool each message as one durable file. Core NATS is
-    at-most-once — a message the spooler never saw was never delivered;
-    everything it did see is durable before the next recv."""
+    at-most-once: a message sent while the bridge was not subscribed was
+    never delivered; everything it did see is durable before the next
+    recv."""
 
-    host: str
-    port: int
-    subject: str
-    spool_dir: str
-    queue: str | None = None
-    _client: NatsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "NatsSpooler":
-        spool = Spool(self.spool_dir)
-        # subscribe + flush BEFORE returning so no publish races it
-        client = NatsClient(self.host, self.port)
-        client.subscribe(self.subject, queue=self.queue)
+    def connect() -> NatsClient:
+        client = NatsClient(host, port)
+        # subscribe + flush BEFORE start() returns, so no publish races it
+        client.subscribe(subject, queue=queue)
         client.flush()
-        # block forever on push traffic — the connect-time timeout would
+        # block forever on push traffic: the connect-time timeout would
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
-        self._client = client
+        return client
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_msg()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server
-                subject, _sid, reply, payload = got
-                # input.go:200-201 metadata
-                spool.put(payload, nats_subject=subject, nats_reply_subject=reply or None)
+    def messages(client: NatsClient, stop):
+        while True:
+            subj, _sid, reply, payload = client.recv_msg()
+            # input.go:200-201 metadata
+            yield payload, {"nats_subject": subj, "nats_reply_subject": reply or None}, None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()  # unblocks the recv loop
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("nats", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------
@@ -429,13 +369,13 @@ class MiniNatsServer:
             self._threads.append(t)
 
     def _serve(self, conn: socket.socket) -> None:
-        io = _LineSocket(conn)
+        io = SocketReader(conn, "nats")
         info = {"server_id": "mini", "version": "0.0-test", "proto": 1,
                 "max_payload": 1 << 20}
         try:
             conn.sendall(b"INFO " + json.dumps(info).encode() + _CRLF)
             while not self._stop.is_set():
-                line = io.read_line()
+                line = io.line(_CRLF)
                 if not line:
                     continue
                 verb = line.split(b" ", 1)[0].upper()
@@ -462,8 +402,8 @@ class MiniNatsServer:
                     subject = parts[1]
                     reply = parts[2] if len(parts) == 4 else None
                     nbytes = int(parts[-1])
-                    payload = io.read_exact(nbytes)
-                    io.read_exact(2)
+                    payload = io.exact(nbytes)
+                    io.exact(2)
                     if not self._js_intercept(subject, reply, {}, payload):
                         self._route(subject, reply, payload)
                 elif verb == b"HPUB":
@@ -472,8 +412,8 @@ class MiniNatsServer:
                     subject = parts[1]
                     reply = parts[2] if len(parts) == 5 else None
                     hdr_len, total = int(parts[-2]), int(parts[-1])
-                    blob = io.read_exact(total)
-                    io.read_exact(2)
+                    blob = io.exact(total)
+                    io.exact(2)
                     _st, hdrs = _parse_headers(blob[:hdr_len])
                     payload = blob[hdr_len:]
                     if not self._js_intercept(subject, reply, hdrs, payload):
@@ -745,13 +685,13 @@ class NatsJsClient(NatsClient):
         """Next MSG or HMSG -> (subject, sid, reply, status, headers,
         payload); status/headers are '' / {} for plain MSG."""
         while True:
-            line = self._io.read_line()
+            line = self._io.line(_CRLF)
             if line.startswith(b"MSG "):
                 parts = line.decode().split(" ")
                 subject, sid = parts[1], int(parts[2])
                 reply = parts[3] if len(parts) == 5 else None
-                payload = self._io.read_exact(int(parts[-1]))
-                self._io.read_exact(2)
+                payload = self._io.exact(int(parts[-1]))
+                self._io.exact(2)
                 return subject, sid, reply, "", {}, payload
             if line.startswith(b"HMSG "):
                 parts = line.decode().split(" ")
@@ -759,8 +699,8 @@ class NatsJsClient(NatsClient):
                 subject, sid = parts[1], int(parts[2])
                 reply = parts[3] if len(parts) == 6 else None
                 hdr_len, total = int(parts[-2]), int(parts[-1])
-                blob = self._io.read_exact(total)
-                self._io.read_exact(2)
+                blob = self._io.exact(total)
+                self._io.exact(2)
                 status, hdrs = _parse_headers(blob[:hdr_len])
                 return subject, sid, reply, status, hdrs, blob[hdr_len:]
             if line == b"PING":
@@ -845,97 +785,63 @@ def nats_jetstream_sink(host: str, port: int, subject_col: str = "_js_subject",
     return write_batch
 
 
-@dataclass
-class JetStreamSpooler:
+def jetstream_bridge(host: str, port: int, stream: str, durable: str, spool_dir: str,
+                     subject: str = "", deliver: str = "all",
+                     ack_wait_s: float = 30.0) -> Bridge:
     """`nats_jetstream` input (input_jetstream.go) as a durable PULL
     consumer: CONSUMER.DURABLE.CREATE, then MSG.NEXT one message at a
     time; +ACK goes to the delivery's `$JS.ACK...` reply subject only
-    AFTER the spool rename (at-least-once — an unacked delivery
+    AFTER the spool rename (at-least-once: an unacked delivery
     redelivers after ack_wait, which the server tracks)."""
 
-    host: str
-    port: int
-    stream: str
-    durable: str
-    spool_dir: str
-    subject: str = ""          # filter subject ('' = whole stream)
-    deliver: str = "all"       # all | last (input_jetstream.go `deliver`)
-    ack_wait_s: float = 30.0
-    poll_interval_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
-    _client: NatsJsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "JetStreamSpooler":
-        spool = Spool(self.spool_dir)
-        client = NatsJsClient(self.host, self.port)
-        cfg = {
-            "stream_name": self.stream,
+    def connect() -> NatsJsClient:
+        client = NatsJsClient(host, port)
+        client.js_api(f"CONSUMER.DURABLE.CREATE.{stream}.{durable}", {
+            "stream_name": stream,
             "config": {
-                "durable_name": self.durable,
+                "durable_name": durable,
                 "ack_policy": "explicit",
-                "deliver_policy": self.deliver,
-                "ack_wait": int(self.ack_wait_s * 1e9),
-                **({"filter_subject": self.subject} if self.subject else {}),
+                "deliver_policy": deliver,
+                "ack_wait": int(ack_wait_s * 1e9),
+                **({"filter_subject": subject} if subject else {}),
             },
-        }
-        client.js_api(f"CONSUMER.DURABLE.CREATE.{self.stream}.{self.durable}",
-                      cfg)
-        self._client = client
+        })
+        return client
 
-        def run() -> None:
-            next_subj = f"CONSUMER.MSG.NEXT.{self.stream}.{self.durable}"
-            while not self._stop.is_set():
-                try:
-                    status, _h, payload, reply, subject = self._next(
-                        client, next_subj)
-                except (ConnectionError, OSError, ValueError) as e:
-                    if not self._stop.is_set():
-                        self.error = f"{type(e).__name__}: {e}"
-                    return
-                if status.startswith(("404", "408")):  # empty / expired
-                    self._stop.wait(self.poll_interval_s)
-                    continue
-                # stream sequence rides token 6 of the ack subject
-                # ($JS.ACK.<stream>.<consumer>.<delivered>.<sseq>...)
-                toks = (reply or "").split(".")
-                sseq = toks[5] if len(toks) > 5 else "0"
-                spool.put(payload, nats_subject=subject, nats_sequence=int(sseq))
-                if reply:  # ack AFTER the durable put
-                    client.publish(reply, b"+ACK")
+    def messages(client: NatsJsClient, stop):
+        next_subj = f"CONSUMER.MSG.NEXT.{stream}.{durable}"
+        while not stop.is_set():
+            status, _h, payload, reply, subj = js_next(client, next_subj)
+            if status.startswith(("404", "408")):  # empty / expired
+                stop.wait(EMPTY_POLL_S)
+                continue
+            # stream sequence rides token 6 of the ack subject
+            # ($JS.ACK.<stream>.<consumer>.<delivered>.<sseq>...)
+            toks = (reply or "").split(".")
+            sseq = toks[5] if len(toks) > 5 else "0"
+            yield payload, {"nats_subject": subj, "nats_sequence": int(sseq)}, (
+                functools.partial(client.publish, reply, b"+ACK") if reply else None)
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    return Bridge("nats_jetstream", spool_dir, connect, messages)
 
-    @staticmethod
-    def _next(client: NatsJsClient, next_subj: str):
-        """One MSG.NEXT round trip -> (status, headers, payload,
-        ack_reply, subject)."""
-        inbox = f"_INBOX.{uuid.uuid4().hex}"
-        sid = client.subscribe(inbox)
+
+def js_next(client: NatsJsClient, next_subj: str):
+    """One MSG.NEXT round trip -> (status, headers, payload, ack_reply,
+    subject)."""
+    inbox = f"_INBOX.{uuid.uuid4().hex}"
+    sid = client.subscribe(inbox)
+    try:
+        client.publish(f"$JS.API.{next_subj}",
+                       json.dumps({"batch": 1, "no_wait": True}).encode(), reply=inbox)
+        while True:
+            subject, msid, reply, status, hdrs, payload = client.recv_any()
+            if msid == sid:
+                return status, hdrs, payload, reply, subject
+    finally:
         try:
-            client.publish(f"$JS.API.{next_subj}",
-                           json.dumps({"batch": 1, "no_wait": True}).encode(),
-                           reply=inbox)
-            while True:
-                subject, msid, reply, status, hdrs, payload = client.recv_any()
-                if msid == sid:
-                    return status, hdrs, payload, reply, subject
-        finally:
-            try:
-                client.unsubscribe(sid)
-            except OSError:
-                pass
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=2)
+            client.unsubscribe(sid)
+        except OSError:
+            pass
 
 
 class NatsKvCache:
@@ -1201,7 +1107,7 @@ class NatsObjectStore:
                         "filter_subject": f"$O.{self.bucket}.C.{nuid}"}})
         parts = []
         for _ in range(want_chunks):
-            status, _h, payload, reply, _s = JetStreamSpooler._next(
+            status, _h, payload, reply, _s = js_next(
                 self.client, f"CONSUMER.MSG.NEXT.OBJ_{self.bucket}.{durable}")
             if status.startswith(("404", "408")):
                 raise ConnectionError(
@@ -1300,64 +1206,37 @@ def nats_os_map(df, host: str, port: int, bucket: str, operation: str,
     return df.mapInPandas(run, schema=out_schema)
 
 
-@dataclass
-class NatsOsSpooler:
+def nats_os_bridge(host: str, port: int, bucket: str, durable: str,
+                   spool_dir: str) -> Bridge:
     """`nats_object_store` input (input_os.go): watch the bucket's
     metadata subjects through a durable consumer; each update fetches the
-    OBJECT and spools it as one message (name/size/chunks ride the
-    filename; deleted markers are skipped). Ack after the rename."""
+    OBJECT and spools it as one message (name and size ride the spool
+    header; deleted markers are skipped). Ack after the rename."""
+    stream = f"OBJ_{bucket}"
 
-    host: str
-    port: int
-    bucket: str
-    durable: str
-    spool_dir: str
-    poll_interval_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
-    _client: NatsJsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "NatsOsSpooler":
-        spool = Spool(self.spool_dir)
-        client = NatsJsClient(self.host, self.port)
-        stream = f"OBJ_{self.bucket}"
-        client.js_api(f"CONSUMER.DURABLE.CREATE.{stream}.{self.durable}", {
+    def connect() -> NatsJsClient:
+        client = NatsJsClient(host, port)
+        client.js_api(f"CONSUMER.DURABLE.CREATE.{stream}.{durable}", {
             "stream_name": stream,
-            "config": {"durable_name": self.durable, "ack_policy": "explicit",
-                       "deliver_policy": "all",
-                       "filter_subject": f"$O.{self.bucket}.M.>"}})
-        self._client = client
-        store = NatsObjectStore(client, self.bucket)
+            "config": {"durable_name": durable, "ack_policy": "explicit",
+                       "deliver_policy": "all", "filter_subject": f"$O.{bucket}.M.>"}})
+        return client
 
-        def run() -> None:
-            next_subj = f"CONSUMER.MSG.NEXT.{stream}.{self.durable}"
-            while not self._stop.is_set():
-                try:
-                    status, _h, payload, reply, _s = JetStreamSpooler._next(
-                        client, next_subj)
-                    if status.startswith(("404", "408")):
-                        self._stop.wait(self.poll_interval_s)
-                        continue
-                    meta = json.loads(payload)
-                    if not meta.get("deleted"):
-                        spool.put(store._assemble(meta), nats_object_name=meta["name"],
-                                  nats_object_size=int(meta["size"]))
-                    if reply:
-                        client.publish(reply, b"+ACK")
-                except (ConnectionError, OSError, ValueError, KeyError) as e:
-                    if not self._stop.is_set():
-                        self.error = f"{type(e).__name__}: {e}"
-                    return
+    def messages(client: NatsJsClient, stop):
+        store = NatsObjectStore(client, bucket)
+        next_subj = f"CONSUMER.MSG.NEXT.{stream}.{durable}"
+        while not stop.is_set():
+            status, _h, payload, reply, _s = js_next(client, next_subj)
+            if status.startswith(("404", "408")):
+                stop.wait(EMPTY_POLL_S)
+                continue
+            meta = json.loads(payload)
+            ack = functools.partial(client.publish, reply, b"+ACK") if reply else None
+            if meta.get("deleted"):
+                if ack is not None:
+                    ack()
+                continue
+            yield store._assemble(meta), {"nats_object_name": meta["name"],
+                                          "nats_object_size": int(meta["size"])}, ack
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=2)
+    return Bridge("nats_object_store", spool_dir, connect, messages)

@@ -13,7 +13,7 @@ spec — the connector is REAL and e2e-testable in-process instead of
 availability-gated.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> NsqSpooler SUBs a channel with RDY flow control and persists
+- input  -> nsq_bridge SUBs a channel with RDY flow control and persists
   each message as a durable spool file; FIN is sent only AFTER the
   spool put, so at-least-once holds into the replayable file source
   (a crash before FIN means nsqd re-delivers with attempts+1 — the
@@ -38,9 +38,9 @@ import socket
 import struct
 import threading
 import uuid
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader
 
 _I32 = struct.Struct(">i")
 _MAGIC = b"  V2"
@@ -55,7 +55,7 @@ class NsqClient:
     def __init__(self, host: str, port: int, user_agent: str = "bento-spark",
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "nsq")
         self.sock.sendall(_MAGIC)
         ident = {"client_id": f"bento-spark-{uuid.uuid4().hex[:8]}",
                  "hostname": socket.gethostname(), "user_agent": user_agent,
@@ -66,19 +66,9 @@ class NsqClient:
         if ftype != _FRAME_RESPONSE:
             raise ConnectionError(f"nsq: IDENTIFY failed: {data[:80]!r}")
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("nsq: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
     def _read_frame(self) -> tuple[int, bytes]:
-        size = _I32.unpack(self._read_exact(4))[0]
-        data = self._read_exact(size)
+        size = _I32.unpack(self.reader.exact(4))[0]
+        data = self.reader.exact(size)
         return _I32.unpack(data[:4])[0], data[4:]
 
     def _expect_ok(self, what: str) -> None:
@@ -144,66 +134,37 @@ def parse_nsqd_addr(addr: str) -> tuple[str, int]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class NsqSpooler:
+def nsq_bridge(host: str, port: int, topic: str, channel: str, spool_dir: str,
+               max_in_flight: int = 64, max_attempts: int = 5) -> Bridge:
     """`nsq` input (input.go): SUB a channel, RDY `max_in_flight`, spool
-    each message as one durable file, FIN only after the spool put —
+    each message as one durable file, FIN only after the spool put:
     at-least-once. Messages whose attempts exceed `max_attempts` are
     FINned without spooling (the reference's discard path)."""
 
-    host: str
-    port: int
-    topic: str
-    channel: str
-    spool_dir: str
-    max_in_flight: int = 64
-    max_attempts: int = 5
-    _client: NsqClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def connect() -> NsqClient:
+        client = NsqClient(host, port)
+        client.sub(topic, channel)
+        client.rdy(max_in_flight)
+        client.sock.settimeout(None)  # an idle subscriber blocks on push traffic
+        return client
 
-    def start(self) -> "NsqSpooler":
-        spool = Spool(self.spool_dir)
-        client = NsqClient(self.host, self.port)
-        client.sub(self.topic, self.channel)
-        client.rdy(self.max_in_flight)
-        client.sock.settimeout(None)  # idle subscriber blocks on push traffic
-        self._client = client
+    def fin(client: NsqClient, msg_id: bytes) -> None:
+        client.fin(msg_id)
+        # RDY is a decrementing allowance (spec: the server counts down
+        # per delivery): refresh it so the subscription never stalls at 0
+        client.rdy(max_in_flight)
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    ts, attempts, msg_id, body = client.recv_msg()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server gone
-                if attempts > self.max_attempts:
-                    client.fin(msg_id)  # poison message discard (input.go)
-                    client.rdy(self.max_in_flight)
-                    continue
-                # input.go:248-251 metadata
-                spool.put(body, nsq_id=msg_id.decode("ascii"), nsq_attempts=attempts,
-                          nsq_timestamp=ts)
-                try:
-                    client.fin(msg_id)  # ack AFTER durability
-                    # RDY is a decrementing allowance (spec: the server
-                    # counts down per delivery) — refresh it so the
-                    # subscription never stalls at zero
-                    client.rdy(self.max_in_flight)
-                except (ConnectionError, OSError):
-                    return
+    def messages(client: NsqClient, stop):
+        while True:
+            ts, attempts, msg_id, body = client.recv_msg()
+            if attempts > max_attempts:
+                fin(client, msg_id)  # poison message discard (input.go)
+                continue
+            # input.go:248-251 metadata
+            yield body, {"nsq_id": msg_id.decode("ascii"), "nsq_attempts": attempts,
+                         "nsq_timestamp": ts}, functools.partial(fin, client, msg_id)
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("nsq", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------
@@ -337,29 +298,12 @@ class MiniNsqServer:
             self._pump()
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "nsq")
 
-        def read_exact(n: int) -> bytes:
-            while len(buf) < n:
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
-            out = bytes(buf[:n])
-            del buf[:n]
-            return out
+        read_exact = reader.exact
 
         def read_line() -> bytes:
-            while True:
-                i = buf.find(b"\n")
-                if i >= 0:
-                    line = bytes(buf[:i])
-                    del buf[: i + 1]
-                    return line
-                chunk = conn.recv(65536)
-                if not chunk:
-                    raise ConnectionError
-                buf.extend(chunk)
+            return reader.line(b"\n")
 
         try:
             if read_exact(4) != _MAGIC:

@@ -16,7 +16,7 @@ key before minting a token, so the whole auth chain is exercised, not
 mocked away.
 
 Spark-first mapping (same spool-bridge rationale as every pull source):
-- input  -> PubSubSpooler pulls and spools each message BEFORE
+- input  -> pubsub_bridge pulls and spools each message BEFORE
   acknowledge (ack-after-durability = at-least-once: an un-acked message
   re-delivers after the ack deadline, the Pub/Sub contract). messageId
   rides the spool file's header as `pubsub_message_id`.
@@ -32,10 +32,9 @@ import json
 import threading
 import time
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge, batch
 
 
 # --------------------------------------------------------------------------
@@ -176,71 +175,38 @@ class PubSubClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class PubSubSpooler:
+def pubsub_bridge(endpoint: str, project: str, subscription: str, spool_dir: str,
+                  credentials: dict | None = None, max_messages: int = 10,
+                  create_topic: str | None = None) -> Bridge:
     """`gcp_pubsub` input (input_pubsub.go): pull-loop the subscription
-    and spool each message as one durable file; acknowledge fires only
-    AFTER the atomic rename — at-least-once via the ack deadline.
-    `create_subscription` mirrors the reference's create_subscription
-    object (enabled + topic)."""
+    and spool each message as one durable file; the pull's acknowledge
+    rides its last message, so it fires only AFTER every atomic rename:
+    at-least-once via the ack deadline. `create_topic` mirrors the
+    reference's create_subscription object (enabled + topic)."""
 
-    endpoint: str
-    project: str
-    subscription: str
-    spool_dir: str
-    credentials: dict | None = None
-    max_messages: int = 10
-    create_topic: str | None = None
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def connect() -> PubSubClient:
+        client = PubSubClient(endpoint, credentials=credentials)
+        if create_topic:
+            client.create_subscription(project, subscription, create_topic)
+        return client
 
-    def start(self) -> "PubSubSpooler":
-        spool = Spool(self.spool_dir)
-        client = PubSubClient(self.endpoint, credentials=self.credentials)
-        if self.create_topic:
-            client.create_subscription(self.project, self.subscription,
-                                       self.create_topic)
+    def acknowledge(client: PubSubClient, acks: list[str]) -> None:
+        try:
+            client.acknowledge(project, subscription, acks)
+        except (ConnectionError, OSError):
+            pass  # the ack deadline re-delivers; dedupe downstream
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.pull(self.project, self.subscription,
-                                      max_messages=self.max_messages)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not got:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    acks = []
-                    for rm in got:
-                        msg = rm.get("message") or {}
-                        spool.put(base64.b64decode(msg.get("data", "")),
-                                  pubsub_message_id=msg.get("messageId") or None)
-                        acks.append(rm["ackId"])
-                except Exception as e:  # disk/decode faults: surface loudly
-                    import sys
+    def messages(client: PubSubClient, stop):
+        while not stop.is_set():
+            got = client.pull(project, subscription, max_messages=max_messages)
+            if not got:
+                stop.wait(EMPTY_POLL_S)
+            msgs = [rm.get("message") or {} for rm in got]
+            yield from batch([(base64.b64decode(m.get("data", "")),
+                               {"pubsub_message_id": m.get("messageId") or None}) for m in msgs],
+                             functools.partial(acknowledge, client, [r["ackId"] for r in got]))
 
-                    self.error = f"gcp_pubsub: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-                try:
-                    client.acknowledge(self.project, self.subscription, acks)
-                except (ConnectionError, OSError):
-                    pass  # ack deadline re-delivers; dedupe downstream
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("gcp_pubsub", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------

@@ -29,7 +29,7 @@ schema below keeps the original field numbers — the wire encoding is
 identical, only presence rules differ.
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> PulsarSpooler subscribes (SUBSCRIBE/FLOW/MESSAGE/ACK) and
+- input  -> pulsar_bridge subscribes (SUBSCRIBE/FLOW/MESSAGE/ACK) and
   persists each message as a durable spool file BEFORE acking, so
   unacked messages redeliver on reconnect: at-least-once, the reference
   input's guarantee. The pulsar_* metadata rides the spool file's header
@@ -56,7 +56,7 @@ import struct
 import threading
 import time
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from bento_spark.operators.protobuf_codec import (
     _tag,
@@ -64,8 +64,9 @@ from bento_spark.operators.protobuf_codec import (
     decode_message,
     parse_proto,
 )
+from bento_spark.streaming.bridge import Bridge, FanIn, close_client
 from bento_spark.streaming.kafka_wire import crc32c
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.reader import SocketReader, reader_of
 
 _MAGIC = b"\x0e\x01"
 
@@ -250,20 +251,12 @@ class Frame:
     payload: bytes = b""
 
 
-def _read_exact(sock: socket.socket, buf: bytearray, n: int) -> bytes:
-    while len(buf) < n:
-        chunk = sock.recv(65536)
-        if not chunk:
-            raise ConnectionError("pulsar: connection closed")
-        buf += chunk
-    out = bytes(buf[:n])
-    del buf[:n]
-    return out
-
-
-def read_frame(sock: socket.socket, buf: bytearray) -> Frame:
-    total = struct.unpack(">I", _read_exact(sock, buf, 4))[0]
-    body = _read_exact(sock, buf, total)
+def read_frame(src: SocketReader | socket.socket, data: bytes = b"") -> Frame:
+    """One frame from a reader, or from a socket (after `data`, bytes
+    already read from it) that nothing else reads ahead on."""
+    reader = reader_of(src, "pulsar", data)
+    total = struct.unpack(">I", reader.exact(4))[0]
+    body = reader.exact(total)
     cmd_size = struct.unpack(">I", body[:4])[0]
     cmd = decode_message(body[4 : 4 + cmd_size], "BaseCommand", _REG)
     rest = body[4 + cmd_size:]
@@ -319,7 +312,8 @@ class PulsarClient:
     def __init__(self, host: str, port: int, *, token: str | None = None,
                  timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=timeout)
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "pulsar")
+        self._send_lock = threading.Lock()
         self._ids = 0
         body = bytearray()
         _e_str(body, 1, "bento-spark")
@@ -339,12 +333,13 @@ class PulsarClient:
         return self._ids
 
     def send_cmd(self, cmd_type: int, body: bytes | bytearray | None = None) -> None:
-        self.sock.sendall(frame_simple(_base_command(cmd_type, body)))
+        with self._send_lock:
+            self.sock.sendall(frame_simple(_base_command(cmd_type, body)))
 
     def recv(self) -> Frame:
         """Next frame, answering PING inline (spec §"Keep alive")."""
         while True:
-            f = read_frame(self.sock, self._buf)
+            f = read_frame(self.reader)
             if f.cmd.get("type") == PING:
                 self.send_cmd(PONG)
                 continue
@@ -534,99 +529,82 @@ class Consumer:
 # input bridge
 # ---------------------------------------------------------------------------
 
-@dataclass
-class PulsarSpooler:
+def pulsar_bridge(host: str, port: int, topics: list[str], subscription: str,
+                  spool_dir: str, sub_type: str = "shared",
+                  topics_pattern: str | None = None, token: str | None = None) -> Bridge:
     """`pulsar` input (input.go): subscribe to one or more topics (or a
     topics_pattern resolved via GetTopicsOfNamespace against the pattern's
-    namespace) and spool each message as one durable file.
-    The ACK is sent only AFTER the spool put — a crash between
-    delivery and ack leaves the message unacked, so the broker redelivers:
-    at-least-once, the reference's guarantee."""
+    namespace), one connection per topic, and spool each message as one
+    durable file. The ACK is sent only AFTER the spool put: a crash
+    between delivery and ack leaves the message unacked, so the broker
+    redelivers: at-least-once, the reference's guarantee."""
 
-    host: str
-    port: int
-    topics: list[str]
-    subscription: str
-    spool_dir: str
-    sub_type: str = "shared"
-    topics_pattern: str | None = None
-    token: str | None = None
-    _clients: list[tuple[PulsarClient, Consumer]] = field(
-        default_factory=list, repr=False)
-    _threads: list[threading.Thread] = field(default_factory=list, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "PulsarSpooler":
-        spool = Spool(self.spool_dir)
-        topics = list(self.topics)
-        if self.topics_pattern:
+    def connect() -> list[Consumer]:
+        names = list(topics)
+        if topics_pattern:
             # pattern namespace = everything before the final path segment
             # (input.go resolves the pattern against its namespace)
-            pat = self.topics_pattern
-            ns = pat.rsplit("/", 1)[0].removeprefix("persistent://")
-            probe = PulsarClient(self.host, self.port, token=self.token)
+            ns = topics_pattern.rsplit("/", 1)[0].removeprefix("persistent://")
+            probe = PulsarClient(host, port, token=token)
             try:
-                rx = re.compile(pat)
-                topics += [t for t in probe.topics_of_namespace(ns)
-                           if rx.fullmatch(t)]
+                rx = re.compile(topics_pattern)
+                names += [t for t in probe.topics_of_namespace(ns) if rx.fullmatch(t)]
             finally:
                 probe.close()
-        if not topics:
+        if not names:
             raise ValueError("pulsar input: no topics (set topics or "
                              "topics_pattern matching existing topics)")
-        for topic in topics:
-            client = PulsarClient(self.host, self.port, token=self.token)
-            consumer = Consumer(client, topic, self.subscription,
-                                sub_type=self.sub_type)
-            client.sock.settimeout(None)  # idle subscriber blocks on push
-            self._clients.append((client, consumer))
-            t = threading.Thread(
-                target=self._run, args=(consumer, spool), daemon=True)
-            t.start()
-            self._threads.append(t)
-        return self
+        consumers: list[Consumer] = []
+        try:
+            for topic in names:
+                client = PulsarClient(host, port, token=token)
+                try:
+                    consumers.append(Consumer(client, topic, subscription, sub_type=sub_type))
+                except BaseException:
+                    client.close()
+                    raise
+                client.sock.settimeout(None)  # an idle subscriber blocks on push
+        except BaseException:
+            close(consumers)
+            raise
+        return consumers
 
-    def _run(self, consumer: Consumer, spool: Spool) -> None:
-        while not self._stop.is_set():
-            try:
-                msg = consumer.receive()
-            except (ConnectionError, OSError, ValueError):
-                return  # socket closed by stop() or broker
+    def close(consumers: list[Consumer]) -> None:
+        for consumer in consumers:
+            close_client(consumer.client)
+
+    def receive(consumer: Consumer):
+        while True:
+            msg = consumer.receive()
             meta = msg.metadata
             smm = msg.single_meta or {}
             props = {kv["key"]: kv["value"]
-                     for kv in (smm.get("properties") or meta.get("properties")
-                                or [])}
+                     for kv in (smm.get("properties") or meta.get("properties") or [])}
             event_time_ms = int(smm.get("event_time") or meta.get("event_time") or 0)
             # the reference's pulsar_* metadata (input.go:267-284)
-            spool.put(
-                msg.payload,
-                pulsar_topic=msg.topic,
-                pulsar_message_id=f"{msg.message_id[0]}:{msg.message_id[1]}",
-                pulsar_key=smm.get("partition_key") or meta.get("partition_key"),
-                pulsar_ordering_key=(
+            yield msg.payload, {
+                "pulsar_topic": msg.topic,
+                "pulsar_message_id": f"{msg.message_id[0]}:{msg.message_id[1]}",
+                "pulsar_key": smm.get("partition_key") or meta.get("partition_key"),
+                "pulsar_ordering_key": (
                     (smm.get("ordering_key") or meta.get("ordering_key")
                      or b"").decode("utf-8", "replace") or None),
-                pulsar_publish_time_unix=int(meta.get("publish_time") or 0) // 1000,
-                pulsar_redelivery_count=msg.redelivery_count,
-                pulsar_event_time_unix=event_time_ms // 1000 if event_time_ms else None,
-                pulsar_producer_name=meta.get("producer_name"),
-                pulsar_properties=props,
-            )
-            # durable BEFORE ack -> at-least-once
-            try:
-                consumer.ack(msg.message_id)
-            except (ConnectionError, OSError):
-                return
+                "pulsar_publish_time_unix": int(meta.get("publish_time") or 0) // 1000,
+                "pulsar_redelivery_count": msg.redelivery_count,
+                "pulsar_event_time_unix": event_time_ms // 1000 if event_time_ms else None,
+                "pulsar_producer_name": meta.get("producer_name"),
+                "pulsar_properties": props,
+            }, functools.partial(consumer.ack, msg.message_id)
 
-    def stop(self) -> None:
-        self._stop.set()
-        for client, _ in self._clients:
-            client.close()  # unblocks the recv loops
-        self._clients.clear()
-        for t in self._threads:
-            t.join(timeout=5)
-        self._threads.clear()
+    def messages(consumers: list[Consumer], stop):
+        # each consumer's receive loop runs on its own thread, and its acks
+        # on the bridge's, so a client's sends share a lock
+        fan = FanIn(stop)
+        for consumer in consumers:
+            fan.add(receive(consumer))
+        return fan
+
+    return Bridge("pulsar", spool_dir, connect, messages, close=close)
 
 
 # ---------------------------------------------------------------------------
@@ -752,11 +730,11 @@ class MiniPulsarBroker:
         self._send(sock, ERROR, body)
 
     def _serve(self, conn: socket.socket) -> None:
-        buf = bytearray()
+        reader = SocketReader(conn, "pulsar")
         producers: dict[int, tuple[str, str]] = {}  # producer_id -> (topic, name)
         my_consumers: list[dict] = []
         try:
-            f = read_frame(conn, buf)
+            f = read_frame(reader)
             if f.cmd.get("type") != CONNECT:
                 return
             con = f.cmd.get("connect") or {}
@@ -770,7 +748,7 @@ class MiniPulsarBroker:
             _e_varint(body, 2, min(6, int(con.get("protocol_version") or 6)))
             self._send(conn, CONNECTED, body)
             while not self._stop.is_set():
-                f = read_frame(conn, buf)
+                f = read_frame(reader)
                 t = f.cmd.get("type")
                 if t == PING:
                     self._send(conn, PONG)

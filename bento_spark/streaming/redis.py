@@ -3,9 +3,9 @@ redis.io "Redis serialization protocol") over stdlib sockets, plus an
 in-process test server covering the command subset the connectors use.
 
 Reference surfaces (internal/impl/redis/):
-- input_list.go    — BLPOP/BRPOP a list key          -> RedisListSpooler
-- input_pubsub.go  — SUBSCRIBE/PSUBSCRIBE channels   -> RedisPubSubSpooler
-- input_streams.go — XREADGROUP consumer group, XACK -> RedisStreamsSpooler
+- input_list.go    — BLPOP/BRPOP a list key          -> redis_list_bridge
+- input_pubsub.go  — SUBSCRIBE/PSUBSCRIBE channels   -> redis_pubsub_bridge
+- input_streams.go — XREADGROUP consumer group, XACK -> redis_streams_bridge
 - input_scan.go    — SCAN + GET the keyspace         -> read_redis_scan
 - output_list.go   — RPUSH                           -> redis_list_sink
 - output_pubsub.go — PUBLISH (interpolated channel)  -> redis_pubsub_sink
@@ -43,9 +43,9 @@ import json
 import socket
 import threading
 import time
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge, batch
+from bento_spark.streaming.reader import SocketReader
 
 _CRLF = b"\r\n"
 
@@ -73,34 +73,12 @@ class _Resp:
 
     def __init__(self, sock: socket.socket):
         self.sock = sock
-        self._buf = bytearray()
-
-    def _read_line(self) -> bytes:
-        while True:
-            i = self._buf.find(_CRLF)
-            if i >= 0:
-                line = bytes(self._buf[:i])
-                del self._buf[: i + 2]
-                return line
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("redis: connection closed")
-            self._buf += chunk
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("redis: connection closed mid-bulk")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
+        self.reader = SocketReader(self.sock, "redis")
 
     def read_reply(self):
         """-> str (simple), int, bytes|None (bulk), list|None (array);
         raises RedisError on an error reply."""
-        line = self._read_line()
+        line = self.reader.line(_CRLF)
         t, rest = line[:1], line[1:]
         if t == b"+":
             return rest.decode()
@@ -112,8 +90,8 @@ class _Resp:
             n = int(rest)
             if n < 0:
                 return None
-            data = self._read_exact(n)
-            self._read_exact(2)
+            data = self.reader.exact(n)
+            self.reader.exact(2)
             return data
         if t == b"*":
             n = int(rest)
@@ -217,152 +195,89 @@ def parse_redis_url(url: str) -> tuple[str, int]:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class _RedisSubscriber:
-    """The connection and reader thread a redis input spooler owns."""
-
-    host: str
-    port: int
-    spool_dir: str
-    _thread: "threading.Thread | None" = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _client: "RedisClient | None" = field(default=None, repr=False)
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-@dataclass
-class RedisListSpooler(_RedisSubscriber):
+def redis_list_bridge(host: str, port: int, spool_dir: str, key: str = "",
+                      command: str = "blpop") -> Bridge:
     """`redis_list` input (input_list.go): BLPOP/BRPOP loop -> spool. The
     pop is destructive, so a crash between pop and spool put loses at most
-    the one in-flight message — the reference's own window."""
+    the one in-flight message: the reference's own window."""
+    if command not in ("blpop", "brpop"):
+        raise ValueError(f"redis_list command must be blpop|brpop, got {command!r}")
 
-    key: str = ""
-    command: str = "blpop"  # or brpop
+    def messages(client: RedisClient, stop):
+        while not stop.is_set():
+            # 1s timeout so stop() is honored promptly
+            got = client.cmd(command.upper(), key, 1)
+            if got is not None:
+                yield got[1], {"redis_key": key}, None
 
-    def start(self) -> "RedisListSpooler":
-        if self.command not in ("blpop", "brpop"):
-            raise ValueError(f"redis_list command must be blpop|brpop, got {self.command!r}")
-        spool = Spool(self.spool_dir)
-        client = RedisClient(self.host, self.port)
-        self._client = client
-
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    # 1s timeout so stop() is honored promptly
-                    got = client.cmd(self.command.upper(), self.key, 1)
-                except (ConnectionError, OSError, RedisError):
-                    return
-                if got is None:
-                    continue  # timeout tick
-                _key, payload = got
-                spool.put(payload, redis_key=self.key)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    return Bridge("redis_list", spool_dir, functools.partial(RedisClient, host, port),
+                  messages)
 
 
-@dataclass
-class RedisPubSubSpooler(_RedisSubscriber):
+def redis_pubsub_bridge(host: str, port: int, spool_dir: str, channels: list[str] = (),
+                        use_patterns: bool = False) -> Bridge:
     """`redis_pubsub` input (input_pubsub.go): SUBSCRIBE (or PSUBSCRIBE
     with `use_patterns`) -> spool. Fire-and-forget by protocol (redis
     pub/sub has no delivery guarantee), like the reference input."""
 
-    channels: list[str] = field(default_factory=list)
-    use_patterns: bool = False
-
-    def start(self) -> "RedisPubSubSpooler":
-        spool = Spool(self.spool_dir)
-        client = RedisClient(self.host, self.port)
-        client.subscribe(list(self.channels), patterns=self.use_patterns)
-        # block forever on push traffic — the connect-time timeout would
+    def connect() -> RedisClient:
+        client = RedisClient(host, port)
+        client.subscribe(list(channels), patterns=use_patterns)
+        # block forever on push traffic: the connect-time timeout would
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
-        self._client = client
+        return client
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.get_message()
-                except (ConnectionError, OSError, ValueError):
-                    return
-                if got is None:
-                    continue
-                channel, payload = got
-                spool.put(payload, redis_channel=channel)
+    def messages(client: RedisClient, stop):
+        while True:
+            got = client.get_message()
+            if got is not None:
+                yield got[1], {"redis_channel": got[0]}, None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    return Bridge("redis_pubsub", spool_dir, connect, messages)
 
 
-@dataclass
-class RedisStreamsSpooler(_RedisSubscriber):
+def redis_streams_bridge(host: str, port: int, spool_dir: str, streams: list[str] = (),
+                         body_key: str = "body", consumer_group: str = "bento_spark",
+                         client_id: str = "bento_spark_consumer",
+                         start_from_oldest: bool = True, limit: int = 10) -> Bridge:
     """`redis_streams` input (input_streams.go): XREADGROUP consumer-group
     loop; each entry's `body_key` field is the message body, remaining
-    fields ride as `redis_meta` in the spool file's header. XACK
-    fires only AFTER the spool put (input_streams.go:241 acks after
-    handoff) — the broker re-delivers anything unacked via the PEL, so
-    at-least-once holds into the replayable file source."""
+    fields ride as `redis_meta` in the spool file's header. XACK fires
+    only AFTER the spool put (input_streams.go:241 acks after handoff),
+    once per stream on the last entry of a read: the broker re-delivers
+    anything unacked via the PEL, so at-least-once holds into the
+    replayable file source."""
 
-    streams: list[str] = field(default_factory=list)
-    body_key: str = "body"
-    consumer_group: str = "bento_spark"
-    client_id: str = "bento_spark_consumer"
-    start_from_oldest: bool = True
-    limit: int = 10
-
-    def start(self) -> "RedisStreamsSpooler":
-        spool = Spool(self.spool_dir)
-        client = RedisClient(self.host, self.port)
-        offset = "0" if self.start_from_oldest else "$"
-        for s in self.streams:
+    def connect() -> RedisClient:
+        client = RedisClient(host, port)
+        for s in streams:
             try:
-                client.cmd("XGROUP", "CREATE", s, self.consumer_group, offset, "MKSTREAM")
+                client.cmd("XGROUP", "CREATE", s, consumer_group,
+                           "0" if start_from_oldest else "$", "MKSTREAM")
             except RedisError as e:
                 if "BUSYGROUP" not in str(e):  # already exists is fine
                     raise
-        self._client = client
+        return client
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.cmd(
-                        "XREADGROUP", "GROUP", self.consumer_group, self.client_id,
-                        "COUNT", self.limit, "BLOCK", 1000,
-                        "STREAMS", *self.streams, *[">"] * len(self.streams))
-                except (ConnectionError, OSError, RedisError):
-                    return
-                if not got:
-                    continue  # block timeout tick
-                acks: dict[str, list[bytes]] = {}
-                for stream_name, entries in got:
-                    sname = stream_name.decode()
-                    for entry_id, kv in entries:
-                        fields = {kv[i].decode(): kv[i + 1] for i in range(0, len(kv), 2)}
-                        body = fields.pop(self.body_key, b"")
-                        meta = {k: v.decode(errors="replace") for k, v in fields.items()}
-                        spool.put(body, redis_stream=sname, redis_id=entry_id.decode(),
-                                  redis_meta=meta)
-                        acks.setdefault(sname, []).append(entry_id)
-                for sname, ids in acks.items():
-                    try:
-                        client.cmd("XACK", sname, self.consumer_group, *ids)
-                    except (ConnectionError, OSError, RedisError):
-                        return
+    def entry(sname: str, entry_id: bytes, kv: list) -> tuple[bytes, dict]:
+        fields = {kv[j].decode(): kv[j + 1] for j in range(0, len(kv), 2)}
+        body = fields.pop(body_key, b"")
+        meta = {k: v.decode(errors="replace") for k, v in fields.items()}
+        return body, {"redis_stream": sname, "redis_id": entry_id.decode(), "redis_meta": meta}
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def messages(client: RedisClient, stop):
+        while not stop.is_set():
+            got = client.cmd("XREADGROUP", "GROUP", consumer_group, client_id,
+                             "COUNT", limit, "BLOCK", 1000,
+                             "STREAMS", *streams, *[">"] * len(streams))
+            for stream_name, entries in got or []:
+                sname = stream_name.decode()
+                yield from batch([entry(sname, entry_id, kv) for entry_id, kv in entries],
+                                 functools.partial(client.cmd, "XACK", sname, consumer_group,
+                                                   *(e for e, _ in entries)))
+
+    return Bridge("redis_streams", spool_dir, connect, messages)
 
 
 def read_redis_scan(spark, host: str, port: int, match: str = "*",
@@ -1209,7 +1124,7 @@ class MiniRedisServer:
                 if g is None:
                     raise RedisError(f"NOGROUP No such consumer group '{group}'")
                 if want != ">":
-                    continue  # PEL re-reads unsupported (unused by the spooler)
+                    continue  # PEL re-reads unsupported (unused by the input bridge)
                 last = self._sid_tuple(g["last"])
                 fresh = [(sid, kv) for sid, kv in self._streams.get(s, [])
                          if self._sid_tuple(sid) > last]

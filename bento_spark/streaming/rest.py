@@ -3,7 +3,7 @@ connector client (S3, SQS, SNS, Kinesis, Firehose, DynamoDB, Lambda, Azure
 Blob/Queue/Table, CosmosDB, GCS, BigQuery, Pub/Sub, Spanner, Snowflake,
 Discord) shares. A client keeps only its signer and its API.
 
-A client runs inside a Spark task, a foreachBatch or a driver-side spooler.
+A client runs inside a Spark task, a foreachBatch or a driver-side input bridge.
 A raise inside a task fails the task, and a raise inside foreachBatch kills
 the whole streaming query (foreachBatch has no in-run retry). So a
 transient fault heals inside the call, and only a permanent one raises:

@@ -19,7 +19,7 @@ canonicalization added here (URI/query encoding, payload hash header) is
 verified end-to-end by the recomputing MiniS3Server.
 
 Spark-first mapping:
-- input  -> S3Spooler either (a) makes ONE pass over the bucket listing
+- input  -> s3_bridge either (a) makes ONE pass over the bucket listing
   (the reference's plain mode: consume the listing, then stop) spooling
   each object as a durable file, or (b) long-polls an SQS queue for S3
   event notifications and fetches exactly the notified objects —
@@ -47,10 +47,9 @@ import json
 import threading
 import time
 import urllib.parse
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
 from bento_spark.streaming.sqs import sigv4_signature
 
 _SAFE = "-_.~"  # RFC 3986 unreserved minus alnum (quote() keeps alnum)
@@ -261,130 +260,83 @@ def _extract_paths(obj, path: str) -> list:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class S3Spooler:
+def s3_bridge(endpoint: str, bucket: str, access_key: str, secret_key: str,
+              spool_dir: str, prefix: str = "", region: str = "us-east-1",
+              delete_objects: bool = False, sqs_queue_url: str | None = None,
+              sqs_endpoint: str | None = None,
+              sqs_key_path: str = "Records.*.s3.object.key",
+              sqs_bucket_path: str = "Records.*.s3.bucket.name",
+              sqs_wait_time_s: int = 1, sqs_max_messages: int = 10) -> Bridge:
     """`aws_s3` input (input_s3.go): either one pass over the bucket
-    listing (plain mode — the reference consumes the listing then stops;
-    `finished` flips True) or an SQS-notification loop (`sqs_queue_url`
-    set): each notified object is fetched and spooled as one durable
-    file; DeleteObject (delete_objects: true) / DeleteMessage fire only
-    AFTER the atomic rename — at-least-once."""
+    listing (plain mode: the reference consumes the listing then stops,
+    and so the bridge finishes) or an SQS-notification loop
+    (`sqs_queue_url` set): each notified object is fetched and spooled as
+    one durable file; DeleteObject (delete_objects: true) and
+    DeleteMessage fire only AFTER the atomic rename: at-least-once."""
+    from bento_spark.streaming.sqs import SqsClient
 
-    endpoint: str
-    bucket: str
-    access_key: str
-    secret_key: str
-    spool_dir: str
-    prefix: str = ""
-    region: str = "us-east-1"
-    delete_objects: bool = False
-    # SQS-notification mode (input_s3.go `sqs:` block)
-    sqs_queue_url: str | None = None
-    sqs_endpoint: str | None = None
-    sqs_key_path: str = "Records.*.s3.object.key"
-    sqs_bucket_path: str = "Records.*.s3.bucket.name"
-    sqs_wait_time_s: int = 1
-    sqs_max_messages: int = 10
-    finished: bool = field(default=False, repr=False)
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def connect():
+        client = S3Client(endpoint, access_key, secret_key, region=region)
+        if not sqs_queue_url:
+            return client, None
+        return client, SqsClient(sqs_endpoint or endpoint, access_key, secret_key,
+                                 region=region)
 
-    def _spool_object(self, spool: Spool, client: S3Client,
-                      bucket: str, key: str, lm_unix: int) -> None:
-        body, _ = client.get_object(bucket, key)
+    def delete(client: S3Client, bkt: str, key: str, receipt=None, sqs=None) -> None:
+        try:
+            if delete_objects and key is not None:
+                client.delete_object(bkt, key)
+            if receipt is not None:
+                sqs.delete_message(sqs_queue_url, receipt)
+        except (ConnectionError, OSError):
+            pass  # the object re-lists, the notification re-delivers
+
+    def fetch(client: S3Client, bkt: str, key: str, lm_unix: int):
+        body, _ = client.get_object(bkt, key)
         # the reference's metadata surface, input_s3.go:735-739
-        spool.put(body, s3_bucket=bucket, s3_key=key, s3_last_modified_unix=lm_unix)
-        if self.delete_objects:
-            try:
-                client.delete_object(bucket, key)
-            except (ConnectionError, OSError):
-                pass  # object re-lists / notification re-delivers
+        return body, {"s3_bucket": bkt, "s3_key": key, "s3_last_modified_unix": lm_unix}
 
-    def start(self) -> "S3Spooler":
-        spool = Spool(self.spool_dir)
-        client = S3Client(self.endpoint, self.access_key, self.secret_key,
-                          region=self.region)
+    def listing(client: S3Client, stop):
+        for obj in client.list_objects(bucket, prefix=prefix):
+            if stop.is_set():
+                return
+            yield (*fetch(client, bucket, obj["key"], obj["last_modified_unix"]),
+                   functools.partial(delete, client, bucket, obj["key"]))
 
-        def run_listing() -> None:
-            import sys
+    def notified(client: S3Client, sqs, stop):
+        while not stop.is_set():
+            msgs = sqs.receive_message(sqs_queue_url, max_messages=sqs_max_messages,
+                                       wait_time_s=sqs_wait_time_s)
+            if not msgs:
+                stop.wait(EMPTY_POLL_S)
+            for m in msgs:
+                body = json.loads(m.get("Body", "{}"))
+                keys = [str(k) for k in _extract_paths(body, sqs_key_path)]
+                buckets = [str(b) for b in _extract_paths(body, sqs_bucket_path)]
+                got = []
+                for i, key in enumerate(keys):
+                    bkt = buckets[i] if i < len(buckets) else bucket
+                    # notification keys are percent-encoded
+                    # (input_s3.go:500 url.QueryUnescape)
+                    key = urllib.parse.unquote_plus(key)
+                    try:
+                        got.append((bkt, key, fetch(client, bkt, key, 0)))
+                    except NoSuchKeyError:
+                        continue  # deleted before we fetched it
+                receipt = m.get("ReceiptHandle")
+                if not got and receipt:
+                    delete(client, bucket, None, receipt, sqs)
+                for j, (bkt, key, (obj, meta)) in enumerate(got):
+                    # the message is deleted with its last object
+                    last = j == len(got) - 1
+                    yield obj, meta, functools.partial(
+                        delete, client, bkt, key, receipt if last else None, sqs)
 
-            try:
-                for obj in client.list_objects(self.bucket, prefix=self.prefix):
-                    if self._stop.is_set():
-                        return
-                    self._spool_object(spool, client, self.bucket,
-                                       obj["key"], obj["last_modified_unix"])
-            except Exception as e:  # surface, don't vanish
-                self.error = f"aws_s3: {e}"
-                print(self.error, file=sys.stderr)
-            finally:
-                self.finished = True
+    def messages(conn, stop):
+        client, sqs = conn
+        return listing(client, stop) if sqs is None else notified(client, sqs, stop)
 
-        def run_sqs() -> None:
-            import sys
-
-            from bento_spark.streaming.sqs import SqsClient
-
-            sqs = SqsClient(self.sqs_endpoint or self.endpoint,
-                            self.access_key, self.secret_key,
-                            region=self.region)
-            while not self._stop.is_set():
-                try:
-                    msgs = sqs.receive_message(
-                        self.sqs_queue_url, max_messages=self.sqs_max_messages,
-                        wait_time_s=self.sqs_wait_time_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        body = json.loads(m.get("Body", "{}"))
-                        keys = [str(k) for k in
-                                _extract_paths(body, self.sqs_key_path)]
-                        buckets = [str(b) for b in
-                                   _extract_paths(body, self.sqs_bucket_path)]
-                        for i, key in enumerate(keys):
-                            bkt = buckets[i] if i < len(buckets) else self.bucket
-                            # notification keys are percent-encoded
-                            # (input_s3.go:500 url.QueryUnescape)
-                            key = urllib.parse.unquote_plus(key)
-                            try:
-                                self._spool_object(spool, client, bkt, key, 0)
-                            except NoSuchKeyError:
-                                continue  # deleted before we fetched it
-                        try:
-                            sqs.delete_message(self.sqs_queue_url,
-                                               m["ReceiptHandle"])
-                        except (ConnectionError, OSError, KeyError):
-                            pass  # visibility timeout re-delivers
-                except Exception as e:
-                    self.error = f"aws_s3: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-
-        target = run_sqs if self.sqs_queue_url else run_listing
-        self._thread = threading.Thread(target=target, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        """Plain-listing mode helper: block until the single listing pass
-        completes (the reference's consume-then-stop contract)."""
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline and not self.finished:
-            time.sleep(0.02)
-        return self.finished
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("aws_s3", spool_dir, connect, messages, close=lambda conn: None)
 
 
 # --------------------------------------------------------------------------

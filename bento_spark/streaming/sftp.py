@@ -14,7 +14,7 @@ test server share the transport, so the cipher/MAC/signature paths are
 validated end-to-end.
 
 Spark-first mapping (identical topology to the blob/S3 listing inputs):
-- input  -> SftpSpooler resolves the path globs against directory
+- input  -> sftp_bridge resolves the path globs against directory
   listings and downloads each file into the spool BEFORE optionally
   deleting it (delete_on_finish ordering = at-least-once); watcher mode
   re-polls on an interval, skipping files younger than minimum_age and
@@ -40,17 +40,15 @@ import stat as stat_mod
 import struct
 import threading
 import time
-from dataclasses import dataclass, field
 from pathlib import Path
 
+from bento_spark.streaming.bridge import Bridge
 from bento_spark.streaming.ssh_transport import (
     Reader,
     SshClient,
     SshServerConn,
     sp,
 )
-
-from bento_spark.streaming.spool import Spool
 
 SSH_FXP_INIT, SSH_FXP_VERSION = 1, 2
 SSH_FXP_OPEN, SSH_FXP_CLOSE, SSH_FXP_READ, SSH_FXP_WRITE = 3, 4, 5, 6
@@ -326,87 +324,41 @@ def parse_sftp_address(address: str) -> tuple[str, int]:
     return host or "127.0.0.1", int(port or 22)
 
 
-@dataclass
-class SftpSpooler:
+def sftp_bridge(host: str, port: int, username: str, password: str, paths: list[str],
+                spool_dir: str, delete_on_finish: bool = False, watcher: bool = False,
+                poll_interval_s: float = 1.0, minimum_age_s: float = 0.0,
+                private_key_pem: str | None = None) -> Bridge:
     """`sftp` input (input.go): resolve the path globs, download each
     file into the spool, optionally delete it AFTER the durable spool put
-    (at-least-once). Watcher mode re-polls, skipping young files
-    (minimum_age) and (name, mtime, size) triples already consumed."""
+    (at-least-once). Without the watcher the bridge finishes after one
+    pass; watcher mode re-polls, skipping young files (minimum_age) and
+    (name, mtime, size) triples already consumed."""
+    seen: set[tuple[str, int, int]] = set()
 
-    host: str
-    port: int
-    username: str
-    password: str
-    paths: list[str]
-    spool_dir: str
-    delete_on_finish: bool = False
-    watcher: bool = False
-    poll_interval_s: float = 1.0
-    minimum_age_s: float = 0.0
-    private_key_pem: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    def consumed(client: SftpClient, path: str, key: tuple) -> None:
+        seen.add(key)
+        if delete_on_finish:
+            client.remove(path)
 
-    def start(self) -> "SftpSpooler":
-        spool = Spool(self.spool_dir)
-        client = SftpClient(self.host, self.port, self.username,
-                            self.password,
-                            private_key_pem=self.private_key_pem)
-        seen: set[tuple[str, int, int]] = set()
-
-        def one_pass() -> None:
-            for pattern in self.paths:
+    def messages(client: SftpClient, stop):
+        while True:
+            for pattern in paths:
                 for path in client.glob(pattern):
                     attrs = client.stat(path)
-                    key = (path, int(attrs.get("mtime", 0)),
-                           int(attrs.get("size", 0)))
+                    key = (path, int(attrs.get("mtime", 0)), int(attrs.get("size", 0)))
                     if key in seen:
                         continue
-                    if self.watcher and self.minimum_age_s > 0:
-                        if time.time() - attrs.get("mtime", 0) \
-                                < self.minimum_age_s:
-                            continue  # young file: retry next poll
-                    body = client.read_file(path)
-                    seen.add(key)
-                    spool.put(body, sftp_path=path)
-                    if self.delete_on_finish:
-                        client.remove(path)
+                    if (watcher and minimum_age_s > 0
+                            and time.time() - attrs.get("mtime", 0) < minimum_age_s):
+                        continue  # young file: retry next poll
+                    yield client.read_file(path), {"sftp_path": path}, functools.partial(
+                        consumed, client, path, key)
+            if not watcher or stop.wait(poll_interval_s):
+                return
 
-        def run() -> None:
-            try:
-                one_pass()
-                while self.watcher and not self._stop.is_set():
-                    if self._stop.wait(self.poll_interval_s):
-                        break
-                    one_pass()
-            except Exception as e:
-                self.error = e
-            finally:
-                try:
-                    client.close()
-                except OSError:
-                    pass
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-        if self.error is not None:
-            raise self.error
+    return Bridge("sftp", spool_dir, functools.partial(
+        SftpClient, host, port, username, password, private_key_pem=private_key_pem),
+        messages)
 
 
 # ---------------------------------------------------------------------------

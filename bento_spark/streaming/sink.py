@@ -430,9 +430,9 @@ class _WebSocket:
         self.sock, _ = ws_connect(url, tls_insecure=tls_insecure)
 
     def _frame(self, opcode: int, payload: bytes) -> None:
-        from bento_spark.streaming.http_server import WebSocketSpooler
+        from bento_spark.streaming.http_server import client_frame
 
-        self.sock.sendall(WebSocketSpooler.client_frame(opcode, payload, os.urandom(4)))
+        self.sock.sendall(client_frame(opcode, payload, os.urandom(4)))
 
     def send(self, text: str) -> None:
         self._frame(0x1, text.encode("utf-8"))

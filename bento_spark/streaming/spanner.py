@@ -29,11 +29,11 @@ from __future__ import annotations
 import json
 import threading
 import time
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
+from bento_spark.streaming.bridge import Bridge, FanIn
 from bento_spark.streaming.pubsub import ServiceAccountToken, bearer_headers
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.reader import hang_up
 
 _JSONDecoder = json.JSONDecoder()
 
@@ -130,13 +130,13 @@ class SpannerClient:
         return [[decode_value(v, f["type"]) for v, f in zip(row, fields)]
                 for row in resp.get("rows") or []]
 
-    def execute_streaming_sql(self, session: str, sql: str, on_row,
+    def execute_streaming_sql(self, session: str, sql: str,
                               params: dict | None = None,
-                              param_types: dict | None = None) -> None:
-        """POST :executeStreamingSql and feed each decoded row to
-        `on_row(row)` as it arrives — incremental parse of the streamed
-        JSON array of PartialResultSet objects, with chunkedValue
-        resumption and row re-assembly from the flat values stream."""
+                              param_types: dict | None = None):
+        """POST :executeStreamingSql and yield each decoded row as it
+        arrives: incremental parse of the streamed JSON array of
+        PartialResultSet objects, with chunkedValue resumption and row
+        re-assembly from the flat values stream."""
         body: dict = {"sql": sql}
         if params:
             body["params"] = params
@@ -164,7 +164,7 @@ class SpannerClient:
             buf = ""
             opened = done = False
 
-            def feed(prs: dict) -> None:
+            def feed(prs: dict) -> list[list]:
                 nonlocal fields, pending
                 if fields is None and "metadata" in prs:
                     fields = (prs["metadata"].get("rowType", {})
@@ -172,7 +172,7 @@ class SpannerClient:
                 vals = list(prs.get("values") or [])
                 if pending is not None:
                     if not vals:
-                        return
+                        return []
                     vals[0] = merge_chunked(pending, vals[0])
                     pending = None
                 if prs.get("chunkedValue"):
@@ -182,11 +182,13 @@ class SpannerClient:
                     pending = vals.pop()
                 values.extend(vals)
                 width = len(fields or [])
+                rows = []
                 while width and len(values) >= width:
                     raw = values[:width]
                     del values[:width]
-                    on_row([decode_value(v, f["type"])
-                            for v, f in zip(raw, fields)])
+                    rows.append([decode_value(v, f["type"])
+                                 for v, f in zip(raw, fields)])
+                return rows
 
             while not done:
                 chunk = resp.read(65536)
@@ -216,7 +218,7 @@ class SpannerClient:
                     except json.JSONDecodeError:
                         break  # need more bytes
                     buf = buf[end:]
-                    feed(obj)
+                    yield from feed(obj)
             if pending is not None:
                 raise ConnectionError("spanner: stream ended mid-chunk")
             if values:
@@ -233,6 +235,8 @@ class SpannerClient:
             conns = list(self._open_conns)
             self._open_conns.clear()
         for c in conns:
+            if c.sock is not None:
+                hang_up(c.sock)  # wakes a reader blocked on the stream
             try:
                 c.close()
             except OSError:
@@ -244,121 +248,76 @@ class SpannerClient:
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class SpannerCdcSpooler:
-    """`gcp_spanner_cdc` input: the reference's partition tree as driver
-    threads — the root query (partition_token NULL) yields data changes
-    and child-partition records; every child spawns its own reader, with
-    token dedup so a partition announced by two parents reads once
-    (input_spanner_cdc.go trackPartition). One spool file per mod: the
-    body is the Mod.ToMap JSON, the header the reference's gcp_spanner_*
-    metadata (input_spanner_cdc.go:33-37)."""
+def spanner_cdc_bridge(dsn: str, stream_name: str, spool_dir: str,
+                       start_time: str | None = None, end_time: str | None = None,
+                       heartbeat_ms: int = 3000,
+                       endpoint: str = "https://spanner.googleapis.com",
+                       credentials: dict | None = None) -> Bridge:
+    """`gcp_spanner_cdc` input: the reference's partition tree. The root
+    query (partition_token NULL) yields data changes and child-partition
+    records; every child is read as its own stream, with token dedup so a
+    partition announced by two parents reads once (input_spanner_cdc.go
+    trackPartition). One spool file per mod: the body is the Mod.ToMap
+    JSON, the header the reference's gcp_spanner_* metadata
+    (input_spanner_cdc.go:33-37). The bridge finishes when every
+    partition has ended (an `end_time` was given). `start_time` None is
+    the time the bridge is made (the reference's default)."""
+    start_time = start_time or time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+    sql = (f"SELECT ChangeRecord FROM READ_{stream_name} ("
+           "@start_timestamp, @end_timestamp, @partition_token, "
+           "@heartbeat_milliseconds)")
+    types = {
+        "start_timestamp": {"code": "TIMESTAMP"},
+        "end_timestamp": {"code": "TIMESTAMP"},
+        "partition_token": {"code": "STRING"},
+        "heartbeat_milliseconds": {"code": "INT64"},
+    }
 
-    dsn: str
-    stream_name: str
-    spool_dir: str
-    start_time: str | None = None  # RFC3339; None = now (reference default)
-    end_time: str | None = None
-    heartbeat_ms: int = 3000
-    endpoint: str = "https://spanner.googleapis.com"
-    credentials: dict | None = None
-    error: str | None = None
-    _client: SpannerClient | None = field(default=None, repr=False)
-    _session: str = field(default="", repr=False)
-    _threads: list = field(default_factory=list, repr=False)
-    _tokens: set = field(default_factory=set, repr=False)
-    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
-    _spool: Spool | None = field(default=None, repr=False)
-
-    def start(self) -> "SpannerCdcSpooler":
-        self._spool = Spool(self.spool_dir)
-        self._client = SpannerClient(self.dsn, endpoint=self.endpoint,
-                                     credentials=self.credentials)
-        self._session = self._client.create_session()
+    def connect():
+        client = SpannerClient(dsn, endpoint=endpoint, credentials=credentials)
+        session = client.create_session()
         # Connect()'s health probe (input_spanner_cdc.go:222-226)
-        if self._client.execute_sql(self._session, "SELECT 1") != [[1]]:
+        if client.execute_sql(session, "SELECT 1") != [[1]]:
             raise ConnectionError("spanner: health check did not return 1")
-        if self.start_time is None:
-            self.start_time = time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                            time.gmtime())
-        self._spawn(None, self.start_time)
-        return self
+        return client, session
 
-    def _spawn(self, token: str | None, start_ts: str) -> None:
-        t = threading.Thread(target=self._read_partition,
-                             args=(token, start_ts), daemon=True)
-        with self._lock:
-            self._threads.append(t)
-        t.start()
-
-    def _track(self, token: str) -> bool:
-        """True when already tracked (skip), else records it."""
-        with self._lock:
-            if token in self._tokens:
-                return True
-            self._tokens.add(token)
-            return False
-
-    def _spool_mod(self, dc: dict, mod: dict) -> None:
+    def mod_message(dc: dict, mod: dict):
         out = {k: mod[k] for k in ("keys", "new_values", "old_values")
                if mod.get(k) is not None}  # Mod.ToMap: only valid fields
-        self._spool.put(
-            json.dumps(out),
-            gcp_spanner_commit_timestamp=dc.get("commit_timestamp"),
-            gcp_spanner_cdc_mod_type=dc.get("mod_type"),
-            gcp_spanner_table_name=dc.get("table_name"),
-            gcp_spanner_cdc_server_transaction_id=dc.get("server_transaction_id"),
-            gcp_spanner_cdc_record_sequence=dc.get("record_sequence"))
+        return json.dumps(out), {
+            "gcp_spanner_commit_timestamp": dc.get("commit_timestamp"),
+            "gcp_spanner_cdc_mod_type": dc.get("mod_type"),
+            "gcp_spanner_table_name": dc.get("table_name"),
+            "gcp_spanner_cdc_server_transaction_id": dc.get("server_transaction_id"),
+            "gcp_spanner_cdc_record_sequence": dc.get("record_sequence")}, None
 
-    def _read_partition(self, token: str | None, start_ts: str) -> None:
-        sql = (f"SELECT ChangeRecord FROM READ_{self.stream_name} ("
-               "@start_timestamp, @end_timestamp, @partition_token, "
-               "@heartbeat_milliseconds)")
-        params = {
-            "start_timestamp": start_ts,
-            "end_timestamp": self.end_time,
-            "partition_token": token,
-            "heartbeat_milliseconds": str(self.heartbeat_ms),
-        }
-        types = {
-            "start_timestamp": {"code": "TIMESTAMP"},
-            "end_timestamp": {"code": "TIMESTAMP"},
-            "partition_token": {"code": "STRING"},
-            "heartbeat_milliseconds": {"code": "INT64"},
-        }
+    def messages(conn, stop):
+        client, session = conn
+        fan, tokens, lock = FanIn(stop), set(), threading.Lock()
 
-        def on_row(row: list) -> None:
-            for rec in row[0] or []:
-                for dc in rec.get("data_change_record") or []:
-                    for mod in dc.get("mods") or []:
-                        self._spool_mod(dc, mod)
-                for cp in rec.get("child_partitions_record") or []:
-                    for child in cp.get("child_partitions") or []:
-                        if self._track(child["token"]):
-                            continue
-                        self._spawn(child["token"], cp["start_timestamp"])
+        def partition(token: str | None, start_ts: str):
+            params = {"start_timestamp": start_ts, "end_timestamp": end_time,
+                      "partition_token": token,
+                      "heartbeat_milliseconds": str(heartbeat_ms)}
+            for row in client.execute_streaming_sql(session, sql, params=params,
+                                                    param_types=types):
+                for rec in row[0] or []:
+                    for dc in rec.get("data_change_record") or []:
+                        for mod in dc.get("mods") or []:
+                            yield mod_message(dc, mod)
+                    for cp in rec.get("child_partitions_record") or []:
+                        for child in cp.get("child_partitions") or []:
+                            with lock:
+                                if child["token"] in tokens:
+                                    continue
+                                tokens.add(child["token"])
+                            fan.add(partition(child["token"], cp["start_timestamp"]))
 
-        try:
-            self._client.execute_streaming_sql(
-                self._session, sql, on_row, params=params,
-                param_types=types)
-        except (ConnectionError, OSError) as e:
-            if not self._stop.is_set():
-                import sys
+        fan.add(partition(None, start_time))
+        return fan
 
-                self.error = f"spanner cdc: {e}"
-                print(self.error, file=sys.stderr)
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()  # wakes readers blocked on the stream
-        with self._lock:
-            threads = list(self._threads)
-        for t in threads:
-            t.join(timeout=10)
+    return Bridge("gcp_spanner_cdc", spool_dir, connect, messages,
+                  close=lambda conn: conn[0].close())
 
 
 # ---------------------------------------------------------------------------

@@ -3,19 +3,21 @@ and the one reader that streams it.
 
 Structured Streaming has no push source: a source must be replayable. So a
 push or poll input (an HTTP listener, a broker subscriber, a bucket poller)
-is a bridge. A driver-side spooler persists each message as one durable
+is a bridge. A driver-side bridge persists each message as one durable
 file in a spool dir, and the stream is a plain file source over that dir.
 Every streaming guarantee holds: the file source's offset log makes the
 ingestion replayable and exactly-once downstream, which a socket-style push
 source can never be. This is how production Spark takes webhooks without
-Kafka (HTTP -> durable object store -> file stream); at scale the spooler
+Kafka (HTTP -> durable object store -> file stream); at scale the bridge
 is a fleet writing to S3/GCS and only the spool location changes.
 
 A spool file is written to a dot-prefixed temp name and renamed into place,
 so the file source never reads a partial body (Spark's default path filter
-hides dotfiles). `Spool.put` returns only after the rename, so a spooler
+hides dotfiles). `Spool.put` returns only after the rename, so a bridge
 acks its protocol (HTTP 200, PUBACK, XACK, DeleteMessage, ...) after the
-message is durable: at-least-once.
+message is durable: at-least-once. How a client-side bridge runs (connect,
+the put-then-ack loop, reconnects, failure and stop) is streaming/bridge.py;
+the two listeners (http_server.py) call `put` from their request handlers.
 
 File layout, `<seq:012d>-<uuid32>.msg`:
 
@@ -24,8 +26,8 @@ File layout, `<seq:012d>-<uuid32>.msg`:
 The header line means a file is never empty (Spark's text source emits no
 row for a 0-byte file) and no file name carries metadata (a name longer
 than 255 bytes cannot be created). `seq` counts one `Spool`'s messages from
-1, so a spooler's files sort in arrival order; the uuid keeps names
-distinct across spoolers sharing a dir, and across restarts.
+1, so a bridge's files sort in arrival order; the uuid keeps names
+distinct across bridges sharing a dir, and across restarts.
 """
 
 from __future__ import annotations
@@ -78,7 +80,7 @@ def decode(data: bytes) -> tuple[dict, bytes]:
 
 def entries(spool_dir: str | os.PathLike) -> list[tuple[dict, bytes]]:
     """Every complete message in a spool dir as (meta, body), in seq
-    order (one spooler's arrival order)."""
+    order (one bridge's arrival order)."""
     return [decode(p.read_bytes()) for p in sorted(Path(spool_dir).glob(f"*{SUFFIX}"))]
 
 
@@ -92,7 +94,7 @@ def read_spool(spark, spool_dir: str, meta_ddl: str = "", lines: bool = False,
     none for an empty body). The header is split off a whole file, so in
     either mode one body must fit in one JVM string (under 2 GB); a
     line-mode body is held about three times over while it is split."""
-    # pyspark is imported here: the spoolers' modules also run in Python
+    # pyspark is imported here: the connector modules also run in Python
     # workers, which need only `Spool`
     from pyspark.sql import functions as F
 

@@ -16,7 +16,7 @@ assumed). Against real AWS, point `endpoint` at the regional URL — the
 same override contract as localstack/elasticmq.
 
 Spark-first mapping (same spool-bridge rationale as every pull source):
-- input  -> SqsSpooler long-polls ReceiveMessage and persists each
+- input  -> sqs_bridge long-polls ReceiveMessage and persists each
   message as a durable spool file BEFORE DeleteMessage (ack-after-
   durability = at-least-once: an un-deleted message re-appears after its
   visibility timeout, the SQS contract). MessageId rides the spool
@@ -36,10 +36,9 @@ import hmac
 import json
 import threading
 import time
-from dataclasses import dataclass, field
 
 from bento_spark.streaming import rest
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
 
 
 # --------------------------------------------------------------------------
@@ -182,79 +181,44 @@ class SqsClient:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class SqsSpooler:
+def sqs_bridge(endpoint: str, queue_url: str, access_key: str, secret_key: str,
+               spool_dir: str, region: str = "us-east-1", wait_time_s: int = 1,
+               max_messages: int = 10, delete_message: bool = True) -> Bridge:
     """`aws_sqs` input (input_sqs.go): long-poll ReceiveMessage and spool
     each message as one durable file; DeleteMessage fires only AFTER the
-    atomic rename — at-least-once (un-deleted messages re-appear after
+    atomic rename: at-least-once (un-deleted messages re-appear after
     the visibility timeout). `delete_message: false` (the reference's
     leave-in-queue mode) skips the ack."""
+    # leave-in-queue mode only: remember spooled ids so re-visible
+    # messages don't duplicate; delete_message mode never consults it
+    # (tracking there would be an unbounded leak for zero benefit)
+    seen: set[str] | None = None if delete_message else set()
 
-    endpoint: str
-    queue_url: str
-    access_key: str
-    secret_key: str
-    spool_dir: str
-    region: str = "us-east-1"
-    wait_time_s: int = 1
-    max_messages: int = 10
-    delete_message: bool = True
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    def delete(client: SqsClient, receipt: str) -> None:
+        try:
+            client.delete_message(queue_url, receipt)
+        except (ConnectionError, OSError):
+            pass  # the visibility timeout re-delivers
 
-    def start(self) -> "SqsSpooler":
-        spool = Spool(self.spool_dir)
-        client = SqsClient(self.endpoint, self.access_key, self.secret_key,
-                           region=self.region)
-        # leave-in-queue mode only: remember spooled ids so re-visible
-        # messages don't duplicate; delete_message mode never consults it
-        # (tracking there would be an unbounded leak for zero benefit)
-        seen: set[str] | None = None if self.delete_message else set()
+    def messages(client: SqsClient, stop):
+        while not stop.is_set():
+            msgs = client.receive_message(queue_url, max_messages=max_messages,
+                                          wait_time_s=wait_time_s)
+            if not msgs:
+                stop.wait(EMPTY_POLL_S)
+            for m in msgs:
+                mid = m.get("MessageId", "")
+                if seen is not None:
+                    if mid in seen:
+                        continue
+                    seen.add(mid)
+                ack = (functools.partial(delete, client, m["ReceiptHandle"])
+                       if delete_message and "ReceiptHandle" in m else None)
+                yield m.get("Body", ""), {"sqs_message_id": mid or None}, ack
 
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                try:
-                    msgs = client.receive_message(
-                        self.queue_url, max_messages=self.max_messages,
-                        wait_time_s=self.wait_time_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        mid = m.get("MessageId", "")
-                        if seen is not None:
-                            if mid in seen:
-                                continue
-                            seen.add(mid)
-                        spool.put(m.get("Body", ""), sqs_message_id=mid or None)
-                        if self.delete_message:
-                            try:
-                                client.delete_message(self.queue_url,
-                                                      m["ReceiptHandle"])
-                            except (ConnectionError, OSError, KeyError):
-                                pass  # visibility timeout re-delivers
-                except Exception as e:  # disk/decode faults: surface, don't vanish
-                    self.error = f"aws_sqs: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("aws_sqs", spool_dir,
+                  functools.partial(SqsClient, endpoint, access_key, secret_key, region=region),
+                  messages)
 
 
 # --------------------------------------------------------------------------

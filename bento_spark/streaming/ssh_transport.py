@@ -38,6 +38,8 @@ import os
 import socket
 import struct
 
+from bento_spark.streaming.reader import SocketReader
+
 # ---------------------------------------------------------------------------
 # AES (FIPS-197), encrypt-only, constants derived from the spec's GF(2^8)
 # ---------------------------------------------------------------------------
@@ -323,7 +325,7 @@ class SshTransport:
 
     def __init__(self, sock: socket.socket):
         self.sock = sock
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "ssh")
         self.seq_out = 0
         self.seq_in = 0
         self._enc: AesCtr | None = None
@@ -336,16 +338,6 @@ class SshTransport:
         self._enc = AesCtr(enc_key, enc_iv)
         self._dec = AesCtr(dec_key, dec_iv)
         self._mac_out, self._mac_in = mac_out, mac_in
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("ssh: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
 
     def send_packet(self, payload: bytes) -> None:
         block = 16 if self._enc else 8
@@ -365,19 +357,19 @@ class SshTransport:
 
     def recv_packet(self) -> bytes:
         if self._dec is None:
-            head = self._read_exact(4)
+            head = self.reader.exact(4)
             length = struct.unpack(">I", head)[0]
             if length > (1 << 24):
                 raise ConnectionError("ssh: packet too large")
-            rest = self._read_exact(length)
+            rest = self.reader.exact(length)
             clear = head + rest
         else:
-            head = self._dec.process(self._read_exact(16))
+            head = self._dec.process(self.reader.exact(16))
             length = struct.unpack(">I", head[:4])[0]
             if length > (1 << 24):
                 raise ConnectionError("ssh: packet too large")
-            rest = self._dec.process(self._read_exact(length - 12))
-            mac = self._read_exact(32)
+            rest = self._dec.process(self.reader.exact(length - 12))
+            mac = self.reader.exact(32)
             clear = head + rest
             want = hmac_mod.new(self._mac_in,
                                 struct.pack(">I", self.seq_in) + clear,

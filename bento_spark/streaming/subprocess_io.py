@@ -21,97 +21,59 @@ from __future__ import annotations
 
 import subprocess
 import sys
-import threading
-from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge, FanIn
 
 
-@dataclass
-class SubprocessSpooler:
+def subprocess_bridge(name: str, args: list[str] = (), spool_dir: str = "",
+                      restart_on_exit: bool = False, max_buffer: int = 65536) -> Bridge:
     """`subprocess` input: execute `name args...`, spool each stdout
-    line as one message file. The command runs once and the input
-    closes down when it terminates, unless restart_on_exit re-executes
-    it (input_subprocess.go's restartOnExit loop). A line longer than
-    max_buffer fails the input loudly (bufio.Scanner's token-too-long
-    contract)."""
+    line as one message file, and log each stderr line. The command runs
+    once and the bridge finishes when it exits, unless restart_on_exit
+    re-executes it (input_subprocess.go's restartOnExit loop): the exit
+    then counts as a dropped connection, so relaunches back off. A line
+    longer than max_buffer fails the input loudly (bufio.Scanner's
+    token-too-long contract)."""
 
-    name: str
-    args: list[str] = field(default_factory=list)
-    spool_dir: str = ""
-    restart_on_exit: bool = False
-    max_buffer: int = 65536
-    error: str | None = None
-    finished: bool = False
-    restarts: int = 0
-    _proc: subprocess.Popen | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
+    def connect() -> subprocess.Popen:
+        return subprocess.Popen([name, *args], stdout=subprocess.PIPE,
+                                stderr=subprocess.PIPE, stdin=subprocess.DEVNULL)
 
-    def start(self) -> "SubprocessSpooler":
-        spool = Spool(self.spool_dir)
-
-        def pump_stderr(proc: subprocess.Popen) -> None:
-            # input_subprocess.go logs subprocess stderr lines
-            for raw in proc.stderr:
-                print(f"subprocess input [{self.name}] stderr: "
-                      f"{raw.decode('utf-8', 'replace').rstrip()}",
-                      file=sys.stderr)
-
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    proc = subprocess.Popen(
-                        [self.name, *self.args],
-                        stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-                        stdin=subprocess.DEVNULL)
-                except OSError as e:
-                    self.error = f"subprocess input: {e}"
-                    self.finished = True
-                    return
-                self._proc = proc
-                et = threading.Thread(target=pump_stderr, args=(proc,),
-                                      daemon=True)
-                et.start()
-                while not self._stop.is_set():
-                    line = proc.stdout.readline(self.max_buffer + 1)
-                    if not line:
-                        break
-                    if len(line) > self.max_buffer:
-                        self.error = (
-                            f"subprocess input: line exceeds max_buffer "
-                            f"({self.max_buffer} bytes)")
-                        proc.kill()
-                        proc.wait()
-                        self.finished = True
-                        return
-                    spool.put(line.rstrip(b"\r\n"))
-                proc.wait()
-                et.join(timeout=5)
-                if not self.restart_on_exit or self._stop.is_set():
-                    break
-                self.restarts += 1
-            self.finished = True
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._proc is not None and self._proc.poll() is None:
-            self._proc.terminate()
+    def close(proc: subprocess.Popen) -> None:
+        if proc.poll() is None:
+            proc.terminate()
             try:
-                self._proc.wait(timeout=5)
+                proc.wait(timeout=5)
             except subprocess.TimeoutExpired:
-                self._proc.kill()
-                self._proc.wait()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+                proc.kill()
+                proc.wait()
+
+    def lines(proc: subprocess.Popen):
+        while line := proc.stdout.readline(max_buffer + 1):
+            if len(line) > max_buffer:
+                raise ValueError(f"subprocess input: line exceeds max_buffer "
+                                 f"({max_buffer} bytes)")
+            yield line.rstrip(b"\r\n"), {}, None
+
+    def log_stderr(proc: subprocess.Popen):
+        # input_subprocess.go logs subprocess stderr lines
+        for raw in proc.stderr:
+            print(f"subprocess input [{name}] stderr: "
+                  f"{raw.decode('utf-8', 'replace').rstrip()}", file=sys.stderr)
+        yield from ()
+
+    def messages(proc: subprocess.Popen, stop):
+        fan = FanIn(stop)
+        fan.add(lines(proc))
+        fan.add(log_stderr(proc))
+        yield from fan
+        code = proc.wait()
+        if restart_on_exit and not stop.is_set():
+            raise ConnectionError(f"subprocess input: {name} exited with code {code}")
+
+    return Bridge("subprocess", spool_dir, connect, messages, close=close)
 
 
 def subprocess_sink(name: str, args: list[str] | None = None,

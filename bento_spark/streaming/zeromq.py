@@ -22,7 +22,7 @@ Socket semantics implemented (spec §"The Socket Layer"):
   (§"Error Handling": e.g. a PUSH peer on a PUB endpoint).
 
 Spark-first mapping (same spool-bridge rationale as every push source):
-- input  -> ZmqSpooler (PULL or SUB per the reference enum) spools each
+- input  -> zmq_bridge (PULL or SUB per the reference enum) spools each
   message as one durable file BEFORE polling the next (ZeroMQ transports
   are at-most-once once delivered to the application — nothing to ack,
   matching zmq4's contract).
@@ -36,9 +36,9 @@ import functools
 import socket
 import struct
 import threading
-from dataclasses import dataclass, field
 
-from bento_spark.streaming.spool import Spool
+from bento_spark.streaming.bridge import Bridge
+from bento_spark.streaming.reader import SocketReader
 
 _GREETING_SIG = b"\xff" + b"\x00" * 8 + b"\x7f"
 _FLAG_MORE, _FLAG_LONG, _FLAG_COMMAND = 0x01, 0x02, 0x04
@@ -57,18 +57,8 @@ class ZmtpConnection:
         self.sock = sock
         self.socket_type = socket_type
         self.peer_type: str | None = None
-        self._buf = bytearray()
+        self.reader = SocketReader(self.sock, "zmq")
         self._handshake()
-
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
-            chunk = self.sock.recv(65536)
-            if not chunk:
-                raise ConnectionError("zmq: connection closed")
-            self._buf += chunk
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
 
     def _handshake(self) -> None:
         # greeting: signature + version 3.0 + mechanism NULL + as-server + filler
@@ -77,7 +67,7 @@ class ZmtpConnection:
             + b"NULL" + b"\x00" * 16 + b"\x00" + b"\x00" * 31
         )
         self.sock.sendall(greeting)
-        got = self._read_exact(64)
+        got = self.reader.exact(64)
         if got[0] != 0xFF or got[9] != 0x7F:
             raise ConnectionError("zmq: bad greeting signature")
         if got[10] < 3:
@@ -115,12 +105,12 @@ class ZmtpConnection:
             self.sock.sendall(bytes([flags, len(body)]) + body)
 
     def _recv_frame(self) -> tuple[int, bytes]:
-        flags = self._read_exact(1)[0]
+        flags = self.reader.exact(1)[0]
         if flags & _FLAG_LONG:
-            size = struct.unpack(">Q", self._read_exact(8))[0]
+            size = struct.unpack(">Q", self.reader.exact(8))[0]
         else:
-            size = self._read_exact(1)[0]
-        return flags, self._read_exact(size)
+            size = self.reader.exact(1)[0]
+        return flags, self.reader.exact(size)
 
     def _recv_command(self) -> tuple[bytes, bytes]:
         flags, body = self._recv_frame()
@@ -339,61 +329,34 @@ class ZmqSocket:
 # --------------------------------------------------------------------------
 
 
-@dataclass
-class ZmqSpooler:
+def zmq_bridge(socket_type: str, spool_dir: str, urls: list[str] = (),
+               bind: bool = False, sub_filters: list[str] = ()) -> Bridge:
     """`zmq4` input (input_zmq4.go): PULL or SUB per `socket_type`,
     `bind` or connect per the flag, `sub_filters` applied at subscribe
     time; each message spools as one durable file (at-most-once once
-    delivered, the zmq4 contract — there are no acks in the protocol)."""
+    delivered, the zmq4 contract: there are no acks in the protocol). In
+    bind mode the bridge's `port` is the bound port."""
+    if socket_type not in ("PULL", "SUB"):
+        raise ValueError("zmq input socket_type must be PULL or SUB")
 
-    socket_type: str  # PULL | SUB
-    spool_dir: str
-    urls: list[str] = field(default_factory=list)
-    bind: bool = False
-    sub_filters: list[str] = field(default_factory=list)
-    _sock: ZmqSocket | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-
-    def start(self) -> "ZmqSpooler":
-        if self.socket_type not in ("PULL", "SUB"):
-            raise ValueError("zmq input socket_type must be PULL or SUB")
-        spool = Spool(self.spool_dir)
-        sock = ZmqSocket(self.socket_type,
-                         [f.encode("utf-8") for f in self.sub_filters])
-        if self.bind:
-            host, port = parse_zmq_url(self.urls[0])
-            sock.bind(host, port)
+    def connect() -> ZmqSocket:
+        sock = ZmqSocket(socket_type, [f.encode("utf-8") for f in sub_filters])
+        if bind:
+            sock.bind(*parse_zmq_url(urls[0]))
         else:
-            for u in self.urls:
+            for u in urls:
                 sock.connect(*parse_zmq_url(u))
-        self._sock = sock
+        return sock
 
-        def run() -> None:
-            while not self._stop.is_set():
-                frames = sock.recv(timeout=0.2)
-                if frames is None:
-                    continue
+    def messages(sock: ZmqSocket, stop):
+        while not stop.is_set():
+            frames = sock.recv(timeout=0.2)
+            if frames is not None:
                 # multi-frame messages concatenate like the reference's
                 # part-per-frame batch collapsed to one payload
-                spool.put(b"".join(frames))
+                yield b"".join(frames), {}, None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    @property
-    def port(self) -> int | None:
-        return self._sock.port if self._sock else None
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._sock is not None:
-            self._sock.close()
-            self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
+    return Bridge("zmq4", spool_dir, connect, messages)
 
 
 # --------------------------------------------------------------------------

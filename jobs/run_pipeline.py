@@ -49,6 +49,7 @@ def main() -> int:
     spark = get_spark(app_name="bento-pipeline")
 
     from bento_spark.plans.compiler import Pipeline, compile_yaml
+    from bento_spark.streaming.bridge import BridgeFailed
     from bento_spark.streaming.metrics import BentoMetricsListener, collect_progress
 
     with open(args.config) as f:
@@ -58,10 +59,13 @@ def main() -> int:
         path = pipe.conf["input"]["parquet"]["path"]
         Pipeline.stage_clips(spark, path, args.stage_clips)
 
-    q = pipe.run_stream(spark, checkpoint=args.checkpoint, available_now=not args.continuous)
-    q.awaitTermination(args.timeout or None)
-    if args.continuous and q.isActive:
-        q.stop()
+    # a spool-bridge input's bridge runs for the length of the query, and
+    # the output's driver-side resources are released after it
+    try:
+        q = pipe.run(spark, args.checkpoint, continuous=args.continuous, timeout=args.timeout)
+    except BridgeFailed as e:
+        print(e, file=sys.stderr)
+        return 1
     # metrics are PULLED from recentProgress after the run — a push listener
     # over the py4j callback server can garble under concurrent-query
     # callbacks and take the whole job down (see metrics.collect_progress)

@@ -13,8 +13,8 @@ import pytest
 
 from bento_spark.streaming.amqp import (
     AmqpClient,
-    AmqpSpooler,
     MiniAmqpBroker,
+    amqp_bridge,
     binding_matches,
     content_header,
     method,
@@ -144,7 +144,7 @@ def test_spooler_acks_after_spool(broker, tmp_path):
     spool = tmp_path / "spool"
     pub = AmqpClient(broker.host, broker.port)
     pub.queue_declare("evt")
-    sp = AmqpSpooler(host=broker.host, port=broker.port, queue="evt",
+    sp = amqp_bridge(host=broker.host, port=broker.port, queue="evt",
                      spool_dir=str(spool))
     sp.start()
     try:

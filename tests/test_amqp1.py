@@ -12,13 +12,13 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.amqp1 import (
-    Amqp1Client,
-    Amqp1Spooler,
-    Described,
-    MiniAmqp1Broker,
     S_AMQP_VALUE,
     S_DATA,
+    Amqp1Client,
+    Described,
+    MiniAmqp1Broker,
     Symbol,
+    amqp1_bridge,
     decode_message_body,
     decode_value,
     enc_value,
@@ -136,7 +136,7 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
         broker.push("feed", enc_value(Described(S_AMQP_VALUE,
                                                 json.dumps({"n": i}))))
     spool = str(tmp_path / "spool")
-    sp = Amqp1Spooler(url=f"amqp://127.0.0.1:{broker.port}",
+    sp = amqp1_bridge(url=f"amqp://127.0.0.1:{broker.port}",
                       source_address="feed", spool_dir=spool).start()
     try:
         deadline = time.monotonic() + 10

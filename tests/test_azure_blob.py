@@ -14,9 +14,9 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.azure_blob import (
     AzureBlobClient,
-    AzureBlobSpooler,
     BlobNotFoundError,
     MiniAzureBlobServer,
+    azure_blob_bridge,
     shared_key_signature,
     shared_key_string_to_sign,
 )
@@ -90,7 +90,7 @@ def test_listing_spooler_to_stream(server, spark, tmp_path):
     c.put_blob("ctr", "in/a.json", b'{"n": 1}')
     c.put_blob("ctr", "in/empty.json", b"")  # 0-byte blob must survive
     spool = str(tmp_path / "spool")
-    sp = AzureBlobSpooler(endpoint=server.endpoint, account=server.account,
+    sp = azure_blob_bridge(endpoint=server.endpoint, account=server.account,
                           account_key=server.account_key, container="ctr",
                           spool_dir=spool, prefix="in/").start()
     try:

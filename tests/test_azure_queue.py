@@ -14,8 +14,8 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.azure_queue import (
     AzureQueueClient,
-    AzureQueueSpooler,
     MiniAzureQueueServer,
+    azure_queue_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -71,7 +71,7 @@ def test_spooler_to_stream(server, spark, tmp_path):
     for i in range(3):
         c.put_message("feed", json.dumps({"n": i}))
     spool = str(tmp_path / "spool")
-    sp = AzureQueueSpooler(endpoint=server.endpoint, account=server.account,
+    sp = azure_queue_bridge(endpoint=server.endpoint, account=server.account,
                            account_key=server.account_key, queue="feed",
                            spool_dir=spool).start()
     try:

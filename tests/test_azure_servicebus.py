@@ -16,12 +16,12 @@ from bento_spark.streaming.azure_servicebus import (
     ANN_ENQUEUED,
     ANN_SEQUENCE,
     MiniServiceBusBroker,
-    ServiceBusSpooler,
     cbs_put_token,
     decode_sections,
     encode_message,
     generate_sas_token,
     parse_sb_connection_string,
+    service_bus_bridge,
     verify_sas_token,
 )
 from bento_spark.streaming.spool import entries
@@ -137,7 +137,7 @@ def test_spooler_metadata_and_reject_patterns(broker, tmp_path):
     broker.push("orders", encode_message(b'{"status": "ok-2"}'))
     (kn, key), = broker.keys.items()
     spool = tmp_path / "sb_spool"
-    sp = ServiceBusSpooler(
+    sp = service_bus_bridge(
         host=broker.host, port=broker.port, queue="orders",
         spool_dir=str(spool), key_name=kn, key=key,
         nack_reject_patterns=[r"POISON"]).start()

@@ -15,10 +15,10 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.azure_table import (
     AzureTableClient,
-    AzureTableSpooler,
     EntityConflictError,
     EntityNotFoundError,
     MiniAzureTableServer,
+    azure_table_bridge,
     eval_odata_filter,
     stringify_properties,
     table_signature,

@@ -13,8 +13,8 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.beanstalkd import (
     BeanstalkdClient,
-    BeanstalkdSpooler,
     MiniBeanstalkdServer,
+    beanstalkd_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -87,7 +87,7 @@ def test_spooler_acks_after_durability(server, tmp_path):
     pub = BeanstalkdClient(server.host, server.port)
     for i in range(5):
         pub.put(f"j{i}".encode())
-    sp = BeanstalkdSpooler(server.host, server.port, str(spool)).start()
+    sp = beanstalkd_bridge(server.host, server.port, str(spool)).start()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline and len(entries(spool)) < 5:
@@ -98,6 +98,46 @@ def test_spooler_acks_after_durability(server, tmp_path):
     finally:
         sp.stop()
         pub.close()
+
+
+def _until(pred, what: str, timeout: float = 15.0) -> None:
+    deadline = time.monotonic() + timeout
+    while not pred():
+        assert time.monotonic() < deadline, what
+        time.sleep(0.05)
+
+
+def test_bridge_rides_out_a_server_restart(tmp_path):
+    """Kill the server mid-stream and start a new one on the same port:
+    the bridge reconnects, and every job put once it is running again
+    reaches the spool."""
+    first = MiniBeanstalkdServer().start()
+    host, port = first.host, first.port
+    spool = tmp_path / "spool"
+    sp = beanstalkd_bridge(host, port, str(spool)).start()
+    second = None
+    try:
+        pub = BeanstalkdClient(host, port)
+        pub.put(b"before")
+        pub.close()
+        _until(lambda: len(entries(spool)) == 1, "first job not spooled")
+        first.stop()
+        _until(lambda: sp.state == "reconnecting", "bridge did not see the server go")
+        second = MiniBeanstalkdServer(port=port).start()
+        _until(lambda: sp.state == "running", f"bridge did not reconnect: {sp.cause}")
+        pub = BeanstalkdClient(host, port)
+        for i in range(3):
+            pub.put(f"after-{i}".encode())
+        _until(lambda: len(entries(spool)) == 4, "jobs after the restart not spooled")
+        assert pub.reserve(0) is None  # all deleted: acked after the put
+        pub.close()
+    finally:
+        sp.stop()
+        if second is not None:
+            second.stop()
+    assert [body for _, body in entries(spool)] == [
+        b"before", b"after-0", b"after-1", b"after-2"]
+    assert sp.restarts >= 1 and sp.error is None
 
 
 def test_yaml_beanstalkd_roundtrip(server, spark, tmp_path):

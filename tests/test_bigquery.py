@@ -13,8 +13,8 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.bigquery import (
     BigQueryClient,
-    BigQuerySpooler,
     MiniBigQueryServer,
+    bigquery_bridge,
     build_select,
 )
 from bento_spark.streaming.spool import entries
@@ -72,7 +72,7 @@ def test_load_ndjson_and_csv(server):
 
 def test_spooler_one_row_per_message(server, tmp_path):
     spool = tmp_path / "spool"
-    sp = BigQuerySpooler(
+    sp = bigquery_bridge(
         endpoint=server.endpoint, project="proj", table="proj.ds.people",
         columns=["id", "name"], spool_dir=str(spool),
         where="site = ?", args=["bergen"]).start()

@@ -14,12 +14,12 @@ import pytest
 
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.cockroachdb import (
-    ChangefeedSpooler,
     MiniCockroachServer,
     PgWireClient,
     ScramClient,
     ScramServer,
     build_changefeed_statement,
+    changefeed_bridge,
     parse_pg_dsn,
 )
 from bento_spark.streaming.spool import entries
@@ -150,7 +150,7 @@ def test_other_auth_modes(mode):
 def test_changefeed_spooler_message_shape(server, tmp_path):
     _feed(server)
     spool = tmp_path / "spool"
-    sp = ChangefeedSpooler(dsn=server.dsn, tables=["strm"],
+    sp = changefeed_bridge(dsn=server.dsn, tables=["strm"],
                            spool_dir=str(spool)).start()
     try:
         deadline = time.monotonic() + 10
@@ -178,7 +178,7 @@ def test_changefeed_spooler_message_shape(server, tmp_path):
 def test_changefeed_cursor_resume(server, tmp_path):
     _feed(server)
     spool = tmp_path / "spool"
-    sp = ChangefeedSpooler(dsn=server.dsn, tables=["strm"],
+    sp = changefeed_bridge(dsn=server.dsn, tables=["strm"],
                            spool_dir=str(spool), cursor_cache=True).start()
     try:
         deadline = time.monotonic() + 10
@@ -192,7 +192,7 @@ def test_changefeed_cursor_resume(server, tmp_path):
     # rows landing while the input is down
     server.append_row("strm", ["d", 4], {"after": {"k": "d", "v": 4}},
                       "1000.0000000005")
-    sp2 = ChangefeedSpooler(dsn=server.dsn, tables=["strm"],
+    sp2 = changefeed_bridge(dsn=server.dsn, tables=["strm"],
                             spool_dir=str(spool), cursor_cache=True)
     assert 'CURSOR="1000.0000000002"' in sp2.statement
     assert "UPDATED" in sp2.statement

@@ -14,10 +14,10 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.cosmosdb import (
     CosmosClient,
-    CosmosSpooler,
     DocumentConflictError,
     DocumentNotFoundError,
     MiniCosmosServer,
+    cosmos_bridge,
     master_key_token,
     parse_connection_string,
     parse_pk_mapping,

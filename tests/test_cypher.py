@@ -12,9 +12,9 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.cypher import (
     BoltClient,
-    CypherSpooler,
     MiniBoltServer,
     Structure,
+    cypher_bridge,
     parse_bolt_uri,
     ps_pack,
     ps_unpack,
@@ -78,7 +78,7 @@ def test_spooler(server, tmp_path):
     server.datasets["MATCH (p:Person) RETURN p.name AS name, p.age AS age"] = (
         ["name", "age"], [["ada", 36], ["bob", 41]])
     spool = tmp_path / "spool"
-    sp = CypherSpooler(
+    sp = cypher_bridge(
         uri=server.uri,
         query="MATCH (p:Person) RETURN p.name AS name, p.age AS age",
         spool_dir=str(spool), user="neo4j", password="pw").start()

@@ -12,8 +12,8 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.discord import (
     DiscordClient,
-    DiscordSpooler,
     MiniDiscordServer,
+    discord_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -50,7 +50,7 @@ def test_429_retry_after(server):
 def test_spooler_cursor(server, tmp_path):
     server.seed("c3", "first")
     spool = tmp_path / "spool"
-    sp = DiscordSpooler(endpoint=server.endpoint, channel_id="c3",
+    sp = discord_bridge(endpoint=server.endpoint, channel_id="c3",
                         bot_token=server.bot_token, spool_dir=str(spool),
                         poll_period_s=0.1, limit=2).start()
     try:

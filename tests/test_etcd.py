@@ -14,9 +14,9 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.etcd import (
     EtcdWatcher,
-    EtcdWatchSpooler,
     MiniEtcdServer,
     build_create_request,
+    etcd_watch_bridge,
     events_to_maps,
     parse_etcd_endpoint,
     prefix_range_end,
@@ -207,7 +207,7 @@ def test_auth_required_and_verified(server):
 def test_watch_horizon_filters_and_delete(server, tmp_path):
     server.put("app/a", "1")  # pre-watch history must NOT replay
     spool = tmp_path / "sp"
-    sp = EtcdWatchSpooler(endpoints=[server.endpoint], key="app/",
+    sp = etcd_watch_bridge(endpoints=[server.endpoint], key="app/",
                           spool_dir=str(spool), with_prefix=True,
                           username="root", password="pw",
                           auth_enabled=True).start()
@@ -234,7 +234,7 @@ def test_watch_horizon_filters_and_delete(server, tmp_path):
 
 def test_watch_filter_put(server, tmp_path):
     spool = tmp_path / "sp"
-    sp = EtcdWatchSpooler(endpoints=[server.endpoint], key="k",
+    sp = etcd_watch_bridge(endpoints=[server.endpoint], key="k",
                           spool_dir=str(spool), filter_put=True,
                           username="root", password="pw",
                           auth_enabled=True).start()

@@ -15,9 +15,9 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.gcs import (
     GcsClient,
-    GcsSpooler,
     MiniGcsServer,
     ObjectExistsError,
+    gcs_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -95,7 +95,7 @@ def test_spooler_delete_objects(server, tmp_path):
     server.put("b", "in/b.json", b'{"v": 2}')
     server.put("b", "keep/c.json", b'{"v": 3}')
     spool = tmp_path / "spool"
-    sp = GcsSpooler(endpoint=server.endpoint, bucket="b",
+    sp = gcs_bridge(endpoint=server.endpoint, bucket="b",
                     spool_dir=str(spool), prefix="in/",
                     delete_objects=True).start()
     assert sp.wait_finished(30)

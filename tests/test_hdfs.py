@@ -12,9 +12,9 @@ import pytest
 
 from bento_spark.plans.compiler import Pipeline, compile_yaml
 from bento_spark.streaming.hdfs import (
-    HdfsSpooler,
     MiniWebHdfsServer,
     WebHdfsClient,
+    hdfs_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -79,7 +79,7 @@ def test_spooler_one_listing_pass(srv, tmp_path):
     c.mkdirs("/in")
     for i in range(3):
         c.create(f"/in/f{i}.txt", f"body-{i}".encode())
-    sp = HdfsSpooler(hosts=srv.endpoint, user="u", directory="/in",
+    sp = hdfs_bridge(hosts=srv.endpoint, user="u", directory="/in",
                      spool_dir=str(tmp_path / "spool")).start()
     sp.wait_finished(15)
     assert sp.finished
@@ -89,7 +89,7 @@ def test_spooler_one_listing_pass(srv, tmp_path):
 
 
 def test_spooler_surfaces_listing_error(tmp_path, srv):
-    sp = HdfsSpooler(hosts=srv.endpoint, user="u", directory="/absent",
+    sp = hdfs_bridge(hosts=srv.endpoint, user="u", directory="/absent",
                      spool_dir=str(tmp_path / "spool")).start()
     with pytest.raises(RuntimeError, match="hdfs input"):
         sp.wait_finished(15)

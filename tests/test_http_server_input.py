@@ -481,16 +481,16 @@ class _MaskingWsServer(_WsTestServer):
 def test_websocket_masked_server_frame_fails_connection(tmp_path):
     import time
 
-    from bento_spark.streaming.http_server import WebSocketSpooler
+    from bento_spark.streaming.http_server import websocket_bridge
 
     srv = _MaskingWsServer()
     spool = tmp_path / "mspool"
-    ws = WebSocketSpooler(url=f"ws://127.0.0.1:{srv.port}/feed", spool_dir=str(spool)).start()
+    ws = websocket_bridge(url=f"ws://127.0.0.1:{srv.port}/feed", spool_dir=str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and (ws._thread and ws._thread.is_alive()):
+        while time.monotonic() < deadline and ws.state == "running":
             time.sleep(0.1)
-        assert not (ws._thread and ws._thread.is_alive()), "reader kept running after violation"
+        assert ws.state != "running", "reader kept running after violation"
         msgs = [body for _, body in entries(spool)]
         assert msgs == [b"good-one"], msgs  # nothing after the violation spooled
     finally:
@@ -547,11 +547,11 @@ def test_websocket_wss_tls_handshake(tmp_path):
     chain like the reference's skip_cert_verify."""
     import time
 
-    from bento_spark.streaming.http_server import WebSocketSpooler
+    from bento_spark.streaming.http_server import websocket_bridge
 
     srv = _TlsWsServer(str(tmp_path))
     spool = tmp_path / "tls_spool"
-    ws = WebSocketSpooler(
+    ws = websocket_bridge(
         url=f"wss://127.0.0.1:{srv.port}/feed", spool_dir=str(spool),
         open_message="hello-tls", tls_insecure=True,
     ).start()
@@ -576,12 +576,12 @@ def test_websocket_wss_verifies_by_default(tmp_path):
 
     import pytest
 
-    from bento_spark.streaming.http_server import WebSocketSpooler
+    from bento_spark.streaming.http_server import websocket_bridge
 
     srv = _TlsWsServer(str(tmp_path))
     try:
         with pytest.raises((ssl.SSLError, ConnectionError, OSError)):
-            WebSocketSpooler(
+            websocket_bridge(
                 url=f"wss://127.0.0.1:{srv.port}/feed",
                 spool_dir=str(tmp_path / "nospool"),
             ).start()

@@ -21,7 +21,7 @@ from bento_spark.streaming.sink import (
     websocket_sink,
 )
 from bento_spark.streaming.spool import entries
-from bento_spark.streaming.subprocess_io import SubprocessSpooler, subprocess_sink
+from bento_spark.streaming.subprocess_io import subprocess_bridge, subprocess_sink
 
 PY = sys.executable
 
@@ -32,7 +32,7 @@ PY = sys.executable
 
 
 def test_subprocess_input_lines(tmp_path):
-    sp = SubprocessSpooler(
+    sp = subprocess_bridge(
         name=PY,
         args=["-c", "for i in range(5): print(f'line-{i}')"],
         spool_dir=str(tmp_path / "sp"),
@@ -48,7 +48,7 @@ def test_subprocess_input_lines(tmp_path):
 
 
 def test_subprocess_input_max_buffer(tmp_path):
-    sp = SubprocessSpooler(
+    sp = subprocess_bridge(
         name=PY, args=["-c", "print('x' * 100)"],
         spool_dir=str(tmp_path / "sp"), max_buffer=16,
     ).start()
@@ -61,7 +61,7 @@ def test_subprocess_input_max_buffer(tmp_path):
 
 
 def test_subprocess_input_restart_on_exit(tmp_path):
-    sp = SubprocessSpooler(
+    sp = subprocess_bridge(
         name=PY, args=["-c", "print('tick')"],
         spool_dir=str(tmp_path / "sp"), restart_on_exit=True,
     ).start()
@@ -75,7 +75,7 @@ def test_subprocess_input_restart_on_exit(tmp_path):
 
 
 def test_subprocess_input_stderr_logged(tmp_path, capfd):
-    sp = SubprocessSpooler(
+    sp = subprocess_bridge(
         name=PY,
         args=["-c", "import sys; print('ok'); print('warn!', file=sys.stderr)"],
         spool_dir=str(tmp_path / "sp"),

@@ -12,7 +12,6 @@ import pytest
 
 from bento_spark.plans.inputs import read_input
 from bento_spark.streaming.kafka_wire import (
-    KafkaSpooler,
     KafkaWireClient,
     MiniKafkaBroker,
     _enc_varint,
@@ -20,9 +19,10 @@ from bento_spark.streaming.kafka_wire import (
     crc32c,
     decode_record_batches,
     encode_record_batch,
+    kafka_bridge,
+    kafka_wire_sink,
     murmur2,
     partition_for_key,
-    kafka_wire_sink,
 )
 from bento_spark.streaming.spool import entries
 
@@ -188,7 +188,7 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
             (2500, b"gone", None, []),
             (2600, b"blank", b"", [])]))
     spool = str(tmp_path / "spool")
-    sp = KafkaSpooler("127.0.0.1", broker.port, ["logs"], spool).start()
+    sp = kafka_bridge("127.0.0.1", broker.port, ["logs"], spool).start()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:
@@ -226,7 +226,7 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     p = KafkaWireClient("127.0.0.1", broker.port)
     spool = str(tmp_path / "spool")
     p.produce("r", 0, encode_record_batch(0, [(0, None, b"one", [])]))
-    sp = KafkaSpooler("127.0.0.1", broker.port, ["r"], spool).start()
+    sp = kafka_bridge("127.0.0.1", broker.port, ["r"], spool).start()
     deadline = time.monotonic() + 10
     while time.monotonic() < deadline and len(entries(spool)) < 1:
         time.sleep(0.05)
@@ -235,7 +235,7 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     assert offsets["r/0"] == 1
     # produce while the spooler is down; restart must resume, not re-spool
     p.produce("r", 0, encode_record_batch(0, [(0, None, b"two", [])]))
-    sp2 = KafkaSpooler("127.0.0.1", broker.port, ["r"], spool).start()
+    sp2 = kafka_bridge("127.0.0.1", broker.port, ["r"], spool).start()
     deadline = time.monotonic() + 10
     while time.monotonic() < deadline and len(entries(spool)) < 2:
         time.sleep(0.05)
@@ -391,7 +391,7 @@ def test_spooler_clamps_no_timestamp_sentinel(broker, tmp_path):
     p.produce("nots", 0, encode_record_batch(0, [(-1, b"k", b"v", [])]))
     p.close()
     spool = tmp_path / "spool"
-    sp = KafkaSpooler("127.0.0.1", broker.port, ["nots"], str(spool)).start()
+    sp = kafka_bridge("127.0.0.1", broker.port, ["nots"], str(spool)).start()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline and not entries(spool):
@@ -416,7 +416,7 @@ def test_spooler_surfaces_undecodable_batch(broker, tmp_path):
     p.produce("badbatch", 0, bytes(batch))
     p.close()
     spool = tmp_path / "spool"
-    sp = KafkaSpooler("127.0.0.1", broker.port, ["badbatch"], str(spool)).start()
+    sp = kafka_bridge("127.0.0.1", broker.port, ["badbatch"], str(spool)).start()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline and sp.error is None:

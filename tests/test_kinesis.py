@@ -14,8 +14,8 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.kinesis import (
     KinesisClient,
-    KinesisSpooler,
     MiniKinesisServer,
+    kinesis_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -57,7 +57,7 @@ def test_spooler_checkpoint_resume(server, tmp_path):
     c = KinesisClient(server.endpoint, server.access_key, server.secret_key)
     c.put_records("logs", [(b"one", "k1")])
     spool = tmp_path / "spool"
-    sp = KinesisSpooler(server.endpoint, ["logs"], server.access_key,
+    sp = kinesis_bridge(server.endpoint, ["logs"], server.access_key,
                         server.secret_key, str(spool)).start()
     deadline = time.monotonic() + 10
     while time.monotonic() < deadline and len(entries(spool)) < 1:
@@ -66,7 +66,7 @@ def test_spooler_checkpoint_resume(server, tmp_path):
     assert (spool / ".sequences.json").exists()
     # produce while down; restart resumes AFTER the checkpointed sequence
     c.put_records("logs", [(b"two", "k1")])
-    sp2 = KinesisSpooler(server.endpoint, ["logs"], server.access_key,
+    sp2 = kinesis_bridge(server.endpoint, ["logs"], server.access_key,
                          server.secret_key, str(spool)).start()
     deadline = time.monotonic() + 10
     while time.monotonic() < deadline and len(entries(spool)) < 2:

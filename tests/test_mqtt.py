@@ -22,9 +22,9 @@ from bento_spark.streaming.mqtt import (
     SUBACK,
     MiniMqttBroker,
     MqttClient,
-    MqttSpooler,
     encode_packet,
     encode_remaining_len,
+    mqtt_bridge,
     read_packet,
     topic_matches,
 )
@@ -88,7 +88,7 @@ def test_retained_message_replay(broker):
 
 def test_spooler_qos1_ack_after_spool(broker, tmp_path):
     spool = tmp_path / "mqtt_spool"
-    sp = MqttSpooler(broker.host, broker.port, ["ev/#"], str(spool)).start()
+    sp = mqtt_bridge(broker.host, broker.port, ["ev/#"], str(spool)).start()
     try:
         pub = MqttClient(broker.host, broker.port)
         for i in range(5):
@@ -137,13 +137,52 @@ def test_spooler_puback_follows_put(tmp_path, monkeypatch, put_fails):
 
     t = threading.Thread(target=broker, daemon=True)
     t.start()
-    sp = MqttSpooler("127.0.0.1", srv.getsockname()[1], ["t"], str(spool)).start()
+    sp = mqtt_bridge("127.0.0.1", srv.getsockname()[1], ["t"], str(spool)).start()
     try:
         t.join(timeout=10)
     finally:
         sp.stop()
         srv.close()
     assert seen == ([None] if put_fails else [(PUBACK, struct.pack(">H", 7), 1)])
+
+
+def test_bridge_rides_out_a_broker_restart(tmp_path):
+    """Kill the broker mid-stream and start a new one on the same port:
+    the subscriber reconnects and re-subscribes, and every message
+    published once it is running again reaches the spool."""
+    first = MiniMqttBroker().start()
+    host, port = first.host, first.port
+    spool = tmp_path / "spool"
+    sp = mqtt_bridge(host, port, ["ev/#"], str(spool)).start()
+    second = None
+
+    def until(pred, what: str) -> None:
+        deadline = time.monotonic() + 15
+        while not pred():
+            assert time.monotonic() < deadline, what
+            time.sleep(0.05)
+
+    try:
+        pub = MqttClient(host, port)
+        pub.publish("ev/a", b"before", qos=1)
+        pub.disconnect()
+        until(lambda: len(entries(spool)) == 1, "first message not spooled")
+        first.stop()
+        until(lambda: sp.state == "reconnecting", "subscriber did not see the broker go")
+        second = MiniMqttBroker(port=port).start()
+        until(lambda: sp.state == "running", f"subscriber did not reconnect: {sp.cause}")
+        pub = MqttClient(host, port)
+        for i in range(3):
+            pub.publish(f"ev/{i}", f"after-{i}".encode(), qos=1)
+        pub.disconnect()
+        until(lambda: len(entries(spool)) == 4, "messages after the restart not spooled")
+    finally:
+        sp.stop()
+        if second is not None:
+            second.stop()
+    assert [body for _, body in entries(spool)] == [
+        b"before", b"after-0", b"after-1", b"after-2"]
+    assert sp.restarts >= 1 and sp.error is None
 
 
 def test_yaml_mqtt_input_end_to_end(spark, broker, tmp_path):

@@ -10,7 +10,7 @@ import time
 import pytest
 
 from bento_spark.plans.compiler import compile_yaml
-from bento_spark.streaming.nanomsg import NanomsgSocket, NanomsgSpooler
+from bento_spark.streaming.nanomsg import NanomsgSocket, nanomsg_bridge
 from bento_spark.streaming.spool import entries
 
 
@@ -84,7 +84,7 @@ def test_close_releases_a_bound_port():
 
 def test_spooler_sub_requires_filter(tmp_path):
     with pytest.raises(ValueError, match="at least one sub filter"):
-        NanomsgSpooler("SUB", str(tmp_path / "s"), urls=["tcp://127.0.0.1:1"]).start()
+        nanomsg_bridge("SUB", str(tmp_path / "s"), urls=["tcp://127.0.0.1:1"]).start()
 
 
 def test_yaml_nanomsg_roundtrip(spark, tmp_path):

@@ -16,7 +16,7 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.nats import (
     MiniNatsServer,
     NatsClient,
-    NatsSpooler,
+    nats_bridge,
     subject_matches,
 )
 from bento_spark.streaming.spool import entries
@@ -86,7 +86,7 @@ def test_queue_group_round_robin(server):
 
 def test_spooler_spools_with_subject(server, tmp_path):
     spool = tmp_path / "nats_spool"
-    sp = NatsSpooler(server.host, server.port, "ev.>", str(spool)).start()
+    sp = nats_bridge(server.host, server.port, "ev.>", str(spool)).start()
     try:
         pub = NatsClient(server.host, server.port)
         for i in range(5):

@@ -13,10 +13,11 @@ import pytest
 
 from bento_spark.plans.compiler import Pipeline, compile_yaml
 from bento_spark.streaming.nats import (
-    JetStreamSpooler,
     JsError,
     MiniNatsServer,
     NatsJsClient,
+    jetstream_bridge,
+    js_next,
 )
 from bento_spark.streaming.spool import entries
 
@@ -60,7 +61,7 @@ def test_pull_consumer_spools_and_acks(server, tmp_path):
     c = NatsJsClient(server.host, server.port)
     for i in range(3):
         c.js_publish(f"ev.t{i}", f"m{i}".encode())
-    sp = JetStreamSpooler(host=server.host, port=server.port, stream="EV",
+    sp = jetstream_bridge(host=server.host, port=server.port, stream="EV",
                           durable="d1", spool_dir=str(tmp_path / "spool"),
                           ack_wait_s=30).start()
     try:
@@ -88,20 +89,20 @@ def test_unacked_delivery_redelivers_after_ack_wait(server):
               "config": {"durable_name": "d2", "ack_policy": "explicit",
                          "deliver_policy": "all",
                          "ack_wait": int(0.2 * 1e9)}})
-    st, _h, payload, reply, subj = JetStreamSpooler._next(
+    st, _h, payload, reply, subj = js_next(
         c, "CONSUMER.MSG.NEXT.EV.d2")
     assert payload == b"only" and subj == "ev.x" and reply.startswith("$JS.ACK.")
     # no ack -> drained now
-    st2, *_ = JetStreamSpooler._next(c, "CONSUMER.MSG.NEXT.EV.d2")
+    st2, *_ = js_next(c, "CONSUMER.MSG.NEXT.EV.d2")
     assert st2.startswith("404")
     time.sleep(0.3)  # past ack_wait -> redelivery
-    st3, _h3, payload3, reply3, _s3 = JetStreamSpooler._next(
+    st3, _h3, payload3, reply3, _s3 = js_next(
         c, "CONSUMER.MSG.NEXT.EV.d2")
     assert payload3 == b"only"
     c.publish(reply3, b"+ACK")
     c.flush()
     time.sleep(0.1)
-    st4, *_ = JetStreamSpooler._next(c, "CONSUMER.MSG.NEXT.EV.d2")
+    st4, *_ = js_next(c, "CONSUMER.MSG.NEXT.EV.d2")
     assert st4.startswith("404")
     c.close()
 
@@ -115,7 +116,7 @@ def test_deliver_last_policy(server):
              {"stream_name": "EV",
               "config": {"durable_name": "dl", "ack_policy": "explicit",
                          "deliver_policy": "last"}})
-    _st, _h, payload, reply, _s = JetStreamSpooler._next(
+    _st, _h, payload, reply, _s = js_next(
         c, "CONSUMER.MSG.NEXT.EV.dl")
     assert payload == b"m3"
     c.publish(reply, b"+ACK")

@@ -16,7 +16,7 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.nsq import (
     MiniNsqServer,
     NsqClient,
-    NsqSpooler,
+    nsq_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -119,7 +119,7 @@ def test_spooler_rdy_refresh_beyond_max_in_flight(server, tmp_path):
     """More messages than max_in_flight must all arrive — the RDY
     allowance is refreshed after each FIN."""
     spool = tmp_path / "spool"
-    sp = NsqSpooler(server.host, server.port, "bulk", "ch", str(spool),
+    sp = nsq_bridge(server.host, server.port, "bulk", "ch", str(spool),
                     max_in_flight=2).start()
     try:
         pub = NsqClient(server.host, server.port)

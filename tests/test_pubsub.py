@@ -15,7 +15,7 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.pubsub import (
     MiniPubSubServer,
     PubSubClient,
-    PubSubSpooler,
+    pubsub_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -107,7 +107,7 @@ def test_spooler_acks_after_durability(server, tmp_path):
     c.create_subscription("proj", "sub-c", "events")
     c.publish("proj", "events", [(f"j{i}".encode(), {}) for i in range(4)])
     spool = tmp_path / "spool"
-    sp = PubSubSpooler(server.endpoint, "proj", "sub-c", str(spool)).start()
+    sp = pubsub_bridge(server.endpoint, "proj", "sub-c", str(spool)).start()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline and len(entries(spool)) < 4:

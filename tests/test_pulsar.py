@@ -17,19 +17,19 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.pulsar import (
     _MAGIC,
-    _base_command,
     CONNECT,
+    SEND,
     Consumer,
     MiniPulsarBroker,
     Producer,
     PulsarClient,
-    PulsarSpooler,
-    SEND,
+    _base_command,
     decode_batch,
     encode_metadata,
     frame_payload,
     frame_simple,
     parse_pulsar_url,
+    pulsar_bridge,
     read_frame,
 )
 from bento_spark.streaming.spool import entries
@@ -236,7 +236,7 @@ def test_topics_pattern_discovery(broker, tmp_path):
     assert len(topics) == 3
 
     spool = tmp_path / "pattern_spool"
-    sp = PulsarSpooler(broker.host, broker.port, [], "psub", str(spool),
+    sp = pulsar_bridge(broker.host, broker.port, [], "psub", str(spool),
                        topics_pattern=r"persistent://public/default/ev-.*")
     sp.start()
     try:

@@ -16,12 +16,12 @@ from bento_spark.streaming.redis import (
     MiniRedisServer,
     RedisClient,
     RedisError,
-    RedisListSpooler,
-    RedisPubSubSpooler,
-    RedisStreamsSpooler,
     encode_command,
     parse_redis_url,
     read_redis_scan,
+    redis_list_bridge,
+    redis_pubsub_bridge,
+    redis_streams_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -155,7 +155,7 @@ def test_streams_consumer_group(client):
 
 def test_list_spooler(server, tmp_path):
     spool = tmp_path / "l"
-    sp = RedisListSpooler(server.host, server.port, str(spool), key="jobs").start()
+    sp = redis_list_bridge(server.host, server.port, str(spool), key="jobs").start()
     try:
         c = RedisClient(server.host, server.port)
         for i in range(4):
@@ -172,7 +172,7 @@ def test_list_spooler(server, tmp_path):
 
 def test_pubsub_spooler_patterns(server, tmp_path):
     spool = tmp_path / "ps"
-    sp = RedisPubSubSpooler(server.host, server.port, str(spool),
+    sp = redis_pubsub_bridge(server.host, server.port, str(spool),
                             channels=["ev.*"], use_patterns=True).start()
     try:
         c = RedisClient(server.host, server.port)
@@ -196,7 +196,7 @@ def test_streams_spooler_acks_after_spool(server, tmp_path):
     spool = tmp_path / "xs"
     c = RedisClient(server.host, server.port)
     c.cmd("XADD", "s1", "*", "body", "m1", "origin", "unit")
-    sp = RedisStreamsSpooler(server.host, server.port, str(spool),
+    sp = redis_streams_bridge(server.host, server.port, str(spool),
                              streams=["s1"], consumer_group="g").start()
     try:
         c.cmd("XADD", "s1", "*", "body", "m2")

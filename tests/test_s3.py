@@ -17,9 +17,9 @@ from bento_spark.streaming.s3 import (
     MiniS3Server,
     NoSuchKeyError,
     S3Client,
-    S3Spooler,
     _extract_paths,
     canonical_query,
+    s3_bridge,
     sigv4_verify_request,
 )
 from bento_spark.streaming.spool import entries
@@ -122,7 +122,7 @@ def test_listing_spooler_end_to_end(server, spark, tmp_path):
     c.put_object("bkt", "in/empty.json", b"")  # 0-byte object must survive
     c.put_object("bkt", "skip/c.json", b'{"n": 3}')
     spool = str(tmp_path / "spool")
-    sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
+    sp = s3_bridge(endpoint=server.endpoint, bucket="bkt",
                    access_key=server.access_key, secret_key=server.secret_key,
                    spool_dir=spool, prefix="in/").start()
     try:
@@ -150,7 +150,7 @@ def test_listing_spooler_keeps_a_key_too_long_for_a_file_name(server, tmp_path):
     overflow a 255-byte file name is spooled intact."""
     key = "warehouse/raw/events/year=2026/month=10/day=18/hour=08/part-00000-6f1c2e3a.snappy.parquet"
     _client(server).put_object("bkt", key, b"p")
-    sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
+    sp = s3_bridge(endpoint=server.endpoint, bucket="bkt",
                    access_key=server.access_key, secret_key=server.secret_key,
                    spool_dir=str(tmp_path / "sp")).start()
     try:
@@ -165,7 +165,7 @@ def test_listing_spooler_delete_objects(server, tmp_path):
     c = _client(server)
     c.put_object("bkt", "d/x.txt", b"1")
     c.put_object("bkt", "d/y.txt", b"2")
-    sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
+    sp = s3_bridge(endpoint=server.endpoint, bucket="bkt",
                    access_key=server.access_key, secret_key=server.secret_key,
                    spool_dir=str(tmp_path / "sp"), prefix="d/",
                    delete_objects=True).start()
@@ -195,7 +195,7 @@ def test_sqs_notification_mode(server, tmp_path):
         q_url = f"{sqs_srv.endpoint}/q/notifications"
         SqsClient(sqs_srv.endpoint, server.access_key,
                   server.secret_key).send_message(q_url, note)
-        sp = S3Spooler(endpoint=server.endpoint, bucket="bkt",
+        sp = s3_bridge(endpoint=server.endpoint, bucket="bkt",
                        access_key=server.access_key,
                        secret_key=server.secret_key,
                        spool_dir=str(tmp_path / "sp"),

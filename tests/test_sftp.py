@@ -17,9 +17,9 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.sftp import (
     MiniSftpServer,
     SftpClient,
-    SftpSpooler,
     SftpStatusError,
     parse_sftp_address,
+    sftp_bridge,
     sftp_sink,
 )
 from bento_spark.streaming.spool import entries
@@ -215,7 +215,7 @@ def test_spooler_one_pass_and_delete(server, tmp_path):
             json.dumps({"n": i}))
     (server.root_path / "inbox" / "skip.txt").write_text("no")
     spool = tmp_path / "spool"
-    sp = SftpSpooler(
+    sp = sftp_bridge(
         host="127.0.0.1", port=server.port, username="bento",
         password="hunter2", paths=["inbox/*.json"], spool_dir=str(spool),
         delete_on_finish=True).start()
@@ -231,7 +231,7 @@ def test_spooler_watcher_picks_up_new_files(server, tmp_path):
     (server.root_path / "watch").mkdir()
     (server.root_path / "watch" / "a.json").write_text('{"v": "first"}')
     spool = tmp_path / "spool"
-    sp = SftpSpooler(
+    sp = sftp_bridge(
         host="127.0.0.1", port=server.port, username="bento",
         password="hunter2", paths=["watch/*.json"], spool_dir=str(spool),
         watcher=True, poll_interval_s=0.2).start()

@@ -15,12 +15,12 @@ from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.sink import IdempotentParquetSink
 from bento_spark.streaming.spanner import (
     MiniSpannerServer,
-    SpannerCdcSpooler,
     SpannerClient,
     child_partitions_value,
     data_change_value,
     decode_value,
     merge_chunked,
+    spanner_cdc_bridge,
 )
 from bento_spark.streaming.spool import entries
 
@@ -86,7 +86,7 @@ def _seed_tree(server):
 def test_partition_tree_and_mods(server, tmp_path):
     _seed_tree(server)
     spool = tmp_path / "sp"
-    sp = SpannerCdcSpooler(
+    sp = spanner_cdc_bridge(
         dsn=DSN, stream_name="orders_stream", spool_dir=str(spool),
         start_time="2026-01-01T00:00:00Z", endpoint=server.endpoint,
     ).start()

@@ -15,8 +15,8 @@ from bento_spark.streaming.spool import entries
 from bento_spark.streaming.sqs import (
     MiniSqsServer,
     SqsClient,
-    SqsSpooler,
     sigv4_signature,
+    sqs_bridge,
 )
 
 
@@ -80,7 +80,7 @@ def test_spooler_acks_after_durability(server, tmp_path):
     for i in range(4):
         c.send_message(_Q, f"j{i}")
     spool = tmp_path / "spool"
-    sp = SqsSpooler(server.endpoint, _Q, server.access_key, server.secret_key,
+    sp = sqs_bridge(server.endpoint, _Q, server.access_key, server.secret_key,
                     str(spool)).start()
     try:
         deadline = time.monotonic() + 10

@@ -280,12 +280,62 @@ output:
         out = IdempotentParquetSink(str(tmp_path / "out"))
         assert _wait(lambda: out.committed_ids() and out.read(spark).count() >= 3)
         assert sorted(r.value for r in out.read(spark).collect()) == lines
-        child = mgr._streams["sub"].bridge._proc
+        child = mgr._streams["sub"].bridge.client
         assert child.poll() is None
         mgr.delete("sub")
         assert child.poll() is not None
     finally:
         mgr.stop_all()
+
+
+def test_stats_show_a_failed_bridge_and_ready_turns_false(spark, tmp_path):
+    """A broker that sends a packet whose length does not decode fails the
+    stream's mqtt bridge: stats name the state and the cause, and /ready
+    is false until the stream is deleted."""
+    import threading
+
+    from bento_spark.streaming.mqtt import CONNACK, SUBACK, encode_packet, read_packet
+
+    srv = socket.create_server(("127.0.0.1", 0))
+
+    def broker() -> None:
+        conn, _ = srv.accept()
+        with conn:
+            read_packet(conn)  # CONNECT
+            conn.sendall(encode_packet(CONNACK, 0, b"\x00\x00"))
+            _, _, sub = read_packet(conn)  # SUBSCRIBE
+            conn.sendall(encode_packet(SUBACK, 0, sub[:2] + b"\x01"))
+            conn.sendall(b"\x30\xff\xff\xff\xff\x01")  # a 5-byte remaining length
+            conn.settimeout(30)
+            try:
+                conn.recv(1)
+            except OSError:
+                pass
+
+    threading.Thread(target=broker, daemon=True).start()
+    conf = f"""
+input:
+  mqtt:
+    urls: [tcp://127.0.0.1:{srv.getsockname()[1]}]
+    topics: [t]
+    spool_dir: {tmp_path}/spool
+output:
+  path: {tmp_path}/out
+  trigger: 500 ms
+"""
+    mgr = StreamManager(spark, str(tmp_path / "cks"))
+    try:
+        mgr.create("m", conf)
+        assert _wait(lambda: mgr.stats("m")["bridge"]["state"] == "failed")
+        bridge = mgr.stats("m")["bridge"]
+        assert bridge["cause"] == "mqtt: malformed remaining length"
+        assert bridge["since"] <= time.time()
+        assert not mgr.ready()
+        mgr.delete("m")
+        assert mgr.ready()
+    finally:
+        mgr.stop_all()
+        srv.close()
 
 
 def test_delete_releases_the_http_server_output_port(spark, tmp_path):

@@ -12,7 +12,7 @@ import pytest
 
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.spool import entries
-from bento_spark.streaming.zeromq import ZmqSocket, ZmqSpooler
+from bento_spark.streaming.zeromq import ZmqSocket, zmq_bridge
 
 
 # --------------------------------------------------------------------------
@@ -164,7 +164,7 @@ output:
 def test_spooler_sub_filters(tmp_path):
     pub = ZmqSocket("PUB").bind()
     spool = tmp_path / "spool"
-    sp = ZmqSpooler("SUB", str(spool), urls=[f"tcp://127.0.0.1:{pub.port}"],
+    sp = zmq_bridge("SUB", str(spool), urls=[f"tcp://127.0.0.1:{pub.port}"],
                     sub_filters=["keep."]).start()
     try:
         time.sleep(0.2)
