@@ -757,11 +757,14 @@ class Pipeline:
             q = self.run_stream(spark, checkpoint=checkpoint, available_now=not continuous)
             deadline = time.monotonic() + timeout if timeout else None
             while True:
+                step = 1.0 if deadline is None else min(1.0, deadline - time.monotonic())
+                ended = step <= 0 or q.awaitTermination(step)
+                # checked after the step too: a bridge that fails while an
+                # available_now query ends still fails the run
                 if bridge is not None and bridge.state == "failed":
                     q.stop()
                     raise BridgeFailed(f"input {name}: {bridge.cause}")
-                step = 1.0 if deadline is None else min(1.0, deadline - time.monotonic())
-                if step <= 0 or q.awaitTermination(step):
+                if ended:
                     break
             if continuous and q.isActive:
                 q.stop()

@@ -60,6 +60,8 @@ RETRY_FIRST_S = 0.25
 RETRY_MAX_S = 5.0
 # how long a poller waits on `stop` after a poll that returned nothing
 EMPTY_POLL_S = 0.05
+# items a FanIn holds between its streams' threads and the bridge
+FANIN_QUEUE = 256
 TRANSPORT = (ConnectionError, OSError)
 
 Message = tuple[bytes | str, dict, Callable[[], Any] | None]
@@ -233,13 +235,16 @@ class FanIn:
     spanner's partition tree). Each iterator runs on its own daemon
     thread; `add` may be called while iterating. The first exception of
     any of them is raised to the consumer; iteration ends when all of
-    them have ended."""
+    them have ended. Once the consumer closes its iterator (the bridge
+    does on a reconnect) the threads stop offering and end, so a dropped
+    connection's streams do not outlive it."""
 
     _END = object()
 
-    def __init__(self, stop: threading.Event, maxsize: int = 256):
+    def __init__(self, stop: threading.Event):
         self._stop = stop
-        self._q: queue.Queue = queue.Queue(maxsize)
+        self._closed = threading.Event()
+        self._q: queue.Queue = queue.Queue(FANIN_QUEUE)
         self._live = 0
         self._lock = threading.Lock()
 
@@ -249,7 +254,7 @@ class FanIn:
         threading.Thread(target=self._pump, args=(items,), daemon=True).start()
 
     def _offer(self, item) -> bool:
-        while not self._stop.is_set():
+        while not (self._stop.is_set() or self._closed.is_set()):
             try:
                 self._q.put(item, timeout=0.1)
                 return True
@@ -267,20 +272,23 @@ class FanIn:
             self._offer((None, e))
 
     def __iter__(self) -> Iterator:
-        while True:
-            with self._lock:
-                if self._live == 0:
-                    return
-            try:
-                item, err = self._q.get(timeout=0.1)
-            except queue.Empty:
-                if self._stop.is_set():
-                    return
-                continue
-            if err is not None:
-                raise err
-            if item is self._END:
+        try:
+            while True:
                 with self._lock:
-                    self._live -= 1
-                continue
-            yield item
+                    if self._live == 0:
+                        return
+                try:
+                    item, err = self._q.get(timeout=0.1)
+                except queue.Empty:
+                    if self._stop.is_set():
+                        return
+                    continue
+                if err is not None:
+                    raise err
+                if item is self._END:
+                    with self._lock:
+                        self._live -= 1
+                    continue
+                yield item
+        finally:
+            self._closed.set()

@@ -276,7 +276,14 @@ def etcd_watch_bridge(endpoints: list[str], key: str, spool_dir: str,
     emits ONE message per response with the array as its structured
     payload, input.go:195-216). Created/progress notifications with no
     events surface as empty arrays only when the reference would deliver
-    them (created notify is opt-in; progress responses always flow)."""
+    them (created notify is opt-in; progress responses always flow).
+
+    A reconnect resumes the watch after the last revision it spooled, as
+    clientv3 resumes a watch after a dropped stream (watch.go's nextRev):
+    the first watch starts at the server's current revision, and a
+    resumed one at the revision after the newest spooled event (or the
+    created response's header revision, before any event)."""
+    seen = {"rev": 0}  # the newest revision whose events are spooled
 
     def connect():
         watcher = EtcdWatcher(endpoints, username=username, password=password,
@@ -286,7 +293,8 @@ def etcd_watch_bridge(endpoints: list[str], key: str, spool_dir: str,
             watcher.watch(build_create_request(
                 key, with_prefix=with_prefix, with_range=with_range,
                 progress_notify=progress_notify, filter_put=filter_put,
-                filter_delete=filter_delete))
+                filter_delete=filter_delete,
+                start_revision=seen["rev"] + 1 if seen["rev"] else 0))
             # Block until the server confirms creation: connect returning
             # means the watch horizon is ESTABLISHED, so every mutation
             # after it is observed (the async-create race would otherwise
@@ -299,6 +307,8 @@ def etcd_watch_bridge(endpoints: list[str], key: str, spool_dir: str,
         except BaseException:
             close(watcher)
             raise
+        if not seen["rev"]:
+            seen["rev"] = (first.get("header") or {}).get("revision", 0)
         return watcher, responses, first
 
     def close(watcher: EtcdWatcher) -> None:
@@ -310,9 +320,12 @@ def etcd_watch_bridge(endpoints: list[str], key: str, spool_dir: str,
         if created_notify:  # clientv3 WithCreatedNotify delivers it
             yield json.dumps(events_to_maps(first.get("events") or [])), {}, None
         for resp in responses:
-            events = events_to_maps(resp.get("events") or [])
+            raw = resp.get("events") or []
+            events = events_to_maps(raw)
             if events or progress_notify:
-                yield json.dumps(events), {}, None
+                rev = raw[-1]["kv"].get("mod_revision", 0) if raw else 0
+                yield json.dumps(events), {}, (
+                    (lambda rev=rev: seen.update(rev=rev)) if rev else None)
         raise ConnectionError("etcd: the watch stream ended")
 
     return Bridge("etcd", spool_dir, connect, messages, close=lambda conn: close(conn[0]))
@@ -451,17 +464,19 @@ class MiniEtcdServer:
         start_rev = create.get("start_revision", 0)
         watch_id = create.get("watch_id") or 1
 
-        def respond(extra: dict) -> None:
+        def respond(extra: dict, revision: int | None = None) -> None:
             st.send(encode_message(
-                {"header": {"revision": self.revision},
+                {"header": {"revision": self.revision if revision is None else revision},
                  "watch_id": watch_id, **extra},
                 "etcdserverpb.WatchResponse", _REG))
 
         # snapshot the horizon BEFORE confirming creation: everything the
-        # client mutates after seeing `created` must be observed
+        # client mutates after seeing `created` must be observed, and the
+        # created header names the horizon a client resumes after
         with self._cond:
             sent = 0 if start_rev else len(self.history)
-        respond({"created": True})
+            horizon = self.revision
+        respond({"created": True}, horizon)
         if create.get("progress_notify"):
             respond({})  # 10-minute timer in real etcd; immediate for tests
 

@@ -240,6 +240,40 @@ def test_fan_in_merges_and_raises_the_first_fault():
         list(fan)
 
 
+def test_a_reconnect_ends_the_old_fan_in_threads(tmp_path):
+    """One stream of a connection fills the FanIn's queue while another
+    drops the connection: after the bridge reconnects, the dropped
+    connection's stream threads end instead of waiting on the full queue
+    for the life of the bridge."""
+    flooders: list[threading.Thread] = []
+
+    def flood():
+        flooders.append(threading.current_thread())
+        while True:
+            yield b"x", {}, None
+
+    def drop():
+        raise ConnectionError("dropped")
+        yield
+
+    def messages(client, stop):
+        if client == 1:
+            fan = FanIn(stop)
+            fan.add(flood())
+            fan.add(drop())
+            return fan
+        return iter(lambda: stop.wait(), True)  # blocks until stop
+
+    connects = iter(range(1, 100))
+    b = Bridge("scripted", str(tmp_path), lambda: next(connects), messages,
+               close=lambda c: None).start()
+    try:
+        _until(lambda: b.restarts >= 1 and b.state == "running")
+        _until(lambda: not flooders[0].is_alive(), timeout=2.0)
+    finally:
+        b.stop()
+
+
 # ------------------------------------------------------------------ reader
 def test_reader_exact_spans_several_recvs():
     a, b = socket.socketpair()

@@ -86,6 +86,40 @@ output:
     assert "input mqtt: mqtt: malformed remaining length" in err
 
 
+def test_run_fails_when_the_bridge_fails_as_the_query_ends(tmp_path, monkeypatch):
+    """An available_now query that ends in the same wait step in which the
+    bridge fails still fails the run."""
+    from bento_spark.streaming.bridge import BridgeFailed
+
+    p = compile_yaml(f"""
+input:
+  subprocess:
+    name: {sys.executable}
+    spool_dir: {tmp_path}/spool
+output:
+  path: {tmp_path}/out
+""")
+    bridge = type("FakeBridge", (), {"state": "running", "cause": None,
+                                     "stop": lambda self: None})()
+
+    class Query:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            bridge.state, bridge.cause = "failed", "bad frame"
+            return True
+
+        def stop(self):
+            self.stopped = True
+
+    q = Query()
+    monkeypatch.setattr(p, "start_bridge", lambda: bridge)
+    monkeypatch.setattr(p, "run_stream", lambda *a, **k: q)
+    with pytest.raises(BridgeFailed, match="input subprocess: bad frame"):
+        p.run(None, checkpoint=str(tmp_path / "ck"))
+    assert q.stopped
+
+
 def _run_pipeline_main():
     path = Path(__file__).resolve().parents[1] / "jobs" / "run_pipeline.py"
     spec = importlib.util.spec_from_file_location("run_pipeline", path)

@@ -250,6 +250,46 @@ def test_watch_filter_put(server, tmp_path):
     assert [(e["key"], e["type"]) for e in evs] == [("k", "DELETE")]
 
 
+def test_watch_resumes_after_the_server_restarts(tmp_path):
+    """The server goes away and comes back on the same port with its
+    store: the bridge reconnects and resumes after the last spooled
+    revision, so a write made while it was down is spooled too."""
+    old = MiniEtcdServer().start()
+    spool = tmp_path / "sp"
+    sp = etcd_watch_bridge(endpoints=[old.endpoint], key="k",
+                          spool_dir=str(spool)).start()
+
+    def values():
+        return [e["value"] for _, body in entries(spool) for e in json.loads(body)]
+
+    def wait_for(pred):
+        deadline = time.monotonic() + 15
+        while not pred():
+            assert time.monotonic() < deadline, (sp.state, sp.cause, values())
+            time.sleep(0.05)
+
+    new = None
+    try:
+        old.put("k", "before")
+        wait_for(lambda: values() == ["before"])
+        old.stop()
+        wait_for(lambda: sp.state == "reconnecting")
+        new = MiniEtcdServer(port=old.port)  # a restart keeps the store
+        new.history, new.revision = old.history, old.revision
+        new._versions, new._creates = old._versions, old._creates
+        new.put("k", "during")  # written while no server listens
+        new.start()
+        wait_for(lambda: sp.state == "running" and sp.restarts >= 1)
+        new.put("k", "after")
+        wait_for(lambda: len(values()) >= 3)
+        time.sleep(0.3)  # a replay from the start would add "before" again
+        assert values() == ["before", "during", "after"]
+    finally:
+        sp.stop()
+        if new is not None:
+            new.stop()
+
+
 def test_yaml_etcd_input(spark, server, tmp_path):
     spool = tmp_path / "spool_in"
     p = compile_yaml(f"""

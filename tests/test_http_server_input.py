@@ -490,7 +490,8 @@ def test_websocket_masked_server_frame_fails_connection(tmp_path):
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline and ws.state == "running":
             time.sleep(0.1)
-        assert ws.state != "running", "reader kept running after violation"
+        assert ws.state == "failed", "reader kept running after violation"
+        assert "RFC 6455 §5.1" in ws.cause
         msgs = [body for _, body in entries(spool)]
         assert msgs == [b"good-one"], msgs  # nothing after the violation spooled
     finally:
