@@ -26,8 +26,6 @@ from pyspark.sql.window import Window
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO_DIR)
 
-from bento_spark.audio.generate import clips_df  # noqa: E402
-from bento_spark.audio.udfs import with_audio_features  # noqa: E402
 from bento_spark.operators import batching, dedupe_fuzzy, enrich, errors, grouping, mapping, similarity, text  # noqa: E402
 from bento_spark.streaming.joins import stream_stream_join  # noqa: E402
 from bento_spark.streaming.windows import session_windowed, sliding_windowed, tumbling_windowed  # noqa: E402

@@ -37,7 +37,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bento_spark.operators.errors import ERROR_COL, ensure_error_col
 

@@ -13,12 +13,32 @@ Reference semantics:
   (bento_spark.streaming.joins); this module covers the LOOKUP/state-table
   uses.
 
-Spark-first: a cache is a keyed DataFrame/table. Per-row get = left join
-(broadcast when small — Catalyst picks BHJ under the threshold); set/add =
-MERGE-style upsert (last-writer-wins / insert-if-absent), implemented over
-parquet here and `MERGE INTO` on Iceberg clusters. There is no per-row
-Python and no driver round-trip: a batch of N getss is ONE join, matching
-how the reference amortizes multi-gets (processor_cache.go batch path).
+Spark-first: a cache is a keyed DataFrame/table. Per-row get = broadcast
+left join; set/add = MERGE-style upsert (last-writer-wins /
+insert-if-absent), implemented over parquet here and `MERGE INTO` on
+Iceberg clusters. There is no per-row Python and no driver round-trip: a
+batch of N gets is ONE join, matching how the reference amortizes
+multi-gets (processor_cache.go batch path).
+
+Every backend has `get(df, on=None, now_ms=None)` (misses are NULL),
+`set(df, ttl=None, now_ms=None)`, `add(df, ttl=None, now_ms=None)` (returns
+the rejected rows) and `delete(keys)`. The nine whose entries live in a
+store (sqlite here; mongodb, aws_dynamodb, aws_s3, gcp_cloud_storage,
+couchbase, nats_kv, memcached and redis under streaming/) share one
+Spark side, `RemoteCache`, and each supplies only a store: a picklable
+value with no SparkSession, whose methods run on the executors —
+- `open()` -> a client; `client.close()`, if it has one, runs last;
+- `fetch(client, keys) -> {key: value}`: the entries found; a value is
+  bytes, a string or None (a miss), decoded by one rule (`_text`: UTF-8,
+  bad bytes replaced);
+- `insert(client, pairs) -> [bool]`: insert-if-absent, one verdict per
+  `(key, value)` pair (True = stored);
+- `put(client, pairs)`: upsert; `remove(client, keys)`: delete;
+- `expiring(ttl) -> store`: the store whose `put`/`insert` apply an
+  operator's `ttl` (None: the resource default) by the backend's own rule,
+  resolved on the driver (redis PX ms; memcached/couchbase whole seconds;
+  dynamodb the `ttl_key` epoch; nats_kv rejects a ttl; s3, gcs, sqlite and
+  mongodb ignore it, as the reference does).
 """
 
 from __future__ import annotations
@@ -27,7 +47,8 @@ import functools
 import os
 import re
 import time
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +67,14 @@ def _ttl_ms(ttl: int | float | str) -> int:
     from bento_spark.streaming.cep import duration_ms
 
     return duration_ms(str(ttl))
+
+
+def _exptime_s(ttl_ms: int | None) -> int:
+    """A TTL in whole seconds for the stores that count in seconds: 0 =
+    never; ms TTLs round UP, so a short TTL never becomes 0/never-expire."""
+    if ttl_ms is None:
+        return 0
+    return max(1, -(-int(ttl_ms) // 1000))
 
 
 def _now_ms(now_ms: int | None) -> int:
@@ -152,7 +181,7 @@ class KeyValueCache:
         tomb = cur.join(keys.select(self.key_col), self.key_col, "left_semi")
         self._write(tomb, deleted=True)
 
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
+    def get(self, df: DataFrame, on: str | None = None,
             now_ms: int | None = None) -> DataFrame:
         """Enrich df with cache values by key (left join; misses = NULL,
         matching the reference where a miss errors the message — follow with
@@ -169,9 +198,7 @@ class KeyValueCache:
                 "before get() (the enriched schema depends on the cached value columns)"
             )
         side = cur.withColumnRenamed(self.key_col, key) if key != self.key_col else cur
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        return df.join(F.broadcast(side), key, "left")
 
     def compact(self, now_ms: int | None = None) -> None:
         """Fold all versions into one (Iceberg's rewrite_data_files
@@ -334,7 +361,7 @@ class FileCache:
         # a file delete holds no client: `open` returns None
         write_partitions(keys.select(key_col), lambda: None, rm)
 
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
+    def get(self, df: DataFrame, on: str | None = None,
             now_ms: int | None = None) -> DataFrame:
         """Enrich df with the cached value by key (left join; miss = NULL
         `value` column, same contract as KeyValueCache.get)."""
@@ -345,42 +372,206 @@ class FileCache:
                 f"file cache at {self.dir} is empty: set()/add() before get()"
             )
         side = cur.withColumnRenamed(self.key_col, key) if key != self.key_col else cur
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        return df.join(F.broadcast(side), key, "left")
 
 
-class SqliteCache:
-    """`sql` cache backend over a SQLite file
-    (/root/reference/internal/impl/sql/cache_sql.go:84 — one row per
-    key/value pair in a named table; `set` is an upsert, `add` a plain
-    insert that errors on conflict, no TTL support: cache_sql.go's Set
-    discards the duration, matching `init_statement`-style plain tables).
-    The reference reaches any database/sql driver; the repo's JDBC path
-    (operators/sql_connector.py) is jar-gated, so this stdlib-sqlite3
-    backend is the sandbox-testable instance — same single-shared-file
-    deployment model as FileCache (a posix/shared filesystem).
+# ------------------------------------------------------------ remote caches
+def _text(v) -> str | None:
+    """A fetched value as the value column holds it: the one decode rule
+    (bytes are UTF-8, bad bytes replaced; None is a miss)."""
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, bytes):
+        return v.decode("utf-8", "replace")
+    return str(v)
 
-    Spark-first mapping: `get` SELECTs only the batch's DISTINCT keys,
-    one `IN (...)` query per partition executor-side, broadcast-joined
-    back — never a per-row round-trip (the reference amortizes multi-gets
-    the same way). Writes run executor-side per partition in one
-    transaction each; WAL journal + busy_timeout serialize concurrent
-    partition writers safely. `add`'s accepted/rejected split is
-    localCheckpoint-ed eagerly — re-evaluating a lazy plan would re-run
-    the inserts against state the first run created (the FileCache.add
-    trap)."""
+
+def _each_batch(store, batches: Iterable, step: Callable) -> Iterator:
+    """`step(client, pdf)` for each non-empty pandas batch of a partition,
+    on one client: the first batch opens it, and `close()` (if the client
+    has one) runs last whatever happened; an empty partition opens none."""
+    client = None
+    try:
+        for pdf in batches:
+            if len(pdf):
+                if client is None:
+                    client = store.open()
+                yield step(client, pdf)
+    except BaseException:
+        if client is not None and hasattr(client, "close"):
+            try:
+                client.close()
+            except Exception:  # noqa: BLE001 — the step's error is the one to raise
+                pass
+        raise
+    if client is not None and hasattr(client, "close"):
+        client.close()
+
+
+def fetch_batches(store, key_col: str, value_col: str, batches: Iterable) -> Iterator:
+    """`get`'s mapInPandas function: one `store.fetch` per batch of keys."""
+    import pandas as pd
+
+    def step(client, pdf):
+        keys = [str(k) for k in pdf[key_col]]
+        found = store.fetch(client, keys)
+        return pd.DataFrame({key_col: keys, value_col: [_text(found.get(k)) for k in keys]},
+                            dtype="object")
+
+    return _each_batch(store, batches, step)
+
+
+def insert_batches(store, key_col: str, value_col: str, batches: Iterable) -> Iterator:
+    """`add`'s mapInPandas function: one `store.insert` per batch, one
+    verdict (`_accepted`) per key."""
+    import pandas as pd
+
+    def step(client, pdf):
+        pairs = [(str(k), None if pd.isna(v) else str(v))
+                 for k, v in zip(pdf[key_col], pdf[value_col])]
+        accepted = store.insert(client, pairs)
+        return pd.DataFrame({key_col: [k for k, _ in pairs], "_accepted": accepted})
+
+    return _each_batch(store, batches, step)
+
+
+def _put_rows(store, client, rows) -> None:
+    store.put(client, [(r[0], r[1]) for r in rows])
+
+
+def _remove_rows(store, client, rows) -> None:
+    store.remove(client, [r[0] for r in rows])
+
+
+class RemoteCache:
+    """The Spark side of a cache whose entries live in a store (the
+    contract is in the module docstring). No data path makes a driver
+    round-trip or a request per row:
+    - `get` fetches the batch's distinct keys, one client per partition
+      and one `fetch` per Arrow batch, and broadcast-joins the entries
+      found;
+    - `add` sends each distinct key once. Its verdicts are
+      localCheckpoint-ed eagerly, so no insert runs twice: a lazy plan
+      evaluated again would re-run the inserts against the state the
+      first run created;
+    - `set` and `delete` go through `sink.write_partitions`, 500 rows a
+      call.
+    Rows with a null key are skipped."""
 
     single_value = True
+
+    def __init__(self, spark: SparkSession, store, key_col: str = "key",
+                 value_col: str = "value"):
+        self.spark = spark
+        self.store = store
+        self.key_col, self.value_col = key_col, value_col
+
+    def _keys(self, df: DataFrame, key: str) -> DataFrame:
+        return (df.select(F.col(key).cast("string").alias(self.key_col))
+                .filter(F.col(self.key_col).isNotNull()))
+
+    def _pairs(self, df: DataFrame) -> DataFrame:
+        return df.filter(F.col(self.key_col).isNotNull()).select(
+            F.col(self.key_col).cast("string"), F.col(self.value_col).cast("string"))
+
+    def get(self, df: DataFrame, on: str | None = None, now_ms=None) -> DataFrame:
+        """Enrich df with the cached value by key (miss = NULL value)."""
+        key, key_col, value_col = on or self.key_col, self.key_col, self.value_col
+        side = self._keys(df, key).distinct().mapInPandas(
+            functools.partial(fetch_batches, self.store, key_col, value_col),
+            f"{key_col} string, {value_col} string",
+        ).filter(F.col(value_col).isNotNull())
+        if key != key_col:
+            side = side.withColumnRenamed(key_col, key)
+        return df.join(F.broadcast(side), key, "left")
+
+    def add(self, df: DataFrame, ttl=None, now_ms=None) -> DataFrame:
+        """Insert-if-absent; returns the rejected rows (key present)."""
+        store, key_col = self.store.expiring(ttl), self.key_col
+        fresh = df.dropDuplicates([key_col])
+        verdicts = (
+            self._pairs(fresh)
+            .mapInPandas(functools.partial(insert_batches, store, key_col, self.value_col),
+                         f"{key_col} string, _accepted boolean")
+            .localCheckpoint(eager=True)
+        )
+        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
+        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
+
+    def set(self, df: DataFrame, ttl=None, now_ms=None) -> None:
+        """Upsert every row (last write wins per key)."""
+        store = self.store.expiring(ttl)
+        write_partitions(self._pairs(df.dropDuplicates([self.key_col])), store.open,
+                         functools.partial(_put_rows, store), chunk=500)
+
+    def delete(self, keys: DataFrame) -> None:
+        write_partitions(self._keys(keys, self.key_col), self.store.open,
+                         functools.partial(_remove_rows, self.store), chunk=500)
+
+
+@dataclass(frozen=True)
+class SqliteStore:
+    """One `k TEXT PRIMARY KEY, v TEXT` table in a SQLite file; TTLs are
+    ignored, as cache_sql.go's Set discards the duration."""
+
+    path: str
+    table: str
+
+    def open(self):
+        import sqlite3
+
+        con = sqlite3.connect(self.path, timeout=30.0)
+        con.execute("PRAGMA busy_timeout=30000")
+        return con
+
+    def expiring(self, ttl) -> SqliteStore:
+        return self
+
+    def fetch(self, con, keys) -> dict:
+        found: dict = {}
+        # SQLite caps bound parameters (999 pre-3.32): 500 keys a query
+        for i in range(0, len(keys), 500):
+            chunk = keys[i:i + 500]
+            found.update(con.execute(
+                f"SELECT k, v FROM {self.table} WHERE k IN ({','.join('?' * len(chunk))})",
+                chunk).fetchall())
+        return found
+
+    def insert(self, con, pairs) -> list[bool]:
+        # INSERT OR IGNORE: an ignored row is the reference's
+        # constraint-violation error
+        sql = f"INSERT OR IGNORE INTO {self.table}(k, v) VALUES(?, ?)"
+        accepted = [con.execute(sql, kv).rowcount == 1 for kv in pairs]
+        con.commit()
+        return accepted
+
+    def put(self, con, pairs) -> None:
+        # cache_sql.go:144's upsertBuilder
+        con.executemany(f"INSERT INTO {self.table}(k, v) VALUES(?, ?) "
+                        "ON CONFLICT(k) DO UPDATE SET v=excluded.v", pairs)
+        con.commit()
+
+    def remove(self, con, keys) -> None:
+        con.executemany(f"DELETE FROM {self.table} WHERE k = ?", [(k,) for k in keys])
+        con.commit()
+
+
+class SqliteCache(RemoteCache):
+    """`sql` cache backend over a SQLite file
+    (internal/impl/sql/cache_sql.go:84 — one row per
+    key/value pair in a named table; `set` is an upsert, `add` a plain
+    insert that errors on conflict, no TTL support). The reference reaches
+    any database/sql driver; the repo's JDBC path
+    (operators/sql_connector.py) is jar-gated, so this stdlib-sqlite3
+    backend is the sandbox-testable instance — same single-shared-file
+    deployment model as FileCache (a posix/shared filesystem). WAL journal
+    + busy_timeout serialize concurrent partition writers."""
 
     def __init__(self, spark: SparkSession, path: str, table: str = "bento_cache",
                  key_col: str = "key", value_col: str = "value"):
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
             raise ValueError(f"sqlite cache table must be an identifier, got {table!r}")
-        self.spark = spark
-        self.path = path
-        self.table = table
-        self.key_col, self.value_col = key_col, value_col
+        super().__init__(spark, SqliteStore(path, table), key_col, value_col)
         import sqlite3
 
         with sqlite3.connect(path) as con:
@@ -389,130 +580,13 @@ class SqliteCache:
                 f"CREATE TABLE IF NOT EXISTS {table} (k TEXT PRIMARY KEY, v TEXT)"
             )
 
-    # executor-side connection helper (pickled by value into closures)
-    @staticmethod
-    def _connect(path: str):
-        import sqlite3
-
-        con = sqlite3.connect(path, timeout=30.0)
-        con.execute("PRAGMA busy_timeout=30000")
-        return con
-
-    def set(self, df: DataFrame, ttl=None, now_ms=None) -> None:
-        """Upsert (INSERT .. ON CONFLICT DO UPDATE — cache_sql.go:144's
-        upsertBuilder). `ttl` is ignored, like the reference."""
-        path, table = self.path, self.table
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def send(con, rows) -> None:
-            con.executemany(
-                f"INSERT INTO {table}(k, v) VALUES(?, ?) "
-                "ON CONFLICT(k) DO UPDATE SET v=excluded.v",
-                ((r.k, r.v) for r in rows),
-            )
-            con.commit()
-
-        write_partitions(rows, functools.partial(SqliteCache._connect, path), send)
-
-    def add(self, df: DataFrame, ttl=None, now_ms=None) -> DataFrame:
-        """Insert-if-absent (INSERT OR IGNORE; an ignored row = the
-        reference's constraint-violation error). Returns rejected rows."""
-        path, table = self.path, self.table
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.operators.cache import SqliteCache as _S
-
-            con = _S._connect(path)
-            try:
-                for pdf in iter_pdf:
-                    accepted = []
-                    for k, v in zip(pdf[key_col], pdf[value_col]):
-                        cur = con.execute(
-                            f"INSERT OR IGNORE INTO {table}(k, v) VALUES(?, ?)",
-                            (str(k), None if v is None else str(v)),
-                        )
-                        accepted.append(cur.rowcount == 1)
-                    con.commit()
-                    yield pd.DataFrame({
-                        key_col: [str(k) for k in pdf[key_col]],
-                        "_accepted": accepted,
-                    })
-            finally:
-                con.close()
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once insert attempt
-        )
-        rejected_keys = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected_keys), key_col, "left_semi")
-
-    def delete(self, keys: DataFrame) -> None:
-        table = self.table
-
-        def send(con, rows) -> None:
-            con.executemany(f"DELETE FROM {table} WHERE k = ?", ((str(r[0]),) for r in rows))
-            con.commit()
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string")),
-                         functools.partial(SqliteCache._connect, self.path), send)
-
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
-            now_ms=None) -> DataFrame:
-        """Enrich df with the cached value by key (miss = NULL value,
-        same contract as the other backends)."""
-        key = on or self.key_col
-        path, table = self.path, self.table
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.operators.cache import SqliteCache as _S
-
-            con = _S._connect(path)
-            try:
-                for pdf in iter_pdf:
-                    ks = [str(k) for k in pdf[key_col]]
-                    found: dict[str, str] = {}
-                    # SQLite caps bound parameters (999 pre-3.32) — chunk
-                    for i in range(0, len(ks), 500):
-                        chunk = ks[i:i + 500]
-                        marks = ",".join("?" * len(chunk))
-                        found.update(con.execute(
-                            f"SELECT k, v FROM {table} WHERE k IN ({marks})", chunk
-                        ).fetchall())
-                    yield pd.DataFrame({
-                        key_col: ks,
-                        value_col: [found.get(k) for k in ks],
-                    })
-            finally:
-                con.close()
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
-
     def snapshot(self, now_ms=None) -> DataFrame | None:
         """Full table as (key, value) — debug/compat surface; data paths
         use get()'s keyed fetch (one driver-side read here is fine: the
         backend's deployment model is dimension-scale shared-file state)."""
-        con = self._connect(self.path)
+        con = self.store.open()
         try:
-            rows = con.execute(f"SELECT k, v FROM {self.table}").fetchall()
+            rows = con.execute(f"SELECT k, v FROM {self.store.table}").fetchall()
         finally:
             con.close()
         if not rows:
@@ -594,7 +668,7 @@ class NoopCache:
     def delete(self, keys: DataFrame) -> None:
         pass
 
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
+    def get(self, df: DataFrame, on: str | None = None,
             now_ms: int | None = None) -> DataFrame:
         return df.withColumn(self.value_col, F.lit(None).cast("string"))
 
@@ -694,14 +768,14 @@ class MemoryCache:
             f"{self.key_col} string, {self.value_col} string",
         )
 
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
+    def get(self, df: DataFrame, on: str | None = None,
             now_ms: int | None = None) -> DataFrame:
         cur = self.snapshot(now_ms)
         key = on or self.key_col
         if cur is None:
             return df.withColumn(self.value_col, F.lit(None).cast("string"))
         side = cur.withColumnRenamed(self.key_col, key) if key != self.key_col else cur
-        return df.join(F.broadcast(side) if broadcast else side, key, "left")
+        return df.join(F.broadcast(side), key, "left")
 
 
 class MultilevelCache:
@@ -760,7 +834,7 @@ class MultilevelCache:
         m = self._merged(now_ms)
         return None if m is None else m.drop("_lvl")
 
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
+    def get(self, df: DataFrame, on: str | None = None,
             now_ms: int | None = None) -> DataFrame:
         m = self._merged(now_ms)
         key = on or self.key_col
@@ -773,7 +847,7 @@ class MultilevelCache:
                 self._child_write(i, deeper, "set", None, now_ms)
         side = m.drop("_lvl")
         side = side.withColumnRenamed(self.key_col, key) if key != self.key_col else side
-        return df.join(F.broadcast(side) if broadcast else side, key, "left")
+        return df.join(F.broadcast(side), key, "left")
 
     def _child_write(self, i: int, rows: DataFrame, op: str, ttl, now_ms) -> None:
         c = self.levels[i]

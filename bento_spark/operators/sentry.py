@@ -49,8 +49,6 @@ def sentry_capture(df, dsn: str, message_col: str,
     """Capture one event per non-errored row; rows pass through unchanged
     (message/tag staging columns are dropped and never echo through
     Arrow)."""
-    import pandas as pd
-
     scheme, host, port, key, project = parse_dsn(dsn)
     tag_cols = dict(tag_cols or {})
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}

@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 
 from bento_spark.audio.generate import clips_df
 from bento_spark.functions.bloblang import compile_expr
-from bento_spark.plans.inputs import INPUTS, aws_conn, gcs_creds, read_input, select_input
+from bento_spark.plans.inputs import INPUTS, read_input, select_input
 from bento_spark.plans.outputs import OUTPUTS, select_output
 from bento_spark.plans.processors import ALIASES, CACHE_BACKENDS, PROCESSORS
 from bento_spark.streaming.checkpoint import local_checkpoint_commits
@@ -162,181 +162,57 @@ class Pipeline:
 
     # -------------------------------------------------------- cache resources
     def _cache_backend(self, resource: str, spark: SparkSession, key_col: str = "key",
-                       _visiting: frozenset | None = None):
+                       _visiting: frozenset = frozenset()):
         """Resolve a `resource:` reference to a cache backend. A label
         declared under top-level `cache_resources:` wins (the reference
         registers caches as named resources — config/schema.go's
         cache_resources section, 16 backends under internal/impl/*/
-        cache_*.go); its backend is the first kind of CACHE_BACKENDS
-        (plans/processors.py) it names. An undeclared resource falls back
-        to the historical behavior of treating the string as a parquet
-        KeyValueCache path.
+        cache_*.go); its backend is the row of the first kind of
+        CACHE_BACKENDS (plans/processors.py) it names. An undeclared
+        resource falls back to the historical behavior of treating the
+        string as a parquet KeyValueCache path.
 
-        In-process kinds (memory/lru/ttlru/noop) and multilevel compositions
-        are memoized per Pipeline by label — a `set` in one processor and a
-        `get` in a later one must hit the SAME store, exactly as the
-        reference shares one registered resource instance across components."""
-        from bento_spark.operators.cache import FileCache, KeyValueCache
-
+        Shared kinds (the in-process memory/lru/ttlru/ristretto/noop and
+        multilevel compositions) are memoized per Pipeline by label — a
+        `set` in one processor and a `get` in a later one must hit the SAME
+        store, exactly as the reference shares one registered resource
+        instance across components."""
         mem = self.__dict__.setdefault("_mem_cache_instances", {})
         if resource in mem:
             return mem[resource]
-        for r in self.conf.get("cache_resources") or []:
-            if isinstance(r, dict) and r.get("label") == resource:
-                kind = next((k for k in CACHE_BACKENDS if k in r), None)
-                if kind is None:
-                    raise ValueError(
-                        f"cache resource {resource!r} needs a backend section "
-                        f"(one of {', '.join(CACHE_BACKENDS)})"
-                    )
-                d = r[kind] or {}
-                need = CACHE_BACKENDS[kind]
-                if need is not None and need not in d:
-                    raise ValueError(
-                        f"cache resource {resource!r}: {kind} backend needs `{need}`"
-                    )
-                if kind in ("memory", "lru", "ttlru", "ristretto"):
-                    from bento_spark.operators.cache import MemoryCache
+        # mutual multilevel cycles (A: [B], B: [A]) would recurse to
+        # RecursionError — the memo entry only lands after construction
+        if resource in _visiting:
+            raise ValueError(
+                f"multilevel cache cycle through {resource!r} "
+                f"(visiting: {sorted(_visiting)})")
+        r = next((r for r in self.conf.get("cache_resources") or []
+                  if isinstance(r, dict) and r.get("label") == resource), None)
+        if r is None:
+            from bento_spark.operators.cache import KeyValueCache
 
-                    # reference defaults: lru cap 1000 (cache_lru.go:17),
-                    # ttlru cap 1024 + default_ttl 5m (cache_ttlru.go:15-19),
-                    # memory uncapped + default_ttl 5m (cache_memory.go);
-                    # ristretto (dgraph/cache_ristretto.go) = an in-process
-                    # TTL cache — same engine-level semantics as ttlru here
-                    # (the reference's frequency-based admission is an
-                    # eviction heuristic, not an API contract), default_ttl
-                    # optional like the reference's
-                    cap = d.get("cap", {"lru": 1000, "ttlru": 1024}.get(kind))
-                    ttl = d.get("default_ttl",
-                                "5m" if kind in ("memory", "ttlru") else None)
-                    mem[resource] = MemoryCache(
-                        spark, cap=cap, default_ttl=ttl,
-                        init_values=d.get("init_values"),
-                    )
-                    return mem[resource]
-                if kind == "noop":
-                    from bento_spark.operators.cache import NoopCache
+            return KeyValueCache(spark, resource, key_col=key_col)
+        kind = next((k for k in CACHE_BACKENDS if k in r), None)
+        if kind is None:
+            raise ValueError(
+                f"cache resource {resource!r} needs a backend section "
+                f"(one of {', '.join(CACHE_BACKENDS)})"
+            )
+        row, d = CACHE_BACKENDS[kind], r[kind] or {}
+        if row.required is not None and row.required not in d:
+            raise ValueError(
+                f"cache resource {resource!r}: {kind} backend needs `{row.required}`"
+            )
 
-                    mem[resource] = NoopCache(spark)
-                    return mem[resource]
-                if kind == "multilevel":
-                    from bento_spark.operators.cache import MultilevelCache
+        def level(label):
+            if label == resource:
+                raise ValueError(f"multilevel cache {resource!r} references itself")
+            return self._cache_backend(str(label), spark, _visiting=_visiting | {resource})
 
-                    if resource in d:
-                        raise ValueError(f"multilevel cache {resource!r} references itself")
-                    # mutual cycles (A: multilevel [B], B: multilevel [A])
-                    # would recurse to RecursionError — the memo entry only
-                    # lands after construction, so thread a visiting-set
-                    visiting = _visiting or frozenset()
-                    if resource in visiting:
-                        raise ValueError(
-                            f"multilevel cache cycle through {resource!r} "
-                            f"(visiting: {sorted(visiting)})")
-                    mem[resource] = MultilevelCache(
-                        [self._cache_backend(str(n), spark,
-                                             _visiting=visiting | {resource})
-                         for n in d]
-                    )
-                    return mem[resource]
-                if kind == "file":
-                    return FileCache(
-                        spark, d["directory"], key_col=key_col,
-                        value_col=d.get("value_col", "value"), ttl=d.get("ttl"),
-                    )
-                if kind == "parquet":
-                    return KeyValueCache(spark, d["path"], key_col=key_col)
-                if kind == "sqlite":
-                    from bento_spark.operators.cache import SqliteCache
-
-                    return SqliteCache(
-                        spark, d["path"], table=d.get("table", "bento_cache"),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                    )
-                if kind == "mongodb":
-                    from bento_spark.streaming.mongodb import MongoCache
-
-                    return MongoCache(
-                        spark, d["url"], database=d.get("database", "bento"),
-                        collection=d.get("collection", "cache"),
-                        key_field=d.get("key_field", "key"),
-                        value_field=d.get("value_field", "value"),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                    )
-                if kind == "aws_dynamodb":
-                    from bento_spark.streaming.dynamodb import DynamoCache
-
-                    return DynamoCache(
-                        spark, table=str(d["table"]),
-                        hash_key=str(d.get("hash_key", "key")),
-                        data_key=str(d.get("data_key", "value")),
-                        ttl_key=d.get("ttl_key"),
-                        default_ttl=d.get("default_ttl"),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                        **aws_conn(d, "dynamodb"),
-                    )
-                if kind == "aws_s3":
-                    from bento_spark.streaming.s3 import S3Cache
-
-                    return S3Cache(
-                        spark, bucket=str(d["bucket"]),
-                        content_type=str(d.get("content_type",
-                                               "application/octet-stream")),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                        **aws_conn(d, "s3"),
-                    )
-                if kind == "gcp_cloud_storage":
-                    from bento_spark.streaming.gcs import GcsCache
-
-                    return GcsCache(
-                        spark,
-                        str(d.get("endpoint")
-                            or "https://storage.googleapis.com"),
-                        str(d["bucket"]),
-                        credentials=gcs_creds(d),
-                        content_type=str(d.get("content_type",
-                                               "application/octet-stream")),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                    )
-                if kind == "couchbase":
-                    from bento_spark.streaming.couchbase import CouchbaseCache
-
-                    return CouchbaseCache(
-                        spark, str(d["url"]), bucket=d.get("bucket"),
-                        username=d.get("username"), password=d.get("password"),
-                        key_col=key_col, value_col=d.get("value_col", "value"),
-                        default_ttl=d.get("default_ttl"),
-                    )
-                if kind == "nats_kv":
-                    # KV bucket over JetStream subjects (nats/cache_kv.go):
-                    # acknowledged publishes, Create via expected-last-seq 0,
-                    # DIRECT.GET last_by_subj reads, DEL markers
-                    from bento_spark.streaming.nats import NatsKvCache
-
-                    url = (d.get("urls") or [d.get("url", "127.0.0.1:4222")])[0]
-                    return NatsKvCache(
-                        spark, str(url),
-                        bucket=str(d["bucket"]), key_col=key_col,
-                        value_col=d.get("value_col", "value"),
-                    )
-                if kind == "memcached":
-                    from bento_spark.streaming.memcached import MemcachedCache
-
-                    return MemcachedCache(
-                        spark, str(d["addresses"][0]), key_col=key_col,
-                        value_col=d.get("value_col", "value"),
-                        prefix=d.get("prefix", ""),
-                        default_ttl=d.get("default_ttl", "300s"),
-                    )
-                # redis, the last kind
-                from bento_spark.streaming.redis import RedisCache
-
-                return RedisCache(
-                    spark, d["url"], key_col=key_col,
-                    value_col=d.get("value_col", "value"),
-                    prefix=d.get("prefix", ""),
-                    default_ttl=d.get("default_ttl"),
-                )
-        return KeyValueCache(spark, resource, key_col=key_col)
+        cache = row(spark, d, key_col, level)
+        if row.shared:
+            mem[resource] = cache
+        return cache
 
     # ------------------------------------------------------------ rate limits
     def _rate_limit_conf(self, label: str) -> dict:

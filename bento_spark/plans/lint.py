@@ -213,7 +213,7 @@ def lint_yaml(src: str, env: dict | None = None) -> list[str]:
         if not isinstance(o, dict):
             issues.append(f"cache_resources[{i}] ({kind}): options must be a mapping")
             continue
-        need = CACHE_BACKENDS[kind]
+        need = CACHE_BACKENDS[kind].required
         if need is not None and need not in o:
             issues.append(f"cache_resources[{i}] ({kind}): missing {need!r}")
         if o.get("cap") is not None and not isinstance(o["cap"], int):

@@ -21,9 +21,11 @@ field '<f>'` and calls the row. `lint.known_processors` and the lint of a
 processor list read the same table, so lint reports what the compiler would
 reject, in nested lists too.
 
-`CACHE_BACKENDS` does the same for `cache_resources` entries: each backend
-kind with the one option it requires; `Pipeline._cache_backend` and lint
-read it.
+`CACHE_BACKENDS` does the same for `cache_resources` entries: one row per
+backend kind with the cache class (`<module>.<class>`, imported only when
+used), a builder from the YAML section, the option it requires and whether
+one instance is shared per label. `Pipeline._cache_backend` and lint read
+it.
 """
 
 from __future__ import annotations
@@ -61,14 +63,122 @@ class Processor:
 # name for the same processor. log side effects live in the metrics listener.
 ALIASES = {"mutation": "mapping", "bloblang": "mapping", "log": "noop"}
 
-# cache_resources backend kind -> the option it requires (None: none). The
-# first kind an entry names is its backend, in this order.
-CACHE_BACKENDS: dict[str, str | None] = {
-    "memory": None, "lru": None, "ttlru": None, "ristretto": None, "noop": None,
-    "multilevel": None, "file": "directory", "parquet": "path", "sqlite": "path",
-    "mongodb": "url", "aws_dynamodb": "table", "aws_s3": "bucket",
-    "gcp_cloud_storage": "bucket", "couchbase": "url", "nats_kv": "bucket",
-    "memcached": "addresses", "redis": "url",
+
+@dataclass(frozen=True)
+class CacheBackend:
+    module: str  # under bento_spark, e.g. "streaming.redis"
+    cls: str
+    # (cls, spark, section, key_col, level) -> cache; `level(label)`
+    # resolves another cache_resources label (multilevel's children)
+    build: Callable[..., object]
+    required: str | None = None
+    shared: bool = False  # one instance per label: the in-process kinds
+
+    def __call__(self, spark, section, key_col: str, level):
+        cls = getattr(import_module(f"bento_spark.{self.module}"), self.cls)
+        return self.build(cls, spark, section, key_col, level)
+
+
+def _in_memory(cap, default_ttl):
+    # reference defaults: lru cap 1000 (cache_lru.go:17), ttlru cap 1024 +
+    # default_ttl 5m (cache_ttlru.go:15-19), memory uncapped + default_ttl
+    # 5m (cache_memory.go); ristretto (dgraph/cache_ristretto.go) = an
+    # in-process TTL cache — ttlru's semantics here (the reference's
+    # frequency-based admission is an eviction heuristic, not an API
+    # contract), default_ttl optional like the reference's
+    return CacheBackend(
+        "operators.cache", "MemoryCache",
+        lambda cls, spark, d, k, level: cls(spark, cap=d.get("cap", cap),
+                                            default_ttl=d.get("default_ttl", default_ttl),
+                                            init_values=d.get("init_values")),
+        shared=True)
+
+
+def _value(d: dict) -> str:
+    return d.get("value_col", "value")
+
+
+# cache_resources backend kind -> its row; the first kind an entry names
+# is its backend, in this order.
+CACHE_BACKENDS: dict[str, CacheBackend] = {
+    "memory": _in_memory(None, "5m"),
+    "lru": _in_memory(1000, None),
+    "ttlru": _in_memory(1024, "5m"),
+    "ristretto": _in_memory(None, None),
+    "noop": CacheBackend("operators.cache", "NoopCache",
+                         lambda cls, spark, d, k, level: cls(spark), shared=True),
+    "multilevel": CacheBackend("operators.cache", "MultilevelCache",
+                               lambda cls, spark, d, k, level: cls([level(n) for n in d]),
+                               shared=True),
+    "file": CacheBackend(
+        "operators.cache", "FileCache",
+        lambda cls, spark, d, k, level: cls(spark, d["directory"], key_col=k, ttl=d.get("ttl"),
+                                            value_col=_value(d)),
+        "directory"),
+    "parquet": CacheBackend("operators.cache", "KeyValueCache",
+                            lambda cls, spark, d, k, level: cls(spark, d["path"], key_col=k),
+                            "path"),
+    "sqlite": CacheBackend(
+        "operators.cache", "SqliteCache",
+        lambda cls, spark, d, k, level: cls(spark, d["path"], table=d.get("table", "bento_cache"),
+                                            key_col=k, value_col=_value(d)),
+        "path"),
+    "mongodb": CacheBackend(
+        "streaming.mongodb", "MongoCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, d["url"], database=d.get("database", "bento"),
+            collection=d.get("collection", "cache"), key_field=d.get("key_field", "key"),
+            value_field=d.get("value_field", "value"), key_col=k, value_col=_value(d)),
+        "url"),
+    "aws_dynamodb": CacheBackend(
+        "streaming.dynamodb", "DynamoCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, table=str(d["table"]), hash_key=str(d.get("hash_key", "key")),
+            data_key=str(d.get("data_key", "value")), ttl_key=d.get("ttl_key"),
+            default_ttl=d.get("default_ttl"), key_col=k, value_col=_value(d),
+            **aws_conn(d, "dynamodb")),
+        "table"),
+    "aws_s3": CacheBackend(
+        "streaming.s3", "S3Cache",
+        lambda cls, spark, d, k, level: cls(
+            spark, bucket=str(d["bucket"]),
+            content_type=str(d.get("content_type", "application/octet-stream")),
+            key_col=k, value_col=_value(d), **aws_conn(d, "s3")),
+        "bucket"),
+    "gcp_cloud_storage": CacheBackend(
+        "streaming.gcs", "GcsCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, str(d.get("endpoint") or "https://storage.googleapis.com"), str(d["bucket"]),
+            credentials=gcs_creds(d),
+            content_type=str(d.get("content_type", "application/octet-stream")),
+            key_col=k, value_col=_value(d)),
+        "bucket"),
+    "couchbase": CacheBackend(
+        "streaming.couchbase", "CouchbaseCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, str(d["url"]), bucket=d.get("bucket"), username=d.get("username"),
+            password=d.get("password"), key_col=k, default_ttl=d.get("default_ttl"),
+            value_col=_value(d)),
+        "url"),
+    # KV bucket over JetStream subjects (nats/cache_kv.go)
+    "nats_kv": CacheBackend(
+        "streaming.nats", "NatsKvCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, str((d.get("urls") or [d.get("url", "127.0.0.1:4222")])[0]),
+            bucket=str(d["bucket"]), key_col=k, value_col=_value(d)),
+        "bucket"),
+    "memcached": CacheBackend(
+        "streaming.memcached", "MemcachedCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, str(d["addresses"][0]), key_col=k, prefix=d.get("prefix", ""),
+            default_ttl=d.get("default_ttl", "300s"), value_col=_value(d)),
+        "addresses"),
+    "redis": CacheBackend(
+        "streaming.redis", "RedisCache",
+        lambda cls, spark, d, k, level: cls(
+            spark, d["url"], key_col=k, prefix=d.get("prefix", ""),
+            default_ttl=d.get("default_ttl"), value_col=_value(d)),
+        "url"),
 }
 
 

@@ -31,10 +31,9 @@ from typing import Any
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bento_spark.functions.bloblang import compile_expr, compile_mapping
-from bento_spark.plans.compiler import Pipeline, compile_yaml, interpolate_env
+from bento_spark.plans.compiler import compile_yaml, interpolate_env
 
 _PART = "_part"
 

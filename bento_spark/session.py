@@ -2,8 +2,9 @@
 
 Defaults are chosen for the 100 TB design target, then overridable:
 
-- AQE on (runtime re-plan, skew-join splitting, partition coalescing) —
-  replaces the reference's static `pipeline.threads` worker pool
+- AQE (runtime re-plan, skew-join splitting, partition coalescing) is
+  Spark's default and is left on; it replaces the reference's static
+  `pipeline.threads` worker pool
   (/root/reference/internal/pipeline/pool.go:32-49) with adaptive
   parallelism.
 - Arrow on for all pandas UDF exchange; `maxRecordsPerBatch` sized for
@@ -93,13 +94,8 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(max(cores or 8, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(AUDIO_ARROW_BATCH))
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Constraint propagation is O(width^2)-ish on wide plans: the
         # 64-aggregate minhash/simhash signature plans spent 3-7s PER QUERY

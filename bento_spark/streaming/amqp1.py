@@ -31,7 +31,6 @@ outcome, ANONYMOUS + PLAIN)."""
 from __future__ import annotations
 
 import functools
-import json
 import socket
 import struct
 import threading

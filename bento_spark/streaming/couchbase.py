@@ -16,18 +16,18 @@ Spark-first mapping:
   in a `couchbase` column (NULL + error column on a miss, the repo's
   error protocol — the reference errors the message part);
   insert/replace rejections flag the error column the same way.
-- cache backend: the shared operator contract (get/set/add/delete) so
-  `cache_resources:` wiring works unchanged; insert-if-absent maps to
-  ADD (status 0x02 KEY_EXISTS = rejection).
+- cache backend: a store for the shared remote-cache operator
+  (operators/cache.py).
 """
 
 from __future__ import annotations
 
-import functools
 import socket
 import struct
 import threading
+from dataclasses import dataclass, replace
 
+from bento_spark.operators.cache import RemoteCache, _exptime_s, _ttl_ms
 from bento_spark.streaming.reader import SocketReader
 
 _OP_GET, _OP_SET, _OP_ADD, _OP_REPLACE, _OP_DELETE = 0x00, 0x01, 0x02, 0x03, 0x04
@@ -255,127 +255,48 @@ def couchbase_map(df, url: str, id_col: str, operation: str = "get",
 # --------------------------------------------------------------------------
 
 
-class CouchbaseCache:
-    """`couchbase` cache backend (cache.go): the shared operator contract
-    (see RedisCache) over the KV binary protocol. TTLs are server-clock
-    seconds (protocol expiry granularity)."""
+@dataclass(frozen=True)
+class CouchbaseStore:
+    """GET / SET / ADD / DELETE over the KV binary protocol; a TTL is the
+    protocol's expiry in whole server-clock seconds (0 = never)."""
 
-    single_value = True
+    url: str
+    bucket: str | None = None
+    username: str | None = None
+    password: str | None = None
+    expiry: int = 0
+
+    def open(self) -> CouchbaseClient:
+        return _connect(self.url, self.bucket, self.username, self.password)
+
+    def expiring(self, ttl) -> CouchbaseStore:
+        return self if ttl is None else replace(self, expiry=_exptime_s(_ttl_ms(ttl)))
+
+    def fetch(self, client, keys) -> dict:
+        return {k: client.get(k) for k in keys}
+
+    def insert(self, client, pairs) -> list[bool]:
+        # ADD: status 0x02 KEY_EXISTS is the rejection
+        return [client.insert(k, (v or "").encode(), self.expiry) for k, v in pairs]
+
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            client.upsert(k, (v or "").encode(), self.expiry)
+
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.remove(k)
+
+
+class CouchbaseCache(RemoteCache):
+    """`couchbase` cache backend (cache.go)."""
 
     def __init__(self, spark, url: str, bucket: str | None = None,
                  username: str | None = None, password: str | None = None,
                  key_col: str = "key", value_col: str = "value",
                  default_ttl=None):
-        from bento_spark.operators.cache import _ttl_ms
-
-        self.spark = spark
-        # the executors' client factory: the cache itself holds the
-        # SparkSession and cannot be pickled
-        self._open = functools.partial(_connect, url, bucket, username, password)
-        self.key_col, self.value_col = key_col, value_col
-        self.default_ttl_ms = None if default_ttl is None else _ttl_ms(default_ttl)
-
-    def _expiry_of(self, ttl) -> int:
-        from bento_spark.operators.cache import _ttl_ms
-
-        ms = self.default_ttl_ms if ttl is None else _ttl_ms(ttl)
-        return 0 if ms is None else max(1, -(-int(ms) // 1000))
-
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        expiry = self._expiry_of(ttl)
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.upsert(row.k, ("" if row.v is None else row.v).encode(), expiry)
-
-        write_partitions(rows, self._open, send)
-
-    def add(self, df, ttl=None, now_ms=None):
-        from pyspark.sql import functions as F
-
-        expiry = self._expiry_of(ttl)
-        open_ = self._open
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            client = open_()
-            try:
-                for pdf in iter_pdf:
-                    accepted = [
-                        client.insert(str(k),
-                                      ("" if v is None else str(v)).encode(),
-                                      expiry)
-                        for k, v in zip(pdf[key_col], pdf[value_col])
-                    ]
-                    yield pd.DataFrame({
-                        key_col: [str(k) for k in pdf[key_col]],
-                        "_accepted": accepted,
-                    })
-            finally:
-                client.close()
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.remove(row.k)
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         self._open, send)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        open_ = self._open
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            client = open_()
-            try:
-                for pdf in iter_pdf:
-                    ks = [str(k) for k in pdf[key_col]]
-                    vals = []
-                    for k in ks:
-                        got = client.get(k)
-                        vals.append(None if got is None
-                                    else got.decode("utf-8", "replace"))
-                    yield pd.DataFrame({key_col: ks, value_col: vals})
-            finally:
-                client.close()
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        store = CouchbaseStore(url, bucket, username, password).expiring(default_ttl)
+        super().__init__(spark, store, key_col, value_col)
 
 
 # --------------------------------------------------------------------------

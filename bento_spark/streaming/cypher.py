@@ -31,7 +31,6 @@ import json
 import socket
 import struct
 import threading
-import urllib.parse
 
 from bento_spark.streaming.bridge import Bridge
 from bento_spark.streaming.reader import SocketReader

@@ -13,9 +13,8 @@ GetItem / PutItem / PutItem+attribute_not_exists condition / DeleteItem,
 exactly the reference's calls. Multi-key enrichment uses BatchGetItem —
 one request per <=100 distinct keys per executor partition.
 
-Spark-first mapping: the shared cache operator contract (see
-RedisCache), so `cache_resources:` wiring works unchanged. TTLs are
-epoch-second attributes evaluated by the server (the mini service
+The Spark side is the shared remote-cache operator (operators/cache.py).
+TTLs are epoch-second attributes evaluated by the server (the mini service
 honors them on read, like DynamoDB's filtered expiry)."""
 
 from __future__ import annotations
@@ -25,7 +24,9 @@ import json
 import re
 import threading
 import time
+from dataclasses import dataclass, replace
 
+from bento_spark.operators.cache import RemoteCache, _exptime_s, _ttl_ms
 from bento_spark.streaming import rest
 from bento_spark.streaming.sqs import sigv4_headers
 
@@ -76,16 +77,18 @@ BATCH_WRITE_MAX = 25  # BatchWriteItem's per-request item cap
 
 
 def _batch_write(client: "DynamoClient", table: str, requests: list) -> None:
-    """BatchWriteItem with UnprocessedItems retry (throttled writes come
-    back unprocessed — dropping them would silently lose cache entries)."""
-    todo = requests
-    backoff = 0.1
-    while todo:
-        out = client.call("BatchWriteItem", {"RequestItems": {table: todo}})
-        todo = (out.get("UnprocessedItems") or {}).get(table) or []
-        if todo:
-            time.sleep(backoff)
-            backoff = min(backoff * 2, 2.0)
+    """BatchWriteItem, BATCH_WRITE_MAX requests a call, with
+    UnprocessedItems retry (throttled writes come back unprocessed —
+    dropping them would silently lose cache entries)."""
+    for i in range(0, len(requests), BATCH_WRITE_MAX):
+        todo = requests[i:i + BATCH_WRITE_MAX]
+        backoff = 0.1
+        while todo:
+            out = client.call("BatchWriteItem", {"RequestItems": {table: todo}})
+            todo = (out.get("UnprocessedItems") or {}).get(table) or []
+            if todo:
+                time.sleep(backoff)
+                backoff = min(backoff * 2, 2.0)
 
 
 class KeyExistsError(Exception):
@@ -93,175 +96,96 @@ class KeyExistsError(Exception):
     ErrKeyAlreadyExists)."""
 
 
-class DynamoCache:
-    """`aws_dynamodb` cache backend (cache_dynamodb.go): shared operator
-    contract over GetItem/PutItem/DeleteItem with the reference's
-    hash_key/data_key/ttl_key layout."""
+@dataclass(frozen=True)
+class DynamoStore:
+    """The reference's hash_key/data_key/ttl_key item layout: fetch =
+    BatchGetItem, <=100 keys a request (the API cap); insert = PutItem with
+    attribute_not_exists; put/remove = BatchWriteItem. A TTL is the
+    `ttl_key` attribute, an epoch second resolved when the operator runs."""
 
-    single_value = True
+    endpoint: str
+    access_key: str
+    secret_key: str
+    region: str
+    table: str
+    hash_key: str = "key"
+    data_key: str = "value"
+    ttl_key: str | None = None
+    ttl_ms: int | None = None  # the resource's default_ttl
+    expires: int | None = None
+
+    def open(self) -> DynamoClient:
+        return DynamoClient(self.endpoint, self.access_key, self.secret_key, self.region)
+
+    def expiring(self, ttl) -> DynamoStore:
+        ms = self.ttl_ms if ttl is None else _ttl_ms(ttl)
+        if ms is None or not self.ttl_key:
+            return self
+        return replace(self, expires=int(time.time()) + _exptime_s(ms))
+
+    def _item(self, k: str, v: str | None) -> dict:
+        item = {self.hash_key: {"S": k}, self.data_key: {"S": v or ""}}
+        if self.expires is not None:
+            item[self.ttl_key] = {"N": str(self.expires)}
+        return item
+
+    def fetch(self, client, keys) -> dict:
+        hk, dk, table = self.hash_key, self.data_key, self.table
+        found = {}
+        for i in range(0, len(keys), 100):
+            todo = [{hk: {"S": k}} for k in keys[i:i + 100]]
+            backoff = 0.1
+            while todo:
+                out = client.call("BatchGetItem", {"RequestItems": {table: {"Keys": todo}}})
+                for item in (out.get("Responses") or {}).get(table, []):
+                    found[item[hk]["S"]] = item.get(dk, {}).get("S")
+                # throttled keys come back in UnprocessedKeys — dropping
+                # them would read as spurious cache misses
+                todo = (out.get("UnprocessedKeys") or {}).get(table, {}).get("Keys") or []
+                if todo:
+                    time.sleep(backoff)
+                    backoff = min(backoff * 2, 2.0)
+        return found
+
+    def insert(self, client, pairs) -> list[bool]:
+        accepted = []
+        for k, v in pairs:
+            try:
+                client.call("PutItem", {
+                    "TableName": self.table, "Item": self._item(k, v),
+                    # the reference's insert-if-absent condition
+                    "ConditionExpression": "attribute_not_exists(#k)",
+                    "ExpressionAttributeNames": {"#k": self.hash_key},
+                })
+                accepted.append(True)
+            except KeyExistsError:
+                accepted.append(False)
+        return accepted
+
+    def put(self, client, pairs) -> None:
+        _batch_write(client, self.table,
+                     [{"PutRequest": {"Item": self._item(k, v)}} for k, v in pairs])
+
+    def remove(self, client, keys) -> None:
+        _batch_write(client, self.table,
+                     [{"DeleteRequest": {"Key": {self.hash_key: {"S": k}}}} for k in keys])
+
+
+class DynamoCache(RemoteCache):
+    """`aws_dynamodb` cache backend (cache_dynamodb.go)."""
 
     def __init__(self, spark, endpoint: str, table: str,
                  access_key: str, secret_key: str, region: str = "us-east-1",
                  hash_key: str = "key", data_key: str = "value",
                  ttl_key: str | None = None, default_ttl=None,
                  key_col: str = "key", value_col: str = "value"):
-        from bento_spark.operators.cache import _ttl_ms
-
-        self.spark = spark
-        self.args = (endpoint, access_key, secret_key, region)
-        self.table = table
-        self.hash_key, self.data_key, self.ttl_key = hash_key, data_key, ttl_key
-        self.key_col, self.value_col = key_col, value_col
-        self.default_ttl_ms = None if default_ttl is None else _ttl_ms(default_ttl)
-        if self.default_ttl_ms is not None and ttl_key is None:
+        if default_ttl is not None and ttl_key is None:
             raise ValueError(
                 "dynamodb cache: default_ttl needs `ttl_key` (the table's "
                 "TTL attribute) — cache_dynamodb.go:47")
-
-    def _ttl_attr(self, ttl) -> int | None:
-        from bento_spark.operators.cache import _ttl_ms
-
-        ms = self.default_ttl_ms if ttl is None else _ttl_ms(ttl)
-        if ms is None:
-            return None
-        return int(time.time()) + max(1, -(-int(ms) // 1000))
-
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        expires = self._ttl_attr(ttl)
-        table = self.table
-        hk, dk, tk = self.hash_key, self.data_key, self.ttl_key
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def put(row) -> dict:
-            item = {hk: {"S": row.k}, dk: {"S": "" if row.v is None else row.v}}
-            if expires is not None and tk:
-                item[tk] = {"N": str(expires)}
-            return {"PutRequest": {"Item": item}}
-
-        def send(client, rows) -> None:
-            _batch_write(client, table, [put(row) for row in rows])
-
-        write_partitions(rows, functools.partial(DynamoClient, *self.args), send,
-                         chunk=BATCH_WRITE_MAX)
-
-    def add(self, df, ttl=None, now_ms=None):
-        from pyspark.sql import functions as F
-
-        expires = self._ttl_attr(ttl)
-        args, table = self.args, self.table
-        hk, dk, tk = self.hash_key, self.data_key, self.ttl_key
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.dynamodb import DynamoClient, KeyExistsError
-
-            client = DynamoClient(*args)
-            for pdf in iter_pdf:
-                accepted = []
-                for k, v in zip(pdf[key_col], pdf[value_col]):
-                    item = {hk: {"S": str(k)},
-                            dk: {"S": "" if v is None else str(v)}}
-                    if expires is not None and tk:
-                        item[tk] = {"N": str(expires)}
-                    try:
-                        client.call("PutItem", {
-                            "TableName": table, "Item": item,
-                            # the reference's insert-if-absent condition
-                            "ConditionExpression": "attribute_not_exists(#k)",
-                            "ExpressionAttributeNames": {"#k": hk},
-                        })
-                        accepted.append(True)
-                    except KeyExistsError:
-                        accepted.append(False)
-                yield pd.DataFrame({
-                    key_col: [str(k) for k in pdf[key_col]],
-                    "_accepted": accepted,
-                })
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        table, hk = self.table, self.hash_key
-
-        def send(client, rows) -> None:
-            _batch_write(client, table, [{"DeleteRequest": {"Key": {hk: {"S": row.k}}}}
-                                         for row in rows])
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         functools.partial(DynamoClient, *self.args), send,
-                         chunk=BATCH_WRITE_MAX)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        """Enrich df with the cached value by key (miss = NULL).
-        BatchGetItem over the batch's distinct keys, <=100 per request
-        (the API cap)."""
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        args, table = self.args, self.table
-        hk, dk = self.hash_key, self.data_key
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.dynamodb import DynamoClient
-
-            client = DynamoClient(*args)
-            for pdf in iter_pdf:
-                ks = [str(k) for k in pdf[key_col]]
-                found: dict[str, str] = {}
-                for i in range(0, len(ks), 100):
-                    todo = [{hk: {"S": k}} for k in ks[i : i + 100]]
-                    backoff = 0.1
-                    while todo:
-                        out = client.call("BatchGetItem", {"RequestItems": {
-                            table: {"Keys": todo},
-                        }})
-                        for item in (out.get("Responses") or {}).get(table, []):
-                            found[item[hk]["S"]] = item.get(dk, {}).get("S")
-                        # throttled keys come back in UnprocessedKeys —
-                        # dropping them would read as spurious cache misses
-                        todo = ((out.get("UnprocessedKeys") or {})
-                                .get(table, {}).get("Keys") or [])
-                        if todo:
-                            import time as _time
-
-                            _time.sleep(backoff)
-                            backoff = min(backoff * 2, 2.0)
-                yield pd.DataFrame({
-                    key_col: ks,
-                    value_col: [found.get(k) for k in ks],
-                })
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        store = DynamoStore(endpoint, access_key, secret_key, region, table, hash_key,
+                            data_key, ttl_key, None if default_ttl is None else _ttl_ms(default_ttl))
+        super().__init__(spark, store, key_col, value_col)
 
 
 def attr_value(v) -> dict:

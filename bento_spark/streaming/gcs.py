@@ -23,7 +23,8 @@ Spark-first mapping (identical topology to the S3/Azure listing inputs):
 - output -> one upload per row, interpolated path as a COLUMN; the four
   collision modes map to ifGenerationMatch / read-concat / existence
   checks exactly as the reference's gcsTargetWriter does.
-- cache  -> one object per key (the S3Cache contract verbatim)."""
+- cache  -> a store for the shared remote-cache operator
+  (operators/cache.py): one object per key."""
 
 from __future__ import annotations
 
@@ -33,7 +34,9 @@ import json
 import threading
 import urllib.parse
 import uuid
+from dataclasses import dataclass
 
+from bento_spark.operators.cache import RemoteCache
 from bento_spark.streaming import rest
 from bento_spark.streaming.bridge import Bridge
 from bento_spark.streaming.pubsub import ServiceAccountToken, bearer_headers
@@ -227,121 +230,51 @@ def gcs_sink(endpoint: str, bucket: str, path_col: str, *,
 # ---------------------------------------------------------------------------
 
 
-class GcsCache:
-    """`gcp_cloud_storage` cache backend (cache_cloud_storage.go): one
-    object per key, content is the value. Shared cache-operator contract
-    (see S3Cache); add = create-only upload (ifGenerationMatch=0), which
-    is ATOMIC on real GCS — stronger than the S3 backend's
-    check-then-put."""
+@dataclass(frozen=True)
+class GcsStore:
+    """One object per key, content is the value: fetch = media GET per
+    key; insert = create-only upload (ifGenerationMatch=0), ATOMIC on real
+    GCS — stronger than the S3 backend's check-then-put; TTLs are ignored."""
 
-    single_value = True
+    endpoint: str
+    bucket: str
+    credentials: dict | None = None
+    content_type: str = "application/octet-stream"
+
+    def open(self) -> GcsClient:
+        return GcsClient(self.endpoint, self.credentials)
+
+    def expiring(self, ttl) -> GcsStore:
+        return self
+
+    def fetch(self, client, keys) -> dict:
+        return {k: client.get_object(self.bucket, k) for k in keys}
+
+    def _upload(self, client, k: str, v: str | None, **kw):
+        return client.upload(self.bucket, k, (v or "").encode("utf-8"),
+                             content_type=self.content_type, **kw)
+
+    def insert(self, client, pairs) -> list[bool]:
+        return [self._upload(client, k, v, if_absent=True) for k, v in pairs]
+
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            self._upload(client, k, v)
+
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.delete_object(self.bucket, k)
+
+
+class GcsCache(RemoteCache):
+    """`gcp_cloud_storage` cache backend (cache_cloud_storage.go)."""
 
     def __init__(self, spark, endpoint: str, bucket: str,
                  credentials: dict | None = None,
                  content_type: str = "application/octet-stream",
                  key_col: str = "key", value_col: str = "value"):
-        self.spark = spark
-        self.args = (endpoint, credentials)
-        self.bucket = bucket
-        self.content_type = content_type
-        self.key_col, self.value_col = key_col, value_col
-
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        bucket, ctype = self.bucket, self.content_type
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"))
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.upload(bucket, row.k,
-                              ("" if row.v is None else row.v).encode("utf-8"),
-                              content_type=ctype)
-
-        write_partitions(rows, functools.partial(GcsClient, *self.args), send)
-
-    def add(self, df, ttl=None, now_ms=None):
-        """Insert-if-absent via the create-only precondition. Returns the
-        REJECTED rows (shared cache contract, operators/cache.py)."""
-        from pyspark.sql import functions as F
-
-        args, bucket, ctype = self.args, self.bucket, self.content_type
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.gcs import GcsClient
-
-            client = GcsClient(*args)
-            for pdf in iter_pdf:
-                accepted = [
-                    client.upload(
-                        bucket, str(k),
-                        ("" if v is None else str(v)).encode("utf-8"),
-                        content_type=ctype, if_absent=True)
-                    for k, v in zip(pdf[key_col], pdf[value_col])]
-                yield pd.DataFrame({
-                    key_col: [str(k) for k in pdf[key_col]],
-                    "_accepted": accepted})
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        bucket = self.bucket
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.delete_object(bucket, row.k)
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         functools.partial(GcsClient, *self.args), send)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True,
-            now_ms=None):
-        """Enrich df with the cached value by key (miss = NULL): media
-        GET over the batch's DISTINCT keys only."""
-        from pyspark.sql import functions as F
-
-        args, bucket = self.args, self.bucket
-        on = on or self.key_col
-        value_col = self.value_col
-        distinct = df.select(F.col(on).cast("string").alias(on)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.gcs import GcsClient
-
-            client = GcsClient(*args)
-            for pdf in iter_pdf:
-                vals = []
-                for k in pdf[on]:
-                    got = client.get_object(bucket, str(k))
-                    vals.append(None if got is None
-                                else got.decode("utf-8", "replace"))
-                yield pd.DataFrame({on: pdf[on],
-                                    value_col: pd.Series(vals, dtype="object")})
-
-        fetched = distinct.mapInPandas(fetch, f"{on} string, {value_col} string")
-        if broadcast:
-            fetched = F.broadcast(fetched)
-        return df.join(fetched, on, "left")
+        super().__init__(spark, GcsStore(endpoint, bucket, credentials, content_type),
+                         key_col, value_col)
 
 
 # ---------------------------------------------------------------------------

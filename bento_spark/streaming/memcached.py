@@ -10,16 +10,7 @@ uses gomemcache; no memcached wheel ships in this sandbox, so the text
 protocol is implemented from the published spec, making the backend REAL
 and e2e-testable in-process instead of availability-gated.
 
-Spark-first mapping (same contract as RedisCache — streaming/redis.py):
-- `get` fetches only the batch's DISTINCT keys, one multi-key `get` per
-  partition, then broadcast-joins the fetched slice back; the full
-  keyspace never crosses the wire.
-- `set`/`delete` run executor-side.
-- `add` attempts per key executor-side and returns the REJECTED rows for
-  the error-column routing; the verdict split is localCheckpoint-ed
-  eagerly (re-evaluating a lazy plan would re-run the adds against state
-  the first run just created — the FileCache.add trap).
-
+The Spark side is the shared remote-cache operator (operators/cache.py).
 TTLs are enforced by the server clock in whole SECONDS (the protocol's
 exptime granularity — ms TTLs round UP so a 100ms request never expires
 early as 0s/never). `now_ms` pins are not honored (same documented
@@ -29,11 +20,12 @@ parquet/file backends; this backend's tests use real short TTLs).
 
 from __future__ import annotations
 
-import functools
 import socket
 import threading
 import time
+from dataclasses import dataclass, replace
 
+from bento_spark.operators.cache import RemoteCache, _exptime_s, _ttl_ms
 from bento_spark.streaming.reader import SocketReader
 
 _CRLF = b"\r\n"
@@ -96,159 +88,57 @@ class MemcachedClient:
             pass
 
 
-def _exptime_s(ttl_ms: int | None) -> int:
-    """Protocol exptime: 0 = never; ms TTLs round UP to whole seconds so
-    short TTLs never become 0/never-expire."""
-    if ttl_ms is None:
-        return 0
-    return max(1, -(-int(ttl_ms) // 1000))
-
-
 def parse_memcached_addr(addr: str) -> tuple[str, int]:
     hp = str(addr).removeprefix("tcp://").removeprefix("memcached://")
     host, _, port = hp.partition(":")
     return host or "127.0.0.1", int(port or 11211)
 
 
-class MemcachedCache:
-    """`memcached` cache backend (cache.go): operator contract shared with
-    KeyValueCache/FileCache/RedisCache so the YAML `cache:` processor and
-    `cache_resources:` wiring work unchanged. Values are strings (single
-    value column)."""
+@dataclass(frozen=True)
+class MemcachedStore:
+    """set / add / multi-key get / delete under a key prefix; a TTL is the
+    protocol's exptime in whole seconds (0 = never)."""
 
-    single_value = True
+    host: str
+    port: int
+    prefix: str = ""
+    exptime: int = 0
+
+    def open(self) -> MemcachedClient:
+        return MemcachedClient(self.host, self.port)
+
+    def expiring(self, ttl) -> MemcachedStore:
+        return self if ttl is None else replace(self, exptime=_exptime_s(_ttl_ms(ttl)))
+
+    def fetch(self, client, keys) -> dict:
+        # one multi-key get (gomemcache's GetMulti; the reference calls it per key)
+        got = client.get_many([self.prefix + k for k in keys])
+        return {k: got.get(self.prefix + k) for k in keys}
+
+    def insert(self, client, pairs) -> list[bool]:
+        # cache.go maps NOT_STORED to ErrKeyAlreadyExists
+        return [client.add(self.prefix + k, (v or "").encode("utf-8"), self.exptime)
+                for k, v in pairs]
+
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            client.set(self.prefix + k, (v or "").encode("utf-8"), self.exptime)
+
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.delete(self.prefix + k)
+
+
+class MemcachedCache(RemoteCache):
+    """`memcached` cache backend (cache.go): addresses, optional key
+    `prefix`, `default_ttl` (300s, as the reference)."""
 
     def __init__(self, spark, address: str, key_col: str = "key",
                  value_col: str = "value", prefix: str = "",
                  default_ttl: int | float | str | None = "300s"):
-        from bento_spark.operators.cache import _ttl_ms
-
-        self.spark = spark
-        self.host, self.port = parse_memcached_addr(address)
-        self.key_col, self.value_col = key_col, value_col
-        self.prefix = prefix or ""
-        self.default_ttl_ms = None if default_ttl is None else _ttl_ms(default_ttl)
-
-    def _exptime_of(self, ttl) -> int:
-        if ttl is None:
-            return _exptime_s(self.default_ttl_ms)
-        from bento_spark.operators.cache import _ttl_ms
-
-        return _exptime_s(_ttl_ms(ttl))
-
-    # -- operators (cache.go Get/Set/Add/Delete) -----------------------------
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        exptime, prefix = self._exptime_of(ttl), self.prefix
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.set(prefix + row.k,
-                           ("" if row.v is None else row.v).encode("utf-8"), exptime)
-
-        write_partitions(rows, functools.partial(MemcachedClient, self.host, self.port),
-                         send)
-
-    def add(self, df, ttl=None, now_ms=None):
-        """Insert-if-absent; returns the rejected rows (cache.go maps
-        NOT_STORED to ErrKeyAlreadyExists)."""
-        from pyspark.sql import functions as F
-
-        exptime, prefix = self._exptime_of(ttl), self.prefix
-        host, port = self.host, self.port
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.memcached import MemcachedClient as _C
-
-            client = _C(host, port)
-            try:
-                for pdf in iter_pdf:
-                    accepted = [
-                        client.add(prefix + str(k),
-                                   ("" if v is None else str(v)).encode("utf-8"),
-                                   exptime)
-                        for k, v in zip(pdf[key_col], pdf[value_col])
-                    ]
-                    yield pd.DataFrame({
-                        key_col: [str(k) for k in pdf[key_col]],
-                        "_accepted": accepted,
-                    })
-            finally:
-                client.close()
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected_keys = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected_keys), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        prefix = self.prefix
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.delete(prefix + row.k)
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         functools.partial(MemcachedClient, self.host, self.port), send)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        """Enrich df with the cached value by key (miss = NULL value
-        column). Fetches only the batch's distinct keys — one multi-key
-        `get` per partition (gomemcache's GetMulti, which the reference
-        calls per key; batching amortizes the round-trip)."""
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        host, port, prefix = self.host, self.port, self.prefix
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.memcached import MemcachedClient as _C
-
-            client = _C(host, port)
-            try:
-                for pdf in iter_pdf:
-                    ks = [str(k) for k in pdf[key_col]]
-                    got = client.get_many([prefix + k for k in ks]) if ks else {}
-                    yield pd.DataFrame({
-                        key_col: ks,
-                        value_col: [
-                            got[prefix + k].decode("utf-8", "replace")
-                            if prefix + k in got else None
-                            for k in ks
-                        ],
-                    })
-            finally:
-                client.close()
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        host, port = parse_memcached_addr(address)
+        super().__init__(spark, MemcachedStore(host, port, prefix or "").expiring(default_ttl),
+                         key_col, value_col)
 
 
 # --------------------------------------------------------------------------

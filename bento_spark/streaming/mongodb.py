@@ -19,9 +19,9 @@ Spark-first mapping: `document_map`/`filter_map` compile to JSON COLUMNS
 JVM-side (Bloblang -> to_json), so the executor loop only converts
 JSON->BSON: inserts group into one `insert` command per chunk,
 updates/deletes pipe
-one command per row (the command shape MongoDB itself requires), and the
-cache's batched `get` issues ONE `$in` find per partition, broadcast-
-joined back — the same multi-get amortization as the sqlite backend.
+one command per row (the command shape MongoDB itself requires). The
+cache backend is a store for the shared remote-cache operator
+(operators/cache.py).
 """
 
 from __future__ import annotations
@@ -32,10 +32,11 @@ import json
 import socket
 import struct
 import threading
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from bento_spark.operators.cache import RemoteCache, _text
 from bento_spark.streaming.reader import SocketReader, reader_of
 from bento_spark.streaming.sink import write_partitions
 
@@ -380,121 +381,70 @@ class MiniMongoServer:
 # ----------------------------------------------------------- cache backend
 
 
-class MongoCache:
-    """`mongodb` cache backend (cache.go:87-126): one document per entry,
-    {key_field: k, value_field: v}. set = UpdateOne $set upsert; add =
-    InsertOne with duplicate-key rejection (the unique index the reference
-    assumes); delete = DeleteOne; get amortizes the whole batch into ONE
-    `$in` find per partition, broadcast-joined back (no per-row round
-    trips — the SqliteCache pattern)."""
+@dataclass(frozen=True)
+class MongoStore:
+    """One document per entry, {key_field: k, value_field: v}: fetch = one
+    `$in` find per batch; insert = InsertOne per key, a duplicate key
+    (the unique index the reference assumes) is a rejection; put =
+    UpdateOne $set upsert; remove = DeleteOne. TTLs are ignored, as in
+    the reference. A document without a value (or a null one) is a miss."""
 
-    single_value = True
+    host: str
+    port: int
+    db: str
+    coll: str
+    key_field: str = "key"
+    value_field: str = "value"
+
+    def open(self) -> MongoClient:
+        return MongoClient(self.host, self.port)
+
+    def expiring(self, ttl) -> MongoStore:
+        return self
+
+    def fetch(self, client, keys) -> dict:
+        docs = client.find(self.db, self.coll, {self.key_field: {"$in": keys}})
+        return {str(d.get(self.key_field)): d.get(self.value_field) for d in docs}
+
+    def insert(self, client, pairs) -> list[bool]:
+        kf, vf = self.key_field, self.value_field
+        return [not client.insert(self.db, self.coll, [{kf: k, vf: v}]).get("writeErrors")
+                for k, v in pairs]
+
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            client.update(self.db, self.coll, {self.key_field: k},
+                          {"$set": {self.value_field: v}}, upsert=True)
+
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.delete(self.db, self.coll, {self.key_field: k}, limit=1)
+
+
+class MongoCache(RemoteCache):
+    """`mongodb` cache backend (cache.go:87-126)."""
 
     def __init__(self, spark: SparkSession, url: str, database: str = "bento",
                  collection: str = "cache", key_field: str = "key",
                  value_field: str = "value", key_col: str = "key",
                  value_col: str = "value"):
-        self.spark = spark
-        self.host, self.port = parse_mongo_url(url)
-        self.db, self.coll = database, collection
-        self.key_field, self.value_field = key_field, value_field
-        self.key_col, self.value_col = key_col, value_col
-
-    def _client(self) -> MongoClient:
-        return MongoClient(self.host, self.port)
-
-    def _rows(self, df: DataFrame) -> DataFrame:
-        return df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-    def set(self, df: DataFrame, ttl=None, now_ms=None) -> None:
-        db, coll = self.db, self.coll
-        kf, vf = self.key_field, self.value_field
-
-        def send(client, rows) -> None:
-            for r in rows:
-                client.update(db, coll, {kf: r.k}, {"$set": {vf: r.v}}, upsert=True)
-
-        write_partitions(self._rows(df), functools.partial(MongoClient, self.host, self.port),
-                         send)
-
-    def add(self, df: DataFrame, ttl=None, now_ms=None) -> DataFrame:
-        host, port, db, coll = self.host, self.port, self.db, self.coll
-        kf, vf = self.key_field, self.value_field
-        fresh = self._rows(df).localCheckpoint(eager=True)
-
-        def try_insert(part):
-            from bento_spark.streaming.mongodb import MongoClient as _C
-
-            c, out = None, []
-            try:
-                for r in part:
-                    if c is None:
-                        c = _C(host, port)
-                    reply = c.insert(db, coll, [{kf: r.k, vf: r.v}])
-                    if reply.get("writeErrors"):
-                        out.append((r.k,))
-            finally:
-                if c is not None:
-                    c.close()
-            return iter(out)
-
-        rejected = fresh.rdd.mapPartitions(try_insert).toDF(
-            f"{self.key_col} string"
-        )
-        # materialize: the inserts above are the side effect, re-evaluation
-        # would re-run them against state the first run created
-        return rejected.localCheckpoint(eager=True)
-
-    def delete(self, keys: DataFrame) -> None:
-        db, coll, kf = self.db, self.coll, self.key_field
-
-        def send(client, rows) -> None:
-            for r in rows:
-                client.delete(db, coll, {kf: r[0]}, limit=1)
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string")),
-                         functools.partial(MongoClient, self.host, self.port), send)
+        host, port = parse_mongo_url(url)
+        super().__init__(spark, MongoStore(host, port, database, collection,
+                                           key_field, value_field), key_col, value_col)
 
     def snapshot(self, now_ms: int | None = None) -> DataFrame | None:
-        c = self._client()
+        st = self.store
+        c = st.open()
         try:
-            docs = c.find(self.db, self.coll)
+            docs = c.find(st.db, st.coll)
         finally:
             c.close()
         if not docs:
             return None
         return self.spark.createDataFrame(
-            [(d.get(self.key_field), str(d.get(self.value_field))) for d in docs],
+            [(d.get(st.key_field), _text(d.get(st.value_field))) for d in docs],
             f"{self.key_col} string, {self.value_col} string",
         )
-
-    def get(self, df: DataFrame, on: str | None = None, broadcast: bool = True,
-            now_ms: int | None = None) -> DataFrame:
-        host, port, db, coll = self.host, self.port, self.db, self.coll
-        kf, vf = self.key_field, self.value_field
-        key = on or self.key_col
-        keys = df.select(F.col(key).cast("string").alias("k")).distinct()
-
-        def fetch(part):
-            from bento_spark.streaming.mongodb import MongoClient as _C
-
-            ks = [r.k for r in part if r.k is not None]
-            if not ks:
-                return iter([])
-            c = _C(host, port)
-            try:
-                docs = c.find(db, coll, {kf: {"$in": ks}})
-            finally:
-                c.close()
-            return iter([(d.get(kf), str(d.get(vf))) for d in docs])
-
-        side = keys.rdd.mapPartitions(fetch).toDF(
-            f"{key} string, {self.value_col} string"
-        )
-        return df.join(F.broadcast(side) if broadcast else side, key, "left")
 
 
 # ------------------------------------------------------------ output writer

@@ -36,7 +36,9 @@ import json
 import socket
 import threading
 import uuid
+from dataclasses import dataclass
 
+from bento_spark.operators.cache import RemoteCache
 from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
 from bento_spark.streaming.reader import SocketReader
 
@@ -844,154 +846,72 @@ def js_next(client: NatsJsClient, next_subj: str):
             pass
 
 
-class NatsKvCache:
-    """`nats_kv` cache backend (nats/cache_kv.go): a KV bucket is the
-    stream `KV_<bucket>` keyed on `$KV.<bucket>.<key>` subjects. set =
-    acknowledged publish; add = publish with
-    Nats-Expected-Last-Subject-Sequence: 0 (the KV Create contract —
-    the ack errors when the key has history); get = DIRECT.GET
-    last_by_subj (a DEL marker reads as absent); delete = publish with
-    KV-Operation: DEL. Shared cache-operator contract (see
-    MemcachedCache) so `cache_resources:` wiring works unchanged.
-    TTL is a bucket-level max_age in real NATS, not per-key — per-entry
-    ttl is rejected loudly."""
+@dataclass(frozen=True)
+class NatsKvStore:
+    """A KV bucket is the stream `KV_<bucket>` keyed on `$KV.<bucket>.<key>`
+    subjects (nats/cache_kv.go): put = acknowledged publish; insert =
+    publish with Nats-Expected-Last-Subject-Sequence: 0 (the KV Create
+    contract — the ack errors when the key has history); fetch =
+    DIRECT.GET last_by_subj (a DEL marker reads as absent); remove =
+    publish with KV-Operation: DEL. TTL is the bucket's max_age in real
+    NATS, not per key, so a per-entry ttl is rejected."""
 
-    single_value = True
+    host: str
+    port: int
+    bucket: str
 
-    def __init__(self, spark, address: str, bucket: str,
-                 key_col: str = "key", value_col: str = "value"):
-        self.spark = spark
-        host, _, port = address.rpartition("://")[2].partition(":")
-        self.host, self.port = host or "127.0.0.1", int(port or 4222)
-        self.bucket = bucket
-        self.key_col, self.value_col = key_col, value_col
+    def open(self) -> NatsJsClient:
+        return NatsJsClient(self.host, self.port)
 
-    def _reject_ttl(self, ttl) -> None:
+    def expiring(self, ttl) -> NatsKvStore:
         if ttl is not None:
             raise ValueError(
                 "nats_kv cache: per-entry TTL is not part of the KV "
                 "contract (bucket max_age governs expiry) — cache_kv.go")
+        return self
 
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
+    def fetch(self, client, keys) -> dict:
+        found = {}
+        for k in keys:
+            status, hdrs, data = client.request2(
+                f"$JS.API.DIRECT.GET.KV_{self.bucket}",
+                json.dumps({"last_by_subj": f"$KV.{self.bucket}.{k}"}).encode())
+            if status.startswith("404") or hdrs.get("KV-Operation") == "DEL":
+                continue
+            if status:
+                raise ConnectionError(f"nats_kv get {k}: status {status}")
+            found[k] = data
+        return found
 
-        from bento_spark.streaming.sink import write_partitions
-
-        self._reject_ttl(ttl)
-        bucket = self.bucket
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"))
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.js_publish(f"$KV.{bucket}.{row.k}",
-                                  ("" if row.v is None else row.v).encode())
-
-        write_partitions(rows, functools.partial(NatsJsClient, self.host, self.port), send)
-
-    def add(self, df, ttl=None, now_ms=None):
-        from pyspark.sql import functions as F
-
-        self._reject_ttl(ttl)
-        host, port, bucket = self.host, self.port, self.bucket
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.nats import JsError as _JsErr
-            from bento_spark.streaming.nats import NatsJsClient as _C
-
-            client = _C(host, port)
+    def insert(self, client, pairs) -> list[bool]:
+        accepted = []
+        for k, v in pairs:
             try:
-                for pdf in iter_pdf:
-                    accepted = []
-                    for k, v in zip(pdf[key_col], pdf[value_col]):
-                        try:
-                            client.js_publish(
-                                f"$KV.{bucket}.{k}",
-                                ("" if v is None else str(v)).encode(),
-                                headers={
-                                    "Nats-Expected-Last-Subject-Sequence": "0"})
-                            accepted.append(True)
-                        except _JsErr:
-                            accepted.append(False)
-                    yield pd.DataFrame({
-                        key_col: [str(k) for k in pdf[key_col]],
-                        "_accepted": accepted,
-                    })
-            finally:
-                client.close()
+                client.js_publish(f"$KV.{self.bucket}.{k}", (v or "").encode(),
+                                  headers={"Nats-Expected-Last-Subject-Sequence": "0"})
+                accepted.append(True)
+            except JsError:
+                accepted.append(False)
+        return accepted
 
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            client.js_publish(f"$KV.{self.bucket}.{k}", (v or "").encode())
 
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.js_publish(f"$KV.{self.bucket}.{k}", b"",
+                              headers={"KV-Operation": "DEL"})
 
-        from bento_spark.streaming.sink import write_partitions
 
-        bucket = self.bucket
+class NatsKvCache(RemoteCache):
+    """`nats_kv` cache backend (nats/cache_kv.go) over JetStream subjects."""
 
-        def send(client, rows) -> None:
-            for row in rows:
-                client.js_publish(f"$KV.{bucket}.{row.k}", b"",
-                                  headers={"KV-Operation": "DEL"})
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         functools.partial(NatsJsClient, self.host, self.port), send)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        host, port, bucket = self.host, self.port, self.bucket
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import json as _json
-
-            import pandas as pd
-
-            from bento_spark.streaming.nats import NatsJsClient as _C
-
-            client = _C(host, port)
-            try:
-                for pdf in iter_pdf:
-                    vals = []
-                    for k in pdf[key_col]:
-                        status, hdrs, data = client.request2(
-                            f"$JS.API.DIRECT.GET.KV_{bucket}",
-                            _json.dumps(
-                                {"last_by_subj": f"$KV.{bucket}.{k}"}).encode())
-                        if (status.startswith("404")
-                                or hdrs.get("KV-Operation") == "DEL"):
-                            vals.append(None)
-                        elif not status:
-                            vals.append(data.decode("utf-8", "replace"))
-                        else:
-                            raise ConnectionError(
-                                f"nats_kv get {k}: status {status}")
-                    yield pd.DataFrame({key_col: [str(k) for k in pdf[key_col]],
-                                        value_col: vals})
-            finally:
-                client.close()
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+    def __init__(self, spark, address: str, bucket: str,
+                 key_col: str = "key", value_col: str = "value"):
+        host, _, port = address.rpartition("://")[2].partition(":")
+        super().__init__(spark, NatsKvStore(host or "127.0.0.1", int(port or 4222), bucket),
+                         key_col, value_col)
 
 
 # --------------------------------------------------------------------------

@@ -43,7 +43,9 @@ import json
 import socket
 import threading
 import time
+from dataclasses import dataclass, replace
 
+from bento_spark.operators.cache import RemoteCache, _ttl_ms
 from bento_spark.streaming.bridge import Bridge, batch
 from bento_spark.streaming.reader import SocketReader
 
@@ -330,16 +332,20 @@ def read_redis_scan(spark, host: str, port: int, match: str = "*",
 # --------------------------------------------------------------------------
 
 
+def _raise_errors(replies: list) -> list:
+    errs = [r for r in replies if isinstance(r, Exception)]
+    if errs:
+        raise errs[0]
+    return replies
+
+
 def _pipeline(df, host: str, port: int, make_commands) -> None:
     """Shared writer shape: every 500 rows of a partition send their
     `make_commands(row)` lists as ONE pipelined round-trip."""
     from bento_spark.streaming.sink import write_partitions
 
     def send(client, rows) -> None:
-        replies = client.pipeline([c for row in rows for c in make_commands(row)])
-        errs = [r for r in replies if isinstance(r, Exception)]
-        if errs:
-            raise errs[0]
+        _raise_errors(client.pipeline([c for row in rows for c in make_commands(row)]))
 
     write_partitions(df, functools.partial(RedisClient, host, port), send, chunk=500)
 
@@ -434,167 +440,65 @@ def redis_hash_sink(host: str, port: int, key_col: str,
 # --------------------------------------------------------------------------
 
 
-class RedisCache:
-    """`redis` cache backend (/root/reference/internal/impl/redis/cache.go:113-249):
-    GET / SET [PX ttl] / SET NX (add — an existing key rejects) / DEL,
-    with an optional key `prefix` and a resource-level `default_ttl`.
-    Implements the same operator contract as KeyValueCache / FileCache
-    (operators/cache.py) so the YAML `cache:` processor and
-    `cache_resources:` wiring work unchanged.
+@dataclass(frozen=True)
+class RedisStore:
+    """GET / SET [PX ttl] / SET NX / DEL under a key prefix, one pipelined
+    round-trip per call; a TTL is PX milliseconds (cache.go:146)."""
 
-    Spark-first mapping — no driver round-trips in any data path:
-    - `get` MGETs only the batch's DISTINCT keys, one pipelined request
-      per partition (the reference amortizes multi-gets the same way),
-      then broadcast-joins the fetched (key, value) slice back. The
-      full keyspace never crosses the wire.
-    - `set`/`delete` run executor-side as one pipelined round-trip per
-      partition (SET k v [PX ms] / DEL k...).
-    - `add` issues SET..NX per key executor-side and returns the
-      REJECTED rows for the error-column routing. The rejection split is
-      localCheckpoint-ed eagerly: re-evaluating a lazy plan would re-run
-      the NX writes against state the first run just created (the same
-      self-invalidation trap as FileCache.add).
-    - `snapshot` (debug/compat surface) SCANs driver-side and MGETs
-      executor-side via read_redis_scan.
+    host: str
+    port: int
+    prefix: str = ""
+    ttl_ms: int | None = None
 
-    TTLs are enforced by the server clock, so `now_ms` pins are not
-    honored (documented divergence: deterministic-oracle queries use the
-    parquet/file backends; this backend's tests use real short TTLs).
-    Values are strings (single value column), like the file backend."""
+    def open(self) -> RedisClient:
+        return RedisClient(self.host, self.port)
 
-    single_value = True
+    def expiring(self, ttl) -> RedisStore:
+        return self if ttl is None else replace(self, ttl_ms=_ttl_ms(ttl))
+
+    def _set(self, k: str, v: str | None, *flags: str) -> tuple:
+        cmd = ("SET", self.prefix + k, v or "", *flags)
+        return cmd if self.ttl_ms is None else cmd + ("PX", str(self.ttl_ms))
+
+    def fetch(self, client, keys) -> dict:
+        return dict(zip(keys, client.cmd("MGET", *[self.prefix + k for k in keys])))
+
+    def insert(self, client, pairs) -> list[bool]:
+        # cache.go:182 maps SET NX's nil reply to ErrKeyAlreadyExists
+        replies = client.pipeline([self._set(k, v, "NX") for k, v in pairs])
+        return [r is not None for r in _raise_errors(replies)]
+
+    def put(self, client, pairs) -> None:
+        _raise_errors(client.pipeline([self._set(k, v) for k, v in pairs]))
+
+    def remove(self, client, keys) -> None:
+        _raise_errors(client.pipeline([("DEL", self.prefix + k) for k in keys]))
+
+
+class RedisCache(RemoteCache):
+    """`redis` cache backend (internal/impl/redis/cache.go:113-249)
+    with an optional key `prefix` and a resource-level `default_ttl`. TTLs
+    run on the server clock, so `now_ms` pins are not honored
+    (deterministic-oracle queries use the parquet/file backends; this
+    backend's tests use real short TTLs)."""
 
     def __init__(self, spark, url: str, key_col: str = "key",
                  value_col: str = "value", prefix: str = "",
                  default_ttl: int | float | str | None = None):
-        from bento_spark.operators.cache import _ttl_ms
-
-        self.spark = spark
-        self.host, self.port = parse_redis_url(url)
-        self.key_col, self.value_col = key_col, value_col
-        self.prefix = prefix or ""
-        self.default_ttl_ms = None if default_ttl is None else _ttl_ms(default_ttl)
-
-    def _ttl_ms_of(self, ttl) -> int | None:
-        if ttl is None:
-            return self.default_ttl_ms
-        from bento_spark.operators.cache import _ttl_ms
-
-        return _ttl_ms(ttl)
-
-    # -- operators (cache.go Get/Set/Add/Delete) -----------------------------
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        """Upsert (SET, optional PX) — cache.go:146."""
-        from pyspark.sql import functions as F
-
-        ttl_ms, prefix = self._ttl_ms_of(ttl), self.prefix
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def mk(row):
-            cmd = ("SET", prefix + row.k, "" if row.v is None else row.v)
-            return [cmd if ttl_ms is None else cmd + ("PX", str(ttl_ms))]
-
-        _pipeline(rows, self.host, self.port, mk)
-
-    def add(self, df, ttl=None, now_ms=None):
-        """Insert-if-absent (SET..NX — cache.go:182 maps redis.Nil to
-        ErrKeyAlreadyExists). Returns the rejected rows."""
-        from pyspark.sql import functions as F
-
-        ttl_ms, prefix = self._ttl_ms_of(ttl), self.prefix
-        host, port = self.host, self.port
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.redis import RedisClient as _C
-
-            client = _C(host, port)
-            try:
-                for pdf in iter_pdf:
-                    cmds = []
-                    for k, v in zip(pdf[key_col], pdf[value_col]):
-                        cmd = ("SET", prefix + str(k), "" if v is None else str(v), "NX")
-                        cmds.append(cmd if ttl_ms is None else cmd + ("PX", str(ttl_ms)))
-                    replies = client.pipeline(cmds)
-                    errs = [r for r in replies if isinstance(r, Exception)]
-                    if errs:
-                        raise errs[0]
-                    yield pd.DataFrame({
-                        key_col: [str(k) for k in pdf[key_col]],
-                        "_accepted": [r is not None for r in replies],
-                    })
-            finally:
-                client.close()
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once NX attempt
-        )
-        rejected_keys = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected_keys), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        prefix = self.prefix
-        _pipeline(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                  self.host, self.port, lambda row: [("DEL", prefix + row.k)])
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        """Enrich df with the cached value by key (miss = NULL value
-        column, same contract as the other backends). Fetches only the
-        batch's distinct keys — one pipelined MGET per partition."""
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        host, port, prefix = self.host, self.port, self.prefix
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.redis import RedisClient as _C
-
-            client = _C(host, port)
-            try:
-                for pdf in iter_pdf:
-                    ks = [str(k) for k in pdf[key_col]]
-                    vals = client.cmd("MGET", *[prefix + k for k in ks]) if ks else []
-                    yield pd.DataFrame({
-                        key_col: ks,
-                        value_col: [None if v is None else v.decode("utf-8", "replace")
-                                    for v in vals],
-                    })
-            finally:
-                client.close()
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        host, port = parse_redis_url(url)
+        super().__init__(spark, RedisStore(host, port, prefix or "").expiring(default_ttl),
+                         key_col, value_col)
 
     def snapshot(self, now_ms=None):
         """Full keyspace under the prefix as (key, value) — debug/compat;
         data paths use get()'s keyed fetch instead."""
         from pyspark.sql import functions as F
 
-        df = read_redis_scan(self.spark, self.host, self.port,
-                             match=self.prefix + "*")
-        out = df
-        if self.prefix:
+        st = self.store
+        out = read_redis_scan(self.spark, st.host, st.port, match=st.prefix + "*")
+        if st.prefix:
             out = out.withColumn(
-                "key", F.expr(f"substring(key, {len(self.prefix) + 1})"))
+                "key", F.expr(f"substring(key, {len(st.prefix) + 1})"))
         out = out.withColumnRenamed("key", self.key_col)
         out = out.withColumnRenamed("value", self.value_col)
         return None if out.isEmpty() else out

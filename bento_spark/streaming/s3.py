@@ -30,10 +30,8 @@ Spark-first mapping:
   as a pre-computed COLUMN (Catalyst-rendered, the repo's interpolation
   contract) and the body is serialized JVM-side; executors only stream
   pre-rendered (path, body) pairs.
-- cache  -> shared cache-operator contract (see DynamoCache): set =
-  PutObject, get = mapInPandas GetObject over the batch's distinct keys,
-  add = head-then-put (the reference's non-atomic semantics, documented),
-  delete = DeleteObject.
+- cache  -> a store for the shared remote-cache operator
+  (operators/cache.py): one object per key.
 
 x-amz-date / Last-Modified are transport metadata (SigV4 requires a
 wall-clock date header), never row content — the determinism invariant
@@ -47,7 +45,9 @@ import json
 import threading
 import time
 import urllib.parse
+from dataclasses import dataclass
 
+from bento_spark.operators.cache import RemoteCache
 from bento_spark.streaming import rest
 from bento_spark.streaming.bridge import EMPTY_POLL_S, Bridge
 from bento_spark.streaming.sqs import sigv4_signature
@@ -376,135 +376,63 @@ def s3_sink(endpoint: str, bucket: str, access_key: str, secret_key: str,
 # --------------------------------------------------------------------------
 
 
-class S3Cache:
-    """`aws_s3` cache backend (cache_s3.go): one object per key, content
-    is the value. Shared cache-operator contract (see DynamoCache), so
-    `cache_resources:` wiring works unchanged. No TTL — S3 expiry is a
-    bucket lifecycle rule, not a per-object write option (the reference
-    ignores the TTL argument too). Add is existence-check-then-put,
-    exactly the reference's (non-atomic) semantics."""
+@dataclass(frozen=True)
+class S3Store:
+    """One object per key, content is the value: fetch = GetObject per
+    key; insert = HeadObject then PutObject, exactly the reference's
+    (non-atomic) check-then-put; no TTL — S3 expiry is a bucket lifecycle
+    rule, not a per-object write option (the reference ignores it too)."""
 
-    single_value = True
+    endpoint: str
+    access_key: str
+    secret_key: str
+    region: str
+    bucket: str
+    content_type: str = "application/octet-stream"
+
+    def open(self) -> S3Client:
+        return S3Client(self.endpoint, self.access_key, self.secret_key, self.region)
+
+    def expiring(self, ttl) -> S3Store:
+        return self
+
+    def fetch(self, client, keys) -> dict:
+        found = {}
+        for k in keys:
+            try:
+                found[k], _ = client.get_object(self.bucket, k)
+            except NoSuchKeyError:
+                pass
+        return found
+
+    def insert(self, client, pairs) -> list[bool]:
+        accepted = []
+        for k, v in pairs:
+            exists = client.head_object(self.bucket, k)  # ErrKeyAlreadyExists
+            if not exists:
+                self.put(client, [(k, v)])
+            accepted.append(not exists)
+        return accepted
+
+    def put(self, client, pairs) -> None:
+        for k, v in pairs:
+            client.put_object(self.bucket, k, (v or "").encode("utf-8"),
+                              content_type=self.content_type)
+
+    def remove(self, client, keys) -> None:
+        for k in keys:
+            client.delete_object(self.bucket, k)
+
+
+class S3Cache(RemoteCache):
+    """`aws_s3` cache backend (cache_s3.go)."""
 
     def __init__(self, spark, endpoint: str, bucket: str,
                  access_key: str, secret_key: str, region: str = "us-east-1",
                  content_type: str = "application/octet-stream",
                  key_col: str = "key", value_col: str = "value"):
-        self.spark = spark
-        self.args = (endpoint, access_key, secret_key, region)
-        self.bucket = bucket
-        self.content_type = content_type
-        self.key_col, self.value_col = key_col, value_col
-
-    def set(self, df, ttl=None, now_ms=None) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        bucket, ctype = self.bucket, self.content_type
-        rows = df.dropDuplicates([self.key_col]).select(
-            F.col(self.key_col).cast("string").alias("k"),
-            F.col(self.value_col).cast("string").alias("v"),
-        )
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.put_object(bucket, row.k,
-                                  ("" if row.v is None else row.v).encode("utf-8"),
-                                  content_type=ctype)
-
-        write_partitions(rows, functools.partial(S3Client, *self.args), send)
-
-    def add(self, df, ttl=None, now_ms=None):
-        """Insert-if-absent. Returns the rows that were REJECTED (key
-        already present) for the error-column routing — the shared cache
-        contract (operators/cache.py)."""
-        from pyspark.sql import functions as F
-
-        args, bucket, ctype = self.args, self.bucket, self.content_type
-        key_col, value_col = self.key_col, self.value_col
-        fresh = df.dropDuplicates([key_col])
-
-        def attempt(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.s3 import S3Client
-
-            client = S3Client(*args)
-            for pdf in iter_pdf:
-                accepted = []
-                for k, v in zip(pdf[key_col], pdf[value_col]):
-                    if client.head_object(bucket, str(k)):
-                        accepted.append(False)  # ErrKeyAlreadyExists
-                    else:
-                        client.put_object(
-                            bucket, str(k),
-                            ("" if v is None else str(v)).encode("utf-8"),
-                            content_type=ctype)
-                        accepted.append(True)
-                yield pd.DataFrame({
-                    key_col: [str(k) for k in pdf[key_col]],
-                    "_accepted": accepted,
-                })
-
-        verdicts = (
-            fresh.select(F.col(key_col).cast("string").alias(key_col), value_col)
-            .mapInPandas(attempt, f"{key_col} string, _accepted boolean")
-            .localCheckpoint(eager=True)  # exactly-once add attempt
-        )
-        rejected = verdicts.filter(~F.col("_accepted")).select(key_col)
-        return fresh.join(F.broadcast(rejected), key_col, "left_semi")
-
-    def delete(self, keys) -> None:
-        from pyspark.sql import functions as F
-
-        from bento_spark.streaming.sink import write_partitions
-
-        bucket = self.bucket
-
-        def send(client, rows) -> None:
-            for row in rows:
-                client.delete_object(bucket, row.k)
-
-        write_partitions(keys.select(F.col(self.key_col).cast("string").alias("k")),
-                         functools.partial(S3Client, *self.args), send)
-
-    def get(self, df, on: str | None = None, broadcast: bool = True, now_ms=None):
-        """Enrich df with the cached value by key (miss = NULL): GetObject
-        over the batch's DISTINCT keys only."""
-        from pyspark.sql import functions as F
-
-        key = on or self.key_col
-        args, bucket = self.args, self.bucket
-        key_col, value_col = self.key_col, self.value_col
-        distinct = df.select(F.col(key).cast("string").alias(key_col)).distinct()
-
-        def fetch(iter_pdf):
-            import pandas as pd
-
-            from bento_spark.streaming.s3 import NoSuchKeyError, S3Client
-
-            client = S3Client(*args)
-            for pdf in iter_pdf:
-                vals = []
-                for k in pdf[key_col]:
-                    try:
-                        body, _ = client.get_object(bucket, str(k))
-                        vals.append(body.decode("utf-8"))
-                    except NoSuchKeyError:
-                        vals.append(None)
-                yield pd.DataFrame({
-                    key_col: [str(k) for k in pdf[key_col]],
-                    value_col: vals,
-                })
-
-        side = distinct.mapInPandas(fetch, f"{key_col} string, {value_col} string")
-        side = side.filter(F.col(value_col).isNotNull())
-        if key != key_col:
-            side = side.withColumnRenamed(key_col, key)
-        if broadcast:
-            side = F.broadcast(side)
-        return df.join(side, key, "left")
+        super().__init__(spark, S3Store(endpoint, access_key, secret_key, region, bucket,
+                                        content_type), key_col, value_col)
 
 
 # --------------------------------------------------------------------------

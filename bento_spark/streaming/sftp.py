@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import fnmatch
 import functools
-import os
 import posixpath
 import socket
 import stat as stat_mod

@@ -6,7 +6,6 @@ against the signature-verifying MiniAzureBlobServer."""
 from __future__ import annotations
 
 import json
-import time
 
 import pytest
 

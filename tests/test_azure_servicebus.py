@@ -13,7 +13,6 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.amqp1 import Amqp1Client
 from bento_spark.streaming.azure_servicebus import (
-    ANN_ENQUEUED,
     ANN_SEQUENCE,
     MiniServiceBusBroker,
     cbs_put_token,

@@ -18,7 +18,6 @@ from bento_spark.streaming.azure_table import (
     EntityConflictError,
     EntityNotFoundError,
     MiniAzureTableServer,
-    azure_table_bridge,
     eval_odata_filter,
     stringify_properties,
     table_signature,

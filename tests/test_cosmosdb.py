@@ -17,7 +17,6 @@ from bento_spark.streaming.cosmosdb import (
     DocumentConflictError,
     DocumentNotFoundError,
     MiniCosmosServer,
-    cosmos_bridge,
     master_key_token,
     parse_connection_string,
     parse_pk_mapping,

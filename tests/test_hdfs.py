@@ -6,7 +6,6 @@ user.name simple auth), against an in-process MiniWebHdfsServer."""
 from __future__ import annotations
 
 import json
-import time
 
 import pytest
 

@@ -5,7 +5,6 @@ YAML round-trip — against the signature-verifying MiniKinesisServer."""
 
 from __future__ import annotations
 
-import base64
 import json
 import time
 

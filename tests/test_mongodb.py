@@ -100,6 +100,18 @@ def test_mongo_cache_contract(spark, mongo):
     assert {r.key for r in c.snapshot().collect()} == {"b", "c"}
 
 
+def test_mongo_cache_reads_a_missing_value_as_a_miss(spark, mongo):
+    # a document without its value field (or with a null one) is a miss,
+    # as in the other backends, not the string "None"
+    direct = MongoClient(mongo.host, mongo.port)
+    direct.insert("db", "cache", [{"key": "k"}, {"key": "n", "value": None}])
+    direct.close()
+    c = MongoCache(spark, mongo.url, database="db", collection="cache")
+    probe = spark.createDataFrame([("k",), ("n",)], "key string")
+    assert {r.key: r.value for r in c.get(probe).collect()} == {"k": None, "n": None}
+    assert {r.key: r.value for r in c.snapshot().collect()} == {"k": None, "n": None}
+
+
 def test_yaml_mongo_cache_enrichment(spark, mongo, tmp_path):
     seed = MongoCache(spark, mongo.url, database="db", collection="names")
     seed.set(_kv(spark, ("1", "alpha"), ("2", "beta")))

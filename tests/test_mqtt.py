@@ -10,7 +10,6 @@ import socket
 import struct
 import threading
 import time
-from pathlib import Path
 
 import pytest
 

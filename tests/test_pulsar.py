@@ -17,7 +17,6 @@ import pytest
 from bento_spark.plans.compiler import compile_yaml
 from bento_spark.streaming.pulsar import (
     _MAGIC,
-    CONNECT,
     SEND,
     Consumer,
     MiniPulsarBroker,

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import time
-from pathlib import Path
 
 import pytest
 
@@ -350,6 +349,18 @@ def test_s3_cache_add_and_delete_contract(server, spark):
     assert got == {"k1": "v1", "k3": "v3", "nope": None}
     cache.delete(spark.createDataFrame([("k1",)], "key string"))
     assert server.object("bkt", "k1") is None
+
+
+def test_s3_cache_get_replaces_bytes_that_are_not_utf8(server, spark):
+    # one undecodable object must not fail the task: bad bytes decode to
+    # U+FFFD, the rule of every other backend
+    from bento_spark.streaming.s3 import S3Cache
+
+    _client(server).put_object("bkt", "bin", b"\xff\xfe")
+    cache = S3Cache(spark, server.endpoint, "bkt",
+                    server.access_key, server.secret_key)
+    got = cache.get(spark.createDataFrame([("bin",)], "key string")).collect()
+    assert got[0].value == "\ufffd\ufffd"
 
 
 def test_lint_knows_aws_s3_sections():

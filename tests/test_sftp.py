@@ -20,7 +20,6 @@ from bento_spark.streaming.sftp import (
     SftpStatusError,
     parse_sftp_address,
     sftp_bridge,
-    sftp_sink,
 )
 from bento_spark.streaming.spool import entries
 from bento_spark.streaming.ssh_transport import (

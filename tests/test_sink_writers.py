@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import StringType, StructField, StructType
 
+from bento_spark.operators.cache import insert_batches
 from bento_spark.streaming import amqp, amqp1, elasticsearch, mongodb, redis
 from bento_spark.streaming.sink import KeepAlive
 
@@ -110,27 +111,12 @@ def test_mongodb_writer_closes_its_socket_when_a_command_fails():
     assert srv.commands == ["update"]
 
 
-class Partition:
-    """A frame whose rdd.mapPartitions runs here over one partition."""
-
-    def __init__(self, rows):
-        self.rows = rows
-        self.rdd = self
-
-    def localCheckpoint(self, eager=True):
-        return self
-
-    def mapPartitions(self, f):
-        return list(f(iter(self.rows)))
-
-
-def test_mongodb_cache_add_closes_its_socket_when_insert_fails(monkeypatch):
+def test_mongodb_cache_add_closes_its_socket_when_insert_fails():
     srv = ScriptedMongo(reject="insert")
-    cache = mongodb.MongoCache(None, f"mongodb://127.0.0.1:{srv.port}")
-    monkeypatch.setattr(mongodb.MongoCache, "_rows",
-                        lambda self, df: Partition([Row(k="a", v="1"), Row(k="b", v="2")]))
+    store = mongodb.MongoCache(None, f"mongodb://127.0.0.1:{srv.port}").store
+    batch = pd.DataFrame({"key": ["a", "b"], "value": ["1", "2"]})
     with pytest.raises(ConnectionError, match="mongodb insert failed") as err:
-        cache.add(None)
+        list(insert_batches(store, "key", "value", iter([batch])))
     assert srv.closed.wait(5), "add left its connection open"
     assert "scripted rejection" in str(err.value)
     assert srv.commands == ["insert"]
